@@ -41,12 +41,9 @@ def main():
     orig_regfiles = Store._register_files
     orig_tagged = Store._insert_tagged
 
-    def tagged_wrap(self, tagged, schema, watermark, restore_aqe=None):
-        t0 = time.perf_counter()
-        counts = {r["__pid"]: r["cnt"] for r in tagged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
-        times["counts_pass"] = times.get("counts_pass", 0.0) + time.perf_counter() - t0
-        if restore_aqe is not None:
-            self.spark.conf.set("spark.sql.adaptive.enabled", restore_aqe)
+    def tagged_wrap(self, tagged, schema, watermark, stats):
+        # the counts pass itself runs inside Store.insert (insert_total)
+        counts = {r["__pid"]: r["cnt"] for r in stats}
         if not counts:
             return 0
         offsets, acc = {}, 0
@@ -90,7 +87,6 @@ def main():
 
     Store._insert_tagged = tagged_wrap
     Store._insert_tagged_tail = tail_wrap
-    Store._take_micro_df = timed("take_micro", Store._take_micro_df)
     Store._enforce_constraints = timed("constraints", Store._enforce_constraints)
     import shortcut_spark.functions as _fn
     _fn.ensure_parallelism = timed("spread", _fn.ensure_parallelism)

@@ -63,8 +63,8 @@ class IndexSpec:
     ndv: int = 0  # distinct keys (map.len(), src/idx.rs:74,128)
     # merged HLL sketch (base64) over all posting keys — lets an insert
     # commit update ndv from the new batch alone instead of rescanning
-    # every posting part. Deletes reset it (full recompute) since a sketch
-    # cannot subtract.
+    # every posting part. A sketch cannot subtract, so deletes leave it
+    # (ndv an upper bound) and compact rebuilds it from scratch.
     sketch: str | None = None
     # session-scoped custom indexer object (the reference's user-impl
     # ``EqualityIndex`` trait object, ``src/idx.rs:8-21,174-184``). Its

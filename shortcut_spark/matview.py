@@ -245,6 +245,16 @@ class MatView:
         # retained job ever tagged with the group, so a reused name
         # (same view path + version across tests/sessions) accumulates
         group = f"mv_refresh_{uuid.uuid4().hex[:8]}"
+        # the caller's job group (and description) is saved and restored,
+        # not cleared: a refresh nests inside any caller's group
+        saved = {
+            k: sc.getLocalProperty(k)
+            for k in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            )
+        }
         sc.setJobGroup(group, f"matview refresh to v{cur}")
         # Small-delta fast path (r9): a micro-batch refresh plan has ~8
         # exchanges, and AQE materializes EACH as its own Spark job —
@@ -340,7 +350,8 @@ class MatView:
             if small:
                 self.spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
                 self.spark.conf.set("spark.sql.shuffle.partitions", shp_before)
-            sc.setJobGroup(None, None)
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
         self.last_refresh_jobs = len(
             sc.statusTracker().getJobIdsForGroup(group)
         )

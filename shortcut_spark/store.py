@@ -226,7 +226,11 @@ class Store:
         schema = self._schema_with_rowid() if with_rowid else self.manifest.schema
         return self.spark.createDataFrame([], schema).filter(F.lit(False))
 
-    def _read_files(self, files: Sequence[DataFile], with_meta: bool = False) -> DataFrame:
+    def _read_files(
+        self, files: Sequence[DataFile], with_meta: bool = False, live: bool = True
+    ) -> DataFrame:
+        """Rows of ``files``; ``live=False`` skips the tombstone anti-join
+        (index builds: a posting for a dead row is only a superset)."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
         if with_meta:
@@ -236,7 +240,7 @@ class Store:
                 "__file_path",
                 F.concat(F.lit("/"), F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "")),
             )
-        if self.manifest.tombstones:
+        if live and self.manifest.tombstones:
             # merge-on-read: anti-join the tombstoned rowids. ALL data reads
             # flow through here, so every query surface (find / multiget /
             # delete-victim scans / compact) sees only live rows.
@@ -247,11 +251,6 @@ class Store:
         return self.spark.read.schema(f"{ROWID} long").parquet(
             *[self._abs(t) for t in self.manifest.tombstones]
         )
-
-    def _file_id_map(self, files: Sequence[DataFile]) -> DataFrame:
-        """Small (path → file id) mapping df; broadcast into posting builds."""
-        rows = [(self._abs(f.path), f.id) for f in files]
-        return self.spark.createDataFrame(rows, "__file_path string, __file_id int")
 
     # -- insert (src/lib.rs:178-187) ----------------------------------------
 
@@ -320,28 +319,6 @@ class Store:
                 return done
             df = self.spark.createDataFrame(data, schema)
 
-        if isinstance(rows, DataFrame):
-            # tiny DataFrame batches take the same driver kernel: when the
-            # optimizer's own size estimate bounds the batch (driver-side
-            # metadata, no job) a single bounded take() replaces the whole
-            # distributed tail (checkpoint + counts + clustering + write —
-            # ~5 jobs of scheduling floor for a handful of rows). The
-            # estimate is scale-honest: it grows with the input files, so
-            # real batches never probe and never collect. CAVEAT: when the
-            # probe fires but the kernel declines (underestimate past the
-            # row cap, un-orderable values), the input plan is EVALUATED
-            # TWICE — the bounded take() and then the distributed insert —
-            # so non-idempotent sources (UDFs with side effects) may run
-            # twice. Disable with SPARK_GRAFT_DRIVER_INSERT_EST=0 if that
-            # matters for a given input.
-            taken = self._take_micro_df(df)
-            if taken is not None and not taken:
-                return 0  # probed bound proved the batch empty — no jobs
-            if taken:
-                done = self._insert_rows_driver([tuple(r) for r in taken], schema)
-                if done is not None:
-                    return done
-
         # Dense rowid assignment: per-partition counts -> cumulative offsets,
         # then a row_number within each original partition. Two passes over
         # the batch (same cost class as zipWithIndex) but stays in DataFrame
@@ -385,18 +362,27 @@ class Store:
             # statically, the checkpoint stays lazy and the counts job
             # runs map+reduce as ONE job (measured ~0.4 s/insert on the
             # 600k-row bench ingest). Restored right after the counts
-            # pass — the tail sizes its own confs.
+            # pass, on failure too — the tail sizes its own confs.
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        tagged = (
-            tagged.persist()
-            if stable_input
-            else tagged.localCheckpoint(eager=False)
-        )
+        try:
+            tagged = (
+                tagged.persist()
+                if stable_input
+                else tagged.localCheckpoint(eager=False)
+            )
+            stats = tagged.groupBy("__pid").agg(
+                F.count("*").alias("cnt"),
+                F.min("__mid").alias("lo"),
+                F.max("__mid").alias("hi"),
+            ).collect()
+        except BaseException:
+            tagged.unpersist()
+            raise
+        finally:
+            self.spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         v_before = self.manifest.version
         try:
-            return self._insert_tagged(
-                tagged, schema, watermark, restore_aqe=aqe_before
-            )
+            return self._insert_tagged(tagged, schema, watermark, stats)
         except BaseException:
             # a failure anywhere before the commit leaves the IN-MEMORY
             # manifest polluted: the batch's data files are registered,
@@ -465,43 +451,6 @@ class Store:
     # ZERO Spark jobs unless an index needs a posting build or the unique
     # probe must scan a big table. The posting-driver-build bound's sibling.
     DRIVER_INSERT_ROWS = 20_000
-
-    # DataFrame batches whose OPTIMIZER size estimate is at or below this
-    # many bytes probe for driver-side ingest with one bounded take().
-    # The estimate is plain non-CBO sizeInBytes — it never shrinks through
-    # filters, so it only fires when the batch's SOURCE files are tiny
-    # (dimension-table mutations); a bulk insert never pays the probe.
-    # SPARK_GRAFT_DRIVER_INSERT_EST=0 disables (same switch family as
-    # SPARK_GRAFT_CC_DRIVER_EDGES).
-    DRIVER_INSERT_EST_BYTES = int(
-        os.environ.get("SPARK_GRAFT_DRIVER_INSERT_EST", str(1 << 20)) or 0
-    )
-
-    def _take_micro_df(self, df: DataFrame) -> list | None:
-        """Bounded driver collect of a DataFrame batch the optimizer's own
-        statistics bound tiny; None when ineligible (estimate too big /
-        non-atomic types / more actual rows than the driver-insert cap —
-        the caller then keeps the distributed path, with one bounded
-        take() wasted in the rare underestimate case)."""
-        if self.DRIVER_INSERT_EST_BYTES <= 0:
-            return None  # disabled: skip the probe entirely (no stats eval)
-        if not all(
-            self._driver_atomic_type(f.dataType)
-            for f in self.manifest.schema.fields
-        ):
-            return None
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            return None
-        if est > self.DRIVER_INSERT_EST_BYTES:
-            return None
-        taken = df.take(self.DRIVER_INSERT_ROWS + 1)
-        if len(taken) > self.DRIVER_INSERT_ROWS:
-            return None
-        return taken
 
     @staticmethod
     def _driver_atomic_type(dt: T.DataType) -> bool:
@@ -801,15 +750,8 @@ class Store:
         tagged: DataFrame,
         schema: T.StructType,
         watermark: int,
-        restore_aqe: str | None = None,
+        stats: list,
     ) -> int:
-        stats = tagged.groupBy("__pid").agg(
-            F.count("*").alias("cnt"),
-            F.min("__mid").alias("lo"),
-            F.max("__mid").alias("hi"),
-        ).collect()
-        if restore_aqe is not None:
-            self.spark.conf.set("spark.sql.adaptive.enabled", restore_aqe)
         if not stats:
             return 0
         counts = {r["__pid"]: r["cnt"] for r in stats}
@@ -850,27 +792,22 @@ class Store:
         n: int,
         contiguous: bool = False,
     ) -> int:
-        offs_df = self.spark.createDataFrame(
-            [(pid, offsets[pid]) for pid in offsets], "__pid int, __off long"
-        )
+        # a literal pid → offset map, not a broadcast of a Python-list
+        # DataFrame (each such broadcast is a Spark job of its own)
+        off = F.create_map(
+            *[x for pid in offsets for x in (F.lit(pid), F.lit(offsets[pid]))]
+        )[F.col("__pid")].cast("long")
         if contiguous:
             # exchange-free rowids: the per-partition record counter IS
             # the dense local position (guard verified in _insert_tagged)
             local = F.col("__mid") - (F.col("__pid").cast("long") * F.lit(1 << 33))
-            with_id = (
-                tagged.join(F.broadcast(offs_df), "__pid")
-                .withColumn(ROWID, F.lit(watermark) + F.col("__off") + local)
-                .select(ROWID, *schema.fieldNames())
-            )
         else:
             from pyspark.sql import Window as W
 
-            w = W.partitionBy("__pid").orderBy("__mid")
-            with_id = (
-                tagged.join(F.broadcast(offs_df), "__pid")
-                .withColumn(ROWID, F.lit(watermark) + F.col("__off") + F.row_number().over(w) - 1)
-                .select(ROWID, *schema.fieldNames())
-            )
+            local = F.row_number().over(W.partitionBy("__pid").orderBy("__mid")) - 1
+        with_id = tagged.select(
+            (F.lit(watermark) + off + local).alias(ROWID), *schema.fieldNames()
+        )
 
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         self._cluster_batch(with_id, n).write.parquet(self._abs(batch_rel))
@@ -941,21 +878,10 @@ class Store:
         return with_id
 
     def _register_and_index(self, batch_rel: str) -> list["DataFile"]:
-        """Register freshly-written batch files and build postings for every
+        """Register freshly-written batch files and add them to every
         index — the shared epilogue of ``insert`` and ``apply_changes``."""
         new_files = self._register_files(batch_rel)
-        specs = [s for s in self.manifest.indices.values()]
-        if len([s for s in specs if s.kind != BLOOM]) > 1 and new_files:
-            # multi-index: scan the fresh batch once for every posting build
-            shared = self._read_files(new_files, with_meta=True).persist()
-            try:
-                for spec in specs:
-                    self._append_postings(spec, new_files, shared_df=shared)
-            finally:
-                shared.unpersist()
-        else:
-            for spec in specs:
-                self._append_postings(spec, new_files)
+        self._index_files(list(self.manifest.indices.values()), new_files)
         return new_files
 
     CONSTRAINT_KINDS = ("not_null", "unique")
@@ -1353,7 +1279,7 @@ class Store:
                 column=name, kind=COMPOSITE, custom=custom_indexer(indexer), columns=names
             )
             if self.manifest.files:
-                self._append_postings(spec, self.manifest.files)
+                self._index_files([spec], self.manifest.files)
             self.manifest.indices[name] = spec  # silent replace, parity :204
             self._commit()
             return
@@ -1377,7 +1303,7 @@ class Store:
             column=name, kind=kind, custom=custom_indexer(indexer), params=params
         )
         if self.manifest.files:
-            self._append_postings(spec, self.manifest.files)
+            self._index_files([spec], self.manifest.files)
         self.manifest.indices[name] = spec  # silent replace, parity :204
         self._commit()
 
@@ -1392,156 +1318,234 @@ class Store:
         del self.manifest.indices[name]
         self._commit()
 
-    def _append_postings(
-        self, spec: IndexSpec, files: Sequence[DataFile], incremental: bool = True,
-        shared_df: DataFrame | None = None,
-    ) -> None:
-        """Add posting rows (key, file_id) for ``files`` to ``spec``.
-
-        The distributed analogue of posting-list maintenance
-        (``src/idx.rs:48-51,114-117``): instead of rowids per key we track
+    def _index_files(self, specs: Sequence[IndexSpec], files: Sequence[DataFile]) -> None:
+        """Add the index entries of ``files`` to every index in ``specs``
+        and refresh each one's cost-model stats — the distributed analogue
+        of posting-list maintenance (``src/lib.rs:181-184``,
+        ``src/idx.rs:48-51,114-117``): instead of rowids per key we track
         *files* per key — the lookup result is a superset and ``find``'s
         residual filter restores exactness (``src/lib.rs:89-91``).
 
-        ``incremental=False`` (delete path) forces a full stats recompute:
-        an HLL sketch cannot subtract removed keys.
+        A batch at or below the driver-build bound takes ONE Spark job for
+        all of its indexes (:meth:`_index_files_driver`); a bigger batch
+        writes each index's part with its own job. The files are read
+        without the tombstone anti-join: fresh files hold no tombstoned
+        rowid, and a posting for a dead row (an index backfill after a
+        deferred delete) is only a superset, the state a deferred delete
+        leaves anyway."""
+        for spec in specs:
+            spec.rows = self.manifest.total_rows
+        if not specs or not files:
+            return
+        # a literal path → id map tags each row with its file id, so the
+        # build broadcasts no Python-list DataFrame (each such broadcast is
+        # a Spark job of its own)
+        ids = F.create_map(
+            *[x for f in files for x in (F.lit(self._abs(f.path)), F.lit(f.id))]
+        )
+        src = self._read_files(files, with_meta=True, live=False).withColumn(
+            "__file_id", ids[F.col("__file_path")].cast("int")
+        )
+        n_rows = sum(f.rows for f in files)
+        if n_rows <= min(self.POSTING_DRIVER_BUILD_ROWS, self.POSTING_SHARD_ROWS):
+            self._index_files_driver(specs, src)
+            return
+        for spec in specs:
+            if spec.kind == BLOOM:
+                self._append_blooms(spec, src)
+            else:
+                self._append_postings(spec, src, n_rows)
 
-        ``shared_df`` is a caller-persisted ``_read_files(files,
-        with_meta=True)`` — a multi-index table passes it so the batch is
-        scanned ONCE for all posting builds instead of once per index
-        (write-amplification ∝ index count otherwise).
-        """
-        if not files:
-            return
-        if spec.kind == BLOOM:
-            self._append_blooms(spec, files, incremental=incremental)
-            return
-        part_rel = os.path.join("idx", spec.column, f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
-        df = shared_df if shared_df is not None else self._read_files(files, with_meta=True)
-        mapping = self._file_id_map(files)
-        if spec.columns:
-            key_cols = [F.col(c).alias(f"k{i}") for i, c in enumerate(spec.columns)]
-        else:
-            key_cols = [F.col(spec.column).alias("key")]
-        rkey = "k0" if spec.columns else "key"
+    def _index_files_driver(self, specs: Sequence[IndexSpec], src: DataFrame) -> None:
+        """ONE Spark job for every index of a small batch: a no-shuffle
+        aggregate over ``coalesce(1)`` of its rows computes, per index, the
+        range key's min/max (part pruning stats), the set of distinct
+        (key, file id) postings and the HLL key sketch merged into the
+        stored one. The driver sorts each part by the range key and writes
+        it with pyarrow, in the distributed writer's arrow schema. A bloom
+        index packs its bitsets here from its distinct (key, file) pairs
+        with :func:`_bloom_positions_py`, the probe's bit-identical hash.
+        Trigram grams come from one ``inline_outer`` over the zipped gram
+        arrays: min, max, set and sketch all ignore duplicate rows, so the
+        fan-out changes no other index's result."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        grams = {s.column: f"__g{i}" for i, s in enumerate(specs) if s.kind == TRIGRAM}
+        if grams:
+            zipped = F.arrays_zip(
+                *[self._grams(s).alias(grams[s.column]) for s in specs if s.kind == TRIGRAM]
+            )
+            src = src.select("*", F.inline_outer(zipped))
+        aggs = []
+        for i, spec in enumerate(specs):
+            if spec.kind == TRIGRAM:
+                keys = [F.col(grams[spec.column])]
+            elif spec.kind == BLOOM:
+                keys = [F.col(spec.column).cast("string")]
+            else:
+                keys = [F.col(c) for c in spec.member_columns]
+            names = ["key"] if spec.kind == BLOOM else self._posting_schema(spec).names
+            post = F.struct(*[k.alias(n) for k, n in zip(keys, names)], "__file_id")
+            if spec.kind in (TRIGRAM, BLOOM):
+                post = F.when(keys[0].isNotNull(), post)  # no entry for a null key
+            aggs += [
+                F.min(keys[0]).alias(f"__lo{i}"),
+                F.max(keys[0]).alias(f"__hi{i}"),
+                F.collect_set(post).alias(f"__rows{i}"),
+                *self._sketch_cols(spec, keys, i),
+            ]
+        st = src.coalesce(1).agg(*aggs).collect()[0]
+        for i, spec in enumerate(specs):
+            rows = [r.asDict() for r in st[f"__rows{i}"]]
+            if not rows:
+                self._refresh_index_stats(spec, st, None, i)
+                continue
+            part_rel = self._part_rel(spec)
+            if spec.kind == BLOOM:
+                m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
+                bits: dict[int, bytearray] = {}
+                for r in rows:
+                    b = bits.setdefault(r["__file_id"], bytearray(m_bits // 8))
+                    for p in _bloom_positions_py(r["key"], m_bits, k):
+                        b[p >> 3] |= 1 << (p & 7)
+                table = pa.table({
+                    "__file_id": pa.array(list(bits), pa.int32()),
+                    "bloom": pa.array([bytes(b) for b in bits.values()], pa.binary()),
+                })
+            else:
+                schema = self._posting_schema(spec)
+                rkey = schema.names[0]
+                rows.sort(key=lambda d: (d[rkey] is None, d[rkey]))
+                table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+            out_dir = self._abs(part_rel)
+            os.makedirs(out_dir, exist_ok=True)
+            pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+            spec.parts.append(part_rel)
+            self._refresh_index_stats(spec, st, None if spec.kind == BLOOM else part_rel, i)
+
+    def _append_postings(self, spec: IndexSpec, src: DataFrame, n_rows: int) -> None:
+        """Distributed posting build of one index for a batch of ``n_rows``
+        rows above the driver-build bound."""
         if spec.kind == TRIGRAM:
             # inverted n-gram postings: every distinct trigram of every
             # value, deduped per file — key space bounded by alphabet³,
             # not ndv. Values shorter than 3 chars contribute nothing
             # (no gram to look up; such probes are residual-only anyway).
-            c = F.col(spec.column)
-            if spec.params.get("ci"):
-                c = F.lower(c)  # ci index: postings are lowered grams
-            grams = F.when(
-                c.isNull() | (F.length(c) < 3), F.array().cast("array<string>")
-            ).otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.length(c) - 2),
-                    lambda i: c.substr(i, F.lit(3)),
-                )
+            postings = src.select(
+                F.explode(F.array_distinct(self._grams(spec))).alias("key"), "__file_id"
             )
-            postings = (
-                df.join(F.broadcast(mapping), "__file_path")
-                .select(F.explode(F.array_distinct(grams)).alias("key"), "__file_id")
-                .distinct()
-            ).persist()
         else:
-            postings = (
-                df.join(F.broadcast(mapping), "__file_path")
-                .select(*key_cols, "__file_id")
-                .distinct()
+            postings = src.select(
+                *[
+                    F.col(c).alias(n)
+                    for c, n in zip(spec.member_columns, self._posting_schema(spec).names)
+                ],
+                "__file_id",
             )
-            # micro-batch fast path (r11 commit-floor): a posting set
-            # bounded by the batch's row count fits on the driver, so the
-            # stats agg and the posting ROWS come back in ONE fused job
-            # (collect_list riding the same pass) and the part is written
-            # driver-side with pyarrow — no second Spark job, no persist,
-            # one file. Bulk loads (> cap) keep the distributed path.
-            n_batch = sum(f.rows for f in files)
-            # gate on the shard threshold too: a part that would range-
-            # shard belongs to the distributed writer
-            if incremental and n_batch <= min(
-                self.POSTING_DRIVER_BUILD_ROWS, self.POSTING_SHARD_ROWS
-            ):
-                self._append_postings_driver(spec, postings, part_rel, rkey)
-                return
-            if incremental and n_batch <= self.POSTING_SHARD_ROWS:
-                # posting rows ≤ batch rows ≤ one shard, so no count is
-                # needed for the shard decision: the stats agg (count/min/
-                # max/HLL) rides the posting WRITE itself via observe() —
-                # one job instead of a fused-agg job plus a write job, and
-                # no persist. Sorting unconditionally is safe (row order
-                # inside a posting part is semantically irrelevant) and
-                # keeps tight per-file footer ranges when stats exist.
-                from pyspark.sql import Observation
+        postings = postings.distinct()
+        rkey = postings.columns[0]
+        keys = [F.col(c) for c in postings.columns[:-1]]
+        stats = [F.min(rkey).alias("__lo"), F.max(rkey).alias("__hi"), *self._sketch_cols(spec, keys)]
+        part_rel = self._part_rel(spec)
+        if n_rows <= self.POSTING_SHARD_ROWS:
+            # posting rows ≤ batch rows ≤ one shard, so no count is needed
+            # for the shard decision: the stats agg rides the posting WRITE
+            # itself via observe() — one job, no persist. Sorting is safe
+            # (row order inside a posting part is semantically irrelevant)
+            # and keeps tight per-file footer ranges.
+            from pyspark.sql import Observation
 
-                obs = Observation()
-                out = postings.observe(
-                    obs,
-                    F.min(rkey).alias("__lo"),
-                    F.max(rkey).alias("__hi"),
-                    self._sketch_agg(spec),
-                ).sortWithinPartitions(rkey)
-                out.write.parquet(self._abs(part_rel))
-                st = obs.get
-                if self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-                    spec.part_stats[part_rel] = [
-                        self._stats_val(st["__lo"]), self._stats_val(st["__hi"])
-                    ]
-                spec.parts.append(part_rel)
-                self._refresh_index_stats(
-                    spec,
-                    new_parts=[part_rel],
-                    new_sketch=bytes(st["__sk"]) if st["__sk"] is not None else None,
-                )
-                return
-            postings = postings.persist()
+            obs = Observation()
+            postings.observe(obs, *stats).sortWithinPartitions(rkey).write.parquet(
+                self._abs(part_rel)
+            )
+            spec.parts.append(part_rel)
+            self._refresh_index_stats(spec, obs.get, part_rel)
+            return
+        postings = postings.persist()
         try:
-            # ONE fused agg over the cached batch: posting count + range-key
-            # min/max (part-level pruning stats) + the HLL key sketch the
-            # incremental ndv merge needs — replaces the separate
-            # part-re-read the stats refresh used to do, so the insert path
-            # runs the same number of jobs as before sharding existed.
-            st = postings.agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.min(rkey).alias("__lo"),
-                F.max(rkey).alias("__hi"),
-                self._sketch_agg(spec),
-            ).collect()[0]
-            n_post = int(st["__n"] or 0)
+            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats).collect()[0]
             # range-shard the part so every output file covers a disjoint
             # key range: a point probe's pushed-down key predicate then
             # reads ~one shard's row groups, keeping probe IO sublinear in
             # posting size however large the part grows
-            n_shards = min(64, max(1, n_post // self.POSTING_SHARD_ROWS + 1))
+            n_shards = min(64, max(1, int(st["__n"] or 0) // self.POSTING_SHARD_ROWS + 1))
             out = postings
-            if self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-                if n_shards > 1:
-                    out = postings.repartitionByRange(n_shards, rkey)
-                out = out.sortWithinPartitions(rkey)  # tight per-file footer ranges
-                spec.part_stats[part_rel] = [
-                    self._stats_val(st["__lo"]), self._stats_val(st["__hi"])
-                ]
-            elif spec.kind == BTREE:
-                out = postings.sortWithinPartitions("key")
-            out.write.parquet(self._abs(part_rel))
+            if n_shards > 1 and self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
+                out = postings.repartitionByRange(n_shards, rkey)
+            out.sortWithinPartitions(rkey).write.parquet(self._abs(part_rel))
             spec.parts.append(part_rel)
-            self._refresh_index_stats(
-                spec,
-                new_parts=[part_rel] if incremental else None,
-                new_sketch=bytes(st["__sk"]) if (incremental and st["__sk"] is not None) else None,
-            )
+            self._refresh_index_stats(spec, st, part_rel)
         finally:
             postings.unpersist()
+
+    def _append_blooms(self, spec: IndexSpec, src: DataFrame) -> None:
+        """Distributed bloom build for a batch above the driver-build
+        bound: one bitset per data file, appended as an index part with
+        rows ``(__file_id, bloom)``. k bit positions per row (JVM-side md5
+        expr), distinct per file, packed to a binary bitset by a tiny UDF
+        that runs once per FILE (not per row); the key sketch rides the
+        same job via observe()."""
+        from pyspark.sql import Observation
+
+        m_bits = int(spec.params["m_bits"])
+        k = int(spec.params["k"])
+        obs = Observation()
+        positions = (
+            src.observe(obs, *self._sketch_cols(spec, [F.col(spec.column)]))
+            .filter(F.col(spec.column).isNotNull())
+            .select(
+                "__file_id",
+                F.explode(_bloom_positions_expr(spec.column, m_bits, k)).alias("pos"),
+            )
+            .distinct()
+        )
+
+        def _pack(pos_list):
+            bits = bytearray(m_bits // 8)
+            for p in pos_list:
+                bits[p >> 3] |= 1 << (p & 7)
+            return bytes(bits)
+
+        pack = F.udf(_pack, T.BinaryType())
+        part_rel = self._part_rel(spec)
+        (
+            positions.groupBy("__file_id")
+            .agg(F.collect_list("pos").alias("pos"))
+            .select("__file_id", pack("pos").alias("bloom"))
+            .write.parquet(self._abs(part_rel))
+        )
+        spec.parts.append(part_rel)
+        self._refresh_index_stats(spec, obs.get)
+
+    def _part_rel(self, spec: IndexSpec) -> str:
+        prefix = "b" if spec.kind == BLOOM else "p"
+        return os.path.join(
+            "idx", spec.column, f"{prefix}{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+        )
+
+    @staticmethod
+    def _grams(spec: IndexSpec) -> Column:
+        """The trigrams of a TRIGRAM index's column (an empty array for a
+        NULL or a value shorter than 3 chars, never NULL)."""
+        c = F.col(spec.column)
+        if spec.params.get("ci"):
+            c = F.lower(c)  # ci index: postings are lowered grams
+        return F.when(
+            c.isNull() | (F.length(c) < 3), F.array().cast("array<string>")
+        ).otherwise(
+            F.transform(F.sequence(F.lit(1), F.length(c) - 2), lambda i: c.substr(i, F.lit(3)))
+        )
 
     # posting parts are range-sharded into files of ~this many rows so a
     # pushed-down point probe reads one shard, not the whole part
     POSTING_SHARD_ROWS = 1_000_000
 
-    # batches at or below this many rows build their posting part on the
-    # DRIVER: the posting set is bounded by the batch row count, so the
-    # stats agg + collect_list fuse into one Spark job and pyarrow writes
-    # the (sorted, single-file) part with no second job — the streaming /
+    # batches at or below this many rows build their index parts on the
+    # DRIVER: the posting set is bounded by the batch row count, so every
+    # index's stats and postings fuse into one Spark job and pyarrow writes
+    # the (sorted, single-file) parts with no second job — the streaming /
     # matview micro-commit floor. Bulk loads keep the distributed path.
     POSTING_DRIVER_BUILD_ROWS = 20_000
 
@@ -1558,47 +1562,6 @@ class Store:
     # couple hundred thousand (rowid, path) values
     CDF_DRIVER_READ_ROWS = 200_000
 
-    def _append_postings_driver(
-        self, spec: IndexSpec, postings: DataFrame, part_rel: str, rkey: str
-    ) -> None:
-        """One-job posting build for micro-batches: fused count/min/max/
-        HLL-sketch/collect_list agg, driver-side sort by the range key
-        (tight footer ranges, like the distributed path's
-        sortWithinPartitions), pyarrow single-file write in the exact
-        arrow schema of the distributed writer's output."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        cols = postings.columns
-        st = postings.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(rkey).alias("__lo"),
-            F.max(rkey).alias("__hi"),
-            self._sketch_agg(spec),
-            F.collect_list(F.struct(*cols)).alias("__rows"),
-        ).collect()[0]
-        n_post = int(st["__n"] or 0)
-        if not n_post:
-            return
-        rows = sorted(
-            (r.asDict() for r in st["__rows"]),
-            key=lambda d: (d[rkey] is None, d[rkey]),
-        )
-        out_dir = self._abs(part_rel)
-        os.makedirs(out_dir, exist_ok=True)
-        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(postings.schema))
-        pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-        if self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-            spec.part_stats[part_rel] = [
-                self._stats_val(st["__lo"]), self._stats_val(st["__hi"])
-            ]
-        spec.parts.append(part_rel)
-        self._refresh_index_stats(
-            spec,
-            new_parts=[part_rel],
-            new_sketch=bytes(st["__sk"]) if st["__sk"] is not None else None,
-        )
-
     @staticmethod
     def _stats_ok(v) -> bool:
         """Part-level pruning stats are recorded only for the primitive
@@ -1610,73 +1573,36 @@ class Store:
     def _stats_val(v):
         return v if isinstance(v, (int, str)) else float(v)
 
-    def _append_blooms(
-        self, spec: IndexSpec, files: Sequence[DataFile], incremental: bool = True
-    ) -> None:
-        """Build one bloom bitset per data file in ``files`` and append them
-        as an index part with rows ``(__file_id, bloom)``.
-
-        Fully distributed: k bit positions per row (JVM-side md5 expr),
-        distinct per file, packed to a binary bitset by a tiny UDF that runs
-        once per FILE (not per row) — the only rows that ever cross into
-        Python are #files aggregated position arrays. Nothing is collected
-        on the driver here; probes later read the (file, bitset) part, which
-        is #live-files rows."""
-        m_bits = int(spec.params["m_bits"])
-        k = int(spec.params["k"])
-        part_rel = os.path.join(
-            "idx", spec.column, f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-        )
-        df = self._read_files(files, with_meta=True)
-        mapping = self._file_id_map(files)
-        positions = (
-            df.join(F.broadcast(mapping), "__file_path")
-            .filter(F.col(spec.column).isNotNull())
-            .select(
-                "__file_id",
-                F.explode(_bloom_positions_expr(spec.column, m_bits, k)).alias("pos"),
-            )
-            .distinct()
-        )
-
-        def _pack(pos_list):
-            bits = bytearray(m_bits // 8)
-            for p in pos_list:
-                bits[p >> 3] |= 1 << (p & 7)
-            return bytes(bits)
-
-        pack = F.udf(_pack, T.BinaryType())
-        (
-            positions.groupBy("__file_id")
-            .agg(F.collect_list("pos").alias("pos"))
-            .select("__file_id", pack("pos").alias("bloom"))
-            .write.parquet(self._abs(part_rel))
-        )
-        spec.parts.append(part_rel)
-        self._refresh_bloom_stats(spec, files if incremental else None)
-
-    # keys are sketched as strings (injective per type) because HLL sketch
-    # aggregation supports int/long/string/binary but not double
     @staticmethod
-    def _sketch_agg(spec: IndexSpec | None = None):
-        if spec is not None and spec.columns:
+    def _sketch_cols(
+        spec: IndexSpec, keys: Sequence[Column], suffix: int | str = ""
+    ) -> list[Column]:
+        """The HLL sketch of the index keys ``keys`` merged into the
+        spec's stored sketch (``hll_union``, inside the same aggregate —
+        no merge job of its own; no stored sketch, as after ``compact``,
+        starts from scratch), and its estimate. Keys are sketched as
+        strings (injective per type) because HLL sketch aggregation
+        supports int/long/string/binary but not double."""
+        import base64
+
+        if len(keys) > 1:
             # composite: sketch the TUPLE — ndv of the combined key is the
-            # whole point of the index's cost-model advantage
-            # Injective tuple encoding: concat_ws SKIPS null members, which
-            # would collapse ('a', NULL), (NULL, 'a') and ('a',) into one
-            # sketch key and underestimate tuple ndv (a cost-model input).
-            # Hash each member to a fixed-width token (null → a marker no
-            # md5 can produce) before joining, so distinct tuples always
-            # yield distinct keys.
+            # whole point of the index's cost-model advantage. Injective
+            # tuple encoding: concat_ws SKIPS null members, which would
+            # collapse ('a', NULL), (NULL, 'a') and ('a',) into one sketch
+            # key and underestimate tuple ndv. Hash each member to a
+            # fixed-width token (null → a marker no md5 can produce)
+            # before joining, so distinct tuples always yield distinct keys.
             key = F.concat_ws(
                 "\x1f",
-                *[
-                    F.coalesce(F.md5(F.col(f"k{i}").cast("string")), F.lit("<null>"))
-                    for i in range(len(spec.columns))
-                ],
+                *[F.coalesce(F.md5(k.cast("string")), F.lit("<null>")) for k in keys],
             )
-            return F.hll_sketch_agg(key).alias("__sk")
-        return F.hll_sketch_agg(F.col("key").cast("string")).alias("__sk")
+        else:
+            key = keys[0].cast("string")
+        sk = F.hll_sketch_agg(key)
+        if spec.sketch:
+            sk = F.hll_union(F.lit(bytearray(base64.b64decode(spec.sketch))), sk)
+        return [sk.alias(f"__sk{suffix}"), F.hll_sketch_estimate(sk).alias(f"__ndv{suffix}")]
 
     def _posting_schema(self, spec: IndexSpec) -> T.StructType:
         """Schema of one posting part: (key, __file_id) for single-column
@@ -1691,117 +1617,32 @@ class Store:
         return T.StructType(fields + [T.StructField("__file_id", T.IntegerType(), True)])
 
     def _refresh_index_stats(
-        self,
-        spec: IndexSpec,
-        new_parts: Sequence[str] | None = None,
-        new_sketch: bytes | None = None,
+        self, spec: IndexSpec, st, part_rel: str | None = None, suffix: int | str = ""
     ) -> None:
-        """rows/ndv for the cost model (``src/idx.rs:71-78``): rows = live
-        table rows; ndv from a mergeable HLL sketch kept in the manifest.
+        """Take an index's cost-model stats (``src/idx.rs:71-78``) from the
+        build aggregate ``st`` (a Row or an observation): ``part_rel``'s
+        range-key [min, max], and ndv with the HLL sketch it came from.
+        Rows (live table rows) are set by :meth:`_index_files`.
 
-        With ``new_parts`` and an existing sketch (the insert path), the
-        new keys are sketched alone and union-merged — commit cost is
-        O(new batch), not O(all postings); ``new_sketch`` (computed by the
-        posting build's own fused agg) skips even that part re-read.
-        Otherwise (index backfill, deletes) the sketch is rebuilt from the
-        live postings."""
+        The ndv contract: exact (an HLL estimate equal to a from-scratch
+        sketch of all live keys) after inserts and after ``compact``,
+        which rebuilds every sketch. Between compactions, after deletes,
+        it is an upper bound: a sketch cannot subtract keys, and both
+        delete strategies leave it as it was — a copy-on-write delete
+        re-indexes its survivor files incrementally, and their keys are
+        already in the sketch."""
         import base64
 
-        if spec.kind == BLOOM:  # bloom keeps no key postings — sketch the data
-            self._refresh_bloom_stats(spec, None)
-            return
-        spec.rows = self.manifest.total_rows
-        if new_parts and spec.sketch:
-            if new_sketch is not None:
-                new_sk = new_sketch
-            else:
-                part_df = self.spark.read.schema(self._posting_schema(spec)).parquet(
-                    *[self._abs(p) for p in new_parts]
-                )
-                new_sk = part_df.agg(self._sketch_agg(spec)).collect()[0]["__sk"]
-            if new_sk is None:
-                return
-            merged_row = (
-                self.spark.createDataFrame(
-                    [(base64.b64decode(spec.sketch),), (bytes(new_sk),)], "__sk binary"
-                )
-                .agg(F.hll_union_agg("__sk").alias("__sk"))
-                .select(
-                    F.hll_sketch_estimate("__sk").alias("ndv"), F.col("__sk")
-                )
-                .collect()[0]
-            )
-            spec.ndv = int(merged_row["ndv"])
-            spec.sketch = base64.b64encode(bytes(merged_row["__sk"])).decode()
-            return
-        post = self._read_postings(spec)
-        if post is None:
+        if part_rel is not None:
+            lo, hi = st[f"__lo{suffix}"], st[f"__hi{suffix}"]
+            if self._stats_ok(lo) and self._stats_ok(hi):
+                spec.part_stats[part_rel] = [self._stats_val(lo), self._stats_val(hi)]
+        sk = st[f"__sk{suffix}"]
+        if sk is not None:
+            spec.ndv = int(st[f"__ndv{suffix}"])
+            spec.sketch = base64.b64encode(bytes(sk)).decode()
+        elif spec.sketch is None:
             spec.ndv = 0
-            spec.sketch = None
-            return
-        row = (
-            post.agg(self._sketch_agg(spec))
-            .select(
-                F.when(
-                    F.col("__sk").isNotNull(), F.hll_sketch_estimate("__sk")
-                ).alias("ndv"),
-                F.col("__sk"),
-            )
-            .collect()[0]
-        )
-        if row["__sk"] is None:
-            spec.ndv = 0
-            spec.sketch = None
-        else:
-            spec.ndv = int(row["ndv"])
-            spec.sketch = base64.b64encode(bytes(row["__sk"])).decode()
-
-    def _refresh_bloom_stats(self, spec: IndexSpec, new_files: Sequence[DataFile] | None) -> None:
-        """rows/ndv for the cost model, bloom flavor: no posting rows exist,
-        so the HLL key sketch comes from the DATA files — the new batch
-        alone when ``new_files`` is given and a prior sketch can be merged
-        (insert path, O(batch)), else all live files (backfill/deletes)."""
-        import base64
-
-        spec.rows = self.manifest.total_rows
-        if new_files is not None and spec.sketch:
-            src = self._read_files(new_files)
-        elif self.manifest.files:
-            src = self._read_files(self.manifest.files)
-            spec.sketch = None  # full rebuild — don't merge into stale state
-        else:
-            spec.ndv = 0
-            spec.sketch = None
-            return
-        row = (
-            src.select(F.col(spec.column).alias("key"))
-            .agg(self._sketch_agg())
-            .collect()[0]
-        )
-        if row["__sk"] is None:
-            if spec.sketch is None:
-                spec.ndv = 0
-            return
-        new_sk = bytes(row["__sk"])
-        if spec.sketch:
-            merged_row = (
-                self.spark.createDataFrame(
-                    [(base64.b64decode(spec.sketch),), (new_sk,)], "__sk binary"
-                )
-                .agg(F.hll_union_agg("__sk").alias("__sk"))
-                .select(F.hll_sketch_estimate("__sk").alias("ndv"), F.col("__sk"))
-                .collect()[0]
-            )
-            spec.ndv = int(merged_row["ndv"])
-            spec.sketch = base64.b64encode(bytes(merged_row["__sk"])).decode()
-        else:
-            est = (
-                self.spark.createDataFrame([(new_sk,)], "__sk binary")
-                .select(F.hll_sketch_estimate("__sk").alias("ndv"))
-                .collect()[0]["ndv"]
-            )
-            spec.ndv = int(est)
-            spec.sketch = base64.b64encode(new_sk).decode()
 
     def _read_postings(self, spec: IndexSpec) -> DataFrame | None:
         if not spec.parts:
@@ -1814,11 +1655,9 @@ class Store:
         df = self.spark.read.schema(self._posting_schema(spec)).parquet(
             *[self._abs(p) for p in spec.parts]
         )
-        if live:
-            ids = self.spark.createDataFrame([(i,) for i in sorted(live)], "__file_id int")
-            df = df.join(F.broadcast(ids), "__file_id", "left_semi")
-        else:
-            df = df.limit(0)
+        # a literal id list, not a broadcast semi-join of a Python-list
+        # DataFrame (each such broadcast is a Spark job of its own)
+        df = df.filter(F.col("__file_id").isin(sorted(live))) if live else df.limit(0)
         df = df.cache()  # postings are tiny relative to data; lookups are hot
         self._posting_cache[cache_key] = df
         return df
@@ -1849,8 +1688,9 @@ class Store:
         are range-sharded at write, so the pushed filter skips every shard
         whose footer range excludes the key. Probe IO is therefore ~one
         shard of one part however large the posting total; the whole-set
-        cached read (``_read_postings``) stays for small/hot indexes and
-        full rebuilds."""
+        cached read (``_read_postings``) stays for small/hot indexes.
+        Postings of retired files stay in the pruned read: every caller
+        intersects the hit ids with its live candidates on the driver."""
         if not spec.parts:
             return None
         parts = self._parts_for_probe(spec, point)
@@ -1860,14 +1700,9 @@ class Store:
             # no pruning possible (legacy stats or odd probe type): the
             # cached whole-set read amortizes better across probes
             return self._read_postings(spec)
-        live = {f.id for f in self.manifest.files}
-        df = self.spark.read.schema(self._posting_schema(spec)).parquet(
+        return self.spark.read.schema(self._posting_schema(spec)).parquet(
             *[self._abs(p) for p in parts]
         )
-        if not live:
-            return df.limit(0)
-        ids = self.spark.createDataFrame([(i,) for i in sorted(live)], "__file_id int")
-        return df.join(F.broadcast(ids), "__file_id", "left_semi")
 
     # -- find (src/lib.rs:130-137) ------------------------------------------
 
@@ -2209,12 +2044,10 @@ class Store:
                                 [f"k{j}" for j in range(len(path.conds))]
                             )
                             pred = c if pred is None else (pred & c)
+                        # deduplicated here, not by a distinct() shuffle
                         hit_ids = {
                             r["__file_id"]
-                            for r in post.filter(pred)
-                            .select("__file_id")
-                            .distinct()
-                            .collect()
+                            for r in post.filter(pred).select("__file_id").collect()
                         }
                 if hit_ids is not None:
                     files = [f for f in files if f.id in hit_ids]
@@ -2244,11 +2077,11 @@ class Store:
                         post = self._read_postings(path.index)
                     if post is not None:
                         key_cond = Condition("key", path.cond.cmp)
+                        # deduplicated here, not by a distinct() shuffle
                         hit_ids = {
                             r["__file_id"]
                             for r in post.filter(key_cond.to_column(["key"]))
                             .select("__file_id")
-                            .distinct()
                             .collect()
                         }
                 if hit_ids is not None:
@@ -2661,6 +2494,13 @@ class Store:
           the superset-then-recheck read contract (src/lib.rs:89-91) plus
           the tombstone anti-join keeps every result exact.
 
+        Index ndv (the cost model's ``rows/ndv``, ``src/idx.rs:71-78``) is
+        exact after inserts and after ``compact``, and an upper bound
+        between compactions after deletes — the same for both
+        strategies: a sketch cannot subtract keys, so a deferred delete
+        leaves it as it is and a copy-on-write delete re-indexes its
+        survivor files incrementally (their keys are already in it).
+
         ``residual`` is the reference's arbitrary row closure
         (``src/lib.rs:149``): pass a Spark ``Column`` (preferred — stays
         JVM-side) or a Python callable over the row's cells (wrapped in a
@@ -2812,11 +2652,10 @@ class Store:
         new_files = self._register_files(batch_rel)
         # un-index: dead file ids drop out of the live set (posting rows that
         # reference them are filtered at read; src/lib.rs:164-168 analogue),
-        # and the survivors' new files get fresh postings.
-        for spec in self.manifest.indices.values():
-            self._append_postings(spec, new_files, incremental=False)
-            if not new_files:
-                self._refresh_index_stats(spec)
+        # and the survivors' new files are indexed incrementally — their
+        # keys are already in every sketch, so ndv stays an upper bound
+        # until compact (the deferred delete's contract)
+        self._index_files(list(self.manifest.indices.values()), new_files)
         self.manifest.pending_cdf = [cdf_rel]
         self._commit()
         return victims
@@ -3806,6 +3645,6 @@ class Store:
         for spec in self.manifest.indices.values():
             spec.parts = []
             spec.part_stats = {}
-            spec.sketch = None  # rebuilt from the compacted postings
-            self._append_postings(spec, new_files, incremental=False)
+            spec.sketch = None  # rebuilt from scratch: ndv exact again
+        self._index_files(list(self.manifest.indices.values()), new_files)
         self._commit()

@@ -257,6 +257,27 @@ def test_refresh_job_count_logged_and_bounded(spark, store_path):
     assert mv.last_refresh_jobs == 0
 
 
+def test_refresh_keeps_callers_job_group(spark, store_path):
+    """A refresh counts its jobs under a job group of its own, then puts
+    the caller's group and description back instead of clearing them."""
+    st = _base(spark, str(store_path))
+    mv = MatView.create(
+        spark, os.path.join(str(store_path), "v"), st, ["k"], [("sv", "sum", "v")]
+    )
+    st.insert([("a", 9.0)])
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller work")
+    try:
+        mv.refresh()
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller work"
+        assert mv.last_refresh_jobs > 0
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    _assert_matches_recompute(mv)
+
+
 def test_refresh_aqe_bypass_restores_conf_and_estimates(spark, store_path):
     """The small-delta static-compile path (r9): the delta estimate is
     driver-side manifest arithmetic (appends = rowid advance, deletes =

@@ -2121,44 +2121,6 @@ def test_changes_cdf_plan_prunes_empty_branches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_insert_tiny_dataframe_driver_route_equivalent(spark, tmp_path):
-    """A DataFrame batch the optimizer's size estimate bounds tiny ingests
-    through the driver kernel (the list-insert path): same rows, same
-    dense-rowid accounting, indexes maintained — venue equivalence against
-    a store with the estimate gate disabled."""
-    import pyspark.sql.functions as F
-
-    # the gate keys on the OPTIMIZER estimate, which is only known for
-    # file-backed plans (a Python createDataFrame arrives as a LogicalRDD
-    # whose stats default to unknown/huge — it keeps the distributed path)
-    src_path = str(tmp_path / "src.parquet")
-    spark.createDataFrame(
-        [("k%02d" % i, "v%02d" % i) for i in range(12)], "c0 string, c1 string"
-    ).coalesce(1).write.parquet(src_path)
-    src = spark.read.parquet(src_path).withColumn("c1", F.upper("c1"))
-    a = make(spark, str(tmp_path / "drv"), AXB, index_col=0)
-    b = make(spark, str(tmp_path / "dist"), AXB, index_col=0)
-    wm_a = a.manifest.rowid
-    assert a._take_micro_df(src) is not None  # the gate fires for this plan
-    assert a.insert(src) == 12
-    assert a.manifest.rowid == wm_a + 12  # dense from the watermark
-    old_gate = Store.DRIVER_INSERT_EST_BYTES
-    Store.DRIVER_INSERT_EST_BYTES = 0  # force the distributed path
-    try:
-        assert b._take_micro_df(src) is None
-        assert b.insert(src) == 12
-    finally:
-        Store.DRIVER_INSERT_EST_BYTES = old_gate
-    assert rows_of(a.find([])) == rows_of(b.find([]))
-    assert rows_of(a.find([eq(0, "k03")])) == [("k03", "V03")]  # postings see it
-    # a batch with more actual rows than the cap is refused by the probe
-    big = spark.range(Store.DRIVER_INSERT_ROWS + 5).select(
-        F.col("id").cast("string").alias("c0"), F.lit("x").alias("c1")
-    )
-    assert a._take_micro_df(big) is None
-
-
-@pytest.mark.slow
 def test_merge_micro_batch_equivalent_to_default(spark, tmp_path):
     """merge(..., micro_batch=True) — the matview refresh path — returns
     the same counts and converges to the same table as the default merge,
@@ -2208,9 +2170,9 @@ def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path):
 
 
 def test_insert_empty_dataframe_batch_is_free(spark, tmp_path):
-    """An eligible zero-row DataFrame batch returns 0 without running the
-    distributed tail or bumping the version (the probed bound already
-    proved it empty)."""
+    """A zero-row DataFrame batch returns 0 without running the
+    distributed tail or bumping the version (the counts pass finds no
+    rows)."""
     st = make(spark, str(tmp_path / "e"), AXB, index_col=0)
     v0, wm0 = st.manifest.version, st.manifest.rowid
     src_path = str(tmp_path / "empty.parquet")
@@ -2218,3 +2180,199 @@ def test_insert_empty_dataframe_batch_is_free(spark, tmp_path):
     assert st.insert(spark.read.parquet(src_path)) == 0
     assert st.manifest.version == v0 and st.manifest.rowid == wm0
     assert len(rows_of(st.find([]))) == len(AXB)  # existing rows untouched
+
+
+def test_insert_counts_failure_restores_aqe(spark, tmp_path):
+    """The DataFrame insert turns AQE off for its counts pass; a failure
+    inside that pass restores the session's prior value and leaves the
+    store as it was."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    st = make(spark, str(tmp_path / "s"), AXB, index_col=0)
+    v0 = st.manifest.version
+
+    def boom(_):
+        raise ValueError("counts pass failure")
+
+    bad = spark.createDataFrame([(1,), (2,)], "id long").select(
+        F.udf(boom, T.StringType())("id").alias("c0"), F.lit("x").alias("c1")
+    )
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    with pytest.raises(Exception, match="counts pass failure"):
+        st.insert(bad)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+    assert st.manifest.version == v0 and len(st) == len(AXB)
+
+
+def _jobs(spark, fn):
+    """(result of ``fn``, Spark jobs it launched), counted by a job tag."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"pin-{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    # the tracker is fed by the listener bus, which may lag the call
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def _two_index_store(spark, path, batches=6, per_batch=50):
+    """A hash index on ``k`` and a btree on ``v``, ``batches`` literal
+    inserts of one file each. Every file spans the whole key range, so
+    only the posting index narrows a point find, and the posting-map cap
+    of 0 sends every probe down the Spark posting path."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.DoubleType()),
+            T.StructField("s", T.StringType()),
+        ]
+    )
+    st = Store.create(spark, path, schema)
+    st.index("k", "hash")
+    st.index("v", "btree")
+    st.POSTING_MAP_MAX = 0
+    for b in range(batches):
+        keys = [i * batches + b for i in range(per_batch)]
+        st.insert([(k, k / 2, f"s{k % 7}") for k in keys])
+    return st
+
+
+def test_job_count_pins_two_index_store(spark, tmp_path):
+    """The job floor of the indexed write and read paths: a literal
+    insert maintains both indexes in ONE job (the fused driver build), a
+    point find that probes the Spark posting path runs the probe and the
+    scan, and a 1-row copy-on-write delete runs the probe, the changelog
+    write, the survivors' write and one fused index job."""
+    st = _two_index_store(spark, str(tmp_path / "s"))
+    n, jobs = _jobs(spark, lambda: st.insert([(10_000 + i, 1.5 * i, "m") for i in range(100)]))
+    assert n == 100 and jobs == 1
+    assert "IndexLookup" in st.explain_find([eq("k", 7)])
+    rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
+    assert [r["k"] for r in rows] == [7] and jobs == 2
+    n, jobs = _jobs(spark, lambda: st.delete([eq("k", 8)]))
+    assert n == 1 and jobs <= 4
+    assert st.find([eq("k", 8)]).count() == 0
+    assert rows_of(st.find([eq("k", 9)])) == [(9, 4.5, "s2")]
+
+
+def _scratch_sketch(spark, st, column):
+    """(ndv, sketch bytes) of a from-scratch HLL sketch over the live
+    postings of the index on ``column``."""
+    from pyspark.sql import functions as F
+
+    post = st._read_postings(st.manifest.indices[column])
+    row = (
+        post.agg(F.hll_sketch_agg(F.col("key").cast("string")).alias("sk"))
+        .select(F.hll_sketch_estimate("sk").alias("ndv"), "sk")
+        .collect()[0]
+    )
+    return int(row["ndv"]), bytes(row["sk"])
+
+
+def _same_keys(spark, a: bytes, b: bytes) -> bool:
+    """Two HLL sketches hold the same keys: each one's estimate equals
+    their union's (set-mode sketches lay their coupons out in insertion
+    order, so equal key sets need not give equal bytes)."""
+    from pyspark.sql import functions as F
+
+    row = (
+        spark.createDataFrame([(bytearray(a), bytearray(b))], "a binary, b binary")
+        .select(
+            F.hll_sketch_estimate("a").alias("a"),
+            F.hll_sketch_estimate("b").alias("b"),
+            F.hll_sketch_estimate(F.hll_union("a", "b")).alias("u"),
+        )
+        .collect()[0]
+    )
+    return row["a"] == row["b"] == row["u"]
+
+
+def _exact_ndv(st, column):
+    return st.find([]).select(column).distinct().count()
+
+
+def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
+    """The ndv contract: after inserts — through the fused driver build
+    and the distributed observe() build alike — every index's ndv and
+    sketch equal a from-scratch sketch of its live postings; after a
+    copy-on-write delete ndv is still at least the exact distinct count
+    of live keys; compact() rebuilds it to the from-scratch value."""
+    import base64
+
+    from pyspark.sql import functions as F
+
+    st = _two_index_store(spark, str(tmp_path / "s"), batches=3)
+    st.POSTING_DRIVER_BUILD_ROWS = 50  # the next batch takes the observe() path
+    st.insert(
+        spark.range(300, 420).select(
+            F.col("id").alias("k"), (F.col("id") / 2).alias("v"), F.lit("d").alias("s")
+        )
+    )
+    for column in ("k", "v"):
+        spec = st.manifest.indices[column]
+        ndv, sk = _scratch_sketch(spark, st, column)
+        assert spec.ndv == ndv
+        assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+    st.delete([between("k", 0, 99)])  # a third of the keys vanish
+    for column in ("k", "v"):
+        assert st.manifest.indices[column].ndv >= _exact_ndv(st, column)
+        assert st.manifest.indices[column].rows == len(st)
+    st.compact(target_files=2)
+    for column in ("k", "v"):
+        spec = st.manifest.indices[column]
+        ndv, sk = _scratch_sketch(spark, st, column)
+        assert spec.ndv == ndv
+        assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+
+
+def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
+    """The one-job driver build of a small batch writes the same index
+    content as the per-index distributed build: posting sets (key, file
+    id) of hash, composite and two trigram indexes, bloom bitsets per
+    file, and ndv — so every kind rides the fused job unchanged."""
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex, TrigramIndex
+
+    schema = T.StructType(
+        [
+            T.StructField("a", T.StringType()),
+            T.StructField("b", T.StringType()),
+            T.StructField("n", T.LongType()),
+        ]
+    )
+    rows = [(f"alpha{i % 13}", None if i % 5 == 0 else f"be{i}", i % 7) for i in range(60)]
+
+    def build(name, driver_rows):
+        st = Store.create(spark, str(tmp_path / name), schema)
+        st.POSTING_DRIVER_BUILD_ROWS = driver_rows
+        st.index("a", TrigramIndex)
+        st.index("b", TrigramIndex(case_insensitive=True))
+        st.index("n", BloomIndex(m_bits=1 << 10, k=3))
+        st.index(("a", "n"))
+        for lo in (0, 30):
+            st.insert(rows[lo : lo + 30])
+        return st
+
+    fused, dist = build("fused", 20_000), build("dist", 0)
+    for column in ("a", "b", "a,n"):
+        got = [fused.manifest.indices[column], dist.manifest.indices[column]]
+        assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
+        post = [
+            sorted(map(tuple, st._read_postings(spec).collect()))
+            for st, spec in zip((fused, dist), got)
+        ]
+        assert post[0] == post[1] and post[0]
+    bloom = [st.manifest.indices["n"] for st in (fused, dist)]
+    assert bloom[0].ndv == bloom[1].ndv == 7
+    assert fused._bloom_map(bloom[0]) == dist._bloom_map(bloom[1])
+    assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
