@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import scoped_confs
 from .store import Store
 
 _DEC = T.DecimalType(27, 6)
@@ -289,67 +290,65 @@ class MatView:
             else self.base.manifest.live_rows
         )
         small = est is not None and est + 2 * bound <= 100_000
-        aqe_before = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        shp_before = self.spark.conf.get("spark.sql.shuffle.partitions", "200")
-        if small:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            # static compile needs a STATIC partition count to match:
-            # with AQE off every exchange fans to the session's shuffle
-            # partitions (32 × ~8 exchanges ≈ 256 launch floors for a
-            # bounded-tiny delta — measured slower than the 19 AQE jobs
-            # it replaced); the gate already bounds the plan's inputs to
-            # ≤ 100k rows, which one partition handles comfortably
-            self.spark.conf.set("spark.sql.shuffle.partitions", "1")
+        # static compile needs a STATIC partition count to match: with AQE
+        # off every exchange fans to the session's shuffle partitions
+        # (32 × ~8 exchanges ≈ 256 launch floors for a bounded-tiny delta
+        # — measured slower than the 19 AQE jobs it replaced); the gate
+        # already bounds the plan's inputs to ≤ 100k rows, which one
+        # partition handles comfortably
+        confs = (
+            {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "1"}
+            if small
+            else {}
+        )
         try:
-            delta = self.base.changes(self.base_version)
-            if self._self_maintainable:
-                touched = self._combine_self_maintainable(delta)
-                self.last_refresh_scanned_base = False
-            else:
-                touched = self._recompute_touched(delta)
-                self.last_refresh_scanned_base = True
-            # lazy cut (r12, the CC convergence-probe pattern): the
-            # merge's victims probe is the first action over ``rows`` and
-            # materializes the checkpoint in ITS job; an eager checkpoint
-            # here was one whole extra job per refresh
-            rows = self._to_state_rows(touched).localCheckpoint(eager=False)
-            try:
-                # stable_input: rows is the materialized cut, so the
-                # merge's insert skips its own re-checkpoint (r9 — one
-                # fewer materialization job per refresh). The view's new
-                # base_version is STAGED as a manifest prop before the
-                # merge, so it persists inside the merge's one atomic
-                # manifest flip (r12, the stream_epoch pattern): state
-                # and version can never be durable separately.
-                # micro_batch rides the SAME driver-side bound as the
-                # static compile: the state upsert then lands in one
-                # write job with footer-read counts (no counts pass).
-                self.state.manifest.props["mv_base_version"] = str(cur)
-                n_groups, _ = self.state.merge(
-                    rows, on=_GK, stable_input=True, micro_batch=small
-                )
-            except BaseException:
-                # merge rolled back (manifest restored / staged entry
-                # unstaged) — drop the staged prop so a later unrelated
-                # commit cannot carry a version the state never reached
-                if (
-                    self.state.manifest.props.get("mv_base_version")
-                    == str(cur)
-                ):
-                    prev = self.base_version
-                    self.state.manifest.props["mv_base_version"] = str(prev)
-                raise
-            finally:
-                rows.unpersist()
-            self.base_version = cur
-            if self.state.manifest.props.get("mv_base_version") != str(cur):
-                # belt-and-braces: a merge path that did not commit (e.g.
-                # an empty batch) still durably advances via the JSON
-                self._save_meta()
+            with scoped_confs(self.spark, confs):
+                delta = self.base.changes(self.base_version)
+                if self._self_maintainable:
+                    touched = self._combine_self_maintainable(delta)
+                    self.last_refresh_scanned_base = False
+                else:
+                    touched = self._recompute_touched(delta)
+                    self.last_refresh_scanned_base = True
+                # lazy cut (r12, the CC convergence-probe pattern): the
+                # merge's victims probe is the first action over ``rows`` and
+                # materializes the checkpoint in ITS job; an eager checkpoint
+                # here was one whole extra job per refresh
+                rows = self._to_state_rows(touched).localCheckpoint(eager=False)
+                try:
+                    # stable_input: rows is the materialized cut, so the
+                    # merge's insert skips its own re-checkpoint (r9 — one
+                    # fewer materialization job per refresh). The view's new
+                    # base_version is STAGED as a manifest prop before the
+                    # merge, so it persists inside the merge's one atomic
+                    # manifest flip (r12, the stream_epoch pattern): state
+                    # and version can never be durable separately.
+                    # micro_batch rides the SAME driver-side bound as the
+                    # static compile: the state upsert then lands in one
+                    # write job with footer-read counts (no counts pass).
+                    self.state.manifest.props["mv_base_version"] = str(cur)
+                    n_groups, _ = self.state.merge(
+                        rows, on=_GK, stable_input=True, micro_batch=small
+                    )
+                except BaseException:
+                    # merge rolled back (manifest restored / staged entry
+                    # unstaged) — drop the staged prop so a later unrelated
+                    # commit cannot carry a version the state never reached
+                    if (
+                        self.state.manifest.props.get("mv_base_version")
+                        == str(cur)
+                    ):
+                        prev = self.base_version
+                        self.state.manifest.props["mv_base_version"] = str(prev)
+                    raise
+                finally:
+                    rows.unpersist()
+                self.base_version = cur
+                if self.state.manifest.props.get("mv_base_version") != str(cur):
+                    # belt-and-braces: a merge path that did not commit (e.g.
+                    # an empty batch) still durably advances via the JSON
+                    self._save_meta()
         finally:
-            if small:
-                self.spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-                self.spark.conf.set("spark.sql.shuffle.partitions", shp_before)
             for k, v in saved.items():
                 sc.setLocalProperty(k, v)
         self.last_refresh_jobs = len(

@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import scoped_confs
+
 __all__ = ["kmeans_exact", "pca_top_component", "kmeans_silhouette"]
 
 
@@ -122,33 +124,6 @@ def _dist_structs(cur: list[tuple[int, list[int]]]) -> F.Column:
 # (the pre-r12 plans) so pytest can pin the numpy kernels byte-identical
 _FORCE_EXPR = False
 
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _static_rollup_confs(spark, n_map_parts: int):
-    """Static compile for the Lloyd update rollup (the matview/CC-loop
-    pattern): the (cluster, dim) aggregate's key space is k·D BY
-    CONSTRUCTION — independent of corpus size — and partial map-side
-    aggregation bounds the exchange at ``map_partitions × k·D`` combined
-    rows, so a small reduce-partition count derived from the MAP
-    parallelism (never the session constant) is correct at any scale;
-    under AQE each per-iteration collect instead materialized every
-    exchange as its own Spark job — pure scheduling floor ×iters.
-    Restores both confs on exit; results identical (AQE only re-plans
-    execution)."""
-    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(max(1, min(256, n_map_parts // 64)))
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", shp)
 
 # below this many vectors the interpreted distance loop is NOT the wall —
 # job floors are — and the numpy branch's union/worker overhead measured
@@ -356,7 +331,23 @@ def kmeans_exact(
             cents = new_cents
             done_driver = True
     if not done_driver:
-        with _static_rollup_confs(emb.sparkSession, q.rdd.getNumPartitions()):
+        # Static compile for the update rollup: the (cluster, dim)
+        # aggregate's key space is k·D BY CONSTRUCTION — independent of
+        # corpus size — and partial map-side aggregation bounds the
+        # exchange at ``map_partitions × k·D`` combined rows, so a small
+        # reduce-partition count derived from the MAP parallelism (never
+        # the session constant) is correct at any scale; under AQE each
+        # per-iteration collect instead materialized every exchange as
+        # its own Spark job — pure scheduling floor ×iters. Results
+        # identical (AQE only re-plans execution).
+        rollup_parts = max(1, min(256, q.rdd.getNumPartitions() // 64))
+        with scoped_confs(
+            emb.sparkSession,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(rollup_parts),
+            },
+        ):
             for _ in range(iters):
                 # update: one (cluster, dim) shuffle, key space k·D; floor-div
                 # is sign-safe fdiv so Spark and the oracle agree on negatives
@@ -623,7 +614,14 @@ def kmeans_silhouette(
     # recompute the final centroids exactly as kmeans_exact's last update
     # would: they are a pure function of the assignment (sign-safe fdiv);
     # same static rollup compile as the Lloyd loop (k·D key space)
-    with _static_rollup_confs(emb.sparkSession, emb.rdd.getNumPartitions()):
+    rollup_parts = max(1, min(256, emb.rdd.getNumPartitions() // 64))
+    with scoped_confs(
+        emb.sparkSession,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(rollup_parts),
+        },
+    ):
         upd = (
             q.select("cluster", F.posexplode("__qv").alias("__pos", "__q"))
             .groupBy("cluster", "__pos")

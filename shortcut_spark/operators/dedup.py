@@ -376,9 +376,9 @@ def cross_corpus_near_dups(
     arr_ref = shingle_arrays(ref_df, id_col, text_col, n).persist()
     sig_new = minhash_signature_arrays(arr_new, id_col, num_hashes)
     sig_ref = minhash_signature_arrays(arr_ref, id_col, num_hashes)
-    band_new = _banded(sig_new, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("new_id"), "band", "bh"
-    )
+    band_new = _pin_merge_if_exploded(
+        _banded(sig_new, id_col, num_hashes, bands), sig_new, bands
+    ).select(F.col(id_col).alias("new_id"), "band", "bh")
     band_ref = _pin_merge_if_exploded(
         _banded(sig_ref, id_col, num_hashes, bands), sig_ref, bands
     ).select(F.col(id_col).alias("ref_id"), "band", "bh")

@@ -34,9 +34,9 @@ Algorithm: min-label propagation with pointer jumping.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import scoped_confs
 
 __all__ = ["connected_components", "pagerank", "triangle_counts"]
 
@@ -51,9 +51,22 @@ __all__ = ["connected_components", "pagerank", "triangle_counts"]
 #: and union-find is microseconds. Same class of gate as the Store's
 #: driver kernels (POSTING_DRIVER_BUILD_ROWS, DRIVER_INSERT_ROWS): at
 #: real scale the near-dup graph is billions of edges and the
-#: distributed loop runs as before. Set SPARK_GRAFT_CC_DRIVER_EDGES=0
-#: to force the distributed loop everywhere.
-CC_DRIVER_EDGES = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000") or 0)
+#: distributed loop runs as before. Setting the module attribute to 0
+#: forces the distributed loop everywhere.
+CC_DRIVER_EDGES = 200_000
+
+
+def _static_loop_confs(n_e: int) -> dict:
+    """Static compile of an iterative graph loop whose working set the
+    driver-known edge count bounds: AQE off and a shuffle width derived
+    from the edge count (never the session constant). Bulk graphs keep
+    AQE (``{}``)."""
+    if n_e > 2_000_000:
+        return {}
+    return {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(max(1, n_e // 65536 + 1)),
+    }
 
 
 def _cc_driver_types_ok(dt) -> bool:
@@ -159,15 +172,7 @@ def connected_components(
     # node types whose Python ordering equals Spark's.
     if n_e <= CC_DRIVER_EDGES and _cc_driver_types_ok(e.schema["s"].dataType):
         return _cc_driver(e, out_node, out_comp)
-    static_loop = n_e <= 2_000_000
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if static_loop:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, n_e // 65536 + 1))
-        )
-    try:
+    with scoped_confs(spark, _static_loop_confs(n_e)):
         labels = (
             e.select(F.col("s").alias("node"))
             .distinct()
@@ -205,9 +210,6 @@ def connected_components(
             labels = new.select("node", "lbl")
             if it > 0 and changed == 0:
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shp_before)
 
     return labels.select(F.col("node").alias(out_node), F.col("lbl").alias(out_comp))
 
@@ -294,15 +296,7 @@ def pagerank(
         return _pagerank_driver(
             e, iters, d_num, d_den, scale, dangling
         )
-    static_loop = n_e <= 2_000_000
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    shp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if static_loop:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(1, n_e // 65536 + 1))
-        )
-    try:
+    with scoped_confs(spark, _static_loop_confs(n_e)):
         nodes = (
             e.select(F.col("s").alias("node"))
             .union(e.select(F.col("d").alias("node")))
@@ -355,9 +349,6 @@ def pagerank(
                     )
                     .localCheckpoint(eager=True)
                 )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", shp_before)
     return r.select(
         "node",
         F.col("r").alias("rank_i"),

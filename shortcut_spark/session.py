@@ -10,10 +10,12 @@ against a DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "scoped_confs", "stop_spark"]
 
 # Native thread-pool caps for every Python worker (and the driver's own
 # numpy kernels). The gemm/decode strips hand whole Arrow batches to
@@ -90,6 +92,40 @@ def get_spark(app_name: str = "shortcut_spark", cpus: int | None = None) -> Spar
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session confs for the body of a ``with`` block, then put back
+    exactly what was there before.
+
+    The one place library code flips session-global confs (the static
+    compiles turn AQE off and pin ``spark.sql.shuffle.partitions`` for a
+    plan whose size the driver already knows). Contract:
+
+    - exception-safe: the prior values come back on any exit;
+    - nested-safe: an inner scope restores what the outer scope had set;
+    - exact: a key that was unset comes back unset (``conf.unset``), not
+      as an explicit default string;
+    - one conf writer per SparkSession: session confs are global, so
+      threads sharing a session see each other's flips while a scope is
+      open. Callers that run concurrent work on one session must
+      serialize their scopes.
+
+    An empty ``confs`` is a no-op, so a gated caller can pass ``{}``.
+    """
+    conf = spark.conf
+    prior = {k: conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 def stop_spark() -> None:

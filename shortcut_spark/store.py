@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from contextlib import contextmanager
 from typing import Any, Callable, Iterable, Sequence
 
 import pyarrow.lib as pa_err
@@ -57,6 +56,7 @@ from .cmp import Condition, conjunction
 from .idx import BLOOM, BTREE, COMPOSITE, HASH, TRIGRAM, IndexSpec, as_index_kind
 from .manifest import DataFile, Manifest
 from .plans import AccessPath, choose_access_path
+from .session import scoped_confs
 
 ROWID = "__rowid"
 
@@ -353,33 +353,30 @@ class Store:
         # localCheckpoint here paid one extra full materialization job per
         # DataFrame insert for identical determinism (the blocks are cut
         # before with_id's second pass either way)
-        aqe_before = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        if not stable_input:
-            # Under AQE, localCheckpoint's toRdd eagerly MATERIALIZES the
-            # tag plan's shuffle map stage (query-stage re-planning buys
-            # nothing for a fixed-width repartition) and the counts
-            # collect then schedules as a separate reduce job. Planned
-            # statically, the checkpoint stays lazy and the counts job
-            # runs map+reduce as ONE job (measured ~0.4 s/insert on the
-            # 600k-row bench ingest). Restored right after the counts
-            # pass, on failure too — the tail sizes its own confs.
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # Under AQE, localCheckpoint's toRdd eagerly MATERIALIZES the tag
+        # plan's shuffle map stage (query-stage re-planning buys nothing
+        # for a fixed-width repartition) and the counts collect then
+        # schedules as a separate reduce job. Planned statically, the
+        # checkpoint stays lazy and the counts job runs map+reduce as ONE
+        # job (measured ~0.4 s/insert on the 600k-row bench ingest). The
+        # scope ends right after the counts pass — the tail sizes its own
+        # confs.
+        counts_confs = {} if stable_input else {"spark.sql.adaptive.enabled": "false"}
         try:
-            tagged = (
-                tagged.persist()
-                if stable_input
-                else tagged.localCheckpoint(eager=False)
-            )
-            stats = tagged.groupBy("__pid").agg(
-                F.count("*").alias("cnt"),
-                F.min("__mid").alias("lo"),
-                F.max("__mid").alias("hi"),
-            ).collect()
+            with scoped_confs(self.spark, counts_confs):
+                tagged = (
+                    tagged.persist()
+                    if stable_input
+                    else tagged.localCheckpoint(eager=False)
+                )
+                stats = tagged.groupBy("__pid").agg(
+                    F.count("*").alias("cnt"),
+                    F.min("__mid").alias("lo"),
+                    F.max("__mid").alias("hi"),
+                ).collect()
         except BaseException:
             tagged.unpersist()
             raise
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         v_before = self.manifest.version
         try:
             return self._insert_tagged(tagged, schema, watermark, stats)
@@ -516,13 +513,7 @@ class Store:
         n = len(data)
         rows = [(watermark + i,) + tuple(r) for i, r in enumerate(data)]
         names = schema.fieldNames()
-        btree_cols = [s.column for s in self.manifest.indices.values() if s.kind == BTREE]
-        hash_specs = [
-            s.member_columns
-            for s in self.manifest.indices.values()
-            if s.kind in (HASH, COMPOSITE)
-        ]
-        sort_cols = btree_cols[:1] if btree_cols else (hash_specs[0] if hash_specs else [])
+        sort_cols = self._cluster_cols()
         if sort_cols:
             idxs = [names.index(c) + 1 for c in sort_cols]
             try:
@@ -685,15 +676,7 @@ class Store:
             (F.lit(watermark) + F.monotonically_increasing_id()).alias(ROWID),
             *schema.fieldNames(),
         )
-        btree_cols = [
-            s.column for s in self.manifest.indices.values() if s.kind == BTREE
-        ]
-        hash_specs = [
-            s.member_columns
-            for s in self.manifest.indices.values()
-            if s.kind in (HASH, COMPOSITE)
-        ]
-        sort_cols = btree_cols or (hash_specs[0] if hash_specs else [])
+        sort_cols = self._cluster_cols()
         if sort_cols:
             with_id = with_id.sortWithinPartitions(*sort_cols)
         batch_rel = os.path.join(
@@ -720,31 +703,6 @@ class Store:
     # bound keep AQE (skew splits / coalescing earn their jobs there).
     STATIC_INSERT_ROWS = 10_000_000
 
-    @contextmanager
-    def _static_insert_confs(self, n_rows: int):
-        """The matview/CC static-compile pattern for the insert tail: the
-        exact batch row count is driver-known after the counts pass, so
-        the shuffle-partition count derives from it (one per ~250k rows,
-        never the session/core constant). Restores both confs on exit;
-        nested-safe (restores whatever the caller had set)."""
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        shp = self.spark.conf.get("spark.sql.shuffle.partitions", "200")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # one shuffle partition per ~50k rows (the _cluster_batch file
-        # sizing), capped at the core count: the r12 ~250k divisor ran the
-        # 600k-row bench ingest 3-wide through the clustering shuffle at
-        # any core count
-        cores = self.spark.sparkContext.defaultParallelism
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, min(256, cores, -(-n_rows // 50_000)))),
-        )
-        try:
-            yield
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
-            self.spark.conf.set("spark.sql.shuffle.partitions", shp)
-
     def _insert_tagged(
         self,
         tagged: DataFrame,
@@ -755,33 +713,43 @@ class Store:
         if not stats:
             return 0
         counts = {r["__pid"]: r["cnt"] for r in stats}
-        # monotonically_increasing_id puts the partition id in the upper
-        # bits and a 0-based per-partition record counter in the lower 33
-        # — when that layout holds (verified per partition from the SAME
-        # counts pass: min == pid<<33, max == min+cnt-1, i.e. the local
-        # counter is dense from 0), the rowid is pure per-row arithmetic
-        # (watermark + offset[pid] + low bits) and the row_number window —
-        # a full shuffle+sort of the batch — is unnecessary. Rowids are
-        # identical by construction (pytest-pinned against the window
-        # plan); any violation of the layout falls back to the window.
-        contiguous = all(
-            r["lo"] == (r["__pid"] << 33)
-            and r["hi"] == (r["__pid"] << 33) + r["cnt"] - 1
-            for r in stats
-        )
-        if os.environ.get("SPARK_GRAFT_ROWID_WINDOW", "0") == "1":
-            contiguous = False  # test hook: force the window plan
+        contiguous = self._rowid_layout_dense(stats)
         offsets, acc = {}, 0
         for pid in sorted(counts):
             offsets[pid] = acc
             acc += counts[pid]
         n = acc
+        confs = {}
         if n <= self.STATIC_INSERT_ROWS:
-            with self._static_insert_confs(n):
-                return self._insert_tagged_tail(
-                    tagged, schema, watermark, offsets, n, contiguous
-                )
-        return self._insert_tagged_tail(tagged, schema, watermark, offsets, n, contiguous)
+            # the exact batch row count is driver-known after the counts
+            # pass: one shuffle partition per ~50k rows (the _cluster_batch
+            # file sizing), capped at the core count — the r12 ~250k
+            # divisor ran the 600k-row bench ingest 3-wide through the
+            # clustering shuffle at any core count
+            cores = self.spark.sparkContext.defaultParallelism
+            confs = {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": str(max(1, min(256, cores, -(-n // 50_000)))),
+            }
+        with scoped_confs(self.spark, confs):
+            return self._insert_tagged_tail(tagged, schema, watermark, offsets, n, contiguous)
+
+    @staticmethod
+    def _rowid_layout_dense(stats: list) -> bool:
+        """``monotonically_increasing_id`` puts the partition id in the
+        upper bits and a 0-based per-partition record counter in the
+        lower 33 — when that layout holds (verified per partition from
+        the counts pass: min == pid<<33, max == min+cnt-1, i.e. the local
+        counter is dense from 0), the rowid is pure per-row arithmetic
+        (watermark + offset[pid] + low bits) and the row_number window —
+        a full shuffle+sort of the batch — is unnecessary. Rowids are
+        identical by construction (pytest-pinned against the window
+        plan); any violation of the layout falls back to the window."""
+        return all(
+            r["lo"] == (r["__pid"] << 33)
+            and r["hi"] == (r["__pid"] << 33) + r["cnt"] - 1
+            for r in stats
+        )
 
     def _insert_tagged_tail(
         self,
@@ -828,7 +796,7 @@ class Store:
         by_size = -(-n // self.ROWS_PER_FILE)
         by_par = min(cores, -(-n // 50_000))
         n_files = max(1, by_size, by_par)
-        btree_cols = [s.column for s in self.manifest.indices.values() if s.kind == BTREE]
+        cols = self._cluster_cols()
         if n_files == 1:
             # single-file micro-batch: repartitionByRange's range SAMPLER
             # job buys nothing when everything lands in one file — a
@@ -836,46 +804,32 @@ class Store:
             # (per-file min/max stats, sorted row groups, every key in
             # exactly one file) for one job less. This is the streaming
             # micro-batch commit-floor path.
-            hash_specs = [
-                s.member_columns
-                for s in self.manifest.indices.values()
-                if s.kind in (HASH, COMPOSITE)
-            ]
-            sort_cols = btree_cols or (hash_specs[0] if hash_specs else [])
             out = with_id.coalesce(1)
-            return out.sortWithinPartitions(*sort_cols) if sort_cols else out
-        if btree_cols:
-            # honor the range index's clustering at write time: disjoint
-            # key ranges per file + sorted row groups → manifest min/max
-            # AND parquet row-group pruning bite on fresh inserts (the
-            # eager index maintenance of src/lib.rs:181-184, expressed as
-            # layout)
-            with_id = with_id.repartitionByRange(n_files, btree_cols[0]).sortWithinPartitions(
-                btree_cols[0]
-            )
-        else:
-            # cluster the batch by the indexed key: each key lands in
-            # exactly one file, so file-level min/max stats alone prune
-            # a point lookup to ~1 file (zero posting jobs) and the
-            # posting set shrinks to ~ndv rows. This is the write
-            # amplification an index costs — one extra shuffle per
-            # batch, the distributed analogue of the reference's
-            # per-insert index maintenance (src/lib.rs:181-184).
-            # A composite index clusters by its full member tuple (lead
-            # column first), which also tightens every member's min/max.
-            hash_cols = [
-                s.member_columns
-                for s in self.manifest.indices.values()
-                if s.kind in (HASH, COMPOSITE)
-            ]
-            if hash_cols:
-                cols = hash_cols[0]
-                with_id = with_id.repartitionByRange(n_files, *cols).sortWithinPartitions(
-                    *cols
-                )
-            elif n_files < 32:
-                with_id = with_id.coalesce(n_files)
-        return with_id
+            return out.sortWithinPartitions(*cols) if cols else out
+        if cols:
+            return with_id.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+        return with_id.coalesce(n_files) if n_files < 32 else with_id
+
+    def _cluster_cols(self) -> list[str]:
+        """The columns a new batch is clustered by, on every write path.
+
+        A range (btree) index's lead column comes first: disjoint key
+        ranges per file + sorted row groups → manifest min/max AND
+        parquet row-group pruning bite on fresh inserts (the eager index
+        maintenance of src/lib.rs:181-184, expressed as layout). Else the
+        first hash/composite index's member tuple (lead column first):
+        each key lands in exactly one file, so file-level min/max stats
+        alone prune a point lookup to ~1 file and the posting set shrinks
+        to ~ndv rows — the write amplification an index costs, one extra
+        shuffle per batch. Else no clustering (``[]``)."""
+        specs = list(self.manifest.indices.values())
+        for s in specs:
+            if s.kind == BTREE:
+                return [s.column]
+        for s in specs:
+            if s.kind in (HASH, COMPOSITE):
+                return list(s.member_columns)
+        return []
 
     def _register_and_index(self, batch_rel: str) -> list["DataFile"]:
         """Register freshly-written batch files and add them to every
@@ -3430,17 +3384,7 @@ class Store:
                     + tuple(self._driver_cell(dt, r[c]) for dt, c in zip(dts, names))
                     for r in ins
                 ]
-                btree_cols = [
-                    s.column for s in self.manifest.indices.values() if s.kind == BTREE
-                ]
-                hash_specs = [
-                    s.member_columns
-                    for s in self.manifest.indices.values()
-                    if s.kind in (HASH, COMPOSITE)
-                ]
-                sort_cols = (
-                    btree_cols[:1] if btree_cols else (hash_specs[0] if hash_specs else [])
-                )
+                sort_cols = self._cluster_cols()
                 if sort_cols:
                     idxs = [names.index(c) + 1 for c in sort_cols]
                     tuples.sort(

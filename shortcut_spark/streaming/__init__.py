@@ -9,9 +9,9 @@ streaming logic.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..session import scoped_confs
 
 
 def _source_bytes(path: str) -> int:
@@ -56,7 +56,6 @@ def _python_state_floor(spark: SparkSession, *source_paths: str) -> int:
     return max(1, min(cores, -(-total // _PY_STATE_BYTES_PER_PARTITION)))
 
 
-@contextlib.contextmanager
 def _sized_state_shuffle(
     spark: SparkSession, *source_paths: str, min_partitions: int = 1
 ):
@@ -107,13 +106,7 @@ def _sized_state_shuffle(
                 math.ceil(total / _STREAM_BYTES_PER_PARTITION),
             ),
         )
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
+    return scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _drain(

@@ -1562,6 +1562,48 @@ def test_cross_corpus_near_finds_planted_pair_and_stays_cross(spark):
     assert 13 in ids and 11 not in ids
 
 
+def test_cross_corpus_near_guards_exploded_new_side(spark, tmp_path):
+    """The band join's NEW side gets the same exploded-broadcast guard as
+    the ref side: with the broadcast threshold at the ref side's exploded
+    estimate, the ref guard stays quiet and only the new side's guard
+    can keep its band explosion from being broadcast. The pair set does
+    not depend on the join strategy."""
+    from shortcut_spark.functions import _plan_size_bytes
+    from shortcut_spark.session import scoped_confs
+
+    base = "the quick brown fox jumps over the lazy dog again and again today " * 3
+    spark.createDataFrame(
+        [(1, base), (2, "reference corpus filler text totally unrelated " * 4)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "ref"))
+    spark.createDataFrame(
+        [(10 + i, f"{base} tomorrow {i}") for i in range(200)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "new"))
+    ref = spark.read.parquet(str(tmp_path / "ref"))
+    new = spark.read.parquet(str(tmp_path / "new"))
+    bands = 4
+
+    def exploded_bytes(df):
+        arr = dedup.shingle_arrays(df, "doc_id", "text", 3)
+        return _plan_size_bytes(dedup.minhash_signature_arrays(arr, "doc_id", 16)) * bands
+
+    thresh = exploded_bytes(ref)
+    assert 0 < thresh < exploded_bytes(new)
+
+    def pairs():
+        out = dedup.cross_corpus_near_dups(new, ref, "doc_id", "text", bands=bands)
+        got = {(r["new_id"], r["ref_id"]) for r in out.collect()}
+        return got, out._jdf.queryExecution().executedPlan().toString()
+
+    want, _ = pairs()
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": str(thresh)}):
+        got, plan = pairs()
+    assert "SortMergeJoin [band" in plan
+    assert "BroadcastHashJoin [band" not in plan
+    assert got == want and (10, 1) in want
+
+
 # -- per-source cap --------------------------------------------------------
 
 

@@ -2137,12 +2137,10 @@ def test_merge_micro_batch_equivalent_to_default(spark, tmp_path):
     assert rows_of(b.find([eq(0, "a")])) == [("a", "A_NEW")]  # postings see the batch
 
 
-def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path):
+def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path, monkeypatch):
     """The exchange-free rowid arithmetic (mid's low bits + per-partition
     offsets) assigns EXACTLY the rowids the row_number window plan does —
     full (rowid, row) sets byte-identical on a multi-partition batch."""
-    import os
-
     import pyspark.sql.functions as F
 
     src_path = str(tmp_path / "bulk.parquet")
@@ -2154,12 +2152,10 @@ def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path):
 
     a = make(spark, str(tmp_path / "arith"), AXB, index_col=0)
     assert a.insert(src) == 5000
-    os.environ["SPARK_GRAFT_ROWID_WINDOW"] = "1"  # force the window plan
-    try:
-        b = make(spark, str(tmp_path / "win"), AXB, index_col=0)
-        assert b.insert(src) == 5000
-    finally:
-        del os.environ["SPARK_GRAFT_ROWID_WINDOW"]
+    # a failed layout guard forces the window plan
+    monkeypatch.setattr(Store, "_rowid_layout_dense", staticmethod(lambda stats: False))
+    b = make(spark, str(tmp_path / "win"), AXB, index_col=0)
+    assert b.insert(src) == 5000
     rows_a = sorted(map(tuple, a.find([], with_rowid=True).collect()))
     rows_b = sorted(map(tuple, b.find([], with_rowid=True).collect()))
     assert rows_a == rows_b  # same rowid -> same row, bit for bit
