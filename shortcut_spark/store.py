@@ -41,6 +41,8 @@ keeps the same information.
 
 from __future__ import annotations
 
+import bisect
+import functools
 import json
 import os
 import uuid
@@ -88,6 +90,31 @@ def _bloom_positions_expr(column: str, m_bits: int, k: int) -> Column:
     )
 
 
+def _restores_on_failure(method):
+    """Make a Store mutation all-or-nothing on its handle. A failure
+    anywhere before the commit leaves the IN-MEMORY manifest polluted:
+    data files registered or retired, rowid/next_file_id advanced,
+    posting parts appended, tombstones staged — and a LATER successful
+    commit on the same handle would durably persist the half-done write
+    (an insert's rows, a delete's survivors without its changelog, a
+    compaction's empty file list). The durable truth is the on-disk
+    manifest, so the wrapper restores it wholesale; orphan parquet the
+    failed attempt wrote is inert and vacuumable. A failure AFTER the
+    commit (version moved) keeps the committed state."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        v_before = self.manifest.version
+        try:
+            return method(self, *args, **kwargs)
+        except BaseException:
+            if self.manifest.version == v_before:
+                self._restore_manifest_from_disk(version=v_before)
+            raise
+
+    return run
+
+
 def _default_schema(cols: int) -> T.StructType:
     """``Store::new(cols)`` has positional, homogeneously-typed columns
     (``src/lib.rs:4-5,80-87``); default them to strings named c0..cN-1."""
@@ -121,6 +148,8 @@ class Store:
         # driver-side pruning loop (the SCALE.md graduation: numpy columns
         # instead of a Python loop over files)
         self._stats_np: dict[tuple, tuple] = {}
+        # (tombstone dirs, their sorted rowids) of the last _tomb_ids read
+        self._tomb_cache: tuple[tuple, list[int]] = ((), [])
 
     POSTING_MAP_MAX = 2_000_000
 
@@ -229,8 +258,14 @@ class Store:
     def _read_files(
         self, files: Sequence[DataFile], with_meta: bool = False, live: bool = True
     ) -> DataFrame:
-        """Rows of ``files``; ``live=False`` skips the tombstone anti-join
-        (index builds: a posting for a dead row is only a superset)."""
+        """Rows of ``files``; ``live=False`` skips the tombstone filter
+        (index builds: a posting for a dead row is only a superset).
+
+        A bounded tombstone set (:meth:`_tomb_ids`) costs no job: it is
+        filtered out as a literal — for a pruned read, only the ids inside
+        some read file's rowid range, and no filter when none is. Only a
+        set above ``TOMB_INLINE_ROWS`` rows pays the anti-join (a
+        broadcast exchange, one job per read)."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
         if with_meta:
@@ -241,16 +276,87 @@ class Store:
                 F.concat(F.lit("/"), F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "")),
             )
         if live and self.manifest.tombstones:
-            # merge-on-read: anti-join the tombstoned rowids. ALL data reads
+            # merge-on-read: drop the tombstoned rowids. ALL data reads
             # flow through here, so every query surface (find / multiget /
             # delete-victim scans / compact) sees only live rows.
-            df = df.join(self._tombstone_df(), ROWID, "left_anti")
+            ids = self._tomb_ids()
+            if ids is None:
+                df = df.join(self._tombstone_df(), ROWID, "left_anti")
+            else:
+                # a read of every live file needs every id (each one lies
+                # in a live file), so only a pruned read intersects ranges
+                if len(files) < len(self.manifest.files):
+                    ids = self._ids_in_files(ids, files)
+                if ids:
+                    df = df.filter(~self._rowid_in(ids))
         return df
 
     def _tombstone_df(self) -> DataFrame:
+        """The tombstone set as a relation — the fallback for sets above
+        ``TOMB_INLINE_ROWS``, where :meth:`_tomb_ids` declines."""
         return self.spark.read.schema(f"{ROWID} long").parquet(
             *[self._abs(t) for t in self.manifest.tombstones]
         )
+
+    def _tomb_ids(self, limit: int | None = None) -> list[int] | None:
+        """Sorted tombstoned rowids, or None when the set holds more than
+        ``limit`` rows (default ``TOMB_INLINE_ROWS``). Read on the driver
+        with pyarrow (zero Spark jobs: one footer and one column read per
+        tombstone file). Committed tombstone dirs never change, so the
+        list is cached per tuple of dirs."""
+        m = self.manifest
+        if m.tombstone_rows > (self.TOMB_INLINE_ROWS if limit is None else limit):
+            return None
+        key = tuple(m.tombstones)
+        if self._tomb_cache[0] != key:
+            ids: set[int] = set()
+            for rel in key:
+                d = self._abs(rel)
+                for fn in os.listdir(d):
+                    if fn.endswith(".parquet"):
+                        tbl = pq.read_table(os.path.join(d, fn), columns=[ROWID])
+                        ids.update(tbl.column(ROWID).to_pylist())
+            self._tomb_cache = (key, sorted(ids))
+        return self._tomb_cache[1]
+
+    @staticmethod
+    def _ids_in_files(ids: list[int], files: Sequence[DataFile]) -> list[int]:
+        """The sorted ``ids`` that fall inside some file's [min_rowid,
+        max_rowid] — a file without rowid stats (the -1 sentinel) may hold
+        any id. Ranges can overlap (``compact(sort_by=...)``); an id is
+        covered when more ranges start at or below it than end below it.
+        Vectorized: two sorted bound arrays and two binary searches, no
+        per-file Python work beyond reading the bounds (the same walk
+        that lists the read's paths)."""
+        import numpy as np
+
+        if not ids or not files:
+            return []
+        lo = np.fromiter((f.min_rowid for f in files), np.int64, len(files))
+        if lo.min() < 0:
+            return ids
+        hi = np.fromiter((f.max_rowid for f in files), np.int64, len(files))
+        a = np.asarray(ids, dtype=np.int64)
+        started = np.searchsorted(np.sort(lo), a, side="right")
+        ended = np.searchsorted(np.sort(hi), a, side="left")
+        return a[started > ended].tolist()
+
+    @staticmethod
+    def _rowid_in(ids: Sequence[int]) -> Column:
+        """``__rowid IN (<ids>)`` as one SQL literal list. ``Column.isin``
+        makes one py4j call per value — measured 6 s for 10,000 ids against
+        12 ms for parsing the same list as SQL (4-vCPU host)."""
+        return F.expr(f"`{ROWID}` IN ({','.join(map(str, ids))})")
+
+    def _set_tombstones(self, keep: Sequence[int], tag: str) -> None:
+        """Replace the tombstone set with ``keep`` — one driver-written
+        part, or no part when ``keep`` is empty. ``tag`` prefixes the dir
+        name (the op that consolidated the set)."""
+        rel = os.path.join("tomb", f"{tag}{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+        if keep:
+            self._write_rowid_part(rel, list(keep))
+        self.manifest.tombstones = [rel] if keep else []
+        self.manifest.tombstone_rows = len(keep)
 
     # -- insert (src/lib.rs:178-187) ----------------------------------------
 
@@ -334,13 +440,7 @@ class Store:
         self._enforce_constraints(df)
         watermark = self.manifest.rowid
         if micro_batch:
-            v_before = self.manifest.version
-            try:
-                return self._insert_tagged_micro(df, schema, watermark)
-            except BaseException:
-                if self.manifest.version == v_before:
-                    self._restore_manifest_from_disk(version=v_before)
-                raise
+            return self._insert_tagged_micro(df, schema, watermark)
         from .functions import ensure_parallelism
 
         tagged = (
@@ -377,24 +477,8 @@ class Store:
         except BaseException:
             tagged.unpersist()
             raise
-        v_before = self.manifest.version
         try:
             return self._insert_tagged(tagged, schema, watermark, stats)
-        except BaseException:
-            # a failure anywhere before the commit leaves the IN-MEMORY
-            # manifest polluted: the batch's data files are registered,
-            # rowid/next_file_id advanced, posting parts appended — a
-            # LATER successful commit would durably persist the failed
-            # batch's rows (and, under merge, its victims' tombstones
-            # would be gone while the half-inserted rows stayed: a
-            # permanent duplicate). The durable truth is the on-disk
-            # manifest — restore it wholesale; the orphan parquet the
-            # failed attempt wrote is inert and vacuumable. A failure
-            # AFTER the commit (version moved) restores to the same
-            # committed state: also correct.
-            if self.manifest.version == v_before:
-                self._restore_manifest_from_disk(version=v_before)
-            raise
         finally:
             tagged.unpersist()
 
@@ -441,6 +525,7 @@ class Store:
         self._bloom_maps.clear()
         self._bloom_fetched.clear()
         self._stats_np.clear()
+        self._tomb_cache = ((), [])
 
     # literal (Python-list) batches at or below this many rows insert
     # entirely on the driver: constraint checks in plain Python, rowids by
@@ -487,6 +572,7 @@ class Store:
                 return v.replace(tzinfo=_dt.timezone.utc)
         return v
 
+    @_restores_on_failure
     def _insert_rows_driver(
         self, data: list[tuple], schema: T.StructType
     ) -> int | None:
@@ -545,21 +631,13 @@ class Store:
         batch_rel = os.path.join(
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
-        v_before = self.manifest.version
-        try:
-            out_dir = self._abs(batch_rel)
-            os.makedirs(out_dir, exist_ok=True)
-            pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-            self._register_and_index(batch_rel)
-            self.manifest.rowid = watermark + n
-            self._commit()
-            return n
-        except BaseException:
-            # same rollback contract as insert(): the durable truth is the
-            # on-disk manifest; orphan parquet is inert and vacuumable
-            if self.manifest.version == v_before:
-                self._restore_manifest_from_disk(version=v_before)
-            raise
+        out_dir = self._abs(batch_rel)
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+        self._register_and_index(batch_rel)
+        self.manifest.rowid = watermark + n
+        self._commit()
+        return n
 
     def _enforce_constraints_rows(self, data: list[tuple]) -> None:
         """Pure-Python twin of :meth:`_enforce_constraints` for literal
@@ -622,8 +700,6 @@ class Store:
 
         if not keys:
             return False
-        if self.manifest.tombstone_rows > self.CDF_DRIVER_READ_ROWS:
-            return None
         if not all(self._probe_type_ok(column, k) for k in keys):
             return None
         if any(isinstance(k, float) and math.isnan(k) for k in keys):
@@ -642,16 +718,10 @@ class Store:
                 ]
         if sum(f.rows for f in files) > self.POSTING_DRIVER_BUILD_ROWS:
             return None
-        tomb: set[int] = set()
-        for rel in self.manifest.tombstones:
-            d = self._abs(rel)
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    tomb.update(
-                        pq.read_table(os.path.join(d, fn), columns=[ROWID])
-                        .column(ROWID)
-                        .to_pylist()
-                    )
+        tomb_ids = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
+        if tomb_ids is None:
+            return None
+        tomb = set(tomb_ids)
         keyset = set(keys)
         for f in files:
             tbl = pq.read_table(self._abs(f.path), columns=[ROWID, column])
@@ -662,6 +732,7 @@ class Store:
                     return v
         return False
 
+    @_restores_on_failure
     def _insert_tagged_micro(
         self, df: DataFrame, schema: T.StructType, watermark: int
     ) -> int:
@@ -703,6 +774,7 @@ class Store:
     # bound keep AQE (skew splits / coalescing earn their jobs there).
     STATIC_INSERT_ROWS = 10_000_000
 
+    @_restores_on_failure
     def _insert_tagged(
         self,
         tagged: DataFrame,
@@ -1515,6 +1587,14 @@ class Store:
     # driver-build bound's sibling, sized so the driver holds at most a
     # couple hundred thousand (rowid, path) values
     CDF_DRIVER_READ_ROWS = 200_000
+
+    # tombstone sets at or below this many rows are read on the driver
+    # (:meth:`_tomb_ids`) and leave reads as a rowid literal filter — zero
+    # jobs — instead of a broadcast anti-join. Set from the measured
+    # crossover (docs/SCALE.md): a full scan filtered by the literal ties
+    # the anti-join at ~1,500 ids and loses above, since the plan's
+    # analysis and optimization grow with the IN-list
+    TOMB_INLINE_ROWS = 1_000
 
     @staticmethod
     def _stats_ok(v) -> bool:
@@ -2428,6 +2508,7 @@ class Store:
         tombstone path (see :meth:`delete_filter`)."""
         return self.delete_filter(conds, None, defer=defer)
 
+    @_restores_on_failure
     def delete_filter(
         self,
         conds: Sequence[Condition],
@@ -2441,12 +2522,16 @@ class Store:
         * ``defer=False`` (default) — copy-on-write: rewrite the affected
           files without the victims. Cost ∝ bytes of the affected files.
         * ``defer=True`` — merge-on-read: write only the victim rowids as
-          a tombstone file; every read anti-joins them, and ``compact()``
+          a tombstone file; every read drops them, and ``compact()``
           materializes and clears. Cost ∝ victims — at 100 TB, deleting a
           few rows spread over many files must NOT rewrite terabytes.
           Index postings keep referencing tombstoned rowids until compact;
           the superset-then-recheck read contract (src/lib.rs:89-91) plus
-          the tombstone anti-join keeps every result exact.
+          the tombstone filter keeps every result exact. A tombstone set
+          of at most ``TOMB_INLINE_ROWS`` rows is read on the driver once
+          per set (a pyarrow footer and column read per tombstone file,
+          cached) and filters each read as a rowid literal, with no job;
+          a bigger set is anti-joined, one broadcast job per read.
 
         Index ndv (the cost model's ``rows/ndv``, ``src/idx.rs:71-78``) is
         exact after inserts and after ``compact``, and an upper bound
@@ -2524,7 +2609,7 @@ class Store:
                     os.path.join(self._abs(victims_rel), "part-0.parquet"),
                 )
             else:
-                self.spark.read.parquet(self._abs(cdf_rel)).select(
+                self.spark.read.schema(vic.schema).parquet(self._abs(cdf_rel)).select(
                     ROWID
                 ).write.parquet(self._abs(victims_rel))
             self.manifest.tombstones.append(victims_rel)
@@ -2564,7 +2649,8 @@ class Store:
         else:
             per_file = {
                 r["__cdf_file"]: r["cnt"]
-                for r in self.spark.read.parquet(self._abs(cdf_rel))
+                for r in self.spark.read.schema(vic.schema)
+                .parquet(self._abs(cdf_rel))
                 .groupBy("__cdf_file")
                 .agg(F.count("*").alias("cnt"))
                 .collect()
@@ -2577,32 +2663,49 @@ class Store:
         survivors.write.parquet(self._abs(batch_rel))
 
         # retiring files invalidates tombstone entries inside their rowid
-        # ranges (the survivors were written from the anti-joined read, so
-        # those rowids no longer exist anywhere) — consolidate the tombstone
-        # set to keep the manifest invariant: every tombstoned rowid lies in
-        # a live file, and tombstone_rows is an exact live-row correction.
+        # ranges (the survivors were written from the tombstone-filtered
+        # read, so those rowids no longer exist anywhere) — consolidate the
+        # tombstone set to keep the manifest invariant: every tombstoned
+        # rowid lies in a live file, and tombstone_rows is an exact
+        # live-row correction.
+        kept = [f for f in self.manifest.files if f.id not in affected]
         if self.manifest.tombstones:
-            tomb = self._tombstone_df()
-            # Consolidate by MEMBERSHIP, not rowid range: file rowid ranges
-            # can overlap (compact(sort_by=<non-rowid col>) range-partitions
-            # by the sort column, interleaving rowids across files), and
-            # footer stats can be absent (the [-1,-1] sentinel). A raw —
-            # deliberately tombstone-unfiltered — read of the retired files'
-            # rowid column is the exact set of rowids that just ceased to
-            # exist; only tombstones outside it survive.
+            # A rowid range alone does not decide membership: file rowid
+            # ranges can overlap (compact(sort_by=<non-rowid col>)
+            # range-partitions by the sort column, interleaving rowids
+            # across files), and footer stats can be absent (the [-1,-1]
+            # sentinel). A raw — deliberately tombstone-unfiltered — read of
+            # the retired files' rowid column is the exact set of rowids
+            # that just ceased to exist; only tombstones outside it survive.
             raw_affected = self.spark.read.schema(f"{ROWID} long").parquet(
                 *[self._abs(f.path) for f in affected_files]
             )
-            remaining = tomb.join(raw_affected, ROWID, "left_anti")
-            keep_rel = os.path.join(
-                "tomb", f"t{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-            )
-            remaining.write.parquet(self._abs(keep_rel))
-            n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
-            self.manifest.tombstones = [keep_rel] if n_keep else []
-            self.manifest.tombstone_rows = n_keep
+            ids = self._tomb_ids()
+            if ids is None:
+                remaining = self._tombstone_df().join(raw_affected, ROWID, "left_anti")
+                keep_rel = os.path.join(
+                    "tomb", f"t{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                )
+                remaining.write.parquet(self._abs(keep_rel))
+                n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
+                self.manifest.tombstones = [keep_rel] if n_keep else []
+                self.manifest.tombstone_rows = n_keep
+            else:
+                # bounded set, decided on the driver: ids outside every
+                # retired file's range stay. An id inside one that no kept
+                # file's range covers is gone — it lies in SOME live file
+                # (the manifest invariant), so in a retired one. Only ids
+                # in overlapping ranges need the membership collect.
+                cand = self._ids_in_files(ids, affected_files)
+                shared = self._ids_in_files(cand, kept)
+                gone = set(cand).difference(shared)
+                if shared:
+                    hit = raw_affected.filter(self._rowid_in(shared)).collect()
+                    gone.update(r[0] for r in hit)
+                if gone:
+                    self._set_tombstones([i for i in ids if i not in gone], "t")
 
-        self.manifest.files = [f for f in self.manifest.files if f.id not in affected]
+        self.manifest.files = kept
         new_files = self._register_files(batch_rel)
         # un-index: dead file ids drop out of the live set (posting rows that
         # reference them are filtered at read; src/lib.rs:164-168 analogue),
@@ -2900,14 +3003,17 @@ class Store:
         ).json()
         self._commit()
 
-    def _cdf_window_rels(self, old_version: int) -> list[str] | None:
-        """Changelog dirs for every commit in ``(old_version, current]``
-        — the CDC delete tier's read set — or None when any commit in
-        the window is not changelogged (restore / merge victims /
-        apply_changes deletes / pre-CDF history) or a needed manifest or
-        changelog dir is no longer retained. Driver-side JSON loads,
-        bounded by vacuum retention; zero Spark jobs."""
-        rels: list[str] = []
+    def _cdf_window_rels(
+        self, old_version: int
+    ) -> list[tuple[str, T.StructType]] | None:
+        """(changelog dir, schema of the commit that wrote it) for every
+        commit in ``(old_version, current]`` — the CDC delete tier's read
+        set — or None when any commit in the window is not changelogged
+        (restore / merge victims / apply_changes deletes / pre-CDF
+        history) or a needed manifest or changelog dir is no longer
+        retained. Driver-side JSON loads, bounded by vacuum retention;
+        zero Spark jobs."""
+        rels: list[tuple[str, T.StructType]] = []
         for v in range(old_version + 1, self.manifest.version + 1):
             try:
                 m = Manifest.load(self.path, v)
@@ -2915,25 +3021,34 @@ class Store:
                 return None
             if m.cdf_deletes is None:
                 return None
-            rels.extend(m.cdf_deletes)
-        for rel in rels:
+            rels.extend((rel, m.schema) for rel in m.cdf_deletes)
+        for rel, _ in rels:
             if not os.path.isdir(self._abs(rel)):
                 return None  # vacuumed past retention — diff if possible
         return rels
 
     def _read_cdf_rels(
-        self, rels: Sequence[str], cols: Sequence[str], old: Manifest
+        self,
+        rels: Sequence[tuple[str, T.StructType]],
+        cols: Sequence[str],
+        old: Manifest,
     ) -> DataFrame:
         """Union of changelog dirs projected to ``cols``. Each dir was
-        written in the schema of ITS commit: a column added between the
-        old snapshot and the delete is projected away by ``cols``, a
-        column missing from an older changelog null-pads, and the CoW
-        per-file attribution column (``__cdf_file``) drops."""
+        written in the schema of ITS commit and is read with that schema
+        plus ``__rowid`` (a schema-less read infers it from the footers in
+        one Spark job per dir; a Spark-side conversion of the footer
+        schema would type INT96 timestamps wrongly). A column added
+        between the old snapshot and the delete is projected away by
+        ``cols``, a column missing from an older changelog null-pads, and
+        the CoW per-file attribution column (``__cdf_file``) is not in the
+        read schema, so it is never read."""
         old_types = {f.name: f.dataType for f in old.schema.fields}
         old_types[ROWID] = T.LongType()
         out = None
-        for rel in rels:
-            df = self.spark.read.parquet(self._abs(rel))
+        for rel, schema in rels:
+            df = self.spark.read.schema(
+                T.StructType([T.StructField(ROWID, T.LongType()), *schema.fields])
+            ).parquet(self._abs(rel))
             have = set(df.columns)
             part = df.select(
                 *[
@@ -3045,13 +3160,25 @@ class Store:
                     and f.max_rowid >= tmin
                     and f.min_rowid <= tmax
                 ]
-                if shared_hit:
+                shared_cand = None
+                ids = self._tomb_ids()
+                if ids is not None:
+                    # the WHOLE current set may stand in for the new dirs:
+                    # old-live rows already exclude the old tombstones,
+                    # and those are a subset of the current ones
+                    hit = self._ids_in_files(ids, shared_hit)
+                    if hit:
+                        shared_cand = old_store._read_files(shared_hit).filter(
+                            self._rowid_in(hit)
+                        )
+                elif shared_hit:
                     tomb_ids = self.spark.read.schema(f"{ROWID} long").parquet(
                         *[self._abs(t) for t in new_tombs]
                     )
                     shared_cand = old_store._read_files(shared_hit).join(
                         tomb_ids, ROWID, "left_semi"
                     )
+                if shared_cand is not None:
                     cand = (
                         shared_cand
                         if cand is None
@@ -3239,7 +3366,21 @@ class Store:
             # fall through to the physical-insert path below. Skipped
             # entirely (one semi-join probe) when nothing is resurrected.
             n_res = 0
-            if n_ins and self.manifest.tombstones:
+            ids = self._tomb_ids() if n_ins and self.manifest.tombstones else None
+            if ids is not None:
+                # bounded set: only tombstones inside the delta's insert
+                # rowid range can come back — one collect finds which
+                lo, hi = int(st["lo"]), int(st["hi"])
+                cand = ids[bisect.bisect_left(ids, lo) : bisect.bisect_right(ids, hi)]
+                res: set[int] = set()
+                if cand:
+                    hit = ins.select(ROWID).filter(self._rowid_in(cand)).collect()
+                    res = {r[0] for r in hit}
+                n_res = len(res)
+                if n_res:
+                    ins = ins.filter(~self._rowid_in(sorted(res)))
+                    self._set_tombstones([i for i in ids if i not in res], "p")
+            elif n_ins and self.manifest.tombstones:
                 tomb = self._tombstone_df()
                 ins_ids = ins.select(ROWID)
                 n_res = tomb.join(ins_ids, ROWID, "left_semi").count()
@@ -3308,9 +3449,10 @@ class Store:
         schema = self.manifest.schema
         if not all(self._driver_atomic_type(f.dataType) for f in schema.fields):
             return None
-        if self.manifest.tombstone_rows > self.CDF_DRIVER_READ_ROWS:
-            return None
         if sum(f.rows for f in self.manifest.files) > self.POSTING_DRIVER_BUILD_ROWS:
+            return None
+        tomb_ids = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
+        if tomb_ids is None:
             return None
         cap = self.DRIVER_INSERT_ROWS
         rows = delta.limit(cap + 1).collect()
@@ -3330,16 +3472,7 @@ class Store:
                     .column(ROWID)
                     .to_pylist()
                 )
-            tomb: set[int] = set()
-            for rel in self.manifest.tombstones:
-                d = self._abs(rel)
-                for fn in os.listdir(d):
-                    if fn.endswith(".parquet"):
-                        tomb.update(
-                            pq.read_table(os.path.join(d, fn), columns=[ROWID])
-                            .column(ROWID)
-                            .to_pylist()
-                        )
+            tomb = set(tomb_ids)
             live = all_ids - tomb
             ins_ids = {int(r[ROWID]) for r in ins}
             if ins_ids and self.manifest.files:
@@ -3355,13 +3488,7 @@ class Store:
             res_ids = ins_ids & tomb
             n_res = len(res_ids)
             if n_res:
-                keep = sorted(tomb - res_ids)
-                keep_rel = os.path.join(
-                    "tomb", f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                )
-                self._write_rowid_part(keep_rel, keep)
-                self.manifest.tombstones = [keep_rel] if keep else []
-                self.manifest.tombstone_rows = len(keep)
+                self._set_tombstones(sorted(tomb - res_ids), "p")
                 ins = [r for r in ins if int(r[ROWID]) not in res_ids]
             n_del = 0
             if self.manifest.files:
@@ -3532,6 +3659,7 @@ class Store:
             return True
         return False
 
+    @_restores_on_failure
     def compact(
         self,
         target_files: int | None = None,

@@ -1806,6 +1806,62 @@ def test_insert_failure_mid_tail_restores_manifest(spark, store_path):
     assert {r[st.colnames[1]] for r in st.find([eq(0, "b")]).collect()} == {"B2"}
 
 
+def _fail_cow_delete(st, monkeypatch, boom):
+    monkeypatch.setattr(st, "_index_files", boom)  # after the survivors' write
+    st.delete([eq(0, "k5")])
+
+
+def _fail_deferred_delete(st, monkeypatch, boom):
+    monkeypatch.setattr(st, "_commit", boom)  # tombstone staged in memory
+    st.delete([eq(0, "k5")], defer=True)
+
+
+def _fail_compact(st, monkeypatch, boom):
+    monkeypatch.setattr(st, "_index_files", boom)  # file list already swapped
+    st.compact(target_files=1)
+
+
+@pytest.mark.parametrize(
+    "fail",
+    [_fail_cow_delete, _fail_deferred_delete, _fail_compact],
+    ids=["cow_delete", "deferred_delete", "compact"],
+)
+def test_delete_and_compact_failure_restores_manifest(spark, store_path, monkeypatch, fail):
+    """A delete or compaction that fails before its commit leaves the
+    handle as it was: the on-disk manifest is untouched, the handle's
+    row count is the on-disk one, and a later insert on the same handle
+    does not carry the failed write into its commit."""
+    from shortcut_spark.manifest import Manifest
+
+    st = Store.create(spark, store_path, 2)
+    st.index(0, "hash")
+    for lo in (0, 5):
+        st.insert([(f"k{i}", str(i)) for i in range(lo, lo + 5)])
+    st.delete([eq(0, "k1")], defer=True)  # a live tombstone set
+    on_disk = Manifest.load(store_path).to_json()
+    files = {f.path for f in st.manifest.files}
+
+    class Boom(RuntimeError):
+        pass
+
+    def boom(*args, **kwargs):
+        raise Boom("injected")
+
+    with monkeypatch.context() as m, pytest.raises(Boom):
+        fail(st, m, boom)
+    assert Manifest.load(store_path).to_json() == on_disk
+    assert len(st) == len(Store.open(spark, store_path)) == 9
+    st.insert([("k10", "10")])
+    reopened = Store.open(spark, store_path)
+    assert len(reopened) == 10
+    assert files < {f.path for f in reopened.manifest.files}
+    assert reopened.manifest.tombstone_rows == 1
+    assert rows_of(reopened.find([eq(0, "k5")])) == [("k5", "5")]
+    assert {r[0] for r in reopened.find([]).collect()} == {
+        f"k{i}" for i in range(11) if i != 1
+    }
+
+
 def test_insert_failure_on_pinned_handle_keeps_snapshot(spark, store_path):
     """A failed write on a handle opened at an OLDER snapshot must
     restore that snapshot, not fast-forward to CURRENT: _restore_manifest
@@ -2247,7 +2303,9 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     insert maintains both indexes in ONE job (the fused driver build), a
     point find that probes the Spark posting path runs the probe and the
     scan, and a 1-row copy-on-write delete runs the probe, the changelog
-    write, the survivors' write and one fused index job."""
+    write, the survivors' write and one fused index job. A deferred
+    delete leaves both floors where they were: the tombstone set is read
+    on the driver and filters reads as a literal, with no broadcast job."""
     st = _two_index_store(spark, str(tmp_path / "s"))
     n, jobs = _jobs(spark, lambda: st.insert([(10_000 + i, 1.5 * i, "m") for i in range(100)]))
     assert n == 100 and jobs == 1
@@ -2258,6 +2316,15 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     assert n == 1 and jobs <= 4
     assert st.find([eq("k", 8)]).count() == 0
     assert rows_of(st.find([eq("k", 9)])) == [(9, 4.5, "s2")]
+    # after a deferred delete (k=13 lives in the file of batch 1)
+    assert st.delete([eq("k", 13)], defer=True) == 1
+    rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
+    assert [r["k"] for r in rows] == [7] and jobs == 2
+    assert st.find([eq("k", 13)]).count() == 0
+    n, jobs = _jobs(spark, lambda: st.delete([eq("k", 14)]))
+    assert n == 1 and jobs <= 4
+    assert st.manifest.tombstone_rows == 1 and len(st) == 397
+    assert st.find([eq("k", 13)]).count() == 0
 
 
 def _scratch_sketch(spark, st, column):
