@@ -288,7 +288,7 @@ class Store:
                 if len(files) < len(self.manifest.files):
                     ids = self._ids_in_files(ids, files)
                 if ids:
-                    df = df.filter(~self._rowid_in(ids))
+                    df = df.filter(~self._in_literal(ROWID, ids))
         return df
 
     def _tombstone_df(self) -> DataFrame:
@@ -341,12 +341,29 @@ class Store:
         ended = np.searchsorted(np.sort(hi), a, side="left")
         return a[started > ended].tolist()
 
-    @staticmethod
-    def _rowid_in(ids: Sequence[int]) -> Column:
-        """``__rowid IN (<ids>)`` as one SQL literal list. ``Column.isin``
-        makes one py4j call per value — measured 6 s for 10,000 ids against
-        12 ms for parsing the same list as SQL (4-vCPU host)."""
-        return F.expr(f"`{ROWID}` IN ({','.join(map(str, ids))})")
+    def _in_literal(self, column: str, values: Sequence) -> Column:
+        """``column IN (<values>)`` as one SQL literal list: ints unquoted,
+        strings quoted and escaped. ``Column.isin`` makes one py4j call
+        per value — measured 6 s for 10,000 ids against 12 ms for parsing
+        the same list as SQL (4-vCPU host). Any other value type takes
+        ``isin``, and so do strings the parser would rewrite: a ``$``
+        (the parser substitutes ``${...}`` from the conf and the
+        environment before it lexes) and, under the legacy parser that
+        keeps backslashes (``spark.sql.parser.escapedStringLiterals``), a
+        quote or backslash. ``values`` must not be empty."""
+        values = list(values)
+        if all(isinstance(v, int) and not isinstance(v, bool) for v in values):
+            body = ",".join(map(str, values))
+        elif all(isinstance(v, str) and "$" not in v for v in values) and (
+            not any("'" in v or "\\" in v for v in values)
+            or self.spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") != "true"
+        ):
+            body = ",".join(
+                "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+            )
+        else:
+            return F.col(column).isin(values)
+        return F.expr(f"`{column.replace('`', '``')}` IN ({body})")
 
     def _set_tombstones(self, keep: Sequence[int], tag: str) -> None:
         """Replace the tombstone set with ``keep`` — one driver-written
@@ -714,7 +731,7 @@ class Store:
                     f
                     for f in files
                     if not f.stats.get(column)
-                    or any(self._key_in_range(f.stats[column], k) for k in keys)
+                    or any(self._may_hold(*f.stats[column][:2], k) for k in keys)
                 ]
         if sum(f.rows for f in files) > self.POSTING_DRIVER_BUILD_ROWS:
             return None
@@ -1137,9 +1154,10 @@ class Store:
 
     def _commit(self) -> None:
         """Commit the manifest and evict caches keyed to older versions —
-        stale posting DataFrames are unpersisted, stale driver maps
-        dropped (long-lived ingestion commits one version per micro-batch
-        and would otherwise pin them forever)."""
+        stale posting DataFrames are unpersisted, stale driver maps and
+        the file lists of parts no index names any more dropped
+        (long-lived ingestion commits one version per micro-batch and
+        would otherwise pin them forever)."""
         self.manifest.commit(self.path)
         v = self.manifest.version
         for key in [k for k in self._posting_cache if k[1] != v]:
@@ -1229,7 +1247,10 @@ class Store:
                     st = col.statistics
                     lo = hi = None
                     if st is not None and st.has_min_max:
-                        lo, hi = st.min, st.max
+                        try:
+                            lo, hi = st.min, st.max
+                        except NotImplementedError:  # e.g. an INT64-backed decimal
+                            lo = hi = None
                         if isinstance(lo, bytes):
                             try:
                                 lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
@@ -1691,7 +1712,7 @@ class Store:
         )
         # a literal id list, not a broadcast semi-join of a Python-list
         # DataFrame (each such broadcast is a Spark job of its own)
-        df = df.filter(F.col("__file_id").isin(sorted(live))) if live else df.limit(0)
+        df = df.filter(self._in_literal("__file_id", sorted(live))) if live else df.limit(0)
         df = df.cache()  # postings are tiny relative to data; lookups are hot
         self._posting_cache[cache_key] = df
         return df
@@ -1702,41 +1723,103 @@ class Store:
         write (zero Spark jobs; the index-layer analogue of the manifest's
         DataFile.stats pruning). Parts without stats, and incomparable
         probe types, stay in — conservative superset contract."""
-        keep = []
-        for p in spec.parts:
-            st = spec.part_stats.get(p)
-            if st is None:
-                keep.append(p)
-                continue
-            try:
-                if st[0] <= point <= st[1]:
-                    keep.append(p)
-            except TypeError:
-                keep.append(p)
-        return keep
+        return [
+            p
+            for p in spec.parts
+            if p not in spec.part_stats or self._may_hold(*spec.part_stats[p][:2], point)
+        ]
+
+    def _posting_files(self, parts: Sequence[str]) -> list[str]:
+        """The parquet files of posting ``parts``, listed on every call:
+        the listing is 5–7% of a driver probe at 20–1,200 parts
+        (docs/SCALE.md)."""
+        out: list[str] = []
+        for p in parts:
+            d = self._abs(p)
+            out.extend(sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")))
+        return out
+
+    def _arrow_postings(self, spec: IndexSpec, files: Sequence[str], pred, columns=None):
+        """Posting rows of ``files`` that pass the pyarrow expression
+        ``pred``, read on the driver (zero Spark jobs) in the posting
+        schema. The filter is pushed into the scan, so a row group whose
+        footer stats exclude it is never read."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self._posting_schema(spec))
+        return ds.dataset(list(files), schema=schema, format="parquet").to_table(
+            columns=columns, filter=pred
+        )
+
+    def _probe_values(self, column: str, values: Sequence):
+        """``values`` as a pyarrow array of ``column``'s type when a
+        driver-side equality on every one agrees with Spark's coerced
+        ``column = v``, else None. Beyond :meth:`_probe_type_ok`, it
+        declines NaN (Spark's ``NaN = NaN`` is true), a value with no
+        exact image in the type (``1.5`` on a long, an int past 2**53 on a
+        double, ``0.1`` on a float, any float on a decimal) and a float at
+        or past 2**53 on an integral column, where Spark compares as
+        doubles and several longs share one."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        if not all(self._probe_type_ok(column, v) and v == v for v in values):
+            return None
+        t = to_arrow_type(self.manifest.schema[column].dataType)
+        if any(
+            isinstance(v, float)
+            and (pa.types.is_decimal(t) or (pa.types.is_integer(t) and abs(v) >= 2**53))
+            for v in values
+        ):
+            return None
+        try:
+            arr = pa.array(values, type=t)
+        except (pa.ArrowException, OverflowError, TypeError):
+            return None
+        return arr if arr.to_pylist() == list(values) else None
+
+    def _posting_hits(self, spec: IndexSpec, probes: Sequence) -> set[int] | None:
+        """File ids whose postings hold the key ``probes`` (one value per
+        member column), found on the driver with zero Spark jobs: from the
+        cached posting map when the index has at most ``POSTING_MAP_MAX``
+        postings, else by a pyarrow read of the files of the parts
+        :meth:`_parts_for_probe` keeps, with the key equality pushed into
+        the scan so footer stats skip shards. Ids of retired files may be
+        in the result; every caller intersects with its live candidates.
+        None when :meth:`_probe_values` declines a probe (or the index has
+        no parts): the caller's Spark probe filters with Spark's coercion."""
+        import pyarrow.compute as pc
+
+        columns = spec.columns or [spec.column]
+        arrays = [self._probe_values(c, [v]) for c, v in zip(columns, probes)]
+        if not spec.parts or any(a is None for a in arrays):
+            return None
+        if spec.rows <= self.POSTING_MAP_MAX:
+            pmap = self._posting_map(spec)
+            return set(pmap.get(tuple(probes) if spec.columns else probes[0], ()))
+        files = self._posting_files(self._parts_for_probe(spec, probes[0]))
+        if not files:
+            return set()
+        pred = None
+        for name, a in zip(self._posting_schema(spec).names, arrays):
+            eq = pc.field(name) == a[0]
+            pred = eq if pred is None else pred & eq
+        tbl = self._arrow_postings(spec, files, pred, ["__file_id"])
+        return set(tbl.column("__file_id").to_pylist())
 
     def _probe_postings(self, spec: IndexSpec, point) -> DataFrame | None:
-        """Point-probe scan over the posting parts: part-level pruning via
-        ``_parts_for_probe`` first, then a FRESH (uncached) parquet read so
-        the caller's key predicate pushes down to the parquet scan — parts
-        are range-sharded at write, so the pushed filter skips every shard
-        whose footer range excludes the key. Probe IO is therefore ~one
-        shard of one part however large the posting total; the whole-set
-        cached read (``_read_postings``) stays for small/hot indexes.
-        Postings of retired files stay in the pruned read: every caller
-        intersects the hit ids with its live candidates on the driver."""
+        """The Spark fallback of :meth:`_posting_hits`, for the probes it
+        declines: the files of the parts ``_parts_for_probe`` keeps (the
+        same list the driver read takes) as an uncached DataFrame, so the
+        caller's key predicate — filtered with Spark's own coercion —
+        pushes down to the parquet scan. One Spark job when collected."""
         if not spec.parts:
             return None
-        parts = self._parts_for_probe(spec, point)
-        if not parts:
-            return self._read_postings(spec).limit(0)
-        if len(parts) == len(spec.parts):
-            # no pruning possible (legacy stats or odd probe type): the
-            # cached whole-set read amortizes better across probes
-            return self._read_postings(spec)
-        return self.spark.read.schema(self._posting_schema(spec)).parquet(
-            *[self._abs(p) for p in parts]
-        )
+        files = self._posting_files(self._parts_for_probe(spec, point))
+        if not files:
+            return self.spark.createDataFrame([], self._posting_schema(spec))
+        return self.spark.read.schema(self._posting_schema(spec)).parquet(*files)
 
     # -- find (src/lib.rs:130-137) ------------------------------------------
 
@@ -1750,11 +1833,7 @@ class Store:
         lo, hi = st[0], st[1]
         cmp = cond.cmp
         if cmp.is_const_eq:
-            v = cmp.value.payload
-            try:
-                return lo <= v <= hi
-            except TypeError:
-                return True
+            return Store._may_hold(lo, hi, cmp.value.payload)
         if cmp.op == "between":
             from .cmp import Bound
 
@@ -1772,6 +1851,24 @@ class Store:
             except TypeError:
                 return True
         return True
+
+    @staticmethod
+    def _may_hold(lo, hi, v) -> bool:
+        """Can values in [``lo``, ``hi``] hold one that Spark finds equal
+        to ``v``? False only on proof. Compared the way Spark coerces: an
+        int probe against float bounds as a double, a float probe against
+        int bounds with the bounds as doubles (Spark casts the column).
+        NaN proves nothing — a NaN probe or bound compares false both ways
+        and stays in (Spark's ``NaN = NaN`` is true; a NaN max means
+        "NaN present"). Incomparable types stay in."""
+        try:
+            if isinstance(v, float) and isinstance(lo, int) and isinstance(hi, int):
+                lo, hi = float(lo), float(hi)
+            elif isinstance(v, int) and isinstance(lo, float):
+                v = float(v)
+            return not (lo > v or v > hi)
+        except (TypeError, OverflowError):
+            return True
 
     _STATS_SAFE_ABS = float(2**52)  # beyond this, float64 can't hold ints exactly
 
@@ -1934,11 +2031,13 @@ class Store:
 
         1. manifest column stats — zero Spark jobs, applied for every
            const/range cond on any column with footer min/max;
-        2. posting-index lookup — one small Spark job, only when the cost
-           model says it can actually narrow things: enough candidate files
-           left, and keys selective enough that most files miss
-           (ndv ≫ file count; the reference's estimate() idea applied at
-           file granularity).
+        2. posting-index lookup, only when the cost model says it can
+           actually narrow things: enough candidate files left, and keys
+           selective enough that most files miss (ndv ≫ file count; the
+           reference's estimate() idea applied at file granularity). A
+           const-eq probe runs on the driver with zero Spark jobs
+           (:meth:`_posting_hits`); a probe it declines, and a custom
+           index's other comparisons, take one small Spark job.
         """
         path = choose_access_path(conds, self.manifest.indices, self.colnames)
         eligible = [
@@ -2041,7 +2140,7 @@ class Store:
                     if post is not None:
                         hit_ids = {
                             r["__file_id"]
-                            for r in post.filter(F.col("key").isin(grams))
+                            for r in post.filter(self._in_literal("key", grams))
                             .groupBy("__file_id")
                             .agg(F.count_distinct("key").alias("__ng"))
                             .filter(F.col("__ng") == len(grams))
@@ -2053,24 +2152,14 @@ class Store:
         if path.index is not None and files and path.conds:
             # composite lookup: the conjunction const-eq-covers every member
             # column (guaranteed by choose_access_path). Probe the tuple
-            # postings — driver map when small enough and every member
-            # probe's Python equality agrees with SQL coercion, else one
+            # postings on the driver; a member probe it declines takes one
             # small Spark job filtering all key columns.
             worth_it = len(files) > 4 and path.index.ndv > 2 * len(self.manifest.files)
             if worth_it:
                 probes = [c.cmp.value.payload for c in path.conds]
-                hit_ids = None
-                if path.index.rows <= self.POSTING_MAP_MAX and all(
-                    self._probe_type_ok(col, pv)
-                    for col, pv in zip(path.index.columns, probes)
-                ):
-                    pmap = self._posting_map(path.index)
-                    if pmap is not None:
-                        hit_ids = pmap.get(tuple(probes), set())
+                hit_ids = self._posting_hits(path.index, probes)
                 if hit_ids is None:
-                    post = self._probe_postings(
-                        path.index, path.conds[0].cmp.value.payload
-                    )
+                    post = self._probe_postings(path.index, probes[0])
                     if post is not None:
                         pred = None
                         for i, cond in enumerate(path.conds):
@@ -2093,20 +2182,13 @@ class Store:
                 # already did that work with zero jobs
                 worth_it = False
             if worth_it:
-                hit_ids = None
-                if (
-                    path.cond.cmp.is_const_eq
-                    and path.index.rows <= self.POSTING_MAP_MAX
-                    and self._probe_type_ok(path.index.column, path.cond.cmp.value.payload)
-                ):
-                    pmap = self._posting_map(path.index)
-                    if pmap is not None:
-                        hit_ids = pmap.get(path.cond.cmp.value.payload, set())
+                const = path.cond.cmp.is_const_eq
+                v = path.cond.cmp.value.payload if const else None
+                hit_ids = self._posting_hits(path.index, [v]) if const else None
                 if hit_ids is None:
-                    if path.cond.cmp.is_const_eq:
-                        post = self._probe_postings(
-                            path.index, path.cond.cmp.value.payload
-                        )
+                    # a declined probe, or a custom index's other ops
+                    if const:
+                        post = self._probe_postings(path.index, v)
                     else:
                         post = self._read_postings(path.index)
                     if post is not None:
@@ -2184,7 +2266,7 @@ class Store:
             df = (
                 self.spark.read.schema("__file_id int, bloom binary")
                 .parquet(*[self._abs(p) for p in spec.parts])
-                .filter(F.col("__file_id").isin(need))
+                .filter(self._in_literal("__file_id", need))
             )
             for r in df.collect():
                 bmap[r["__file_id"]] = bytes(r["bloom"])
@@ -2217,20 +2299,26 @@ class Store:
         return all(bits[p >> 3] & (1 << (p & 7)) for p in positions)
 
     def _posting_map(self, spec: IndexSpec) -> dict | None:
+        """{key: {file id}} of an index's live postings (a tuple key for a
+        composite), read on the driver with pyarrow — zero Spark jobs —
+        and cached per manifest version."""
         key = (spec.column, self.manifest.version)
         pmap = self._posting_maps.get(key)
         if pmap is None:
-            post = self._read_postings(spec)
-            if post is None:
+            if not spec.parts:
                 return None
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            live = pa.array([f.id for f in self.manifest.files], pa.int32())
+            tbl = self._arrow_postings(
+                spec, self._posting_files(spec.parts), pc.is_in(pc.field("__file_id"), live)
+            )
+            cols = [tbl.column(n).to_pylist() for n in tbl.column_names[:-1]]
+            keys = zip(*cols) if spec.columns else cols[0]
             pmap = {}
-            if spec.columns:
-                kcols = [f"k{i}" for i in range(len(spec.columns))]
-                for r in post.collect():
-                    pmap.setdefault(tuple(r[c] for c in kcols), set()).add(r["__file_id"])
-            else:
-                for r in post.collect():
-                    pmap.setdefault(r["key"], set()).add(r["__file_id"])
+            for k, fid in zip(keys, tbl.column("__file_id").to_pylist()):
+                pmap.setdefault(k, set()).add(fid)
             self._posting_maps[key] = pmap
         return pmap
 
@@ -2292,7 +2380,7 @@ class Store:
         amortizes it. File pruning unions the posting hits of every key
         (same superset-then-residual contract as ``find``,
         ``src/lib.rs:89-91``); the residual filter is a semi-join for big
-        key sets and an ``isin`` for small ones.
+        key sets and an ``IN`` literal (:meth:`_in_literal`) for small ones.
         """
         name = self.colnames[column] if isinstance(column, int) else column
         if name not in self.colnames:
@@ -2304,9 +2392,9 @@ class Store:
         spec = self.manifest.indices.get(name)
         # Pruning pays off only when the key set is selective: with many
         # uniform keys virtually every file matches, so building a posting
-        # map (a Spark job + driver dict) would cost more than the scan it
-        # saves. Engage it for small key sets, or when the map is already
-        # cached from earlier point lookups.
+        # map (a driver read of every posting + a dict) would cost more
+        # than the scan it saves. Engage it for small key sets, or when the
+        # map is already cached from earlier point lookups.
         map_cached = (
             spec is not None and (spec.column, self.manifest.version) in self._posting_maps
         )
@@ -2315,7 +2403,7 @@ class Store:
             and spec.kind == HASH
             and spec.rows <= self.POSTING_MAP_MAX
             and (map_cached or len(keys) <= 64)
-            and all(self._probe_type_ok(name, k) for k in keys)
+            and self._probe_values(name, keys) is not None
         ):
             pmap = self._posting_map(spec)
             if pmap is not None:
@@ -2351,13 +2439,13 @@ class Store:
                     f
                     for f in files
                     if not f.stats.get(name)
-                    or any(self._key_in_range(f.stats[name], k) for k in keys)
+                    or any(self._may_hold(*f.stats[name][:2], k) for k in keys)
                 ]
         if not files:
             return self._empty()
         df = self._read_files(files).drop(ROWID)
         if len(keys) <= 1000:
-            return df.filter(F.col(name).isin(keys))
+            return df.filter(self._in_literal(name, keys))
         import pandas as pd
 
         # Arrow path: a pandas frame serializes the key batch an order of
@@ -2367,13 +2455,6 @@ class Store:
             T.StructType([T.StructField(name, self.manifest.schema[name].dataType, True)]),
         ).distinct()
         return df.join(F.broadcast(kdf), name, "left_semi")
-
-    @staticmethod
-    def _key_in_range(st: Sequence, key: Any) -> bool:
-        try:
-            return st[0] <= key <= st[1]
-        except TypeError:
-            return True
 
     def df(self) -> DataFrame:
         """Escape hatch: the whole table as a plain DataFrame (no rowid)."""
@@ -2700,7 +2781,7 @@ class Store:
                 shared = self._ids_in_files(cand, kept)
                 gone = set(cand).difference(shared)
                 if shared:
-                    hit = raw_affected.filter(self._rowid_in(shared)).collect()
+                    hit = raw_affected.filter(self._in_literal(ROWID, shared)).collect()
                     gone.update(r[0] for r in hit)
                 if gone:
                     self._set_tombstones([i for i in ids if i not in gone], "t")
@@ -3169,7 +3250,7 @@ class Store:
                     hit = self._ids_in_files(ids, shared_hit)
                     if hit:
                         shared_cand = old_store._read_files(shared_hit).filter(
-                            self._rowid_in(hit)
+                            self._in_literal(ROWID, hit)
                         )
                 elif shared_hit:
                     tomb_ids = self.spark.read.schema(f"{ROWID} long").parquet(
@@ -3374,11 +3455,11 @@ class Store:
                 cand = ids[bisect.bisect_left(ids, lo) : bisect.bisect_right(ids, hi)]
                 res: set[int] = set()
                 if cand:
-                    hit = ins.select(ROWID).filter(self._rowid_in(cand)).collect()
+                    hit = ins.select(ROWID).filter(self._in_literal(ROWID, cand)).collect()
                     res = {r[0] for r in hit}
                 n_res = len(res)
                 if n_res:
-                    ins = ins.filter(~self._rowid_in(sorted(res)))
+                    ins = ins.filter(~self._in_literal(ROWID, sorted(res)))
                     self._set_tombstones([i for i in ids if i not in res], "p")
             elif n_ins and self.manifest.tombstones:
                 tomb = self._tombstone_df()

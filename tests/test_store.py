@@ -2278,7 +2278,8 @@ def _two_index_store(spark, path, batches=6, per_batch=50):
     """A hash index on ``k`` and a btree on ``v``, ``batches`` literal
     inserts of one file each. Every file spans the whole key range, so
     only the posting index narrows a point find, and the posting-map cap
-    of 0 sends every probe down the Spark posting path."""
+    of 0 sends every probe to the driver's read of the posting files, not
+    the posting map."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2300,29 +2301,35 @@ def _two_index_store(spark, path, batches=6, per_batch=50):
 
 def test_job_count_pins_two_index_store(spark, tmp_path):
     """The job floor of the indexed write and read paths: a literal
-    insert maintains both indexes in ONE job (the fused driver build), a
-    point find that probes the Spark posting path runs the probe and the
-    scan, and a 1-row copy-on-write delete runs the probe, the changelog
-    write, the survivors' write and one fused index job. A deferred
-    delete leaves both floors where they were: the tombstone set is read
-    on the driver and filters reads as a literal, with no broadcast job."""
+    insert maintains both indexes in ONE job (the fused driver build); a
+    posting probe runs on the driver with no job, so a point find is the
+    scan alone, a miss the postings rule out and ``explain_find`` take no
+    job, a 1-row copy-on-write delete runs the changelog write, the
+    survivors' write and one fused index job, and a deferred delete the
+    changelog write. A deferred delete leaves both floors where they
+    were: the tombstone set is read on the driver and filters reads as a
+    literal, with no broadcast job."""
     st = _two_index_store(spark, str(tmp_path / "s"))
     n, jobs = _jobs(spark, lambda: st.insert([(10_000 + i, 1.5 * i, "m") for i in range(100)]))
     assert n == 100 and jobs == 1
-    assert "IndexLookup" in st.explain_find([eq("k", 7)])
+    explain, jobs = _jobs(spark, lambda: st.explain_find([eq("k", 7)]))
+    assert "IndexLookup" in explain and jobs == 0
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
-    assert [r["k"] for r in rows] == [7] and jobs == 2
+    assert [r["k"] for r in rows] == [7] and jobs == 1
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 8)]))
-    assert n == 1 and jobs <= 4
-    assert st.find([eq("k", 8)]).count() == 0
+    assert n == 1 and jobs <= 3
+    # k=8 lies inside every file's key range: only the postings rule it out
+    rows, jobs = _jobs(spark, lambda: st.find([eq("k", 8)]).collect())
+    assert rows == [] and jobs == 0
     assert rows_of(st.find([eq("k", 9)])) == [(9, 4.5, "s2")]
     # after a deferred delete (k=13 lives in the file of batch 1)
-    assert st.delete([eq("k", 13)], defer=True) == 1
+    n, jobs = _jobs(spark, lambda: st.delete([eq("k", 13)], defer=True))
+    assert n == 1 and jobs == 1
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
-    assert [r["k"] for r in rows] == [7] and jobs == 2
+    assert [r["k"] for r in rows] == [7] and jobs == 1
     assert st.find([eq("k", 13)]).count() == 0
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 14)]))
-    assert n == 1 and jobs <= 4
+    assert n == 1 and jobs <= 3
     assert st.manifest.tombstone_rows == 1 and len(st) == 397
     assert st.find([eq("k", 13)]).count() == 0
 
@@ -2397,11 +2404,10 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
         assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
 
 
-def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
-    """The one-job driver build of a small batch writes the same index
-    content as the per-index distributed build: posting sets (key, file
-    id) of hash, composite and two trigram indexes, bloom bitsets per
-    file, and ndv — so every kind rides the fused job unchanged."""
+def _all_kinds_store(spark, path, driver_rows):
+    """Hash, trigram, case-insensitive trigram, bloom and composite indexes
+    over two 30-row literal inserts; ``driver_rows`` is the posting
+    driver-build bound (0: every index takes the distributed build)."""
     from pyspark.sql import types as T
 
     from shortcut_spark import BloomIndex, TrigramIndex
@@ -2411,27 +2417,37 @@ def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
             T.StructField("a", T.StringType()),
             T.StructField("b", T.StringType()),
             T.StructField("n", T.LongType()),
+            T.StructField("h", T.LongType()),
         ]
     )
-    rows = [(f"alpha{i % 13}", None if i % 5 == 0 else f"be{i}", i % 7) for i in range(60)]
+    rows = [
+        (f"alpha{i % 13}", None if i % 5 == 0 else f"be{i}", i % 7, None if i % 9 == 0 else i % 17)
+        for i in range(60)
+    ]
+    st = Store.create(spark, path, schema)
+    st.POSTING_DRIVER_BUILD_ROWS = driver_rows
+    st.index("a", TrigramIndex)
+    st.index("b", TrigramIndex(case_insensitive=True))
+    st.index("n", BloomIndex(m_bits=1 << 10, k=3))
+    st.index(("a", "n"))
+    st.index("h", HashIndex)
+    for lo in (0, 30):
+        st.insert(rows[lo : lo + 30])
+    return st
 
-    def build(name, driver_rows):
-        st = Store.create(spark, str(tmp_path / name), schema)
-        st.POSTING_DRIVER_BUILD_ROWS = driver_rows
-        st.index("a", TrigramIndex)
-        st.index("b", TrigramIndex(case_insensitive=True))
-        st.index("n", BloomIndex(m_bits=1 << 10, k=3))
-        st.index(("a", "n"))
-        for lo in (0, 30):
-            st.insert(rows[lo : lo + 30])
-        return st
 
-    fused, dist = build("fused", 20_000), build("dist", 0)
-    for column in ("a", "b", "a,n"):
+def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
+    """The one-job driver build of a small batch writes the same index
+    content as the per-index distributed build: posting sets (key, file
+    id) of hash, composite and two trigram indexes, bloom bitsets per
+    file, and ndv — so every kind rides the fused job unchanged."""
+    fused = _all_kinds_store(spark, str(tmp_path / "fused"), 20_000)
+    dist = _all_kinds_store(spark, str(tmp_path / "dist"), 0)
+    for column in ("a", "b", "a,n", "h"):
         got = [fused.manifest.indices[column], dist.manifest.indices[column]]
         assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
         post = [
-            sorted(map(tuple, st._read_postings(spec).collect()))
+            sorted(map(tuple, st._read_postings(spec).collect()), key=repr)
             for st, spec in zip((fused, dist), got)
         ]
         assert post[0] == post[1] and post[0]
@@ -2439,3 +2455,24 @@ def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
     assert bloom[0].ndv == bloom[1].ndv == 7
     assert fused._bloom_map(bloom[0]) == dist._bloom_map(bloom[1])
     assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
+
+
+def test_posting_map_driver_read_matches_spark(spark, tmp_path):
+    """The posting map is read on the driver with pyarrow — no Spark job —
+    and equals the map built from Spark's read of the live postings, for
+    hash, composite and trigram indexes, over driver-built and distributed
+    parts and after a copy-on-write delete retires a file."""
+    for name, driver_rows in (("fused", 20_000), ("dist", 0)):
+        st = _all_kinds_store(spark, str(tmp_path / name), driver_rows)
+        for step in ("insert", "delete"):
+            if step == "delete":
+                assert st.delete([eq("h", 3)]) > 0
+            for column in ("h", "a,n", "a", "b"):
+                spec = st.manifest.indices[column]
+                pmap, jobs = _jobs(spark, lambda: st._posting_map(spec))
+                assert jobs == 0, (name, step, column)
+                want: dict = {}
+                for r in st._read_postings(spec).collect():
+                    key = tuple(r[:-1]) if spec.columns else r["key"]
+                    want.setdefault(key, set()).add(r["__file_id"])
+                assert pmap == want and pmap, (name, step, column)

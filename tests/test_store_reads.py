@@ -1,6 +1,8 @@
 """Reads of Store-owned files: the bounded tombstone set filters reads as a
-rowid literal and gives the same answers as the anti-join it replaces, and
-every read of a Store-owned parquet dir carries its schema."""
+rowid literal and gives the same answers as the anti-join it replaces,
+every read of a Store-owned parquet dir carries its schema, IN lists are
+SQL literals, and the driver-side posting probe answers every edge probe
+like Spark's own filter."""
 
 import ast
 import os
@@ -249,3 +251,305 @@ def test_store_owned_reads_carry_their_schema():
     assert not stray, f"pass .schema(...) to reads of Store-owned files: {stray}"
     # every allowlisted read still exists (a stale entry would hide a new one)
     assert {(r[0], r[1]) for r in reads} == set(_SCHEMALESS_READ_ALLOWLIST)
+
+
+
+# -- lint: IN lists in store.py are SQL literals ----------------------------
+
+
+def test_store_isin_only_in_the_literal_helper():
+    """``Column.isin`` makes one py4j call per value; store.py builds every
+    IN list with ``Store._in_literal``, whose type fallback is the one
+    ``.isin(`` left."""
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    helper = next(
+        fn for fn in ast.walk(tree) if isinstance(fn, ast.FunctionDef) and fn.name == "_in_literal"
+    )
+    lines = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "isin"
+    ]
+    stray = [n for n in lines if not helper.lineno <= n <= helper.end_lineno]
+    assert not stray, f"build IN lists with Store._in_literal: store.py lines {stray}"
+    assert len(lines) == 1
+
+
+def test_in_literal_matches_isin(spark, tmp_path):
+    """The SQL literal list selects what ``isin`` selects: strings with
+    quotes, backslashes, control characters and unicode; ints past 2**31;
+    a column name with a space and one with a backtick; and the ``isin``
+    fallbacks — floats, mixed types, strings holding ``$`` (which the
+    parser would substitute as ``${...}``), and quoted strings under the
+    legacy literal parser."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from shortcut_spark.session import scoped_confs
+
+    st = Store.create(spark, str(tmp_path / "s"), 2)
+    words = ["a'b", "c\\d", "ünï→✓", "x\\'y", "tab\there", "nl\nx", "\\", "''", "plain"]
+    dollars = ["${x}", "${env:HOME}", "${y", "x${", "y}z", "$"]
+    others = ["other", "a b", "c\\\\d", "", os.environ.get("HOME", "/"), "y,z", "x"]
+    df = spark.createDataFrame(
+        [(w, i, float(i), w) for i, w in enumerate(words + dollars + others)],
+        T.StructType(
+            [
+                T.StructField("s t", T.StringType()),
+                T.StructField("n", T.LongType()),
+                T.StructField("x", T.DoubleType()),
+                T.StructField("b`q", T.StringType()),
+            ]
+        ),
+    )
+    cases = [
+        ("s t", words),
+        ("s t", ["${x}"]),
+        ("s t", ["${env:HOME}"]),
+        ("s t", ["${y", "x${", "y}z"]),
+        ("s t", words + dollars),
+        ("n", [0, 3, 2**40, -7]),
+        ("x", [1.0, 2.5]),
+        ("x", [1, 2.0]),
+    ]
+    for column, values in cases:
+        want = rows_of(df.filter(F.col(column).isin(values)))
+        assert rows_of(df.filter(st._in_literal(column, values))) == want, (column, values)
+    assert "IN" in str(st._in_literal("s t", words))
+    # a backticked name: isin cannot even name it, so check by value
+    for values in (words, ["plain", "x"]):
+        got = rows_of(df.filter(st._in_literal("b`q", values)))
+        assert [r[3] for r in got] == sorted(values), values
+    assert "IN" in str(st._in_literal("b`q", ["plain"]))
+    with scoped_confs(spark, {"spark.sql.parser.escapedStringLiterals": "true"}):
+        got = rows_of(df.filter(st._in_literal("s t", words)))
+        assert got == rows_of(df.filter(F.col("s t").isin(words)))
+        assert len(got) == len(words)
+
+
+def test_find_many_keeps_dollar_keys(spark, tmp_path):
+    """Keys holding ``$`` reach the residual filter and the trigram
+    fallback's gram list unchanged: ``${x}`` is not substituted away and
+    ``'${y','x${','y}z'`` is not read across its literals."""
+    from shortcut_spark import HashIndex, TrigramIndex
+    from shortcut_spark.cmp import contains
+
+    keys = ["${x}", "${env:HOME}", "${y", "x${", "y}z"]
+    decoys = ["", os.environ.get("HOME", "/"), "y,z", "plain"]
+    st = Store.create(spark, str(tmp_path / "s"), 2)
+    for b, batch in enumerate((keys[:3] + decoys[:2], keys[3:] + decoys[2:])):
+        st.insert([(k, f"v{b}") for k in batch])
+    want = sorted((k, v) for k, v in rows_of(st.df().drop(ROWID)) if k in keys)
+    assert len(want) == len(keys)
+    assert rows_of(st.find_many(0, keys)) == want  # stats path
+    for k in keys:
+        assert rows_of(st.find_many(0, [k])) == [r for r in want if r[0] == k], k
+    st.index(0, HashIndex)
+    assert rows_of(st.find_many(0, keys)) == want  # posting-map path
+    tri = Store.create(spark, str(tmp_path / "t"), 2)
+    tri.index(0, TrigramIndex())
+    for b in range(3):
+        tri.insert([(f"row {i} batch {b}", str(i)) for i in range(20)])
+    tri.insert([("pay ${env:HOME} now", "hit"), ("pay HOME now", "decoy")])
+    tri.POSTING_MAP_MAX = 0  # the Spark gram filter, not the posting map
+    got = rows_of(tri.find([contains(0, "${env:HOME}")]))
+    assert got == [("pay ${env:HOME} now", "hit")]
+    assert tri.explain_find([contains(0, "${env:HOME}")]).endswith(
+        f"files=1/{len(tri.manifest.files)}"
+    )
+
+
+# -- the driver-side posting probe answers like Spark's filter ---------------
+
+_BIG = 2**53
+
+
+def _edge_store(spark, path):
+    """Hash indexes on a long, a double, a string and a decimal column and a
+    composite on (g, h), over two range-sharded distributed batches and five
+    driver-built ones. Two unrelated permutations of the row number feed
+    k and the other columns, and every batch carries the same low and high
+    guard rows, so every file spans every column's range: only the
+    postings narrow a point find. Values sit on the probes' edges: ±0.0, NaN and 2**53 on
+    the double, 2**53 and 2**53 + 1 on the long, quotes, backslashes and
+    unicode on the string."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("m", T.DecimalType(10, 2)),
+            T.StructField("g", T.StringType()),
+            T.StructField("h", T.LongType()),
+        ]
+    )
+    st = Store.create(spark, path, schema)
+    for c in ("k", "d", "s", "m"):
+        st.index(c, "hash")
+    st.index(("g", "h"))
+    st.POSTING_SHARD_ROWS = 50  # a 122-row batch writes a range-sharded part
+    special = {  # in both sharded batches and three driver-built ones
+        5: (_BIG, -0.0, "it's"),
+        18: (_BIG + 1, 0.0, "back\\slash"),
+        245: (-3, float("nan"), "ünï→✓"),
+        261: (-4, float("nan"), "q'\\'"),
+        302: (-5, float(_BIG), "s53"),
+    }
+    rows = []
+    for i in range(380):
+        k, p = (i * 151) % 380, (i * 233) % 380
+        k, d, s = special.get(i, (k, p / 2, f"s{p}"))
+        rows.append((k, d, s, Decimal(p % 97) / 4, f"g{p % 11}", p % 13))
+
+    def guards(b):
+        return [
+            (-100 - b, -1e9 - b, f" {b}", Decimal(0), "g0", 0),
+            (2**60 + b, 1e300 + b, f"\uffff{b}", Decimal(0), "g0", 0),
+        ]
+
+    for b in range(2):
+        st.insert(rows[b:240:2] + guards(b))
+    for b in range(5):
+        st.insert(rows[240 + b :: 5] + guards(2 + b))  # 30 rows: the driver build
+    return st
+
+
+def _edge_probes():
+    """(column, probe, declined) — ``declined`` when the driver reader must
+    hand the probe to the Spark fallback."""
+    from decimal import Decimal
+
+    nan = float("nan")
+    return [
+        ("k", 7, False),
+        ("k", 2.0, False),
+        ("k", 1.5, True),
+        ("k", _BIG + 1, False),
+        ("k", float(_BIG), True),  # Spark compares as doubles: 2**53 and 2**53 + 1
+        ("k", 999_999, False),
+        ("d", 3, False),  # an int on a double key
+        ("d", 0.0, False),
+        ("d", -0.0, False),
+        ("d", nan, True),
+        ("d", float(_BIG), False),
+        ("d", _BIG + 1, True),  # no exact double; Spark rounds it to 2**53
+        ("d", 12345.5, False),
+        ("s", "s7", False),
+        ("s", "it's", False),
+        ("s", "back\\slash", False),
+        ("s", "ünï→✓", False),
+        ("s", "q'\\'", False),
+        ("s", "absent", False),
+        ("m", 5, False),
+        ("m", 1.5, True),  # a float on a decimal key
+        ("m", Decimal("1.25"), True),  # not a probe type the driver takes
+        ("m", 98, False),
+        (("g", "h"), ("g3", 4), False),
+        (("g", "h"), ("g3", 4.0), False),
+        (("g", "h"), ("g3", 4.5), True),
+        (("g", "h"), ("g0", 12), False),
+        (("g", "h"), ("g99", 1), False),
+    ]
+
+
+def _check_edge_probes(st, tag):
+    """Every edge probe: ``find`` returns the rows Spark's own filter over
+    the raw table returns; the driver reader declines exactly the declined
+    probes, which then take the Spark fallback; an accepted probe's hit
+    set equals the Spark probe's over the same part-pruned files. Returns
+    the probes that reached the posting layer (the rest were pruned by
+    file stats, or too few files were left to probe). The ground truth
+    and the Spark probes each run as one job for all probes."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from shortcut_spark.cmp import Condition
+
+    probes = []
+    for column, probe, declined in _edge_probes():
+        cols, vals = (column, probe) if isinstance(column, tuple) else ((column,), (probe,))
+        conds = [eq(c, v) for c, v in zip(cols, vals)]
+        probes.append((f"{tag} {column}={probe!r}", conds, declined))
+    # truth: Spark's own filter over the raw table, one branch per probe
+    # (each scan pushes its filter down, as a plain filter would)
+    raw = st.find([], with_rowid=True)
+    truth: dict[int, list] = {}
+    branches = [
+        reduce(lambda df, c: df.filter(F.col(c.column) == F.lit(c.cmp.value.payload)), conds, raw)
+        .select(F.lit(i).alias("i"), ROWID)
+        for i, (_, conds, _) in enumerate(probes)
+    ]
+    for r in reduce(lambda x, y: x.unionByName(y), branches).collect():
+        truth.setdefault(r["i"], []).append(r[ROWID])
+
+    calls = []
+    driver, fallback = st._posting_hits, st._probe_postings
+    st._posting_hits = lambda spec, probes: calls.append("driver") or driver(spec, probes)
+    st._probe_postings = lambda spec, point: calls.append("spark") or fallback(spec, point)
+    consulted, spark_hits, driver_hits = [], [], {}
+    try:
+        for i, (where, conds, declined) in enumerate(probes):
+            calls.clear()
+            got = st.find(conds, with_rowid=True).collect()
+            assert sorted(r[ROWID] for r in got) == sorted(truth.get(i, [])), where
+            if calls:
+                consulted.append(where)
+                assert calls == (["driver", "spark"] if declined else ["driver"]), where
+            spec = st.manifest.indices[",".join(c.column for c in conds)]
+            vals = [c.cmp.value.payload for c in conds]
+            hits = driver(spec, vals)
+            assert (hits is None) == declined, where
+            if hits is not None and st.POSTING_MAP_MAX == 0:
+                driver_hits[i] = hits
+                names = st._posting_schema(spec).names
+                post = fallback(spec, vals[0])
+                for n, c in zip(names, conds):
+                    post = post.filter(Condition(n, c.cmp).to_column(names))
+                spark_hits.append(post.select(F.lit(i).alias("i"), "__file_id"))
+    finally:
+        del st._posting_hits, st._probe_postings
+    if spark_hits:
+        got: dict[int, set] = {i: set() for i in driver_hits}
+        for r in reduce(lambda x, y: x.unionByName(y), spark_hits).collect():
+            got[r["i"]].add(r["__file_id"])
+        assert got == driver_hits, tag
+    return consulted
+
+
+def test_driver_posting_probe_matches_spark(spark, tmp_path):
+    """The zero-job driver probe (pyarrow over the part-pruned posting
+    files) and the posting map answer every edge probe like Spark: over
+    sharded and driver-built parts, after a copy-on-write delete and a
+    deferred delete (postings of retired files must not leak into
+    results), after compact, and on a reopened handle."""
+    path = str(tmp_path / "s")
+    st = _edge_store(spark, path)
+    st.POSTING_MAP_MAX = 0  # the pyarrow read, not the posting map
+    spec = st.manifest.indices["k"]
+    assert any(len(st._posting_files([p])) > 1 for p in spec.parts), "no sharded part"
+    n = len(_edge_probes()) - 1  # ("g99", 1) is out of every file's g range
+    assert len(_check_edge_probes(st, "initial")) == n
+    assert st.delete([eq("k", 7)]) == 1
+    assert st.delete([eq("s", "it's")]) == 1
+    assert len(_check_edge_probes(st, "cow")) == n
+    assert st.delete([eq("k", 13)], defer=True) == 1
+    assert st.delete([eq("d", 0.0)], defer=True) == 2  # -0.0 went with "it's"
+    assert len(_check_edge_probes(st, "deferred")) == n
+    st.compact(target_files=5)
+    # the rewrite gathers the edge values into few files, so file stats
+    # now rule out some probes before the postings are asked
+    m = len(_check_edge_probes(st, "compact"))
+    assert m >= 10
+    reopened = Store.open(spark, path)
+    assert len(_check_edge_probes(reopened, "reopen-map")) == m  # the posting map
+    reopened.POSTING_MAP_MAX = 0
+    assert len(_check_edge_probes(reopened, "reopen")) == m
