@@ -223,6 +223,17 @@ class Condition:
             raise ValueError(f"no such column {v.payload!r}")
         c = F.col(name)
         if self.cmp.op == "eq":
+            if not v.is_column and isinstance(v.payload, float):
+                if v.payload != v.payload:
+                    # Spark's `c = NaN` holds for NaN rows, but pushed
+                    # down it meets footer stats that leave NaN out of
+                    # min/max (pyarrow writes them so) and skips the group
+                    return F.isnan(c)
+                if v.payload == 0.0:
+                    # [-0.0, 0.0] holds exactly the rows `c = 0.0` holds,
+                    # and its pushed-down form keeps every row group
+                    # with a zero (see _zero_bound)
+                    return (c >= F.lit(-0.0)) & (c <= F.lit(0.0))
             return c == self._operand(colnames)
         if self.cmp.op == "contains":
             return c.contains(self._operand(colnames))
@@ -231,11 +242,11 @@ class Condition:
         expr = F.lit(True)
         lo, hi = self.cmp.lower, self.cmp.upper
         if lo and lo.kind == Bound.INCLUDED:
-            expr = expr & (c >= F.lit(lo.value))
+            expr = expr & (c >= F.lit(_zero_bound(lo.value, True)))
         elif lo and lo.kind == Bound.EXCLUDED:
             expr = expr & (c > F.lit(lo.value))
         if hi and hi.kind == Bound.INCLUDED:
-            expr = expr & (c <= F.lit(hi.value))
+            expr = expr & (c <= F.lit(_zero_bound(hi.value, False)))
         elif hi and hi.kind == Bound.EXCLUDED:
             expr = expr & (c < F.lit(hi.value))
         return expr
@@ -292,6 +303,19 @@ class Condition:
 
     def __str__(self) -> str:  # Display parity "[0] = a" (src/cmp.rs:95-100)
         return f"[{self.column}] {self.cmp}"
+
+
+def _zero_bound(v: Any, lower: bool) -> Any:
+    """An inclusive bound ``v``, with a float zero replaced by the zero
+    that keeps Spark's parquet pushdown exact. Spark SQL compares
+    ``-0.0 = 0.0`` as true, but parquet's dictionary filter orders a row
+    group's values with ``Double.compare``, where ``-0.0 < 0.0``: pushed
+    down, ``c >= 0.0`` and ``c = 0.0`` skip a row group whose only zero
+    is ``-0.0`` (and ``c <= -0.0``, ``c = -0.0`` the reverse). A lower
+    bound of ``-0.0`` and an upper bound of ``0.0`` keep both zeros."""
+    if isinstance(v, float) and v == 0.0:
+        return -0.0 if lower else 0.0
+    return v
 
 
 def conjunction(conds: Sequence[Condition], colnames: Sequence[str]) -> Column:

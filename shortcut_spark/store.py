@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cmp import Condition, conjunction
+from .cmp import Condition, conjunction, eq
 from .idx import BLOOM, BTREE, COMPOSITE, HASH, TRIGRAM, IndexSpec, as_index_kind
 from .manifest import DataFile, Manifest
 from .plans import AccessPath, choose_access_path
@@ -265,7 +265,12 @@ class Store:
         filtered out as a literal — for a pruned read, only the ids inside
         some read file's rowid range, and no filter when none is. Only a
         set above ``TOMB_INLINE_ROWS`` rows pays the anti-join (a
-        broadcast exchange, one job per read)."""
+        broadcast exchange, one job per read).
+
+        The lookups (``find`` with conditions, ``find_many``) read through
+        :meth:`_read_lookup`, which serves few rows from the driver and
+        falls back here; full scans and every write-path read (delete,
+        compact, index builds, change feeds) always read here."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
         if with_meta:
@@ -290,6 +295,36 @@ class Store:
                 if ids:
                     df = df.filter(~self._in_literal(ROWID, ids))
         return df
+
+    def _read_lookup(self, files: Sequence[DataFile]) -> DataFrame:
+        """Live rows of ``files`` for a lookup, with ``__rowid``. When the
+        files hold at most ``DRIVER_INSERT_ROWS`` rows and every column is
+        a driver type (:meth:`_driver_atomic_type`), they are read on the
+        driver with pyarrow, tombstoned rows dropped in the scan, and
+        handed to Spark as an Arrow-built ``LocalRelation``. Spark's
+        ``ConvertToLocalRelation`` then evaluates the caller's filter and
+        projection on the driver, with Spark's own semantics, so
+        ``collect()`` launches no job. Such a DataFrame has no input
+        files (``inputFiles()`` is empty). Larger reads, other column
+        types and a tombstone set above ``CDF_DRIVER_READ_ROWS`` take
+        :meth:`_read_files` (docs/SCALE.md has the crossover)."""
+        if (
+            sum(f.rows for f in files) > self.DRIVER_INSERT_ROWS
+            or not all(self._driver_atomic_type(f.dataType) for f in self.manifest.schema)
+            or (tomb := self._tomb_ids(self.CDF_DRIVER_READ_ROWS)) is None
+        ):
+            return self._read_files(files)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ids = self._ids_in_files(tomb, files)
+        schema = self._schema_with_rowid()
+        table = self._arrow_read(
+            [self._abs(f.path) for f in files],
+            schema,
+            ~pc.is_in(pc.field(ROWID), pa.array(ids, pa.int64())) if ids else None,
+        )
+        return self.spark.createDataFrame(table, schema=schema)
 
     def _tombstone_df(self) -> DataFrame:
         """The tombstone set as a relation — the fallback for sets above
@@ -549,16 +584,20 @@ class Store:
     # list position, one pyarrow-written file, footer-based registration —
     # ZERO Spark jobs unless an index needs a posting build or the unique
     # probe must scan a big table. The posting-driver-build bound's sibling.
+    # It also bounds the rows a lookup reads on the driver (_read_lookup):
+    # at narrow rows the driver read beats a Spark job at every size to
+    # 40,000 rows; at ~530-byte rows they cross near 15,000 (docs/SCALE.md)
     DRIVER_INSERT_ROWS = 20_000
 
     @staticmethod
     def _driver_atomic_type(dt: T.DataType) -> bool:
-        """Types the driver-insert kernel handles: atomic, orderable (for
-        the clustering sort) and with unambiguous Python↔Arrow value
-        mapping. Session-tz timestamps qualify only on a UTC-clock host
-        (collect() renders them through the OS zone — on UTC the naive →
-        aware-UTC conversion is exact and fold-free); arrays/maps/structs
-        stay on the Spark path."""
+        """Types the driver-insert kernel and the driver read of a lookup
+        (:meth:`_read_lookup`) handle: atomic, orderable (for the
+        clustering sort) and with unambiguous Python↔Arrow value mapping.
+        Session-tz timestamps qualify only on a UTC-clock host (collect()
+        renders them through the OS zone — on UTC the naive → aware-UTC
+        conversion is exact and fold-free); arrays/maps/structs stay on
+        the Spark path."""
         if isinstance(dt, T.DecimalType):
             return True
         if isinstance(dt, T.TimestampNTZType):
@@ -1739,16 +1778,20 @@ class Store:
             out.extend(sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")))
         return out
 
-    def _arrow_postings(self, spec: IndexSpec, files: Sequence[str], pred, columns=None):
-        """Posting rows of ``files`` that pass the pyarrow expression
-        ``pred``, read on the driver (zero Spark jobs) in the posting
-        schema. The filter is pushed into the scan, so a row group whose
-        footer stats exclude it is never read."""
+    @staticmethod
+    def _arrow_read(paths: Sequence[str], schema: T.StructType, pred=None, columns=None):
+        """Rows of the parquet files ``paths`` that pass the pyarrow
+        expression ``pred``, read on the driver (zero Spark jobs) in
+        ``schema``: a column a file lacks reads as nulls, as in Spark's
+        schema-bound read. The filter is pushed into the scan, so a row
+        group whose footer stats exclude it is never read. INT96
+        timestamps (Spark's default encoding) are read at microsecond
+        precision, Spark's own, so no instant overflows nanoseconds."""
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = to_arrow_schema(self._posting_schema(spec))
-        return ds.dataset(list(files), schema=schema, format="parquet").to_table(
+        fmt = ds.ParquetFileFormat(coerce_int96_timestamp_unit="us")
+        return ds.dataset(list(paths), schema=to_arrow_schema(schema), format=fmt).to_table(
             columns=columns, filter=pred
         )
 
@@ -1803,9 +1846,9 @@ class Store:
             return set()
         pred = None
         for name, a in zip(self._posting_schema(spec).names, arrays):
-            eq = pc.field(name) == a[0]
-            pred = eq if pred is None else pred & eq
-        tbl = self._arrow_postings(spec, files, pred, ["__file_id"])
+            match = pc.field(name) == a[0]
+            pred = match if pred is None else pred & match
+        tbl = self._arrow_read(files, self._posting_schema(spec), pred, ["__file_id"])
         return set(tbl.column("__file_id").to_pylist())
 
     def _probe_postings(self, spec: IndexSpec, point) -> DataFrame | None:
@@ -2311,8 +2354,10 @@ class Store:
             import pyarrow.compute as pc
 
             live = pa.array([f.id for f in self.manifest.files], pa.int32())
-            tbl = self._arrow_postings(
-                spec, self._posting_files(spec.parts), pc.is_in(pc.field("__file_id"), live)
+            tbl = self._arrow_read(
+                self._posting_files(spec.parts),
+                self._posting_schema(spec),
+                pc.is_in(pc.field("__file_id"), live),
             )
             cols = [tbl.column(n).to_pylist() for n in tbl.column_names[:-1]]
             keys = zip(*cols) if spec.columns else cols[0]
@@ -2324,6 +2369,14 @@ class Store:
 
     def find(self, conds: Sequence[Condition] = (), with_rowid: bool = False) -> DataFrame:
         """Lazy filtered scan; empty ``conds`` = full scan (``src/lib.rs:255``).
+
+        A lookup (at least one condition) whose pruned files hold at most
+        ``DRIVER_INSERT_ROWS`` rows is read on the driver into a
+        ``LocalRelation`` (:meth:`_read_lookup`): Spark still evaluates
+        the conditions, and ``collect()`` launches no job — the
+        reference's in-process ``find`` (``src/lib.rs:98-137``). Its
+        ``inputFiles()`` is empty. A bigger lookup and every full scan
+        read the parquet files with Spark.
 
         A full scan carries its EXACT row count out-of-band
         (``_shortcut_live_rows``, from ``manifest.live_rows`` — the
@@ -2344,7 +2397,8 @@ class Store:
             if not conds:
                 out._shortcut_live_rows = 0
             return out
-        df = self._read_files(files).filter(conjunction(conds, self.colnames))
+        read = self._read_lookup(files) if conds else self._read_files(files)
+        df = read.filter(conjunction(conds, self.colnames))
         out = df if with_rowid else df.drop(ROWID)
         if not conds:
             out._shortcut_live_rows = int(self.manifest.live_rows)
@@ -2381,6 +2435,9 @@ class Store:
         (same superset-then-residual contract as ``find``,
         ``src/lib.rs:89-91``); the residual filter is a semi-join for big
         key sets and an ``IN`` literal (:meth:`_in_literal`) for small ones.
+        Pruned files holding at most ``DRIVER_INSERT_ROWS`` rows are read
+        on the driver, as in ``find``: with up to 1,000 keys the lookup
+        then launches no job.
         """
         name = self.colnames[column] if isinstance(column, int) else column
         if name not in self.colnames:
@@ -2443,9 +2500,17 @@ class Store:
                 ]
         if not files:
             return self._empty()
-        df = self._read_files(files).drop(ROWID)
+        df = self._read_lookup(files).drop(ROWID)
         if len(keys) <= 1000:
-            return df.filter(self._in_literal(name, keys))
+            # a float zero or NaN key takes its `eq` form (cmp.py): pushed
+            # down, an IN list skips row groups that hold only the other
+            # zero, or NaN
+            odd = [isinstance(k, float) and (k == 0.0 or k != k) for k in keys]
+            preds = [eq(name, k).to_column(self.colnames) for k, o in zip(keys, odd) if o]
+            rest = [k for k, o in zip(keys, odd) if not o]
+            if rest:
+                preds.append(self._in_literal(name, rest))
+            return df.filter(functools.reduce(lambda a, b: a | b, preds))
         import pandas as pd
 
         # Arrow path: a pandas frame serializes the key batch an order of

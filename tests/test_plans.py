@@ -50,9 +50,23 @@ def test_revenue_join_all_broadcast(spark):
     assert n_shuffles(plan) == 1  # only the final aggregation
 
 
-def test_store_find_eq_scan_only(spark):
-    import __spark_entry__ as e
+def test_store_find_eq_scan_only(spark, monkeypatch):
+    """Every lineitem file holds an R, so the find reads the whole table:
+    at most ``DRIVER_INSERT_ROWS`` rows (6,000 at sf0.001) are read on the
+    driver into a ``LocalTableScan``; above the bound, and with the bound
+    at 0, the residual is pushed into the parquet scan."""
+    import os
 
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as e
+    from shortcut_spark import Store
+
+    rows = pq.ParquetFile(os.path.join(SF_DIR, "lineitem.parquet")).metadata.num_rows
+    plan = fmt_plan(e.queries()["store_find_eq"](spark, SF_DIR))
+    assert n_shuffles(plan) == 0
+    assert ("LocalTableScan" in plan) == (rows <= Store.DRIVER_INSERT_ROWS)
+    monkeypatch.setattr(Store, "DRIVER_INSERT_ROWS", 0)
     plan = fmt_plan(e.queries()["store_find_eq"](spark, SF_DIR))
     assert n_shuffles(plan) == 0
     assert "EqualTo(l_returnflag,R)" in plan  # residual pushed to parquet

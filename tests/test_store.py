@@ -2302,20 +2302,31 @@ def _two_index_store(spark, path, batches=6, per_batch=50):
 def test_job_count_pins_two_index_store(spark, tmp_path):
     """The job floor of the indexed write and read paths: a literal
     insert maintains both indexes in ONE job (the fused driver build); a
-    posting probe runs on the driver with no job, so a point find is the
-    scan alone, a miss the postings rule out and ``explain_find`` take no
-    job, a 1-row copy-on-write delete runs the changelog write, the
-    survivors' write and one fused index job, and a deferred delete the
-    changelog write. A deferred delete leaves both floors where they
-    were: the tombstone set is read on the driver and filters reads as a
-    literal, with no broadcast job."""
+    posting probe runs on the driver with no job, and so does the read of
+    the few rows it leaves, so a point find, a btree range find, a miss
+    the postings rule out and ``explain_find`` take no job; a find whose
+    files hold more than ``DRIVER_INSERT_ROWS`` rows is one Spark scan. A
+    1-row copy-on-write delete runs the changelog write, the survivors'
+    write and one fused index job, and a deferred delete the changelog
+    write. A deferred delete leaves the floors where they were: the
+    tombstone set is read on the driver and filters reads with no
+    broadcast job."""
     st = _two_index_store(spark, str(tmp_path / "s"))
     n, jobs = _jobs(spark, lambda: st.insert([(10_000 + i, 1.5 * i, "m") for i in range(100)]))
     assert n == 100 and jobs == 1
     explain, jobs = _jobs(spark, lambda: st.explain_find([eq("k", 7)]))
     assert "IndexLookup" in explain and jobs == 0
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
-    assert [r["k"] for r in rows] == [7] and jobs == 1
+    assert [r["k"] for r in rows] == [7] and jobs == 0
+    rows, jobs = _jobs(spark, lambda: st.find([between("v", 10, 12)]).collect())
+    assert sorted(r["k"] for r in rows) == [20, 21, 22, 23, 24, 10_007, 10_008] and jobs == 0
+    # the six files whose s range holds "s3" hold 300 rows: the Spark scan
+    st.DRIVER_INSERT_ROWS = 299
+    rows, jobs = _jobs(spark, lambda: st.find([eq("s", "s3")]).collect())
+    assert len(rows) == 43 and jobs == 1
+    rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
+    assert [r["k"] for r in rows] == [7] and jobs == 0  # one 50-row file
+    del st.DRIVER_INSERT_ROWS
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 8)]))
     assert n == 1 and jobs <= 3
     # k=8 lies inside every file's key range: only the postings rule it out
@@ -2326,7 +2337,7 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 13)], defer=True))
     assert n == 1 and jobs == 1
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
-    assert [r["k"] for r in rows] == [7] and jobs == 1
+    assert [r["k"] for r in rows] == [7] and jobs == 0
     assert st.find([eq("k", 13)]).count() == 0
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 14)]))
     assert n == 1 and jobs <= 3

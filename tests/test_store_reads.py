@@ -1,8 +1,9 @@
 """Reads of Store-owned files: the bounded tombstone set filters reads as a
 rowid literal and gives the same answers as the anti-join it replaces,
 every read of a Store-owned parquet dir carries its schema, IN lists are
-SQL literals, and the driver-side posting probe answers every edge probe
-like Spark's own filter."""
+SQL literals, the driver-side posting probe answers every edge probe like
+Spark's own filter, and the driver read of a small lookup returns what the
+Spark read returns."""
 
 import ast
 import os
@@ -12,6 +13,7 @@ import pyarrow.parquet as pq
 
 from shortcut_spark import MatView, Store, between, eq
 from shortcut_spark.store import ROWID
+from tests.test_store import _jobs
 
 
 def rows_of(df):
@@ -251,6 +253,20 @@ def test_store_owned_reads_carry_their_schema():
     assert not stray, f"pass .schema(...) to reads of Store-owned files: {stray}"
     # every allowlisted read still exists (a stale entry would hide a new one)
     assert {(r[0], r[1]) for r in reads} == set(_SCHEMALESS_READ_ALLOWLIST)
+    # the driver's pyarrow reads are schema-bound too: ds.dataset(..., schema=)
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    datasets = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "dataset"
+    ]
+    assert datasets
+    unbound = [n.lineno for n in datasets if not any(k.arg == "schema" for k in n.keywords)]
+    assert not unbound, f"pass schema= to ds.dataset: store.py lines {unbound}"
 
 
 
@@ -473,14 +489,16 @@ def _check_edge_probes(st, tag):
     from pyspark.sql import functions as F
 
     from shortcut_spark.cmp import Condition
+    from shortcut_spark.session import scoped_confs
 
     probes = []
     for column, probe, declined in _edge_probes():
         cols, vals = (column, probe) if isinstance(column, tuple) else ((column,), (probe,))
         conds = [eq(c, v) for c, v in zip(cols, vals)]
         probes.append((f"{tag} {column}={probe!r}", conds, declined))
-    # truth: Spark's own filter over the raw table, one branch per probe
-    # (each scan pushes its filter down, as a plain filter would)
+    # truth: Spark's own filter over the raw table, one branch per probe,
+    # evaluated by Spark and not pushed into the parquet reader (whose
+    # dictionary filter tells -0.0 from 0.0, which Spark SQL equates)
     raw = st.find([], with_rowid=True)
     truth: dict[int, list] = {}
     branches = [
@@ -488,8 +506,9 @@ def _check_edge_probes(st, tag):
         .select(F.lit(i).alias("i"), ROWID)
         for i, (_, conds, _) in enumerate(probes)
     ]
-    for r in reduce(lambda x, y: x.unionByName(y), branches).collect():
-        truth.setdefault(r["i"], []).append(r[ROWID])
+    with scoped_confs(st.spark, {"spark.sql.parquet.filterPushdown": "false"}):
+        for r in reduce(lambda x, y: x.unionByName(y), branches).collect():
+            truth.setdefault(r["i"], []).append(r[ROWID])
 
     calls = []
     driver, fallback = st._posting_hits, st._probe_postings
@@ -553,3 +572,185 @@ def test_driver_posting_probe_matches_spark(spark, tmp_path):
     assert len(_check_edge_probes(reopened, "reopen-map")) == m  # the posting map
     reopened.POSTING_MAP_MAX = 0
     assert len(_check_edge_probes(reopened, "reopen")) == m
+
+
+# -- the driver read of a lookup answers like the Spark read -----------------
+
+
+def _typed_store(spark, path):
+    """One column of every driver-read type, an index on k (hash), d
+    (btree) and s (trigram), over two driver-written batches and two
+    Spark-written ones (INT96 timestamps). Values sit on the edges: NULL
+    in every column, NaN and ±0.0, quotes, backslashes and unicode,
+    timestamps at the ends of their range."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from shortcut_spark import TrigramIndex
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("t", T.StringType()),
+            T.StructField("m", T.DecimalType(10, 2)),
+            T.StructField("dt", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("tn", T.TimestampNTZType()),
+            T.StructField("b", T.BinaryType()),
+            T.StructField("f", T.BooleanType()),
+        ]
+    )
+    utc = dt.timezone.utc
+    words = ["it's", "back\\slash", "ünï→✓", "q'\\'", "plain", "abc", "xabcx"]
+    edge_d = [0.0, -0.0, float("nan"), 1.5, -2.25, 1e300]
+    edge_ts = [
+        dt.datetime(1000, 1, 1, tzinfo=utc),  # collect() cannot render year 1
+        dt.datetime(9999, 12, 31, 23, 59, 59, 999999, tzinfo=utc),
+        dt.datetime(2024, 2, 29, 12, 30, 0, 123456, tzinfo=utc),
+    ]
+
+    def row(i):
+        if i % 11 == 0:  # NULL everywhere but the key
+            return (i,) + (None,) * 9
+        ts = edge_ts[i % 3]
+        return (
+            i,
+            edge_d[i % 6],
+            words[i % 7],
+            words[(i // 7) % 7],
+            Decimal(i % 13) / 4,
+            dt.date(1970, 1, 1) + dt.timedelta(days=(i * 37) % 3000 - 1500),
+            ts,
+            ts.replace(tzinfo=None),
+            bytes([i % 5, 0, 255]),
+            i % 2 == 0,
+        )
+
+    st = Store.create(spark, path, schema)
+    st.index("k", "hash")
+    st.index("d", "btree")
+    st.index("s", TrigramIndex())
+    for b in range(4):
+        rows = [row(i) for i in range(b * 40, b * 40 + 40)]
+        if b % 2:
+            st.insert(rows)  # the driver insert: pyarrow-written
+        else:
+            st.insert(spark.createDataFrame(rows, schema))  # Spark-written
+    # a file whose only zero is -0.0, beside NaN, and one whose only zero
+    # is 0.0: row groups a pushed-down `d = 0.0` or `d = NaN` would skip
+    for b, ds in enumerate(([-0.0, float("nan"), 5.0], [0.0, 7.0])):
+        base = 160 + 10 * b
+        st.insert([(base + j, d, *row(base + j)[2:]) for j, d in enumerate(ds * 3)])
+    return st
+
+
+def _typed_lookups():
+    """(name, call on a Store) of every lookup shape the driver read serves."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from shortcut_spark import col_eq
+    from shortcut_spark.cmp import Bound, contains
+
+    finds = {
+        "k": [eq("k", 41)],
+        "k_miss": [eq("k", 10_001)],
+        "d=0.0": [eq("d", 0.0)],
+        "d=-0.0": [eq("d", -0.0)],
+        "d=nan": [eq("d", float("nan"))],
+        "d<=-0.0": [between("d", None, -0.0)],
+        "d>=0.0": [between("d", 0.0, None)],
+        "d(-0.0,2]": [between("d", Bound.excluded(-0.0), 2)],
+        "s'": [eq("s", "it's")],
+        "s\\": [eq("s", "back\\slash")],
+        "s_uni": [eq("s", "ünï→✓")],
+        "contains": [contains("s", "abc")],
+        "contains_q": [contains("s", "'\\'")],
+        "col_eq": [col_eq("s", "t")],
+        "m": [eq("m", Decimal("1.25"))],
+        "dt": [between("dt", dt.date(1969, 1, 1), dt.date(1971, 1, 1))],
+        "ts": [eq("ts", dt.datetime(9999, 12, 31, 23, 59, 59, 999999))],
+        "ts_range": [between("ts", None, dt.datetime(1500, 1, 1))],
+        "tn": [eq("tn", dt.datetime(1000, 1, 1))],
+        "b": [eq("b", bytes([3, 0, 255]))],
+        "f": [eq("f", True), between("k", 20, 60)],
+    }
+    calls = []
+    for name, conds in finds.items():
+        calls.append((name, lambda st, c=conds: st.find(c, with_rowid=True)))
+    for name in ("k", "d=0.0", "s'", "col_eq"):
+        calls.append((name + "/no_rowid", lambda st, c=finds[name]: st.find(c)))
+    calls += [
+        ("or", lambda st: st.find_or([[eq("k", 41)], [eq("s", "q'\\'"), eq("f", True)]])),
+        ("many_k", lambda st: st.find_many("k", list(range(0, 1000, 3)))),
+        ("many_s", lambda st: st.find_many("s", ["it's", "back\\slash", "none"])),
+        ("many_d", lambda st: st.find_many("d", [0.0, 1.5])),
+    ]
+    return calls
+
+
+def _canon(df):
+    """Rows in a comparable form: NaN equals NaN and -0.0 differs from 0.0."""
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _lookups_agree(st, where):
+    """Every lookup gives the same rows from the driver read and from the
+    Spark read (bound 0); returns the driver read's job count per lookup."""
+    jobs = {}
+    for name, call in _typed_lookups():
+        got, jobs[name] = _jobs(st.spark, lambda: _canon(call(st)))
+        st.DRIVER_INSERT_ROWS = 0
+        try:
+            want = _canon(call(st))
+        finally:
+            del st.DRIVER_INSERT_ROWS
+        assert got == want, f"{where} {name}"
+    return jobs
+
+
+def test_driver_read_matches_spark_read(spark, tmp_path, monkeypatch):
+    """The zero-job driver read of a lookup (pyarrow, then a Spark
+    ``LocalRelation``) returns what the Spark parquet read returns, for
+    every driver type and edge value, with and without ``__rowid``, for
+    ``find``, ``find_or`` and ``find_many``: on a fresh store, after a
+    copy-on-write delete, after deferred deletes with the tombstone set
+    filtered as a literal and as an anti-join, after compact and on a
+    reopened handle. A point find takes no job in every state; a store
+    with an array column keeps the Spark read."""
+    from pyspark.sql import types as T
+
+    path = str(tmp_path / "s")
+    st = _typed_store(spark, path)
+    assert _lookups_agree(st, "fresh")["k"] == 0
+    assert st.delete([eq("k", 43)]) == 1
+    assert _lookups_agree(st, "cow")["k"] == 0
+    assert st.delete([eq("s", "it's")], defer=True) > 1
+    assert st.delete([eq("k", 41)], defer=True) == 1
+    assert _lookups_agree(st, "deferred")["k"] == 0
+    # a tombstone set over the literal bound: the Spark read pays the
+    # anti-join, the driver read still drops the ids in the scan
+    monkeypatch.setattr(Store, "TOMB_INLINE_ROWS", 0)
+    assert "LeftAnti" in _plan(st._read_files(st.manifest.files))
+    jobs = _lookups_agree(st, "anti-join")
+    assert jobs["k"] == jobs["s'"] == jobs["many_k"] == 0
+    monkeypatch.undo()
+    st.compact(target_files=2)
+    assert st.manifest.tombstone_rows == 0
+    assert _lookups_agree(st, "compact")["k"] == 0
+    assert _lookups_agree(Store.open(spark, path), "reopen")["k"] == 0
+
+    arr = Store.create(
+        spark,
+        str(tmp_path / "a"),
+        T.StructType(
+            [T.StructField("k", T.LongType()), T.StructField("a", T.ArrayType(T.LongType()))]
+        ),
+    )
+    arr.insert([(i, [i, i + 1]) for i in range(10)])
+    rows, jobs = _jobs(spark, lambda: arr.find([eq("k", 3)]).collect())
+    assert [tuple(r) for r in rows] == [(3, [3, 4])] and jobs == 1
