@@ -25,10 +25,12 @@ exactly like the reference's ``impl Display`` (``src/cmp.rs:79-100``).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Any, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "Bound",
@@ -200,13 +202,25 @@ class Condition:
             return F.col(other)
         return F.lit(v.payload)
 
-    def to_column(self, colnames: Sequence[str]) -> Column:
+    def to_column(self, schema: T.StructType | Sequence[str]) -> Column:
         """Compile to a Spark boolean ``Column``.
 
         Row-at-a-time ``Condition::matches`` (``src/cmp.rs:74-77``) becomes a
         vectorized, codegen'd expression — the residual re-check in ``find``
         (``src/lib.rs:133``) is this column applied to the pruned scan.
+
+        ``schema`` is the table's ``StructType`` or just its column names.
+        Given the types, a zero of any numeric type on a float or double
+        column compiles like a float zero (see :func:`_zero_bound`): Spark
+        casts an int ``0`` to ``0.0`` before it pushes the filter down.
         """
+        if isinstance(schema, T.StructType):
+            colnames = schema.fieldNames()
+            floating = isinstance(
+                schema[self.resolve(colnames)].dataType, (T.FloatType, T.DoubleType)
+            )
+        else:
+            colnames, floating = schema, False
         name = self.resolve(colnames)
         v = self.cmp.value
         if (
@@ -223,17 +237,15 @@ class Condition:
             raise ValueError(f"no such column {v.payload!r}")
         c = F.col(name)
         if self.cmp.op == "eq":
-            if not v.is_column and isinstance(v.payload, float):
-                if v.payload != v.payload:
-                    # Spark's `c = NaN` holds for NaN rows, but pushed
-                    # down it meets footer stats that leave NaN out of
-                    # min/max (pyarrow writes them so) and skips the group
-                    return F.isnan(c)
-                if v.payload == 0.0:
-                    # [-0.0, 0.0] holds exactly the rows `c = 0.0` holds,
-                    # and its pushed-down form keeps every row group
-                    # with a zero (see _zero_bound)
-                    return (c >= F.lit(-0.0)) & (c <= F.lit(0.0))
+            if not v.is_column and isinstance(v.payload, float) and v.payload != v.payload:
+                # Spark's `c = NaN` holds for NaN rows, but pushed down it
+                # meets footer stats that leave NaN out of min/max (pyarrow
+                # writes them so) and skips the group
+                return F.isnan(c)
+            if not v.is_column and _float_zero(v.payload, floating):
+                # [-0.0, 0.0] holds exactly the rows `c = 0.0` holds, and
+                # its pushed-down form keeps every row group with a zero
+                return (c >= F.lit(-0.0)) & (c <= F.lit(0.0))
             return c == self._operand(colnames)
         if self.cmp.op == "contains":
             return c.contains(self._operand(colnames))
@@ -242,11 +254,11 @@ class Condition:
         expr = F.lit(True)
         lo, hi = self.cmp.lower, self.cmp.upper
         if lo and lo.kind == Bound.INCLUDED:
-            expr = expr & (c >= F.lit(_zero_bound(lo.value, True)))
+            expr = expr & (c >= F.lit(_zero_bound(lo.value, True, floating)))
         elif lo and lo.kind == Bound.EXCLUDED:
             expr = expr & (c > F.lit(lo.value))
         if hi and hi.kind == Bound.INCLUDED:
-            expr = expr & (c <= F.lit(_zero_bound(hi.value, False)))
+            expr = expr & (c <= F.lit(_zero_bound(hi.value, False, floating)))
         elif hi and hi.kind == Bound.EXCLUDED:
             expr = expr & (c < F.lit(hi.value))
         return expr
@@ -305,26 +317,36 @@ class Condition:
         return f"[{self.column}] {self.cmp}"
 
 
-def _zero_bound(v: Any, lower: bool) -> Any:
+def _float_zero(v: Any, floating: bool) -> bool:
+    """``v`` is a zero that Spark compares as ``0.0``: a float zero, or on
+    a ``floating`` column a zero of any numeric type (``0``,
+    ``Decimal(0)``), which Spark casts to ``0.0``."""
+    numeric = isinstance(v, (int, float, Decimal)) and not isinstance(v, bool)
+    return numeric and v == 0 and (floating or isinstance(v, float))
+
+
+def _zero_bound(v: Any, lower: bool, floating: bool) -> Any:
     """An inclusive bound ``v``, with a float zero replaced by the zero
     that keeps Spark's parquet pushdown exact. Spark SQL compares
     ``-0.0 = 0.0`` as true, but parquet's dictionary filter orders a row
     group's values with ``Double.compare``, where ``-0.0 < 0.0``: pushed
     down, ``c >= 0.0`` and ``c = 0.0`` skip a row group whose only zero
     is ``-0.0`` (and ``c <= -0.0``, ``c = -0.0`` the reverse). A lower
-    bound of ``-0.0`` and an upper bound of ``0.0`` keep both zeros."""
-    if isinstance(v, float) and v == 0.0:
+    bound of ``-0.0`` and an upper bound of ``0.0`` keep both zeros, and
+    so they replace every zero :func:`_float_zero` names."""
+    if _float_zero(v, floating):
         return -0.0 if lower else 0.0
     return v
 
 
-def conjunction(conds: Sequence[Condition], colnames: Sequence[str]) -> Column:
-    """AND-list semantics of ``find``/``delete`` (``src/lib.rs:133``).
+def conjunction(conds: Sequence[Condition], schema: T.StructType) -> Column:
+    """AND-list semantics of ``find``/``delete`` (``src/lib.rs:133``) over
+    a table of ``schema`` (see :meth:`Condition.to_column`).
 
     Empty list → full scan (``src/lib.rs:255``)."""
     expr = F.lit(True)
     for c in conds:
-        expr = expr & c.to_column(colnames)
+        expr = expr & c.to_column(schema)
     return expr
 
 

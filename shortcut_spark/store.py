@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cmp import Condition, conjunction, eq
+from .cmp import Condition, _float_zero, conjunction, eq
 from .idx import BLOOM, BTREE, COMPOSITE, HASH, TRIGRAM, IndexSpec, as_index_kind
 from .manifest import DataFile, Manifest
 from .plans import AccessPath, choose_access_path
@@ -267,10 +267,10 @@ class Store:
         set above ``TOMB_INLINE_ROWS`` rows pays the anti-join (a
         broadcast exchange, one job per read).
 
-        The lookups (``find`` with conditions, ``find_many``) read through
-        :meth:`_read_lookup`, which serves few rows from the driver and
-        falls back here; full scans and every write-path read (delete,
-        compact, index builds, change feeds) always read here."""
+        The lookups (``find`` with conditions, ``find_many``) and the
+        deletes serve few rows from the driver (:meth:`_driver_tables`) and
+        fall back here; full scans and the other write-path reads
+        (compact, index builds, change feeds) always read here."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
         if with_meta:
@@ -296,35 +296,45 @@ class Store:
                     df = df.filter(~self._in_literal(ROWID, ids))
         return df
 
-    def _read_lookup(self, files: Sequence[DataFile]) -> DataFrame:
-        """Live rows of ``files`` for a lookup, with ``__rowid``. When the
-        files hold at most ``DRIVER_INSERT_ROWS`` rows and every column is
-        a driver type (:meth:`_driver_atomic_type`), they are read on the
-        driver with pyarrow, tombstoned rows dropped in the scan, and
-        handed to Spark as an Arrow-built ``LocalRelation``. Spark's
-        ``ConvertToLocalRelation`` then evaluates the caller's filter and
-        projection on the driver, with Spark's own semantics, so
-        ``collect()`` launches no job. Such a DataFrame has no input
-        files (``inputFiles()`` is empty). Larger reads, other column
-        types and a tombstone set above ``CDF_DRIVER_READ_ROWS`` take
-        :meth:`_read_files` (docs/SCALE.md has the crossover)."""
+    def _driver_tables(self, files: Sequence[DataFile]) -> list | None:
+        """The live rows of each of ``files`` as one arrow table per file,
+        in the store schema with ``__rowid``, read on the driver with
+        pyarrow (zero Spark jobs) and tombstoned rows dropped in the scan —
+        or None when the files hold more than ``DRIVER_INSERT_ROWS`` rows,
+        a column fails :meth:`_driver_atomic_type`, or the tombstone set
+        holds more than ``CDF_DRIVER_READ_ROWS`` rows. The one gate of the
+        driver-served lookups (:meth:`_read_lookup`) and small deletes
+        (:meth:`delete_filter`); docs/SCALE.md has both crossovers."""
         if (
             sum(f.rows for f in files) > self.DRIVER_INSERT_ROWS
             or not all(self._driver_atomic_type(f.dataType) for f in self.manifest.schema)
             or (tomb := self._tomb_ids(self.CDF_DRIVER_READ_ROWS)) is None
         ):
-            return self._read_files(files)
+            return None
         import pyarrow as pa
         import pyarrow.compute as pc
 
         ids = self._ids_in_files(tomb, files)
+        pred = ~pc.is_in(pc.field(ROWID), pa.array(ids, pa.int64())) if ids else None
         schema = self._schema_with_rowid()
-        table = self._arrow_read(
-            [self._abs(f.path) for f in files],
-            schema,
-            ~pc.is_in(pc.field(ROWID), pa.array(ids, pa.int64())) if ids else None,
+        return [self._arrow_read([self._abs(f.path)], schema, pred) for f in files]
+
+    def _read_lookup(self, files: Sequence[DataFile]) -> DataFrame:
+        """Live rows of ``files`` for a lookup, with ``__rowid``. Rows the
+        driver may read (:meth:`_driver_tables`) are handed to Spark as an
+        Arrow-built ``LocalRelation``: Spark's ``ConvertToLocalRelation``
+        then evaluates the caller's filter and projection on the driver,
+        with Spark's own semantics, so ``collect()`` launches no job. Such
+        a DataFrame has no input files (``inputFiles()`` is empty). Every
+        other read takes :meth:`_read_files`."""
+        tables = self._driver_tables(files)
+        if tables is None:
+            return self._read_files(files)
+        import pyarrow as pa
+
+        return self.spark.createDataFrame(
+            pa.concat_tables(tables), schema=self._schema_with_rowid()
         )
-        return self.spark.createDataFrame(table, schema=schema)
 
     def _tombstone_df(self) -> DataFrame:
         """The tombstone set as a relation — the fallback for sets above
@@ -584,9 +594,11 @@ class Store:
     # list position, one pyarrow-written file, footer-based registration —
     # ZERO Spark jobs unless an index needs a posting build or the unique
     # probe must scan a big table. The posting-driver-build bound's sibling.
-    # It also bounds the rows a lookup reads on the driver (_read_lookup):
-    # at narrow rows the driver read beats a Spark job at every size to
-    # 40,000 rows; at ~530-byte rows they cross near 15,000 (docs/SCALE.md)
+    # It also bounds the rows a lookup or a delete reads on the driver
+    # (_driver_tables): at narrow rows the driver read of a lookup beats a
+    # Spark job at every size to 40,000 rows, at ~530-byte rows they cross
+    # near 15,000; a driver delete, which hands Spark only the columns its
+    # conditions name, wins at every size to 40,000 on both (docs/SCALE.md)
     DRIVER_INSERT_ROWS = 20_000
 
     @staticmethod
@@ -687,9 +699,7 @@ class Store:
         batch_rel = os.path.join(
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
-        out_dir = self._abs(batch_rel)
-        os.makedirs(out_dir, exist_ok=True)
-        pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+        self._write_arrow(batch_rel, table)
         self._register_and_index(batch_rel)
         self.manifest.rowid = watermark + n
         self._commit()
@@ -1404,7 +1414,9 @@ class Store:
         del self.manifest.indices[name]
         self._commit()
 
-    def _index_files(self, specs: Sequence[IndexSpec], files: Sequence[DataFile]) -> None:
+    def _index_files(
+        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list | None = None
+    ) -> None:
         """Add the index entries of ``files`` to every index in ``specs``
         and refresh each one's cost-model stats — the distributed analogue
         of posting-list maintenance (``src/lib.rs:181-184``,
@@ -1412,16 +1424,22 @@ class Store:
         *files* per key — the lookup result is a superset and ``find``'s
         residual filter restores exactness (``src/lib.rs:89-91``).
 
-        A batch at or below the driver-build bound takes ONE Spark job for
-        all of its indexes (:meth:`_index_files_driver`); a bigger batch
-        writes each index's part with its own job. The files are read
-        without the tombstone anti-join: fresh files hold no tombstoned
-        rowid, and a posting for a dead row (an index backfill after a
-        deferred delete) is only a superset, the state a deferred delete
-        leaves anyway."""
+        Files whose rows are already on the driver (``tables``, one arrow
+        table per file: a small copy-on-write delete's survivors) are
+        indexed with no job (:meth:`_index_tables`). Otherwise a batch at
+        or below the driver-build bound takes ONE Spark job for all of its
+        indexes (:meth:`_index_files_driver`), and a bigger batch writes
+        each index's part with its own job. The files are read without
+        the tombstone anti-join: fresh files hold no tombstoned rowid, and
+        a posting for a dead row (an index backfill after a deferred
+        delete) is only a superset, the state a deferred delete leaves
+        anyway."""
         for spec in specs:
             spec.rows = self.manifest.total_rows
         if not specs or not files:
+            return
+        if tables is not None:
+            self._index_tables(specs, files, tables)
             return
         # a literal path → id map tags each row with its file id, so the
         # build broadcasts no Python-list DataFrame (each such broadcast is
@@ -1447,16 +1465,12 @@ class Store:
         aggregate over ``coalesce(1)`` of its rows computes, per index, the
         range key's min/max (part pruning stats), the set of distinct
         (key, file id) postings and the HLL key sketch merged into the
-        stored one. The driver sorts each part by the range key and writes
-        it with pyarrow, in the distributed writer's arrow schema. A bloom
-        index packs its bitsets here from its distinct (key, file) pairs
-        with :func:`_bloom_positions_py`, the probe's bit-identical hash.
-        Trigram grams come from one ``inline_outer`` over the zipped gram
-        arrays: min, max, set and sketch all ignore duplicate rows, so the
-        fan-out changes no other index's result."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+        stored one. The driver writes each part
+        (:meth:`_write_index_part`) in the distributed writer's arrow
+        schema; a bloom index's bitsets are packed there from its distinct
+        (key, file) pairs. Trigram grams come from one ``inline_outer``
+        over the zipped gram arrays: min, max, set and sketch all ignore
+        duplicate rows, so the fan-out changes no other index's result."""
         grams = {s.column: f"__g{i}" for i, s in enumerate(specs) if s.kind == TRIGRAM}
         if grams:
             zipped = F.arrays_zip(
@@ -1483,32 +1497,119 @@ class Store:
             ]
         st = src.coalesce(1).agg(*aggs).collect()[0]
         for i, spec in enumerate(specs):
-            rows = [r.asDict() for r in st[f"__rows{i}"]]
-            if not rows:
-                self._refresh_index_stats(spec, st, None, i)
-                continue
-            part_rel = self._part_rel(spec)
-            if spec.kind == BLOOM:
-                m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
-                bits: dict[int, bytearray] = {}
-                for r in rows:
-                    b = bits.setdefault(r["__file_id"], bytearray(m_bits // 8))
-                    for p in _bloom_positions_py(r["key"], m_bits, k):
-                        b[p >> 3] |= 1 << (p & 7)
-                table = pa.table({
-                    "__file_id": pa.array(list(bits), pa.int32()),
-                    "bloom": pa.array([bytes(b) for b in bits.values()], pa.binary()),
-                })
-            else:
-                schema = self._posting_schema(spec)
-                rkey = schema.names[0]
-                rows.sort(key=lambda d: (d[rkey] is None, d[rkey]))
-                table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-            out_dir = self._abs(part_rel)
-            os.makedirs(out_dir, exist_ok=True)
-            pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
-            spec.parts.append(part_rel)
+            part_rel = self._write_index_part(spec, [r.asDict() for r in st[f"__rows{i}"]])
             self._refresh_index_stats(spec, st, None if spec.kind == BLOOM else part_rel, i)
+
+    def _index_tables(
+        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list
+    ) -> None:
+        """:meth:`_index_files_driver` with no Spark job, for files whose
+        rows are already on the driver (``tables``, one arrow table per
+        file). The postings and each part's range key [min, max] are
+        built on the driver with the aggregate's semantics: the distinct
+        postings keep ``-0.0`` apart from ``0.0`` and fold NaNs into one,
+        as ``collect_set`` does, and :meth:`_min_max` ranks NaN above
+        every number, as Spark's ``min``/``max`` do. Trigram grams and bloom
+        string keys come from a Spark projection (``_grams``,
+        ``cast(string)``) over a ``LocalRelation``, which
+        ``ConvertToLocalRelation`` evaluates on the driver. The HLL sketch
+        and ndv stay as they are: these rows' keys are already in every
+        sketch, and a union with a subset changes no register."""
+        import pyarrow as pa
+
+        src = pa.concat_tables(
+            [
+                t.append_column("__file_id", pa.array([f.id] * t.num_rows, pa.int32()))
+                for f, t in zip(files, tables)
+            ]
+        )
+        derived = {
+            i: self._grams(s) if s.kind == TRIGRAM else F.col(s.column).cast("string")
+            for i, s in enumerate(specs)
+            if s.kind in (TRIGRAM, BLOOM)
+        }
+        if derived:
+            cols = [c for c in self.colnames if any(specs[i].column == c for i in derived)]
+            fields = [self.manifest.schema[c] for c in cols]
+            rel = self.spark.createDataFrame(
+                src.select([*cols, "__file_id"]),
+                schema=T.StructType([*fields, T.StructField("__file_id", T.IntegerType())]),
+            )
+            got = rel.select(
+                "__file_id", *[e.alias(f"__x{i}") for i, e in derived.items()]
+            ).collect()
+        for i, spec in enumerate(specs):
+            if i in derived:
+                pairs = {
+                    (k, r["__file_id"])
+                    for r in got
+                    for k in (r[f"__x{i}"] if spec.kind == TRIGRAM else [r[f"__x{i}"]])
+                    if k is not None
+                }
+                rows = [{"key": k, "__file_id": fid} for k, fid in pairs]
+                keys = [k for k, _ in pairs]
+                lo, hi = (min(keys), max(keys)) if keys else (None, None)
+            else:
+                names = self._posting_schema(spec).names
+                post = src.select([*spec.member_columns, "__file_id"]).rename_columns(names)
+                # distinct in Python: pyarrow's multi-key group_by can split
+                # one all-null key into several groups
+                distinct = {
+                    tuple(repr(v) if isinstance(v, float) else v for v in r.values()): r
+                    for r in post.to_pylist()
+                }
+                rows = list(distinct.values())
+                lo, hi = self._min_max(src.column(spec.member_columns[0]))
+            part_rel = self._write_index_part(spec, rows)
+            if part_rel is not None and spec.kind != BLOOM:
+                self._set_part_range(spec, part_rel, lo, hi)
+
+    @staticmethod
+    def _min_max(values) -> tuple:
+        """Spark's ``min`` and ``max`` of the arrow column ``values``:
+        nulls skipped, NaN above every number (``pc.min_max`` skips it)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        mm = pc.min_max(values)
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if pa.types.is_floating(values.type) and pc.any(pc.is_nan(values)).as_py():
+            hi = float("nan")
+            lo = hi if lo is None else lo
+        return lo, hi
+
+    def _write_index_part(self, spec: IndexSpec, rows: list[dict]) -> str | None:
+        """Write one index part from its distinct posting ``rows`` (dicts of
+        the posting schema; ``key`` and ``__file_id`` for a bloom index)
+        with pyarrow; returns the part, or None for no rows. The posting
+        rows are sorted by the range key. A bloom index packs one bitset
+        per file here with :func:`_bloom_positions_py`, the probe's
+        bit-identical hash."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if not rows:
+            return None
+        if spec.kind == BLOOM:
+            m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
+            bits: dict[int, bytearray] = {}
+            for r in rows:
+                b = bits.setdefault(r["__file_id"], bytearray(m_bits // 8))
+                for p in _bloom_positions_py(r["key"], m_bits, k):
+                    b[p >> 3] |= 1 << (p & 7)
+            table = pa.table({
+                "__file_id": pa.array(list(bits), pa.int32()),
+                "bloom": pa.array([bytes(b) for b in bits.values()], pa.binary()),
+            })
+        else:
+            schema = self._posting_schema(spec)
+            rkey = schema.names[0]
+            rows.sort(key=lambda d: (d[rkey] is None, d[rkey]))
+            table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        part_rel = self._part_rel(spec)
+        self._write_arrow(part_rel, table)
+        spec.parts.append(part_rel)
+        return part_rel
 
     def _append_postings(self, spec: IndexSpec, src: DataFrame, n_rows: int) -> None:
         """Distributed posting build of one index for a batch of ``n_rows``
@@ -1728,15 +1829,19 @@ class Store:
         import base64
 
         if part_rel is not None:
-            lo, hi = st[f"__lo{suffix}"], st[f"__hi{suffix}"]
-            if self._stats_ok(lo) and self._stats_ok(hi):
-                spec.part_stats[part_rel] = [self._stats_val(lo), self._stats_val(hi)]
+            self._set_part_range(spec, part_rel, st[f"__lo{suffix}"], st[f"__hi{suffix}"])
         sk = st[f"__sk{suffix}"]
         if sk is not None:
             spec.ndv = int(st[f"__ndv{suffix}"])
             spec.sketch = base64.b64encode(bytes(sk)).decode()
         elif spec.sketch is None:
             spec.ndv = 0
+
+    def _set_part_range(self, spec: IndexSpec, part_rel: str, lo, hi) -> None:
+        """Record ``part_rel``'s range key [lo, hi] for probe pruning, when
+        both are :meth:`_stats_ok` values."""
+        if self._stats_ok(lo) and self._stats_ok(hi):
+            spec.part_stats[part_rel] = [self._stats_val(lo), self._stats_val(hi)]
 
     def _read_postings(self, spec: IndexSpec) -> DataFrame | None:
         if not spec.parts:
@@ -1794,6 +1899,13 @@ class Store:
         return ds.dataset(list(paths), schema=to_arrow_schema(schema), format=fmt).to_table(
             columns=columns, filter=pred
         )
+
+    def _write_arrow(self, rel: str, table, name: str = "part-00000.parquet") -> None:
+        """Write the arrow ``table`` as the parquet file ``name`` in the
+        Store-relative dir ``rel``, created when missing — the one
+        driver-side parquet writer (zero Spark jobs)."""
+        os.makedirs(self._abs(rel), exist_ok=True)
+        pq.write_table(table, os.path.join(self._abs(rel), name))
 
     def _probe_values(self, column: str, values: Sequence):
         """``values`` as a pyarrow array of ``column``'s type when a
@@ -1910,7 +2022,7 @@ class Store:
             elif isinstance(v, int) and isinstance(lo, float):
                 v = float(v)
             return not (lo > v or v > hi)
-        except (TypeError, OverflowError):
+        except (TypeError, ArithmeticError):  # a decimal probe meets a NaN bound
             return True
 
     _STATS_SAFE_ABS = float(2**52)  # beyond this, float64 can't hold ints exactly
@@ -1923,7 +2035,9 @@ class Store:
         Python loop over every file. Returns None (cached) when the
         column's stats can't be vectorized safely: mixed/boolean/exotic
         types, or numeric magnitudes past 2^52 where float64 rounding
-        could wrongly EXCLUDE a file (pruning must stay a superset)."""
+        could wrongly EXCLUDE a file (pruning must stay a superset). A
+        file with a NaN bound counts as one without stats, as in
+        :meth:`_may_hold`."""
         import numpy as np
 
         # key includes next_file_id and len(files), not just the version:
@@ -1950,7 +2064,9 @@ class Store:
         ok = True
         for i, f in enumerate(files):
             st = f.stats.get(name)
-            if not st or st[0] is None or st[1] is None:
+            if not st or st[0] is None or st[1] is None or st[0] != st[0] or st[1] != st[1]:
+                # no stats, or a NaN bound (Spark's writer records a NaN
+                # max when the file holds one), which proves nothing
                 continue
             lo, hi = st[0], st[1]
             k = None
@@ -2207,7 +2323,7 @@ class Store:
                         pred = None
                         for i, cond in enumerate(path.conds):
                             c = Condition(f"k{i}", cond.cmp).to_column(
-                                [f"k{j}" for j in range(len(path.conds))]
+                                self._posting_schema(path.index)
                             )
                             pred = c if pred is None else (pred & c)
                         # deduplicated here, not by a distinct() shuffle
@@ -2239,7 +2355,9 @@ class Store:
                         # deduplicated here, not by a distinct() shuffle
                         hit_ids = {
                             r["__file_id"]
-                            for r in post.filter(key_cond.to_column(["key"]))
+                            for r in post.filter(
+                                key_cond.to_column(self._posting_schema(path.index))
+                            )
                             .select("__file_id")
                             .collect()
                         }
@@ -2398,7 +2516,7 @@ class Store:
                 out._shortcut_live_rows = 0
             return out
         read = self._read_lookup(files) if conds else self._read_files(files)
-        df = read.filter(conjunction(conds, self.colnames))
+        df = read.filter(conjunction(conds, self.manifest.schema))
         out = df if with_rowid else df.drop(ROWID)
         if not conds:
             out._shortcut_live_rows = int(self.manifest.live_rows)
@@ -2502,11 +2620,16 @@ class Store:
             return self._empty()
         df = self._read_lookup(files).drop(ROWID)
         if len(keys) <= 1000:
-            # a float zero or NaN key takes its `eq` form (cmp.py): pushed
-            # down, an IN list skips row groups that hold only the other
-            # zero, or NaN
-            odd = [isinstance(k, float) and (k == 0.0 or k != k) for k in keys]
-            preds = [eq(name, k).to_column(self.colnames) for k, o in zip(keys, odd) if o]
+            # a float zero (an int zero on a float column too) or NaN key
+            # takes its `eq` form (cmp.py): pushed down, an IN list skips
+            # row groups that hold only the other zero, or NaN
+            floating = isinstance(
+                self.manifest.schema[name].dataType, (T.FloatType, T.DoubleType)
+            )
+            odd = [_float_zero(k, floating) or (isinstance(k, float) and k != k) for k in keys]
+            preds = [
+                eq(name, k).to_column(self.manifest.schema) for k, o in zip(keys, odd) if o
+            ]
             rest = [k for k, o in zip(keys, odd) if not o]
             if rest:
                 preds.append(self._in_literal(name, rest))
@@ -2679,6 +2802,14 @@ class Store:
           cached) and filters each read as a rowid literal, with no job;
           a bigger set is anti-joined, one broadcast job per read.
 
+        Candidate files the driver may read (:meth:`_driver_tables`: at
+        most ``DRIVER_INSERT_ROWS`` rows, driver column types, a bounded
+        tombstone set) are deleted from on the driver with no Spark job —
+        the reference's in-process delete (``src/lib.rs:140-169``); see
+        :meth:`_delete_driver`. Bigger candidate sets run Spark jobs: the
+        changelog write, and for copy-on-write the survivors' write and
+        their index job.
+
         Index ndv (the cost model's ``rows/ndv``, ``src/idx.rs:71-78``) is
         exact after inserts and after ``compact``, and an upper bound
         between compactions after deletes — the same for both
@@ -2689,10 +2820,10 @@ class Store:
         ``residual`` is the reference's arbitrary row closure
         (``src/lib.rs:149``): pass a Spark ``Column`` (preferred — stays
         JVM-side) or a Python callable over the row's cells (wrapped in a
-        row-at-a-time UDF; parity-only slow path).
+        row-at-a-time UDF; parity-only slow path, one job on either path).
         """
         conds = list(conds)
-        pred = conjunction(conds, self.colnames)
+        pred = conjunction(conds, self.manifest.schema)
         if residual is not None:
             if isinstance(residual, Column):
                 pred = pred & residual
@@ -2716,10 +2847,14 @@ class Store:
         # reading; counts and per-file attribution derive from the
         # written changelog (parquet footers + one tiny read), so the
         # job count over the big relation is unchanged.
-        small = self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS
         cdf_rel = os.path.join(
             "cdf", f"d{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
+        tables = self._driver_tables(candidates)
+        if tables is not None:
+            cols = self.colnames if residual is not None else self._cond_columns(conds)
+            return self._delete_driver(pred, cols, defer, candidates, tables, cdf_rel)
+        small = self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS
 
         if defer:
             vic = self._read_files(candidates).filter(pred)
@@ -2732,9 +2867,7 @@ class Store:
 
                 shutil.rmtree(self._abs(cdf_rel), ignore_errors=True)
                 return 0
-            victims_rel = os.path.join(
-                "tomb", f"t{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-            )
+            victims_rel = self._victims_rel()
             # tombstone rowids come from the tiny changelog, not a second
             # scan of the candidate files; small victim sets concatenate
             # DRIVER-SIDE with pyarrow (one file, ZERO Spark jobs — the
@@ -2749,20 +2882,12 @@ class Store:
                     for f in sorted(os.listdir(d))
                     if f.endswith(".parquet")
                 ]
-                os.makedirs(self._abs(victims_rel), exist_ok=True)
-                pq.write_table(
-                    pa.concat_tables(parts),
-                    os.path.join(self._abs(victims_rel), "part-0.parquet"),
-                )
+                self._write_arrow(victims_rel, pa.concat_tables(parts))
             else:
                 self.spark.read.schema(vic.schema).parquet(self._abs(cdf_rel)).select(
                     ROWID
                 ).write.parquet(self._abs(victims_rel))
-            self.manifest.tombstones.append(victims_rel)
-            self.manifest.tombstone_rows += n
-            self.manifest.pending_cdf = [cdf_rel]
-            self._commit()
-            return n
+            return self._commit_tombstones(victims_rel, n, cdf_rel)
 
         scan = self._read_files(candidates, with_meta=True)
         vic = scan.filter(pred).withColumnRenamed("__file_path", "__cdf_file")
@@ -2805,16 +2930,121 @@ class Store:
         affected_files = [f for f in self.manifest.files if f.id in affected]
 
         survivors = self._read_files(affected_files).filter(~pred)
-        batch_rel = os.path.join("data", f"d{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+        batch_rel = self._survivors_rel()
         survivors.write.parquet(self._abs(batch_rel))
+        self._swap_survivors(affected_files, batch_rel, cdf_rel)
+        return victims
 
+    def _cond_columns(self, conds: Sequence[Condition]) -> list[str]:
+        """The store columns ``conds`` read — each one's column and any
+        column operand — in schema order."""
+        names = set()
+        for c in conds:
+            names.add(c.resolve(self.colnames))
+            v = c.cmp.value
+            if v is not None and v.is_column:
+                names.add(self.colnames[v.payload] if isinstance(v.payload, int) else v.payload)
+        return [n for n in self.colnames if n in names]
+
+    def _victims_rel(self) -> str:
+        return os.path.join("tomb", f"t{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+
+    def _survivors_rel(self) -> str:
+        return os.path.join("data", f"d{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+
+    def _delete_driver(
+        self,
+        pred: Column,
+        cols: Sequence[str],
+        defer: bool,
+        candidates: Sequence[DataFile],
+        tables: list,
+        cdf_rel: str,
+    ) -> int:
+        """:meth:`delete_filter` over candidate files whose live rows are
+        on the driver (``tables``, one arrow table per file). Spark picks
+        the victims: ``pred`` filters a ``LocalRelation`` of ``__rowid``
+        and ``cols``, which ``ConvertToLocalRelation`` evaluates on the
+        driver with no job (a Python-callable residual still runs its UDF
+        job). pyarrow writes what the Spark path writes, in its schemas:
+        the changelog (with ``__cdf_file``, the file's absolute path, for
+        copy-on-write), the deferred tombstone part, and one survivor file
+        per affected file, its rows in their clustered order — none for a
+        file left empty. The survivors are indexed from the same tables."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        full = self._schema_with_rowid()
+        rel = self.spark.createDataFrame(
+            pa.concat_tables(tables).select([ROWID, *cols]),
+            schema=T.StructType([full[c] for c in (ROWID, *cols)]),
+        )
+        victims = pa.array(
+            [r[0] for r in rel.filter(pred).select(ROWID).collect()], pa.int64()
+        )
+        if not len(victims):
+            return 0
+        hits = [pc.is_in(t.column(ROWID), victims) for t in tables]
+        if defer:
+            gone = pa.concat_tables([t.filter(h) for t, h in zip(tables, hits)])
+            self._write_arrow(cdf_rel, gone)
+            victims_rel = self._victims_rel()
+            self._write_rowid_part(victims_rel, victims.to_pylist())
+            return self._commit_tombstones(victims_rel, len(victims), cdf_rel)
+        affected = [
+            (f, t, h) for f, t, h in zip(candidates, tables, hits) if pc.any(h).as_py()
+        ]
+        self._write_arrow(
+            cdf_rel,
+            pa.concat_tables(
+                [
+                    t.filter(h).append_column(
+                        "__cdf_file",
+                        pa.array([self._abs(f.path)] * pc.sum(h).as_py(), pa.string()),
+                    )
+                    for f, t, h in affected
+                ]
+            ),
+        )
+        survivors = [t.filter(pc.invert(h)) for _, t, h in affected]
+        survivors = [t for t in survivors if t.num_rows]
+        batch_rel = self._survivors_rel()
+        for i, t in enumerate(survivors):
+            self._write_arrow(batch_rel, t, f"part-{i:05d}.parquet")
+        self._swap_survivors(
+            [f for f, _, _ in affected], batch_rel if survivors else None, cdf_rel, survivors
+        )
+        return len(victims)
+
+    def _commit_tombstones(self, victims_rel: str, n: int, cdf_rel: str) -> int:
+        """Commit a deferred delete: the tombstone part ``victims_rel`` of
+        ``n`` rows and the changelog ``cdf_rel``; returns ``n``."""
+        self.manifest.tombstones.append(victims_rel)
+        self.manifest.tombstone_rows += n
+        self.manifest.pending_cdf = [cdf_rel]
+        self._commit()
+        return n
+
+    def _swap_survivors(
+        self,
+        affected: Sequence[DataFile],
+        batch_rel: str | None,
+        cdf_rel: str,
+        survivors: list | None = None,
+    ) -> None:
+        """Commit a copy-on-write delete: retire the ``affected`` files,
+        register the survivor files under ``batch_rel`` (None: no
+        survivors) and index them — from ``survivors``, their arrow
+        tables in file-name order, when the driver holds them — with the
+        changelog ``cdf_rel``."""
+        ids = {f.id for f in affected}
+        kept = [f for f in self.manifest.files if f.id not in ids]
         # retiring files invalidates tombstone entries inside their rowid
         # ranges (the survivors were written from the tombstone-filtered
         # read, so those rowids no longer exist anywhere) — consolidate the
         # tombstone set to keep the manifest invariant: every tombstoned
         # rowid lies in a live file, and tombstone_rows is an exact
         # live-row correction.
-        kept = [f for f in self.manifest.files if f.id not in affected]
         if self.manifest.tombstones:
             # A rowid range alone does not decide membership: file rowid
             # ranges can overlap (compact(sort_by=<non-rowid col>)
@@ -2823,15 +3053,13 @@ class Store:
             # sentinel). A raw — deliberately tombstone-unfiltered — read of
             # the retired files' rowid column is the exact set of rowids
             # that just ceased to exist; only tombstones outside it survive.
-            raw_affected = self.spark.read.schema(f"{ROWID} long").parquet(
-                *[self._abs(f.path) for f in affected_files]
-            )
-            ids = self._tomb_ids()
-            if ids is None:
-                remaining = self._tombstone_df().join(raw_affected, ROWID, "left_anti")
-                keep_rel = os.path.join(
-                    "tomb", f"t{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                )
+            rowid_schema = T.StructType([T.StructField(ROWID, T.LongType())])
+            paths = [self._abs(f.path) for f in affected]
+            tomb = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
+            if tomb is None:
+                raw = self.spark.read.schema(rowid_schema).parquet(*paths)
+                remaining = self._tombstone_df().join(raw, ROWID, "left_anti")
+                keep_rel = self._victims_rel()
                 remaining.write.parquet(self._abs(keep_rel))
                 n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
                 self.manifest.tombstones = [keep_rel] if n_keep else []
@@ -2841,27 +3069,30 @@ class Store:
                 # retired file's range stay. An id inside one that no kept
                 # file's range covers is gone — it lies in SOME live file
                 # (the manifest invariant), so in a retired one. Only ids
-                # in overlapping ranges need the membership collect.
-                cand = self._ids_in_files(ids, affected_files)
+                # in overlapping ranges need the membership read (pyarrow,
+                # the retired files' rowid column, no job).
+                import pyarrow as pa
+                import pyarrow.compute as pc
+
+                cand = self._ids_in_files(tomb, affected)
                 shared = self._ids_in_files(cand, kept)
                 gone = set(cand).difference(shared)
                 if shared:
-                    hit = raw_affected.filter(self._in_literal(ROWID, shared)).collect()
-                    gone.update(r[0] for r in hit)
+                    hit = pc.is_in(pc.field(ROWID), pa.array(shared, pa.int64()))
+                    gone.update(self._arrow_read(paths, rowid_schema, hit)[ROWID].to_pylist())
                 if gone:
-                    self._set_tombstones([i for i in ids if i not in gone], "t")
+                    self._set_tombstones([i for i in tomb if i not in gone], "t")
 
         self.manifest.files = kept
-        new_files = self._register_files(batch_rel)
+        new_files = self._register_files(batch_rel) if batch_rel else []
         # un-index: dead file ids drop out of the live set (posting rows that
         # reference them are filtered at read; src/lib.rs:164-168 analogue),
         # and the survivors' new files are indexed incrementally — their
         # keys are already in every sketch, so ndv stays an upper bound
         # until compact (the deferred delete's contract)
-        self._index_files(list(self.manifest.indices.values()), new_files)
+        self._index_files(list(self.manifest.indices.values()), new_files, survivors)
         self.manifest.pending_cdf = [cdf_rel]
         self._commit()
-        return victims
 
     # -- maintenance --------------------------------------------------------
 
@@ -3670,9 +3901,7 @@ class Store:
                 batch_rel = os.path.join(
                     "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                 )
-                out_dir = self._abs(batch_rel)
-                os.makedirs(out_dir, exist_ok=True)
-                pq.write_table(table, os.path.join(out_dir, "part-00000.parquet"))
+                self._write_arrow(batch_rel, table)
                 self._register_and_index(batch_rel)
             if n_ins:
                 self.manifest.rowid = max(self.manifest.rowid, max(ins_ids) + 1)
@@ -3696,11 +3925,7 @@ class Store:
         the Spark writer's single-column ``__rowid long`` schema."""
         import pyarrow as pa
 
-        os.makedirs(self._abs(rel), exist_ok=True)
-        pq.write_table(
-            pa.table({ROWID: pa.array(rowids, type=pa.int64())}),
-            os.path.join(self._abs(rel), "part-00000.parquet"),
-        )
+        self._write_arrow(rel, pa.table({ROWID: pa.array(rowids, type=pa.int64())}))
 
     def _zorder_key(self, df: DataFrame, zcols: Sequence[str]) -> Column:
         """Interleaved-bit z-key over 2+ numeric columns: each value is

@@ -1816,24 +1816,43 @@ def _fail_deferred_delete(st, monkeypatch, boom):
     st.delete([eq(0, "k5")], defer=True)
 
 
+def _fail_cow_register(st, monkeypatch, boom):
+    monkeypatch.setattr(st, "_register_files", boom)  # survivors written
+    st.delete([eq(0, "k5")])
+
+
 def _fail_compact(st, monkeypatch, boom):
     monkeypatch.setattr(st, "_index_files", boom)  # file list already swapped
     st.compact(target_files=1)
 
 
 @pytest.mark.parametrize(
-    "fail",
-    [_fail_cow_delete, _fail_deferred_delete, _fail_compact],
-    ids=["cow_delete", "deferred_delete", "compact"],
+    "fail,bound",
+    [
+        pytest.param(fail, bound, id=name + ("_spark" if bound == 0 else ""))
+        for name, fail in [
+            ("cow_delete", _fail_cow_delete),
+            ("cow_register", _fail_cow_register),
+            ("deferred_delete", _fail_deferred_delete),
+        ]
+        for bound in (None, 0)
+    ]
+    + [pytest.param(_fail_compact, None, id="compact")],
 )
-def test_delete_and_compact_failure_restores_manifest(spark, store_path, monkeypatch, fail):
+def test_delete_and_compact_failure_restores_manifest(
+    spark, store_path, monkeypatch, fail, bound
+):
     """A delete or compaction that fails before its commit leaves the
     handle as it was: the on-disk manifest is untouched, the handle's
     row count is the on-disk one, and a later insert on the same handle
-    does not carry the failed write into its commit."""
+    does not carry the failed write into its commit. The deletes run on
+    the driver path and, with ``DRIVER_INSERT_ROWS`` at 0, on the Spark
+    path."""
     from shortcut_spark.manifest import Manifest
 
     st = Store.create(spark, store_path, 2)
+    if bound is not None:
+        st.DRIVER_INSERT_ROWS = bound
     st.index(0, "hash")
     for lo in (0, 5):
         st.insert([(f"k{i}", str(i)) for i in range(lo, lo + 5)])
@@ -2306,9 +2325,11 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     the few rows it leaves, so a point find, a btree range find, a miss
     the postings rule out and ``explain_find`` take no job; a find whose
     files hold more than ``DRIVER_INSERT_ROWS`` rows is one Spark scan. A
-    1-row copy-on-write delete runs the changelog write, the survivors'
-    write and one fused index job, and a deferred delete the changelog
-    write. A deferred delete leaves the floors where they were: the
+    1-row delete from one small file takes no job with either strategy:
+    Spark picks the victim from a driver-read ``LocalRelation`` and
+    pyarrow writes the changelog, the tombstone part, the survivors and
+    their postings; over a lowered ``DRIVER_INSERT_ROWS`` both deletes run
+    Spark jobs. A deferred delete leaves the floors where they were: the
     tombstone set is read on the driver and filters reads with no
     broadcast job."""
     st = _two_index_store(spark, str(tmp_path / "s"))
@@ -2328,21 +2349,29 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     assert [r["k"] for r in rows] == [7] and jobs == 0  # one 50-row file
     del st.DRIVER_INSERT_ROWS
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 8)]))
-    assert n == 1 and jobs <= 3
+    assert n == 1 and jobs == 0
     # k=8 lies inside every file's key range: only the postings rule it out
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 8)]).collect())
     assert rows == [] and jobs == 0
     assert rows_of(st.find([eq("k", 9)])) == [(9, 4.5, "s2")]
     # after a deferred delete (k=13 lives in the file of batch 1)
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 13)], defer=True))
-    assert n == 1 and jobs == 1
+    assert n == 1 and jobs == 0
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
     assert [r["k"] for r in rows] == [7] and jobs == 0
     assert st.find([eq("k", 13)]).count() == 0
     n, jobs = _jobs(spark, lambda: st.delete([eq("k", 14)]))
-    assert n == 1 and jobs <= 3
+    assert n == 1 and jobs == 0
     assert st.manifest.tombstone_rows == 1 and len(st) == 397
     assert st.find([eq("k", 13)]).count() == 0
+    # one 50-row candidate file over a bound of 49: the Spark path
+    st.DRIVER_INSERT_ROWS = 49
+    for k, defer in ((15, False), (16, True)):
+        n, jobs = _jobs(spark, lambda: st.delete([eq("k", k)], defer=defer))
+        assert n == 1 and jobs >= 1, defer
+    del st.DRIVER_INSERT_ROWS
+    assert st.manifest.tombstone_rows == 2 and len(st) == 395
+    assert st.find([eq("k", 15)]).count() == st.find([eq("k", 16)]).count() == 0
 
 
 def _scratch_sketch(spark, st, column):
