@@ -340,12 +340,16 @@ class Manifest:
                     f"concurrent commit detected: CURRENT is v{on_disk}, "
                     f"this writer loaded v{self.version}"
                 )
-        self.version += 1
-        self.committed_at = time.time()
+        # everything the commit changes on this object is computed in
+        # locals and assigned only after CURRENT flips: a failure anywhere
+        # before (a write error, a refused flip) leaves the manifest as it
+        # was, so "version moved" means exactly "committed"
+        version = self.version + 1
+        committed_at = time.time()
         os.makedirs(mdir, exist_ok=True)
 
         def _write_part(chunk: list, k: int) -> dict:
-            name = f"v{self.version}-files-p{k}.json"
+            name = f"v{version}-files-p{k}.json"
             ptmp = os.path.join(mdir, name + ".tmp")
             with open(ptmp, "w") as fh:
                 json.dump([f.to_json() for f in chunk], fh)
@@ -359,7 +363,8 @@ class Manifest:
                 "stats": _agg_part_stats(chunk),
             }
 
-        if isinstance(self.files, PartedFileList):
+        parted = isinstance(self.files, PartedFileList)
+        if parted:
             # Iceberg-style PART REUSE — the append-only fast path (any
             # mutation materializes `files` to a plain list and takes the
             # full-split branch below): existing parts are referenced
@@ -376,8 +381,6 @@ class Manifest:
                 parts_meta.append(_write_part(chunk, len(parts_meta)))
             d["files"] = [f.to_json() for f in tail]
             d["file_parts"] = parts_meta
-            pf._meta = parts_meta
-            pf.tail = tail
         else:
             d = self.to_json()
             if len(d["files"]) > MANIFEST_PART_SIZE:
@@ -395,6 +398,8 @@ class Manifest:
                     parts_meta.append(_write_part(chunk, k // MANIFEST_PART_SIZE))
                 d["files"] = []
                 d["file_parts"] = parts_meta
+        d["version"] = version
+        d["committed_at"] = committed_at
         # the version being written records the deletes ITS commit staged
         # (pending_cdf), not the predecessor's record that to_json_meta
         # carries; staging then resets to the no-deletes default so an
@@ -403,15 +408,20 @@ class Manifest:
         d["cdf_deletes"] = (
             None if self.pending_cdf is None else list(self.pending_cdf)
         )
-        self.cdf_deletes = d["cdf_deletes"]
-        self.pending_cdf = []
-        mpath = os.path.join(mdir, f"v{self.version}.json")
+        mpath = os.path.join(mdir, f"v{version}.json")
         tmp = mpath + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(d, fh, indent=1)
         os.replace(tmp, mpath)
         cur_tmp = os.path.join(mdir, "CURRENT.tmp")
         with open(cur_tmp, "w") as fh:
-            fh.write(str(self.version))
+            fh.write(str(version))
         os.replace(cur_tmp, os.path.join(mdir, "CURRENT"))
+        self.version = version
+        self.committed_at = committed_at
+        self.cdf_deletes = d["cdf_deletes"]
+        self.pending_cdf = []
+        if parted:
+            pf._meta = parts_meta
+            pf.tail = tail
         return self

@@ -319,35 +319,22 @@ class MatView:
                     # stable_input: rows is the materialized cut, so the
                     # merge's insert skips its own re-checkpoint (r9 — one
                     # fewer materialization job per refresh). The view's new
-                    # base_version is STAGED as a manifest prop before the
-                    # merge, so it persists inside the merge's one atomic
-                    # manifest flip (r12, the stream_epoch pattern): state
-                    # and version can never be durable separately.
+                    # base_version is STAGED as a manifest prop in the same
+                    # transaction as the merge, so it persists inside the
+                    # merge's one atomic manifest flip (r12, the stream_epoch
+                    # pattern) and a failed merge takes it back: state and
+                    # version can never be durable separately.
                     # micro_batch rides the SAME driver-side bound as the
                     # static compile: the state upsert then lands in one
                     # write job with footer-read counts (no counts pass).
-                    self.state.manifest.props["mv_base_version"] = str(cur)
-                    n_groups, _ = self.state.merge(
-                        rows, on=_GK, stable_input=True, micro_batch=small
-                    )
-                except BaseException:
-                    # merge rolled back (manifest restored / staged entry
-                    # unstaged) — drop the staged prop so a later unrelated
-                    # commit cannot carry a version the state never reached
-                    if (
-                        self.state.manifest.props.get("mv_base_version")
-                        == str(cur)
-                    ):
-                        prev = self.base_version
-                        self.state.manifest.props["mv_base_version"] = str(prev)
-                    raise
+                    with self.state._txn():
+                        self.state.manifest.props["mv_base_version"] = str(cur)
+                        n_groups, _ = self.state.merge(
+                            rows, on=_GK, stable_input=True, micro_batch=small
+                        )
                 finally:
                     rows.unpersist()
                 self.base_version = cur
-                if self.state.manifest.props.get("mv_base_version") != str(cur):
-                    # belt-and-braces: a merge path that did not commit (e.g.
-                    # an empty batch) still durably advances via the JSON
-                    self._save_meta()
         finally:
             for k, v in saved.items():
                 sc.setLocalProperty(k, v)

@@ -42,6 +42,7 @@ keeps the same information.
 from __future__ import annotations
 
 import bisect
+import contextlib
 import functools
 import json
 import os
@@ -90,31 +91,6 @@ def _bloom_positions_expr(column: str, m_bits: int, k: int) -> Column:
     )
 
 
-def _restores_on_failure(method):
-    """Make a Store mutation all-or-nothing on its handle. A failure
-    anywhere before the commit leaves the IN-MEMORY manifest polluted:
-    data files registered or retired, rowid/next_file_id advanced,
-    posting parts appended, tombstones staged — and a LATER successful
-    commit on the same handle would durably persist the half-done write
-    (an insert's rows, a delete's survivors without its changelog, a
-    compaction's empty file list). The durable truth is the on-disk
-    manifest, so the wrapper restores it wholesale; orphan parquet the
-    failed attempt wrote is inert and vacuumable. A failure AFTER the
-    commit (version moved) keeps the committed state."""
-
-    @functools.wraps(method)
-    def run(self, *args, **kwargs):
-        v_before = self.manifest.version
-        try:
-            return method(self, *args, **kwargs)
-        except BaseException:
-            if self.manifest.version == v_before:
-                self._restore_manifest_from_disk(version=v_before)
-            raise
-
-    return run
-
-
 def _default_schema(cols: int) -> T.StructType:
     """``Store::new(cols)`` has positional, homogeneously-typed columns
     (``src/lib.rs:4-5,80-87``); default them to strings named c0..cN-1."""
@@ -150,6 +126,9 @@ class Store:
         self._stats_np: dict[tuple, tuple] = {}
         # (tombstone dirs, their sorted rowids) of the last _tomb_ids read
         self._tomb_cache: tuple[tuple, list[int]] = ((), [])
+        # the open _txn, and whether its body staged a change to commit
+        self._txn_open = False
+        self._staged = False
 
     POSTING_MAP_MAX = 2_000_000
 
@@ -209,8 +188,9 @@ class Store:
         if not name or "/" in name:
             raise ValueError(f"bad tag name {name!r}")
         v = self.manifest.version if version is None else int(version)
-        self.manifest.props[f"tag:{name}"] = str(v)
-        self._commit()
+        with self._txn():
+            self.manifest.props[f"tag:{name}"] = str(v)
+            self._staged = True
         return v
 
     @classmethod
@@ -544,51 +524,6 @@ class Store:
         finally:
             tagged.unpersist()
 
-    def _restore_manifest_from_disk(self, version: int | None = None) -> None:
-        """Reset the in-memory manifest to the snapshot this handle held
-        BEFORE the failed mutation — ``version`` pins it (v{N}.json is
-        still on disk). Loading CURRENT unconditionally would silently
-        fast-forward a handle opened at an older snapshot (``open(
-        version=...)``, ``as_of``, tag) to the newest committed version
-        when a write on it fails, so subsequent reads on the same handle
-        would see different data than before the failed write. For a
-        head handle ``version`` equals CURRENT and nothing changes.
-        Session-scoped custom indexer objects are carried over (they are
-        not serializable — reopen semantics); every version-keyed cache
-        is dropped (entries may reference posting parts staged by the
-        failed attempt).
-
-        If the pinned v{N}.json was vacuumed between opening this handle
-        and the failed write, fall back to loading CURRENT rather than
-        letting FileNotFoundError mask the original write error (r8
-        ADVICE): the handle fast-forwards in that narrow
-        vacuumed-under-a-pinned-handle race, which is the same state a
-        reopen would see — and strictly better than swallowing the real
-        failure."""
-        customs = {
-            c: s.custom
-            for c, s in self.manifest.indices.items()
-            if s.custom is not None
-        }
-        try:
-            self.manifest = Manifest.load(self.path, version=version)
-        except FileNotFoundError:
-            self.manifest = Manifest.load(self.path)
-        for c, cu in customs.items():
-            if c in self.manifest.indices:
-                self.manifest.indices[c].custom = cu
-        for key in list(self._posting_cache):
-            try:
-                self._posting_cache[key].unpersist()
-            except Exception:
-                pass
-            del self._posting_cache[key]
-        self._posting_maps.clear()
-        self._bloom_maps.clear()
-        self._bloom_fetched.clear()
-        self._stats_np.clear()
-        self._tomb_cache = ((), [])
-
     # literal (Python-list) batches at or below this many rows insert
     # entirely on the driver: constraint checks in plain Python, rowids by
     # list position, one pyarrow-written file, footer-based registration —
@@ -640,7 +575,6 @@ class Store:
                 return v.replace(tzinfo=_dt.timezone.utc)
         return v
 
-    @_restores_on_failure
     def _insert_rows_driver(
         self, data: list[tuple], schema: T.StructType
     ) -> int | None:
@@ -700,10 +634,7 @@ class Store:
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
         self._write_arrow(batch_rel, table)
-        self._register_and_index(batch_rel)
-        self.manifest.rowid = watermark + n
-        self._commit()
-        return n
+        return self._append_batch(batch_rel, n)
 
     def _enforce_constraints_rows(self, data: list[tuple]) -> None:
         """Pure-Python twin of :meth:`_enforce_constraints` for literal
@@ -798,7 +729,6 @@ class Store:
                     return v
         return False
 
-    @_restores_on_failure
     def _insert_tagged_micro(
         self, df: DataFrame, schema: T.StructType, watermark: int
     ) -> int:
@@ -826,10 +756,7 @@ class Store:
 
             shutil.rmtree(self._abs(batch_rel), ignore_errors=True)
             return 0
-        self._register_and_index(batch_rel)
-        self.manifest.rowid = watermark + n
-        self._commit()
-        return n
+        return self._append_batch(batch_rel, n)
 
     # batches at or below this many rows compile their write + posting
     # build STATICALLY (AQE off, shuffle partitions derived from the
@@ -840,7 +767,6 @@ class Store:
     # bound keep AQE (skew splits / coalescing earn their jobs there).
     STATIC_INSERT_ROWS = 10_000_000
 
-    @_restores_on_failure
     def _insert_tagged(
         self,
         tagged: DataFrame,
@@ -917,10 +843,7 @@ class Store:
 
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         self._cluster_batch(with_id, n).write.parquet(self._abs(batch_rel))
-        self._register_and_index(batch_rel)
-        self.manifest.rowid = watermark + n
-        self._commit()
-        return n
+        return self._append_batch(batch_rel, n)
 
     def _cluster_batch(self, with_id: DataFrame, n: int) -> DataFrame:
         """Partition a rowid-tagged batch for writing: size files, and honor
@@ -969,6 +892,15 @@ class Store:
                 return list(s.member_columns)
         return []
 
+    def _append_batch(self, batch_rel: str, n: int) -> int:
+        """Commit the ``n`` freshly-written rows under ``batch_rel`` as the
+        next rowids — the shared tail of the three insert paths."""
+        with self._txn():
+            self._register_and_index(batch_rel)
+            self.manifest.rowid += n
+            self._staged = True
+        return n
+
     def _register_and_index(self, batch_rel: str) -> list["DataFile"]:
         """Register freshly-written batch files and add them to every
         index — the shared epilogue of ``insert`` and ``apply_changes``."""
@@ -1002,8 +934,9 @@ class Store:
         cons = self._constraints()
         if (name, kind) not in cons:
             cons.append((name, kind))
-            self.manifest.props["constraints"] = json.dumps(cons)
-            self._commit()
+            with self._txn():
+                self.manifest.props["constraints"] = json.dumps(cons)
+                self._staged = True
 
     def drop_constraint(self, column: int | str, kind: str) -> None:
         name = self.colnames[column] if isinstance(column, int) else column
@@ -1011,8 +944,9 @@ class Store:
         if (name, kind) not in cons:
             raise ValueError(f"no {kind!r} constraint on {name!r}")
         cons.remove((name, kind))
-        self.manifest.props["constraints"] = json.dumps(cons)
-        self._commit()
+        with self._txn():
+            self.manifest.props["constraints"] = json.dumps(cons)
+            self._staged = True
 
     def _constraints(self) -> list:
         raw = self.manifest.props.get("constraints")
@@ -1091,9 +1025,11 @@ class Store:
 
         Mechanics: victims are staged as a merge-on-read tombstone (cost ∝
         victims; the key-membership scan is column-pruned to (rowid, key)),
-        the staged tombstone list rides in the insert's own commit. If
-        anything fails before that commit, the on-disk manifest is
-        untouched (the orphan tombstone file is inert and vacuumable).
+        and the tombstone and the insert commit together in one
+        :meth:`_txn` — also when the batch is empty and only victims
+        change. If anything fails before that commit, the on-disk
+        manifest is untouched (the orphan tombstone file is inert and
+        vacuumable).
         The batch is appended as-is — duplicate keys WITHIN the batch are
         all inserted, like ``insert``. NULL keys follow SQL join
         semantics: a NULL-keyed batch row never matches an existing
@@ -1127,79 +1063,117 @@ class Store:
                 ).distinct()
             )
         n_staged = 0
-        if self.manifest.files:
-            # no broadcast hint: a typical upsert batch is small and AQE
-            # broadcasts it on its own; a bulk-load-sized batch must be
-            # free to shuffle instead of OOMing the driver
-            victims = (
-                self._read_files(self.manifest.files)
-                .select(ROWID, name)
-                .join(keys, name, "left_semi")
-                .select(ROWID)
-            )
-            if self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS:
-                # micro-store merge (matview state, streaming dimension
-                # upserts): victims ≤ live_rows ≤ the driver-build bound,
-                # so the tombstone takes the single-file micro-batch
-                # layout — one write task, one file, no 32-way fan-out
-                # of a handful of rowids (r12, the _cluster_batch n=1
-                # precedent applied to the merge's staging write)
-                victims = victims.coalesce(1)
-            victims_rel = os.path.join(
-                "tomb", f"m{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-            )
-            victims.write.parquet(self._abs(victims_rel))
-            # staged-row count from the freshly-written parquet footers
-            # (metadata-only, like _register_files) — the read-back
-            # .count() this replaces cost one Spark job per merge, which
-            # dominates micro-batch upserts (matview refresh, streaming
-            # merge_on ingestion)
-            n_staged = self._parquet_rows(victims_rel)
-            if n_staged:
-                # staged in memory only — the insert's commit makes both
-                # the tombstone and the new data visible atomically
-                self.manifest.tombstones.append(victims_rel)
-                self.manifest.tombstone_rows += n_staged
-                # the victim probe is column-pruned to (rowid, key) and
-                # never materializes full rows, so merge victims are NOT
-                # changelogged — mark the commit accordingly and let a
-                # CDC window crossing it take the snapshot-diff fallback
-                self.manifest.pending_cdf = None
-            else:
-                import shutil
+        with self._txn():
+            if self.manifest.files:
+                # no broadcast hint: a typical upsert batch is small and AQE
+                # broadcasts it on its own; a bulk-load-sized batch must be
+                # free to shuffle instead of OOMing the driver
+                victims = (
+                    self._read_files(self.manifest.files)
+                    .select(ROWID, name)
+                    .join(keys, name, "left_semi")
+                    .select(ROWID)
+                )
+                if self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS:
+                    # micro-store merge (matview state, streaming dimension
+                    # upserts): victims ≤ live_rows ≤ the driver-build bound,
+                    # so the tombstone takes the single-file micro-batch
+                    # layout — one write task, one file, no 32-way fan-out
+                    # of a handful of rowids (r12, the _cluster_batch n=1
+                    # precedent applied to the merge's staging write)
+                    victims = victims.coalesce(1)
+                victims_rel = os.path.join(
+                    "tomb", f"m{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                )
+                victims.write.parquet(self._abs(victims_rel))
+                # staged-row count from the freshly-written parquet footers
+                # (metadata-only, like _register_files) — the read-back
+                # .count() this replaces cost one Spark job per merge, which
+                # dominates micro-batch upserts (matview refresh, streaming
+                # merge_on ingestion)
+                n_staged = self._parquet_rows(victims_rel)
+                if n_staged:
+                    # staged in memory only — the insert's commit makes both
+                    # the tombstone and the new data visible atomically
+                    self.manifest.tombstones.append(victims_rel)
+                    self.manifest.tombstone_rows += n_staged
+                    # the victim probe is column-pruned to (rowid, key) and
+                    # never materializes full rows, so merge victims are NOT
+                    # changelogged — mark the commit accordingly and let a
+                    # CDC window crossing it take the snapshot-diff fallback
+                    self.manifest.pending_cdf = None
+                    self._staged = True
+                else:
+                    import shutil
 
-                shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-        v_before = self.manifest.version
-        try:
+                    shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
             inserted = self.insert(
                 rows, stable_input=stable_input, micro_batch=micro_batch
             )
-        except BaseException:
-            # insert rejected the batch (constraint violation, bad schema,
-            # write failure) BEFORE committing. Unstage the tombstones so
-            # the next successful commit does not silently delete the
-            # victims of an upsert that never happened. Two sub-cases:
-            # a failure in insert's mutating tail already restored the
-            # whole manifest from disk (see insert), wiping the staged
-            # entry — then only the orphan tombstone dir remains to
-            # delete; a pre-mutation rejection (constraint/validation)
-            # leaves the staged entry in memory — unstage it here.
-            # Guarded on the manifest version: if the failure landed
-            # AFTER insert's commit (e.g. an interrupt in post-commit
-            # cache eviction), the on-disk manifest references the
-            # tombstone file and the merge IS durable — rolling back
-            # then would delete a committed file and corrupt every
-            # subsequent read.
-            if n_staged and self.manifest.version == v_before:
-                if victims_rel in self.manifest.tombstones:
-                    self.manifest.tombstones.remove(victims_rel)
-                    self.manifest.tombstone_rows -= n_staged
-                    self.manifest.pending_cdf = []
-                import shutil
-
-                shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-            raise
         return (inserted, n_staged)
+
+    @contextlib.contextmanager
+    def _txn(self):
+        """One all-or-nothing mutation of this handle, and the only code
+        that commits or rolls back the manifest (the reference's insert is
+        all-or-nothing, ``src/lib.rs:178-187``). A mutation stages its
+        change on ``self.manifest`` and sets ``self._staged``; the
+        outermost ``_txn`` commits once on a normal exit, if anything was
+        staged. A nested entry joins the open transaction, so ``merge``'s
+        victims and its insert, or a caller's staged prop and the write it
+        rides on, flip in one commit.
+
+        A failure before the flip leaves the in-memory manifest polluted:
+        data files registered or retired, rowid/next_file_id advanced,
+        posting parts appended, tombstones or props staged — and a later
+        commit on the same handle would persist the half-done write. The
+        durable truth is the on-disk manifest, so the handle reloads it;
+        parquet the failed attempt wrote is inert and vacuumable. The
+        reload is pinned to the version the handle held: loading CURRENT
+        would fast-forward a handle opened at an older snapshot (``open(
+        version=...)``, ``as_of``, a tag) to the newest commit, and its
+        reads would change under a failed write. If that version was
+        vacuumed meanwhile, the reload falls back to CURRENT — the state
+        a reopen would see — rather than let FileNotFoundError mask the
+        original error. A failure after the flip (the version moved)
+        keeps the committed state. The success path pays nothing for the
+        rollback."""
+        if self._txn_open:
+            yield
+            return
+        v_before = self.manifest.version
+        self._txn_open, self._staged = True, False
+        try:
+            yield
+            if self._staged:
+                self._commit()
+        except BaseException:
+            if self.manifest.version == v_before:
+                self._restore_manifest_from_disk(v_before)
+            raise
+        finally:
+            self._txn_open = self._staged = False
+
+    def _restore_manifest_from_disk(self, version: int) -> None:
+        """Reload the manifest as committed at ``version`` (CURRENT if that
+        file was vacuumed) for a failed :meth:`_txn`, keeping the
+        session-scoped custom indexer objects (not serializable — reopen
+        semantics) and dropping every version-keyed cache (entries may
+        reference posting parts the failed attempt staged)."""
+        customs = {
+            c: s.custom
+            for c, s in self.manifest.indices.items()
+            if s.custom is not None
+        }
+        try:
+            self.manifest = Manifest.load(self.path, version=version)
+        except FileNotFoundError:
+            self.manifest = Manifest.load(self.path)
+        for c, cu in customs.items():
+            if c in self.manifest.indices:
+                self.manifest.indices[c].custom = cu
+        self._evict_caches()
+        self._tomb_cache = ((), [])
 
     def _commit(self) -> None:
         """Commit the manifest and evict caches keyed to older versions —
@@ -1208,21 +1182,19 @@ class Store:
         (long-lived ingestion commits one version per micro-batch and
         would otherwise pin them forever)."""
         self.manifest.commit(self.path)
-        v = self.manifest.version
-        for key in [k for k in self._posting_cache if k[1] != v]:
+        self._evict_caches(self.manifest.version)
+
+    def _evict_caches(self, keep: int | None = None) -> None:
+        """Drop every (column, version)-keyed cache entry of a version other
+        than ``keep``, unpersisting posting DataFrames."""
+        for key in [k for k in self._posting_cache if k[1] != keep]:
             try:
-                self._posting_cache[key].unpersist()
+                self._posting_cache.pop(key).unpersist()
             except Exception:
                 pass
-            del self._posting_cache[key]
-        for key in [k for k in self._posting_maps if k[1] != v]:
-            del self._posting_maps[key]
-        for key in [k for k in self._bloom_maps if k[1] != v]:
-            del self._bloom_maps[key]
-        for key in [k for k in self._bloom_fetched if k[1] != v]:
-            del self._bloom_fetched[key]
-        for key in [k for k in self._stats_np if k[1] != v]:
-            del self._stats_np[key]
+        for cache in (self._posting_maps, self._bloom_maps, self._bloom_fetched, self._stats_np):
+            for key in [k for k in cache if k[1] != keep]:
+                del cache[key]
 
     def _tomb_rowid_range(self, rels: Sequence[str]) -> tuple[int, int]:
         """[min, max] rowid across the given tombstone staging dirs, from
@@ -1374,34 +1346,30 @@ class Store:
             spec = IndexSpec(
                 column=name, kind=COMPOSITE, custom=custom_indexer(indexer), columns=names
             )
+        elif isinstance(indexer, CompositeIndex):
+            return self.index(indexer.columns, indexer)
+        else:
+            kind = as_index_kind(indexer)
+            name = self.colnames[column] if isinstance(column, int) else column
+            if name not in self.colnames:
+                raise ValueError(f"no such column {name!r}")
+            params = dict(getattr(indexer, "params", None) or {})
+            if kind == BLOOM:
+                from .idx import BloomIndex
+
+                params = {**BloomIndex().params, **params}
+            if kind == TRIGRAM:
+                if not isinstance(self.manifest.schema[name].dataType, T.StringType):
+                    raise ValueError(f"trigram index requires a string column, not {name!r}")
+                params = {"n": 3, "ci": False, **params}
+            spec = IndexSpec(
+                column=name, kind=kind, custom=custom_indexer(indexer), params=params
+            )
+        with self._txn():
             if self.manifest.files:
                 self._index_files([spec], self.manifest.files)
             self.manifest.indices[name] = spec  # silent replace, parity :204
-            self._commit()
-            return
-        if isinstance(indexer, CompositeIndex):
-            return self.index(indexer.columns, indexer)
-
-        kind = as_index_kind(indexer)
-        name = self.colnames[column] if isinstance(column, int) else column
-        if name not in self.colnames:
-            raise ValueError(f"no such column {name!r}")
-        params = dict(getattr(indexer, "params", None) or {})
-        if kind == BLOOM:
-            from .idx import BloomIndex
-
-            params = {**BloomIndex().params, **params}
-        if kind == TRIGRAM:
-            if not isinstance(self.manifest.schema[name].dataType, T.StringType):
-                raise ValueError(f"trigram index requires a string column, not {name!r}")
-            params = {"n": 3, "ci": False, **params}
-        spec = IndexSpec(
-            column=name, kind=kind, custom=custom_indexer(indexer), params=params
-        )
-        if self.manifest.files:
-            self._index_files([spec], self.manifest.files)
-        self.manifest.indices[name] = spec  # silent replace, parity :204
-        self._commit()
+            self._staged = True
 
     def drop_index(self, column: int | str) -> None:
         """Remove the index on ``column`` (metadata commit; orphaned
@@ -1411,8 +1379,9 @@ class Store:
         name = self.colnames[column] if isinstance(column, int) else column
         if name not in self.manifest.indices:
             raise ValueError(f"no index on column {name!r}")
-        del self.manifest.indices[name]
-        self._commit()
+        with self._txn():
+            del self.manifest.indices[name]
+            self._staged = True
 
     def _index_files(
         self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list | None = None
@@ -2777,7 +2746,6 @@ class Store:
         tombstone path (see :meth:`delete_filter`)."""
         return self.delete_filter(conds, None, defer=defer)
 
-    @_restores_on_failure
     def delete_filter(
         self,
         conds: Sequence[Condition],
@@ -3019,10 +2987,11 @@ class Store:
     def _commit_tombstones(self, victims_rel: str, n: int, cdf_rel: str) -> int:
         """Commit a deferred delete: the tombstone part ``victims_rel`` of
         ``n`` rows and the changelog ``cdf_rel``; returns ``n``."""
-        self.manifest.tombstones.append(victims_rel)
-        self.manifest.tombstone_rows += n
-        self.manifest.pending_cdf = [cdf_rel]
-        self._commit()
+        with self._txn():
+            self.manifest.tombstones.append(victims_rel)
+            self.manifest.tombstone_rows += n
+            self.manifest.pending_cdf = [cdf_rel]
+            self._staged = True
         return n
 
     def _swap_survivors(
@@ -3037,62 +3006,63 @@ class Store:
         survivors) and index them — from ``survivors``, their arrow
         tables in file-name order, when the driver holds them — with the
         changelog ``cdf_rel``."""
-        ids = {f.id for f in affected}
-        kept = [f for f in self.manifest.files if f.id not in ids]
-        # retiring files invalidates tombstone entries inside their rowid
-        # ranges (the survivors were written from the tombstone-filtered
-        # read, so those rowids no longer exist anywhere) — consolidate the
-        # tombstone set to keep the manifest invariant: every tombstoned
-        # rowid lies in a live file, and tombstone_rows is an exact
-        # live-row correction.
-        if self.manifest.tombstones:
-            # A rowid range alone does not decide membership: file rowid
-            # ranges can overlap (compact(sort_by=<non-rowid col>)
-            # range-partitions by the sort column, interleaving rowids
-            # across files), and footer stats can be absent (the [-1,-1]
-            # sentinel). A raw — deliberately tombstone-unfiltered — read of
-            # the retired files' rowid column is the exact set of rowids
-            # that just ceased to exist; only tombstones outside it survive.
-            rowid_schema = T.StructType([T.StructField(ROWID, T.LongType())])
-            paths = [self._abs(f.path) for f in affected]
-            tomb = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
-            if tomb is None:
-                raw = self.spark.read.schema(rowid_schema).parquet(*paths)
-                remaining = self._tombstone_df().join(raw, ROWID, "left_anti")
-                keep_rel = self._victims_rel()
-                remaining.write.parquet(self._abs(keep_rel))
-                n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
-                self.manifest.tombstones = [keep_rel] if n_keep else []
-                self.manifest.tombstone_rows = n_keep
-            else:
-                # bounded set, decided on the driver: ids outside every
-                # retired file's range stay. An id inside one that no kept
-                # file's range covers is gone — it lies in SOME live file
-                # (the manifest invariant), so in a retired one. Only ids
-                # in overlapping ranges need the membership read (pyarrow,
-                # the retired files' rowid column, no job).
-                import pyarrow as pa
-                import pyarrow.compute as pc
+        with self._txn():
+            ids = {f.id for f in affected}
+            kept = [f for f in self.manifest.files if f.id not in ids]
+            # retiring files invalidates tombstone entries inside their rowid
+            # ranges (the survivors were written from the tombstone-filtered
+            # read, so those rowids no longer exist anywhere) — consolidate the
+            # tombstone set to keep the manifest invariant: every tombstoned
+            # rowid lies in a live file, and tombstone_rows is an exact
+            # live-row correction.
+            if self.manifest.tombstones:
+                # A rowid range alone does not decide membership: file rowid
+                # ranges can overlap (compact(sort_by=<non-rowid col>)
+                # range-partitions by the sort column, interleaving rowids
+                # across files), and footer stats can be absent (the [-1,-1]
+                # sentinel). A raw — deliberately tombstone-unfiltered — read of
+                # the retired files' rowid column is the exact set of rowids
+                # that just ceased to exist; only tombstones outside it survive.
+                rowid_schema = T.StructType([T.StructField(ROWID, T.LongType())])
+                paths = [self._abs(f.path) for f in affected]
+                tomb = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
+                if tomb is None:
+                    raw = self.spark.read.schema(rowid_schema).parquet(*paths)
+                    remaining = self._tombstone_df().join(raw, ROWID, "left_anti")
+                    keep_rel = self._victims_rel()
+                    remaining.write.parquet(self._abs(keep_rel))
+                    n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
+                    self.manifest.tombstones = [keep_rel] if n_keep else []
+                    self.manifest.tombstone_rows = n_keep
+                else:
+                    # bounded set, decided on the driver: ids outside every
+                    # retired file's range stay. An id inside one that no kept
+                    # file's range covers is gone — it lies in SOME live file
+                    # (the manifest invariant), so in a retired one. Only ids
+                    # in overlapping ranges need the membership read (pyarrow,
+                    # the retired files' rowid column, no job).
+                    import pyarrow as pa
+                    import pyarrow.compute as pc
 
-                cand = self._ids_in_files(tomb, affected)
-                shared = self._ids_in_files(cand, kept)
-                gone = set(cand).difference(shared)
-                if shared:
-                    hit = pc.is_in(pc.field(ROWID), pa.array(shared, pa.int64()))
-                    gone.update(self._arrow_read(paths, rowid_schema, hit)[ROWID].to_pylist())
-                if gone:
-                    self._set_tombstones([i for i in tomb if i not in gone], "t")
+                    cand = self._ids_in_files(tomb, affected)
+                    shared = self._ids_in_files(cand, kept)
+                    gone = set(cand).difference(shared)
+                    if shared:
+                        hit = pc.is_in(pc.field(ROWID), pa.array(shared, pa.int64()))
+                        gone.update(self._arrow_read(paths, rowid_schema, hit)[ROWID].to_pylist())
+                    if gone:
+                        self._set_tombstones([i for i in tomb if i not in gone], "t")
 
-        self.manifest.files = kept
-        new_files = self._register_files(batch_rel) if batch_rel else []
-        # un-index: dead file ids drop out of the live set (posting rows that
-        # reference them are filtered at read; src/lib.rs:164-168 analogue),
-        # and the survivors' new files are indexed incrementally — their
-        # keys are already in every sketch, so ndv stays an upper bound
-        # until compact (the deferred delete's contract)
-        self._index_files(list(self.manifest.indices.values()), new_files, survivors)
-        self.manifest.pending_cdf = [cdf_rel]
-        self._commit()
+            self.manifest.files = kept
+            new_files = self._register_files(batch_rel) if batch_rel else []
+            # un-index: dead file ids drop out of the live set (posting rows that
+            # reference them are filtered at read; src/lib.rs:164-168 analogue),
+            # and the survivors' new files are indexed incrementally — their
+            # keys are already in every sketch, so ndv stays an upper bound
+            # until compact (the deferred delete's contract)
+            self._index_files(list(self.manifest.indices.values()), new_files, survivors)
+            self.manifest.pending_cdf = [cdf_rel]
+            self._staged = True
 
     # -- maintenance --------------------------------------------------------
 
@@ -3144,18 +3114,19 @@ class Store:
         if version == self.manifest.version:
             return
         old = Manifest.load(self.path, version)  # raises if expired/unknown
-        cur = self.manifest
-        cur.files = list(old.files)
-        cur.tombstones = list(old.tombstones)
-        cur.tombstone_rows = old.tombstone_rows
-        cur.schema_json = old.schema_json
-        cur.indices = {c: s for c, s in old.indices.items()}
-        cur.rowid = max(cur.rowid, old.rowid)  # never reuse rowids
-        # a restore RESURRECTS rows (and may drop rows added since) —
-        # neither is expressible as a delete changelog, so the commit is
-        # non-changelogged and CDC windows crossing it diff snapshots
-        cur.pending_cdf = None
-        self._commit()
+        with self._txn():
+            cur = self.manifest
+            cur.files = list(old.files)
+            cur.tombstones = list(old.tombstones)
+            cur.tombstone_rows = old.tombstone_rows
+            cur.schema_json = old.schema_json
+            cur.indices = {c: s for c, s in old.indices.items()}
+            cur.rowid = max(cur.rowid, old.rowid)  # never reuse rowids
+            # a restore RESURRECTS rows (and may drop rows added since) —
+            # neither is expressible as a delete changelog, so the commit is
+            # non-changelogged and CDC windows crossing it diff snapshots
+            cur.pending_cdf = None
+            self._staged = True
 
     def vacuum(self, retain_versions: int = 1) -> int:
         """Garbage-collect files no longer referenced by the retained
@@ -3347,10 +3318,11 @@ class Store:
         schema = self.manifest.schema
         if name == ROWID or name in schema.fieldNames():
             raise ValueError(f"column {name!r} already exists or is reserved")
-        self.manifest.schema_json = T.StructType(
-            [*schema.fields, T.StructField(name, dtype, True)]
-        ).json()
-        self._commit()
+        with self._txn():
+            self.manifest.schema_json = T.StructType(
+                [*schema.fields, T.StructField(name, dtype, True)]
+            ).json()
+            self._staged = True
 
     def drop_column(self, name: str) -> None:
         """Schema evolution: remove a column — metadata-only; the bytes
@@ -3375,10 +3347,11 @@ class Store:
                 )
         if len(schema.fields) == 1:
             raise ValueError("cannot drop the last column")
-        self.manifest.schema_json = T.StructType(
-            [f for f in schema.fields if f.name != name]
-        ).json()
-        self._commit()
+        with self._txn():
+            self.manifest.schema_json = T.StructType(
+                [f for f in schema.fields if f.name != name]
+            ).json()
+            self._staged = True
 
     def _cdf_window_rels(
         self, old_version: int
@@ -3694,123 +3667,117 @@ class Store:
         if done is not None:
             return done
         delta = delta.persist()
-        # All in-memory manifest staging below is guarded by a snapshot:
-        # any failure (the collision guard, an IO error mid-write) restores
-        # the pre-delta manifest so a later unrelated _commit can never
-        # persist a rejected delta's staged deletes. Orphan parquet dirs
-        # left behind are inert and vacuumable, same as merge().
-        snapshot = Manifest.from_json(self.manifest.to_json())
+        # a rejected or failed apply leaves nothing staged (_txn); orphan
+        # parquet dirs it wrote are inert and vacuumable, same as merge()
         try:
-            ins = delta.filter(F.col("change_type") == "insert").select(
-                ROWID, *self.manifest.schema.fieldNames()
-            )
-            st = ins.agg(
-                F.count(F.lit(1)).alias("n"), F.min(ROWID).alias("lo"), F.max(ROWID).alias("hi")
-            ).collect()[0]
-            n_ins = int(st["n"] or 0)
-            # Legitimacy guard — runs BEFORE any manifest staging so a
-            # rejected delta leaves no state behind. An insert's rowid may
-            # sit below the follower watermark (a RESTORE on the leader
-            # resurrects old rowids — changes() emits them as inserts), so
-            # the check is COLLISION against the live set, not a watermark
-            # floor: a colliding rowid means the delta was applied twice or
-            # the follower took a local write. One semi-join on the
-            # column-pruned rowid scan; live set is empty on a fresh
-            # follower, so bootstrap pays nothing.
-            if n_ins and self.manifest.files:
-                live_ids = self.find([], with_rowid=True).select(ROWID)
-                n_clash = ins.select(ROWID).join(live_ids, ROWID, "left_semi").count()
-                if n_clash:
-                    raise ValueError(
-                        f"{n_clash} delta insert rowid(s) collide with live "
-                        "follower rows — the delta was applied twice, or the "
-                        "follower took a local write"
-                    )
-            # Resurrection via tombstone purge: a delta insert may carry a
-            # rowid this follower previously TOMBSTONED (leader deleted
-            # then RESTOREd across the window; changes() nets within-
-            # window, so the same delta never both deletes and inserts one
-            # rowid). The masked PHYSICAL copy still sits in a live file —
-            # rows are immutable (add/remove only), so a rowid always maps
-            # to the same content and un-masking it IS the resurrection;
-            # inserting a second physical copy would duplicate the rowid.
-            # Without the purge the insert path would also leave the row
-            # permanently masked (reads anti-join the whole tombstone set)
-            # — silent divergence from the leader. Consolidate the
-            # tombstone parts minus the delta's insert rowids in the SAME
-            # commit; rowids absent from the tombstone set (including
-            # resurrections whose masked copy was since compacted away)
-            # fall through to the physical-insert path below. Skipped
-            # entirely (one semi-join probe) when nothing is resurrected.
-            n_res = 0
-            ids = self._tomb_ids() if n_ins and self.manifest.tombstones else None
-            if ids is not None:
-                # bounded set: only tombstones inside the delta's insert
-                # rowid range can come back — one collect finds which
-                lo, hi = int(st["lo"]), int(st["hi"])
-                cand = ids[bisect.bisect_left(ids, lo) : bisect.bisect_right(ids, hi)]
-                res: set[int] = set()
-                if cand:
-                    hit = ins.select(ROWID).filter(self._in_literal(ROWID, cand)).collect()
-                    res = {r[0] for r in hit}
-                n_res = len(res)
-                if n_res:
-                    ins = ins.filter(~self._in_literal(ROWID, sorted(res)))
-                    self._set_tombstones([i for i in ids if i not in res], "p")
-            elif n_ins and self.manifest.tombstones:
-                tomb = self._tombstone_df()
-                ins_ids = ins.select(ROWID)
-                n_res = tomb.join(ins_ids, ROWID, "left_semi").count()
-                if n_res:
-                    keep_rel = os.path.join(
-                        "tomb", f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                    )
-                    tomb.join(ins_ids, ROWID, "left_anti").write.parquet(self._abs(keep_rel))
-                    n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
-                    # tomb lazily re-reads the OLD part paths (still on
-                    # disk) — safe to keep using after the manifest swap
-                    ins = ins.join(tomb, ROWID, "left_anti")
-                    self.manifest.tombstones = [keep_rel] if n_keep else []
-                    self.manifest.tombstone_rows = n_keep
-            n_del = 0
-            dels = delta.filter(F.col("change_type") == "delete").select(ROWID)
-            if self.manifest.files:
-                # semi-join against the live set keeps tombstone_rows an
-                # exact live-row correction even on a malformed delta
-                live = self.find([], with_rowid=True).select(ROWID)
-                victims_rel = os.path.join(
-                    "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+            with self._txn():
+                ins = delta.filter(F.col("change_type") == "insert").select(
+                    ROWID, *self.manifest.schema.fieldNames()
                 )
-                dels.join(live, ROWID, "left_semi").write.parquet(self._abs(victims_rel))
-                n_del = self._parquet_rows(victims_rel)  # footer-only, no job
-                if n_del:
-                    self.manifest.tombstones.append(victims_rel)
-                    self.manifest.tombstone_rows += n_del
-                else:
-                    import shutil
+                st = ins.agg(
+                    F.count(F.lit(1)).alias("n"), F.min(ROWID).alias("lo"), F.max(ROWID).alias("hi")
+                ).collect()[0]
+                n_ins = int(st["n"] or 0)
+                # Legitimacy guard — runs BEFORE any manifest staging so a
+                # rejected delta leaves no state behind. An insert's rowid may
+                # sit below the follower watermark (a RESTORE on the leader
+                # resurrects old rowids — changes() emits them as inserts), so
+                # the check is COLLISION against the live set, not a watermark
+                # floor: a colliding rowid means the delta was applied twice or
+                # the follower took a local write. One semi-join on the
+                # column-pruned rowid scan; live set is empty on a fresh
+                # follower, so bootstrap pays nothing.
+                if n_ins and self.manifest.files:
+                    live_ids = self.find([], with_rowid=True).select(ROWID)
+                    n_clash = ins.select(ROWID).join(live_ids, ROWID, "left_semi").count()
+                    if n_clash:
+                        raise ValueError(
+                            f"{n_clash} delta insert rowid(s) collide with live "
+                            "follower rows — the delta was applied twice, or the "
+                            "follower took a local write"
+                        )
+                # Resurrection via tombstone purge: a delta insert may carry a
+                # rowid this follower previously TOMBSTONED (leader deleted
+                # then RESTOREd across the window; changes() nets within-
+                # window, so the same delta never both deletes and inserts one
+                # rowid). The masked PHYSICAL copy still sits in a live file —
+                # rows are immutable (add/remove only), so a rowid always maps
+                # to the same content and un-masking it IS the resurrection;
+                # inserting a second physical copy would duplicate the rowid.
+                # Without the purge the insert path would also leave the row
+                # permanently masked (reads anti-join the whole tombstone set)
+                # — silent divergence from the leader. Consolidate the
+                # tombstone parts minus the delta's insert rowids in the SAME
+                # commit; rowids absent from the tombstone set (including
+                # resurrections whose masked copy was since compacted away)
+                # fall through to the physical-insert path below. Skipped
+                # entirely (one semi-join probe) when nothing is resurrected.
+                n_res = 0
+                ids = self._tomb_ids() if n_ins and self.manifest.tombstones else None
+                if ids is not None:
+                    # bounded set: only tombstones inside the delta's insert
+                    # rowid range can come back — one collect finds which
+                    lo, hi = int(st["lo"]), int(st["hi"])
+                    cand = ids[bisect.bisect_left(ids, lo) : bisect.bisect_right(ids, hi)]
+                    res: set[int] = set()
+                    if cand:
+                        hit = ins.select(ROWID).filter(self._in_literal(ROWID, cand)).collect()
+                        res = {r[0] for r in hit}
+                    n_res = len(res)
+                    if n_res:
+                        ins = ins.filter(~self._in_literal(ROWID, sorted(res)))
+                        self._set_tombstones([i for i in ids if i not in res], "p")
+                elif n_ins and self.manifest.tombstones:
+                    tomb = self._tombstone_df()
+                    ins_ids = ins.select(ROWID)
+                    n_res = tomb.join(ins_ids, ROWID, "left_semi").count()
+                    if n_res:
+                        keep_rel = os.path.join(
+                            "tomb", f"p{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                        )
+                        tomb.join(ins_ids, ROWID, "left_anti").write.parquet(self._abs(keep_rel))
+                        n_keep = self._parquet_rows(keep_rel)  # footer-only, no job
+                        # tomb lazily re-reads the OLD part paths (still on
+                        # disk) — safe to keep using after the manifest swap
+                        ins = ins.join(tomb, ROWID, "left_anti")
+                        self.manifest.tombstones = [keep_rel] if n_keep else []
+                        self.manifest.tombstone_rows = n_keep
+                n_del = 0
+                dels = delta.filter(F.col("change_type") == "delete").select(ROWID)
+                if self.manifest.files:
+                    # semi-join against the live set keeps tombstone_rows an
+                    # exact live-row correction even on a malformed delta
+                    live = self.find([], with_rowid=True).select(ROWID)
+                    victims_rel = os.path.join(
+                        "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                    )
+                    dels.join(live, ROWID, "left_semi").write.parquet(self._abs(victims_rel))
+                    n_del = self._parquet_rows(victims_rel)  # footer-only, no job
+                    if n_del:
+                        self.manifest.tombstones.append(victims_rel)
+                        self.manifest.tombstone_rows += n_del
+                    else:
+                        import shutil
 
-                    shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-            if n_ins - n_res > 0:
-                batch_rel = os.path.join(
-                    "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                )
-                self._cluster_batch(ins, n_ins - n_res).write.parquet(self._abs(batch_rel))
-                self._register_and_index(batch_rel)
-            if n_ins:
-                self.manifest.rowid = max(self.manifest.rowid, int(st["hi"]) + 1)
-            if n_ins or n_del:
-                if n_del or n_res:
-                    # the applied deletes were only materialized as rowids
-                    # (and a resurrection purge is not a delete at all) —
-                    # mark the commit non-changelogged; the follower's own
-                    # downstream CDC falls back to snapshot diffing across
-                    # it. Insert-only applications stay changelog-clean.
-                    self.manifest.pending_cdf = None
-                self._commit()
-            return n_ins, n_del
-        except BaseException:
-            self.manifest = snapshot
-            raise
+                        shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
+                if n_ins - n_res > 0:
+                    batch_rel = os.path.join(
+                        "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                    )
+                    self._cluster_batch(ins, n_ins - n_res).write.parquet(self._abs(batch_rel))
+                    self._register_and_index(batch_rel)
+                if n_ins:
+                    self.manifest.rowid = max(self.manifest.rowid, int(st["hi"]) + 1)
+                if n_ins or n_del:
+                    if n_del or n_res:
+                        # the applied deletes were only materialized as rowids
+                        # (and a resurrection purge is not a delete at all) —
+                        # mark the commit non-changelogged; the follower's own
+                        # downstream CDC falls back to snapshot diffing across
+                        # it. Insert-only applications stay changelog-clean.
+                        self.manifest.pending_cdf = None
+                    self._staged = True
+                return n_ins, n_del
         finally:
             delta.unpersist()
 
@@ -3839,58 +3806,44 @@ class Store:
         ins = [r for r in rows if r["change_type"] == "insert"]
         del_ids = {int(r[ROWID]) for r in rows if r["change_type"] == "delete"}
         n_ins = len(ins)
-        snapshot = Manifest.from_json(self.manifest.to_json())
-        try:
-            # follower rowid sets, footer/pyarrow-read (zero jobs)
-            all_ids: set[int] = set()
-            for f in self.manifest.files:
-                all_ids.update(
-                    pq.read_table(self._abs(f.path), columns=[ROWID])
-                    .column(ROWID)
-                    .to_pylist()
-                )
-            tomb = set(tomb_ids)
-            live = all_ids - tomb
-            ins_ids = {int(r[ROWID]) for r in ins}
-            if ins_ids and self.manifest.files:
-                n_clash = len(ins_ids & live)
-                if n_clash:
-                    raise ValueError(
-                        f"{n_clash} delta insert rowid(s) collide with live "
-                        "follower rows — the delta was applied twice, or the "
-                        "follower took a local write"
-                    )
-            # resurrection purge: un-mask tombstoned rowids the delta
-            # re-inserts (same commit); the rest insert physically
-            res_ids = ins_ids & tomb
-            n_res = len(res_ids)
-            if n_res:
-                self._set_tombstones(sorted(tomb - res_ids), "p")
-                ins = [r for r in ins if int(r[ROWID]) not in res_ids]
-            n_del = 0
-            if self.manifest.files:
-                victims = sorted(del_ids & live)
-                n_del = len(victims)
-                if n_del:
-                    victims_rel = os.path.join(
-                        "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                    )
-                    self._write_rowid_part(victims_rel, victims)
-                    self.manifest.tombstones.append(victims_rel)
-                    self.manifest.tombstone_rows += n_del
-            if ins:
-                import pyarrow as pa
-                from pyspark.sql.pandas.types import to_arrow_schema
+        # follower rowid sets, footer/pyarrow-read (zero jobs)
+        all_ids: set[int] = set()
+        for f in self.manifest.files:
+            all_ids.update(
+                pq.read_table(self._abs(f.path), columns=[ROWID])
+                .column(ROWID)
+                .to_pylist()
+            )
+        tomb = set(tomb_ids)
+        live = all_ids - tomb
+        ins_ids = {int(r[ROWID]) for r in ins}
+        n_clash = len(ins_ids & live)
+        if n_clash:
+            raise ValueError(
+                f"{n_clash} delta insert rowid(s) collide with live "
+                "follower rows — the delta was applied twice, or the "
+                "follower took a local write"
+            )
+        # resurrection purge: un-mask tombstoned rowids the delta
+        # re-inserts (same commit); the rest insert physically
+        res_ids = ins_ids & tomb
+        ins = [r for r in ins if int(r[ROWID]) not in res_ids]
+        victims = sorted(del_ids & live)
+        table = None
+        if ins:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
 
-                dts = [f.dataType for f in schema.fields]
+            dts = [f.dataType for f in schema.fields]
+            sort_cols = self._cluster_cols()
+            idxs = [names.index(c) + 1 for c in sort_cols]
+            try:
                 tuples = [
                     (int(r[ROWID]),)
                     + tuple(self._driver_cell(dt, r[c]) for dt, c in zip(dts, names))
                     for r in ins
                 ]
-                sort_cols = self._cluster_cols()
                 if sort_cols:
-                    idxs = [names.index(c) + 1 for c in sort_cols]
                     tuples.sort(
                         key=lambda t: tuple((t[i] is not None, t[i]) for i in idxs)
                     )
@@ -3898,6 +3851,22 @@ class Store:
                     [dict(zip([ROWID] + list(names), t)) for t in tuples],
                     schema=to_arrow_schema(self._schema_with_rowid()),
                 )
+            except (TypeError, pa_err.ArrowInvalid, pa_err.ArrowTypeError):
+                # un-orderable sort values or cells pyarrow cannot coerce the
+                # way the Spark writer would: nothing is staged yet — let the
+                # distributed path decide
+                return None
+        with self._txn():
+            if res_ids:
+                self._set_tombstones(sorted(tomb - res_ids), "p")
+            if victims:
+                victims_rel = os.path.join(
+                    "tomb", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+                )
+                self._write_rowid_part(victims_rel, victims)
+                self.manifest.tombstones.append(victims_rel)
+                self.manifest.tombstone_rows += len(victims)
+            if table is not None:
                 batch_rel = os.path.join(
                     "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                 )
@@ -3905,20 +3874,11 @@ class Store:
                 self._register_and_index(batch_rel)
             if n_ins:
                 self.manifest.rowid = max(self.manifest.rowid, max(ins_ids) + 1)
-            if n_ins or n_del:
-                if n_del or n_res:
+            if n_ins or victims:
+                if victims or res_ids:
                     self.manifest.pending_cdf = None
-                self._commit()
-            return n_ins, n_del
-        except (TypeError, pa_err.ArrowInvalid, pa_err.ArrowTypeError):
-            # un-orderable sort values or cells pyarrow cannot coerce the
-            # way the Spark writer would: nothing committed — restore the
-            # staging and let the distributed path decide
-            self.manifest = snapshot
-            return None
-        except BaseException:
-            self.manifest = snapshot
-            raise
+                self._staged = True
+        return n_ins, len(victims)
 
     def _write_rowid_part(self, rel: str, rowids: list[int]) -> None:
         """One-file tombstone part written driver-side (pyarrow), matching
@@ -4030,7 +3990,6 @@ class Store:
             return True
         return False
 
-    @_restores_on_failure
     def compact(
         self,
         target_files: int | None = None,
@@ -4079,15 +4038,16 @@ class Store:
         if zcols:
             out = out.drop("__z")
         out.write.parquet(self._abs(batch_rel))
-        self.manifest.files = []
-        # the rewrite materialized the tombstone anti-join — clear the
-        # merge-on-read state (compact IS the tombstone materialization job)
-        self.manifest.tombstones = []
-        self.manifest.tombstone_rows = 0
-        new_files = self._register_files(batch_rel)
-        for spec in self.manifest.indices.values():
-            spec.parts = []
-            spec.part_stats = {}
-            spec.sketch = None  # rebuilt from scratch: ndv exact again
-        self._index_files(list(self.manifest.indices.values()), new_files)
-        self._commit()
+        with self._txn():
+            self.manifest.files = []
+            # the rewrite materialized the tombstone anti-join — clear the
+            # merge-on-read state (compact IS the tombstone materialization job)
+            self.manifest.tombstones = []
+            self.manifest.tombstone_rows = 0
+            new_files = self._register_files(batch_rel)
+            for spec in self.manifest.indices.values():
+                spec.parts = []
+                spec.part_stats = {}
+                spec.sketch = None  # rebuilt from scratch: ndv exact again
+            self._index_files(list(self.manifest.indices.values()), new_files)
+            self._staged = True

@@ -880,16 +880,18 @@ def stream_into_store(
     def sink(batch_df: DataFrame, epoch: int) -> None:
         if epoch <= last_epoch:
             return  # replayed micro-batch: already committed
-        # stage the marker BEFORE insert: insert's manifest commit persists
-        # data + epoch atomically. An empty batch commits nothing — its
-        # replay is a harmless no-op, and the next non-empty commit carries
-        # the latest epoch forward.
-        store.manifest.props["stream_epoch"] = epoch
-        if merge_on is not None:
-            inserted, _replaced = store.merge(batch_df, on=merge_on)
-            ingested[0] += inserted
-        else:
-            ingested[0] += store.insert(batch_df)
+        # the marker and the write share one transaction: its commit
+        # persists data + epoch atomically, and a failed write takes the
+        # marker back. An empty batch commits nothing — its replay is a
+        # harmless no-op, and the next non-empty commit carries the latest
+        # epoch forward.
+        with store._txn():
+            store.manifest.props["stream_epoch"] = epoch
+            if merge_on is not None:
+                n = store.merge(batch_df, on=merge_on)[0]
+            else:
+                n = store.insert(batch_df)
+        ingested[0] += n
         if matview is not None:
             matview.refresh()  # exactly this batch's CDC delta
         commits[0] += 1

@@ -6,9 +6,14 @@ that an index is semantically invisible (the metamorphic property the
 reference tests repeatedly).
 """
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from shortcut_spark import BTreeIndex, HashIndex, Store, between, col_eq, eq
+from shortcut_spark.store import ROWID
 
 ABC = [["a1", "a2"], ["b1", "b2"], ["c1", "c2"]]
 AXB = [["a", "x1"], ["a", "x2"], ["b", "x3"]]
@@ -193,9 +198,43 @@ def test_concurrent_commit_detected(spark, store_path):
     the storage layer)."""
     st1 = make(spark, store_path, ABC)
     st2 = Store.open(spark, store_path)
+    before = st2.manifest.to_json()
     st1.insert([("x1", "x2")])
     with pytest.raises(RuntimeError, match="concurrent commit"):
         st2.insert([("y1", "y2")])
+    # the loser keeps its own snapshot; the table holds the winner's rows
+    assert len(st2) == 3 and st2.manifest.to_json() == before
+    assert rows_of(Store.open(spark, store_path).find([])) == sorted(
+        map(tuple, ABC + [["x1", "x2"]])
+    )
+
+
+def test_commit_failing_at_the_current_flip_leaves_the_handle_uncommitted(
+    spark, store_path, monkeypatch
+):
+    """``Manifest.commit`` changes the manifest only after CURRENT flips:
+    a write whose flip fails leaves the handle at its version, so a retry
+    on the same handle commits and a reopen sees the retried write."""
+    st = make(spark, store_path, ABC)
+    v = st.manifest.version
+    real_replace = os.replace
+    failed = []
+
+    def replace(src, dst):
+        if os.path.basename(dst) == "CURRENT" and not failed:
+            failed.append(dst)
+            raise OSError("injected flip failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="injected"):
+        st.insert([("d1", "d2")])
+    assert failed and st.manifest.version == v
+    st.insert([("e1", "e2")])
+    assert st.manifest.version == v + 1
+    reopened = Store.open(spark, store_path)
+    assert reopened.manifest.version == v + 1
+    assert rows_of(reopened.find([])) == sorted(map(tuple, ABC + [["e1", "e2"]]))
 
 
 def test_arity_validated(spark, store_path):  # always-on vs debug_assert src/lib.rs:179
@@ -1086,7 +1125,7 @@ def test_apply_changes_rejected_delta_stages_nothing(spark, store_path, tmp_path
     must leave ZERO staged manifest state — previously its deletes were
     staged first, survived the raise, and the next unrelated _commit
     silently persisted them. The guard now runs before any staging and
-    the whole apply is wrapped in a manifest-snapshot rollback."""
+    the whole apply runs in one ``Store._txn``."""
     leader = Store.create(spark, store_path, 2)
     vc = leader.manifest.version
     leader.insert([(f"k{i}", str(i)) for i in range(6)])
@@ -1116,6 +1155,46 @@ def test_apply_changes_rejected_delta_stages_nothing(spark, store_path, tmp_path
     follower.apply_changes(leader.changes(leader.manifest.version - 1))
     assert rows_of(follower.find([])) == rows_of(leader.find([]))
     assert follower.manifest.tombstone_rows == 0
+
+
+@pytest.mark.parametrize("bound", [None, 0], ids=["driver", "spark"])
+def test_rejected_apply_changes_keeps_custom_indexers_and_parted_files(
+    spark, store_path, tmp_path, monkeypatch, bound
+):
+    """A delta the collision guard rejects leaves the follower handle as it
+    was — on the driver path and, with ``DRIVER_INSERT_ROWS`` at 0, on the
+    Spark path: its session-scoped custom indexer objects (which the
+    manifest JSON does not carry) stay, and a parted file list stays a
+    ``PartedFileList``."""
+    from shortcut_spark import manifest as manifest_mod
+    from shortcut_spark.manifest import PartedFileList
+
+    class Eager:
+        kind = "hash"
+
+        def estimate(self, rows, ndv):
+            return 0.5
+
+    monkeypatch.setattr(manifest_mod, "MANIFEST_PART_SIZE", 2)
+    leader = Store.create(spark, store_path, 2)
+    follower = Store.create(spark, str(tmp_path / "f"), 2)
+    for i in range(3):  # one follower file per delta: three files, parted
+        v = leader.manifest.version
+        leader.insert([(f"k{i}", str(i))])
+        follower.apply_changes(leader.changes(v))
+    follower = Store.open(spark, follower.path)
+    eager = Eager()
+    follower.index(0, eager)
+    if bound is not None:
+        follower.DRIVER_INSERT_ROWS = bound
+    assert isinstance(follower.manifest.files, PartedFileList)
+    before = follower.manifest.to_json()
+    with pytest.raises(ValueError, match="collide"):
+        follower.apply_changes(leader.changes(leader.manifest.version - 1))
+    assert isinstance(follower.manifest.files, PartedFileList)
+    assert follower.manifest.indices["c0"].custom is eager
+    assert "estimate=0.50" in follower.explain_find([eq(0, "k1")])
+    assert follower.manifest.to_json() == before
 
 
 def test_apply_changes_driver_and_distributed_venues_agree(spark, store_path, tmp_path):
@@ -1763,6 +1842,29 @@ def test_merge_rollback_on_rejected_insert(spark, store_path):
     assert {r["v"] for r in st.find([eq("k", 2)]).collect()} == {"b2"}
 
 
+@pytest.mark.parametrize("micro_batch", [False, True])
+def test_empty_batch_merge_commits_its_victims(spark, store_path, micro_batch):
+    """A merge whose batch is empty still deletes its ``extra_victim_keys``
+    in one commit (a vector-index refresh whose inserts net out against
+    its deletes takes this path), on both insert shapes."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    st = Store.create(spark, store_path, schema)
+    st.insert([(1, "a"), (2, "b"), (3, "c")])
+    v = st.manifest.version
+    dels = spark.createDataFrame([(2,)], "k long")
+    empty = spark.createDataFrame([], schema)
+    got = st.merge(empty, on="k", extra_victim_keys=dels, micro_batch=micro_batch)
+    assert got == (0, 1)
+    assert st.manifest.version == v + 1
+    reopened = Store.open(spark, store_path)
+    assert reopened.manifest.version == v + 1
+    assert rows_of(reopened.find([])) == [(1, "a"), (3, "c")]
+
+
 def test_insert_failure_mid_tail_restores_manifest(spark, store_path):
     """A failure AFTER the batch's files are registered but BEFORE the
     commit must restore the in-memory manifest from disk: otherwise the
@@ -1806,69 +1908,168 @@ def test_insert_failure_mid_tail_restores_manifest(spark, store_path):
     assert {r[st.colnames[1]] for r in st.find([eq(0, "b")]).collect()} == {"B2"}
 
 
-def _fail_cow_delete(st, monkeypatch, boom):
-    monkeypatch.setattr(st, "_index_files", boom)  # after the survivors' write
-    st.delete([eq(0, "k5")])
+class _Injected(RuntimeError):
+    pass
 
 
-def _fail_deferred_delete(st, monkeypatch, boom):
-    monkeypatch.setattr(st, "_commit", boom)  # tombstone staged in memory
-    st.delete([eq(0, "k5")], defer=True)
+def _on(act):
+    """A mutation site on the test store itself."""
+    return lambda st: (st, lambda: act(st))
 
 
-def _fail_cow_register(st, monkeypatch, boom):
-    monkeypatch.setattr(st, "_register_files", boom)  # survivors written
-    st.delete([eq(0, "k5")])
+def _df(st, rows):
+    return st.spark.createDataFrame(rows, st.schema)
 
 
-def _fail_compact(st, monkeypatch, boom):
-    monkeypatch.setattr(st, "_index_files", boom)  # file list already swapped
-    st.compact(target_files=1)
+def _delta(st):
+    """A CDC delta for the test store: delete k5, insert a fresh k20."""
+    rid = st.find([eq(0, "k5")], with_rowid=True).collect()[0][ROWID]
+    return st.spark.createDataFrame(
+        [("delete", rid, "k5", "5"), ("insert", 100, "k20", "20")],
+        f"change_type string, {ROWID} long, c0 string, c1 string",
+    )
+
+
+def _matview_site(st):
+    """A view over the test store, rewound one version so its refresh
+    replays the deferred delete of k1 into the view's state store."""
+    from shortcut_spark import MatView
+
+    mv = MatView.create(st.spark, st.path + "_mv", st, ["c0"], [("n", "count", None)])
+    mv.base_version -= 1
+    return mv.state, mv.refresh
+
+
+def _vector_index_site(st):
+    """A vector index over a small corpus that then moves by one insert
+    and one delete; the refresh merges both into the index's rows store."""
+    from pyspark.sql import types as T
+
+    from shortcut_spark.operators.vector_index import VectorIndex
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    corpus = Store.create(st.spark, st.path + "_corpus", schema)
+    corpus.insert([(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)])
+    ix = VectorIndex.create(
+        st.spark, st.path + "_vx", corpus.find([]), n_clusters=2, iters=1,
+        source_version=corpus.manifest.version,
+    )
+    corpus.insert([(12, [2.0, 1.0, 1.0])])
+    corpus.delete([eq("vec_id", 0)])
+    return ix.rows, lambda: ix.refresh(corpus)
+
+
+def _stream_site(st):
+    """A one-file stream into the test store; the streaming query wraps
+    the error its sink raised."""
+    from shortcut_spark.streaming import stream_into_store
+
+    src = st.path + "_src"
+    os.makedirs(src)
+    pq.write_table(pa.table({"c0": ["k20"], "c1": ["20"]}), os.path.join(src, "p.parquet"))
+
+    def act():
+        try:
+            stream_into_store(st.spark, src, st)
+        except Exception as e:
+            if isinstance(e, _Injected) or "injected" not in str(e):
+                raise
+            raise _Injected(str(e)) from e
+
+    return st, act
+
+
+# (id, the attribute the failure is injected at, site, also on the Spark path)
+_TXN_SITES = [
+    ("cow_delete", "_index_files", _on(lambda st: st.delete([eq(0, "k5")])), True),
+    ("cow_register", "_register_files", _on(lambda st: st.delete([eq(0, "k5")])), True),
+    ("deferred_delete", "_commit", _on(lambda st: st.delete([eq(0, "k5")], defer=True)), True),
+    ("compact", "_index_files", _on(lambda st: st.compact(target_files=1)), False),
+    ("cow_delete_commit", "_commit", _on(lambda st: st.delete([eq(0, "k5")])), True),
+    ("compact_commit", "_commit", _on(lambda st: st.compact(target_files=1)), False),
+    ("insert", "_commit", _on(lambda st: st.insert([("k20", "20")])), True),
+    ("insert_df", "_commit", _on(lambda st: st.insert(_df(st, [("k20", "20")]))), False),
+    (
+        "insert_micro", "_commit",
+        _on(lambda st: st.insert(_df(st, [("k20", "20")]), micro_batch=True)), False,
+    ),
+    ("merge", "_commit", _on(lambda st: st.merge([("k5", "x"), ("k20", "20")], on=0)), True),
+    (
+        "merge_empty_batch", "_commit",
+        _on(lambda st: st.merge(_df(st, []), on=0, extra_victim_keys=_df(st, [("k5", "")]))),
+        False,
+    ),
+    ("apply_changes", "_commit", _on(lambda st: st.apply_changes(_delta(st))), True),
+    ("index", "_commit", _on(lambda st: st.index(1, "hash")), False),
+    ("drop_index", "_commit", _on(lambda st: st.drop_index(0)), False),
+    ("add_column", "_commit", _on(lambda st: st.add_column("c2", "string")), False),
+    ("drop_column", "_commit", _on(lambda st: st.drop_column("c1")), False),
+    ("restore", "_commit", _on(lambda st: st.restore(st.manifest.version - 1)), False),
+    ("tag", "_commit", _on(lambda st: st.tag("t")), False),
+    ("add_constraint", "_commit", _on(lambda st: st.add_constraint(1, "not_null")), False),
+    ("drop_constraint", "_commit", _on(lambda st: st.drop_constraint(0, "not_null")), False),
+    ("matview_refresh", "_commit", _matview_site, False),
+    ("vector_index_refresh", "_commit", _vector_index_site, False),
+    ("stream_epoch", "_commit", _stream_site, False),
+    ("stream_epoch_rejected", "_enforce_constraints", _stream_site, False),
+]
+
+
+def _sans_commit(d):
+    """A manifest's JSON without what every commit changes and without
+    the tag the test commits after the failure."""
+    props = {k: v for k, v in d["props"].items() if k != "tag:after"}
+    return dict(d, version=None, committed_at=None, cdf_deletes=None, props=props)
 
 
 @pytest.mark.parametrize(
-    "fail,bound",
+    "inject,site,bound",
     [
-        pytest.param(fail, bound, id=name + ("_spark" if bound == 0 else ""))
-        for name, fail in [
-            ("cow_delete", _fail_cow_delete),
-            ("cow_register", _fail_cow_register),
-            ("deferred_delete", _fail_deferred_delete),
-        ]
-        for bound in (None, 0)
-    ]
-    + [pytest.param(_fail_compact, None, id="compact")],
+        pytest.param(inject, site, bound, id=name + ("_spark" if bound == 0 else ""))
+        for name, inject, site, spark_too in _TXN_SITES
+        for bound in ((None, 0) if spark_too else (None,))
+    ],
 )
 def test_delete_and_compact_failure_restores_manifest(
-    spark, store_path, monkeypatch, fail, bound
+    spark, store_path, monkeypatch, inject, site, bound
 ):
-    """A delete or compaction that fails before its commit leaves the
-    handle as it was: the on-disk manifest is untouched, the handle's
-    row count is the on-disk one, and a later insert on the same handle
-    does not carry the failed write into its commit. The deletes run on
-    the driver path and, with ``DRIVER_INSERT_ROWS`` at 0, on the Spark
-    path."""
+    """Every mutation that fails before its commit leaves its handle as it
+    was: the on-disk manifest is untouched, the handle's manifest is the
+    on-disk one, and a later commit on the same handle does not carry the
+    failed write. The Store's writes run on the driver path and, with
+    ``DRIVER_INSERT_ROWS`` at 0, on the Spark path; a view refresh, a
+    vector-index refresh and a stream epoch fail the commit of the Store
+    they stage a prop on, and a stream epoch also fails in the batch's
+    constraint check, before its insert stages anything."""
     from shortcut_spark.manifest import Manifest
 
     st = Store.create(spark, store_path, 2)
     if bound is not None:
         st.DRIVER_INSERT_ROWS = bound
     st.index(0, "hash")
+    st.add_constraint(0, "not_null")
     for lo in (0, 5):
         st.insert([(f"k{i}", str(i)) for i in range(lo, lo + 5)])
     st.delete([eq(0, "k1")], defer=True)  # a live tombstone set
-    on_disk = Manifest.load(store_path).to_json()
     files = {f.path for f in st.manifest.files}
-
-    class Boom(RuntimeError):
-        pass
+    handle, act = site(st)
+    on_disk = Manifest.load(handle.path).to_json()
 
     def boom(*args, **kwargs):
-        raise Boom("injected")
+        raise _Injected("injected")
 
-    with monkeypatch.context() as m, pytest.raises(Boom):
-        fail(st, m, boom)
-    assert Manifest.load(store_path).to_json() == on_disk
+    with monkeypatch.context() as m, pytest.raises(_Injected):
+        m.setattr(handle, inject, boom)
+        act()
+    assert Manifest.load(handle.path).to_json() == on_disk
+    assert handle.manifest.to_json() == on_disk
+    handle.tag("after")
+    assert _sans_commit(Manifest.load(handle.path).to_json()) == _sans_commit(on_disk)
     assert len(st) == len(Store.open(spark, store_path)) == 9
     st.insert([("k10", "10")])
     reopened = Store.open(spark, store_path)

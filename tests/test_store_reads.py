@@ -825,6 +825,44 @@ def test_parquet_written_on_the_driver_only_by_write_arrow():
     assert len(calls) == 1
 
 
+def test_manifest_committed_only_by_txn():
+    """One code path commits and rolls back: ``self._commit()`` is called
+    only inside ``Store._txn``, and ``Manifest.commit`` only inside
+    ``Store._commit`` and ``Store.create``. A mutation stages its change
+    and sets ``self._staged`` inside ``with self._txn():``."""
+    allowed = {
+        "_commit": {("store.py", "_txn")},
+        "commit": {("store.py", "_commit"), ("store.py", "create")},
+    }
+    calls = []
+    for root, _, names in os.walk(_PKG):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in allowed
+                    ):
+                        calls.append(
+                            (node.func.attr, os.path.relpath(path, _PKG), fn.name, node.lineno)
+                        )
+    stray = [c for c in calls if c[1:3] not in allowed[c[0]]]
+    assert not stray, f"commit through Store._txn: {stray}"
+    assert sorted(c[:3] for c in calls) == [
+        ("_commit", "store.py", "_txn"),
+        ("commit", "store.py", "_commit"),
+        ("commit", "store.py", "create"),
+    ]
+
+
 # -- the driver delete writes what the Spark delete writes -------------------
 
 
