@@ -316,12 +316,9 @@ class MatView:
                 # here was one whole extra job per refresh
                 rows = self._to_state_rows(touched).localCheckpoint(eager=False)
                 try:
-                    # stable_input: rows is the materialized cut, so the
-                    # merge's insert skips its own re-checkpoint (r9 — one
-                    # fewer materialization job per refresh). The view's new
-                    # base_version is STAGED as a manifest prop in the same
-                    # transaction as the merge, so it persists inside the
-                    # merge's one atomic manifest flip (r12, the stream_epoch
+                    # The view's new base_version is STAGED as a manifest
+                    # prop in the same transaction as the merge, so it
+                    # persists inside the merge's one atomic manifest flip (r12, the stream_epoch
                     # pattern) and a failed merge takes it back: state and
                     # version can never be durable separately.
                     # micro_batch rides the SAME driver-side bound as the
@@ -329,9 +326,7 @@ class MatView:
                     # write job with footer-read counts (no counts pass).
                     with self.state._txn():
                         self.state.manifest.props["mv_base_version"] = str(cur)
-                        n_groups, _ = self.state.merge(
-                            rows, on=_GK, stable_input=True, micro_batch=small
-                        )
+                        n_groups, _ = self.state.merge(rows, on=_GK, micro_batch=small)
                 finally:
                     rows.unpersist()
                 self.base_version = cur

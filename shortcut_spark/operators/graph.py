@@ -49,9 +49,8 @@ __all__ = ["connected_components", "pagerank", "triangle_counts"]
 #: fresh Catalyst analysis/codegen pass (~0.5 s/round measured at 62k
 #: edges on local[32]), while a bounded collect is ≤ ~3 MB of key pairs
 #: and union-find is microseconds. Same class of gate as the Store's
-#: driver kernels (POSTING_DRIVER_BUILD_ROWS, DRIVER_INSERT_ROWS): at
-#: real scale the near-dup graph is billions of edges and the
-#: distributed loop runs as before. Setting the module attribute to 0
+#: driver kernels (DRIVER_INSERT_ROWS): at real scale the near-dup graph
+#: is billions of edges and the distributed loop runs as before. Setting the module attribute to 0
 #: forces the distributed loop everywhere.
 CC_DRIVER_EDGES = 200_000
 

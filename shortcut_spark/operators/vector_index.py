@@ -816,16 +816,14 @@ class VectorIndex:
                 pass  # this store already holds the delta (replay)
             else:
                 # one eager checkpoint of the assign pipeline: the merge
-                # references the batch TWICE (victims keys + insert), and
-                # stable_input lets insert skip its own re-materialization
+                # references the batch TWICE (victims keys + insert)
                 batch = self._index_rows(ins).localCheckpoint(eager=True)
                 # the stamp and the merge share one transaction: a failed
                 # merge takes the stamp back with it
                 with self.rows._txn():
                     self.rows.manifest.props[stamp] = cur
                     added, staged = self.rows.merge(
-                        batch, on="vec_id", extra_victim_keys=dels,
-                        stable_input=True,
+                        batch, on="vec_id", extra_victim_keys=dels
                     )
                 removed += staged
         if self.bands is not None:
@@ -834,8 +832,7 @@ class VectorIndex:
                 with self.bands._txn():
                     self.bands.manifest.props[stamp] = cur
                     b_added, b_staged = self.bands.merge(
-                        b_batch, on="vec_id", extra_victim_keys=dels,
-                        stable_input=True,
+                        b_batch, on="vec_id", extra_victim_keys=dels
                     )
                 if not self.meta.get("ivf", True):
                     added = b_added // self.meta["lsh_bands"]

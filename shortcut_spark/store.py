@@ -49,7 +49,6 @@ import os
 import uuid
 from typing import Any, Callable, Iterable, Sequence
 
-import pyarrow.lib as pa_err
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -250,7 +249,8 @@ class Store:
         The lookups (``find`` with conditions, ``find_many``) and the
         deletes serve few rows from the driver (:meth:`_driver_tables`) and
         fall back here; full scans and the other write-path reads
-        (compact, index builds, change feeds) always read here."""
+        (compact, index builds above ``DRIVER_INSERT_ROWS`` rows, change
+        feeds) always read here."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
         if with_meta:
@@ -276,15 +276,21 @@ class Store:
                     df = df.filter(~self._in_literal(ROWID, ids))
         return df
 
-    def _driver_tables(self, files: Sequence[DataFile]) -> list | None:
+    def _driver_tables(
+        self, files: Sequence[DataFile], columns: Sequence[str] | None = None
+    ) -> list | None:
         """The live rows of each of ``files`` as one arrow table per file,
-        in the store schema with ``__rowid``, read on the driver with
-        pyarrow (zero Spark jobs) and tombstoned rows dropped in the scan —
-        or None when the files hold more than ``DRIVER_INSERT_ROWS`` rows,
-        a column fails :meth:`_driver_atomic_type`, or the tombstone set
-        holds more than ``CDF_DRIVER_READ_ROWS`` rows. The one gate of the
-        driver-served lookups (:meth:`_read_lookup`) and small deletes
-        (:meth:`delete_filter`); docs/SCALE.md has both crossovers."""
+        in the store schema with ``__rowid`` (only ``columns``, when
+        given), read on the driver with pyarrow (zero Spark jobs) and
+        tombstoned rows dropped in the scan — or None when the files hold
+        more than ``DRIVER_INSERT_ROWS`` rows, a column fails
+        :meth:`_driver_atomic_type`, or the tombstone set holds more than
+        ``CDF_DRIVER_READ_ROWS`` rows. The one gate and reader of every
+        driver kernel that reads data files: the lookups
+        (:meth:`_read_lookup`), the small deletes (:meth:`delete_filter`),
+        the unique-key probe (:meth:`_existing_key_driver`) and the CDC
+        apply (:meth:`_apply_changes_driver`); docs/SCALE.md has the
+        crossovers."""
         if (
             sum(f.rows for f in files) > self.DRIVER_INSERT_ROWS
             or not all(self._driver_atomic_type(f.dataType) for f in self.manifest.schema)
@@ -297,7 +303,7 @@ class Store:
         ids = self._ids_in_files(tomb, files)
         pred = ~pc.is_in(pc.field(ROWID), pa.array(ids, pa.int64())) if ids else None
         schema = self._schema_with_rowid()
-        return [self._arrow_read([self._abs(f.path)], schema, pred) for f in files]
+        return [self._arrow_read([self._abs(f.path)], schema, pred, columns) for f in files]
 
     def _read_lookup(self, files: Sequence[DataFile]) -> DataFrame:
         """Live rows of ``files`` for a lookup, with ``__rowid``. Rows the
@@ -403,24 +409,19 @@ class Store:
     # -- insert (src/lib.rs:178-187) ----------------------------------------
 
     def insert(
-        self,
-        rows: DataFrame | Iterable[Sequence[Any]],
-        stable_input: bool = False,
-        micro_batch: bool = False,
+        self, rows: DataFrame | Iterable[Sequence[Any]], micro_batch: bool = False
     ) -> int:
         """Append a batch. Returns the number of rows inserted.
 
         Arity/schema is validated always (vs debug-only ``src/lib.rs:179``).
 
-        ``stable_input=True`` is the caller's assertion that ``rows`` is
-        already MATERIALIZED and partition-stable (e.g. a fresh
-        ``localCheckpoint`` — matview refresh, streaming micro-batches):
-        the rowid-tagging pass then uses a lazy ``persist`` instead of a
-        second eager ``localCheckpoint``, saving one full materialization
-        job per insert. Determinism still holds — every op between the
-        stable parent and the tag (sorted round-robin repartition,
-        partition-local ids) is deterministic given fixed parent blocks,
-        so a cache-miss recompute renumbers nothing.
+        A literal batch of at most ``DRIVER_INSERT_ROWS`` rows is written
+        and indexed on the driver (:meth:`_insert_rows_driver`); its one
+        Spark job is the index key sketch. A DataFrame batch is tagged
+        with rowids in a lazy ``localCheckpoint`` whose first action is
+        the per-partition counts pass, then written by Spark; a written
+        batch of at most ``DRIVER_INSERT_ROWS`` rows is indexed from a
+        pyarrow read of its index columns (:meth:`_index_files`).
 
         ``micro_batch=True`` is the caller's DRIVER-SIDE bound that the
         batch is micro (e.g. a matview refresh whose manifest arithmetic
@@ -468,17 +469,15 @@ class Store:
             df = self.spark.createDataFrame(data, schema)
 
         # Dense rowid assignment: per-partition counts -> cumulative offsets,
-        # then a row_number within each original partition. Two passes over
-        # the batch (same cost class as zipWithIndex) but stays in DataFrame
-        # land. A single-file source arrives as one partition, which would
-        # serialize the whole window — spread it first. The tagged batch is
+        # plus the position inside the partition. Two passes over the batch
+        # (same cost class as zipWithIndex) but stays in DataFrame land. A
+        # single-file source arrives as one partition, which would
+        # serialize the write — spread it first. The tagged batch is
         # localCheckpoint'ed (materialized, lineage CUT): pid/mid come from
         # nondeterministic ops (round-robin repartition, monotonic ids), so
         # a cache-miss recompute between the two passes could renumber rows;
         # with the lineage cut, a lost partition fails the job instead of
-        # silently skipping/duplicating rowids. Under ``stable_input`` the
-        # parent is already a materialized cut, so a lazy persist carries
-        # the same determinism without the extra materialization job.
+        # silently skipping/duplicating rowids.
         self._enforce_constraints(df)
         watermark = self.manifest.rowid
         if micro_batch:
@@ -503,19 +502,10 @@ class Store:
         # job (measured ~0.4 s/insert on the 600k-row bench ingest). The
         # scope ends right after the counts pass — the tail sizes its own
         # confs.
-        counts_confs = {} if stable_input else {"spark.sql.adaptive.enabled": "false"}
         try:
-            with scoped_confs(self.spark, counts_confs):
-                tagged = (
-                    tagged.persist()
-                    if stable_input
-                    else tagged.localCheckpoint(eager=False)
-                )
-                stats = tagged.groupBy("__pid").agg(
-                    F.count("*").alias("cnt"),
-                    F.min("__mid").alias("lo"),
-                    F.max("__mid").alias("hi"),
-                ).collect()
+            with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+                tagged = tagged.localCheckpoint(eager=False)
+                stats = tagged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
         except BaseException:
             tagged.unpersist()
             raise
@@ -524,16 +514,18 @@ class Store:
         finally:
             tagged.unpersist()
 
-    # literal (Python-list) batches at or below this many rows insert
-    # entirely on the driver: constraint checks in plain Python, rowids by
-    # list position, one pyarrow-written file, footer-based registration —
-    # ZERO Spark jobs unless an index needs a posting build or the unique
-    # probe must scan a big table. The posting-driver-build bound's sibling.
-    # It also bounds the rows a lookup or a delete reads on the driver
-    # (_driver_tables): at narrow rows the driver read of a lookup beats a
-    # Spark job at every size to 40,000 rows, at ~530-byte rows they cross
-    # near 15,000; a driver delete, which hands Spark only the columns its
-    # conditions name, wins at every size to 40,000 on both (docs/SCALE.md)
+    # the one bound of the driver kernels. Literal (Python-list) batches
+    # at or below this many rows insert entirely on the driver: constraint
+    # checks in plain Python, rowids by list position, one pyarrow-written
+    # file, footer-based registration — no Spark job but the index key
+    # sketch, and the unique probe's scan of a big table. A batch of at
+    # most this many rows is indexed on the driver (_index_tables). It
+    # also bounds the rows a lookup, a delete or a CDC apply reads on the
+    # driver (_driver_tables): at narrow rows the driver read of a lookup
+    # beats a Spark job at every size to 40,000 rows, at ~530-byte rows
+    # they cross near 15,000; a driver delete, which hands Spark only the
+    # columns its conditions name, wins at every size to 40,000 on both
+    # (docs/SCALE.md)
     DRIVER_INSERT_ROWS = 20_000
 
     @staticmethod
@@ -582,13 +574,10 @@ class Store:
         count, or None when ineligible (caller falls back to the
         distributed path — same results, more jobs).
 
-        Layout parity with the Spark path's single-file micro-batch
-        (:meth:`_cluster_batch` ``n_files == 1``): one parquet file,
-        rows sorted by the index clustering columns (ascending, NULLs
-        first — ``sortWithinPartitions`` semantics), dense rowids from
-        the watermark, per-column footer stats for pruning. Registration
-        and posting builds go through the shared epilogue
-        (:meth:`_register_and_index`), so index maintenance is identical."""
+        Dense rowids from the watermark, one parquet file laid out by
+        :meth:`_arrow_batch`, per-column footer stats for pruning.
+        Registration and index maintenance go through the shared epilogue
+        (:meth:`_register_and_index`), indexing from the same table."""
         if len(data) > self.DRIVER_INSERT_ROWS:
             return None
         if not all(self._driver_atomic_type(f.dataType) for f in schema.fields):
@@ -598,43 +587,42 @@ class Store:
         # existing-key probe needs a distributed scan
         self._enforce_constraints_rows(data)
         watermark = self.manifest.rowid
-        n = len(data)
-        rows = [(watermark + i,) + tuple(r) for i, r in enumerate(data)]
-        names = schema.fieldNames()
-        sort_cols = self._cluster_cols()
-        if sort_cols:
-            idxs = [names.index(c) + 1 for c in sort_cols]
-            try:
-                rows.sort(key=lambda t: tuple((t[i] is not None, t[i]) for i in idxs))
-            except TypeError:
-                return None  # un-orderable value mix → distributed path
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(self._schema_with_rowid())
-            dts = [f.dataType for f in schema.fields]
-            table = pa.Table.from_pylist(
-                [
-                    dict(
-                        zip(
-                            [ROWID] + list(names),
-                            (r[0], *(self._driver_cell(dt, v) for dt, v in zip(dts, r[1:]))),
-                        )
-                    )
-                    for r in rows
-                ],
-                schema=arrow_schema,
-            )
-        except Exception:
-            # a value pyarrow cannot coerce the way createDataFrame would
-            # (nothing mutated yet) — let the Spark path decide
+        table = self._arrow_batch([(watermark + i, *r) for i, r in enumerate(data)])
+        if table is None:
             return None
         batch_rel = os.path.join(
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
         self._write_arrow(batch_rel, table)
-        return self._append_batch(batch_rel, n)
+        return self._append_batch(batch_rel, len(data), [table])
+
+    def _arrow_batch(self, rows: list[tuple]):
+        """``rows`` — ``(rowid, *cells)`` tuples in schema order — as the
+        arrow table a driver kernel writes as one data file, in the layout
+        of the Spark path's single-file batch (:meth:`_cluster_batch`
+        ``n_files == 1``): rows sorted by the clustering columns,
+        ascending with NULLs first (``sortWithinPartitions``). None when
+        the sort meets an un-orderable value mix or pyarrow cannot coerce
+        a cell the way ``createDataFrame`` would: nothing is staged yet,
+        so the caller takes the Spark path, which decides."""
+        try:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            full = self._schema_with_rowid()
+            idxs = [full.names.index(c) for c in self._cluster_cols()]
+            if idxs:
+                rows = sorted(rows, key=lambda t: tuple((t[i] is not None, t[i]) for i in idxs))
+            dts = [f.dataType for f in full.fields]
+            return pa.Table.from_pylist(
+                [
+                    {n: self._driver_cell(dt, v) for n, dt, v in zip(full.names, dts, r)}
+                    for r in rows
+                ],
+                schema=to_arrow_schema(full),
+            )
+        except Exception:
+            return None
 
     def _enforce_constraints_rows(self, data: list[tuple]) -> None:
         """Pure-Python twin of :meth:`_enforce_constraints` for literal
@@ -688,11 +676,11 @@ class Store:
 
     def _existing_key_driver(self, column: str, keys: list):
         """Zero-job membership probe: prune candidate files by footer
-        stats (driver metadata), then read only those files' key column
-        with pyarrow and test membership against live (non-tombstoned)
-        rowids. Returns a colliding key, False for no collision, or None
-        when ineligible (big candidate set / coercion-unsafe types) —
-        the caller then uses the distributed probe."""
+        stats (driver metadata), then read only those files' live key
+        column (:meth:`_driver_tables`) and test membership. Returns a
+        colliding key, False for no collision, or None when ineligible
+        (big candidate set / coercion-unsafe types) — the caller then
+        uses the distributed probe."""
         import math
 
         if not keys:
@@ -713,19 +701,13 @@ class Store:
                     if not f.stats.get(column)
                     or any(self._may_hold(*f.stats[column][:2], k) for k in keys)
                 ]
-        if sum(f.rows for f in files) > self.POSTING_DRIVER_BUILD_ROWS:
+        tables = self._driver_tables(files, [column])
+        if tables is None:
             return None
-        tomb_ids = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
-        if tomb_ids is None:
-            return None
-        tomb = set(tomb_ids)
         keyset = set(keys)
-        for f in files:
-            tbl = pq.read_table(self._abs(f.path), columns=[ROWID, column])
-            for rid, v in zip(
-                tbl.column(ROWID).to_pylist(), tbl.column(column).to_pylist()
-            ):
-                if v is not None and v in keyset and rid not in tomb:
+        for t in tables:
+            for v in t.column(column).to_pylist():
+                if v is not None and v in keyset:
                     return v
         return False
 
@@ -776,13 +758,10 @@ class Store:
     ) -> int:
         if not stats:
             return 0
-        counts = {r["__pid"]: r["cnt"] for r in stats}
-        contiguous = self._rowid_layout_dense(stats)
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        n = acc
+        offsets, n = {}, 0
+        for r in sorted(stats, key=lambda r: r["__pid"]):
+            offsets[r["__pid"]] = n
+            n += r["cnt"]
         confs = {}
         if n <= self.STATIC_INSERT_ROWS:
             # the exact batch row count is driver-known after the counts
@@ -795,55 +774,24 @@ class Store:
                 "spark.sql.adaptive.enabled": "false",
                 "spark.sql.shuffle.partitions": str(max(1, min(256, cores, -(-n // 50_000)))),
             }
-        with scoped_confs(self.spark, confs):
-            return self._insert_tagged_tail(tagged, schema, watermark, offsets, n, contiguous)
-
-    @staticmethod
-    def _rowid_layout_dense(stats: list) -> bool:
-        """``monotonically_increasing_id`` puts the partition id in the
-        upper bits and a 0-based per-partition record counter in the
-        lower 33 — when that layout holds (verified per partition from
-        the counts pass: min == pid<<33, max == min+cnt-1, i.e. the local
-        counter is dense from 0), the rowid is pure per-row arithmetic
-        (watermark + offset[pid] + low bits) and the row_number window —
-        a full shuffle+sort of the batch — is unnecessary. Rowids are
-        identical by construction (pytest-pinned against the window
-        plan); any violation of the layout falls back to the window."""
-        return all(
-            r["lo"] == (r["__pid"] << 33)
-            and r["hi"] == (r["__pid"] << 33) + r["cnt"] - 1
-            for r in stats
-        )
-
-    def _insert_tagged_tail(
-        self,
-        tagged: DataFrame,
-        schema: T.StructType,
-        watermark: int,
-        offsets: dict,
-        n: int,
-        contiguous: bool = False,
-    ) -> int:
         # a literal pid → offset map, not a broadcast of a Python-list
         # DataFrame (each such broadcast is a Spark job of its own)
         off = F.create_map(
             *[x for pid in offsets for x in (F.lit(pid), F.lit(offsets[pid]))]
         )[F.col("__pid")].cast("long")
-        if contiguous:
-            # exchange-free rowids: the per-partition record counter IS
-            # the dense local position (guard verified in _insert_tagged)
-            local = F.col("__mid") - (F.col("__pid").cast("long") * F.lit(1 << 33))
-        else:
-            from pyspark.sql import Window as W
-
-            local = F.row_number().over(W.partitionBy("__pid").orderBy("__mid")) - 1
+        # exchange-free rowids: ``monotonically_increasing_id`` is
+        # ``pid << 33`` plus the 0-based record counter of its partition,
+        # and the tag plan evaluates it in the same task as
+        # ``spark_partition_id`` over the checkpointed blocks — so the low
+        # bits ARE the dense position inside the partition
+        local = F.col("__mid") - (F.col("__pid").cast("long") * F.lit(1 << 33))
         with_id = tagged.select(
             (F.lit(watermark) + off + local).alias(ROWID), *schema.fieldNames()
         )
-
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
-        self._cluster_batch(with_id, n).write.parquet(self._abs(batch_rel))
-        return self._append_batch(batch_rel, n)
+        with scoped_confs(self.spark, confs):
+            self._cluster_batch(with_id, n).write.parquet(self._abs(batch_rel))
+            return self._append_batch(batch_rel, n)
 
     def _cluster_batch(self, with_id: DataFrame, n: int) -> DataFrame:
         """Partition a rowid-tagged batch for writing: size files, and honor
@@ -892,21 +840,23 @@ class Store:
                 return list(s.member_columns)
         return []
 
-    def _append_batch(self, batch_rel: str, n: int) -> int:
-        """Commit the ``n`` freshly-written rows under ``batch_rel`` as the
+    def _append_batch(self, batch_rel: str, n: int, tables: list | None = None) -> int:
+        """Commit the ``n`` freshly-written rows under ``batch_rel`` (held
+        on the driver as ``tables``, when the driver wrote them) as the
         next rowids — the shared tail of the three insert paths."""
         with self._txn():
-            self._register_and_index(batch_rel)
+            self._register_and_index(batch_rel, tables)
             self.manifest.rowid += n
             self._staged = True
         return n
 
-    def _register_and_index(self, batch_rel: str) -> list["DataFile"]:
+    def _register_and_index(self, batch_rel: str, tables: list | None = None) -> None:
         """Register freshly-written batch files and add them to every
-        index — the shared epilogue of ``insert`` and ``apply_changes``."""
+        index (from ``tables``, one arrow table per file, when the driver
+        wrote them) — the shared epilogue of ``insert`` and
+        ``apply_changes``."""
         new_files = self._register_files(batch_rel)
-        self._index_files(list(self.manifest.indices.values()), new_files)
-        return new_files
+        self._index_files(list(self.manifest.indices.values()), new_files, tables)
 
     CONSTRAINT_KINDS = ("not_null", "unique")
 
@@ -1012,7 +962,6 @@ class Store:
         self,
         rows: DataFrame | Iterable[Sequence[Any]],
         on: int | str,
-        stable_input: bool = False,
         extra_victim_keys: DataFrame | None = None,
         micro_batch: bool = False,
     ) -> tuple[int, int]:
@@ -1074,9 +1023,9 @@ class Store:
                     .join(keys, name, "left_semi")
                     .select(ROWID)
                 )
-                if self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS:
+                if self.manifest.live_rows <= self.DRIVER_INSERT_ROWS:
                     # micro-store merge (matview state, streaming dimension
-                    # upserts): victims ≤ live_rows ≤ the driver-build bound,
+                    # upserts): victims ≤ live_rows ≤ the driver bound,
                     # so the tombstone takes the single-file micro-batch
                     # layout — one write task, one file, no 32-way fan-out
                     # of a handful of rowids (r12, the _cluster_batch n=1
@@ -1107,9 +1056,7 @@ class Store:
                     import shutil
 
                     shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
-            inserted = self.insert(
-                rows, stable_input=stable_input, micro_batch=micro_batch
-            )
+            inserted = self.insert(rows, micro_batch=micro_batch)
         return (inserted, n_staged)
 
     @contextlib.contextmanager
@@ -1384,7 +1331,11 @@ class Store:
             self._staged = True
 
     def _index_files(
-        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list | None = None
+        self,
+        specs: Sequence[IndexSpec],
+        files: Sequence[DataFile],
+        tables: list | None = None,
+        sketch: bool = True,
     ) -> None:
         """Add the index entries of ``files`` to every index in ``specs``
         and refresh each one's cost-model stats — the distributed analogue
@@ -1393,22 +1344,32 @@ class Store:
         *files* per key — the lookup result is a superset and ``find``'s
         residual filter restores exactness (``src/lib.rs:89-91``).
 
-        Files whose rows are already on the driver (``tables``, one arrow
-        table per file: a small copy-on-write delete's survivors) are
-        indexed with no job (:meth:`_index_tables`). Otherwise a batch at
-        or below the driver-build bound takes ONE Spark job for all of its
-        indexes (:meth:`_index_files_driver`), and a bigger batch writes
-        each index's part with its own job. The files are read without
-        the tombstone anti-join: fresh files hold no tombstoned rowid, and
-        a posting for a dead row (an index backfill after a deferred
-        delete) is only a superset, the state a deferred delete leaves
-        anyway."""
+        A batch of at most ``DRIVER_INSERT_ROWS`` rows (and one posting
+        shard), whose index columns pass :meth:`_driver_atomic_type`, is
+        indexed on the driver (:meth:`_index_tables`): from ``tables``,
+        one arrow table per file, when the driver holds its rows (a
+        driver insert or CDC apply, a small delete's survivors), else from
+        a pyarrow read of the index columns of the written files.
+        ``sketch=False`` skips the key sketch there (a copy-on-write
+        delete's survivors: their keys are already in it). Any other batch
+        writes each index's part with its own Spark job. The files are
+        read without the tombstone filter: fresh files hold no tombstoned
+        rowid, and a posting for a dead row (an index backfill after a
+        deferred delete) is only a superset, the state a deferred delete
+        leaves anyway."""
         for spec in specs:
             spec.rows = self.manifest.total_rows
         if not specs or not files:
             return
-        if tables is not None:
-            self._index_tables(specs, files, tables)
+        n_rows = sum(f.rows for f in files)
+        cols = list(dict.fromkeys(c for s in specs for c in s.member_columns))
+        if n_rows <= min(self.DRIVER_INSERT_ROWS, self.POSTING_SHARD_ROWS) and all(
+            self._driver_atomic_type(self.manifest.schema[c].dataType) for c in cols
+        ):
+            if tables is None:
+                schema = T.StructType([self.manifest.schema[c] for c in cols])
+                tables = [self._arrow_read([self._abs(f.path)], schema) for f in files]
+            self._index_tables(specs, files, tables, sketch)
             return
         # a literal path → id map tags each row with its file id, so the
         # build broadcasts no Python-list DataFrame (each such broadcast is
@@ -1419,72 +1380,33 @@ class Store:
         src = self._read_files(files, with_meta=True, live=False).withColumn(
             "__file_id", ids[F.col("__file_path")].cast("int")
         )
-        n_rows = sum(f.rows for f in files)
-        if n_rows <= min(self.POSTING_DRIVER_BUILD_ROWS, self.POSTING_SHARD_ROWS):
-            self._index_files_driver(specs, src)
-            return
         for spec in specs:
             if spec.kind == BLOOM:
                 self._append_blooms(spec, src)
             else:
                 self._append_postings(spec, src, n_rows)
 
-    def _index_files_driver(self, specs: Sequence[IndexSpec], src: DataFrame) -> None:
-        """ONE Spark job for every index of a small batch: a no-shuffle
-        aggregate over ``coalesce(1)`` of its rows computes, per index, the
-        range key's min/max (part pruning stats), the set of distinct
-        (key, file id) postings and the HLL key sketch merged into the
-        stored one. The driver writes each part
-        (:meth:`_write_index_part`) in the distributed writer's arrow
-        schema; a bloom index's bitsets are packed there from its distinct
-        (key, file) pairs. Trigram grams come from one ``inline_outer``
-        over the zipped gram arrays: min, max, set and sketch all ignore
-        duplicate rows, so the fan-out changes no other index's result."""
-        grams = {s.column: f"__g{i}" for i, s in enumerate(specs) if s.kind == TRIGRAM}
-        if grams:
-            zipped = F.arrays_zip(
-                *[self._grams(s).alias(grams[s.column]) for s in specs if s.kind == TRIGRAM]
-            )
-            src = src.select("*", F.inline_outer(zipped))
-        aggs = []
-        for i, spec in enumerate(specs):
-            if spec.kind == TRIGRAM:
-                keys = [F.col(grams[spec.column])]
-            elif spec.kind == BLOOM:
-                keys = [F.col(spec.column).cast("string")]
-            else:
-                keys = [F.col(c) for c in spec.member_columns]
-            names = ["key"] if spec.kind == BLOOM else self._posting_schema(spec).names
-            post = F.struct(*[k.alias(n) for k, n in zip(keys, names)], "__file_id")
-            if spec.kind in (TRIGRAM, BLOOM):
-                post = F.when(keys[0].isNotNull(), post)  # no entry for a null key
-            aggs += [
-                F.min(keys[0]).alias(f"__lo{i}"),
-                F.max(keys[0]).alias(f"__hi{i}"),
-                F.collect_set(post).alias(f"__rows{i}"),
-                *self._sketch_cols(spec, keys, i),
-            ]
-        st = src.coalesce(1).agg(*aggs).collect()[0]
-        for i, spec in enumerate(specs):
-            part_rel = self._write_index_part(spec, [r.asDict() for r in st[f"__rows{i}"]])
-            self._refresh_index_stats(spec, st, None if spec.kind == BLOOM else part_rel, i)
-
     def _index_tables(
-        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list
+        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list, sketch: bool
     ) -> None:
-        """:meth:`_index_files_driver` with no Spark job, for files whose
-        rows are already on the driver (``tables``, one arrow table per
-        file). The postings and each part's range key [min, max] are
-        built on the driver with the aggregate's semantics: the distinct
-        postings keep ``-0.0`` apart from ``0.0`` and fold NaNs into one,
-        as ``collect_set`` does, and :meth:`_min_max` ranks NaN above
-        every number, as Spark's ``min``/``max`` do. Trigram grams and bloom
-        string keys come from a Spark projection (``_grams``,
-        ``cast(string)``) over a ``LocalRelation``, which
-        ``ConvertToLocalRelation`` evaluates on the driver. The HLL sketch
-        and ndv stay as they are: these rows' keys are already in every
-        sketch, and a union with a subset changes no register."""
+        """The small-batch index build: every index of ``files``, whose
+        rows the driver holds (``tables``, one arrow table per file, with
+        at least each index's columns). The postings and each part's
+        range key [min, max] are built on the driver with the distributed
+        build's semantics: the distinct postings fold ``-0.0`` into
+        ``0.0`` and every NaN into one, as ``distinct`` does, and
+        :meth:`_min_max` ranks NaN above every number, as Spark's
+        ``min``/``max`` do. Trigram grams and bloom string keys come from a
+        Spark projection (``_grams``, ``cast(string)``) over a
+        ``LocalRelation``, which ``ConvertToLocalRelation`` evaluates on
+        the driver. The one Spark job is the HLL sketch of every index's
+        distinct posting keys — what the distributed build sketches —
+        merged into the stored one: one ``coalesce(1)`` aggregate of
+        :meth:`_sketch_cols` over a ``LocalRelation`` of the keys, one
+        column group per index. ``sketch=False`` skips it and leaves ndv
+        as it is."""
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         src = pa.concat_tables(
             [
@@ -1507,31 +1429,69 @@ class Store:
             got = rel.select(
                 "__file_id", *[e.alias(f"__x{i}") for i, e in derived.items()]
             ).collect()
+        keyed = []
         for i, spec in enumerate(specs):
             if i in derived:
-                pairs = {
-                    (k, r["__file_id"])
-                    for r in got
-                    for k in (r[f"__x{i}"] if spec.kind == TRIGRAM else [r[f"__x{i}"]])
+                by_file: dict[int, set] = {}
+                for r in got:
+                    k = r[f"__x{i}"]
+                    by_file.setdefault(r["__file_id"], set()).update(
+                        k if spec.kind == TRIGRAM else [k]
+                    )
+                rows = [
+                    {"key": k, "__file_id": fid}
+                    for fid, ks in by_file.items()
+                    for k in ks
                     if k is not None
-                }
-                rows = [{"key": k, "__file_id": fid} for k, fid in pairs]
-                keys = [k for k, _ in pairs]
-                lo, hi = (min(keys), max(keys)) if keys else (None, None)
+                ]
+                key_schema = T.StructType([T.StructField("key", T.StringType())])
+                lo = min((r["key"] for r in rows), default=None)
+                hi = max((r["key"] for r in rows), default=None)
             else:
-                names = self._posting_schema(spec).names
-                post = src.select([*spec.member_columns, "__file_id"]).rename_columns(names)
+                key_schema = T.StructType(self._posting_schema(spec).fields[:-1])
+                post = src.select([*spec.member_columns, "__file_id"]).rename_columns(
+                    [*key_schema.names, "__file_id"]
+                )
                 # distinct in Python: pyarrow's multi-key group_by can split
                 # one all-null key into several groups
-                distinct = {
-                    tuple(repr(v) if isinstance(v, float) else v for v in r.values()): r
-                    for r in post.to_pylist()
-                }
+                distinct = {}
+                for r in post.to_pylist():
+                    r = {c: v + 0.0 if isinstance(v, float) else v for c, v in r.items()}
+                    distinct[tuple(repr(v) if isinstance(v, float) else v for v in r.values())] = r
                 rows = list(distinct.values())
                 lo, hi = self._min_max(src.column(spec.member_columns[0]))
             part_rel = self._write_index_part(spec, rows)
             if part_rel is not None and spec.kind != BLOOM:
                 self._set_part_range(spec, part_rel, lo, hi)
+            keyed.append((rows, key_schema))
+        if not sketch:
+            return
+        keys, key_fields = [], [T.StructField("__s", T.IntegerType())]
+        for i, (rows, key_schema) in enumerate(keyed):
+            names = [f"__k{i}_{n}" for n in key_schema.names]
+            keys.append(
+                pa.Table.from_pylist(rows, schema=to_arrow_schema(key_schema))
+                .rename_columns(names)
+                .append_column("__s", pa.array([i] * len(rows), pa.int32()))
+            )
+            key_fields += [T.StructField(n, f.dataType) for n, f in zip(names, key_schema)]
+        schema = T.StructType(key_fields)
+        rel = self.spark.createDataFrame(
+            pa.concat_tables(keys, promote_options="default").select(schema.names), schema=schema
+        )
+        aggs = [
+            c
+            for i, spec in enumerate(specs)
+            for c in self._sketch_cols(
+                spec,
+                [F.col(f.name) for f in key_fields if f.name.startswith(f"__k{i}_")],
+                i,
+                where=F.col("__s") == i,
+            )
+        ]
+        st = rel.coalesce(1).agg(*aggs).collect()[0]
+        for i, spec in enumerate(specs):
+            self._refresh_index_stats(spec, st, suffix=i)
 
     @staticmethod
     def _min_max(values) -> tuple:
@@ -1582,7 +1542,7 @@ class Store:
 
     def _append_postings(self, spec: IndexSpec, src: DataFrame, n_rows: int) -> None:
         """Distributed posting build of one index for a batch of ``n_rows``
-        rows above the driver-build bound."""
+        rows that :meth:`_index_tables` does not take."""
         if spec.kind == TRIGRAM:
             # inverted n-gram postings: every distinct trigram of every
             # value, deduped per file — key space bounded by alphabet³,
@@ -1637,8 +1597,8 @@ class Store:
             postings.unpersist()
 
     def _append_blooms(self, spec: IndexSpec, src: DataFrame) -> None:
-        """Distributed bloom build for a batch above the driver-build
-        bound: one bitset per data file, appended as an index part with
+        """Distributed bloom build for a batch that :meth:`_index_tables`
+        does not take: one bitset per data file, appended as an index part with
         rows ``(__file_id, bloom)``. k bit positions per row (JVM-side md5
         expr), distinct per file, packed to a binary bitset by a tiny UDF
         that runs once per FILE (not per row); the key sketch rides the
@@ -1698,13 +1658,6 @@ class Store:
     # pushed-down point probe reads one shard, not the whole part
     POSTING_SHARD_ROWS = 1_000_000
 
-    # batches at or below this many rows build their index parts on the
-    # DRIVER: the posting set is bounded by the batch row count, so every
-    # index's stats and postings fuse into one Spark job and pyarrow writes
-    # the (sorted, single-file) parts with no second job — the streaming /
-    # matview micro-commit floor. Bulk loads keep the distributed path.
-    POSTING_DRIVER_BUILD_ROWS = 20_000
-
     # introspection: True when the last changes()/diff() on this instance
     # served its delete tier from the change-data-feed changelog, False
     # when it fell back to snapshot diffing, None before any CDC read
@@ -1713,9 +1666,9 @@ class Store:
 
     # victim sets at or below this many rows derive their tombstone /
     # per-file attribution from a DRIVER-SIDE pyarrow read of the tiny
-    # changelog (zero Spark jobs) instead of a Spark job — the posting
-    # driver-build bound's sibling, sized so the driver holds at most a
-    # couple hundred thousand (rowid, path) values
+    # changelog (zero Spark jobs) instead of a Spark job — the driver
+    # bound's sibling, sized so the driver holds at most a couple hundred
+    # thousand (rowid, path) values
     CDF_DRIVER_READ_ROWS = 200_000
 
     # tombstone sets at or below this many rows are read on the driver
@@ -1739,12 +1692,13 @@ class Store:
 
     @staticmethod
     def _sketch_cols(
-        spec: IndexSpec, keys: Sequence[Column], suffix: int | str = ""
+        spec: IndexSpec, keys: Sequence[Column], suffix: int | str = "", where: Column | None = None
     ) -> list[Column]:
-        """The HLL sketch of the index keys ``keys`` merged into the
-        spec's stored sketch (``hll_union``, inside the same aggregate —
-        no merge job of its own; no stored sketch, as after ``compact``,
-        starts from scratch), and its estimate. Keys are sketched as
+        """The HLL sketch of the index keys ``keys`` (of the rows that
+        pass ``where``, when given) merged into the spec's stored sketch
+        (``hll_union``, inside the same aggregate — no merge job of its
+        own; no stored sketch, as after ``compact``, starts from scratch),
+        and its estimate. Keys are sketched as
         strings (injective per type) because HLL sketch aggregation
         supports int/long/string/binary but not double."""
         import base64
@@ -1763,7 +1717,7 @@ class Store:
             )
         else:
             key = keys[0].cast("string")
-        sk = F.hll_sketch_agg(key)
+        sk = F.hll_sketch_agg(key if where is None else F.when(where, key))
         if spec.sketch:
             sk = F.hll_union(F.lit(bytearray(base64.b64decode(spec.sketch))), sk)
         return [sk.alias(f"__sk{suffix}"), F.hll_sketch_estimate(sk).alias(f"__ndv{suffix}")]
@@ -2775,8 +2729,8 @@ class Store:
         tombstone set) are deleted from on the driver with no Spark job —
         the reference's in-process delete (``src/lib.rs:140-169``); see
         :meth:`_delete_driver`. Bigger candidate sets run Spark jobs: the
-        changelog write, and for copy-on-write the survivors' write and
-        their index job.
+        changelog write, and for copy-on-write the survivors' write (and,
+        above ``DRIVER_INSERT_ROWS`` survivor rows, their index jobs).
 
         Index ndv (the cost model's ``rows/ndv``, ``src/idx.rs:71-78``) is
         exact after inserts and after ``compact``, and an upper bound
@@ -2822,7 +2776,7 @@ class Store:
         if tables is not None:
             cols = self.colnames if residual is not None else self._cond_columns(conds)
             return self._delete_driver(pred, cols, defer, candidates, tables, cdf_rel)
-        small = self.manifest.live_rows <= self.POSTING_DRIVER_BUILD_ROWS
+        small = self.manifest.live_rows <= self.DRIVER_INSERT_ROWS
 
         if defer:
             vic = self._read_files(candidates).filter(pred)
@@ -2838,9 +2792,9 @@ class Store:
             victims_rel = self._victims_rel()
             # tombstone rowids come from the tiny changelog, not a second
             # scan of the candidate files; small victim sets concatenate
-            # DRIVER-SIDE with pyarrow (one file, ZERO Spark jobs — the
-            # posting-driver-build precedent), so the deferred delete's
-            # only job over the big relation is the changelog write itself
+            # DRIVER-SIDE with pyarrow (one file, ZERO Spark jobs), so the
+            # deferred delete's only job over the big relation is the
+            # changelog write itself
             if n <= self.CDF_DRIVER_READ_ROWS:
                 import pyarrow as pa
 
@@ -3060,7 +3014,9 @@ class Store:
             # and the survivors' new files are indexed incrementally — their
             # keys are already in every sketch, so ndv stays an upper bound
             # until compact (the deferred delete's contract)
-            self._index_files(list(self.manifest.indices.values()), new_files, survivors)
+            self._index_files(
+                list(self.manifest.indices.values()), new_files, survivors, sketch=False
+            )
             self.manifest.pending_cdf = [cdf_rel]
             self._staged = True
 
@@ -3666,6 +3622,7 @@ class Store:
         done = self._apply_changes_driver(delta)
         if done is not None:
             return done
+        wm = self.manifest.rowid
         delta = delta.persist()
         # a rejected or failed apply leaves nothing staged (_txn); orphan
         # parquet dirs it wrote are inert and vacuumable, same as merge()
@@ -3767,14 +3724,16 @@ class Store:
                     self._cluster_batch(ins, n_ins - n_res).write.parquet(self._abs(batch_rel))
                     self._register_and_index(batch_rel)
                 if n_ins:
-                    self.manifest.rowid = max(self.manifest.rowid, int(st["hi"]) + 1)
+                    self.manifest.rowid = max(wm, int(st["hi"]) + 1)
                 if n_ins or n_del:
-                    if n_del or n_res:
-                        # the applied deletes were only materialized as rowids
-                        # (and a resurrection purge is not a delete at all) —
-                        # mark the commit non-changelogged; the follower's own
+                    if n_del or (n_ins and int(st["lo"]) < wm):
+                        # the applied deletes were only materialized as rowids,
+                        # and an insert below the watermark (a resurrection,
+                        # purged or re-inserted) escapes the changelog tier's
+                        # ``rowid >= watermark`` insert filter — mark the
+                        # commit non-changelogged; the follower's own
                         # downstream CDC falls back to snapshot diffing across
-                        # it. Insert-only applications stay changelog-clean.
+                        # it. Appends above the watermark stay changelog-clean.
                         self.manifest.pending_cdf = None
                     self._staged = True
                 return n_ins, n_del
@@ -3786,36 +3745,21 @@ class Store:
         deleted) or None when ineligible. Semantics identical to the
         distributed path (collision guard, resurrection purge, live-set
         delete masking, one atomic commit) — only the execution venue
-        changes: the delta arrives via one bounded collect, the follower's
-        live/tombstone rowid sets come from parquet footers and pyarrow
-        column reads, and the staged tombstone / data files are written
-        with pyarrow (the driver-insert kernel's layout)."""
-        schema = self.manifest.schema
-        if not all(self._driver_atomic_type(f.dataType) for f in schema.fields):
-            return None
-        if sum(f.rows for f in self.manifest.files) > self.POSTING_DRIVER_BUILD_ROWS:
-            return None
-        tomb_ids = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
-        if tomb_ids is None:
+        changes: the follower's live rowids come from :meth:`_driver_tables`
+        (which gates the follower), the delta arrives via one bounded
+        collect, and the staged tombstone and data file are written with
+        pyarrow (the inserted rows laid out by :meth:`_arrow_batch`)."""
+        tables = self._driver_tables(self.manifest.files, [ROWID])
+        if tables is None:
             return None
         cap = self.DRIVER_INSERT_ROWS
         rows = delta.limit(cap + 1).collect()
         if len(rows) > cap:
             return None  # bulk delta: the distributed path's parallelism earns its jobs
-        names = schema.fieldNames()
+        names = self.manifest.schema.fieldNames()
         ins = [r for r in rows if r["change_type"] == "insert"]
         del_ids = {int(r[ROWID]) for r in rows if r["change_type"] == "delete"}
-        n_ins = len(ins)
-        # follower rowid sets, footer/pyarrow-read (zero jobs)
-        all_ids: set[int] = set()
-        for f in self.manifest.files:
-            all_ids.update(
-                pq.read_table(self._abs(f.path), columns=[ROWID])
-                .column(ROWID)
-                .to_pylist()
-            )
-        tomb = set(tomb_ids)
-        live = all_ids - tomb
+        live = {i for t in tables for i in t.column(ROWID).to_pylist()}
         ins_ids = {int(r[ROWID]) for r in ins}
         n_clash = len(ins_ids & live)
         if n_clash:
@@ -3826,36 +3770,21 @@ class Store:
             )
         # resurrection purge: un-mask tombstoned rowids the delta
         # re-inserts (same commit); the rest insert physically
+        tomb = set(self._tomb_ids(self.CDF_DRIVER_READ_ROWS))
         res_ids = ins_ids & tomb
-        ins = [r for r in ins if int(r[ROWID]) not in res_ids]
         victims = sorted(del_ids & live)
         table = None
-        if ins:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            dts = [f.dataType for f in schema.fields]
-            sort_cols = self._cluster_cols()
-            idxs = [names.index(c) + 1 for c in sort_cols]
-            try:
-                tuples = [
-                    (int(r[ROWID]),)
-                    + tuple(self._driver_cell(dt, r[c]) for dt, c in zip(dts, names))
+        if len(ins_ids) > len(res_ids):
+            table = self._arrow_batch(
+                [
+                    (int(r[ROWID]), *(r[c] for c in names))
                     for r in ins
+                    if int(r[ROWID]) not in res_ids
                 ]
-                if sort_cols:
-                    tuples.sort(
-                        key=lambda t: tuple((t[i] is not None, t[i]) for i in idxs)
-                    )
-                table = pa.Table.from_pylist(
-                    [dict(zip([ROWID] + list(names), t)) for t in tuples],
-                    schema=to_arrow_schema(self._schema_with_rowid()),
-                )
-            except (TypeError, pa_err.ArrowInvalid, pa_err.ArrowTypeError):
-                # un-orderable sort values or cells pyarrow cannot coerce the
-                # way the Spark writer would: nothing is staged yet — let the
-                # distributed path decide
+            )
+            if table is None:
                 return None
+        wm = self.manifest.rowid
         with self._txn():
             if res_ids:
                 self._set_tombstones(sorted(tomb - res_ids), "p")
@@ -3871,14 +3800,16 @@ class Store:
                     "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                 )
                 self._write_arrow(batch_rel, table)
-                self._register_and_index(batch_rel)
-            if n_ins:
-                self.manifest.rowid = max(self.manifest.rowid, max(ins_ids) + 1)
-            if n_ins or victims:
-                if victims or res_ids:
+                self._register_and_index(batch_rel, [table])
+            if ins:
+                self.manifest.rowid = max(wm, max(ins_ids) + 1)
+            if ins or victims:
+                if victims or (ins and min(ins_ids) < wm):
+                    # see apply_changes: deletes and sub-watermark inserts
+                    # leave the commit without a changelog
                     self.manifest.pending_cdf = None
                 self._staged = True
-        return n_ins, len(victims)
+        return len(ins), len(victims)
 
     def _write_rowid_part(self, rel: str, rowids: list[int]) -> None:
         """One-file tombstone part written driver-side (pyarrow), matching

@@ -70,9 +70,7 @@ def _sized_state_shuffle(
     ~32 MB of input, at least 1, capped at 4096. A 2 MB local fixture gets
     1 partition (vs 32 session default: 4 state stores instead of 128 per
     trigger for a stream-stream join); a 100 TB/day source gets the cap.
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` pins an explicit count for deployments
-    whose state volume is not proportional to a bench-style bounded
-    source. Resumed checkpoints are unaffected (Spark reuses the
+    Resumed checkpoints are unaffected (Spark reuses the
     partition count recorded in the offset log).
 
     ``min_partitions`` floors the count for queries whose per-trigger
@@ -91,21 +89,16 @@ def _sized_state_shuffle(
     count is value-identical.
     """
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        n = max(1, int(env))
-    else:
-        total = sum(_source_bytes(p) for p in source_paths)
-        n = min(
-            _STREAM_MAX_PARTITIONS,
-            max(
-                1,
-                min(min_partitions, _STREAM_MAX_PARTITIONS),
-                math.ceil(total / _STREAM_BYTES_PER_PARTITION),
-            ),
-        )
+    total = sum(_source_bytes(p) for p in source_paths)
+    n = min(
+        _STREAM_MAX_PARTITIONS,
+        max(
+            1,
+            min(min_partitions, _STREAM_MAX_PARTITIONS),
+            math.ceil(total / _STREAM_BYTES_PER_PARTITION),
+        ),
+    )
     return scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 

@@ -240,8 +240,8 @@ def test_refresh_job_count_logged_and_bounded(spark, store_path):
     34-37 → 19-21 jobs), and a refresh whose delta the driver-side
     manifest arithmetic bounds small compiles statically — AQE was
     materializing each of the tiny plan's ~8 exchanges as its own job —
-    plus the merge reuses the materialized rows instead of
-    re-checkpointing (stable_input). 19-21 → 7-10 jobs measured, then 4
+    plus the merge's micro-batch insert writes the materialized rows in
+    one job, with no counts pass. 19-21 → 7-10 jobs measured, then 4
     once the merge's counts came from footers: the delta read, the
     merge's victim probe and its two writes."""
     st = _base(spark, str(store_path))

@@ -375,16 +375,15 @@ def test_defer_delete_merge_on_read(spark, store_path, tmp_path):
     assert len(st2) == 2
 
 
-def test_manifest_prune_latency_10k_files(spark, tmp_path):
-    """Judge ask r4 #7 (graduated): the driver-side stats prune now runs
-    as vectorized numpy comparisons over per-version columnar stat
-    arrays (`_stats_arrays`/`_prune_mask`) instead of a Python loop over
-    files — measured ~0.4 ms warm at 10k files (was ~5-15 ms). Pin the
-    warm path under 10 ms (10x tighter than the r4 bound, still loose
-    for CI noise); the one-off per-version array build is separately
-    bounded at 100 ms."""
-    import time
-
+def test_manifest_prune_latency_10k_files(spark, tmp_path, monkeypatch):
+    """The driver-side stats prune over 10k files runs as vectorized
+    numpy comparisons over per-version columnar stat arrays
+    (`_stats_arrays`/`_prune_mask`), not a Python loop over files —
+    measured ~0.4 ms warm at 10k files (was ~5-15 ms). Pinned by
+    structure, not by wall clock, so host load cannot fail it: the
+    per-file check `_file_may_match` is never called across three
+    prunes, and the 10k-file stats walk that builds the arrays runs once
+    (the warm prunes reuse its cached result)."""
     from pyspark.sql import types as T
 
     from shortcut_spark import between
@@ -408,25 +407,28 @@ def test_manifest_prune_latency_10k_files(spark, tmp_path):
     man.next_file_id = 10_000
     man.rowid = 10_000_000
     st = Store(spark, str(tmp_path / "synthetic"), man)
+    per_file = []
+    monkeypatch.setattr(
+        Store, "_file_may_match", staticmethod(lambda *a: per_file.append(a) or True)
+    )
+    walks = []
 
-    t0 = time.perf_counter()
+    class Cache(dict):
+        def __setitem__(self, key, value):  # _stats_arrays caches each walk
+            walks.append(key)
+            super().__setitem__(key, value)
+
+    st._stats_np = Cache()
+
     _, files_cold = st._prune_files([eq("k", 42)])
-    dt_cold = time.perf_counter() - t0  # includes the one-off array build
     assert len(files_cold) == 1
-    assert dt_cold < 0.1, f"cold prune (array build) took {dt_cold:.3f}s"
-
-    t0 = time.perf_counter()
     _, files_range = st._prune_files([between("k", 50_000, 50_090)])
-    dt_range = time.perf_counter() - t0
     assert len(files_range) == 10  # exactly the overlapping files survive
-
-    t0 = time.perf_counter()
     _, files_eq = st._prune_files([eq("k", 42)])
-    dt_eq = time.perf_counter() - t0
     assert len(files_eq) == 1
 
-    assert dt_range < 0.01, f"warm range prune took {dt_range:.4f}s over 10k files"
-    assert dt_eq < 0.01, f"warm eq prune took {dt_eq:.4f}s over 10k files"
+    assert per_file == []
+    assert [w[0] for w in walks] == ["k"]
 
 
 def test_partitioned_manifest_prunes_without_full_load(spark, tmp_path):
@@ -1232,6 +1234,36 @@ def test_apply_changes_driver_and_distributed_venues_agree(spark, store_path, tm
     for f in (drv, dist):
         with pytest.raises(ValueError, match="collide"):
             f.apply_changes(leader.changes(v0))
+
+
+@pytest.mark.parametrize("bound", [None, -1], ids=["driver", "spark"])
+def test_follower_changes_see_rows_reinserted_below_watermark(
+    spark, store_path, tmp_path, bound
+):
+    """A leader restore re-inserts a row the follower has compacted away:
+    the follower's apply writes it again below its rowid watermark, and
+    the follower's own change feed must report that insert — its
+    changelog tier keeps only rows at or above the watermark, so the
+    apply must not leave the commit changelog-clean."""
+    leader = Store.create(spark, store_path, 2)
+    follower = Store.create(spark, str(tmp_path / "f"), 2)
+    if bound is not None:
+        follower.DRIVER_INSERT_ROWS = bound
+    vc = leader.manifest.version
+    leader.insert([(f"k{i}", str(i)) for i in range(10)])
+    v1 = leader.manifest.version
+    follower.apply_changes(leader.changes(vc))
+    leader.delete([eq(0, "k5")])
+    v2 = leader.manifest.version
+    follower.apply_changes(leader.changes(v1))
+    follower.compact()
+    assert follower.manifest.tombstone_rows == 0
+    v_before = follower.manifest.version
+    leader.restore(v1)
+    assert follower.apply_changes(leader.changes(v2)) == (1, 0)
+    assert rows_of(follower.find([])) == rows_of(leader.find([]))
+    got = follower.changes(v_before).collect()
+    assert [(r["change_type"], r[ROWID], r["c0"]) for r in got] == [("insert", 5, "k5")]
 
 
 @pytest.mark.slow
@@ -2413,10 +2445,11 @@ def test_merge_micro_batch_equivalent_to_default(spark, tmp_path):
     assert rows_of(b.find([eq(0, "a")])) == [("a", "A_NEW")]  # postings see the batch
 
 
-def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path, monkeypatch):
+def test_bulk_insert_arithmetic_rowids_are_dense(spark, tmp_path):
     """The exchange-free rowid arithmetic (mid's low bits + per-partition
-    offsets) assigns EXACTLY the rowids the row_number window plan does —
-    full (rowid, row) sets byte-identical on a multi-partition batch."""
+    offsets) numbers a multi-partition batch densely: its rowids are
+    exactly [watermark, watermark + n), one row each, and the next
+    insert continues the sequence."""
     import pyspark.sql.functions as F
 
     src_path = str(tmp_path / "bulk.parquet")
@@ -2427,18 +2460,19 @@ def test_bulk_insert_arithmetic_rowids_match_window_plan(spark, tmp_path, monkey
     src = spark.read.parquet(src_path)
 
     a = make(spark, str(tmp_path / "arith"), AXB, index_col=0)
+    wm = a.manifest.rowid
     assert a.insert(src) == 5000
-    # a failed layout guard forces the window plan
-    monkeypatch.setattr(Store, "_rowid_layout_dense", staticmethod(lambda stats: False))
-    b = make(spark, str(tmp_path / "win"), AXB, index_col=0)
-    assert b.insert(src) == 5000
-    rows_a = sorted(map(tuple, a.find([], with_rowid=True).collect()))
-    rows_b = sorted(map(tuple, b.find([], with_rowid=True).collect()))
-    assert rows_a == rows_b  # same rowid -> same row, bit for bit
-    assert a.manifest.rowid == b.manifest.rowid  # dense watermark advance
+    got = a.find([], with_rowid=True).filter(F.col(ROWID) >= wm).collect()
+    assert sorted(r[ROWID] for r in got) == list(range(wm, wm + 5000))
+    assert sorted(r["c1"] for r in got) == sorted(str(i) for i in range(5000))
+    assert a.manifest.rowid == wm + 5000  # dense watermark advance
+    assert a.insert([("z", "after")]) == 1
+    assert rows_of(a.find([eq(0, "z")], with_rowid=True)) == [(wm + 5000, "z", "after")]
     # postings built through the observe()-fused single-job path still
     # serve point lookups
-    assert rows_of(a.find([eq(0, "k13")])) == rows_of(b.find([eq(0, "k13")]))
+    assert sorted(r["c1"] for r in a.find([eq(0, "k13")]).collect()) == sorted(
+        str(i) for i in range(13, 5000, 997)
+    )
 
 
 def test_insert_empty_dataframe_batch_is_free(spark, tmp_path):
@@ -2622,7 +2656,7 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     from pyspark.sql import functions as F
 
     st = _two_index_store(spark, str(tmp_path / "s"), batches=3)
-    st.POSTING_DRIVER_BUILD_ROWS = 50  # the next batch takes the observe() path
+    st.DRIVER_INSERT_ROWS = 50  # the next batch takes the observe() path
     st.insert(
         spark.range(300, 420).select(
             F.col("id").alias("k"), (F.col("id") / 2).alias("v"), F.lit("d").alias("s")
@@ -2633,10 +2667,12 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
         ndv, sk = _scratch_sketch(spark, st, column)
         assert spec.ndv == ndv
         assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+    del st.DRIVER_INSERT_ROWS  # a driver delete, its survivors indexed from arrow
     st.delete([between("k", 0, 99)])  # a third of the keys vanish
     for column in ("k", "v"):
         assert st.manifest.indices[column].ndv >= _exact_ndv(st, column)
         assert st.manifest.indices[column].rows == len(st)
+    st.DRIVER_INSERT_ROWS = 50  # the compacted files take the observe() path
     st.compact(target_files=2)
     for column in ("k", "v"):
         spec = st.manifest.indices[column]
@@ -2645,10 +2681,11 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
         assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
 
 
-def _all_kinds_store(spark, path, driver_rows):
+def _all_kinds_store(spark, path, driver_rows, frame=False):
     """Hash, trigram, case-insensitive trigram, bloom and composite indexes
-    over two 30-row literal inserts; ``driver_rows`` is the posting
-    driver-build bound (0: every index takes the distributed build)."""
+    over two 30-row inserts, literal or (``frame``) DataFrame batches;
+    ``driver_rows`` is ``DRIVER_INSERT_ROWS`` (0: Spark writes every batch
+    and every index takes the distributed build)."""
     from pyspark.sql import types as T
 
     from shortcut_spark import BloomIndex, TrigramIndex
@@ -2666,36 +2703,40 @@ def _all_kinds_store(spark, path, driver_rows):
         for i in range(60)
     ]
     st = Store.create(spark, path, schema)
-    st.POSTING_DRIVER_BUILD_ROWS = driver_rows
+    st.DRIVER_INSERT_ROWS = driver_rows
     st.index("a", TrigramIndex)
     st.index("b", TrigramIndex(case_insensitive=True))
     st.index("n", BloomIndex(m_bits=1 << 10, k=3))
     st.index(("a", "n"))
     st.index("h", HashIndex)
     for lo in (0, 30):
-        st.insert(rows[lo : lo + 30])
+        batch = rows[lo : lo + 30]
+        st.insert(spark.createDataFrame(batch, schema) if frame else batch)
     return st
 
 
 def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
-    """The one-job driver build of a small batch writes the same index
-    content as the per-index distributed build: posting sets (key, file
-    id) of hash, composite and two trigram indexes, bloom bitsets per
-    file, and ndv — so every kind rides the fused job unchanged."""
-    fused = _all_kinds_store(spark, str(tmp_path / "fused"), 20_000)
+    """The driver build of a small batch (one job: the key sketch) writes
+    the same index content as the per-index distributed build: posting
+    sets (key, file id) of hash, composite and two trigram indexes, bloom
+    bitsets per file, and ndv. A literal batch is indexed from the arrow
+    table the driver wrote; a DataFrame batch, written by Spark, from a
+    pyarrow read of its index columns."""
     dist = _all_kinds_store(spark, str(tmp_path / "dist"), 0)
-    for column in ("a", "b", "a,n", "h"):
-        got = [fused.manifest.indices[column], dist.manifest.indices[column]]
-        assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
-        post = [
-            sorted(map(tuple, st._read_postings(spec).collect()), key=repr)
-            for st, spec in zip((fused, dist), got)
-        ]
-        assert post[0] == post[1] and post[0]
-    bloom = [st.manifest.indices["n"] for st in (fused, dist)]
-    assert bloom[0].ndv == bloom[1].ndv == 7
-    assert fused._bloom_map(bloom[0]) == dist._bloom_map(bloom[1])
-    assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
+    for frame in (False, True):
+        fused = _all_kinds_store(spark, str(tmp_path / f"fused{int(frame)}"), 20_000, frame)
+        for column in ("a", "b", "a,n", "h"):
+            got = [fused.manifest.indices[column], dist.manifest.indices[column]]
+            assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
+            post = [
+                sorted(map(tuple, st._read_postings(spec).collect()), key=repr)
+                for st, spec in zip((fused, dist), got)
+            ]
+            assert post[0] == post[1] and post[0], (frame, column)
+        bloom = [st.manifest.indices["n"] for st in (fused, dist)]
+        assert bloom[0].ndv == bloom[1].ndv == 7
+        assert fused._bloom_map(bloom[0]) == dist._bloom_map(bloom[1])
+        assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
 
 
 def test_posting_map_driver_read_matches_spark(spark, tmp_path):

@@ -825,6 +825,32 @@ def test_parquet_written_on_the_driver_only_by_write_arrow():
     assert len(calls) == 1
 
 
+def test_data_files_read_on_the_driver_only_by_arrow_read():
+    """The Store reads data files on the driver through one reader,
+    ``Store._arrow_read`` (schema-bound, INT96 at Spark's precision): a
+    raw ``pq.read_table`` appears only where it reads tombstone and
+    changelog dirs, in ``_tomb_ids`` and ``delete_filter``."""
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    readers = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "read_table"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "pq"
+            ):
+                readers.add(fn.name)
+    assert readers == {"_tomb_ids", "delete_filter"}, (
+        f"read data files on the driver with Store._arrow_read: {sorted(readers)}"
+    )
+
+
 def test_manifest_committed_only_by_txn():
     """One code path commits and rolls back: ``self._commit()`` is called
     only inside ``Store._txn``, and ``Manifest.commit`` only inside
