@@ -22,7 +22,17 @@ Maintenance theory (classic self-maintainable IVM):
 Exactness: sums are carried in the state as ``DECIMAL(27,6)`` (the repo's
 ``dsum`` convention), so incremental +/- is order-independent and the
 refreshed view is bit-identical to a from-scratch recompute — which is
-exactly what the DuckDB oracle does.
+exactly what the DuckDB oracle does. Each sum carries its non-null count
+(``__c_<name>``) beside it, so ``avg`` divides by it and a group with no
+non-null value reads NULL, as in SQL.
+
+Two venues, one algebra: a self-maintainable view whose change window the
+base's change feed serves, within ``Store.CDF_DRIVER_READ_ROWS`` change
+rows and a state the driver may read, refreshes on the driver with no
+Spark job (``_refresh_driver``: pyarrow reads, Spark's own decimal cast
+over a ``LocalRelation``, an exact Python combine, a driver ``merge``).
+Everything else — min/max views, windows the feed does not serve, bigger
+deltas or states — runs the same combine as a Spark plan.
 
 State storage is itself a ``Store`` (dogfooding): each refresh is ONE
 atomic ``merge`` commit keyed on a null-safe md5 group key, so readers see
@@ -34,9 +44,8 @@ drops them.
 
 100 TB story: refresh cost is ∝ |delta| + |touched groups|, not |base|.
 ``changes()`` prunes unread files driver-side by manifest ``max_rowid``,
-the state scan is bounded by view cardinality (and prunable via a hash
-index on ``__gk``), and the merge commit rewrites only the state files
-containing touched groups.
+the state scan is bounded by view cardinality, and the merge commit
+tombstones only the touched groups' state rows.
 """
 
 from __future__ import annotations
@@ -50,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import scoped_confs
-from .store import Store
+from .store import Store, _spark_key
 
 _DEC = T.DecimalType(27, 6)
 
@@ -140,6 +149,7 @@ class MatView:
         for name, kind, col in aggs:
             if kind in ("sum", "avg"):
                 fields.append(T.StructField(f"__s_{name}", _DEC, True))
+                fields.append(T.StructField(f"__c_{name}", T.LongType(), True))
             elif kind == "min":
                 fields.append(
                     T.StructField(f"__m_{name}", base_fields[col].dataType, True)
@@ -163,6 +173,16 @@ class MatView:
         if base is None:
             base = Store.open(spark, meta["base_path"])
         state = Store.open(spark, os.path.join(path, "state"))
+        missing = [
+            f"__c_{name}"
+            for name, kind, _ in meta["aggs"]
+            if kind in ("sum", "avg") and f"__c_{name}" not in state.schema.names
+        ]
+        if missing:
+            raise ValueError(
+                f"the view at {path!r} has no non-null counts {missing} (it "
+                "predates them); recreate it with MatView.create"
+            )
         # base_version prefers the STATE STORE's committed manifest props
         # (r12: refresh stamps it inside the merge's own manifest flip,
         # so state + version advance atomically — a crash between the old
@@ -206,6 +226,7 @@ class MatView:
         for name, kind, col in self.aggs:
             if kind in ("sum", "avg"):
                 exprs.append(F.sum(F.col(col).cast(_DEC)).alias(f"__s_{name}"))
+                exprs.append(F.count(F.col(col)).alias(f"__c_{name}"))
             elif kind == "min":
                 exprs.append(F.min(col).alias(f"__m_{name}"))
             elif kind == "max":
@@ -227,13 +248,19 @@ class MatView:
         """Bring the view up to the base's current version. Returns the
         number of groups touched (upserted into the state store).
 
-        Single-action refresh: the combined rows are materialized ONCE
-        (``localCheckpoint``) before the merge — the merge needs them
-        twice (victims key probe + the insert itself), and without the
-        cut each use would re-execute the whole delta-agg + state-scan +
-        join plan from scratch. Jobs per refresh are counted via a job
-        group and exposed as ``last_refresh_jobs`` (observability for
-        the many-small-jobs failure mode)."""
+        A self-maintainable view whose window the change feed serves, and
+        whose change rows and state the driver may read, refreshes with no
+        Spark job: :meth:`_refresh_driver` combines on the driver and the
+        state's ``merge`` of the literal rows is a driver merge. Every
+        other refresh runs on Spark, as a single action: the combined rows
+        are materialized ONCE (``localCheckpoint``) before the merge — the
+        merge needs them twice (victims key probe + the insert itself),
+        and without the cut each use would re-execute the whole delta-agg
+        + state-scan + join plan from scratch. Either way the view's new
+        base version commits in the merge's one state commit. Jobs per
+        refresh are counted via a job group and exposed as
+        ``last_refresh_jobs`` (observability for the many-small-jobs
+        failure mode)."""
         cur = self.base.manifest.version
         if cur == self.base_version:
             self.last_refresh_scanned_base = False
@@ -257,79 +284,38 @@ class MatView:
             )
         }
         sc.setJobGroup(group, f"matview refresh to v{cur}")
-        # Small-delta fast path (r9): a micro-batch refresh plan has ~8
-        # exchanges, and AQE materializes EACH as its own Spark job —
-        # measured 19-21 jobs per tiny refresh where the irreducible
-        # actions are four (delta materialization, victims write, rowid
-        # counts, batch write). When the driver-side manifest arithmetic
-        # (zero jobs: rowid watermark + live-row deltas) bounds the delta
-        # small, compile the refresh statically; a bulk delta keeps AQE
-        # (skew joins / partition coalescing earn their jobs there).
-        # Identical results either way — AQE only re-plans execution.
-        est = self._estimate_delta_rows(cur)
-        # the bypass must bound the PLAN's inputs, not just the delta.
-        # When the CDC window is CHANGE-DATA-FEED-served (r12) and the
-        # view is self-maintainable, the refresh plan never touches the
-        # base snapshots at all — its inputs are the appended-tier files
-        # (≈ est via rowid pruning), the delete changelog (≈ est), and
-        # the state store (semi-probe + combine join + merge victims) —
-        # so the gate bounds est + 2·STATE rows and a CoW delete on a
-        # non-tiny base still compiles statically (measured: the AQE
-        # plan materializes each tiny exchange as its own job).
-        # Otherwise the old snapshot-diff delete tier anti-joins base
-        # rowid scans, where AQE's dynamic broadcast earns its jobs
-        # (measured: sf0.1 base +35% without it) — the gate then bounds
-        # base + delta as before.
-        feed = (
-            self._self_maintainable
-            and self.base._cdf_window_rels(self.base_version) is not None
-        )
-        bound = (
-            self.state.manifest.live_rows
-            if feed
-            else self.base.manifest.live_rows
-        )
-        small = est is not None and est + 2 * bound <= 100_000
-        # static compile needs a STATIC partition count to match: with AQE
-        # off every exchange fans to the session's shuffle partitions
-        # (32 × ~8 exchanges ≈ 256 launch floors for a bounded-tiny delta
-        # — measured slower than the 19 AQE jobs it replaced); the gate
-        # already bounds the plan's inputs to ≤ 100k rows, which one
-        # partition handles comfortably
-        confs = (
-            {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "1"}
-            if small
-            else {}
-        )
         try:
+            rows = self._refresh_driver() if self._self_maintainable else None
+            confs = {} if rows is not None else self._static_confs(cur)
             with scoped_confs(self.spark, confs):
-                delta = self.base.changes(self.base_version)
-                if self._self_maintainable:
-                    touched = self._combine_self_maintainable(delta)
-                    self.last_refresh_scanned_base = False
-                else:
-                    touched = self._recompute_touched(delta)
-                    self.last_refresh_scanned_base = True
-                # lazy cut (r12, the CC convergence-probe pattern): the
-                # merge's victims probe is the first action over ``rows`` and
-                # materializes the checkpoint in ITS job; an eager checkpoint
-                # here was one whole extra job per refresh
-                rows = self._to_state_rows(touched).localCheckpoint(eager=False)
+                if rows is None:
+                    delta = self.base.changes(self.base_version)
+                    touched = (
+                        self._combine_self_maintainable(delta)
+                        if self._self_maintainable
+                        else self._recompute_touched(delta)
+                    )
+                    # lazy cut (r12): the merge's victims probe is the first
+                    # action over ``rows`` and materializes the checkpoint
+                    # in ITS job; an eager checkpoint was one extra job
+                    rows = self._to_state_rows(touched).localCheckpoint(eager=False)
                 try:
                     # The view's new base_version is STAGED as a manifest
                     # prop in the same transaction as the merge, so it
-                    # persists inside the merge's one atomic manifest flip (r12, the stream_epoch
-                    # pattern) and a failed merge takes it back: state and
-                    # version can never be durable separately.
-                    # micro_batch rides the SAME driver-side bound as the
-                    # static compile: the state upsert then lands in one
-                    # write job with footer-read counts (no counts pass).
+                    # persists inside the merge's one atomic manifest flip
+                    # (r12, the stream_epoch pattern) and a failed merge
+                    # takes it back: state and version can never be
+                    # durable separately. micro_batch rides the static
+                    # compile's driver-side bound: the state upsert then
+                    # lands in one write job with footer-read counts.
                     with self.state._txn():
                         self.state.manifest.props["mv_base_version"] = str(cur)
-                        n_groups, _ = self.state.merge(rows, on=_GK, micro_batch=small)
+                        n_groups, _ = self.state.merge(rows, on=_GK, micro_batch=bool(confs))
                 finally:
-                    rows.unpersist()
-                self.base_version = cur
+                    if isinstance(rows, DataFrame):
+                        rows.unpersist()
+            self.last_refresh_scanned_base = not self._self_maintainable
+            self.base_version = cur
         finally:
             for k, v in saved.items():
                 sc.setLocalProperty(k, v)
@@ -337,6 +323,35 @@ class MatView:
             sc.statusTracker().getJobIdsForGroup(group)
         )
         return n_groups
+
+    def _static_confs(self, cur: int) -> dict:
+        """The session confs of a Spark refresh to ``cur``: AQE off and one
+        shuffle partition when the plan's inputs are bounded small, else
+        none (r9). A micro-batch refresh plan has ~8 exchanges and AQE
+        materializes EACH as its own Spark job; a bulk delta keeps AQE
+        (skew joins / partition coalescing earn their jobs there).
+        Identical results either way — AQE only re-plans execution. When
+        the change feed serves a self-maintainable view's window, the plan
+        never touches the base snapshots — its inputs are the delta (≈
+        est) and the state store (semi-probe + combine join + merge
+        victims), so the gate bounds est + 2·STATE rows; otherwise the
+        snapshot-diff delete tier anti-joins base rowid scans (AQE's
+        dynamic broadcast measured +35% at sf0.1) and the gate bounds
+        base + delta. With AQE off every exchange fans to the session's
+        shuffle partitions (32 × ~8 exchanges measured slower than the
+        AQE jobs), so the bounded plan runs on one partition. Kept after
+        the driver refresh took the small count/sum views: a 100-row
+        min/max refresh runs 5 jobs with it and 11 without, 0.48 s faster
+        (docs/SCALE.md, "Zero-job view refresh")."""
+        est = self._estimate_delta_rows(cur)
+        feed = (
+            self._self_maintainable
+            and self.base._cdf_window_rels(self.base_version) is not None
+        )
+        bound = self.state.manifest.live_rows if feed else self.base.manifest.live_rows
+        if est is None or est + 2 * bound > 100_000:
+            return {}
+        return {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "1"}
 
     def _estimate_delta_rows(self, cur_version: int) -> int | None:
         """Driver-side (zero-job) estimate of the CDC delta's row count
@@ -375,6 +390,9 @@ class MatView:
                         )
                     ).alias(f"__ds_{name}")
                 )
+                exprs.append(
+                    F.sum(F.when(F.col(col).isNotNull(), sgn)).alias(f"__dc_{name}")
+                )
         d = (
             delta.groupBy(*self.keys)
             .agg(*exprs)
@@ -404,7 +422,117 @@ class MatView:
                     .cast(_DEC)
                     .alias(f"__s_{name}")
                 )
+                sel.append(
+                    (
+                        F.coalesce(F.col(f"o.__c_{name}"), F.lit(0))
+                        + F.coalesce(F.col(f"d.__dc_{name}"), F.lit(0))
+                    ).alias(f"__c_{name}")
+                )
         return comb.select(*sel)
+
+    def _refresh_driver(self) -> list[tuple] | None:
+        """The driver twin of :meth:`_combine_self_maintainable`, with its
+        semantics and no Spark job: the touched groups' new state rows,
+        in state schema order, for :meth:`refresh` to merge. None for a
+        keyless view (one global group), when the base cannot serve the
+        change window on the driver
+        (:meth:`Store._change_tables`), the driver may not read the state
+        (:meth:`Store._driver_tables`), or a decimal cast or a combined
+        sum overflows ``DECIMAL(27,6)`` — before anything is staged, so the
+        Spark path decides (under ANSI it raises).
+
+        The window's rows are grouped with Spark's grouping equality
+        (:func:`_spark_key`). Each summed value is Spark's own
+        ``cast(v as DECIMAL(27,6))``, from a projection over an Arrow-built
+        ``LocalRelation`` that ``ConvertToLocalRelation`` evaluates on the
+        driver (pyarrow's cast rounds the binary double and Spark its
+        decimal string, so they differ; docs/SCALE.md), and the signed
+        values are summed exactly in Python. Each group's ``__gk`` comes
+        from :func:`_gk_expr` over a ``LocalRelation`` of the distinct
+        keys, and the combine adds old state and signed delta: a group
+        that nets to zero stays as an ``__n = 0`` row."""
+        import decimal
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if not self.keys:
+            return None
+        sums = [(name, col) for name, kind, col in self.aggs if kind in ("sum", "avg")]
+        got = self.base._change_tables(
+            self.base_version, list(dict.fromkeys([*self.keys, *(c for _, c in sums)]))
+        )
+        if got is None:
+            return None
+        state = self.state._driver_tables(self.state.manifest.files)
+        if state is None:
+            return None
+        ins, dels = got
+        n_ins = ins.num_rows
+        if not n_ins + dels.num_rows:
+            return []
+        schema = self.base.schema
+        # the distinct summed columns, Spark-cast row by row
+        scols = list(dict.fromkeys(c for _, c in sums))
+        vals = [()] * (n_ins + dels.num_rows)
+        if scols:
+            rel = self.state._local_relation(
+                [t.select(scols) for t in (ins, dels)], T.StructType([schema[c] for c in scols])
+            )
+            vals = rel.select(*[F.col(c).try_cast(_DEC) for c in scols]).collect()
+            # a non-null value whose cast is NULL overflowed (or was NaN)
+            if [sum(v is None for v in col) for col in zip(*vals)] != [
+                ins[c].null_count + dels[c].null_count for c in scols
+            ]:
+                return None
+        keys = zip(*[ins[k].to_pylist() + dels[k].to_pylist() for k in self.keys])
+        # group -> [key, Δ__n, Δ sum and Δ non-null count per summed column]
+        groups: dict = {}
+        # exact: at most CDF_DRIVER_READ_ROWS terms, each below 10**21
+        with decimal.localcontext(prec=60):
+            for i, (key, v) in enumerate(zip(keys, vals)):
+                sgn = 1 if i < n_ins else -1
+                g = groups.get(ck := tuple(map(_spark_key, key)))
+                if g is None:
+                    key = [x + 0.0 if isinstance(x, float) else x for x in key]
+                    g = groups[ck] = [key, 0, [0] * len(scols), [0] * len(scols)]
+                g[1] += sgn
+                for j, d in enumerate(v):
+                    if d is not None:
+                        g[2][j] += sgn * d
+                        g[3][j] += sgn
+            kschema = T.StructType([schema[k] for k in self.keys])
+            keys = pa.Table.from_pylist(
+                [
+                    {f.name: Store._driver_cell(f.dataType, v) for f, v in zip(kschema, g[0])}
+                    for g in groups.values()
+                ],
+                schema=to_arrow_schema(kschema),
+            )
+            gks = [
+                r[0]
+                for r in self.state._local_relation([keys], kschema)
+                .select(_gk_expr(self.keys))
+                .collect()
+            ]
+            want = pa.array(gks, pa.string())
+            old = {
+                r[_GK]: r for t in state for r in t.filter(pc.is_in(t[_GK], want)).to_pylist()
+            }
+            limit = decimal.Decimal(10) ** 21
+            out = []
+            for (key, dn, ds, dc), gk in zip(groups.values(), gks):
+                new = {**dict(zip(self.keys, key)), **old.get(gk, {}), _GK: gk}
+                new[_N] = (new.get(_N) or 0) + dn
+                for name, col in sums:
+                    j = scols.index(col)
+                    new[f"__s_{name}"] = (new.get(f"__s_{name}") or 0) + ds[j]
+                    if abs(new[f"__s_{name}"]) >= limit:
+                        return None
+                    new[f"__c_{name}"] = (new.get(f"__c_{name}") or 0) + dc[j]
+                out.append(tuple(new[f] for f in self.state.schema.names))
+        return out
 
     def _recompute_touched(self, delta: DataFrame) -> DataFrame:
         """min/max path: recompute ONLY the touched groups from the base.
@@ -430,6 +558,7 @@ class MatView:
         for name, kind, col in self.aggs:
             if kind in ("sum", "avg"):
                 zero = zero.withColumn(f"__s_{name}", F.lit(None).cast(_DEC))
+                zero = zero.withColumn(f"__c_{name}", F.lit(0).cast("long"))
             elif kind == "min":
                 dt = dict((f.name, f.dataType) for f in self.state.schema.fields)[
                     f"__m_{name}"
@@ -446,19 +575,17 @@ class MatView:
 
     def read(self) -> DataFrame:
         """The view in user shape: group keys + finalized aggregates.
-        avg finalizes as exact-decimal sum (cast double) / count — the
-        ``davg`` twin convention."""
+        avg finalizes as exact-decimal sum (cast double) / non-null count
+        — the ``davg`` twin convention; as in SQL, sum and avg are NULL
+        for a group with no non-null value."""
         df = self.state.find([]).filter(F.col(_N) > 0)
         sel = [F.col(k) for k in self.keys]
         for name, kind, col in self.aggs:
             if kind == "count":
                 sel.append(F.col(_N).alias(name))
-            elif kind == "sum":
-                sel.append(F.col(f"__s_{name}").cast("double").alias(name))
-            elif kind == "avg":
-                sel.append(
-                    (F.col(f"__s_{name}").cast("double") / F.col(_N)).alias(name)
-                )
+            elif kind in ("sum", "avg"):
+                s, c = F.col(f"__s_{name}").cast("double"), F.col(f"__c_{name}")
+                sel.append(F.when(c > 0, s if kind == "sum" else s / c).alias(name))
             elif kind == "min":
                 sel.append(F.col(f"__m_{name}").alias(name))
             elif kind == "max":

@@ -90,6 +90,15 @@ def _bloom_positions_expr(column: str, m_bits: int, k: int) -> Column:
     )
 
 
+def _spark_key(v):
+    """``v`` as a Python dict key that is equal exactly where Spark's
+    grouping and equi-join keys are: ``-0.0`` is ``0.0``, every NaN is one
+    key (Python's NaN is not equal to itself) and binary is hashable."""
+    if isinstance(v, float):
+        return "NaN" if v != v else v + 0.0
+    return bytes(v) if isinstance(v, bytearray) else v
+
+
 def _default_schema(cols: int) -> T.StructType:
     """``Store::new(cols)`` has positional, homogeneously-typed columns
     (``src/lib.rs:4-5,80-87``); default them to strings named c0..cN-1."""
@@ -288,9 +297,11 @@ class Store:
         ``CDF_DRIVER_READ_ROWS`` rows. The one gate and reader of every
         driver kernel that reads data files: the lookups
         (:meth:`_read_lookup`), the small deletes (:meth:`delete_filter`),
-        the unique-key probe (:meth:`_existing_key_driver`) and the CDC
-        apply (:meth:`_apply_changes_driver`); docs/SCALE.md has the
-        crossovers."""
+        the unique-key probe (:meth:`_existing_key_driver`), the CDC
+        apply (:meth:`_apply_changes_driver`), the literal merge
+        (:meth:`merge`) and a view refresh's state read; only the change
+        feed's own reader (:meth:`_change_tables`) bounds its rows by
+        ``CDF_DRIVER_READ_ROWS``. docs/SCALE.md has the crossovers."""
         if (
             sum(f.rows for f in files) > self.DRIVER_INSERT_ROWS
             or not all(self._driver_atomic_type(f.dataType) for f in self.manifest.schema)
@@ -316,10 +327,19 @@ class Store:
         tables = self._driver_tables(files)
         if tables is None:
             return self._read_files(files)
+        return self._local_relation(tables, self._schema_with_rowid())
+
+    def _local_relation(self, tables: list, schema: T.StructType) -> DataFrame:
+        """The rows of the arrow ``tables`` as one Arrow-built
+        ``LocalRelation`` in ``schema`` — the one way the driver kernels
+        hand rows to Spark. The chunks are combined first: pyspark's
+        ``createDataFrame`` drops every row after a zero-row record batch
+        that follows a non-empty one, and a file whose rows are all
+        tombstoned reads as one."""
         import pyarrow as pa
 
         return self.spark.createDataFrame(
-            pa.concat_tables(tables), schema=self._schema_with_rowid()
+            pa.concat_tables(tables).combine_chunks(), schema=schema
         )
 
     def _tombstone_df(self) -> DataFrame:
@@ -986,6 +1006,14 @@ class Store:
         appends — deduplicate NULL keys upstream if they should replace.
         Returns (rows_inserted, rows_replaced).
 
+        A literal batch into a store whose ``(__rowid, on)`` columns the
+        driver may read (:meth:`_driver_tables`) merges with no Spark job
+        when its insert takes :meth:`_insert_rows_driver` (an unindexed
+        store, such as a view's state): the victims are picked in Python
+        with Spark's join equality (:func:`_spark_key`: ``-0.0`` matches
+        ``0.0``, NaN matches NaN, NULL matches nothing) and the tombstone
+        is written with pyarrow.
+
         ``extra_victim_keys`` (r11): an additional single-column
         DataFrame of ``on``-keys to DELETE in the same commit (rows
         matching these keys are tombstoned whether or not the batch
@@ -997,23 +1025,36 @@ class Store:
         name = self.colnames[on] if isinstance(on, int) else on
         if name not in self.colnames:
             raise ValueError(f"no such column {name!r}")
+        tables = None
         if not isinstance(rows, DataFrame):
-            data = [tuple(r) for r in rows]
-            if not data:
+            rows = [tuple(r) for r in rows]
+            if not rows:
                 return (0, 0)
-            rows = self.spark.createDataFrame(data, self.manifest.schema)
-        keys = rows.select(F.col(name)).distinct()
-        if extra_victim_keys is not None:
-            keys = (
-                keys.unionByName(
-                    extra_victim_keys.select(
-                        F.col(extra_victim_keys.columns[0]).alias(name)
-                    )
-                ).distinct()
-            )
+            if extra_victim_keys is None:
+                tables = self._driver_tables(self.manifest.files, [ROWID, name])
+            if tables is None:
+                rows = self.spark.createDataFrame(rows, self.manifest.schema)
         n_staged = 0
+        victims_rel = os.path.join("tomb", f"m{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with self._txn():
-            if self.manifest.files:
+            if tables is not None:
+                i, dt = self.colnames.index(name), self.manifest.schema[name].dataType
+                keys = {_spark_key(self._driver_cell(dt, r[i])) for r in rows} - {None}
+                victims = [
+                    rid
+                    for t in tables
+                    for rid, k in zip(t[ROWID].to_pylist(), t[name].to_pylist())
+                    if k is not None and _spark_key(k) in keys
+                ]
+                if victims:
+                    self._write_rowid_part(victims_rel, victims)
+                n_staged = len(victims)
+            elif self.manifest.files:
+                keys = rows.select(F.col(name)).distinct()
+                if extra_victim_keys is not None:
+                    keys = keys.unionByName(
+                        extra_victim_keys.select(F.col(extra_victim_keys.columns[0]).alias(name))
+                    ).distinct()
                 # no broadcast hint: a typical upsert batch is small and AQE
                 # broadcasts it on its own; a bulk-load-sized batch must be
                 # free to shuffle instead of OOMing the driver
@@ -1031,9 +1072,6 @@ class Store:
                     # of a handful of rowids (r12, the _cluster_batch n=1
                     # precedent applied to the merge's staging write)
                     victims = victims.coalesce(1)
-                victims_rel = os.path.join(
-                    "tomb", f"m{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-                )
                 victims.write.parquet(self._abs(victims_rel))
                 # staged-row count from the freshly-written parquet footers
                 # (metadata-only, like _register_files) — the read-back
@@ -1041,21 +1079,21 @@ class Store:
                 # dominates micro-batch upserts (matview refresh, streaming
                 # merge_on ingestion)
                 n_staged = self._parquet_rows(victims_rel)
-                if n_staged:
-                    # staged in memory only — the insert's commit makes both
-                    # the tombstone and the new data visible atomically
-                    self.manifest.tombstones.append(victims_rel)
-                    self.manifest.tombstone_rows += n_staged
-                    # the victim probe is column-pruned to (rowid, key) and
-                    # never materializes full rows, so merge victims are NOT
-                    # changelogged — mark the commit accordingly and let a
-                    # CDC window crossing it take the snapshot-diff fallback
-                    self.manifest.pending_cdf = None
-                    self._staged = True
-                else:
+                if not n_staged:
                     import shutil
 
                     shutil.rmtree(self._abs(victims_rel), ignore_errors=True)
+            if n_staged:
+                # staged in memory only — the insert's commit makes both
+                # the tombstone and the new data visible atomically
+                self.manifest.tombstones.append(victims_rel)
+                self.manifest.tombstone_rows += n_staged
+                # the victim probe is column-pruned to (rowid, key) and
+                # never materializes full rows, so merge victims are NOT
+                # changelogged — mark the commit accordingly and let a
+                # CDC window crossing it take the snapshot-diff fallback
+                self.manifest.pending_cdf = None
+                self._staged = True
             inserted = self.insert(rows, micro_batch=micro_batch)
         return (inserted, n_staged)
 
@@ -1349,10 +1387,11 @@ class Store:
         indexed on the driver (:meth:`_index_tables`): from ``tables``,
         one arrow table per file, when the driver holds its rows (a
         driver insert or CDC apply, a small delete's survivors), else from
-        a pyarrow read of the index columns of the written files.
-        ``sketch=False`` skips the key sketch there (a copy-on-write
-        delete's survivors: their keys are already in it). Any other batch
-        writes each index's part with its own Spark job. The files are
+        a pyarrow read of the index columns of the written files. Any
+        other batch writes each index's part with its own Spark job.
+        ``sketch=False`` skips the key sketch on both venues and leaves
+        ndv as it is (a copy-on-write delete's survivors: their keys are
+        already in it). The files are
         read without the tombstone filter: fresh files hold no tombstoned
         rowid, and a posting for a dead row (an index backfill after a
         deferred delete) is only a superset, the state a deferred delete
@@ -1382,9 +1421,9 @@ class Store:
         )
         for spec in specs:
             if spec.kind == BLOOM:
-                self._append_blooms(spec, src)
+                self._append_blooms(spec, src, sketch)
             else:
-                self._append_postings(spec, src, n_rows)
+                self._append_postings(spec, src, n_rows, sketch)
 
     def _index_tables(
         self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list, sketch: bool
@@ -1422,9 +1461,9 @@ class Store:
         if derived:
             cols = [c for c in self.colnames if any(specs[i].column == c for i in derived)]
             fields = [self.manifest.schema[c] for c in cols]
-            rel = self.spark.createDataFrame(
-                src.select([*cols, "__file_id"]),
-                schema=T.StructType([*fields, T.StructField("__file_id", T.IntegerType())]),
+            rel = self._local_relation(
+                [src.select([*cols, "__file_id"])],
+                T.StructType([*fields, T.StructField("__file_id", T.IntegerType())]),
             )
             got = rel.select(
                 "__file_id", *[e.alias(f"__x{i}") for i, e in derived.items()]
@@ -1457,7 +1496,7 @@ class Store:
                 distinct = {}
                 for r in post.to_pylist():
                     r = {c: v + 0.0 if isinstance(v, float) else v for c, v in r.items()}
-                    distinct[tuple(repr(v) if isinstance(v, float) else v for v in r.values())] = r
+                    distinct[tuple(map(_spark_key, r.values()))] = r
                 rows = list(distinct.values())
                 lo, hi = self._min_max(src.column(spec.member_columns[0]))
             part_rel = self._write_index_part(spec, rows)
@@ -1476,8 +1515,8 @@ class Store:
             )
             key_fields += [T.StructField(n, f.dataType) for n, f in zip(names, key_schema)]
         schema = T.StructType(key_fields)
-        rel = self.spark.createDataFrame(
-            pa.concat_tables(keys, promote_options="default").select(schema.names), schema=schema
+        rel = self._local_relation(
+            [pa.concat_tables(keys, promote_options="default").select(schema.names)], schema
         )
         aggs = [
             c
@@ -1489,7 +1528,7 @@ class Store:
                 where=F.col("__s") == i,
             )
         ]
-        st = rel.coalesce(1).agg(*aggs).collect()[0]
+        st = rel.coalesce(1).agg(*aggs).collect()[0].asDict()
         for i, spec in enumerate(specs):
             self._refresh_index_stats(spec, st, suffix=i)
 
@@ -1540,9 +1579,12 @@ class Store:
         spec.parts.append(part_rel)
         return part_rel
 
-    def _append_postings(self, spec: IndexSpec, src: DataFrame, n_rows: int) -> None:
+    def _append_postings(
+        self, spec: IndexSpec, src: DataFrame, n_rows: int, sketch: bool
+    ) -> None:
         """Distributed posting build of one index for a batch of ``n_rows``
-        rows that :meth:`_index_tables` does not take."""
+        rows that :meth:`_index_tables` does not take; the key sketch only
+        when ``sketch``."""
         if spec.kind == TRIGRAM:
             # inverted n-gram postings: every distinct trigram of every
             # value, deduped per file — key space bounded by alphabet³,
@@ -1562,7 +1604,9 @@ class Store:
         postings = postings.distinct()
         rkey = postings.columns[0]
         keys = [F.col(c) for c in postings.columns[:-1]]
-        stats = [F.min(rkey).alias("__lo"), F.max(rkey).alias("__hi"), *self._sketch_cols(spec, keys)]
+        stats = [F.min(rkey).alias("__lo"), F.max(rkey).alias("__hi")]
+        if sketch:
+            stats += self._sketch_cols(spec, keys)
         part_rel = self._part_rel(spec)
         if n_rows <= self.POSTING_SHARD_ROWS:
             # posting rows ≤ batch rows ≤ one shard, so no count is needed
@@ -1581,7 +1625,7 @@ class Store:
             return
         postings = postings.persist()
         try:
-            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats).collect()[0]
+            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats).collect()[0].asDict()
             # range-shard the part so every output file covers a disjoint
             # key range: a point probe's pushed-down key predicate then
             # reads ~one shard's row groups, keeping probe IO sublinear in
@@ -1596,21 +1640,22 @@ class Store:
         finally:
             postings.unpersist()
 
-    def _append_blooms(self, spec: IndexSpec, src: DataFrame) -> None:
+    def _append_blooms(self, spec: IndexSpec, src: DataFrame, sketch: bool) -> None:
         """Distributed bloom build for a batch that :meth:`_index_tables`
         does not take: one bitset per data file, appended as an index part with
         rows ``(__file_id, bloom)``. k bit positions per row (JVM-side md5
         expr), distinct per file, packed to a binary bitset by a tiny UDF
-        that runs once per FILE (not per row); the key sketch rides the
-        same job via observe()."""
+        that runs once per FILE (not per row); the key sketch, when
+        ``sketch``, rides the same job via observe()."""
         from pyspark.sql import Observation
 
         m_bits = int(spec.params["m_bits"])
         k = int(spec.params["k"])
         obs = Observation()
+        if sketch:
+            src = src.observe(obs, *self._sketch_cols(spec, [F.col(spec.column)]))
         positions = (
-            src.observe(obs, *self._sketch_cols(spec, [F.col(spec.column)]))
-            .filter(F.col(spec.column).isNotNull())
+            src.filter(F.col(spec.column).isNotNull())
             .select(
                 "__file_id",
                 F.explode(_bloom_positions_expr(spec.column, m_bits, k)).alias("pos"),
@@ -1633,7 +1678,8 @@ class Store:
             .write.parquet(self._abs(part_rel))
         )
         spec.parts.append(part_rel)
-        self._refresh_index_stats(spec, obs.get)
+        if sketch:
+            self._refresh_index_stats(spec, obs.get)
 
     def _part_rel(self, spec: IndexSpec) -> str:
         prefix = "b" if spec.kind == BLOOM else "p"
@@ -1738,9 +1784,10 @@ class Store:
         self, spec: IndexSpec, st, part_rel: str | None = None, suffix: int | str = ""
     ) -> None:
         """Take an index's cost-model stats (``src/idx.rs:71-78``) from the
-        build aggregate ``st`` (a Row or an observation): ``part_rel``'s
-        range-key [min, max], and ndv with the HLL sketch it came from.
-        Rows (live table rows) are set by :meth:`_index_files`.
+        build aggregate ``st`` (a dict: a Row's ``asDict`` or an
+        observation): ``part_rel``'s range-key [min, max], and ndv with the
+        HLL sketch it came from, when the aggregate sketched. Rows (live
+        table rows) are set by :meth:`_index_files`.
 
         The ndv contract: exact (an HLL estimate equal to a from-scratch
         sketch of all live keys) after inserts and after ``compact``,
@@ -1753,6 +1800,8 @@ class Store:
 
         if part_rel is not None:
             self._set_part_range(spec, part_rel, st[f"__lo{suffix}"], st[f"__hi{suffix}"])
+        if f"__sk{suffix}" not in st:
+            return
         sk = st[f"__sk{suffix}"]
         if sk is not None:
             spec.ndv = int(st[f"__ndv{suffix}"])
@@ -2897,9 +2946,9 @@ class Store:
         import pyarrow.compute as pc
 
         full = self._schema_with_rowid()
-        rel = self.spark.createDataFrame(
-            pa.concat_tables(tables).select([ROWID, *cols]),
-            schema=T.StructType([full[c] for c in (ROWID, *cols)]),
+        rel = self._local_relation(
+            [t.select([ROWID, *cols]) for t in tables],
+            T.StructType([full[c] for c in (ROWID, *cols)]),
         )
         victims = pa.array(
             [r[0] for r in rel.filter(pred).select(ROWID).collect()], pa.int64()
@@ -3366,6 +3415,67 @@ class Store:
             )
             out = part if out is None else out.unionByName(part)
         return out
+
+    def _change_tables(self, since_version: int, columns: Sequence[str]):
+        """The change-data-feed tier of :meth:`changes`, read on the driver
+        with pyarrow (zero Spark jobs): ``(inserted, deleted)`` arrow
+        tables of ``__rowid`` and ``columns``. ``inserted`` holds the live
+        rows at or above the old snapshot's rowid watermark, tombstoned
+        rows dropped in the scan; ``deleted`` the window's changelog rows
+        below it, each dir read in its commit's schema, where a column the
+        changelog or the old snapshot lacks reads as null. None when the
+        feed does not serve the window, a column fails
+        :meth:`_driver_atomic_type`, or the tombstone set or the rows read
+        (appended files by their manifest counts, changelogs by their
+        footers) exceed ``CDF_DRIVER_READ_ROWS``."""
+        rels = self._cdf_window_rels(since_version)
+        if rels is None or not all(
+            self._driver_atomic_type(self.manifest.schema[c].dataType) for c in columns
+        ):
+            return None
+        try:
+            old = Manifest.load(self.path, since_version)
+        except FileNotFoundError:
+            return None
+        wm = old.rowid
+        files = [f for f in self.manifest.files if f.max_rowid >= wm]
+        tomb = self._tomb_ids(self.CDF_DRIVER_READ_ROWS)
+        if tomb is None or sum(f.rows for f in files) + sum(
+            self._parquet_rows(rel) for rel, _ in rels
+        ) > self.CDF_DRIVER_READ_ROWS:
+            return None
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        full = self._schema_with_rowid()
+        cols = [ROWID, *columns]
+        out_schema = to_arrow_schema(T.StructType([full[c] for c in cols]))
+        pred = pc.field(ROWID) >= wm
+        ids = self._ids_in_files(tomb, files)
+        if ids:
+            pred = pred & ~pc.is_in(pc.field(ROWID), pa.array(ids, pa.int64()))
+        inserted = self._arrow_read([self._abs(f.path) for f in files], full, pred, cols)
+        deleted = [out_schema.empty_table()]
+        for rel, schema in rels:
+            d = self._abs(rel)
+            have = [c for c in cols if c == ROWID or (c in schema.names and c in old.schema.names)]
+            t = self._arrow_read(
+                sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")),
+                T.StructType([full[ROWID], *schema.fields]),
+                pc.field(ROWID) < wm,
+                have,
+            )
+            deleted.append(
+                pa.table(
+                    [
+                        t[c] if c in have else pa.nulls(t.num_rows, out_schema.field(c).type)
+                        for c in cols
+                    ],
+                    schema=out_schema,
+                )
+            )
+        return inserted, pa.concat_tables(deleted)
 
     def changes(self, since_version: int) -> DataFrame:
         """Incremental (CDC) read: every row-level change between snapshot

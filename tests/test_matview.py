@@ -64,10 +64,10 @@ def _assert_matches_recompute(mv):
         for name, kind, _col in mv.aggs:
             if kind == "count":
                 assert got[name] == exp["__n"], (g, name)
-            elif kind == "sum":
-                assert got[name] == float(exp[f"__s_{name}"]), (g, name)
-            elif kind == "avg":
-                assert got[name] == float(exp[f"__s_{name}"]) / exp["__n"], (g, name)
+            elif kind in ("sum", "avg"):
+                s, c = exp[f"__s_{name}"], exp[f"__c_{name}"]
+                want = None if not c else float(s) if kind == "sum" else float(s) / c
+                assert got[name] == want, (g, name)
             elif kind == "min":
                 assert got[name] == exp[f"__m_{name}"], (g, name)
             elif kind == "max":
@@ -136,6 +136,18 @@ def test_refresh_is_one_atomic_state_commit_and_noop_is_free(spark, store_path):
     st.insert([("a", 1.0)])
     mv.refresh()
     assert mv.state.manifest.version == v0 + 1  # exactly ONE merge commit
+
+
+def test_keyless_view_refreshes_its_one_group(spark, store_path):
+    st = _base(spark, str(store_path))
+    mv = MatView.create(
+        spark, os.path.join(str(store_path), "v"), st, [], [("n", "count", None), ("sv", "sum", "v")]
+    )
+    st.insert([("a", 4.0)])
+    st.delete([eq("k", "b")])
+    assert mv.refresh() == 1
+    assert _view(mv) == {(): {"n": 4, "sv": 22.75}}
+    _assert_matches_recompute(mv)
 
 
 def test_reopen_resumes_from_persisted_base_version(spark, store_path):
@@ -235,22 +247,18 @@ def test_stream_into_store_refreshes_matview_per_epoch(spark, store_path, tmp_pa
 
 
 def test_refresh_job_count_logged_and_bounded(spark, store_path):
-    """Refresh job floor (r7 ask #5, tightened by r9 ask #6): the
-    combined state rows are materialized once before the merge (r8,
-    34-37 → 19-21 jobs), and a refresh whose delta the driver-side
-    manifest arithmetic bounds small compiles statically — AQE was
-    materializing each of the tiny plan's ~8 exchanges as its own job —
-    plus the merge's micro-batch insert writes the materialized rows in
-    one job, with no counts pass. 19-21 → 7-10 jobs measured, then 4
-    once the merge's counts came from footers: the delta read, the
-    merge's victim probe and its two writes."""
+    """Refresh job floor: a self-maintainable view whose change window
+    the feed serves reads the window and its state with pyarrow, combines
+    on the driver and merges the literal rows with a driver merge — zero
+    jobs (it was 34-37 jobs before the single-action Spark refresh, and 4
+    on that path's static compile)."""
     st = _base(spark, str(store_path))
     mv = MatView.create(
         spark, os.path.join(str(store_path), "v"), st, ["k"], [("sv", "sum", "v")]
     )
     st.insert([("a", 9.0), ("d", 1.0)])
     mv.refresh()
-    assert 0 < mv.last_refresh_jobs <= 4
+    assert mv.last_refresh_jobs == 0
     _assert_matches_recompute(mv)
     # no-op refresh runs zero jobs
     mv.refresh()
@@ -260,10 +268,11 @@ def test_refresh_job_count_logged_and_bounded(spark, store_path):
 def test_refresh_job_pin_store_mix_shape(spark, store_path):
     """The benchmark's store shape — a hash + btree indexed store, a
     30,000-row insert, a copy-on-write and a deferred delete in the window:
-    the refresh reads the changelogs with their schemas (no inference job)
-    and the tombstone set as a literal (no broadcast job), so it runs the
-    delta read, the merge's victim write and the state write — in the
-    first window and in the next one, when tombstones are already live."""
+    the refresh reads the appended files and the changelogs with pyarrow,
+    casts and keys the change rows with projections over a
+    ``LocalRelation`` and merges on the driver, so it runs no job — in
+    the first window and in the next one, when tombstones are already
+    live."""
     st = Store.create(
         spark,
         os.path.join(str(store_path), "b"),
@@ -290,17 +299,19 @@ def test_refresh_job_pin_store_mix_shape(spark, store_path):
         assert st.delete([eq("k", lo - 290)]) == 1
         assert st.delete([eq("k", lo - 280)], defer=True) == 1
         assert mv.refresh() > 0
-        assert 0 < mv.last_refresh_jobs <= 3
+        assert mv.last_refresh_jobs == 0
         _assert_matches_recompute(mv)
 
 
 def test_refresh_keeps_callers_job_group(spark, store_path):
     """A refresh counts its jobs under a job group of its own, then puts
-    the caller's group and description back instead of clearing them."""
+    the caller's group and description back instead of clearing them. The
+    state's driver bound at 0 sends the refresh to Spark, so it runs jobs."""
     st = _base(spark, str(store_path))
     mv = MatView.create(
         spark, os.path.join(str(store_path), "v"), st, ["k"], [("sv", "sum", "v")]
     )
+    mv.state.DRIVER_INSERT_ROWS = 0
     st.insert([("a", 9.0)])
     sc = spark.sparkContext
     sc.setJobGroup("caller-group", "caller work")
@@ -367,3 +378,149 @@ def test_refresh_version_rides_merge_commit_atomically(spark, tmp_path):
     assert mv2.refresh() == 0  # no-op: nothing re-applied
     assert _view(mv2) == before
     _assert_matches_recompute(mv2)
+
+
+@pytest.mark.parametrize("venue", ["driver", "spark"])
+def test_sum_and_avg_skip_nulls_as_sql_does(spark, store_path, venue):
+    """``sum`` and ``avg`` follow SQL over NULL values on both refresh
+    venues: avg divides by the non-null count, not the row count, and a
+    group with no non-null value reads NULL, not 0.0 — right after create
+    and after refreshes that add a NULL-only group and replace a group's
+    only value with a NULL."""
+    st = Store.create(
+        spark, os.path.join(str(store_path), "b"), T.StructType.fromDDL("k string, v double")
+    )
+    st.insert([("a", None), ("a", 4.0), ("b", None), ("c", 1.0)])
+    mv = MatView.create(
+        spark,
+        os.path.join(str(store_path), "v"),
+        st,
+        ["k"],
+        [("n", "count", None), ("sv", "sum", "v"), ("av", "avg", "v")],
+    )
+    if venue == "spark":
+        mv.state.DRIVER_INSERT_ROWS = 0
+    assert _view(mv) == {
+        ("a",): {"n": 2, "sv": 4.0, "av": 4.0},
+        ("b",): {"n": 1, "sv": None, "av": None},
+        ("c",): {"n": 1, "sv": 1.0, "av": 1.0},
+    }
+    st.insert([("b", None)])
+    st.delete([eq("k", "c")])
+    st.insert([("c", None)])
+    assert mv.refresh() == 2
+    assert (mv.last_refresh_jobs == 0) == (venue == "driver")
+    assert _view(mv) == {
+        ("a",): {"n": 2, "sv": 4.0, "av": 4.0},
+        ("b",): {"n": 2, "sv": None, "av": None},
+        ("c",): {"n": 1, "sv": None, "av": None},
+    }
+    _assert_matches_recompute(mv)
+
+
+def test_open_rejects_a_state_without_non_null_counts(spark, store_path):
+    """A view whose state predates the ``__c_<name>`` non-null counts
+    cannot be refreshed correctly; opening it says to recreate it."""
+    st = _base(spark, str(store_path))
+    path = os.path.join(str(store_path), "v")
+    mv = MatView.create(spark, path, st, ["k"], [("n", "count", None), ("sv", "sum", "v")])
+    mv.state.drop_column("__c_sv")
+    with pytest.raises(ValueError, match="recreate"):
+        MatView.open(spark, path, base=st)
+
+
+def _sorted_reprs(df):
+    """The rows of ``df`` as sorted reprs: a set comparison that holds
+    NaN keys equal to themselves."""
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_driver_refresh_matches_spark_refresh(spark, store_path):
+    """Twin views, one refreshed on the driver and one on Spark (its
+    state's driver bound at 0), over every shape the driver combine must
+    get right: NULL keys; -0.0, 0.0 and NaN double keys; a two-column key
+    that is all NULL; NULL values; doubles at 7th-decimal ties and at
+    |v| >= 1e16; long and decimal sums; a delete that nets a group to
+    zero; a delete-only window; windows across a compact and across an
+    add_column. After every refresh the twins' state rows (with ``__gk``,
+    without ``__rowid``) and reads are identical, and the read equals a
+    view created from scratch over the same base."""
+    import decimal
+
+    st = Store.create(
+        spark,
+        os.path.join(str(store_path), "b"),
+        T.StructType.fromDDL("ks string, kd double, v double, l long, d decimal(10,2)"),
+    )
+    D = decimal.Decimal
+
+    def row(ks, kd, v, i):
+        return (ks, kd, v, None if v is None else 2**61 + i, None if v is None else D(i) / 4)
+
+    st.insert(
+        [
+            row("a", 0.0, 1.0000005, 1),
+            row("a", -0.0, 395747.6924045, 2),
+            row(None, float("nan"), 0.0000005, 3),
+            row("b", float("nan"), None, 4),
+            row(None, None, 18700000000000004.0, 5),
+            row("c", 2.0, -2.5, 6),
+        ]
+    )
+    shapes = {
+        "one": (
+            ["kd"],
+            [("n", "count", None), ("sv", "sum", "v"), ("av", "avg", "v"),
+             ("sl", "sum", "l"), ("ad", "avg", "d")],
+        ),
+        "two": (["ks", "kd"], [("n", "count", None), ("sv", "sum", "v")]),
+    }
+    views = {}
+    for shape, (keys, aggs) in shapes.items():
+        for venue in ("driver", "spark"):
+            mv = MatView.create(
+                spark, os.path.join(str(store_path), f"{shape}_{venue}"), st, keys, aggs
+            )
+            if venue == "spark":
+                mv.state.DRIVER_INSERT_ROWS = 0
+            views[shape, venue] = mv
+
+    def check(step):
+        for shape, (keys, aggs) in shapes.items():
+            drv, spk = views[shape, "driver"], views[shape, "spark"]
+            drv.refresh()
+            spk.refresh()
+            assert drv.last_refresh_jobs == 0, (step, shape)
+            assert spk.last_refresh_jobs > 0, (step, shape)
+            state = [_sorted_reprs(mv.state.find([])) for mv in (drv, spk)]
+            assert state[0] == state[1], (step, shape)
+            reads = [_sorted_reprs(mv.read()) for mv in (drv, spk)]
+            assert reads[0] == reads[1], (step, shape)
+            fresh = MatView.create(
+                spark, os.path.join(str(store_path), f"fresh_{step}_{shape}"), st, keys, aggs
+            )
+            assert _sorted_reprs(fresh.read()) == reads[0], (step, shape)
+
+    st.insert(
+        [
+            row("a", -0.0, 2.0000005, 7),
+            row(None, float("nan"), None, 8),
+            row("b", float("nan"), 3.5, 16),
+            row(None, None, None, 9),
+            row("d", 3.0, 98765432109876543.0, 10),
+            row("c", 2.0, 7.25, 11),
+        ]
+    )
+    check("insert")
+    st.delete([eq("kd", 2.0)])  # group c / 2.0 nets to zero
+    st.insert([row("e", 4.0, 1.5, 12)])
+    check("group_to_zero")
+    st.delete([eq("ks", "a")], defer=True)
+    check("delete_only")
+    st.compact(target_files=1)
+    st.insert([row("a", 0.0, 4.4444445, 13), row("c", 2.0, 1.0, 14)])
+    check("across_compact")
+    st.add_column("w", "string")
+    st.insert([("f", 5.0, 0.5, 15, D("1.25"), "x")])
+    st.delete([eq("kd", 3.0)])
+    check("across_add_column")

@@ -91,7 +91,9 @@ def _matview_small_refresh(spark, tmp_path, monkeypatch):
     )
     base = Store.create(spark, str(tmp_path / "b"), schema)
     base.insert([("a", 1.0), ("b", 2.0)])
-    mv = MatView.create(spark, str(tmp_path / "v"), base, ["k"], [("sv", "sum", "v")])
+    # a max view: a small count/sum refresh runs on the driver, outside
+    # any static-compile scope
+    mv = MatView.create(spark, str(tmp_path / "v"), base, ["k"], [("mx", "max", "v")])
     base.insert([("a", 3.0)])
     _fail_inside_scope(spark, monkeypatch, Store, "merge")
     mv.refresh()

@@ -1962,13 +1962,17 @@ def _delta(st):
     )
 
 
-def _matview_site(st):
+def _matview_site(st, state_rows=None):
     """A view over the test store, rewound one version so its refresh
-    replays the deferred delete of k1 into the view's state store."""
+    replays the deferred delete of k1 into the view's state store — on
+    the driver, or on Spark with ``state_rows`` (the state's driver
+    bound) at 0."""
     from shortcut_spark import MatView
 
     mv = MatView.create(st.spark, st.path + "_mv", st, ["c0"], [("n", "count", None)])
     mv.base_version -= 1
+    if state_rows is not None:
+        mv.state.DRIVER_INSERT_ROWS = state_rows
     return mv.state, mv.refresh
 
 
@@ -2046,6 +2050,7 @@ _TXN_SITES = [
     ("add_constraint", "_commit", _on(lambda st: st.add_constraint(1, "not_null")), False),
     ("drop_constraint", "_commit", _on(lambda st: st.drop_constraint(0, "not_null")), False),
     ("matview_refresh", "_commit", _matview_site, False),
+    ("matview_refresh_spark", "_commit", lambda st: _matview_site(st, 0), False),
     ("vector_index_refresh", "_commit", _vector_index_site, False),
     ("stream_epoch", "_commit", _stream_site, False),
     ("stream_epoch_rejected", "_enforce_constraints", _stream_site, False),
@@ -2528,6 +2533,32 @@ def _jobs(spark, fn):
     return out, len(jsc.statusTracker().getJobIdsForTag(tag))
 
 
+def test_literal_merge_into_small_unindexed_store_takes_no_job(spark, tmp_path):
+    """A literal merge into a small unindexed store (a view's state) runs
+    no job: victims picked in Python with Spark's join equality — a NULL
+    key matches nothing, -0.0 matches 0.0 and NaN matches NaN — a pyarrow
+    tombstone and the driver insert. It leaves the rows its Spark twin
+    (driver bound 0) leaves."""
+    from pyspark.sql import types as T
+
+    nan = float("nan")
+    schema = T.StructType.fromDDL("k string, d double, v long")
+    out = []
+    for bound in (None, 0):
+        st = Store.create(spark, str(tmp_path / f"s{bound}"), schema)
+        st.insert([("a", 0.0, 1), ("b", nan, 2), (None, 1.0, 3), ("c", 2.0, 4)])
+        if bound is not None:
+            st.DRIVER_INSERT_ROWS = bound
+        got, jobs = _jobs(spark, lambda: st.merge([("c", 5.0, 10), (None, 6.0, 11)], on="k"))
+        assert got == (2, 1)
+        got2, jobs2 = _jobs(spark, lambda: st.merge([("x", -0.0, 20), ("y", nan, 21)], on="d"))
+        assert got2 == (2, 2)
+        assert (jobs + jobs2 == 0) == (bound is None), (bound, jobs, jobs2)
+        out.append(sorted(repr(r) for r in st.find([]).collect()))
+    assert out[0] == out[1]
+    assert len(out[0]) == 5
+
+
 def _two_index_store(spark, path, batches=6, per_batch=50):
     """A hash index on ``k`` and a btree on ``v``, ``batches`` literal
     inserts of one file each. Every file spans the whole key range, so
@@ -2679,6 +2710,29 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
         ndv, sk = _scratch_sketch(spark, st, column)
         assert spec.ndv == ndv
         assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+
+
+def test_spark_cow_delete_leaves_index_sketches_as_they_are(spark, tmp_path, monkeypatch):
+    """A copy-on-write delete on the Spark path re-indexes its survivors
+    with the distributed builders without sketching their keys, which
+    every sketch already holds: the stored sketch bytes and ndv of a hash
+    and a bloom index stay as they were."""
+    from pyspark.sql import types as T
+
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL("k long, s string"))
+    st.index("k", "hash")
+    st.index("s", "bloom")
+    st.insert([(i, f"s{i % 5}") for i in range(40)])
+    st.DRIVER_INSERT_ROWS = 0
+    before = {c: (s.sketch, s.ndv) for c, s in st.manifest.indices.items()}
+    sketched = []
+    monkeypatch.setattr(
+        st, "_sketch_cols", lambda *a, **k: sketched.append(a) or Store._sketch_cols(*a, **k)
+    )
+    assert st.delete([eq("k", 3)]) == 1
+    assert not sketched
+    assert {c: (s.sketch, s.ndv) for c, s in st.manifest.indices.items()} == before
+    assert sorted(r[0] for r in st.find([]).collect()) == [i for i in range(40) if i != 3]
 
 
 def _all_kinds_store(spark, path, driver_rows, frame=False):

@@ -851,6 +851,58 @@ def test_data_files_read_on_the_driver_only_by_arrow_read():
     )
 
 
+def test_no_pyarrow_cast_to_a_decimal_type():
+    """Values become ``DECIMAL(27,6)`` only through Spark's cast: pyarrow's
+    cast rounds the binary double where Spark rounds its decimal string
+    (docs/SCALE.md, "Zero-job view refresh"), so ``store.py`` and
+    ``matview.py`` pass no ``pa.decimal128``/``pa.decimal256`` type to a
+    ``.cast`` or ``pc.cast``."""
+    bad = []
+    for name in ("store.py", "matview.py"):
+        path = os.path.join(_PKG, name)
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "cast"
+            ):
+                continue
+            for arg in [*node.args, *(k.value for k in node.keywords)]:
+                if any(
+                    isinstance(sub, ast.Attribute) and sub.attr in ("decimal128", "decimal256")
+                    for sub in ast.walk(arg)
+                ):
+                    bad.append((name, node.lineno))
+    assert not bad, f"cast to a decimal with Spark's cast, not pyarrow's: {bad}"
+
+
+def test_driver_kernels_keep_rows_after_an_all_dead_file(spark, tmp_path):
+    """pyspark's ``createDataFrame`` drops every row after a zero-row
+    record batch that follows a non-empty one, and a file whose rows are
+    all tombstoned reads as one: the driver read of a find, the driver
+    delete and the small-batch index build (an index with no keys between
+    two with keys) still see every row after it."""
+    from pyspark.sql import types as T
+
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL("k long, v string"))
+    for lo, v in ((0, "y"), (2, "x"), (4, "y")):
+        st.insert([(lo + 1, v), (lo + 2, v)])
+    st.delete([eq("v", "x")], defer=True)  # the middle file is all dead
+    assert [r[0] for r in sorted(st.find([between("k", 0, 10)]).collect())] == [1, 2, 5, 6]
+    assert st.delete([between("k", 0, 10)], defer=True) == 4
+    assert len(st) == 0
+    ix = Store.create(
+        spark, str(tmp_path / "ix"), T.StructType.fromDDL("j long, s string, k long")
+    )
+    ix.index("j", "hash")
+    ix.index("s", "trigram")
+    ix.index("k", "hash")
+    ix.insert([(i % 7, "ab", i) for i in range(50)])  # "ab" has no trigram
+    assert {c: s.ndv for c, s in ix.manifest.indices.items()} == {"j": 7, "s": 0, "k": 50}
+
+
 def test_manifest_committed_only_by_txn():
     """One code path commits and rolls back: ``self._commit()`` is called
     only inside ``Store._txn``, and ``Manifest.commit`` only inside
