@@ -21,6 +21,7 @@ Two concerns shape this module:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,27 +53,52 @@ _DEC14 = "decimal(28,14)"
 
 # one spread partition per this many estimated input bytes: a sub-MB
 # fixture stays at `min_parts` partitions; the spread only approaches the
-# core count when the input actually carries tens of MB per core. At real
-# scale the scan has >= min_parts partitions and the spread never fires.
+# core count when the input actually carries tens of MB per core.
 _SPREAD_BYTES_PER_PART = 4 * 1024 * 1024
 
 
-def _plan_size_bytes(df) -> int:
+def _plan_size_bytes(df) -> int | None:
     """Optimizer size estimate of ``df`` (no job; same source as the
-    broadcast-join decision). 0 when the estimate is unavailable."""
+    broadcast-join decision), or None when the optimizer does not know
+    it. A leaf it cannot size (a Python-list ``createDataFrame``, an
+    RDD-backed input) reports ``spark.sql.defaultSizeInBytes``
+    (``Long.MaxValue`` unless set), and every estimate built on such a
+    leaf is a scaled copy of that default, not a size."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 0
+        plan = df._jdf.queryExecution().optimizedPlan()
+        unknown = int(df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes())
+        leaves = plan.collectLeaves()
+        sizes = [int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())]
+        est = int(plan.stats().sizeInBytes())
+    except Py4JError:
+        return None
+    return None if max(sizes + [est]) >= unknown else est
+
+
+def _partition_count(df) -> int | None:
+    """Partitions of ``df``'s physical plan when reading them runs no job,
+    else None. Building the RDD of a plan that holds an exchange or a
+    subquery runs it: AQE materializes every query stage below the root
+    (``AdaptiveSparkPlan``), and a static plan runs its broadcasts and
+    subqueries. So only an exchange-free plan is asked (a scan, a cached
+    or checkpointed relation, a ``LocalRelation``, and maps over them);
+    an inner cached plan counts too, since an unmaterialized cache builds
+    itself. The one place library code reads a partition count."""
+    plan = df._jdf.queryExecution().executedPlan().treeString()
+    if any(k in plan for k in ("AdaptiveSparkPlan", "Exchange", "Subquery")):
+        return None
+    return df.rdd.getNumPartitions()
 
 
 def ensure_parallelism(df, min_parts: int = 8):
     """Small fixture files arrive as 1-2 partitions, serializing heavy map
     stages (tokenize/hash/vector math); spread them. No-op for
-    already-parallel input — at real scale the scan has many partitions and
-    this never fires. Streaming DataFrames pass through untouched
-    (``.rdd`` is illegal on them; micro-batch sizing is the stream's own
-    concern).
+    already-parallel input, and for input whose partition count costs a
+    job to read (:func:`_partition_count`): a plan with an exchange gets
+    its width from AQE, and counting it would run the upstream shuffle
+    once more just for the count. Streaming DataFrames pass through
+    untouched (``.rdd`` is illegal on them; micro-batch sizing is the
+    stream's own concern).
 
     The spread width derives from the DATA (estimated bytes / 4 MB,
     floored at ``min_parts``, capped at the core count) — never the bare
@@ -82,15 +108,18 @@ def ensure_parallelism(df, min_parts: int = 8):
     embed_knn_join 0.14× — opt guide §2.4's "repartition(n) someone
     added for parallelism" anti-pattern). A tiny input now gets
     ``min_parts`` partitions at every core count, so per-query cost is
-    core-count-robust."""
+    core-count-robust; an input of unknown size (:func:`_plan_size_bytes`
+    is None) has no byte signal and gets ``min_parts`` too."""
     if df.isStreaming:
         return df
-    cur = df.rdd.getNumPartitions()
-    if cur >= min_parts:
+    cur = _partition_count(df)
+    if cur is None or cur >= min_parts:
         return df
     cores = df.sparkSession.sparkContext.defaultParallelism
-    by_bytes = -(-_plan_size_bytes(df) // _SPREAD_BYTES_PER_PART)
-    target = min(cores, max(min(min_parts, cores), by_bytes))
+    floor = min(min_parts, cores)
+    size = _plan_size_bytes(df)
+    by_bytes = 0 if size is None else -(-size // _SPREAD_BYTES_PER_PART)
+    target = min(cores, max(floor, by_bytes))
     if target <= cur:
         return df
     return df.repartition(target)

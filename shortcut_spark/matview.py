@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import scoped_confs
+from .session import local_relation, scoped_confs
 from .store import Store, _spark_key
 
 _DEC = T.DecimalType(27, 6)
@@ -477,8 +477,10 @@ class MatView:
         scols = list(dict.fromkeys(c for _, c in sums))
         vals = [()] * (n_ins + dels.num_rows)
         if scols:
-            rel = self.state._local_relation(
-                [t.select(scols) for t in (ins, dels)], T.StructType([schema[c] for c in scols])
+            rel = local_relation(
+                self.spark,
+                [t.select(scols) for t in (ins, dels)],
+                T.StructType([schema[c] for c in scols]),
             )
             vals = rel.select(*[F.col(c).try_cast(_DEC) for c in scols]).collect()
             # a non-null value whose cast is NULL overflowed (or was NaN)
@@ -512,7 +514,7 @@ class MatView:
             )
             gks = [
                 r[0]
-                for r in self.state._local_relation([keys], kschema)
+                for r in local_relation(self.spark, [keys], kschema)
                 .select(_gk_expr(self.keys))
                 .collect()
             ]

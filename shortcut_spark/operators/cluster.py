@@ -49,6 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import _partition_count
 from ..session import scoped_confs
 
 __all__ = ["kmeans_exact", "pca_top_component", "kmeans_silhouette"]
@@ -191,6 +192,17 @@ def _np_assign_fn(cents: list[tuple[int, list[int]]]):
             )
 
     return fn
+
+
+def _rollup_parts(df: DataFrame) -> int:
+    """Reduce partitions of a k·D-keyed centroid rollup over ``df``: one
+    per 64 map partitions, in 1..256. The map width is read without a job
+    (:func:`functions._partition_count`); where an exchange feeds ``df``
+    it is that exchange's width before AQE coalesces it."""
+    parts = _partition_count(df)
+    if parts is None:
+        parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(256, parts // 64))
 
 
 def _driver_lloyd(
@@ -340,7 +352,7 @@ def kmeans_exact(
         # per-iteration collect instead materialized every exchange as
         # its own Spark job — pure scheduling floor ×iters. Results
         # identical (AQE only re-plans execution).
-        rollup_parts = max(1, min(256, q.rdd.getNumPartitions() // 64))
+        rollup_parts = _rollup_parts(q)
         with scoped_confs(
             emb.sparkSession,
             {
@@ -614,7 +626,7 @@ def kmeans_silhouette(
     # recompute the final centroids exactly as kmeans_exact's last update
     # would: they are a pure function of the assignment (sign-safe fdiv);
     # same static rollup compile as the Lloyd loop (k·D key space)
-    rollup_parts = max(1, min(256, emb.rdd.getNumPartitions() // 64))
+    rollup_parts = _rollup_parts(emb)
     with scoped_confs(
         emb.sparkSession,
         {

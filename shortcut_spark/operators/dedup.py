@@ -7,14 +7,15 @@ shuffles on bounded keys:
 - minhash: shingle → H min-hashes → band buckets → bucket-join → verify.
   Candidate generation touches only docs sharing a band bucket, the
   classic MinHash-LSH join; the final exact-jaccard verify runs only on
-  candidate pairs.
+  candidate pairs, from the two shingle arrays each pair joins in.
 - simhash: per-token 32-bit hashes → bitwise majority → 32-bit fingerprint;
   near-dup = small hamming distance, banded by block combinations
   (multi-index hamming, auto-sized from the corpus count) so the pair
   join never goes all-pairs.
 - ngram-jaccard: exact pairwise jaccard via an inverted shingle index
-  (self-join on shingle) — exact but quadratic in bucket size; the verify
-  step of minhash reuses it.
+  (self-join on shingle) — exact but quadratic in bucket size; its
+  candidate branch verifies exploded candidate rows
+  (``jaccard_pairs_prefix``).
 
 Hashes are md5-derived (``functions.hash32``) rather than murmur so every
 step has a DuckDB-expressible twin for the correctness oracle.
@@ -25,7 +26,7 @@ these are the driver-mandated LLM-pipeline extensions (SURVEY §2.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import ensure_parallelism as _ensure_parallelism
 from ..functions import fingerprint, hash32, tokens
@@ -78,9 +79,25 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per identical normalized content."""
-    keep = exact_dup_groups(df, id_col, text_col).select(F.col("keeper").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
+    """Keep exactly one row per identical normalized content: the one with
+    the minimum id. A row with a NULL id never survives.
+
+    One aggregate on the content hash and nothing else: the minimum of a
+    struct led by the id carries the whole keeper row through the
+    aggregate, so nothing joins back to the input, and partial
+    aggregation collapses a boilerplate family map-side. Every column
+    must be orderable (no map columns). With duplicate ids each content
+    still keeps exactly one row: ties on the id are broken by the rest
+    of the row, and a row whose content has a smaller id elsewhere is
+    dropped even when its own id keeps some other content."""
+    rest = [df[c] for c in df.columns if c != id_col]
+    keeper = F.min(F.struct(df[id_col], *rest)).alias("__k")
+    return (
+        df.filter(df[id_col].isNotNull())
+        .groupBy(fingerprint(df[text_col]).alias("__fp"))
+        .agg(keeper)
+        .select(*[F.col("__k")[c].alias(c) for c in df.columns])
+    )
 
 
 def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -182,7 +199,9 @@ def _pin_merge_if_exploded(banded: DataFrame, source: DataFrame, fanout: int) ->
     driver-side estimate of the exploded size (source plan bytes ×
     fanout) exceeds the broadcast threshold, pin sort-merge; tiny
     corpora keep the broadcast fast path. Results are strategy-
-    independent (pytest-pinned)."""
+    independent (pytest-pinned). A source of unknown size (an RDD-backed
+    or Python-list input, :func:`_plan_size_bytes` None) pins merge too:
+    nothing bounds its explosion."""
     from ..functions import _plan_size_bytes
 
     try:
@@ -193,7 +212,10 @@ def _pin_merge_if_exploded(banded: DataFrame, source: DataFrame, fanout: int) ->
         )
     except ValueError:
         thresh = 10 * 1024 * 1024
-    if thresh > 0 and _plan_size_bytes(source) * fanout > thresh:
+    if thresh <= 0:
+        return banded
+    size = _plan_size_bytes(source)
+    if size is None or size * fanout > thresh:
         return banded.hint("merge")
     return banded
 
@@ -268,7 +290,8 @@ def jaccard_pairs(
     df-capped shingle space — the standard stop-shingle semantics, and
     self-consistent (|A∩B| and |A|,|B| count the same universe). Pass
     ``max_df=None`` to disable. The cap applies to the candidates path
-    too, so the MinHash verify stage scores the same space."""
+    too, and :func:`minhash_near_dups` applies the same cap to its
+    array-native verify, so both score the same space."""
     if max_df is not None:
         sh = _drop_hot_shingles(sh, id_col, max_df)
     # capped relation feeds sizes + both join sides: compute it once
@@ -317,20 +340,52 @@ def minhash_near_dups(
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
 
-    The shingle arrays feed both the signature build (map-only, see
-    :func:`minhash_signature_arrays`) and the verify join, so they are
-    persisted for the lifetime of the query (at warehouse scale this would
-    be a materialized intermediate table). Only the banding join and the
-    verify join shuffle — signature construction never does. ``max_df``
-    passes through to the verify stage's :func:`jaccard_pairs` (hot
-    shingles are dropped from the scored space before the candidate
-    expansion — see ``_drop_hot_shingles``); measured A/B in
-    docs/SCALE.md's skew-probe table."""
-    arr = shingle_arrays(df, id_col, text_col, n).persist()
+    The shingle arrays feed the signature build (map-only, see
+    :func:`minhash_signature_arrays`) and the verify, which scores each
+    candidate pair from the two arrays it joins in: |A∩B| is
+    ``size(array_intersect)``, |A| and |B| are array sizes, so no
+    shingle is exploded or re-aggregated per pair. The arrays feed four
+    consumers (signatures, hot set, both verify sides), so they are
+    materialized once with a lazy local checkpoint, which the session
+    reclaims with the result (a ``persist`` would stay pinned until
+    someone unpersists it). Only the banding join, the candidate
+    ``distinct`` and the verify joins shuffle.
+
+    ``max_df`` drops shingles hotter than that document frequency from
+    the scored space, as :func:`jaccard_pairs` does: the hot set (one
+    shingle → df aggregate, tiny at any scale) is collected into one
+    array, broadcast, and removed from both arrays of a pair before the
+    sizes and the intersection are taken, so the scores are exact
+    jaccard over the df-capped shingle space. A pair with no shared
+    shingle left scores nothing and is dropped. Measured A/B in
+    docs/SCALE.md's skew-probe table. Ids are assumed unique: a
+    duplicated id is scored once per row."""
+    arr = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
     sig = minhash_signature_arrays(arr, id_col, num_hashes)
     cand = minhash_candidates(sig, id_col, num_hashes, bands)
-    sh = arr.select(F.col(id_col), F.explode("__shs").alias("shingle"))
-    return jaccard_pairs(sh, id_col, threshold, candidates=cand, max_df=max_df)
+    a = arr.select(F.col(id_col).alias("id_a"), F.col("__shs").alias("__a"))
+    b = arr.select(F.col(id_col).alias("id_b"), F.col("__shs").alias("__b"))
+    pairs = cand.join(a, "id_a").join(b, "id_b")
+    if max_df is not None:
+        hot = (
+            arr.select(F.explode("__shs").alias("shingle"))
+            .groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter(F.col("__df") > F.lit(max_df))
+            .agg(F.collect_list("shingle").alias("__hot"))
+        )
+        pairs = pairs.crossJoin(F.broadcast(hot)).select(
+            "id_a",
+            "id_b",
+            F.array_except("__a", "__hot").alias("__a"),
+            F.array_except("__b", "__hot").alias("__b"),
+        )
+    inter = F.size(F.array_intersect("__a", "__b"))
+    scored = pairs.select(
+        "id_a", "id_b", inter.alias("__i"), F.size("__a").alias("__na"), F.size("__b").alias("__nb")
+    ).filter(F.col("__i") > 0)
+    jac = F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i"))
+    return scored.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
 
 
 def cross_corpus_exact_dedup(
@@ -707,11 +762,19 @@ def dup_clusters(
     component), the cluster size, and a keep flag (the representative is
     the survivor; ``filter(keep)`` is the dedup).
 
-    Shuffle shape: the pair join from ``simhash_near_dups``, then
+    Shuffle shape: the pair join from ``simhash_near_dups``, then the
+    components (a driver union-find returning an Arrow-built
+    ``LocalRelation`` below ``graph.CC_DRIVER_EDGES`` edges, else
     O(log diameter) label-propagation rounds of one join + one groupBy
-    each (see ``graph.connected_components``), then one size rollup on the
-    cluster key. Singleton documents never enter the component loop — they
-    rejoin at the end via a left join.
+    each, see ``graph.connected_components``), broadcast into ONE left
+    join that labels every document, then one window exchange on the
+    cluster key that counts ``cluster_size`` — the labels are built once
+    and never joined to their own sizes. Singleton documents never enter
+    the component loop; the left join labels them with their own id. A
+    row with a NULL id gets no row. A boilerplate family is one huge
+    cluster, so the window sends all of it to one task, which sorts and
+    counts its (id, rep) pairs (docs/SCALE.md, "corpus_pipeline jobs per
+    pass").
     """
     from .graph import connected_components
 
@@ -737,17 +800,18 @@ def dup_clusters(
     comp = connected_components(pairs, "id_a", "id_b")
     lab = (
         df.select(F.col(id_col))
+        .filter(F.col(id_col).isNotNull())
         .join(comp.select(F.col("node").alias(id_col), F.col("component")), id_col, "left")
         .select(
             F.col(id_col),
             F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_rep"),
         )
     )
-    sizes = lab.groupBy("cluster_rep").agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
-    return lab.join(sizes, "cluster_rep").select(
+    size = F.count(F.lit(1)).over(Window.partitionBy("cluster_rep"))
+    return lab.select(
         F.col(id_col),
         "cluster_rep",
-        "cluster_size",
+        size.alias("cluster_size"),
         (F.col(id_col) == F.col("cluster_rep")).alias("keep"),
     )
 

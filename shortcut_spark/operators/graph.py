@@ -34,9 +34,9 @@ Algorithm: min-label propagation with pointer jumping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..session import scoped_confs
+from ..session import local_relation, scoped_confs
 
 __all__ = ["connected_components", "pagerank", "triangle_counts"]
 
@@ -73,8 +73,6 @@ def _cc_driver_types_ok(dt) -> bool:
     exactly: integral and (UTF-8 code-point ordered) string. Everything
     else keeps the distributed loop — correctness never rides the
     fast path."""
-    from pyspark.sql import types as T
-
     return isinstance(
         dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType)
     )
@@ -87,9 +85,10 @@ def _cc_driver(
     distributed loop — every node appearing in an edge is labeled with the
     minimum node id of its component. ``e`` is the deduped bidirectional
     edge relation (both directions present; self-loops possible), already
-    checkpointed and counted by the caller's gate."""
-    from pyspark.sql import types as T
-
+    checkpointed and counted by the caller's gate. The labels come back
+    as an Arrow-built ``LocalRelation`` (``session.local_relation``), so
+    the planner knows their size and broadcasts them into the caller's
+    join instead of shuffling both sides."""
     rows = e.collect()
     parent: dict = {}
 
@@ -116,15 +115,26 @@ def _cc_driver(
         m = comp_min.get(r)
         if m is None or n < m:
             comp_min[r] = n
-    out = [(n, comp_min[find(n)]) for n in parent]
     node_t = e.schema[0].dataType
-    schema = T.StructType(
-        [
-            T.StructField(out_node, node_t, False),
-            T.StructField(out_comp, node_t, False),
-        ]
+    return _driver_relation(
+        e.sparkSession,
+        {
+            out_node: (node_t, list(parent)),
+            out_comp: (node_t, [comp_min[find(n)] for n in parent]),
+        },
     )
-    return e.sparkSession.createDataFrame(out, schema)
+
+
+def _driver_relation(spark, columns: dict) -> DataFrame:
+    """``{name: (spark type, python values)}`` as an Arrow-built
+    ``LocalRelation`` with non-nullable columns — the output of the graph
+    driver kernels."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = T.StructType([T.StructField(n, t, False) for n, (t, _) in columns.items()])
+    table = pa.table({n: pa.array(v, to_arrow_type(t)) for n, (t, v) in columns.items()})
+    return local_relation(spark, [table], schema)
 
 
 def connected_components(
@@ -150,13 +160,15 @@ def connected_components(
         F.col("s").isNotNull() & F.col("d").isNotNull()
     )
     e = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
-    e = e.localCheckpoint(eager=True)  # computed once, joined every round
+    # computed once, joined every round; the count below is the action
+    # that materializes it (an eager checkpoint would be one more job)
+    e = e.localCheckpoint(eager=False)
     # Static loop compile (the matview-refresh pattern): one round is 3
     # shuffles (neighbor join, node min, pointer jump) and under AQE each
     # exchange materializes as its OWN Spark job, so a round whose only
     # action is the fused probe-count still launches ~5 jobs of pure
-    # scheduling floor. The edge count is driver-known after the eager
-    # checkpoint (one sub-50ms count over cached partitions); when it
+    # scheduling floor. The edge count is driver-known from the count
+    # that fills the checkpoint; when it
     # bounds the loop's working set small, pin a static shuffle-partition
     # count DERIVED FROM THE EDGE COUNT (not the session/core constant)
     # and turn AQE off for the loop — every round is then exactly one
@@ -362,8 +374,6 @@ def _pagerank_driver(
     collect — same spec, same integer arithmetic, same output schema.
     ``e`` is the filtered (s, d, w) relation, already checkpointed and
     counted by the caller's gate."""
-    from pyspark.sql import types as T
-
     rows = e.collect()
     ow: dict = {}
     nodes = set()
@@ -372,33 +382,27 @@ def _pagerank_driver(
         nodes.add(r["d"])
         ow[r["s"]] = ow.get(r["s"], 0) + r["w"]
     n = len(nodes)
-    spark = e.sparkSession
-    node_t = e.schema["s"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", node_t, False),
-            T.StructField("rank_i", T.LongType(), False),
-            T.StructField("rank", T.DoubleType(), False),
-        ]
-    )
-    if n == 0:
-        return spark.createDataFrame([], out_schema)
-    r0 = scale // n
-    rank = {v: r0 for v in nodes}
-    teleport = scale * (d_den - d_num) // (n * d_den)
-    for _ in range(iters):
-        cs: dict = {}
-        for r in rows:
-            c = rank[r["s"]] * r["w"] * d_num // (ow[r["s"]] * d_den)
-            cs[r["d"]] = cs.get(r["d"], 0) + c
-        extra = 0
-        if dangling == "redistribute":
-            dm = sum(rank[v] for v in nodes if v not in ow)
-            extra = dm * d_num // (n * d_den)
-        rank = {v: teleport + extra + cs.get(v, 0) for v in nodes}
-    return spark.createDataFrame(
-        [(v, int(rank[v]), float(rank[v]) / float(scale)) for v in nodes],
-        out_schema,
+    rank: dict = {}
+    if n:
+        rank = {v: scale // n for v in nodes}
+        teleport = scale * (d_den - d_num) // (n * d_den)
+        for _ in range(iters):
+            cs: dict = {}
+            for r in rows:
+                c = rank[r["s"]] * r["w"] * d_num // (ow[r["s"]] * d_den)
+                cs[r["d"]] = cs.get(r["d"], 0) + c
+            extra = 0
+            if dangling == "redistribute":
+                dm = sum(rank[v] for v in nodes if v not in ow)
+                extra = dm * d_num // (n * d_den)
+            rank = {v: teleport + extra + cs.get(v, 0) for v in nodes}
+    return _driver_relation(
+        e.sparkSession,
+        {
+            "node": (e.schema["s"].dataType, list(rank)),
+            "rank_i": (T.LongType(), list(rank.values())),
+            "rank": (T.DoubleType(), [float(r) / float(scale) for r in rank.values()]),
+        },
     )
 
 

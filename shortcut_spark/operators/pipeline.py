@@ -1,16 +1,20 @@
 """Composite corpus-cleaning pipeline — the end-to-end shape a
 pre-training data pipeline actually runs, composed from the individual
 operators (quality filter → language filter → exact dedup → MinHash
-near-dedup) as ONE lazy DataFrame plan.
+near-dedup) as lazy DataFrame plans.
 
 The reference has no document surface at all (its values are opaque,
 ``src/lib.rs:75``); this is extension surface per SURVEY §2.3, and exists
 to prove the operators COMPOSE: every stage is a column expression or a
-bounded-key shuffle, so Catalyst fuses the scans and the whole pipeline
-stays one DAG — no materialization between stages.
+bounded-key shuffle, so Catalyst fuses the scans. The one cut is after
+exact dedup: its output feeds both the near-dedup and the final
+anti-join, and Spark does not reuse the dedup exchange across those
+branches, so the output is materialized once with a lazy local
+checkpoint — released with the result, unlike a ``persist`` that
+nothing would ever unpersist.
 
 Scale shape (100 TB): quality + language are map-only expression stages
-fused into the scan; exact dedup is one shuffle on the content hash;
+fused into the scan; exact dedup is one aggregate on the content hash;
 near-dedup shuffles only band buckets and candidate id pairs (see
 ``operators.dedup``). Nothing in the pipeline shuffles document text
 except the shingle arrays feeding the verify join.
@@ -69,13 +73,8 @@ def clean_corpus(
             lang_guess_expr(F.col("__toks_l")).alias("lang_guess"),
         )
         .filter((F.col("quality") >= min_quality) & F.col("lang_guess").isin(*langs))
-        # pinned: the scored set feeds exact-dedup (2 passes), the shingle
-        # build and the final anti-join — without this, the expensive
-        # score/lang expressions re-run on every consumer. At warehouse
-        # scale this is the materialized post-filter table between stages.
-        .persist()
     )
-    kept = exact_dedup(kept, id_col, text_col)
+    kept = exact_dedup(kept, id_col, text_col).localCheckpoint(eager=False)
     pairs = minhash_near_dups(
         kept, id_col, text_col, shingle_n, num_hashes, bands, jaccard_threshold
     )

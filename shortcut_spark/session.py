@@ -13,9 +13,10 @@ import os
 from contextlib import contextmanager
 from typing import Iterator, Mapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-__all__ = ["get_spark", "scoped_confs", "stop_spark"]
+__all__ = ["get_spark", "local_relation", "scoped_confs", "stop_spark"]
 
 # Native thread-pool caps for every Python worker (and the driver's own
 # numpy kernels). The gemm/decode strips hand whole Arrow batches to
@@ -126,6 +127,21 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 conf.unset(k)
             else:
                 conf.set(k, v)
+
+
+def local_relation(spark: SparkSession, tables: list, schema: T.StructType) -> DataFrame:
+    """The rows of the arrow ``tables`` as one Arrow-built
+    ``LocalRelation`` in ``schema`` — the one way driver kernels hand rows
+    to Spark. The optimizer sizes a ``LocalRelation`` (a Python-list
+    ``createDataFrame`` reads as size-unknown, so every join against it
+    shuffles both sides), and ``ConvertToLocalRelation`` evaluates
+    filters and projections over it on the driver. The chunks are
+    combined first: pyspark's ``createDataFrame`` drops every row after a
+    zero-row record batch that follows a non-empty one, and a file whose
+    rows are all tombstoned reads as one."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.concat_tables(tables).combine_chunks(), schema=schema)
 
 
 def stop_spark() -> None:

@@ -58,7 +58,7 @@ from .cmp import Condition, _float_zero, conjunction, eq
 from .idx import BLOOM, BTREE, COMPOSITE, HASH, TRIGRAM, IndexSpec, as_index_kind
 from .manifest import DataFile, Manifest
 from .plans import AccessPath, choose_access_path
-from .session import scoped_confs
+from .session import local_relation, scoped_confs
 
 ROWID = "__rowid"
 
@@ -327,20 +327,7 @@ class Store:
         tables = self._driver_tables(files)
         if tables is None:
             return self._read_files(files)
-        return self._local_relation(tables, self._schema_with_rowid())
-
-    def _local_relation(self, tables: list, schema: T.StructType) -> DataFrame:
-        """The rows of the arrow ``tables`` as one Arrow-built
-        ``LocalRelation`` in ``schema`` — the one way the driver kernels
-        hand rows to Spark. The chunks are combined first: pyspark's
-        ``createDataFrame`` drops every row after a zero-row record batch
-        that follows a non-empty one, and a file whose rows are all
-        tombstoned reads as one."""
-        import pyarrow as pa
-
-        return self.spark.createDataFrame(
-            pa.concat_tables(tables).combine_chunks(), schema=schema
-        )
+        return local_relation(self.spark, tables, self._schema_with_rowid())
 
     def _tombstone_df(self) -> DataFrame:
         """The tombstone set as a relation — the fallback for sets above
@@ -1461,7 +1448,8 @@ class Store:
         if derived:
             cols = [c for c in self.colnames if any(specs[i].column == c for i in derived)]
             fields = [self.manifest.schema[c] for c in cols]
-            rel = self._local_relation(
+            rel = local_relation(
+                self.spark,
                 [src.select([*cols, "__file_id"])],
                 T.StructType([*fields, T.StructField("__file_id", T.IntegerType())]),
             )
@@ -1515,8 +1503,10 @@ class Store:
             )
             key_fields += [T.StructField(n, f.dataType) for n, f in zip(names, key_schema)]
         schema = T.StructType(key_fields)
-        rel = self._local_relation(
-            [pa.concat_tables(keys, promote_options="default").select(schema.names)], schema
+        rel = local_relation(
+            self.spark,
+            [pa.concat_tables(keys, promote_options="default").select(schema.names)],
+            schema,
         )
         aggs = [
             c
@@ -2946,7 +2936,8 @@ class Store:
         import pyarrow.compute as pc
 
         full = self._schema_with_rowid()
-        rel = self._local_relation(
+        rel = local_relation(
+            self.spark,
             [t.select([ROWID, *cols]) for t in tables],
             T.StructType([full[c] for c in (ROWID, *cols)]),
         )

@@ -4632,3 +4632,234 @@ def test_fp_hamming_pairs_merge_pin_identical(spark, docs):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     assert pinned == base and base  # same pairs, non-empty fixture
+
+
+# -- corpus pass: job pins, cache hygiene, twins of the replaced plans -------
+
+
+def _jobs(spark, fn):
+    """(result of ``fn``, Spark jobs it launched), counted by a job tag."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"pin-{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    # the tracker is fed by the listener bus, which may lag the call
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def _planted_corpus(n_docs: int, seed: int):
+    """(doc_id, text) rows: of every 20 documents one is an exact copy and
+    one a one-word edit of an earlier original."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(400)] + ["the", "and", "of", "to", "a", "in", "is", "it"]
+    texts, originals = [], []
+    for i in range(n_docs):
+        if i % 20 == 19:
+            texts.append(list(texts[rng.choice(originals)]))
+        elif i % 20 == 9:
+            toks = list(texts[rng.choice(originals)])
+            toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            texts.append(toks)
+        else:
+            texts.append([rng.choice(vocab) for _ in range(rng.randint(40, 80))])
+            originals.append(i)
+    return [(i, " ".join(t)) for i, t in enumerate(texts)]
+
+
+@pytest.fixture(scope="module")
+def planted(spark):
+    df = spark.createDataFrame(_planted_corpus(1000, 13), "doc_id long, text string").cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def test_corpus_pass_job_pins(spark, planted):
+    """A corpus pass plans few exchanges: the MinHash verify scores pairs
+    from their shingle arrays, exact dedup is one aggregate, cluster
+    sizes are a window, the CC labels are a sized ``LocalRelation``, and
+    ``ensure_parallelism`` never runs a job to read a partition count."""
+    from shortcut_spark.functions import ensure_parallelism
+    from shortcut_spark.operators.pipeline import clean_corpus
+
+    survivors, n = _jobs(spark, lambda: clean_corpus(planted).select("doc_id").collect())
+    assert survivors and n <= 15
+    clusters, n = _jobs(spark, lambda: dedup.dup_clusters(planted).collect())
+    assert len(clusters) == 1000 and n <= 16
+    kept = dedup.exact_dedup(planted, "doc_id", "text")
+    _, n = _jobs(spark, lambda: ensure_parallelism(kept))
+    assert n == 0
+
+
+def test_clean_corpus_pins_no_cached_relation(spark):
+    """``clean_corpus`` materializes its intermediates with lazy local
+    checkpoints, which the session reclaims, never with ``persist``."""
+    from shortcut_spark.operators.pipeline import clean_corpus
+
+    df = spark.createDataFrame(_planted_corpus(200, 5), "doc_id long, text string")
+    spark.catalog.clearCache()
+    assert clean_corpus(df).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_ensure_parallelism_unknown_size_targets_min_parts(spark):
+    """A Python-list input has no size estimate (Long.MaxValue): it spreads
+    to ``min_parts``, not to every core."""
+    from shortcut_spark.functions import _plan_size_bytes, ensure_parallelism
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, t string").coalesce(1)
+    assert _plan_size_bytes(df) is None
+    assert _plan_size_bytes(spark.range(10)) == 80
+    assert spark.sparkContext.defaultParallelism > 2
+    assert ensure_parallelism(df, min_parts=2).rdd.getNumPartitions() == 2
+
+
+def test_get_num_partitions_only_in_partition_count():
+    """Reading a partition count can run the whole upstream plan; the
+    library reads it in one place, ``functions._partition_count``, which
+    only asks exchange-free plans."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "shortcut_spark"
+    hits = []
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr == "getNumPartitions":
+                    hits.append((path.relative_to(root).as_posix(), fn.name))
+    assert set(hits) == {("functions/__init__.py", "_partition_count")}
+
+
+def _exact_dedup_semijoin(df, id_col, text_col):
+    """The replaced exact dedup: keeper ids per content, semi-joined back."""
+    keep = dedup.exact_dup_groups(df, id_col, text_col).select(F.col("keeper").alias(id_col))
+    return df.join(keep, id_col, "left_semi")
+
+
+def test_exact_dedup_twin_of_semijoin(spark):
+    """One aggregate keeps the rows the keeper-id semi-join kept: NULL ids
+    never survive, NULL and empty texts are contents of their own, and an
+    id duplicated across contents it keeps (or keeps none of) survives
+    with each of them."""
+    rows = [
+        (None, "alpha beta"), (None, "orphan text"), (4, "alpha beta"), (2, "Alpha, beta!"),
+        (7, None), (3, None), (9, ""), (8, "   "), (6, "gamma"),
+        (1, "delta"), (1, "epsilon"), (5, "delta"), (5, "epsilon"),
+        (12, "zeta"), (12, "eta"), (10, "zeta"), (11, "eta"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = sorted(_exact_dedup_semijoin(df, "doc_id", "text").collect())
+    got = sorted(dedup.exact_dedup(df, "doc_id", "text").collect())
+    assert got == want
+    assert [r["doc_id"] for r in got] == [1, 1, 2, 3, 6, 8, 10, 11]
+
+
+def test_exact_dedup_one_row_per_content_with_duplicate_ids(spark):
+    """Where the semi-join broke its own contract, the aggregate keeps it:
+    an id repeated on one content keeps one row, and a row whose content
+    has a smaller id is dropped even when its id keeps another content."""
+    rows = [(1, "a b"), (1, "a b"), (2, "c d"), (3, "c d"), (2, "e f")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in dedup.exact_dedup(df, "doc_id", "text").collect())
+    assert got == [(1, "a b"), (2, "c d"), (2, "e f")]
+    old = sorted(tuple(r) for r in _exact_dedup_semijoin(df, "doc_id", "text").collect())
+    assert old == [(1, "a b"), (1, "a b"), (2, "c d"), (2, "e f")]
+
+
+def _minhash_explode_verify(df, id_col, text_col, n, num_hashes, bands, threshold, max_df):
+    """The replaced MinHash verify: shingles exploded and re-aggregated by
+    ``jaccard_pairs``' candidate branch."""
+    arr = dedup.shingle_arrays(df, id_col, text_col, n)
+    sig = dedup.minhash_signature_arrays(arr, id_col, num_hashes)
+    cand = dedup.minhash_candidates(sig, id_col, num_hashes, bands)
+    sh = arr.select(F.col(id_col), F.explode("__shs").alias("shingle"))
+    return dedup.jaccard_pairs(sh, id_col, threshold, candidates=cand, max_df=max_df)
+
+
+@pytest.mark.parametrize("max_df", [None, 3])
+def test_minhash_verify_twin_of_explode_verify(spark, max_df):
+    """Array-native verify scores exactly the pairs the exploded verify
+    scored: with hot shingles dropped (``max_df=3``), a document made only
+    of hot shingles, one with no shingle, and string ids."""
+    import random
+
+    rng = random.Random(3)
+    boiler = "click here to accept all cookies now"
+    vocab = [f"v{i}" for i in range(60)]
+    rows = []
+    for i in range(40):
+        base = [rng.choice(vocab) for _ in range(12)]
+        rows.append((f"d{i:03d}a", " ".join(base) + " " + boiler))
+        edit = list(base)
+        edit[rng.randrange(12)] = rng.choice(vocab)
+        rows.append((f"d{i:03d}b", " ".join(edit)))
+    rows += [("hot", boiler), ("hot2", boiler), ("short", "two words"), ("empty", "")]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    args = ("doc_id", "text", 3, 8, 8, 0.2, max_df)
+    want = sorted(_minhash_explode_verify(df, *args).collect())
+    got = sorted(dedup.minhash_near_dups(df, *args).collect())
+    assert got == want and len(want) >= 20
+    ids = {r["id_a"] for r in got} | {r["id_b"] for r in got}
+    assert ("hot" in ids) == (max_df is None)
+
+
+def _dup_clusters_join(df, id_col="doc_id", text_col="text", max_hamming=3):
+    """The replaced cluster labelling: sizes aggregated from the labels and
+    joined back to them."""
+    from shortcut_spark.operators.graph import connected_components
+
+    fp = dedup.simhash(df, id_col, text_col).localCheckpoint(eager=True)
+    fpg = fp.groupBy("simhash").agg(F.min(id_col).alias("__rep"))
+    star = (
+        fp.join(fpg, "simhash")
+        .filter(F.col(id_col) != F.col("__rep"))
+        .select(F.col(id_col).alias("id_a"), F.col("__rep").alias("id_b"))
+    )
+    reps = fpg.select(F.col("__rep").alias(id_col), "simhash")
+    rep_pairs = dedup._fp_hamming_pairs(reps, id_col, max_hamming).select("id_a", "id_b")
+    comp = connected_components(star.union(rep_pairs), "id_a", "id_b")
+    lab = (
+        df.select(F.col(id_col))
+        .join(comp.select(F.col("node").alias(id_col), F.col("component")), id_col, "left")
+        .select(F.col(id_col), F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_rep"))
+    )
+    sizes = lab.groupBy("cluster_rep").agg(F.count(F.lit(1)).cast("long").alias("cluster_size"))
+    return lab.join(sizes, "cluster_rep").select(
+        F.col(id_col), "cluster_rep", "cluster_size", (F.col(id_col) == F.col("cluster_rep")).alias("keep")
+    )
+
+
+def test_dup_clusters_twin_of_size_join(spark):
+    """The window count labels every row as the size join did: NULL ids
+    drop out, a duplicated id counts once per row, singletons are size 1,
+    and a family sharing one fingerprint is one cluster."""
+    import random
+
+    fam = "the same boilerplate footer text on every page of the site"
+    rows = [(None, fam), (None, "lonely null"), (3, fam), (8, fam), (5, fam), (5, fam)]
+    rows += [(20, "alpha beta gamma delta epsilon zeta eta theta")]
+    rows += [(21, "alpha beta gamma delta epsilon zeta eta iota")]
+    rows += [(30, "completely unrelated words here"), (30, "another unrelated line")]
+    rng = random.Random(7)
+    words = [f"{a}{b}" for a in "bcdfgk" for b in ("ar", "el", "on", "um", "ix")]
+    rows += [(40 + i, " ".join(rng.sample(words, 8))) for i in range(5)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = sorted(_dup_clusters_join(df).collect())
+    got = sorted(dedup.dup_clusters(df).collect())
+    assert got == want
+    size = {r["doc_id"]: r["cluster_size"] for r in got}
+    assert size[3] == 4 and size[30] == 2 and size[40] == 1
+    assert None not in size
