@@ -90,6 +90,57 @@ def _partition_count(df) -> int | None:
     return df.rdd.getNumPartitions()
 
 
+# unary plan nodes that never emit more rows than their child: the row
+# bound passes through them (an Aggregate over zero rows still emits one)
+_ROW_KEEPING = frozenset(
+    ("Project", "Filter", "Sort", "Repartition", "RepartitionByExpression", "Sample",
+     "GlobalLimit", "LocalLimit", "Deduplicate", "Window", "Aggregate")
+)
+
+
+def _row_bound(df) -> int | None:
+    """An upper bound on ``df``'s row count that costs no job, or None.
+
+    A full Store scan (``Store.find([])``) answers with its manifest
+    live-row count (``_shortcut_live_rows``). Otherwise the optimized
+    plan is walked down through unary nodes that never add rows
+    (``_ROW_KEEPING``; an ``Aggregate`` bounds by ``max(child, 1)``; a
+    with-replacement ``Sample`` can add rows, so it ends the walk) to a
+    leaf whose count Spark holds: a ``LocalRelation`` or a ``Range``
+    (exact), or a fully loaded ``InMemoryRelation`` (its row-count
+    accumulator, an upper bound: a recomputed cache block adds to it
+    twice). Anything else is None: a join, a union, a generator, a file
+    scan (catalog statistics are estimates, not bounds), a checkpoint,
+    or a cache not loaded yet. The one place library code reads a row
+    count from the plan."""
+    live = getattr(df, "_shortcut_live_rows", None)
+    if live is not None:
+        return int(live)
+    floor = 0
+    try:
+        node = df._jdf.queryExecution().optimizedPlan()
+        while True:
+            name = node.getClass().getSimpleName()
+            if name not in _ROW_KEEPING:
+                break
+            if name == "Sample" and node.withReplacement():
+                return None
+            if name == "Aggregate":
+                floor = 1
+            node = node.children().apply(0)
+        rows = None
+        if name in ("LocalRelation", "Range"):
+            known = node.maxRows()
+            rows = int(known.get()) if known.isDefined() else None
+        elif name == "InMemoryRelation":
+            cache = node.cacheBuilder()
+            if cache.isCachedColumnBuffersLoaded():
+                rows = int(cache.rowCountStats().value())
+    except Py4JError:
+        return None
+    return None if rows is None else max(rows, floor)
+
+
 def ensure_parallelism(df, min_parts: int = 8):
     """Small fixture files arrive as 1-2 partitions, serializing heavy map
     stages (tokenize/hash/vector math); spread them. No-op for

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import ensure_parallelism as _ensure_parallelism
+from ..functions import _row_bound, ensure_parallelism as _ensure_parallelism
 from ..functions import fingerprint, hash32, tokens
 
 __all__ = [
@@ -422,13 +422,17 @@ def cross_corpus_near_dups(
     the cross join of band buckets (never new×new or ref×ref, unlike
     :func:`minhash_near_dups`), then exact jaccard verifies each candidate.
 
-    100 TB shape: ref signatures/bands are computed once and persist (in a
+    100 TB shape: ref signatures/bands are computed once per call (in a
     standing pipeline they live as a table keyed by band hash, bucketed so
     each new batch's band join co-locates); per-batch work is
     O(batch shingles) map-side + band-bucket join + candidate-only verify.
+    Each side's shingle arrays feed its signatures and its verify, so they
+    are materialized once with a lazy local checkpoint, which the session
+    reclaims with the result (a ``persist`` stays pinned until someone
+    unpersists it).
     """
-    arr_new = shingle_arrays(new_df, id_col, text_col, n).persist()
-    arr_ref = shingle_arrays(ref_df, id_col, text_col, n).persist()
+    arr_new = shingle_arrays(new_df, id_col, text_col, n).localCheckpoint(eager=False)
+    arr_ref = shingle_arrays(ref_df, id_col, text_col, n).localCheckpoint(eager=False)
     sig_new = minhash_signature_arrays(arr_new, id_col, num_hashes)
     sig_ref = minhash_signature_arrays(arr_ref, id_col, num_hashes)
     band_new = _pin_merge_if_exploded(
@@ -654,8 +658,17 @@ def simhash_near_dups(
     return _fp_hamming_pairs(simhash(df, id_col, text_col), id_col, max_hamming)
 
 
+# fingerprint rows past which the 8-block banding beats the 4-block one
+# (the measured ~1.5M crossover, taken conservatively)
+_BLOCKS8_ROWS = 1_000_000
+
+
 def _fp_hamming_pairs(
-    fp: DataFrame, id_col: str, max_hamming: int = 3, blocks: int | None = None
+    fp: DataFrame,
+    id_col: str,
+    max_hamming: int = 3,
+    blocks: int | None = None,
+    bound: int | None = None,
 ) -> DataFrame:
     """Block-combination-banded hamming pair join over an (id, simhash)
     DataFrame — the candidate-generation core shared by
@@ -687,23 +700,29 @@ def _fp_hamming_pairs(
       overtakes past the measured ~1.5M-row crossover (10.6 s × 4 ≈ 42 s
       at 1M and ×100 at 5M, vs ~2× / ~10× for the linear path).
 
-    ``blocks=None`` auto-sizes from a memoized corpus count: the smallest
-    power-of-two block count that exceeds ``max_hamming`` (pigeonhole
-    needs one clean block combination), bumped to ≥8 past 10⁶ rows —
-    the measured crossover, conservative toward the linear path. Pin
+    ``blocks=None`` auto-sizes: the smallest power-of-two block count
+    that exceeds ``max_hamming`` (pigeonhole needs one clean block
+    combination), bumped to ≥8 past ``_BLOCKS8_ROWS`` (10⁶) rows — the
+    measured crossover, conservative toward the linear path. The sizing
+    reads a job-free row bound first: ``bound`` (a caller's bound on
+    ``fp``'s rows) or else ``functions._row_bound(fp)``; only when that
+    is unknown or above 10⁶ does it run the memoized corpus count. Pin
     ``blocks=4`` to reproduce the legacy byte banding byte-for-byte."""
     import itertools
 
     W = 32
     if blocks is None:
-        from .similarity import _corpus_count
-
         valid = [b for b in (4, 8, 16, 32) if b > max_hamming]
         if not valid:
             raise ValueError(f"max_hamming {max_hamming} needs > {max_hamming} blocks of a 32-bit fingerprint")
         blocks = valid[0]
-        if blocks == 4 and max_hamming < 8 and _corpus_count(fp) > 1_000_000:
-            blocks = 8
+        if blocks == 4:
+            from .similarity import _corpus_count
+
+            if bound is None:
+                bound = _row_bound(fp)
+            if (bound is None or bound > _BLOCKS8_ROWS) and _corpus_count(fp) > _BLOCKS8_ROWS:
+                blocks = 8
     if blocks not in (4, 8, 16, 32) or blocks <= max_hamming:
         raise ValueError(f"blocks must be a power of two in 4..32 and > max_hamming, got {blocks}")
     w = W // blocks
@@ -775,6 +794,11 @@ def dup_clusters(
     cluster, so the window sends all of it to one task, which sorts and
     counts its (id, rep) pairs (docs/SCALE.md, "corpus_pipeline jobs per
     pass").
+
+    The hamming block count is sized from ``functions._row_bound(df)``
+    first: an input bounded at ≤ 10⁶ rows (cached and loaded, a
+    ``LocalRelation``, a Store scan) picks 4 blocks without the count of
+    distinct fingerprints (3 jobs); an unbounded input still counts.
     """
     from .graph import connected_components
 
@@ -795,7 +819,11 @@ def dup_clusters(
         .select(F.col(id_col).alias("id_a"), F.col("__rep").alias("id_b"))
     )
     reps = fpg.select(F.col("__rep").alias(id_col), "simhash")
-    rep_pairs = _fp_hamming_pairs(reps, id_col, max_hamming).select("id_a", "id_b")
+    # distinct fingerprints never outnumber the input rows, so the input's
+    # job-free bound sizes the hamming blocks without counting ``reps``
+    rep_pairs = _fp_hamming_pairs(
+        reps, id_col, max_hamming, bound=_row_bound(df)
+    ).select("id_a", "id_b")
     pairs = star.union(rep_pairs)
     comp = connected_components(pairs, "id_a", "id_b")
     lab = (

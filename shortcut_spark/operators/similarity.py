@@ -6,9 +6,10 @@ Three tiers, all DataFrame-native:
   a broadcast one-row cross join + exact-decimal dot product + sort-limit.
   The correctness baseline; O(N) scan but embarrassingly parallel, and at
   100 TB Catalyst prunes to the two needed columns.
-- ``cosine_join``      — exact all-pairs ≥ threshold (for near-dup of
-  embeddings); candidate generation via hyperplane LSH buckets so it never
-  goes quadratic.
+- ``cosine_join``      — all pairs ≥ threshold (for near-dup of
+  embeddings); a blocked all-pairs gemm on inputs known to be small, and
+  candidate generation via hyperplane LSH buckets above that, so it never
+  goes quadratic at scale.
 - ``lsh_topk``         — approximate top-k: probe only vectors sharing ≥1
   hyperplane-LSH band with the query. The scale path: bucket join instead
   of full scan; recall is tested against the brute-force tier in pytest.
@@ -22,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import cosine_exact, ensure_parallelism, vec_norm_sq_exact
+from ..functions import _row_bound, cosine_exact, ensure_parallelism, vec_norm_sq_exact
 
 __all__ = [
     "topk_cosine",
@@ -162,13 +163,15 @@ def lsh_params_for(
       SCALE.md row); at 10⁹ rows, 26-bit bands × 19 bands — per-row
       plane work grows with log N, candidates stay ∝ N.
 
-    Since r9 this IS the default: ``cosine_join``/``lsh_topk`` call it
-    with a cached input count whenever the caller does not pin
-    ``n_planes``/``bands`` (the r8 probe measured the old fixed
-    defaults at 487.9 s vs 6.7 s at a mere 10×, so the unsized call
-    path had to be the scale-safe one). The certified fixture queries
-    pin the legacy literals explicitly — their DuckDB twins inline the
-    exact plane literals — so certified row sets are unchanged."""
+    Since r9 this IS the default for ``lsh_topk``, and for an unsized
+    ``cosine_join`` above ``_EXACT_JOIN_ROWS`` or of unknown size (below
+    it the exact tier runs): they call it with a cached input count
+    whenever the caller does not pin ``n_planes``/``bands`` (the r8
+    probe measured the old fixed defaults at 487.9 s vs 6.7 s at a
+    mere 10×, so the unsized call path had to be the scale-safe one).
+    The certified fixture queries pin the legacy literals explicitly —
+    their DuckDB twins inline the exact plane literals — so certified
+    row sets are unchanged."""
     import math
 
     per_band = max(4, math.ceil(math.log2(max(n_rows / target_bucket, 2.0))))
@@ -546,6 +549,14 @@ def _banded_gemm_pairs(
     )
 
 
+# Largest job-free row bound (``functions._row_bound``) at which an unsized
+# ``cosine_join`` runs the exact all-pairs tier instead of LSH, per
+# ``prefilter``: the largest swept size where exact won by ≥ 1.5×. The JVM
+# cross join scores every pair, so its crossover sits far below the gemm's
+# (docs/SCALE.md, "cosine_join exact vs LSH crossover").
+_EXACT_JOIN_ROWS = {"numpy": 30_000, "none": 1_000}
+
+
 def cosine_join(
     emb: DataFrame,
     threshold: float,
@@ -554,22 +565,30 @@ def cosine_join(
     n_planes: int | None = None,
     bands: int | None = None,
     dim: int = 64,
-    exact: bool = False,
+    exact: bool | None = None,
     exact_score: bool = False,
     multiprobe: bool | None = None,
     prefilter: str = "numpy",
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold. ``exact=True`` goes
-    all-pairs (testing / small inputs); otherwise LSH-banded candidates.
+    all-pairs; ``exact=False`` takes LSH-banded candidates. The default
+    ``exact=None`` picks by size, with no job: when neither ``n_planes``
+    nor ``bands`` is pinned and the input's row bound
+    (``functions._row_bound``: a cached and loaded frame, a
+    ``LocalRelation``, a Store scan) is at most
+    ``_EXACT_JOIN_ROWS[prefilter]``, the exact tier runs — faster there,
+    recall 1.0, so its pairs are a superset of the LSH tier's (the
+    size-adaptive choice of *Continuously Adaptive Similarity Search*,
+    SIGMOD'20). An input with no bound, or above it, takes LSH as before.
     ``exact_score=True`` scores with the exact-decimal cosine
     (``functions.cosine_exact``) so the result is oracle-comparable;
     the default plain-double scorer is the cheap codegen path.
 
-    ``n_planes``/``bands`` default to the measured scale-safe sizing
-    (``lsh_params_for`` over a cached corpus count — the r8 probe
-    measured fixed 16/4 at 487.9 s vs 6.7 s flat at just 10×); pin both
-    to reproduce a fixed banding (the certified fixture queries pin the
-    legacy 16/4, matching their bit-exact DuckDB twins).
+    On the LSH tier ``n_planes``/``bands`` default to the measured
+    scale-safe sizing (``lsh_params_for`` over a cached corpus count —
+    the r8 probe measured fixed 16/4 at 487.9 s vs 6.7 s flat at just
+    10×); pin both to reproduce a fixed banding (the certified fixture
+    queries pin the legacy 16/4, matching their bit-exact DuckDB twins).
 
     ``multiprobe`` widens band collisions from exact signature equality
     to Hamming distance ≤ 1: ONE side of the self-join is expanded with
@@ -603,6 +622,9 @@ def cosine_join(
     # funnel's 1e-6 rough cut, 1e-9 under the plain-double threshold
     # (numpy-vs-fold summation differs ~1e-13 at these dims)
     cut = threshold - (2e-6 if exact_score else 1e-9)
+    if exact is None:
+        bound = None if n_planes is not None or bands is not None else _row_bound(emb)
+        exact = bound is not None and bound <= _EXACT_JOIN_ROWS[prefilter]
     if exact:
         if prefilter == "numpy":
             # one constant bucket: the all-pairs tier is a single blocked

@@ -7,6 +7,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from shortcut_spark.functions import _row_bound
 from shortcut_spark.operators import dedup, multimodal, similarity, text
 from tests.conftest import SF_DIR
 
@@ -113,12 +114,13 @@ def test_cosine_join_exact_vs_lsh(spark, emb):
         for r in similarity.cosine_join(sample, 0.5, exact=True).collect()
     }
     lsh = {
-        (r["id_a"], r["id_b"]) for r in similarity.cosine_join(sample, 0.5).collect()
+        (r["id_a"], r["id_b"])
+        for r in similarity.cosine_join(sample, 0.5, exact=False).collect()
     }
     assert lsh <= exact  # LSH candidates are verified → no false positives
     single = {
         (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(sample, 0.5, multiprobe=False).collect()
+        for r in similarity.cosine_join(sample, 0.5, exact=False, multiprobe=False).collect()
     }
     assert single <= lsh  # multi-probe only ADDS candidates
     if exact:
@@ -157,42 +159,31 @@ def test_cosine_join_ivf_recall_and_no_false_positives(spark, emb):
 
 
 @pytest.mark.slow
-def test_similarity_auto_params_are_default(spark, emb):
-    """r9 wiring: an UNSIZED cosine_join derives (n_planes, bands) from
-    lsh_params_for over a (cached) corpus count — i.e. the measured
-    scale-safe sizing IS the default path, byte-identical to pinning the
-    helper's output explicitly. Pinning params still reproduces a fixed
-    banding (the certified queries rely on that)."""
+def test_similarity_auto_params_are_default(spark, emb, tmp_path):
+    """An UNSIZED cosine_join picks its tier from a job-free row bound: a
+    small bounded input (the cached, loaded fixture) runs the exact
+    tier, byte-identical to ``exact=True``; an input with no bound (a
+    parquet scan) runs LSH sized by lsh_params_for over a corpus count,
+    byte-identical to pinning the helper's output. Pinning params still
+    reproduces a fixed banding (the certified queries rely on that)."""
     n = emb.count()
+    assert _row_bound(emb) == n <= similarity._EXACT_JOIN_ROWS["numpy"]
+
+    def pairs(df, **kw):
+        return {(r["id_a"], r["id_b"]) for r in similarity.cosine_join(df, **kw).collect()}
+
+    assert pairs(emb, threshold=0.5) == pairs(emb, threshold=0.5, exact=True)
+    emb.write.parquet(str(tmp_path / "emb"))
+    scan = spark.read.parquet(str(tmp_path / "emb"))
+    assert _row_bound(scan) is None
     planes, bands = similarity.lsh_params_for(n)
-    auto = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(emb, 0.5).collect()
-    }
-    pinned = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(
-            emb, 0.5, n_planes=planes, bands=bands
-        ).collect()
-    }
-    assert auto == pinned
+    auto = pairs(scan, threshold=0.5)
+    assert auto == pairs(scan, threshold=0.5, n_planes=planes, bands=bands)
     # multiprobe=None resolves by threshold regime: ON below 0.7 (the
     # moderate-threshold recall case), OFF at tight thresholds where
     # exact banding already recalls — the measured dead-flat default
-    tight_auto = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(emb, 0.8).collect()
-    }
-    tight_off = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(emb, 0.8, multiprobe=False).collect()
-    }
-    assert tight_auto == tight_off
-    mod_on = {
-        (r["id_a"], r["id_b"])
-        for r in similarity.cosine_join(emb, 0.5, multiprobe=True).collect()
-    }
-    assert auto == mod_on
+    assert pairs(scan, threshold=0.8) == pairs(scan, threshold=0.8, multiprobe=False)
+    assert auto == pairs(scan, threshold=0.5, multiprobe=True)
 
 
 def test_similarity_resolve_lsh_params(spark, emb):
@@ -4687,14 +4678,16 @@ def test_corpus_pass_job_pins(spark, planted):
     """A corpus pass plans few exchanges: the MinHash verify scores pairs
     from their shingle arrays, exact dedup is one aggregate, cluster
     sizes are a window, the CC labels are a sized ``LocalRelation``, and
-    ``ensure_parallelism`` never runs a job to read a partition count."""
+    ``ensure_parallelism`` never runs a job to read a partition count.
+    ``dup_clusters`` sizes its hamming blocks from the cached input's row
+    bound instead of counting the distinct fingerprints."""
     from shortcut_spark.functions import ensure_parallelism
     from shortcut_spark.operators.pipeline import clean_corpus
 
     survivors, n = _jobs(spark, lambda: clean_corpus(planted).select("doc_id").collect())
     assert survivors and n <= 15
     clusters, n = _jobs(spark, lambda: dedup.dup_clusters(planted).collect())
-    assert len(clusters) == 1000 and n <= 16
+    assert len(clusters) == 1000 and n <= 12
     kept = dedup.exact_dedup(planted, "doc_id", "text")
     _, n = _jobs(spark, lambda: ensure_parallelism(kept))
     assert n == 0
@@ -4741,6 +4734,162 @@ def test_get_num_partitions_only_in_partition_count():
                 if isinstance(node, ast.Attribute) and node.attr == "getNumPartitions":
                     hits.append((path.relative_to(root).as_posix(), fn.name))
     assert set(hits) == {("functions/__init__.py", "_partition_count")}
+
+
+def test_row_bound_reads_the_plan(spark, tmp_path):
+    """``_row_bound`` answers from plan leaves whose row count Spark holds,
+    through nodes that never add rows, and is None everywhere else."""
+    import pandas as pd
+
+    loc = spark.createDataFrame(pd.DataFrame({"id": range(10), "t": ["x"] * 10}))
+    assert _row_bound(loc) == 10
+    assert _row_bound(loc.filter("id > 3")) == 6  # folded into a LocalRelation
+    assert _row_bound(spark.range(100).filter("id % 2 = 0").select("id").orderBy("id")) == 100
+    assert _row_bound(loc.groupBy("t").count()) == 10
+    assert _row_bound(spark.range(0).groupBy().count()) == 1  # one row from none
+    assert _row_bound(spark.range(7).limit(3).repartition(2)) == 7
+    assert _row_bound(loc.sample(0.5)) == 10
+    assert _row_bound(loc.sample(True, 2.0)) is None  # replacement adds rows
+    assert _row_bound(loc.join(loc, "id")) is None
+    assert _row_bound(loc.select(F.explode(F.array("id", "id")))) is None
+    assert _row_bound(loc.union(loc)) is None
+    cached = spark.createDataFrame([(i, "y") for i in range(25)], "id long, t string").cache()
+    try:
+        assert _row_bound(cached) is None  # not loaded yet
+        cached.count()
+        assert _row_bound(cached) == 25
+        assert _row_bound(cached.filter("id < 5")) == 25
+    finally:
+        cached.unpersist()
+    spark.range(5).write.parquet(str(tmp_path / "p"))
+    assert _row_bound(spark.read.parquet(str(tmp_path / "p"))) is None
+
+
+def test_row_bound_of_store_scan(spark, tmp_path):
+    """A full Store scan answers with its manifest's live-row count."""
+    from shortcut_spark import Store, eq
+
+    st = Store.create(spark, str(tmp_path / "st"), 2)
+    st.insert([("a", "1"), ("b", "2"), ("c", "3")])
+    st.delete([eq(0, "b")])
+    assert _row_bound(st.find([])) == 2
+    assert _row_bound(st.find([eq(0, "a")])) == 1  # served as a LocalRelation
+
+
+def test_row_count_read_only_in_row_bound():
+    """A row count read off a plan is an estimate unless the leaf holds
+    it; the library reads one in one place, ``functions._row_bound``."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "shortcut_spark"
+    hits = []
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and node.attr.startswith("rowCount"):
+                    hits.append((path.relative_to(root).as_posix(), fn.name))
+    assert set(hits) == {("functions/__init__.py", "_row_bound")}
+
+
+def _planted_vectors(n: int, seed: int):
+    """(vec_id, embedding) rows of 64-d standard-normal vectors; every
+    20th is an earlier vector plus 0.05 noise (cosine ≈ 0.999)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    v = rng.standard_normal((n, 64)).astype(np.float32)
+    for i in range(20, n, 20):
+        v[i] = v[int(rng.integers(0, i))] + 0.05 * rng.standard_normal(64).astype(np.float32)
+    return [(i, v[i].tolist()) for i in range(n)]
+
+
+@pytest.fixture(scope="module")
+def planted_emb(spark):
+    df = spark.createDataFrame(_planted_vectors(1000, 13), "vec_id long, embedding array<float>").cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def test_cosine_join_small_bounded_input_job_pin(spark, planted_emb, monkeypatch):
+    """An unsized join over a cached 1,000-vector frame runs the exact
+    tier: no corpus count, no LSH sizing, at most 6 jobs."""
+    monkeypatch.setattr(similarity, "_resolve_lsh_params", None)  # LSH would call it
+    pairs, n = _jobs(spark, lambda: similarity.cosine_join(planted_emb, 0.9).collect())
+    assert len(pairs) >= 49 and n <= 6
+
+
+def test_cosine_join_routed_twin_of_exact(spark, monkeypatch):
+    """The routed tier is the exact tier: same rows as ``exact=True`` with
+    string ids and a NULL vector, for both scorers and both prefilters."""
+    import pandas as pd
+
+    rows = [(f"v{i:03d}", e) for i, e in _planted_vectors(120, 5)] + [("null", None)]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    assert _row_bound(df) == 121
+    monkeypatch.setattr(similarity, "_resolve_lsh_params", None)
+    for exact_score in (False, True):
+        for prefilter in ("numpy", "none"):
+            kw = dict(exact_score=exact_score, prefilter=prefilter)
+            want = sorted(similarity.cosine_join(df, 0.3, exact=True, **kw).collect())
+            got = sorted(similarity.cosine_join(df, 0.3, **kw).collect())
+            assert got == want and want, kw
+
+
+def test_cosine_join_unbounded_or_pinned_keeps_lsh(spark, planted_emb, tmp_path, monkeypatch):
+    """No bound, an explicit ``exact=False`` or pinned banding keeps the
+    LSH plan, sized as before."""
+    calls = []
+    resolve = similarity._resolve_lsh_params
+    monkeypatch.setattr(
+        similarity, "_resolve_lsh_params", lambda *a: calls.append(a[1:]) or resolve(*a)
+    )
+    planted_emb.write.parquet(str(tmp_path / "emb"))
+    scan = spark.read.parquet(str(tmp_path / "emb"))
+    lsh = sorted(similarity.cosine_join(scan, 0.9).collect())
+    planes, bands = similarity.lsh_params_for(1000)
+    assert lsh == sorted(
+        similarity.cosine_join(scan, 0.9, n_planes=planes, bands=bands).collect()
+    )
+    similarity.cosine_join(planted_emb, 0.9, exact=False).collect()
+    similarity.cosine_join(planted_emb, 0.9, n_planes=16, bands=4).collect()
+    assert calls == [(None, None), (planes, bands), (None, None), (16, 4)]
+
+
+def test_dup_clusters_bounded_twin_of_unbounded(spark, tmp_path, monkeypatch):
+    """A bounded input sizes the hamming blocks with no count and labels
+    every row as the counted, unbounded input does."""
+    rows = _planted_corpus(400, 21)
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(str(tmp_path / "docs"))
+    scan = spark.read.parquet(str(tmp_path / "docs"))
+    assert _row_bound(scan) is None
+    counted = []
+    count = similarity._corpus_count
+    monkeypatch.setattr(similarity, "_corpus_count", lambda df: counted.append(1) or count(df))
+    want = sorted(dedup.dup_clusters(scan).collect())
+    assert counted == [1]
+    bounded = spark.createDataFrame(rows, "doc_id long, text string").cache()
+    try:
+        bounded.count()
+        assert sorted(dedup.dup_clusters(bounded).collect()) == want
+    finally:
+        bounded.unpersist()
+    assert counted == [1]
+
+
+def test_cross_corpus_near_dups_pins_no_cached_relation(spark):
+    """``cross_corpus_near_dups`` materializes its shingle arrays with lazy
+    local checkpoints, never with ``persist``."""
+    rows = _planted_corpus(40, 9)
+    new = spark.createDataFrame(rows[:20], "doc_id long, text string")
+    ref = spark.createDataFrame(rows[20:], "doc_id long, text string")
+    spark.catalog.clearCache()
+    dedup.cross_corpus_near_dups(new, ref, "doc_id", "text").collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _exact_dedup_semijoin(df, id_col, text_col):
