@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import local_relation, scoped_confs
+from .session import job_tag, local_relation, scoped_confs
 from .store import Store, _spark_key
 
 _DEC = T.DecimalType(27, 6)
@@ -258,33 +258,15 @@ class MatView:
         and without the cut each use would re-execute the whole delta-agg
         + state-scan + join plan from scratch. Either way the view's new
         base version commits in the merge's one state commit. Jobs per
-        refresh are counted via a job group and exposed as
-        ``last_refresh_jobs`` (observability for the many-small-jobs
-        failure mode)."""
+        refresh are counted under a job tag of their own (:func:`job_tag`)
+        and exposed as ``last_refresh_jobs`` (observability for the
+        many-small-jobs failure mode)."""
         cur = self.base.manifest.version
         if cur == self.base_version:
             self.last_refresh_scanned_base = False
             self.last_refresh_jobs = 0
             return 0
-        import uuid
-
-        sc = self.spark.sparkContext
-        # group name unique PER CALL: getJobIdsForGroup returns every
-        # retained job ever tagged with the group, so a reused name
-        # (same view path + version across tests/sessions) accumulates
-        group = f"mv_refresh_{uuid.uuid4().hex[:8]}"
-        # the caller's job group (and description) is saved and restored,
-        # not cleared: a refresh nests inside any caller's group
-        saved = {
-            k: sc.getLocalProperty(k)
-            for k in (
-                "spark.jobGroup.id",
-                "spark.job.description",
-                "spark.job.interruptOnCancel",
-            )
-        }
-        sc.setJobGroup(group, f"matview refresh to v{cur}")
-        try:
+        with job_tag(self.spark) as jobs:
             rows = self._refresh_driver() if self._self_maintainable else None
             confs = {} if rows is not None else self._static_confs(cur)
             with scoped_confs(self.spark, confs):
@@ -316,12 +298,7 @@ class MatView:
                         rows.unpersist()
             self.last_refresh_scanned_base = not self._self_maintainable
             self.base_version = cur
-        finally:
-            for k, v in saved.items():
-                sc.setLocalProperty(k, v)
-        self.last_refresh_jobs = len(
-            sc.statusTracker().getJobIdsForGroup(group)
-        )
+        self.last_refresh_jobs = len(jobs)
         return n_groups
 
     def _static_confs(self, cur: int) -> dict:

@@ -370,23 +370,6 @@ def lsh_topk(
     return topk_cosine(cand, query, k, id_col, vec_col)
 
 
-def _fast_cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Plain-double cosine (codegen-friendly) for approximate paths that
-    have no oracle twin; exact-decimal cosine stays in the oracle-checked
-    operators."""
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u.cast("double") * v.cast("double")),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
-    # try_divide: a zero-norm vector has no direction — its cosine is NULL
-    # (dropped by every downstream threshold filter), not an ANSI
-    # DIVIDE_BY_ZERO crash
-    return F.try_divide(dot(a, b), F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
 def _numpy_pair_prefilter(
     emb: DataFrame, pairs: DataFrame, cut: float, id_col: str, vec_col: str
 ) -> DataFrame:

@@ -16,7 +16,7 @@ from typing import Iterator, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-__all__ = ["get_spark", "local_relation", "scoped_confs", "stop_spark"]
+__all__ = ["get_spark", "job_tag", "local_relation", "scoped_confs", "stop_spark"]
 
 # Native thread-pool caps for every Python worker (and the driver's own
 # numpy kernels). The gemm/decode strips hand whole Arrow batches to
@@ -127,6 +127,31 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 conf.unset(k)
             else:
                 conf.set(k, v)
+
+
+@contextmanager
+def job_tag(spark: SparkSession) -> Iterator[list[int]]:
+    """Tag the Spark jobs the body of a ``with`` block launches with a tag
+    of their own; the yielded list holds their ids once the block exits.
+
+    The tag is added to the calling thread's job tags, so it nests inside
+    any job group or tag the caller has set and leaves them as they were.
+    On exit the listener bus is drained first, since the status tracker
+    it feeds may lag the body's last job.
+    """
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"shortcut-{uuid.uuid4().hex[:12]}"
+    jobs: list[int] = []
+    sc.addJobTag(tag)
+    try:
+        yield jobs
+    finally:
+        sc.removeJobTag(tag)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        jobs.extend(sorted(int(j) for j in jsc.statusTracker().getJobIdsForTag(tag)))
 
 
 def local_relation(spark: SparkSession, tables: list, schema: T.StructType) -> DataFrame:

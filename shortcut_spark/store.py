@@ -115,19 +115,15 @@ class Store:
         self.spark = spark
         self.path = os.path.abspath(path)
         self.manifest = manifest
-        self._posting_cache: dict[tuple, DataFrame] = {}
         # driver-side posting maps (column, version) -> {key: {file_id}} —
         # the distributed analogue of the reference's in-memory
         # HashMap<K, Vec<rowid>> lookup (src/idx.rs:41-46), built only for
         # small indexes (POSTING_MAP_MAX entries); big ones stay on disk
         self._posting_maps: dict[tuple, dict] = {}
-        # (column, version) -> {file_id: bitset bytes} for BLOOM indices —
-        # m_bits/8 bytes per live file, probed driver-side with zero jobs.
-        # Above BLOOM_EAGER_MAX files the map fills LAZILY per candidate;
-        # _bloom_fetched tracks which ids were already requested so an
-        # absent bitset is not re-fetched on every probe.
+        # (column, version) -> {file_id: bitset bytes, or None when the
+        # file has none} for BLOOM indices, filled per probed candidate
+        # (m_bits/8 bytes per file), so an absent bitset is not re-fetched
         self._bloom_maps: dict[tuple, dict] = {}
-        self._bloom_fetched: dict[tuple, set] = {}
         # (column, version) -> vectorized per-file stats arrays for the
         # driver-side pruning loop (the SCALE.md graduation: numpy columns
         # instead of a Python loop over files)
@@ -1149,22 +1145,18 @@ class Store:
 
     def _commit(self) -> None:
         """Commit the manifest and evict caches keyed to older versions —
-        stale posting DataFrames are unpersisted, stale driver maps and
-        the file lists of parts no index names any more dropped
+        stale posting maps, bloom bitsets and stats arrays are dropped
         (long-lived ingestion commits one version per micro-batch and
         would otherwise pin them forever)."""
         self.manifest.commit(self.path)
         self._evict_caches(self.manifest.version)
 
     def _evict_caches(self, keep: int | None = None) -> None:
-        """Drop every (column, version)-keyed cache entry of a version other
-        than ``keep``, unpersisting posting DataFrames."""
-        for key in [k for k in self._posting_cache if k[1] != keep]:
-            try:
-                self._posting_cache.pop(key).unpersist()
-            except Exception:
-                pass
-        for cache in (self._posting_maps, self._bloom_maps, self._bloom_fetched, self._stats_np):
+        """Drop every (column, version)-keyed driver cache entry of a
+        version other than ``keep``. No Spark relation is cached: every
+        index part is read with pyarrow or, uncached, by
+        :meth:`_probe_postings`."""
+        for cache in (self._posting_maps, self._bloom_maps, self._stats_np):
             for key in [k for k in cache if k[1] != keep]:
                 del cache[key]
 
@@ -1759,8 +1751,13 @@ class Store:
         return [sk.alias(f"__sk{suffix}"), F.hll_sketch_estimate(sk).alias(f"__ndv{suffix}")]
 
     def _posting_schema(self, spec: IndexSpec) -> T.StructType:
-        """Schema of one posting part: (key, __file_id) for single-column
-        kinds, (k0..kn, __file_id) typed per member for COMPOSITE."""
+        """Schema of one index part: (key, __file_id) for single-column
+        posting kinds, (k0..kn, __file_id) typed per member for COMPOSITE,
+        (__file_id, bloom) for BLOOM."""
+        if spec.kind == BLOOM:
+            return T.StructType(
+                [T.StructField("__file_id", T.IntegerType()), T.StructField("bloom", T.BinaryType())]
+            )
         if spec.columns:
             fields = [
                 T.StructField(f"k{i}", self.manifest.schema[c].dataType, True)
@@ -1804,24 +1801,6 @@ class Store:
         both are :meth:`_stats_ok` values."""
         if self._stats_ok(lo) and self._stats_ok(hi):
             spec.part_stats[part_rel] = [self._stats_val(lo), self._stats_val(hi)]
-
-    def _read_postings(self, spec: IndexSpec) -> DataFrame | None:
-        if not spec.parts:
-            return None
-        cache_key = (spec.column, self.manifest.version, tuple(spec.parts))
-        cached = self._posting_cache.get(cache_key)
-        if cached is not None:
-            return cached
-        live = {f.id for f in self.manifest.files}
-        df = self.spark.read.schema(self._posting_schema(spec)).parquet(
-            *[self._abs(p) for p in spec.parts]
-        )
-        # a literal id list, not a broadcast semi-join of a Python-list
-        # DataFrame (each such broadcast is a Spark job of its own)
-        df = df.filter(self._in_literal("__file_id", sorted(live))) if live else df.limit(0)
-        df = df.cache()  # postings are tiny relative to data; lookups are hot
-        self._posting_cache[cache_key] = df
-        return df
 
     def _parts_for_probe(self, spec: IndexSpec, point) -> list[str]:
         """Posting parts that may contain range-key value ``point`` —
@@ -1926,10 +1905,12 @@ class Store:
         return set(tbl.column("__file_id").to_pylist())
 
     def _probe_postings(self, spec: IndexSpec, point) -> DataFrame | None:
-        """The Spark fallback of :meth:`_posting_hits`, for the probes it
-        declines: the files of the parts ``_parts_for_probe`` keeps (the
-        same list the driver read takes) as an uncached DataFrame, so the
-        caller's key predicate — filtered with Spark's own coercion —
+        """The one Spark read of index parts: the fallback of
+        :meth:`_posting_hits` for the probes it declines, and the reader of
+        a custom index's other comparisons (``point`` None, which keeps
+        every part). The files of the parts ``_parts_for_probe`` keeps
+        (the same list the driver read takes) as an uncached DataFrame, so
+        the caller's key predicate — filtered with Spark's own coercion —
         pushes down to the parquet scan. One Spark job when collected."""
         if not spec.parts:
             return None
@@ -2155,10 +2136,12 @@ class Store:
         2. posting-index lookup, only when the cost model says it can
            actually narrow things: enough candidate files left, and keys
            selective enough that most files miss (ndv ≫ file count; the
-           reference's estimate() idea applied at file granularity). A
-           const-eq probe runs on the driver with zero Spark jobs
-           (:meth:`_posting_hits`); a probe it declines, and a custom
-           index's other comparisons, take one small Spark job.
+           reference's estimate() idea applied at file granularity).
+           Posting, trigram and bloom probes read the index parts on the
+           driver with pyarrow, zero Spark jobs (:meth:`_posting_hits`,
+           :meth:`_bloom_prune`); a const-eq probe it declines, and a
+           custom index's other comparisons, take one small Spark job
+           (:meth:`_probe_postings`).
         """
         path = choose_access_path(conds, self.manifest.indices, self.colnames)
         eligible = [
@@ -2219,56 +2202,46 @@ class Store:
         if not files:
             return path, list(files)
         if path.index is not None and files and path.index.kind == BLOOM:
-            # zero-job path: bitsets live in a driver map (one tiny cached
-            # read); a missing bitset or non-portable probe type keeps the
-            # file — conservative superset, as always
+            # a non-portable probe type keeps every file — conservative
+            # superset, as always
             if path.cond.cmp.is_const_eq and self._bloom_probe_ok(
                 path.index.column, path.cond.cmp.value.payload
             ):
-                bmap = self._bloom_bitsets(path.index, [f.id for f in files])
-                if bmap:
-                    pos = _bloom_positions_py(
-                        path.cond.cmp.value.payload,
-                        int(path.index.params["m_bits"]),
-                        int(path.index.params["k"]),
-                    )
-                    files = [
-                        f
-                        for f in files
-                        if f.id not in bmap or self._bloom_hit(bmap[f.id], pos)
-                    ]
+                files = self._bloom_prune(path.index, files, [path.cond.cmp.value.payload])
             return path, files
         if path.index is not None and files and path.index.kind == TRIGRAM:
             # substring lookup: a file can hold a match only if its posting
             # set holds EVERY trigram of the needle — intersect the grams'
-            # file sets (driver map when small enough, else one filter +
-            # count-distinct job over the cached postings). The residual
+            # file sets: from the driver map when the index is small
+            # enough, else from a pyarrow read of the grams' postings,
+            # keeping the files that hold all of them. The residual
             # `contains` re-check restores exactness, as always.
             needle = path.cond.cmp.value.payload
             if path.index.params.get("ci"):
                 needle = needle.lower()  # lowered postings ⇒ lowered probe
             grams = sorted({needle[i : i + 3] for i in range(len(needle) - 2)})
-            if grams and len(files) > 1:
-                hit_ids = None
+            if grams and len(files) > 1 and path.index.parts:
                 if path.index.rows <= self.POSTING_MAP_MAX:
                     pmap = self._posting_map(path.index)
-                    if pmap is not None:
-                        hit_ids = set.intersection(
-                            *[pmap.get(g, set()) for g in grams]
+                    hit_ids = set.intersection(*[pmap.get(g, set()) for g in grams])
+                else:
+                    import pyarrow as pa
+                    import pyarrow.compute as pc
+
+                    tbl = self._arrow_read(
+                        self._posting_files(path.index.parts),
+                        self._posting_schema(path.index),
+                        pc.is_in(pc.field("key"), pa.array(grams, pa.string())),
+                    ).group_by("__file_id").aggregate([("key", "count_distinct")])
+                    hit_ids = {
+                        fid
+                        for fid, n in zip(
+                            tbl.column("__file_id").to_pylist(),
+                            tbl.column("key_count_distinct").to_pylist(),
                         )
-                if hit_ids is None:
-                    post = self._read_postings(path.index)
-                    if post is not None:
-                        hit_ids = {
-                            r["__file_id"]
-                            for r in post.filter(self._in_literal("key", grams))
-                            .groupBy("__file_id")
-                            .agg(F.count_distinct("key").alias("__ng"))
-                            .filter(F.col("__ng") == len(grams))
-                            .collect()
-                        }
-                if hit_ids is not None:
-                    files = [f for f in files if f.id in hit_ids]
+                        if n == len(grams)
+                    }
+                files = [f for f in files if f.id in hit_ids]
             return path, files
         if path.index is not None and files and path.conds:
             # composite lookup: the conjunction const-eq-covers every member
@@ -2308,10 +2281,7 @@ class Store:
                 hit_ids = self._posting_hits(path.index, [v]) if const else None
                 if hit_ids is None:
                     # a declined probe, or a custom index's other ops
-                    if const:
-                        post = self._probe_postings(path.index, v)
-                    else:
-                        post = self._read_postings(path.index)
+                    post = self._probe_postings(path.index, v)
                     if post is not None:
                         key_cond = Condition("key", path.cond.cmp)
                         # deduplicated here, not by a distinct() shuffle
@@ -2362,60 +2332,41 @@ class Store:
             return isinstance(probe, int) and not isinstance(probe, bool)
         return False
 
-    # below this many live files the whole bloom map loads eagerly (one
-    # read, zero jobs on every later probe); above it, probes fetch ONLY
-    # their candidates' bitsets — at 1M files the full map is ~16 GB,
-    # per-candidate loading is the difference between usable and not
-    BLOOM_EAGER_MAX = 4096
+    def _bloom_bitsets(self, spec: IndexSpec, candidate_ids) -> dict:
+        """{file id: bitset bytes, or None for a file with no bitset} of
+        the candidate files, read on the driver with pyarrow (zero Spark
+        jobs). Only the ids not fetched before at this manifest version
+        are read, as an ``is_in`` filter pushed into the scan, so probe
+        memory scales with the files probed, not the files in the table
+        (~16 GB of bitsets at 1M files). A later part wins when a file id
+        reappears."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    def _bloom_bitsets(self, spec: IndexSpec, candidate_ids) -> dict | None:
-        """Bitsets for the CANDIDATE files only — the lazy per-candidate
-        loading SCALE.md promised: big tables fetch just the bitsets the
-        stats layer's survivors need (a filtered, pushdown-friendly read
-        of the (file_id, bloom) parts), cached incrementally per manifest
-        version so repeated probes re-fetch nothing. Small tables keep
-        the eager whole-map path (zero jobs after the first load). Files
-        whose bitset is absent simply stay candidates — superset contract."""
-        if not spec.parts:
-            return None
-        live = {f.id for f in self.manifest.files}
-        if len(live) <= self.BLOOM_EAGER_MAX:
-            return self._bloom_map(spec)
-        key = (spec.column, self.manifest.version)
-        bmap = self._bloom_maps.setdefault(key, {})
-        fetched = self._bloom_fetched.setdefault(key, set())
-        need = [int(i) for i in candidate_ids if i in live and i not in fetched]
-        if need:
-            df = (
-                self.spark.read.schema("__file_id int, bloom binary")
-                .parquet(*[self._abs(p) for p in spec.parts])
-                .filter(self._in_literal("__file_id", need))
+        bmap = self._bloom_maps.setdefault((spec.column, self.manifest.version), {})
+        need = sorted({int(i) for i in candidate_ids} - bmap.keys())
+        if need and spec.parts:
+            bmap.update(dict.fromkeys(need))
+            tbl = self._arrow_read(
+                self._posting_files(spec.parts),
+                self._posting_schema(spec),
+                pc.is_in(pc.field("__file_id"), pa.array(need, pa.int32())),
             )
-            for r in df.collect():
-                bmap[r["__file_id"]] = bytes(r["bloom"])
-            fetched.update(need)
+            bmap.update(zip(tbl.column("__file_id").to_pylist(), tbl.column("bloom").to_pylist()))
         return bmap
 
-    def _bloom_map(self, spec: IndexSpec) -> dict | None:
-        """{file_id: bitset bytes} for a BLOOM index — one tiny read of
-        #files rows, cached per manifest version. Later parts win when a
-        file id reappears (never expected: one bitset per file build)."""
-        if not spec.parts:
-            return None
-        key = (spec.column, self.manifest.version)
-        bmap = self._bloom_maps.get(key)
-        if bmap is None:
-            live = {f.id for f in self.manifest.files}
-            bmap = {}
-            for part in spec.parts:
-                df = self.spark.read.schema("__file_id int, bloom binary").parquet(
-                    self._abs(part)
-                )
-                for r in df.collect():
-                    if r["__file_id"] in live:
-                        bmap[r["__file_id"]] = bytes(r["bloom"])
-            self._bloom_maps[key] = bmap
-        return bmap
+    def _bloom_prune(self, spec: IndexSpec, files: Sequence[DataFile], keys: Sequence) -> list:
+        """The ``files`` whose bitset may hold one of ``keys``, or that
+        have none — the superset contract. Every key must pass
+        :meth:`_bloom_probe_ok`."""
+        bmap = self._bloom_bitsets(spec, [f.id for f in files])
+        m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
+        probes = [_bloom_positions_py(key, m_bits, k) for key in keys]
+        return [
+            f
+            for f in files
+            if bmap.get(f.id) is None or any(self._bloom_hit(bmap[f.id], p) for p in probes)
+        ]
 
     @staticmethod
     def _bloom_hit(bits: bytes, positions: Sequence[int]) -> bool:
@@ -2511,9 +2462,11 @@ class Store:
         The idiomatic-Spark answer to the reference bench's get loop
         (``benches/bench.rs:59-70``: N sequential ``find``s): per-query
         scheduling dominates point lookups on a cluster, so a multiget
-        amortizes it. File pruning unions the posting hits of every key
-        (same superset-then-residual contract as ``find``,
-        ``src/lib.rs:89-91``); the residual filter is a semi-join for big
+        amortizes it. File pruning unions the posting hits of every key,
+        or keeps the files whose bloom bitset may hold one
+        (:meth:`_bloom_prune`, the probe ``find`` takes) — the same
+        superset-then-residual contract as ``find``,
+        ``src/lib.rs:89-91``; the residual filter is a semi-join for big
         key sets and an ``IN`` literal (:meth:`_in_literal`) for small ones.
         Pruned files holding at most ``DRIVER_INSERT_ROWS`` rows are read
         on the driver, as in ``find``: with up to 1,000 keys the lookup
@@ -2554,16 +2507,7 @@ class Store:
             and len(keys) <= 10_000  # k hashes per key, driver-side
             and all(self._bloom_probe_ok(name, k) for k in keys)
         ):
-            bmap = self._bloom_bitsets(spec, [f.id for f in files])
-            if bmap:
-                m_bits, kh = int(spec.params["m_bits"]), int(spec.params["k"])
-                probes = [_bloom_positions_py(k, m_bits, kh) for k in keys]
-                files = [
-                    f
-                    for f in files
-                    if f.id not in bmap
-                    or any(self._bloom_hit(bmap[f.id], pos) for pos in probes)
-                ]
+            files = self._bloom_prune(spec, files, keys)
         elif len(keys) <= 1000:
             # stats layer: a file can match only if some key is in range.
             # Vectorized (files × keys broadcast over the cached stat

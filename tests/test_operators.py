@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from shortcut_spark.functions import _row_bound
 from shortcut_spark.operators import dedup, multimodal, similarity, text
+from shortcut_spark.session import job_tag
 from tests.conftest import SF_DIR
 
 
@@ -4630,19 +4631,9 @@ def test_fp_hamming_pairs_merge_pin_identical(spark, docs):
 
 def _jobs(spark, fn):
     """(result of ``fn``, Spark jobs it launched), counted by a job tag."""
-    import uuid
-
-    sc = spark.sparkContext
-    tag = f"pin-{uuid.uuid4().hex[:8]}"
-    sc.addJobTag(tag)
-    try:
+    with job_tag(spark) as jobs:
         out = fn()
-    finally:
-        sc.removeJobTag(tag)
-    jsc = sc._jsc.sc()
-    # the tracker is fed by the listener bus, which may lag the call
-    jsc.listenerBus().waitUntilEmpty()
-    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+    return out, len(jobs)
 
 
 def _planted_corpus(n_docs: int, seed: int):
@@ -4691,17 +4682,6 @@ def test_corpus_pass_job_pins(spark, planted):
     kept = dedup.exact_dedup(planted, "doc_id", "text")
     _, n = _jobs(spark, lambda: ensure_parallelism(kept))
     assert n == 0
-
-
-def test_clean_corpus_pins_no_cached_relation(spark):
-    """``clean_corpus`` materializes its intermediates with lazy local
-    checkpoints, which the session reclaims, never with ``persist``."""
-    from shortcut_spark.operators.pipeline import clean_corpus
-
-    df = spark.createDataFrame(_planted_corpus(200, 5), "doc_id long, text string")
-    spark.catalog.clearCache()
-    assert clean_corpus(df).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ensure_parallelism_unknown_size_targets_min_parts(spark):
@@ -4879,17 +4859,6 @@ def test_dup_clusters_bounded_twin_of_unbounded(spark, tmp_path, monkeypatch):
     finally:
         bounded.unpersist()
     assert counted == [1]
-
-
-def test_cross_corpus_near_dups_pins_no_cached_relation(spark):
-    """``cross_corpus_near_dups`` materializes its shingle arrays with lazy
-    local checkpoints, never with ``persist``."""
-    rows = _planted_corpus(40, 9)
-    new = spark.createDataFrame(rows[:20], "doc_id long, text string")
-    ref = spark.createDataFrame(rows[20:], "doc_id long, text string")
-    spark.catalog.clearCache()
-    dedup.cross_corpus_near_dups(new, ref, "doc_id", "text").collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _exact_dedup_semijoin(df, id_col, text_col):

@@ -1,4 +1,5 @@
-"""Session-conf scoping (shortcut_spark/session.py ``scoped_confs``).
+"""Session-conf scoping (shortcut_spark/session.py ``scoped_confs``) and
+job counting (``job_tag``).
 
 Library code flips session-global confs only through ``scoped_confs``;
 these tests pin the helper's contract (exception-safe, nested-safe,
@@ -12,7 +13,7 @@ import os
 import pytest
 
 from shortcut_spark import Store
-from shortcut_spark.session import scoped_confs
+from shortcut_spark.session import job_tag, scoped_confs
 
 AQE = "spark.sql.adaptive.enabled"
 SHP = "spark.sql.shuffle.partitions"
@@ -191,3 +192,28 @@ def test_session_confs_written_only_through_session_module():
     assert not stray, f"use session.scoped_confs instead of conf.set/unset: {stray}"
     # every allowlisted write still exists (a stale entry would hide a new one)
     assert {(w[0], w[1]) for w in writes} == set(_CONF_WRITE_ALLOWLIST)
+
+
+def test_job_tag_counts_the_body_jobs_and_keeps_the_callers_tags(spark):
+    """A tag yields the ids of the jobs its body ran, nested tags included,
+    and leaves the caller's own job tags as they were, on exit and on an
+    exception."""
+    sc = spark.sparkContext
+    sc.addJobTag("caller-tag")
+    try:
+        with job_tag(spark) as idle:
+            pass
+        with job_tag(spark) as outer:
+            spark.range(10).collect()
+            with job_tag(spark) as inner:
+                spark.range(5).collect()
+        with pytest.raises(RuntimeError, match="boom"):
+            with job_tag(spark) as failed:
+                spark.range(3).collect()
+                raise RuntimeError("boom")
+        assert set(sc.getJobTags()) == {"caller-tag"}
+    finally:
+        sc.removeJobTag("caller-tag")
+    assert idle == []
+    assert inner and set(inner) < set(outer) and outer == sorted(outer)
+    assert failed and not set(failed) & set(outer)

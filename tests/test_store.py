@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from shortcut_spark import BTreeIndex, HashIndex, Store, between, col_eq, eq
+from shortcut_spark.session import job_tag
 from shortcut_spark.store import ROWID
 
 ABC = [["a1", "a2"], ["b1", "b2"], ["c1", "c2"]]
@@ -32,6 +33,23 @@ def make(spark, path, data, index_col=None, index_late=False, kind=HashIndex):
     if index_col is not None and index_late:
         st.index(index_col, kind)
     return st
+
+
+def _spark_postings(spark, st, spec):
+    """The live rows of ``spec``'s parts — postings, or bloom bitsets —
+    read by Spark: the reference for the Store's pyarrow reads."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.read.schema(st._posting_schema(spec))
+        .parquet(*st._posting_files(spec.parts))
+        .filter(F.col("__file_id").isin([f.id for f in st.manifest.files]))
+    )
+
+
+def _spark_bitsets(spark, st, spec):
+    """{file id: bitset} of a bloom index's live files, read by Spark."""
+    return {r["__file_id"]: bytes(r["bloom"]) for r in _spark_postings(spark, st, spec).collect()}
 
 
 def test_it_works(spark, store_path):  # src/lib.rs:249-256
@@ -1400,9 +1418,9 @@ def test_prune_mask_edges_match_per_file_check(spark, tmp_path):
 
 @pytest.mark.slow
 def test_bloom_lazy_per_candidate_loading(spark, store_path):
-    """Above BLOOM_EAGER_MAX live files, a bloom probe fetches ONLY the
-    candidate files' bitsets (incrementally cached), never the whole map
-    — and pruning results are identical to the eager path."""
+    """A bloom probe fetches ONLY the candidate files' bitsets
+    (incrementally cached), never the whole map — and they are the
+    bitsets Spark reads."""
     from shortcut_spark import BloomIndex
 
     st = Store.create(spark, store_path, 2)
@@ -1412,29 +1430,168 @@ def test_bloom_lazy_per_candidate_loading(spark, store_path):
     assert len(st.manifest.files) == 6
     spec = st.manifest.indices[st.colnames[0]]
 
-    # eager baseline
-    eager = dict(st._bloom_map(spec))
-    assert len(eager) == 6
+    # Spark-read baseline of every live file's bitset
+    want = _spark_bitsets(spark, st, spec)
+    assert len(want) == 6
 
-    # fresh store object → cold caches; force the lazy path
+    # fresh store object → cold caches
     st2 = Store.open(spark, store_path)
-    st2.BLOOM_EAGER_MAX = 0
     spec2 = st2.manifest.indices[st2.colnames[0]]
     key = (spec2.column, st2.manifest.version)
     cand = [f.id for f in st2.manifest.files[:2]]
     got = st2._bloom_bitsets(spec2, cand)
-    assert set(st2._bloom_fetched[key]) == set(cand)  # only candidates fetched
-    assert all(got[i] == eager[i] for i in cand)
+    assert set(st2._bloom_maps[key]) == set(cand)  # only candidates fetched
+    assert all(got[i] == want[i] for i in cand)
     # incremental: a second probe adds only the new ids
     more = [f.id for f in st2.manifest.files[:4]]
     st2._bloom_bitsets(spec2, more)
-    assert set(st2._bloom_fetched[key]) == set(more)
+    assert set(st2._bloom_maps[key]) == set(more)
     assert len(st2._bloom_maps[key]) <= 4 < 6  # never the whole map
 
-    # end-to-end exactness through the lazy path
+    # end-to-end exactness through the per-candidate path
     got_rows = st2.find([eq(0, "k3_7")]).collect()
     assert len(got_rows) == 1 and got_rows[0][1] == "v3_7"
     assert st2.find([eq(0, "nope")]).count() == 0
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_bloom_and_trigram_probes_take_no_job(spark, tmp_path):
+    """Both index-part readers are pyarrow reads on the driver: a bloom
+    find on a freshly opened handle over six bloom parts, and a trigram
+    ``contains`` above the posting-map cap (``POSTING_MAP_MAX`` 0), prune
+    files and serve their exact rows with no Spark job, and cache no
+    relation."""
+    from shortcut_spark import BloomIndex, TrigramIndex
+    from shortcut_spark.cmp import contains
+
+    path = str(tmp_path / "bloom")
+    st = Store.create(spark, path, 2)
+    st.index(0, BloomIndex)
+    for b in range(6):
+        st.insert([(f"k{b}_{i}", f"v{b}_{i}") for i in range(10)])
+    assert len(st.manifest.indices["c0"].parts) == 6
+    fresh = Store.open(spark, path)
+    held = _persistent_rdds(spark)
+    got, jobs = _jobs(spark, lambda: fresh.find([eq(0, "k3_7")]).collect())
+    assert jobs == 0 and [tuple(r) for r in got] == [("k3_7", "v3_7")]
+    assert fresh.explain_find([eq(0, "k3_7")]).endswith("files=1/6")
+    assert _persistent_rdds(spark) == held
+
+    st = Store.create(spark, str(tmp_path / "trigram"), 2)
+    st.index(0, TrigramIndex())
+    for b in range(4):
+        rows = [(f"filler text number {i} batch {b}", str(i)) for i in range(50)]
+        st.insert(rows + ([("the rare xylophone needle", "hit")] if b == 2 else []))
+    st.POSTING_MAP_MAX = 0
+    got, jobs = _jobs(spark, lambda: st.find([contains(0, "xylophone")]).collect())
+    assert jobs == 0 and [tuple(r) for r in got] == [("the rare xylophone needle", "hit")]
+    assert st.explain_find([contains(0, "xylophone")]).endswith("files=1/4")
+    assert not st._posting_maps  # the capped probe built no map
+    assert _persistent_rdds(spark) == held
+
+
+def test_index_part_reads_match_spark_read(spark, tmp_path):
+    """The pyarrow trigram and bloom probes keep the files a Spark read of
+    the same index parts keeps: trigram hit sets from the posting map and
+    from the capped filtered read (case-sensitive and lowered postings),
+    and bloom bitsets and pruned files, over several parts and after a
+    copy-on-write delete retires a file."""
+    from pyspark.sql import functions as F
+
+    from shortcut_spark import BloomIndex, TrigramIndex
+    from shortcut_spark.cmp import contains, icontains
+    from shortcut_spark.store import _bloom_positions_py
+
+    st = Store.create(spark, str(tmp_path / "s"), 3)
+    st.index(0, TrigramIndex())
+    st.index(1, TrigramIndex(case_insensitive=True))
+    st.index(2, BloomIndex(m_bits=1 << 10, k=3))
+    words = ["alpha", "Bravo", "charlie", "DELTA", "echo", "foxtrot"]
+    for b in range(5):
+        st.insert(
+            [(f"{words[(b + i) % 6]} {words[i % 4]} {b}", f"{words[(b * i) % 6]} x", f"k{b}_{i % 7}")
+             for i in range(12)]
+        )
+    needles = ["alpha", "charlie bravo", "foxtrot", "ravo", "alpha Bravo", "zzz", "DELTA"]
+    keys = ["k0_1", "k3_6", "k4_0", "k9_9", "k2_3"]
+    for step in ("insert", "delete"):
+        if step == "delete":
+            assert st.delete([eq(2, "k1_2")]) > 0
+        live = {f.id for f in st.manifest.files}
+        for column, cmp in (("c0", contains), ("c1", icontains)):
+            spec = st.manifest.indices[column]
+            post = _spark_postings(spark, st, spec)
+            for needle in needles:
+                probe = needle.lower() if spec.params.get("ci") else needle
+                grams = sorted({probe[i : i + 3] for i in range(len(probe) - 2)})
+                want = {
+                    r["__file_id"]
+                    for r in post.filter(F.col("key").isin(grams))
+                    .groupBy("__file_id")
+                    .agg(F.count_distinct("key").alias("n"))
+                    .filter(F.col("n") == len(grams))
+                    .collect()
+                }
+                for cap in (Store.POSTING_MAP_MAX, 0):
+                    st.POSTING_MAP_MAX = cap
+                    _, files = st._prune_files([cmp(column, needle)])
+                    assert {f.id for f in files} == want & live, (step, column, needle, cap)
+                del st.POSTING_MAP_MAX
+        spec = st.manifest.indices["c2"]
+        want_bits = _spark_bitsets(spark, st, spec)
+        assert st._bloom_bitsets(spec, sorted(live)) == want_bits and want_bits
+        for k in keys:
+            pos = _bloom_positions_py(k, 1 << 10, 3)
+            want = {i for i, bits in want_bits.items() if Store._bloom_hit(bits, pos)}
+            fresh = Store.open(spark, st.path)
+            _, files = fresh._prune_files([eq(2, k)])
+            stats = [f for f in fresh.manifest.files if Store._file_may_match(f, eq(2, k), "c2")]
+            assert {f.id for f in files} == want & {f.id for f in stats}, (step, k)
+            assert rows_of(fresh.find([eq(2, k)])) == rows_of(
+                fresh.find([]).filter(F.col("c2") == k)
+            )
+
+
+def test_custom_hash_indexer_serving_between_is_exact(spark, store_path):
+    """A custom hash-kind indexer whose ``supports`` accepts ``between``
+    serves the range through the Spark posting read over every part, and
+    the rows are exact."""
+    import random
+
+    import pyspark.sql.types as T
+    from pyspark.sql import functions as F
+
+    class RangeHash:
+        kind = "hash"
+
+        def supports(self, cmp):
+            return cmp.is_const_eq or cmp.op == "between"
+
+        def estimate(self, rows, ndv):
+            return 1.0
+
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())])
+    st = Store.create(spark, store_path, schema)
+    st.index("k", RangeHash())
+    rng = random.Random(7)
+    for b in range(6):
+        # every file spans the key range, so the stats layer prunes none
+        ends = [(0, f"lo{b}"), (10_000, f"hi{b}")]
+        st.insert(ends + [(rng.randrange(0, 10_000), f"v{b}_{i}") for i in range(50)])
+    assert len(st.manifest.files) == 6
+    all_rows = st.find([])
+    for lo, hi in ((100, 300), (5_000, 5_050), (9_990, 20_000)):
+        cond = between("k", lo, hi)
+        assert "IndexLookup" in st.explain_find([cond])
+        got, jobs = _jobs(spark, lambda: rows_of(st.find([cond])))
+        assert got == rows_of(all_rows.filter(F.col("k").between(lo, hi))), (lo, hi)
+        assert jobs >= 1  # the custom op's posting read runs on Spark
+    # the posting read pruned: a narrow range keeps fewer than all files
+    kept = int(st.explain_find([between("k", 5_000, 5_050)]).split("files=")[1].split("/")[0])
+    assert kept < 6
 
 
 def test_stats_agg_fast_path_and_tombstone_fallback(spark, store_path):
@@ -2518,19 +2675,9 @@ def test_insert_counts_failure_restores_aqe(spark, tmp_path):
 
 def _jobs(spark, fn):
     """(result of ``fn``, Spark jobs it launched), counted by a job tag."""
-    import uuid
-
-    sc = spark.sparkContext
-    tag = f"pin-{uuid.uuid4().hex[:8]}"
-    sc.addJobTag(tag)
-    try:
+    with job_tag(spark) as jobs:
         out = fn()
-    finally:
-        sc.removeJobTag(tag)
-    jsc = sc._jsc.sc()
-    # the tracker is fed by the listener bus, which may lag the call
-    jsc.listenerBus().waitUntilEmpty()
-    return out, len(jsc.statusTracker().getJobIdsForTag(tag))
+    return out, len(jobs)
 
 
 def test_literal_merge_into_small_unindexed_store_takes_no_job(spark, tmp_path):
@@ -2645,7 +2792,7 @@ def _scratch_sketch(spark, st, column):
     postings of the index on ``column``."""
     from pyspark.sql import functions as F
 
-    post = st._read_postings(st.manifest.indices[column])
+    post = _spark_postings(spark, st, st.manifest.indices[column])
     row = (
         post.agg(F.hll_sketch_agg(F.col("key").cast("string")).alias("sk"))
         .select(F.hll_sketch_estimate("sk").alias("ndv"), "sk")
@@ -2783,13 +2930,13 @@ def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
             got = [fused.manifest.indices[column], dist.manifest.indices[column]]
             assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
             post = [
-                sorted(map(tuple, st._read_postings(spec).collect()), key=repr)
+                sorted(map(tuple, _spark_postings(spark, st, spec).collect()), key=repr)
                 for st, spec in zip((fused, dist), got)
             ]
             assert post[0] == post[1] and post[0], (frame, column)
         bloom = [st.manifest.indices["n"] for st in (fused, dist)]
         assert bloom[0].ndv == bloom[1].ndv == 7
-        assert fused._bloom_map(bloom[0]) == dist._bloom_map(bloom[1])
+        assert _spark_bitsets(spark, fused, bloom[0]) == _spark_bitsets(spark, dist, bloom[1])
         assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
 
 
@@ -2808,7 +2955,7 @@ def test_posting_map_driver_read_matches_spark(spark, tmp_path):
                 pmap, jobs = _jobs(spark, lambda: st._posting_map(spec))
                 assert jobs == 0, (name, step, column)
                 want: dict = {}
-                for r in st._read_postings(spec).collect():
+                for r in _spark_postings(spark, st, spec).collect():
                     key = tuple(r[:-1]) if spec.columns else r["key"]
                     want.setdefault(key, set()).add(r["__file_id"])
                 assert pmap == want and pmap, (name, step, column)

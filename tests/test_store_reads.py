@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 
 from shortcut_spark import MatView, Store, between, eq
 from shortcut_spark.store import ROWID
-from tests.test_store import _jobs
+from tests.test_store import _jobs, _spark_bitsets, _spark_postings
 
 
 def rows_of(df):
@@ -268,6 +268,36 @@ def test_store_owned_reads_carry_their_schema():
     unbound = [n.lineno for n in datasets if not any(k.arg == "schema" for k in n.keywords)]
     assert not unbound, f"pass schema= to ds.dataset: store.py lines {unbound}"
 
+
+
+# -- lint: index parts are read by Spark only in the probe fallback --------
+
+
+def test_index_parts_read_by_spark_only_in_probe_postings():
+    """Posting and bloom parts are read on the driver with pyarrow; the one
+    Spark read of them is ``_probe_postings``, for the probes pyarrow
+    cannot decide with Spark's coercion. A function reads index parts
+    when it names ``spark.read`` and any of the part accessors."""
+    part_names = {"parts", "_posting_files", "_posting_schema", "_parts_for_probe"}
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    readers = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        attrs = [n for n in ast.walk(fn) if isinstance(n, ast.Attribute)]
+        spark_read = any(
+            a.attr == "read"
+            and (
+                (isinstance(a.value, ast.Attribute) and a.value.attr == "spark")
+                or (isinstance(a.value, ast.Name) and a.value.id == "spark")
+            )
+            for a in attrs
+        )
+        if spark_read and any(a.attr in part_names for a in attrs):
+            readers.add(fn.name)
+    assert readers == {"_probe_postings"}, f"read index parts with _arrow_read: {readers}"
 
 
 # -- lint: IN lists in store.py are SQL literals ----------------------------
@@ -963,9 +993,10 @@ def _index_state(st):
     out = {}
     for name, spec in st.manifest.indices.items():
         if spec.kind == BLOOM:
-            out[name] = sorted((ident[i], b) for i, b in (st._bloom_map(spec) or {}).items())
+            bits = _spark_bitsets(st.spark, st, spec)
+            out[name] = sorted((ident[i], b) for i, b in bits.items())
         else:
-            post = st._read_postings(spec)
+            post = _spark_postings(st.spark, st, spec)
             out[name] = sorted(repr((*r[:-1], ident[r[-1]])) for r in post.collect())
         assert out[name], name
         out[f"{name}.ranges"] = [_num(spec.part_stats.get(p)) for p in spec.parts]
