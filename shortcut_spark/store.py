@@ -50,7 +50,7 @@ import uuid
 from typing import Any, Callable, Iterable, Sequence
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -254,7 +254,7 @@ class Store:
         The lookups (``find`` with conditions, ``find_many``) and the
         deletes serve few rows from the driver (:meth:`_driver_tables`) and
         fall back here; full scans and the other write-path reads
-        (compact, index builds above ``DRIVER_INSERT_ROWS`` rows, change
+        (compact, index builds above the driver build's bounds, change
         feeds) always read here."""
         paths = [self._abs(f.path) for f in files]
         df = self.spark.read.schema(self._schema_with_rowid()).parquet(*paths)
@@ -422,9 +422,12 @@ class Store:
         and indexed on the driver (:meth:`_insert_rows_driver`); its one
         Spark job is the index key sketch. A DataFrame batch is tagged
         with rowids in a lazy ``localCheckpoint`` whose first action is
-        the per-partition counts pass, then written by Spark; a written
-        batch of at most ``DRIVER_INSERT_ROWS`` rows is indexed from a
-        pyarrow read of its index columns (:meth:`_index_files`).
+        the per-partition counts pass, then written by Spark, with every
+        index's key sketch observed in the write
+        (:meth:`_observe_sketches`); the written batch is then indexed
+        from a pyarrow read of its index columns with no job, up to each
+        index kind's bound (:meth:`_index_files`: one posting shard,
+        ``POSTING_SHARD_ROWS``, for hash, btree and composite indexes).
 
         ``micro_batch=True`` is the caller's DRIVER-SIDE bound that the
         batch is micro (e.g. a matview refresh whose manifest arithmetic
@@ -517,13 +520,16 @@ class Store:
         finally:
             tagged.unpersist()
 
-    # the one bound of the driver kernels. Literal (Python-list) batches
+    # the bound of the driver kernels. Literal (Python-list) batches
     # at or below this many rows insert entirely on the driver: constraint
     # checks in plain Python, rowids by list position, one pyarrow-written
     # file, footer-based registration — no Spark job but the index key
-    # sketch, and the unique probe's scan of a big table. A batch of at
-    # most this many rows is indexed on the driver (_index_tables). It
-    # also bounds the rows a lookup, a delete or a CDC apply reads on the
+    # sketch, and the unique probe's scan of a big table. It bounds the
+    # driver index build (_index_tables) of a batch whose key sketch is
+    # still a LocalRelation job, and of a trigram index; an index whose
+    # sketch the batch's Spark write observed is built there up to
+    # POSTING_SHARD_ROWS or DRIVER_BLOOM_ROWS (_index_files). It also
+    # bounds the rows a lookup, a delete or a CDC apply reads on the
     # driver (_driver_tables): at narrow rows the driver read of a lookup
     # beats a Spark job at every size to 40,000 rows, at ~530-byte rows
     # they cross near 15,000; a driver delete, which hands Spark only the
@@ -734,14 +740,15 @@ class Store:
         batch_rel = os.path.join(
             "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
         )
-        with_id.write.parquet(self._abs(batch_rel))
+        out, obs = self._observe_sketches(with_id)
+        out.write.parquet(self._abs(batch_rel))
         n = self._parquet_rows(batch_rel)
         if not n:
             import shutil
 
             shutil.rmtree(self._abs(batch_rel), ignore_errors=True)
             return 0
-        return self._append_batch(batch_rel, n)
+        return self._append_batch(batch_rel, n, sketch=obs)
 
     # batches at or below this many rows compile their write + posting
     # build STATICALLY (AQE off, shuffle partitions derived from the
@@ -793,8 +800,9 @@ class Store:
         )
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with scoped_confs(self.spark, confs):
-            self._cluster_batch(with_id, n).write.parquet(self._abs(batch_rel))
-            return self._append_batch(batch_rel, n)
+            out, obs = self._observe_sketches(self._cluster_batch(with_id, n))
+            out.write.parquet(self._abs(batch_rel))
+            return self._append_batch(batch_rel, n, sketch=obs)
 
     def _cluster_batch(self, with_id: DataFrame, n: int) -> DataFrame:
         """Partition a rowid-tagged batch for writing: size files, and honor
@@ -843,23 +851,31 @@ class Store:
                 return list(s.member_columns)
         return []
 
-    def _append_batch(self, batch_rel: str, n: int, tables: list | None = None) -> int:
+    def _append_batch(
+        self,
+        batch_rel: str,
+        n: int,
+        tables: list | None = None,
+        sketch: bool | Observation | None = True,
+    ) -> int:
         """Commit the ``n`` freshly-written rows under ``batch_rel`` (held
         on the driver as ``tables``, when the driver wrote them) as the
         next rowids — the shared tail of the three insert paths."""
         with self._txn():
-            self._register_and_index(batch_rel, tables)
+            self._register_and_index(batch_rel, tables, sketch)
             self.manifest.rowid += n
             self._staged = True
         return n
 
-    def _register_and_index(self, batch_rel: str, tables: list | None = None) -> None:
+    def _register_and_index(
+        self, batch_rel: str, tables: list | None = None, sketch: bool | Observation | None = True
+    ) -> None:
         """Register freshly-written batch files and add them to every
         index (from ``tables``, one arrow table per file, when the driver
-        wrote them) — the shared epilogue of ``insert`` and
-        ``apply_changes``."""
+        wrote them; ``sketch`` as :meth:`_index_files` takes it) — the
+        shared epilogue of ``insert`` and ``apply_changes``."""
         new_files = self._register_files(batch_rel)
-        self._index_files(list(self.manifest.indices.values()), new_files, tables)
+        self._index_files(list(self.manifest.indices.values()), new_files, tables, sketch)
 
     CONSTRAINT_KINDS = ("not_null", "unique")
 
@@ -1352,7 +1368,7 @@ class Store:
         specs: Sequence[IndexSpec],
         files: Sequence[DataFile],
         tables: list | None = None,
-        sketch: bool = True,
+        sketch: bool | Observation | None = True,
     ) -> None:
         """Add the index entries of ``files`` to every index in ``specs``
         and refresh each one's cost-model stats — the distributed analogue
@@ -1361,33 +1377,56 @@ class Store:
         *files* per key — the lookup result is a superset and ``find``'s
         residual filter restores exactness (``src/lib.rs:89-91``).
 
-        A batch of at most ``DRIVER_INSERT_ROWS`` rows (and one posting
-        shard), whose index columns pass :meth:`_driver_atomic_type`, is
-        indexed on the driver (:meth:`_index_tables`): from ``tables``,
-        one arrow table per file, when the driver holds its rows (a
-        driver insert or CDC apply, a small delete's survivors), else from
-        a pyarrow read of the index columns of the written files. Any
-        other batch writes each index's part with its own Spark job.
-        ``sketch=False`` skips the key sketch on both venues and leaves
-        ndv as it is (a copy-on-write delete's survivors: their keys are
-        already in it). The files are
-        read without the tombstone filter: fresh files hold no tombstoned
-        rowid, and a posting for a dead row (an index backfill after a
-        deferred delete) is only a superset, the state a deferred delete
-        leaves anyway."""
+        ``sketch`` is where each index's key sketch comes from: the
+        Observation of the Spark write of ``files``
+        (:meth:`_observe_sketches`; a trigram index is not in it), the
+        build (``True`` or None), or nowhere (``False``: ndv stays, as for
+        a copy-on-write delete's survivors, whose keys it holds). An index
+        on :meth:`_driver_atomic_type` columns is built on the driver
+        (:meth:`_index_tables`), from ``tables`` (one arrow table per file
+        the driver wrote) or a pyarrow read of the written files: up to
+        ``POSTING_SHARD_ROWS`` rows (``DRIVER_BLOOM_ROWS`` for a bloom
+        index) when its sketch needs no job, and up to
+        ``DRIVER_INSERT_ROWS`` when the build sketches it or the index is
+        a trigram one (its grams fan out). Any other index writes its part
+        with a Spark job of its own. The files are read without the
+        tombstone filter: fresh files hold no tombstoned rowid, and a
+        posting for a dead row (an index backfill after a deferred delete)
+        is only a superset, the state a deferred delete leaves anyway."""
         for spec in specs:
             spec.rows = self.manifest.total_rows
         if not specs or not files:
             return
+        st = sketch.get if isinstance(sketch, Observation) else {}
         n_rows = sum(f.rows for f in files)
-        cols = list(dict.fromkeys(c for s in specs for c in s.member_columns))
-        if n_rows <= min(self.DRIVER_INSERT_ROWS, self.POSTING_SHARD_ROWS) and all(
-            self._driver_atomic_type(self.manifest.schema[c].dataType) for c in cols
-        ):
+        need, local = set(), []  # indexes the build sketches; built on the driver
+        for i, spec in enumerate(specs):
+            if f"__sk{i}" in st:
+                self._refresh_index_stats(spec, st, suffix=i)
+            elif sketch is not False:
+                need.add(i)
+            if i in need or spec.kind == TRIGRAM:
+                bound = min(self.DRIVER_INSERT_ROWS, self.POSTING_SHARD_ROWS)
+            else:
+                bound = self.DRIVER_BLOOM_ROWS if spec.kind == BLOOM else self.POSTING_SHARD_ROWS
+            if n_rows <= bound and all(
+                self._driver_atomic_type(self.manifest.schema[c].dataType)
+                for c in spec.member_columns
+            ):
+                local.append(i)
+        if local:
             if tables is None:
+                cols = list(dict.fromkeys(c for i in local for c in specs[i].member_columns))
                 schema = T.StructType([self.manifest.schema[c] for c in cols])
                 tables = [self._arrow_read([self._abs(f.path)], schema) for f in files]
-            self._index_tables(specs, files, tables, sketch)
+            self._index_tables(
+                [specs[i] for i in local],
+                files,
+                tables,
+                {j for j, i in enumerate(local) if i in need},
+            )
+        rest = [i for i in range(len(specs)) if i not in local]
+        if not rest:
             return
         # a literal path → id map tags each row with its file id, so the
         # build broadcasts no Python-list DataFrame (each such broadcast is
@@ -1398,32 +1437,63 @@ class Store:
         src = self._read_files(files, with_meta=True, live=False).withColumn(
             "__file_id", ids[F.col("__file_path")].cast("int")
         )
-        for spec in specs:
-            if spec.kind == BLOOM:
-                self._append_blooms(spec, src, sketch)
+        for i in rest:
+            if specs[i].kind == BLOOM:
+                self._append_blooms(specs[i], src, i in need)
             else:
-                self._append_postings(spec, src, n_rows, sketch)
+                self._append_postings(specs[i], src, n_rows, i in need)
+
+    def _observe_sketches(self, df: DataFrame) -> tuple[DataFrame, Observation | None]:
+        """``df``, a batch about to be written, with every index's key
+        sketch (:meth:`_sketch_cols`, suffixed by the index's position in
+        ``manifest.indices``) observed by the write, and the Observation
+        (None when no index is sketched) — no sketch job. Sketched over
+        the batch's rows, a key set equals the distinct postings' once a
+        float key is sketched as ``c + 0.0``, which folds ``-0.0`` into
+        ``0.0`` as ``distinct`` does (every NaN casts to one string). A
+        bloom index sketches its raw column, as its builders do; a trigram
+        index is left to its build, since ``observe`` cannot explode its
+        grams."""
+        cols = []
+        for i, spec in enumerate(self.manifest.indices.values()):
+            if spec.kind == TRIGRAM:
+                continue
+            keys = []
+            for c in spec.member_columns:
+                dt = self.manifest.schema[c].dataType
+                fold = spec.kind != BLOOM and isinstance(dt, (T.FloatType, T.DoubleType))
+                keys.append(F.col(c) + F.lit(0.0).cast(dt) if fold else F.col(c))
+            cols += self._sketch_cols(spec, keys, i)
+        if not cols:
+            return df, None
+        obs = Observation()
+        return df.observe(obs, *cols), obs
 
     def _index_tables(
-        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], tables: list, sketch: bool
+        self,
+        specs: Sequence[IndexSpec],
+        files: Sequence[DataFile],
+        tables: list,
+        sketch: set[int],
     ) -> None:
-        """The small-batch index build: every index of ``files``, whose
-        rows the driver holds (``tables``, one arrow table per file, with
-        at least each index's columns). The postings and each part's
-        range key [min, max] are built on the driver with the distributed
-        build's semantics: the distinct postings fold ``-0.0`` into
-        ``0.0`` and every NaN into one, as ``distinct`` does, and
-        :meth:`_min_max` ranks NaN above every number, as Spark's
-        ``min``/``max`` do. Trigram grams and bloom string keys come from a
-        Spark projection (``_grams``, ``cast(string)``) over a
+        """The driver index build: every index of ``files``, whose rows the
+        driver holds (``tables``, one arrow table per file, with at least
+        each index's columns). The postings and each part's range key
+        [min, max] are built on the driver with the distributed build's
+        semantics: the distinct postings (:meth:`_distinct_rows`) fold
+        ``-0.0`` into ``0.0`` and every NaN into one, as ``distinct``
+        does, and :meth:`_min_max` ranks NaN above every number, as
+        Spark's ``min``/``max`` do. Trigram grams and bloom string keys
+        come from a Spark projection (``_grams``, ``cast(string)``) over a
         ``LocalRelation``, which ``ConvertToLocalRelation`` evaluates on
-        the driver. The one Spark job is the HLL sketch of every index's
-        distinct posting keys — what the distributed build sketches —
-        merged into the stored one: one ``coalesce(1)`` aggregate of
-        :meth:`_sketch_cols` over a ``LocalRelation`` of the keys, one
-        column group per index. ``sketch=False`` skips it and leaves ndv
-        as it is."""
+        the driver. The indexes at the positions in ``sketch`` have their
+        distinct posting keys sketched — what the distributed build
+        sketches — and merged into the stored sketch, in the one Spark job
+        of the build: a ``coalesce(1)`` aggregate of :meth:`_sketch_cols`
+        over a ``LocalRelation`` of the keys, one column group per index.
+        No job runs when ``sketch`` is empty."""
         import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         src = pa.concat_tables(
@@ -1432,10 +1502,17 @@ class Store:
                 for f, t in zip(files, tables)
             ]
         )
+        # trigram grams, and the string keys of a bloom index on a column
+        # whose cast pyarrow cannot do as Spark does, come from Spark
+        arrow_cast = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
         derived = {
             i: self._grams(s) if s.kind == TRIGRAM else F.col(s.column).cast("string")
             for i, s in enumerate(specs)
-            if s.kind in (TRIGRAM, BLOOM)
+            if s.kind == TRIGRAM
+            or (
+                s.kind == BLOOM
+                and not isinstance(self.manifest.schema[s.column].dataType, arrow_cast)
+            )
         }
         if derived:
             cols = [c for c in self.colnames if any(specs[i].column == c for i in derived)]
@@ -1448,50 +1525,46 @@ class Store:
             got = rel.select(
                 "__file_id", *[e.alias(f"__x{i}") for i, e in derived.items()]
             ).collect()
-        keyed = []
+        keyed = {}
         for i, spec in enumerate(specs):
-            if i in derived:
-                by_file: dict[int, set] = {}
-                for r in got:
-                    k = r[f"__x{i}"]
-                    by_file.setdefault(r["__file_id"], set()).update(
-                        k if spec.kind == TRIGRAM else [k]
-                    )
-                rows = [
-                    {"key": k, "__file_id": fid}
-                    for fid, ks in by_file.items()
-                    for k in ks
-                    if k is not None
-                ]
+            if spec.kind in (TRIGRAM, BLOOM):
                 key_schema = T.StructType([T.StructField("key", T.StringType())])
-                lo = min((r["key"] for r in rows), default=None)
-                hi = max((r["key"] for r in rows), default=None)
+                if spec.kind == TRIGRAM:
+                    by_file: dict[int, set] = {}
+                    for r in got:
+                        by_file.setdefault(r["__file_id"], set()).update(r[f"__x{i}"])
+                    key = pa.array([g for gs in by_file.values() for g in gs], pa.string())
+                    fid = pa.array([f for f, gs in by_file.items() for _ in gs], pa.int32())
+                elif i in derived:
+                    key = pa.array([r[f"__x{i}"] for r in got], pa.string())
+                    fid = pa.array([r["__file_id"] for r in got], pa.int32())
+                else:
+                    key = pc.cast(src.column(spec.column), pa.string())
+                    fid = src.column("__file_id")
+                part = self._distinct_rows(pa.table({"key": key, "__file_id": fid}))
+                part = part.filter(pc.is_valid(part.column("key")))
             else:
                 key_schema = T.StructType(self._posting_schema(spec).fields[:-1])
-                post = src.select([*spec.member_columns, "__file_id"]).rename_columns(
-                    [*key_schema.names, "__file_id"]
+                part = self._distinct_rows(
+                    src.select([*spec.member_columns, "__file_id"]).rename_columns(
+                        [*key_schema.names, "__file_id"]
+                    )
                 )
-                # distinct in Python: pyarrow's multi-key group_by can split
-                # one all-null key into several groups
-                distinct = {}
-                for r in post.to_pylist():
-                    r = {c: v + 0.0 if isinstance(v, float) else v for c, v in r.items()}
-                    distinct[tuple(map(_spark_key, r.values()))] = r
-                rows = list(distinct.values())
-                lo, hi = self._min_max(src.column(spec.member_columns[0]))
-            part_rel = self._write_index_part(spec, rows)
+            part_rel = self._write_index_part(spec, part)
             if part_rel is not None and spec.kind != BLOOM:
-                self._set_part_range(spec, part_rel, lo, hi)
-            keyed.append((rows, key_schema))
-        if not sketch:
+                self._set_part_range(spec, part_rel, *self._min_max(part.column(0)))
+            if i in sketch:
+                keyed[i] = (part, key_schema)
+        if not keyed:
             return
         keys, key_fields = [], [T.StructField("__s", T.IntegerType())]
-        for i, (rows, key_schema) in enumerate(keyed):
+        for i, (part, key_schema) in keyed.items():
             names = [f"__k{i}_{n}" for n in key_schema.names]
             keys.append(
-                pa.Table.from_pylist(rows, schema=to_arrow_schema(key_schema))
+                part.select(key_schema.names)
+                .cast(to_arrow_schema(key_schema))
                 .rename_columns(names)
-                .append_column("__s", pa.array([i] * len(rows), pa.int32()))
+                .append_column("__s", pa.array([i] * part.num_rows, pa.int32()))
             )
             key_fields += [T.StructField(n, f.dataType) for n, f in zip(names, key_schema)]
         schema = T.StructType(key_fields)
@@ -1502,17 +1575,41 @@ class Store:
         )
         aggs = [
             c
-            for i, spec in enumerate(specs)
+            for i in keyed
             for c in self._sketch_cols(
-                spec,
+                specs[i],
                 [F.col(f.name) for f in key_fields if f.name.startswith(f"__k{i}_")],
                 i,
                 where=F.col("__s") == i,
             )
         ]
         st = rel.coalesce(1).agg(*aggs).collect()[0].asDict()
-        for i, spec in enumerate(specs):
-            self._refresh_index_stats(spec, st, suffix=i)
+        for i in keyed:
+            self._refresh_index_stats(specs[i], st, suffix=i)
+
+    @staticmethod
+    def _distinct_rows(table):
+        """The distinct rows of the arrow ``table`` under Spark's grouping
+        equality: a float column folds ``-0.0`` into ``0.0`` and every NaN
+        into one value, and NULL is one value in every column. The rows
+        are grouped by each column's dictionary code, NULL encoded as a
+        value of its own: pyarrow's multi-key ``group_by`` over the values
+        splits the rows of an all-NULL key into many groups."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        codes = {}
+        for j, name in enumerate(table.column_names):
+            col = table.column(name).combine_chunks()
+            if pa.types.is_floating(col.type):
+                col = pc.add(col, pa.scalar(0.0, col.type))
+                col = pc.if_else(pc.is_nan(col), pa.scalar(float("nan"), col.type), col)
+                table = table.set_column(j, name, col)
+            codes[f"c{j}"] = pc.dictionary_encode(col, null_encoding="encode").indices
+        codes["row"] = pa.array(np.arange(table.num_rows, dtype=np.int64))
+        first = pa.table(codes).group_by(list(codes)[:-1]).aggregate([("row", "min")])
+        return table.take(first["row_min"])
 
     @staticmethod
     def _min_max(values) -> tuple:
@@ -1528,34 +1625,45 @@ class Store:
             lo = hi if lo is None else lo
         return lo, hi
 
-    def _write_index_part(self, spec: IndexSpec, rows: list[dict]) -> str | None:
-        """Write one index part from its distinct posting ``rows`` (dicts of
-        the posting schema; ``key`` and ``__file_id`` for a bloom index)
-        with pyarrow; returns the part, or None for no rows. The posting
-        rows are sorted by the range key. A bloom index packs one bitset
-        per file here with :func:`_bloom_positions_py`, the probe's
-        bit-identical hash."""
+    def _write_index_part(self, spec: IndexSpec, part) -> str | None:
+        """Write one index part from ``part``, an arrow table of its
+        distinct postings (the posting schema's columns; ``key`` and
+        ``__file_id`` for a bloom index) with pyarrow; returns the part,
+        or None for no rows. The posting rows are sorted by the range key.
+        A bloom index packs one bitset per file here with
+        :func:`_bloom_positions_py`, the probe's bit-identical hash."""
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        if not rows:
+        if not part.num_rows:
             return None
         if spec.kind == BLOOM:
+            # each distinct key is hashed once, whatever files hold it
             m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
-            bits: dict[int, bytearray] = {}
-            for r in rows:
-                b = bits.setdefault(r["__file_id"], bytearray(m_bits // 8))
-                for p in _bloom_positions_py(r["key"], m_bits, k):
-                    b[p >> 3] |= 1 << (p & 7)
+            enc = pc.dictionary_encode(part.column("key").combine_chunks())
+            pos = np.array(
+                [_bloom_positions_py(key, m_bits, k) for key in enc.dictionary.to_pylist()],
+                np.int64,
+            ).reshape(-1, k)[enc.indices.to_numpy()]
+            fids = part.column("__file_id").to_numpy()
+            bits = {}
+            for fid in np.unique(fids):
+                b = np.zeros(m_bits, np.uint8)
+                b[pos[fids == fid].ravel()] = 1
+                bits[int(fid)] = np.packbits(b, bitorder="little").tobytes()
             table = pa.table({
                 "__file_id": pa.array(list(bits), pa.int32()),
-                "bloom": pa.array([bytes(b) for b in bits.values()], pa.binary()),
+                "bloom": pa.array(list(bits.values()), pa.binary()),
             })
         else:
             schema = self._posting_schema(spec)
-            rkey = schema.names[0]
-            rows.sort(key=lambda d: (d[rkey] is None, d[rkey]))
-            table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+            table = (
+                part.select(schema.names)
+                .cast(to_arrow_schema(schema))
+                .sort_by([(schema.names[0], "ascending")], null_placement="at_end")
+            )
         part_rel = self._part_rel(spec)
         self._write_arrow(part_rel, table)
         spec.parts.append(part_rel)
@@ -1596,8 +1704,6 @@ class Store:
             # itself via observe() — one job, no persist. Sorting is safe
             # (row order inside a posting part is semantically irrelevant)
             # and keeps tight per-file footer ranges.
-            from pyspark.sql import Observation
-
             obs = Observation()
             postings.observe(obs, *stats).sortWithinPartitions(rkey).write.parquet(
                 self._abs(part_rel)
@@ -1629,8 +1735,6 @@ class Store:
         expr), distinct per file, packed to a binary bitset by a tiny UDF
         that runs once per FILE (not per row); the key sketch, when
         ``sketch``, rides the same job via observe()."""
-        from pyspark.sql import Observation
-
         m_bits = int(spec.params["m_bits"])
         k = int(spec.params["k"])
         obs = Observation()
@@ -1683,8 +1787,18 @@ class Store:
         )
 
     # posting parts are range-sharded into files of ~this many rows so a
-    # pushed-down point probe reads one shard, not the whole part
+    # pushed-down point probe reads one shard, not the whole part. A batch
+    # whose key sketches need no job builds its postings on the driver up
+    # to one shard: on hash and btree indexes the driver build beats the
+    # per-index Spark jobs at every size swept to 1,000,000 rows
+    # (docs/SCALE.md, "Index builds inside the write")
     POSTING_SHARD_ROWS = 1_000_000
+
+    # the driver bloom build of such a batch hashes every distinct key k
+    # times with hashlib (~17 µs a key at k = 7): on all-distinct keys it
+    # beats the Spark builder's one job at 50,000 rows and ties it near
+    # 70,000 (docs/SCALE.md, "Index builds inside the write")
+    DRIVER_BLOOM_ROWS = 50_000
 
     # introspection: True when the last changes()/diff() on this instance
     # served its delete tier from the change-data-feed changelog, False
@@ -1772,12 +1886,16 @@ class Store:
     ) -> None:
         """Take an index's cost-model stats (``src/idx.rs:71-78``) from the
         build aggregate ``st`` (a dict: a Row's ``asDict`` or an
-        observation): ``part_rel``'s range-key [min, max], and ndv with the
-        HLL sketch it came from, when the aggregate sketched. Rows (live
-        table rows) are set by :meth:`_index_files`.
+        observation of the build or of the batch's write): ``part_rel``'s
+        range-key [min, max], and ndv with the HLL sketch it came from,
+        when the aggregate sketched. Rows (live table rows) are set by
+        :meth:`_index_files`.
 
-        The ndv contract: exact (an HLL estimate equal to a from-scratch
-        sketch of all live keys) after inserts and after ``compact``,
+        The ndv contract: exact (the HLL estimate of a sketch holding the
+        key set of a from-scratch sketch of all live keys; a sketch merged
+        from several tasks' takes the union estimator, which can differ
+        from a one-task sketch's by HLL error) after inserts and after
+        ``compact``,
         which rebuilds every sketch. Between compactions, after deletes,
         it is an upper bound: a sketch cannot subtract keys, and both
         delete strategies leave it as it was — a copy-on-write delete
@@ -3766,8 +3884,9 @@ class Store:
                     batch_rel = os.path.join(
                         "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                     )
-                    self._cluster_batch(ins, n_ins - n_res).write.parquet(self._abs(batch_rel))
-                    self._register_and_index(batch_rel)
+                    out, obs = self._observe_sketches(self._cluster_batch(ins, n_ins - n_res))
+                    out.write.parquet(self._abs(batch_rel))
+                    self._register_and_index(batch_rel, sketch=obs)
                 if n_ins:
                     self.manifest.rowid = max(wm, int(st["hi"]) + 1)
                 if n_ins or n_del:
@@ -4013,17 +4132,18 @@ class Store:
         out = df.sortWithinPartitions(order_col)
         if zcols:
             out = out.drop("__z")
-        out.write.parquet(self._abs(batch_rel))
         with self._txn():
+            for spec in self.manifest.indices.values():
+                spec.parts = []
+                spec.part_stats = {}
+                spec.sketch = None  # rebuilt from scratch: ndv exact again
+            out, obs = self._observe_sketches(out)
+            out.write.parquet(self._abs(batch_rel))
             self.manifest.files = []
             # the rewrite materialized the tombstone anti-join — clear the
             # merge-on-read state (compact IS the tombstone materialization job)
             self.manifest.tombstones = []
             self.manifest.tombstone_rows = 0
             new_files = self._register_files(batch_rel)
-            for spec in self.manifest.indices.values():
-                spec.parts = []
-                spec.part_stats = {}
-                spec.sketch = None  # rebuilt from scratch: ndv exact again
-            self._index_files(list(self.manifest.indices.values()), new_files)
+            self._index_files(list(self.manifest.indices.values()), new_files, sketch=obs)
             self._staged = True

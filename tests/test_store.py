@@ -2787,6 +2787,53 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     assert st.find([eq("k", 15)]).count() == st.find([eq("k", 16)]).count() == 0
 
 
+def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
+    """A 30,000-row DataFrame insert runs three Spark jobs — the counts
+    pass, the range sampler and the write — with one, two or four indexes
+    (hash, btree, composite, bloom): the write observes every index's key
+    sketch, and the postings and bitsets are built on the driver from a
+    pyarrow read of the written index columns. A ``micro_batch`` insert
+    and ``compact`` run as many jobs as on the unindexed store. Each ndv
+    is within HLL error of the exact distinct count: a fresh index's
+    sketch is the union of the write tasks' sketches, whose estimator
+    differs from a one-task sketch's."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    def frame(lo, hi, parts):
+        i = F.col("id")
+        return spark.range(lo, hi, numPartitions=parts).select(
+            (i * 7 % 20_011).alias("k"),
+            (i / 8).alias("v"),
+            F.concat(F.lit("g"), (i % 50).cast("string")).alias("g"),
+            (i % 1_000).alias("u"),
+        )
+
+    index_sets = (
+        [],
+        [("k", "hash")],
+        [("k", "hash"), ("v", "btree")],
+        [("k", "hash"), ("v", "btree"), (("g", "u"), "hash"), ("u", "bloom")],
+    )
+    floors = []
+    for n, indexes in enumerate(index_sets):
+        schema = T.StructType.fromDDL("k long, v double, g string, u long")
+        st = Store.create(spark, str(tmp_path / f"s{n}"), schema)
+        st.ROWS_PER_FILE = 7_500  # four files: an indexed batch runs the range sampler
+        for column, kind in indexes:
+            st.index(column, kind)
+        got, jobs = _jobs(spark, lambda: st.insert(frame(0, 30_000, 4)))
+        assert got == 30_000 and jobs == (3 if indexes else 2), (indexes, jobs)
+        got, micro = _jobs(spark, lambda: st.insert(frame(30_000, 30_100, 1), micro_batch=True))
+        assert got == 100
+        _, compact = _jobs(spark, lambda: st.compact(target_files=2))
+        floors.append((micro, compact))
+        for spec in st.manifest.indices.values():
+            exact = st.find([]).select(*spec.member_columns).distinct().count()
+            assert spec.parts and abs(spec.ndv - exact) <= exact / 20, (spec.column, exact)
+    assert floors == [floors[0]] * len(index_sets), floors
+
+
 def _scratch_sketch(spark, st, column):
     """(ndv, sketch bytes) of a from-scratch HLL sketch over the live
     postings of the index on ``column``."""
@@ -2825,16 +2872,18 @@ def _exact_ndv(st, column):
 
 def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     """The ndv contract: after inserts — through the fused driver build
-    and the distributed observe() build alike — every index's ndv and
-    sketch equal a from-scratch sketch of its live postings; after a
-    copy-on-write delete ndv is still at least the exact distinct count
+    and the Spark write that observes the sketches alike — every index's
+    ndv and sketch equal a from-scratch sketch of its live postings; after
+    a copy-on-write delete ndv is still at least the exact distinct count
     of live keys; compact() rebuilds it to the from-scratch value."""
     import base64
 
     from pyspark.sql import functions as F
 
     st = _two_index_store(spark, str(tmp_path / "s"), batches=3)
-    st.DRIVER_INSERT_ROWS = 50  # the next batch takes the observe() path
+    # the next batch is written by Spark, which observes its sketches, and
+    # indexed by the per-index Spark builders (120 rows > one shard)
+    st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 50
     st.insert(
         spark.range(300, 420).select(
             F.col("id").alias("k"), (F.col("id") / 2).alias("v"), F.lit("d").alias("s")
@@ -2845,12 +2894,14 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
         ndv, sk = _scratch_sketch(spark, st, column)
         assert spec.ndv == ndv
         assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
-    del st.DRIVER_INSERT_ROWS  # a driver delete, its survivors indexed from arrow
+    # a driver delete, its survivors indexed from arrow
+    del st.DRIVER_INSERT_ROWS, st.POSTING_SHARD_ROWS
     st.delete([between("k", 0, 99)])  # a third of the keys vanish
     for column in ("k", "v"):
         assert st.manifest.indices[column].ndv >= _exact_ndv(st, column)
         assert st.manifest.indices[column].rows == len(st)
-    st.DRIVER_INSERT_ROWS = 50  # the compacted files take the observe() path
+    # the compact write observes fresh sketches; the Spark builders index it
+    st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 50
     st.compact(target_files=2)
     for column in ("k", "v"):
         spec = st.manifest.indices[column]
@@ -2871,6 +2922,7 @@ def test_spark_cow_delete_leaves_index_sketches_as_they_are(spark, tmp_path, mon
     st.index("s", "bloom")
     st.insert([(i, f"s{i % 5}") for i in range(40)])
     st.DRIVER_INSERT_ROWS = 0
+    st.POSTING_SHARD_ROWS = 20  # the 39 survivors exceed one shard: the Spark builders
     before = {c: (s.sketch, s.ndv) for c, s in st.manifest.indices.items()}
     sketched = []
     monkeypatch.setattr(
@@ -2886,7 +2938,8 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
     """Hash, trigram, case-insensitive trigram, bloom and composite indexes
     over two 30-row inserts, literal or (``frame``) DataFrame batches;
     ``driver_rows`` is ``DRIVER_INSERT_ROWS`` (0: Spark writes every batch
-    and every index takes the distributed build)."""
+    and, with ``POSTING_SHARD_ROWS`` below a batch, every index takes the
+    distributed build)."""
     from pyspark.sql import types as T
 
     from shortcut_spark import BloomIndex, TrigramIndex
@@ -2905,6 +2958,8 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
     ]
     st = Store.create(spark, path, schema)
     st.DRIVER_INSERT_ROWS = driver_rows
+    if not driver_rows:
+        st.POSTING_SHARD_ROWS = 20
     st.index("a", TrigramIndex)
     st.index("b", TrigramIndex(case_insensitive=True))
     st.index("n", BloomIndex(m_bits=1 << 10, k=3))
@@ -2917,12 +2972,13 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
 
 
 def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
-    """The driver build of a small batch (one job: the key sketch) writes
-    the same index content as the per-index distributed build: posting
-    sets (key, file id) of hash, composite and two trigram indexes, bloom
-    bitsets per file, and ndv. A literal batch is indexed from the arrow
-    table the driver wrote; a DataFrame batch, written by Spark, from a
-    pyarrow read of its index columns."""
+    """The driver build of a small batch writes the same index content as
+    the per-index distributed build: posting sets (key, file id) of hash,
+    composite and two trigram indexes, bloom bitsets per file, and ndv. A
+    literal batch is indexed from the arrow table the driver wrote, its
+    one job the key sketch; a DataFrame batch, written by Spark with its
+    sketches observed in the write (but the trigram ones), from a pyarrow
+    read of its index columns."""
     dist = _all_kinds_store(spark, str(tmp_path / "dist"), 0)
     for frame in (False, True):
         fused = _all_kinds_store(spark, str(tmp_path / f"fused{int(frame)}"), 20_000, frame)
@@ -2938,6 +2994,72 @@ def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
         assert bloom[0].ndv == bloom[1].ndv == 7
         assert _spark_bitsets(spark, fused, bloom[0]) == _spark_bitsets(spark, dist, bloom[1])
         assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
+
+
+def _nan_eq(a, b) -> bool:
+    """``a == b`` elementwise through lists, with NaN equal to NaN."""
+    if isinstance(a, list) and isinstance(b, list):
+        return len(a) == len(b) and all(_nan_eq(x, y) for x, y in zip(a, b))
+    return a == b or (a != a and b != b)
+
+
+def test_write_sketched_driver_build_matches_distributed(spark, tmp_path):
+    """A Spark-written batch whose write observed its sketches, indexed on
+    the driver, holds what the per-index Spark builders write with their
+    own sketches: the postings of a hash index on a double, a btree on a
+    float and a composite over (string, double), the bloom bitsets, each
+    part's range, ndv, and sketches of one key set. The keys hold ±0.0,
+    NaN, NULL and all-NULL composite keys."""
+    import base64
+
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex
+
+    nan = float("nan")
+    schema = T.StructType.fromDDL("d double, f float, s string, n long")
+    edge = [
+        (-0.0, -0.0, None, None),
+        (0.0, 0.0, "a", 1),
+        (nan, nan, None, None),
+        (None, None, None, 2),
+        (nan, None, "b", None),
+        (-0.0, nan, "a", None),
+    ]
+    rows = [
+        edge[i % 6] if i % 3 == 0 else (i / 4, i / 8, f"s{i % 7}", i % 11) for i in range(90)
+    ]
+    stores = []
+    for spark_built in (False, True):
+        st = Store.create(spark, str(tmp_path / f"s{int(spark_built)}"), schema)
+        st.index("d", "hash")
+        st.index("f", "btree")
+        st.index(("s", "d"))
+        st.index("n", BloomIndex(m_bits=1 << 10, k=3))
+        if spark_built:
+            st.POSTING_SHARD_ROWS = 20  # a 45-row batch: the per-index Spark builders
+            st._observe_sketches = lambda df: (df, None)  # each builder sketches its keys
+        for lo in (0, 45):
+            batch = spark.createDataFrame(rows[lo : lo + 45], schema)
+            n, jobs = _jobs(spark, lambda: st.insert(batch))
+            assert n == 45 and (jobs > 2) == spark_built, (spark_built, jobs)
+        stores.append(st)
+    for column in ("d", "f", "s,d", "n"):
+        specs = [st.manifest.indices[column] for st in stores]
+        assert specs[0].ndv == specs[1].ndv > 0, column
+        assert _same_keys(spark, *(base64.b64decode(s.sketch) for s in specs)), column
+        if column == "n":
+            assert _spark_bitsets(spark, stores[0], specs[0]) == _spark_bitsets(
+                spark, stores[1], specs[1]
+            )
+            continue
+        post = [
+            sorted(map(repr, map(tuple, _spark_postings(spark, st, spec).collect())))
+            for st, spec in zip(stores, specs)
+        ]
+        assert post[0] == post[1] and post[0], column
+        ranges = [[spec.part_stats.get(p) for p in spec.parts] for spec in specs]
+        assert _nan_eq(*ranges) and len(ranges[0]) == 2, (column, ranges)
 
 
 def test_posting_map_driver_read_matches_spark(spark, tmp_path):

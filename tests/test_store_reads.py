@@ -300,6 +300,41 @@ def test_index_parts_read_by_spark_only_in_probe_postings():
     assert readers == {"_probe_postings"}, f"read index parts with _arrow_read: {readers}"
 
 
+# -- lint: an index key sketch is built in one of four places ---------------
+
+
+def test_sketch_cols_called_only_from_the_sketch_sites():
+    """An index's key sketch is observed in the Spark write of its batch
+    (``_observe_sketches``), aggregated by the driver build
+    (``_index_tables``) or taken by a distributed builder
+    (``_append_postings``, ``_append_blooms``). Any other caller of
+    ``_sketch_cols`` would be a new sketch job."""
+    callers = set()
+    for root, _, names in os.walk(_PKG):
+        for name in names:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "_sketch_cols"
+                    ):
+                        callers.add((name, fn.name))
+    assert callers == {
+        ("store.py", "_observe_sketches"),
+        ("store.py", "_index_tables"),
+        ("store.py", "_append_postings"),
+        ("store.py", "_append_blooms"),
+    }, callers
+
+
 # -- lint: IN lists in store.py are SQL literals ----------------------------
 
 
