@@ -99,6 +99,169 @@ def _spark_key(v):
     return bytes(v) if isinstance(v, bytearray) else v
 
 
+def _order_proxy(dt: T.DataType, c: Column) -> Column | None:
+    """A double that never falls as ``c`` rises in Spark's ascending sort
+    order, NULL where ``c`` is NULL, or None for a type with no such proxy
+    (arrays, structs, a collated string). Equal keys always share a proxy;
+    distinct keys may too (strings past their first 7 bytes, longs past
+    2^53). A string or binary reads its first 7 bytes big-endian, zero
+    padded, which is Spark's unsigned byte order. NaN, the largest double
+    in that order, reads +inf, since ``percentile_approx`` cannot order
+    NaN; -0.0 and 0.0 compare equal in Spark already."""
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return F.nanvl(c.cast("double"), F.lit(float("inf")))
+    if isinstance(dt, (T.NumericType, T.BooleanType)):
+        return c.cast("double")
+    if isinstance(dt, T.DateType):
+        return F.unix_date(c).cast("double")
+    if isinstance(dt, T.TimestampType):
+        return F.unix_micros(c).cast("double")
+    if isinstance(dt, T.TimestampNTZType):
+        # field arithmetic: every cast of a wall-clock value to an instant
+        # goes through the session zone, which is not monotone across DST
+        return (
+            F.unix_date(F.to_date(c)) * 86_400_000_000.0
+            + (F.hour(c) * 3600 + F.minute(c) * 60) * 1_000_000.0
+            + F.extract(F.lit("SECOND"), c).cast("double") * 1_000_000.0
+        )
+    if isinstance(dt, T.BinaryType) or (
+        isinstance(dt, T.StringType) and getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+    ):
+        head = F.rpad(F.hex(F.substring(c.cast("binary"), 1, 7)), 14, "0")
+        return F.conv(head, 16, 10).cast("double")
+    return None
+
+
+# the quantile grid of a range split: each aggregate group reports its
+# proxy at these 1,024 fractions to within 1 / _SPLIT_ACCURACY of its
+# rows, so a bound lands within about 1 / 500 of the batch's rows of its
+# target, and a batch gets all of its files while a file holds more than
+# one candidate's rows (docs/SCALE.md, "Range splits without a sampler
+# job")
+_SPLIT_GRID = [(i + 0.5) / 1024 for i in range(1024)]
+_SPLIT_ACCURACY = 1_000
+
+
+def _split_bounds(groups: list, n_rows: int, n_parts: int) -> tuple[int, list]:
+    """The bounds of an ``n_parts``-way range split of ``n_rows`` rows,
+    merged from ``groups`` — one ``(non-NULL rows, proxy quantiles)`` pair
+    per aggregate group, each of a group's quantiles weighing its rows
+    over the quantile count — by walking the targets ``j * n_rows /
+    n_parts`` as ``RangePartitioner.determineBounds`` does.
+
+    Returns ``(base, [(value, cuts), ...])``: ``base`` targets crossed by
+    the NULL rows, which sort first, then each distinct proxy value whose
+    rows cross a target, in increasing order, with ``cuts`` the fractions
+    of its rows below each target it crosses."""
+    import itertools
+
+    cand = sorted((v, qn / len(q)) for qn, q in groups if qn for v in q)
+    step = n_rows / n_parts
+    cum, j = max(0, n_rows - sum(qn for qn, _ in groups)), 1
+    base = 0
+    while j < n_parts and cum >= j * step:
+        base, j = base + 1, j + 1
+    bounds = []
+    for v, same in itertools.groupby(cand, key=lambda t: t[0]):
+        lo = cum
+        cum += sum(w for _, w in same)
+        cuts = []
+        while j < n_parts and cum >= j * step:
+            cuts.append((j * step - lo) / (cum - lo))
+            j += 1
+        if cuts:
+            bounds.append((v, cuts))
+    return base, bounds
+
+
+class _RangeSplit:
+    """A range split of a batch by its cluster columns that runs no
+    sampler job. Bounds: ``aggs`` are the quantile columns of the lead
+    column's order proxy (:func:`_order_proxy`), to ride an aggregate the
+    caller collects anyway, and :meth:`groups` reads them back. Split:
+    :meth:`split` merges the quantiles into bounds on the driver
+    (:func:`_split_bounds`) and repartitions by the number of bounds below
+    each row's proxy.
+
+    The rows at a bound's proxy value split at its targets by a hash of
+    the cluster columns, so equal keys still share a file, while a key
+    heavier than a file or distinct keys sharing a proxy (strings equal in
+    their first 7 bytes, a composite key's lead) fill the partitions
+    their rows span; files then overlap only at that proxy value. A lead
+    type with no proxy hash-splits by the cluster columns, which also puts
+    each key in exactly one file."""
+
+    def __init__(self, schema: T.StructType, cols: Sequence[str]):
+        self.cols = list(cols)
+        self.proxy = _order_proxy(schema[cols[0]].dataType, F.col(cols[0])) if cols else None
+
+    @property
+    def aggs(self) -> list[Column]:
+        import numpy as np
+
+        if self.proxy is None:
+            return []
+        # the grid as one numpy literal: a Python list costs a py4j call
+        # per point (0.4 s for 1,024 points)
+        grid = F.lit(np.array(_SPLIT_GRID))
+        return [
+            F.count(self.proxy).alias("__qn"),
+            F.percentile_approx(self.proxy, grid, _SPLIT_ACCURACY).alias("__q"),
+        ]
+
+    def groups(self, rows: Sequence) -> list:
+        """``(non-NULL rows, quantiles)`` pairs from collected rows holding
+        ``aggs``."""
+        return [(r["__qn"], r["__q"]) for r in rows] if self.proxy is not None else []
+
+    def split(self, df: DataFrame, n_parts: int, n_rows: int, groups: list) -> DataFrame:
+        """``df`` in ``n_parts`` partitions, ranged by the quantile
+        ``groups`` (:func:`_split_bounds`) of its ``n_rows`` rows."""
+        if self.proxy is None:
+            return df.repartition(n_parts, *self.cols)
+        base, bounds = _split_bounds(groups, n_rows, n_parts)
+        los = [base]
+        for _, cuts in bounds:
+            los.append(los[-1] + len(cuts))
+
+        # the tree is one SQL text over the proxy column ``__rk``: built
+        # as Columns it cost a py4j call a node, 0.2 s of a cold insert
+        def lit(v: float) -> str:
+            return f"double('{v}')" if v in (float("inf"), float("-inf")) else f"{v!r}D"
+
+        cols = ", ".join(f"`{c.replace('`', '``')}`" for c in self.cols)
+        # a row's place in [0, 1) among the rows sharing its proxy
+        h = f"(pmod(hash({cols}), {1 << 30}) / {float(1 << 30)}D)"
+
+        def below(cuts: list, lo: int, a: int, b: int) -> str:
+            # lo + a + the number of cuts[a:b] below h: a balanced tree,
+            # log2(b - a) tests a row
+            if a == b:
+                return str(lo + a)
+            m = (a + b) // 2
+            hi, low = below(cuts, lo, m + 1, b), below(cuts, lo, a, m)
+            return f"CASE WHEN {h} > {lit(cuts[m])} THEN {hi} ELSE {low} END"
+
+        def bucket(a: int, b: int) -> str:
+            # the partition of a row whose proxy lies above bounds[:a] and
+            # at or below bounds[b:]; the rows at a bound's value split at
+            # its cuts by their hash, so a key heavier than a file, or keys
+            # sharing a proxy, fill the partitions their rows span while
+            # equal keys stay together (a NULL proxy: the lowest partition)
+            if a == b:
+                return str(los[a])
+            m = (a + b) // 2
+            v, cuts = bounds[m]
+            return (
+                f"CASE WHEN __rk > {lit(v)} THEN {bucket(m + 1, b)} "
+                f"WHEN __rk = {lit(v)} THEN {below(cuts, los[m], 0, len(cuts))} "
+                f"ELSE {bucket(a, m)} END"
+            )
+
+        out = df.withColumn("__rk", self.proxy)
+        return out.repartitionById(n_parts, F.expr(bucket(0, len(bounds)))).drop("__rk")
+
+
 def _default_schema(cols: int) -> T.StructType:
     """``Store::new(cols)`` has positional, homogeneously-typed columns
     (``src/lib.rs:4-5,80-87``); default them to strings named c0..cN-1."""
@@ -422,7 +585,9 @@ class Store:
         and indexed on the driver (:meth:`_insert_rows_driver`); its one
         Spark job is the index key sketch. A DataFrame batch is tagged
         with rowids in a lazy ``localCheckpoint`` whose first action is
-        the per-partition counts pass, then written by Spark, with every
+        the per-partition counts pass, which also takes the cluster key's
+        quantiles, then range-split by them with no sampler job
+        (:class:`_RangeSplit`) and written by Spark, with every
         index's key sketch observed in the write
         (:meth:`_observe_sketches`); the written batch is then indexed
         from a pyarrow read of its index columns with no job, up to each
@@ -508,15 +673,19 @@ class Store:
         # job (measured ~0.4 s/insert on the 600k-row bench ingest). The
         # scope ends right after the counts pass — the tail sizes its own
         # confs.
+        # The same pass takes the cluster key's quantiles, from which the
+        # write's range split is cut with no sampler job (_RangeSplit).
+        ranges = _RangeSplit(df.schema, self._cluster_cols())
         try:
             with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
                 tagged = tagged.localCheckpoint(eager=False)
-                stats = tagged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
+                stats = tagged.groupBy("__pid").agg(F.count("*").alias("cnt"), *ranges.aggs)
+                stats = stats.collect()
         except BaseException:
             tagged.unpersist()
             raise
         try:
-            return self._insert_tagged(tagged, schema, watermark, stats)
+            return self._insert_tagged(tagged, schema, watermark, stats, ranges)
         finally:
             tagged.unpersist()
 
@@ -765,6 +934,7 @@ class Store:
         schema: T.StructType,
         watermark: int,
         stats: list,
+        ranges: _RangeSplit,
     ) -> int:
         if not stats:
             return 0
@@ -800,13 +970,18 @@ class Store:
         )
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with scoped_confs(self.spark, confs):
-            out, obs = self._observe_sketches(self._cluster_batch(with_id, n))
+            out = self._cluster_batch(with_id, n, ranges, ranges.groups(stats))
+            out, obs = self._observe_sketches(out)
             out.write.parquet(self._abs(batch_rel))
             return self._append_batch(batch_rel, n, sketch=obs)
 
-    def _cluster_batch(self, with_id: DataFrame, n: int) -> DataFrame:
+    def _cluster_batch(
+        self, with_id: DataFrame, n: int, ranges: _RangeSplit, groups: list
+    ) -> DataFrame:
         """Partition a rowid-tagged batch for writing: size files, and honor
-        any index's clustering (shared by ``insert`` and ``apply_changes``).
+        any index's clustering (shared by ``insert`` and ``apply_changes``),
+        range-splitting by ``ranges`` from the quantile ``groups`` its
+        ``aggs`` took in the caller's aggregate.
         """
         # file sizing: cap rows per file (manifest/small-files hygiene) but
         # never collapse write parallelism below what the batch supports —
@@ -816,18 +991,17 @@ class Store:
         by_size = -(-n // self.ROWS_PER_FILE)
         by_par = min(cores, -(-n // 50_000))
         n_files = max(1, by_size, by_par)
-        cols = self._cluster_cols()
+        cols = ranges.cols
         if n_files == 1:
-            # single-file micro-batch: repartitionByRange's range SAMPLER
-            # job buys nothing when everything lands in one file — a
-            # coalesce(1) + in-file sort gives the identical layout
-            # (per-file min/max stats, sorted row groups, every key in
-            # exactly one file) for one job less. This is the streaming
-            # micro-batch commit-floor path.
+            # single-file micro-batch: a coalesce(1) + in-file sort gives
+            # the layout of a one-way range split (per-file min/max stats,
+            # sorted row groups, every key in exactly one file) with no
+            # shuffle. This is the streaming micro-batch commit-floor path.
             out = with_id.coalesce(1)
             return out.sortWithinPartitions(*cols) if cols else out
         if cols:
-            return with_id.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+            out = ranges.split(with_id, n_files, n, groups)
+            return out.sortWithinPartitions(*cols)
         return with_id.coalesce(n_files) if n_files < 32 else with_id
 
     def _cluster_cols(self) -> list[str]:
@@ -1712,16 +1886,19 @@ class Store:
             self._refresh_index_stats(spec, obs.get, part_rel)
             return
         postings = postings.persist()
+        ranges = _RangeSplit(postings.schema, [rkey])
         try:
-            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats).collect()[0].asDict()
+            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats, *ranges.aggs)
+            st = st.collect()[0].asDict()
             # range-shard the part so every output file covers a disjoint
             # key range: a point probe's pushed-down key predicate then
             # reads ~one shard's row groups, keeping probe IO sublinear in
             # posting size however large the part grows
-            n_shards = min(64, max(1, int(st["__n"] or 0) // self.POSTING_SHARD_ROWS + 1))
+            n = int(st["__n"] or 0)
+            n_shards = min(64, max(1, n // self.POSTING_SHARD_ROWS + 1))
             out = postings
             if n_shards > 1 and self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-                out = postings.repartitionByRange(n_shards, rkey)
+                out = ranges.split(postings, n_shards, n, ranges.groups([st]))
             out.sortWithinPartitions(rkey).write.parquet(self._abs(part_rel))
             spec.parts.append(part_rel)
             self._refresh_index_stats(spec, st, part_rel)
@@ -3794,8 +3971,12 @@ class Store:
                 ins = delta.filter(F.col("change_type") == "insert").select(
                     ROWID, *self.manifest.schema.fieldNames()
                 )
+                ranges = _RangeSplit(ins.schema, self._cluster_cols())
                 st = ins.agg(
-                    F.count(F.lit(1)).alias("n"), F.min(ROWID).alias("lo"), F.max(ROWID).alias("hi")
+                    F.count(F.lit(1)).alias("n"),
+                    F.min(ROWID).alias("lo"),
+                    F.max(ROWID).alias("hi"),
+                    *ranges.aggs,
                 ).collect()[0]
                 n_ins = int(st["n"] or 0)
                 # Legitimacy guard — runs BEFORE any manifest staging so a
@@ -3884,7 +4065,8 @@ class Store:
                     batch_rel = os.path.join(
                         "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                     )
-                    out, obs = self._observe_sketches(self._cluster_batch(ins, n_ins - n_res))
+                    out = self._cluster_batch(ins, n_ins - n_res, ranges, ranges.groups([st]))
+                    out, obs = self._observe_sketches(out)
                     out.write.parquet(self._abs(batch_rel))
                     self._register_and_index(batch_rel, sketch=obs)
                 if n_ins:
@@ -4126,7 +4308,20 @@ class Store:
             df = df.repartitionByRange(target_files, sort_by)
             order_col = sort_by
         else:
-            df = df.repartitionByRange(target_files, ROWID)
+            # rowid bounds from the manifest, no sampler job: each file's
+            # rows spread evenly over its rowid range, read at k points.
+            # The files of one batch clustered by another column all span
+            # the batch's rowids, so their points coincide: k, not the
+            # file count, sets the resolution (2^14 points in all)
+            files = self.manifest.files
+            k = max(16, (1 << 14) // len(files))
+            points = [(i + 0.5) / k for i in range(k)]
+            spans = [
+                (f.rows, [f.min_rowid + (f.max_rowid - f.min_rowid) * p for p in points])
+                for f in files
+            ]
+            ranges = _RangeSplit(df.schema, [ROWID])
+            df = ranges.split(df, target_files, self.manifest.total_rows, spans)
             order_col = ROWID
         batch_rel = os.path.join("data", f"c{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         out = df.sortWithinPartitions(order_col)

@@ -2788,12 +2788,14 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
 
 
 def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
-    """A 30,000-row DataFrame insert runs three Spark jobs — the counts
-    pass, the range sampler and the write — with one, two or four indexes
-    (hash, btree, composite, bloom): the write observes every index's key
-    sketch, and the postings and bitsets are built on the driver from a
-    pyarrow read of the written index columns. A ``micro_batch`` insert
-    and ``compact`` run as many jobs as on the unindexed store. Each ndv
+    """A 30,000-row DataFrame insert runs two Spark jobs — the counts
+    pass, which also takes the cluster key's quantiles, and the write —
+    with no index or with one, two or four indexes (hash, btree,
+    composite, bloom): the range split needs no sampler job, the write
+    observes every index's key sketch, and the postings and bitsets are
+    built on the driver from a pyarrow read of the written index columns.
+    A ``micro_batch`` insert and ``compact`` run as many jobs as on the
+    unindexed store. Each ndv
     is within HLL error of the exact distinct count: a fresh index's
     sketch is the union of the write tasks' sketches, whose estimator
     differs from a one-task sketch's."""
@@ -2819,11 +2821,11 @@ def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
     for n, indexes in enumerate(index_sets):
         schema = T.StructType.fromDDL("k long, v double, g string, u long")
         st = Store.create(spark, str(tmp_path / f"s{n}"), schema)
-        st.ROWS_PER_FILE = 7_500  # four files: an indexed batch runs the range sampler
+        st.ROWS_PER_FILE = 7_500  # four files: an indexed batch is range-split
         for column, kind in indexes:
             st.index(column, kind)
         got, jobs = _jobs(spark, lambda: st.insert(frame(0, 30_000, 4)))
-        assert got == 30_000 and jobs == (3 if indexes else 2), (indexes, jobs)
+        assert got == 30_000 and jobs == 2, (indexes, jobs)
         got, micro = _jobs(spark, lambda: st.insert(frame(30_000, 30_100, 1), micro_batch=True))
         assert got == 100
         _, compact = _jobs(spark, lambda: st.compact(target_files=2))
@@ -2834,36 +2836,281 @@ def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
     assert floors == [floors[0]] * len(index_sets), floors
 
 
+def _spark_order(v):
+    """A Python sort key in Spark's ascending order: NULL first, -0.0
+    equal to 0.0, NaN above every double, strings by UTF-8 bytes, and
+    tuples column by column."""
+    if isinstance(v, tuple):
+        return tuple(_spark_order(x) for x in v)
+    if v is None:
+        return (0, 0)
+    if isinstance(v, float) and v != v:
+        return (2, 0)
+    if isinstance(v, str):
+        return (1, v.encode())
+    return (1, v)
+
+
+def _batch_files(st, cols):
+    """The last batch's data files as (rows, sorted distinct cluster keys),
+    read with pyarrow."""
+    rel = st.manifest.files[-1].path.rsplit("/", 1)[0]
+    out = []
+    for f in st.manifest.files:
+        if f.path.rsplit("/", 1)[0] != rel:
+            continue
+        t = pq.read_table(st._abs(f.path), columns=list(cols)).to_pydict()
+        keys = list(zip(*(t[c] for c in cols))) if len(cols) > 1 else t[cols[0]]
+        keys = [tuple(k) if isinstance(k, list) else k for k in keys]
+        out.append((f.rows, sorted(set(keys), key=_spark_order)))
+    return out
+
+
+# lead column cases of the range split: name -> (key expression over id,
+# index kind, whether the order proxy separates every key)
+_LEADS = {
+    "long": ("xxhash64(id) % 1000003", "btree", True),
+    "double": (
+        "CASE WHEN id % 97 = 0 THEN double('NaN') WHEN id % 89 = 0 THEN -0.0D "
+        "WHEN id % 83 = 0 THEN 0.0D WHEN id % 79 = 0 THEN NULL ELSE rand(3) * 100 END",
+        "btree",
+        True,
+    ),
+    "string": (
+        "CASE WHEN id % 2 = 0 THEN concat('shared-', sha2(cast(id AS string), 256)) "
+        "ELSE concat(substr('üéabc€xyz', 1 + id % 6, 3), sha2(cast(id AS string), 256)) END",
+        "btree",
+        False,
+    ),
+    "decimal": ("cast(rand(5) * 1000000 AS decimal(18, 3))", "btree", True),
+    "date": ("date_add(DATE'2000-01-01', cast(id % 5000 AS int))", "btree", True),
+    "timestamp": ("timestamp_micros(xxhash64(id) % 100000000000000)", "btree", True),
+    "boolean": ("id % 3 = 0", "btree", True),
+    "all_equal": ("5L", "btree", True),
+    "composite": ("concat('g', cast(id % 3 AS string))", "composite", False),
+    "array": ("array(cast(id % 500 AS int), cast(id % 7 AS int))", "hash", False),
+}
+
+
+@pytest.mark.parametrize("lead", sorted(_LEADS))
+def test_range_split_layout_by_lead_type(spark, tmp_path, lead):
+    """A 12,000-row DataFrame insert at 3,000 rows a file runs two Spark
+    jobs (the counts pass, which also takes the cluster key's quantiles,
+    and the write) for every lead column type, and an array key's posting
+    job. Each key sits in exactly
+    one file. Where the order proxy separates keys, the files are
+    key-disjoint in Spark's order, NULL, ±0.0 and NaN included; where it
+    does not (strings sharing their first 7 bytes, a composite key's
+    3-valued lead, an array), the heavy proxy values spread by hash. A
+    file holds 3,000 rows within 10% unless the batch has fewer distinct
+    keys than files (boolean, all-equal), where each key is one file.
+    Point, multi-key and range finds return the rows the batch holds."""
+    from pyspark.sql import functions as F
+
+    expr, kind, disjoint = _LEADS[lead]
+    src = spark.range(0, 12_000, numPartitions=4).select(F.expr(expr).alias("key"), "id")
+    st = Store.create(spark, str(tmp_path / "s"), src.schema)
+    st.ROWS_PER_FILE = 3_000
+    cols = ["key", "id"] if kind == "composite" else ["key"]
+    st.index(tuple(cols) if kind == "composite" else "key", "hash" if kind != "btree" else "btree")
+    n, jobs = _jobs(spark, lambda: st.insert(src))
+    # an array key's postings take their own Spark job (_driver_atomic_type)
+    assert n == 12_000 and jobs == 2 + (lead == "array"), jobs
+
+    files = _batch_files(st, cols)
+    owner = {}
+    for i, (_, keys) in enumerate(files):
+        for k in keys:
+            assert owner.setdefault(_spark_order(k), i) == i, (k, owner[_spark_order(k)], i)
+    rows = [r for r, _ in files]
+    distinct = len(owner)
+    if distinct >= 4 * len(rows):
+        assert len(rows) == 4 and all(abs(r - 3_000) <= 300 for r in rows), rows
+    else:
+        assert len(rows) <= distinct, (rows, distinct)
+    if disjoint:
+        spans = sorted((_spark_order(k[0]), _spark_order(k[-1])) for _, k in files)
+        for (_, hi), (lo, _) in zip(spans, spans[1:]):
+            assert hi < lo, (hi, lo)
+
+    if lead == "array":
+        return  # no equality probe on an array literal
+    rows_by_id = {r["id"]: r for r in src.collect()}
+    probe = [rows_by_id[i][cols[0]] for i in (1, 4_001, 11_998)]
+    if lead in ("double",):
+        probe = [v for v in probe if v is not None and v == v]
+    for v in probe:
+        want = sorted(i for i, r in rows_by_id.items() if r[cols[0]] == v)
+        got = sorted(r["id"] for r in st.find([eq(cols[0], v)]).collect())
+        assert got == want, (v, got[:5], want[:5])
+    got = sorted(r["id"] for r in st.find_many(cols[0], probe).collect())
+    assert got == sorted(i for i, r in rows_by_id.items() if r[cols[0]] in probe)
+    if kind == "btree" and lead not in ("boolean", "all_equal"):
+        lo, hi = sorted(probe, key=_spark_order)[:2]
+        got = sorted(r["id"] for r in st.find([between(cols[0], lo, hi)]).collect())
+        want = sorted(
+            i
+            for i, r in rows_by_id.items()
+            if r[cols[0]] is not None
+            and _spark_order(lo) <= _spark_order(r[cols[0]]) <= _spark_order(hi)
+        )
+        assert got == want, (lo, hi, len(got), len(want))
+
+
+def test_range_split_gives_a_300_file_batch_its_file_count(spark, tmp_path):
+    """30,000 rows at 100 rows a file make 300 files: four write tasks'
+    1,024-point quantile grids place a candidate bound every ~7 rows, so
+    every one of the 299 bounds lands, and each file holds 100 rows within
+    half (the quantiles are exact to 1/1,000 of a task's 7,500 rows). The
+    files are key-disjoint and the insert runs 2 jobs."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL("v double, id long"))
+    st.ROWS_PER_FILE = 100
+    st.index("v", "btree")
+    src = spark.range(0, 30_000, numPartitions=4).select(
+        (F.rand(11) * 1e6).alias("v"), F.col("id")
+    )
+    n, jobs = _jobs(spark, lambda: st.insert(src))
+    assert n == 30_000 and jobs == 2, jobs
+    files = _batch_files(st, ["v"])
+    rows = [r for r, _ in files]
+    assert len(rows) == 300 and all(50 <= r <= 150 for r in rows), (len(rows), min(rows), max(rows))
+    spans = sorted((k[0], k[-1]) for _, k in files)
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+
+
+
+def test_range_split_keeps_its_files_under_aqe(spark, tmp_path):
+    """A batch above ``STATIC_INSERT_ROWS`` writes with AQE on. Its range
+    split is a repartition by number, which AQE does not coalesce: with
+    the bound lowered to 0, a 12,000-row batch at 3,000 rows a file still
+    writes 4 key-disjoint files of 3,000 rows within 10%, where coalescing
+    to the 64 MB advisory size would have made one."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from shortcut_spark.session import scoped_confs
+
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL("v double, id long"))
+    st.ROWS_PER_FILE = 3_000
+    st.STATIC_INSERT_ROWS = 0
+    st.index("v", "btree")
+    src = spark.range(0, 12_000, numPartitions=4).select((F.rand(13) * 50).alias("v"), "id")
+    aqe = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    }
+    with scoped_confs(spark, aqe):
+        assert st.insert(src) == 12_000
+    files = _batch_files(st, ["v"])
+    assert len(files) == 4 and all(abs(r - 3_000) <= 300 for r, _ in files), files
+    spans = sorted((k[0], k[-1]) for _, k in files)
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+
+def test_range_split_pins_for_sharded_postings_cdc_apply_and_compact(spark, tmp_path):
+    """No range sampler on the other Store write paths. A posting build
+    above one shard takes its quantiles in its stats aggregate: a 300-row
+    DataFrame insert at 50 posting rows a shard runs 4 jobs (counts,
+    write, the posting aggregate and the posting write) into 7 key-disjoint
+    shards. A distributed ``apply_changes`` of 12,000 rows at 3,000 rows a
+    file takes its quantiles in its stats aggregate and writes 4
+    key-disjoint files in 6 jobs under the session's AQE, where every
+    exchange is a job of its own (7 with the range sampler). ``compact``
+    cuts its rowid bounds from the manifest: 2 jobs (3 with the sampler)
+    for 3 files of 4,000 rows within 2%."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromDDL("k long, v double")
+    st = Store.create(spark, str(tmp_path / "p"), schema)
+    st.index("k", "hash")
+    st.POSTING_SHARD_ROWS = 50
+    src = spark.range(0, 300, numPartitions=2).select(
+        (F.col("id") * 7 % 1009).alias("k"), (F.col("id") / 3).alias("v")
+    )
+    n, jobs = _jobs(spark, lambda: st.insert(src))
+    assert n == 300 and jobs == 4, jobs
+    spec = st.manifest.indices["k"]
+    shards = []
+    for name in sorted(os.listdir(st._abs(spec.parts[-1]))):
+        if name.endswith(".parquet"):
+            keys = pq.read_table(os.path.join(st._abs(spec.parts[-1]), name)).column("key")
+            if len(keys):
+                shards.append((min(keys.to_pylist()), max(keys.to_pylist()), len(keys)))
+    shards.sort()
+    assert len(shards) == 7 and sum(r for *_, r in shards) == 300, shards
+    assert all(hi < lo for (_, hi, _), (lo, _, _) in zip(shards, shards[1:])), shards
+
+    fol = Store.create(spark, str(tmp_path / "f"), schema)
+    fol.index("v", "btree")
+    fol.ROWS_PER_FILE = 3_000
+    fol.DRIVER_INSERT_ROWS = 0
+    delta = spark.range(0, 12_000, numPartitions=4).select(
+        F.lit("insert").alias("change_type"),
+        F.col("id").alias(ROWID),
+        F.col("id").alias("k"),
+        (F.rand(2) * 10).alias("v"),
+    )
+    got, jobs = _jobs(spark, lambda: fol.apply_changes(delta))
+    assert got == (12_000, 0) and jobs == 6, (got, jobs)
+    files = _batch_files(fol, ["v"])
+    assert len(files) == 4 and all(abs(r - 3_000) <= 300 for r, _ in files), files
+    spans = sorted((k[0], k[-1]) for _, k in files)
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+
+    _, jobs = _jobs(spark, lambda: fol.compact(target_files=3))
+    rows = [f.rows for f in fol.manifest.files]
+    assert jobs == 2 and len(rows) == 3 and all(abs(r - 4_000) <= 80 for r in rows), (jobs, rows)
+    assert sorted(r[0] for r in fol.find([], with_rowid=True).select(ROWID).collect()) == list(
+        range(12_000)
+    )
+
 def _scratch_sketch(spark, st, column):
-    """(ndv, sketch bytes) of a from-scratch HLL sketch over the live
-    postings of the index on ``column``."""
+    """(union ndv, sketch bytes) of a from-scratch HLL sketch over the
+    live postings of the index on ``column`` (:func:`_union_ndv`)."""
     from pyspark.sql import functions as F
 
     post = _spark_postings(spark, st, st.manifest.indices[column])
     row = (
         post.agg(F.hll_sketch_agg(F.col("key").cast("string")).alias("sk"))
-        .select(F.hll_sketch_estimate("sk").alias("ndv"), "sk")
+        .select(F.hll_sketch_estimate(F.hll_union("sk", "sk")).alias("ndv"), "sk")
         .collect()[0]
     )
     return int(row["ndv"]), bytes(row["sk"])
 
 
-def _same_keys(spark, a: bytes, b: bytes) -> bool:
-    """Two HLL sketches hold the same keys: each one's estimate equals
-    their union's (set-mode sketches lay their coupons out in insertion
-    order, so equal key sets need not give equal bytes)."""
+def _union_ndv(spark, a: bytes, b: bytes) -> int:
+    """The HLL estimate of the union of two sketches. A sketch's own
+    estimate depends on how it was built — one task's sketch reads its
+    HIP estimate, a merge of several tasks' sketches the union estimator —
+    so equal key sets can read differently (19,949 vs 19,906 on 20,011
+    keys); union estimates compare key sets whatever built the sketches."""
     from pyspark.sql import functions as F
 
     row = (
         spark.createDataFrame([(bytearray(a), bytearray(b))], "a binary, b binary")
-        .select(
-            F.hll_sketch_estimate("a").alias("a"),
-            F.hll_sketch_estimate("b").alias("b"),
-            F.hll_sketch_estimate(F.hll_union("a", "b")).alias("u"),
-        )
+        .select(F.hll_sketch_estimate(F.hll_union("a", "b")).alias("u"))
         .collect()[0]
     )
-    return row["a"] == row["b"] == row["u"]
+    return int(row["u"])
+
+
+def _hll_ndv(spark, a: bytes) -> int:
+    """The HLL estimate of one sketch, by the estimator its build took."""
+    from pyspark.sql import functions as F
+
+    row = spark.createDataFrame([(bytearray(a),)], "a binary").select(F.hll_sketch_estimate("a")).collect()
+    return int(row[0][0])
+
+
+def _same_keys(spark, a: bytes, b: bytes) -> bool:
+    """Two HLL sketches hold the same keys: the union of each with itself
+    reads as their union does (set-mode sketches lay their coupons out in
+    insertion order, so equal key sets need not give equal bytes)."""
+    ab = _union_ndv(spark, a, b)
+    return _union_ndv(spark, a, a) == ab == _union_ndv(spark, b, b)
 
 
 def _exact_ndv(st, column):
@@ -2873,7 +3120,9 @@ def _exact_ndv(st, column):
 def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     """The ndv contract: after inserts — through the fused driver build
     and the Spark write that observes the sketches alike — every index's
-    ndv and sketch equal a from-scratch sketch of its live postings; after
+    ndv is its sketch's estimate and the sketch holds the keys of a
+    from-scratch sketch of its live postings, compared by union estimates
+    so that how many tasks built either sketch does not matter; after
     a copy-on-write delete ndv is still at least the exact distinct count
     of live keys; compact() rebuilds it to the from-scratch value."""
     import base64
@@ -2892,8 +3141,9 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     for column in ("k", "v"):
         spec = st.manifest.indices[column]
         ndv, sk = _scratch_sketch(spark, st, column)
-        assert spec.ndv == ndv
-        assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+        stored = base64.b64decode(spec.sketch)
+        assert spec.ndv == _hll_ndv(spark, stored) and _union_ndv(spark, stored, stored) == ndv
+        assert _same_keys(spark, stored, sk)
     # a driver delete, its survivors indexed from arrow
     del st.DRIVER_INSERT_ROWS, st.POSTING_SHARD_ROWS
     st.delete([between("k", 0, 99)])  # a third of the keys vanish
@@ -2906,8 +3156,9 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     for column in ("k", "v"):
         spec = st.manifest.indices[column]
         ndv, sk = _scratch_sketch(spark, st, column)
-        assert spec.ndv == ndv
-        assert _same_keys(spark, base64.b64decode(spec.sketch), sk)
+        stored = base64.b64decode(spec.sketch)
+        assert spec.ndv == _hll_ndv(spark, stored) and _union_ndv(spark, stored, stored) == ndv
+        assert _same_keys(spark, stored, sk)
 
 
 def test_spark_cow_delete_leaves_index_sketches_as_they_are(spark, tmp_path, monkeypatch):

@@ -335,6 +335,32 @@ def test_sketch_cols_called_only_from_the_sketch_sites():
     }, callers
 
 
+
+# -- lint: no range sampler on the Store's write paths -----------------------
+
+
+def test_repartition_by_range_only_in_compact_layouts():
+    """Store writes range-split with no sampler job (``_RangeSplit``:
+    bounds from an aggregate the write already collects, or from the
+    manifest). ``repartitionByRange`` and its sampler job stay only in
+    ``compact``'s ``sort_by`` and z-order branches, whose layout is the
+    point of the call."""
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    callers = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartitionByRange"
+            ):
+                callers.append((fn.name, ast.unparse(node.args[1])))
+    assert sorted(callers) == [("compact", "'__z'"), ("compact", "sort_by")], callers
+
 # -- lint: IN lists in store.py are SQL literals ----------------------------
 
 
