@@ -103,11 +103,11 @@ def _order_proxy(dt: T.DataType, c: Column) -> Column | None:
     """A double that never falls as ``c`` rises in Spark's ascending sort
     order, NULL where ``c`` is NULL, or None for a type with no such proxy
     (arrays, structs, a collated string). Equal keys always share a proxy;
-    distinct keys may too (strings past their first 7 bytes, longs past
-    2^53). A string or binary reads its first 7 bytes big-endian, zero
-    padded, which is Spark's unsigned byte order. NaN, the largest double
-    in that order, reads +inf, since ``percentile_approx`` cannot order
-    NaN; -0.0 and 0.0 compare equal in Spark already."""
+    distinct keys may too (strings past their first 7 bytes, numbers past
+    2^52: :func:`_proxy_is_key`). A string or binary reads its first 7
+    bytes big-endian, zero padded, which is Spark's unsigned byte order.
+    NaN, the largest double in that order, reads +inf, since a quantile
+    sketch cannot order NaN; -0.0 and 0.0 compare equal in Spark already."""
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return F.nanvl(c.cast("double"), F.lit(float("inf")))
     if isinstance(dt, (T.NumericType, T.BooleanType)):
@@ -132,134 +132,158 @@ def _order_proxy(dt: T.DataType, c: Column) -> Column | None:
     return None
 
 
+def _proxy_is_key(dt: T.DataType) -> bool:
+    """Whether distinct values of type ``dt`` below 2^52 in magnitude have
+    distinct :func:`_order_proxy` values: numbers (a decimal up to 15
+    digits), booleans, dates and timestamps. A string's proxy holds every
+    string that shares its first 7 bytes."""
+    if isinstance(dt, T.DecimalType):
+        return dt.precision <= 15
+    return isinstance(
+        dt, (T.NumericType, T.BooleanType, T.DateType, T.TimestampType, T.TimestampNTZType)
+    )
+
+
 # the quantile grid of a range split: each aggregate group reports its
-# proxy at these 1,024 fractions to within 1 / _SPLIT_ACCURACY of its
-# rows, so a bound lands within about 1 / 500 of the batch's rows of its
-# target, and a batch gets all of its files while a file holds more than
-# one candidate's rows (docs/SCALE.md, "Range splits without a sampler
-# job")
+# proxy at these 1,024 fractions from a KLL sketch of k = 2,000 (rank
+# error about 1/1,000 of its rows), so a cut lands within about 1/1,000
+# of the batch's rows of its target, and a batch gets all of its files
+# while a file holds more than one grid point's rows (docs/SCALE.md,
+# "Range splits without a sampler job")
 _SPLIT_GRID = [(i + 0.5) / 1024 for i in range(1024)]
-_SPLIT_ACCURACY = 1_000
+# the grid as one string literal split and cast: a 1,024-literal array()
+# costs about 100 ms of plan analysis an insert, a numpy literal 60 ms of
+# py4j, a Python list a py4j call a point
+_SPLIT_GRID_SQL = "cast(split('" + ",".join(map(repr, _SPLIT_GRID)) + "', ',') AS array<double>)"
+_SPLIT_K = 2_000
+# the largest share of a file a cut may move to keep a proxy value that
+# can hold several keys in one file; past it the sampler splits the keys
+_SPLIT_TIE = 1 / 8
 
 
-def _split_bounds(groups: list, n_rows: int, n_parts: int) -> tuple[int, list]:
-    """The bounds of an ``n_parts``-way range split of ``n_rows`` rows,
-    merged from ``groups`` — one ``(non-NULL rows, proxy quantiles)`` pair
-    per aggregate group, each of a group's quantiles weighing its rows
-    over the quantile count — by walking the targets ``j * n_rows /
-    n_parts`` as ``RangePartitioner.determineBounds`` does.
+def _split_bounds(
+    values: Sequence[float], weights: Sequence[float], n_null: float, n_parts: int, keyed: bool
+) -> tuple | None:
+    """The ``n_parts``-way range split of a batch of ``n_null`` NULL keys,
+    which sort first, and of the non-NULL rows ``weights`` places at the
+    proxy ``values``; a value may repeat.
 
-    Returns ``(base, [(value, cuts), ...])``: ``base`` targets crossed by
-    the NULL rows, which sort first, then each distinct proxy value whose
-    rows cross a target, in increasing order, with ``cuts`` the fractions
-    of its rows below each target it crosses."""
-    import itertools
+    Each distinct proxy value goes whole to the partition holding the
+    midpoint of its rows among the targets ``j * rows / n_parts``, so no
+    proxy value spans two files and the files are disjoint in cluster
+    order. Returns ``(NULL's partition, [[value, partition], ...])``, one
+    pair per run of values sharing a partition, each with its run's
+    largest value. None when the split is uneven and only a sampler over
+    the full keys evens it: a proxy value that may hold several keys
+    (``keyed`` False, or a magnitude from 2^52) would move a target by
+    more than ``_SPLIT_TIE`` of a file. A value that is one key stays
+    whole, as it does under ``RangePartitioner``."""
+    import numpy as np
 
-    cand = sorted((v, qn / len(q)) for qn, q in groups if qn for v in q)
-    step = n_rows / n_parts
-    cum, j = max(0, n_rows - sum(qn for qn, _ in groups)), 1
-    base = 0
-    while j < n_parts and cum >= j * step:
-        base, j = base + 1, j + 1
-    bounds = []
-    for v, same in itertools.groupby(cand, key=lambda t: t[0]):
-        lo = cum
-        cum += sum(w for _, w in same)
-        cuts = []
-        while j < n_parts and cum >= j * step:
-            cuts.append((j * step - lo) / (cum - lo))
-            j += 1
-        if cuts:
-            bounds.append((v, cuts))
-    return base, bounds
+    v, at = np.unique(np.asarray(values, dtype=float), return_inverse=True)
+    w = np.bincount(at.ravel(), weights=np.asarray(weights, dtype=float), minlength=len(v))
+    step = (n_null + w.sum()) / n_parts
+    if step <= 0:
+        return 0, []
+    hi = n_null + np.cumsum(w)
+    lo = hi - w
+    p = np.minimum(n_parts - 1, (lo + hi) / 2 // step).astype(int)
+    # the targets strictly inside a value's rows run from `first` to
+    # `last`; held whole in partition p, it moves the rows below the
+    # targets up to p, and those above the targets past p
+    first = lo // step + 1
+    last = np.minimum(np.ceil(hi / step) - 1, n_parts - 1)
+    top = np.minimum(p, last)
+    moved = np.maximum(
+        np.where(first <= top, top * step - lo, 0), np.where(p + 1 <= last, hi - (p + 1) * step, 0)
+    )
+    loose = np.abs(v) >= 2.0**52 if keyed else np.ones(len(v), bool)
+    if np.any(loose & (moved > step * _SPLIT_TIE)):
+        return None
+    ends = [*np.flatnonzero(np.diff(p)).tolist(), len(v) - 1] if len(v) else []
+    return min(n_parts - 1, int(n_null / 2 // step)), [[float(v[i]), int(p[i])] for i in ends]
 
 
 class _RangeSplit:
     """A range split of a batch by its cluster columns that runs no
     sampler job. Bounds: ``aggs`` are the quantile columns of the lead
     column's order proxy (:func:`_order_proxy`), to ride an aggregate the
-    caller collects anyway, and :meth:`groups` reads them back. Split:
-    :meth:`split` merges the quantiles into bounds on the driver
-    (:func:`_split_bounds`) and repartitions by the number of bounds below
-    each row's proxy.
+    caller collects anyway. Split: :meth:`split` merges the quantiles into
+    bounds on the driver (:func:`_split_bounds`) and repartitions by each
+    row's partition, a step function of its proxy.
 
-    The rows at a bound's proxy value split at its targets by a hash of
-    the cluster columns, so equal keys still share a file, while a key
-    heavier than a file or distinct keys sharing a proxy (strings equal in
-    their first 7 bytes, a composite key's lead) fill the partitions
-    their rows span; files then overlap only at that proxy value. A lead
-    type with no proxy hash-splits by the cluster columns, which also puts
-    each key in exactly one file."""
+    Every proxy value lies in one file, so the files are key-disjoint in
+    cluster order. Where that would skew a file by holding together a
+    proxy value shared by many keys (strings equal in their first 7
+    bytes, a composite key's lead), the split falls back to
+    ``repartitionByRange`` and its sampler job, as it does when no
+    quantiles were taken (``quantiles`` False: a batch its row bound puts
+    in one file). A lead type with no proxy hash-splits by the cluster
+    columns, which puts each key in exactly one file."""
 
-    def __init__(self, schema: T.StructType, cols: Sequence[str]):
+    def __init__(self, schema: T.StructType, cols: Sequence[str], quantiles: bool = True):
         self.cols = list(cols)
-        self.proxy = _order_proxy(schema[cols[0]].dataType, F.col(cols[0])) if cols else None
+        dt = schema[cols[0]].dataType if cols else None
+        self.proxy = _order_proxy(dt, F.col(cols[0])) if cols else None
+        self.keyed = len(self.cols) == 1 and _proxy_is_key(dt)
+        self.quantiles = quantiles and self.proxy is not None
 
     @property
     def aggs(self) -> list[Column]:
-        import numpy as np
-
-        if self.proxy is None:
+        """Aggregate columns of a group's rows (``__qr``), non-NULL keys
+        (``__qn``) and proxy quantiles at ``_SPLIT_GRID`` (``__q``)."""
+        if not self.quantiles:
             return []
-        # the grid as one numpy literal: a Python list costs a py4j call
-        # per point (0.4 s for 1,024 points)
-        grid = F.lit(np.array(_SPLIT_GRID))
+        q = F.kll_sketch_get_quantile_double(
+            F.kll_sketch_agg_double(self.proxy, _SPLIT_K), F.expr(_SPLIT_GRID_SQL)
+        )
+        n = F.count(self.proxy)
         return [
-            F.count(self.proxy).alias("__qn"),
-            F.percentile_approx(self.proxy, grid, _SPLIT_ACCURACY).alias("__q"),
+            F.count(F.lit(1)).alias("__qr"),
+            n.alias("__qn"),
+            F.when(n > 0, q).alias("__q"),
         ]
 
-    def groups(self, rows: Sequence) -> list:
-        """``(non-NULL rows, quantiles)`` pairs from collected rows holding
-        ``aggs``."""
-        return [(r["__qn"], r["__q"]) for r in rows] if self.proxy is not None else []
-
-    def split(self, df: DataFrame, n_parts: int, n_rows: int, groups: list) -> DataFrame:
-        """``df`` in ``n_parts`` partitions, ranged by the quantile
-        ``groups`` (:func:`_split_bounds`) of its ``n_rows`` rows."""
+    def split(self, df: DataFrame, n_parts: int, rows: Sequence) -> DataFrame:
+        """``df`` in ``n_parts`` partitions, ranged by the quantiles of the
+        collected aggregate ``rows``, each holding :attr:`aggs`."""
         if self.proxy is None:
             return df.repartition(n_parts, *self.cols)
-        base, bounds = _split_bounds(groups, n_rows, n_parts)
-        los = [base]
-        for _, cuts in bounds:
-            los.append(los[-1] + len(cuts))
+        if not self.quantiles:
+            return self.split_by(df, n_parts, None)
+        full = [(r["__qn"], r["__q"]) for r in rows if r["__qn"]]
+        values = [v for _, q in full for v in q]
+        weights = [qn / len(q) for qn, q in full for _ in q]
+        return self.split_by(df, n_parts, (values, weights), sum(r["__qr"] - r["__qn"] for r in rows))
 
-        # the tree is one SQL text over the proxy column ``__rk``: built
-        # as Columns it cost a py4j call a node, 0.2 s of a cold insert
+    def split_by(
+        self, df: DataFrame, n_parts: int, bins: tuple | None, n_null: float = 0
+    ) -> DataFrame:
+        """``df`` in ``n_parts`` partitions, ranged by ``bins``, the proxy
+        values and their weights, and ``n_null`` NULL keys
+        (:func:`_split_bounds`); ``bins`` None takes the sampler."""
+        bounds = None if bins is None else _split_bounds(*bins, n_null, n_parts, self.keyed)
+        if bounds is None:
+            return df.repartitionByRange(n_parts, *self.cols)
+        p_null, runs = bounds
+
+        # the step function is one SQL text over the proxy column ``__rk``:
+        # built as Columns it cost a py4j call a node, 0.2 s of a cold insert
         def lit(v: float) -> str:
             return f"double('{v}')" if v in (float("inf"), float("-inf")) else f"{v!r}D"
 
-        cols = ", ".join(f"`{c.replace('`', '``')}`" for c in self.cols)
-        # a row's place in [0, 1) among the rows sharing its proxy
-        h = f"(pmod(hash({cols}), {1 << 30}) / {float(1 << 30)}D)"
-
-        def below(cuts: list, lo: int, a: int, b: int) -> str:
-            # lo + a + the number of cuts[a:b] below h: a balanced tree,
-            # log2(b - a) tests a row
+        def tree(a: int, b: int) -> str:
+            # the partition of a row above runs[:a] and at or below runs[b]:
+            # a balanced tree, log2(b - a) tests a row
             if a == b:
-                return str(lo + a)
+                return str(runs[a][1])
             m = (a + b) // 2
-            hi, low = below(cuts, lo, m + 1, b), below(cuts, lo, a, m)
-            return f"CASE WHEN {h} > {lit(cuts[m])} THEN {hi} ELSE {low} END"
+            return f"CASE WHEN __rk > {lit(runs[m][0])} THEN {tree(m + 1, b)} ELSE {tree(a, m)} END"
 
-        def bucket(a: int, b: int) -> str:
-            # the partition of a row whose proxy lies above bounds[:a] and
-            # at or below bounds[b:]; the rows at a bound's value split at
-            # its cuts by their hash, so a key heavier than a file, or keys
-            # sharing a proxy, fill the partitions their rows span while
-            # equal keys stay together (a NULL proxy: the lowest partition)
-            if a == b:
-                return str(los[a])
-            m = (a + b) // 2
-            v, cuts = bounds[m]
-            return (
-                f"CASE WHEN __rk > {lit(v)} THEN {bucket(m + 1, b)} "
-                f"WHEN __rk = {lit(v)} THEN {below(cuts, los[m], 0, len(cuts))} "
-                f"ELSE {bucket(a, m)} END"
-            )
-
+        body = tree(0, len(runs) - 1) if runs else str(p_null)
         out = df.withColumn("__rk", self.proxy)
-        return out.repartitionById(n_parts, F.expr(bucket(0, len(bounds)))).drop("__rk")
+        key = F.expr(f"CASE WHEN __rk IS NULL THEN {p_null} ELSE {body} END")
+        return out.repartitionById(n_parts, key).drop("__rk")
 
 
 def _default_schema(cols: int) -> T.StructType:
@@ -587,7 +611,9 @@ class Store:
         with rowids in a lazy ``localCheckpoint`` whose first action is
         the per-partition counts pass, which also takes the cluster key's
         quantiles, then range-split by them with no sampler job
-        (:class:`_RangeSplit`) and written by Spark, with every
+        (:class:`_RangeSplit`; a key prefix shared by so many rows that
+        keeping it in one file would skew the files takes the sampler)
+        and written by Spark, with every
         index's key sketch observed in the write
         (:meth:`_observe_sketches`); the written batch is then indexed
         from a pyarrow read of its index columns with no job, up to each
@@ -674,8 +700,14 @@ class Store:
         # scope ends right after the counts pass — the tail sizes its own
         # confs.
         # The same pass takes the cluster key's quantiles, from which the
-        # write's range split is cut with no sampler job (_RangeSplit).
-        ranges = _RangeSplit(df.schema, self._cluster_cols())
+        # write's range split is cut with no sampler job (_RangeSplit),
+        # unless the plan's row bound puts the batch in one file.
+        from .functions import _row_bound
+
+        bound = _row_bound(df)
+        ranges = _RangeSplit(
+            df.schema, self._cluster_cols(), bound is None or self._n_files(bound) > 1
+        )
         try:
             with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
                 tagged = tagged.localCheckpoint(eager=False)
@@ -970,28 +1002,30 @@ class Store:
         )
         batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with scoped_confs(self.spark, confs):
-            out = self._cluster_batch(with_id, n, ranges, ranges.groups(stats))
+            out = self._cluster_batch(with_id, n, ranges, stats)
             out, obs = self._observe_sketches(out)
             out.write.parquet(self._abs(batch_rel))
             return self._append_batch(batch_rel, n, sketch=obs)
 
-    def _cluster_batch(
-        self, with_id: DataFrame, n: int, ranges: _RangeSplit, groups: list
-    ) -> DataFrame:
-        """Partition a rowid-tagged batch for writing: size files, and honor
-        any index's clustering (shared by ``insert`` and ``apply_changes``),
-        range-splitting by ``ranges`` from the quantile ``groups`` its
-        ``aggs`` took in the caller's aggregate.
-        """
-        # file sizing: cap rows per file (manifest/small-files hygiene) but
-        # never collapse write parallelism below what the batch supports —
-        # coalesce propagates upstream, and a 1-task write serializes the
-        # whole rowid window for mid-size batches
+    def _n_files(self, n: int) -> int:
+        """The file count of an ``n``-row batch. File sizing caps rows per
+        file (manifest/small-files hygiene) but never collapses write
+        parallelism below what the batch supports — coalesce propagates
+        upstream, and a 1-task write serializes the whole rowid window for
+        mid-size batches."""
         cores = self.spark.sparkContext.defaultParallelism
-        by_size = -(-n // self.ROWS_PER_FILE)
-        by_par = min(cores, -(-n // 50_000))
-        n_files = max(1, by_size, by_par)
-        cols = ranges.cols
+        return max(1, -(-n // self.ROWS_PER_FILE), min(cores, -(-n // 50_000)))
+
+    def _cluster_batch(
+        self, with_id: DataFrame, n: int, ranges: _RangeSplit, rows: Sequence
+    ) -> DataFrame:
+        """Partition a rowid-tagged batch for writing: size files
+        (:meth:`_n_files`), and honor any index's clustering (shared by
+        ``insert`` and ``apply_changes``), range-splitting by ``ranges``
+        from the caller's collected aggregate ``rows``.
+        """
+        n_files = self._n_files(n)
+        cols = self._cluster_cols()
         if n_files == 1:
             # single-file micro-batch: a coalesce(1) + in-file sort gives
             # the layout of a one-way range split (per-file min/max stats,
@@ -1000,8 +1034,7 @@ class Store:
             out = with_id.coalesce(1)
             return out.sortWithinPartitions(*cols) if cols else out
         if cols:
-            out = ranges.split(with_id, n_files, n, groups)
-            return out.sortWithinPartitions(*cols)
+            return ranges.split(with_id, n_files, rows).sortWithinPartitions(*cols)
         return with_id.coalesce(n_files) if n_files < 32 else with_id
 
     def _cluster_cols(self) -> list[str]:
@@ -1898,7 +1931,7 @@ class Store:
             n_shards = min(64, max(1, n // self.POSTING_SHARD_ROWS + 1))
             out = postings
             if n_shards > 1 and self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-                out = ranges.split(postings, n_shards, n, ranges.groups([st]))
+                out = ranges.split(postings, n_shards, [st])
             out.sortWithinPartitions(rkey).write.parquet(self._abs(part_rel))
             spec.parts.append(part_rel)
             self._refresh_index_stats(spec, st, part_rel)
@@ -3971,7 +4004,12 @@ class Store:
                 ins = delta.filter(F.col("change_type") == "insert").select(
                     ROWID, *self.manifest.schema.fieldNames()
                 )
-                ranges = _RangeSplit(ins.schema, self._cluster_cols())
+                from .functions import _row_bound
+
+                bound = _row_bound(ins)
+                ranges = _RangeSplit(
+                    ins.schema, self._cluster_cols(), bound is None or self._n_files(bound) > 1
+                )
                 st = ins.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.min(ROWID).alias("lo"),
@@ -4065,7 +4103,7 @@ class Store:
                     batch_rel = os.path.join(
                         "data", f"r{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
                     )
-                    out = self._cluster_batch(ins, n_ins - n_res, ranges, ranges.groups([st]))
+                    out = self._cluster_batch(ins, n_ins - n_res, ranges, [st])
                     out, obs = self._observe_sketches(out)
                     out.write.parquet(self._abs(batch_rel))
                     self._register_and_index(batch_rel, sketch=obs)
@@ -4267,6 +4305,51 @@ class Store:
             return True
         return False
 
+    def _live_rowid_bins(self, n_parts: int) -> tuple | None:
+        """The live rows by rowid as ``(rowids, rows)`` bins for an
+        ``n_parts``-way split (:meth:`_RangeSplit.split_by`), read from
+        the manifest and the tombstone files' footers with no job: each
+        data file's rows, and each tombstone row group's rows taken away,
+        spread evenly over their rowid range. At least 16 bins a part and
+        4,096 in all, whatever the file count. None where a tombstone
+        footer has no rowid statistics."""
+        import numpy as np
+
+        spans = [(f.min_rowid, f.max_rowid, f.rows) for f in self.manifest.files if f.rows]
+        if not spans:
+            return [], []
+        for rel in self.manifest.tombstones:
+            d = self._abs(rel)
+            for fn in os.listdir(d):
+                if not fn.endswith(".parquet"):
+                    continue
+                md = pq.read_metadata(os.path.join(d, fn))
+                col = md.schema.names.index(ROWID)
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    st = rg.column(col).statistics
+                    if not rg.num_rows:
+                        continue
+                    if st is None or not st.has_min_max:
+                        return None
+                    spans.append((st.min, st.max, -rg.num_rows))
+        arr = np.array(spans, dtype=float)
+        lo, hi, rows = arr[:, 0], arr[:, 1] + 1, arr[:, 2]
+        rate = rows / (hi - lo)
+        n_bins = int(min(max(4_096, 16 * n_parts), hi.max() - lo.min()))
+        edges = np.linspace(lo.min(), hi.max(), n_bins + 1)
+
+        def started(at: np.ndarray) -> np.ndarray:
+            # sum of rate * (edge - at) over the spans with at <= edge
+            o = np.argsort(at)
+            i = np.searchsorted(at[o], edges, side="right")
+            r = np.concatenate([[0.0], np.cumsum(rate[o])])
+            ra = np.concatenate([[0.0], np.cumsum(rate[o] * at[o])])
+            return edges * r[i] - ra[i]
+
+        below = started(lo) - started(hi)  # rows below each edge
+        return edges[1:], np.maximum(np.diff(below), 0)
+
     def compact(
         self,
         target_files: int | None = None,
@@ -4308,20 +4391,10 @@ class Store:
             df = df.repartitionByRange(target_files, sort_by)
             order_col = sort_by
         else:
-            # rowid bounds from the manifest, no sampler job: each file's
-            # rows spread evenly over its rowid range, read at k points.
-            # The files of one batch clustered by another column all span
-            # the batch's rowids, so their points coincide: k, not the
-            # file count, sets the resolution (2^14 points in all)
-            files = self.manifest.files
-            k = max(16, (1 << 14) // len(files))
-            points = [(i + 0.5) / k for i in range(k)]
-            spans = [
-                (f.rows, [f.min_rowid + (f.max_rowid - f.min_rowid) * p for p in points])
-                for f in files
-            ]
+            # rowid bounds from the manifest and the tombstones' footers,
+            # no sampler job (_live_rowid_bins)
             ranges = _RangeSplit(df.schema, [ROWID])
-            df = ranges.split(df, target_files, self.manifest.total_rows, spans)
+            df = ranges.split_by(df, target_files, self._live_rowid_bins(target_files))
             order_col = ROWID
         batch_rel = os.path.join("data", f"c{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         out = df.sortWithinPartitions(order_col)

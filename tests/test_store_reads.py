@@ -344,7 +344,9 @@ def test_repartition_by_range_only_in_compact_layouts():
     bounds from an aggregate the write already collects, or from the
     manifest). ``repartitionByRange`` and its sampler job stay only in
     ``compact``'s ``sort_by`` and z-order branches, whose layout is the
-    point of the call."""
+    point of the call, and in ``_RangeSplit.split_by``'s fallback for a
+    batch whose quantiles cannot split it evenly while keeping every
+    proxy value in one file."""
     path = os.path.join(_PKG, "store.py")
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read(), filename=path)
@@ -359,7 +361,11 @@ def test_repartition_by_range_only_in_compact_layouts():
                 and node.func.attr == "repartitionByRange"
             ):
                 callers.append((fn.name, ast.unparse(node.args[1])))
-    assert sorted(callers) == [("compact", "'__z'"), ("compact", "sort_by")], callers
+    assert sorted(callers) == [
+        ("compact", "'__z'"),
+        ("compact", "sort_by"),
+        ("split_by", "*self.cols"),
+    ], callers
 
 # -- lint: IN lists in store.py are SQL literals ----------------------------
 
