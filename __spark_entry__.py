@@ -292,10 +292,9 @@ def q_store_cdc_changes(spark, sf_dir):
     st = _fresh_store(spark, sf_dir, "orders")
     v0 = st.manifest.version
     st.delete([eq("o_orderkey", 500)])
-    st.insert(
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5),
-        micro_batch=True,  # key-bounded batch: one file, one job (r12)
-    )
+    # a filtered scan has no plan row bound: its few rows insert as the
+    # literal batch they are (one collect job, a driver write)
+    st.insert(_t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5).collect())
     return st.changes(v0).select("change_type", *_ORDERS_SAFE)
 
 
@@ -356,10 +355,9 @@ def q_store_version_diff(spark, sf_dir):
     st = _fresh_store(spark, sf_dir, "orders")
     v0 = st.manifest.version
     st.delete([eq("o_orderkey", 500)])
-    st.insert(
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5),
-        micro_batch=True,  # key-bounded batch: one file, one job (r12)
-    )
+    # a filtered scan has no plan row bound: its few rows insert as the
+    # literal batch they are (one collect job, a driver write)
+    st.insert(_t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5).collect())
     v2 = st.manifest.version
     st.delete([eq("o_orderkey", 600)])  # outside the window: invisible
     out = st.diff(v0, v2).select("change_type", *_ORDERS_SAFE)
@@ -574,10 +572,9 @@ def q_store_matview(spark, sf_dir):
     st.delete([eq("o_orderstatus", "P")])
     mv.refresh()
     assert mv.last_refresh_scanned_base is False  # IVM fast path held
-    st.insert(
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100),
-        micro_batch=True,  # key-bounded batch: one file, one job (r12)
-    )
+    # a filtered scan has no plan row bound: its few rows insert as the
+    # literal batch they are (one collect job, a driver write)
+    st.insert(_t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100).collect())
     mv.refresh()
     assert mv.last_refresh_scanned_base is False
     return mv.read()

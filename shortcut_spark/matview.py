@@ -252,11 +252,13 @@ class MatView:
         whose change rows and state the driver may read, refreshes with no
         Spark job: :meth:`_refresh_driver` combines on the driver and the
         state's ``merge`` of the literal rows is a driver merge. Every
-        other refresh runs on Spark, as a single action: the combined rows
-        are materialized ONCE (``localCheckpoint``) before the merge — the
-        merge needs them twice (victims key probe + the insert itself),
-        and without the cut each use would re-execute the whole delta-agg
-        + state-scan + join plan from scratch. Either way the view's new
+        other refresh combines on Spark. A bounded one (:meth:`_static_confs`)
+        collects the combined rows and merges them as a literal batch, as
+        the driver refresh does; an unbounded one materializes them ONCE
+        (``localCheckpoint``) before the merge — the merge needs them twice
+        (victims key probe + the insert itself), and without the cut each
+        use would re-execute the whole delta-agg + state-scan + join plan
+        from scratch. Either way the view's new
         base version commits in the merge's one state commit. Jobs per
         refresh are counted under a job tag of their own (:func:`job_tag`)
         and exposed as ``last_refresh_jobs`` (observability for the
@@ -279,20 +281,19 @@ class MatView:
                     )
                     # lazy cut (r12): the merge's victims probe is the first
                     # action over ``rows`` and materializes the checkpoint
-                    # in ITS job; an eager checkpoint was one extra job
-                    rows = self._to_state_rows(touched).localCheckpoint(eager=False)
+                    # in ITS job
+                    rows = self._to_state_rows(touched)
+                    rows = rows.collect() if confs else rows.localCheckpoint(eager=False)
                 try:
                     # The view's new base_version is STAGED as a manifest
                     # prop in the same transaction as the merge, so it
                     # persists inside the merge's one atomic manifest flip
                     # (r12, the stream_epoch pattern) and a failed merge
                     # takes it back: state and version can never be
-                    # durable separately. micro_batch rides the static
-                    # compile's driver-side bound: the state upsert then
-                    # lands in one write job with footer-read counts.
+                    # durable separately.
                     with self.state._txn():
                         self.state.manifest.props["mv_base_version"] = str(cur)
-                        n_groups, _ = self.state.merge(rows, on=_GK, micro_batch=bool(confs))
+                        n_groups, _ = self.state.merge(rows, on=_GK)
                 finally:
                     if isinstance(rows, DataFrame):
                         rows.unpersist()
@@ -316,10 +317,12 @@ class MatView:
         dynamic broadcast measured +35% at sf0.1) and the gate bounds
         base + delta. With AQE off every exchange fans to the session's
         shuffle partitions (32 × ~8 exchanges measured slower than the
-        AQE jobs), so the bounded plan runs on one partition. Kept after
-        the driver refresh took the small count/sum views: a 100-row
-        min/max refresh runs 5 jobs with it and 11 without, 0.48 s faster
-        (docs/SCALE.md, "Zero-job view refresh")."""
+        AQE jobs), so the bounded plan runs on one partition, and with no
+        broadcast: a statically planned broadcast is a job of its own, while
+        a sort-merge join of one partition runs inside its stage's job (the
+        state merge's victims semi-join included). A 100-row min/max
+        refresh runs 1 job with it and 11 without (docs/SCALE.md, "One
+        DataFrame insert path")."""
         est = self._estimate_delta_rows(cur)
         feed = (
             self._self_maintainable
@@ -328,7 +331,11 @@ class MatView:
         bound = self.state.manifest.live_rows if feed else self.base.manifest.live_rows
         if est is None or est + 2 * bound > 100_000:
             return {}
-        return {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "1"}
+        return {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        }
 
     def _estimate_delta_rows(self, cur_version: int) -> int | None:
         """Driver-side (zero-job) estimate of the CDC delta's row count

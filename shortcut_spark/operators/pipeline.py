@@ -30,6 +30,41 @@ from .text import lang_guess_expr, quality_expr
 __all__ = ["clean_corpus", "clean_corpus_report"]
 
 
+def _scored(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, text, quality, lang_guess) — quality + language are per-row
+    expressions over ONE tokenization of one scan: no self-joins, no
+    re-reads, no repeated regex splits."""
+    from .text import tokens as _tokens
+
+    pre = df.select(
+        F.col(id_col),
+        F.col(text_col),
+        _tokens(F.lower(F.col(text_col))).alias("__toks_l"),
+    )
+    return pre.select(
+        F.col(id_col),
+        F.col(text_col),
+        quality_expr(F.col(text_col), F.col("__toks_l")).alias("quality"),
+        lang_guess_expr(F.col("__toks_l")).alias("lang_guess"),
+    )
+
+
+def _cascade(
+    scored: DataFrame, id_col: str, text_col: str, min_quality: float, langs: tuple, *near
+) -> tuple[DataFrame, DataFrame]:
+    """The stages after scoring — quality and language filters, exact
+    dedup, MinHash near-dedup with ``near`` as its (shingle_n, num_hashes,
+    bands, jaccard_threshold) — as (exact-dedup survivors, near-dedup
+    survivors). The exact-dedup output is a lazy local checkpoint: it
+    feeds the near-dedup and the anti-join, and Spark reuses no exchange
+    across branches."""
+    kept = scored.filter((F.col("quality") >= min_quality) & F.col("lang_guess").isin(*langs))
+    exact = exact_dedup(kept, id_col, text_col).localCheckpoint(eager=False)
+    pairs = minhash_near_dups(exact, id_col, text_col, *near)
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return exact, exact.join(losers, id_col, "left_anti")
+
+
 def clean_corpus(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -56,30 +91,11 @@ def clean_corpus(
 
     Output: (id, lang_guess, quality) for survivors.
     """
-    # quality + language are per-row expressions over ONE tokenization of
-    # one scan — no self-joins, no re-reads, no repeated regex splits
-    from .text import tokens as _tokens
-
-    pre = df.select(
-        F.col(id_col),
-        F.col(text_col),
-        _tokens(F.lower(F.col(text_col))).alias("__toks_l"),
+    _, final = _cascade(
+        _scored(df, id_col, text_col), id_col, text_col, min_quality, langs,
+        shingle_n, num_hashes, bands, jaccard_threshold,
     )
-    kept = (
-        pre.select(
-            F.col(id_col),
-            F.col(text_col),
-            quality_expr(F.col(text_col), F.col("__toks_l")).alias("quality"),
-            lang_guess_expr(F.col("__toks_l")).alias("lang_guess"),
-        )
-        .filter((F.col("quality") >= min_quality) & F.col("lang_guess").isin(*langs))
-    )
-    kept = exact_dedup(kept, id_col, text_col).localCheckpoint(eager=False)
-    pairs = minhash_near_dups(
-        kept, id_col, text_col, shingle_n, num_hashes, bands, jaccard_threshold
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return kept.join(losers, id_col, "left_anti").select(id_col, "lang_guess", "quality")
+    return final.select(id_col, "lang_guess", "quality")
 
 
 def clean_corpus_report(
@@ -100,32 +116,19 @@ def clean_corpus_report(
     exact dedup → near dedup). A silent 90% drop at one stage is a data
     incident; this makes it one query.
 
-    Same expressions and same lazy-DAG shape as ``clean_corpus`` (the
-    scored projection is computed once and persisted); the output is five
-    (stage, n_docs) rows with a sortable stage prefix.
+    Built from ``clean_corpus``'s own stages (:func:`_scored`,
+    :func:`_cascade`). The scored projection is persisted before the
+    cascade plans over it, so the filter counts and the cascade share one
+    tokenization, and the exact-dedup checkpoint serves its count, the
+    near-dedup and the anti-join. The output is five (stage, n_docs) rows
+    with a sortable stage prefix.
     """
-    from .text import quality_expr, lang_guess_expr
-    from .text import tokens as _tokens
-
-    pre = df.select(
-        F.col(id_col),
-        F.col(text_col),
-        _tokens(F.lower(F.col(text_col))).alias("__toks_l"),
+    scored = _scored(df, id_col, text_col).persist()
+    exact, final = _cascade(
+        scored, id_col, text_col, min_quality, langs,
+        shingle_n, num_hashes, bands, jaccard_threshold,
     )
-    scored = pre.select(
-        F.col(id_col),
-        F.col(text_col),
-        quality_expr(F.col(text_col), F.col("__toks_l")).alias("quality"),
-        lang_guess_expr(F.col("__toks_l")).alias("lang_guess"),
-    ).persist()
     q_pass = scored.filter(F.col("quality") >= min_quality)
-    ql_pass = q_pass.filter(F.col("lang_guess").isin(*langs))
-    exact = exact_dedup(ql_pass, id_col, text_col)
-    pairs = minhash_near_dups(
-        exact, id_col, text_col, shingle_n, num_hashes, bands, jaccard_threshold
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    final = exact.join(losers, id_col, "left_anti")
 
     def stage(name: str, d: DataFrame) -> DataFrame:
         return d.agg(F.count(F.lit(1)).cast("long").alias("n_docs")).select(
@@ -135,7 +138,7 @@ def clean_corpus_report(
     report = (
         stage("00_total", df)
         .unionByName(stage("01_quality", q_pass))
-        .unionByName(stage("02_language", ql_pass))
+        .unionByName(stage("02_language", q_pass.filter(F.col("lang_guess").isin(*langs))))
         .unionByName(stage("03_exact_dedup", exact))
         .unionByName(stage("04_near_dedup", final))
     )

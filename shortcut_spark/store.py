@@ -598,39 +598,31 @@ class Store:
 
     # -- insert (src/lib.rs:178-187) ----------------------------------------
 
-    def insert(
-        self, rows: DataFrame | Iterable[Sequence[Any]], micro_batch: bool = False
-    ) -> int:
+    def insert(self, rows: DataFrame | Iterable[Sequence[Any]]) -> int:
         """Append a batch. Returns the number of rows inserted.
 
         Arity/schema is validated always (vs debug-only ``src/lib.rs:179``).
 
         A literal batch of at most ``DRIVER_INSERT_ROWS`` rows is written
         and indexed on the driver (:meth:`_insert_rows_driver`); its one
-        Spark job is the index key sketch. A DataFrame batch is tagged
-        with rowids in a lazy ``localCheckpoint`` whose first action is
-        the per-partition counts pass, which also takes the cluster key's
-        quantiles, then range-split by them with no sampler job
-        (:class:`_RangeSplit`; a key prefix shared by so many rows that
-        keeping it in one file would skew the files takes the sampler)
-        and written by Spark, with every
-        index's key sketch observed in the write
+        Spark job is the index key sketch. A larger one becomes a
+        DataFrame (:meth:`_literal_frame`). A DataFrame batch whose plan
+        row bound (:func:`_row_bound`, no job) fits one file lands in ONE
+        job: one exchange into one write task makes rowid = watermark +
+        ``monotonically_increasing_id`` with no counts pass, and the row
+        count comes from the written footer (which row got which rowid
+        follows the shuffle's order; the rowids are dense either way). Any
+        other DataFrame batch is tagged with rowids in a lazy
+        ``localCheckpoint`` whose first action is the per-partition counts
+        pass, which also takes the cluster key's quantiles, then
+        range-split by them with no sampler job (:class:`_RangeSplit`; a
+        key prefix shared by so many rows that keeping it in one file
+        would skew the files takes the sampler). Both are written by
+        Spark, with every index's key sketch observed in the write
         (:meth:`_observe_sketches`); the written batch is then indexed
         from a pyarrow read of its index columns with no job, up to each
         index kind's bound (:meth:`_index_files`: one posting shard,
         ``POSTING_SHARD_ROWS``, for hash, btree and composite indexes).
-
-        ``micro_batch=True`` is the caller's DRIVER-SIDE bound that the
-        batch is micro (e.g. a matview refresh whose manifest arithmetic
-        bounded the delta): the batch then lands as ONE file in ONE job —
-        ``coalesce(1)`` makes rowid = watermark + partition-local id with
-        no counts pass and no second materialization, and the row count
-        comes from the written parquet footer. Correct at any actual size
-        (a misjudged bound costs one oversized file, not wrong rowids);
-        rowid ASSIGNMENT ORDER within the batch follows the coalesced
-        partition order rather than the round-robin tag order, so callers
-        must not depend on which batch row got which rowid (dense-range
-        semantics are identical).
         """
         schema = self.manifest.schema
         if isinstance(rows, DataFrame):
@@ -663,7 +655,25 @@ class Store:
             done = self._insert_rows_driver(data, schema)
             if done is not None:
                 return done
-            df = self.spark.createDataFrame(data, schema)
+            df = self._literal_frame(data)
+
+        from .functions import _row_bound, ensure_parallelism
+
+        bound = _row_bound(df)
+        self._enforce_constraints(df)
+        watermark = self.manifest.rowid
+        if bound is not None and self._n_files(bound) == 1:
+            # in one partition monotonically_increasing_id IS the dense
+            # position; a misjudged bound costs one oversized file, not
+            # wrong rowids. The exchange keeps the upstream at its own width
+            # (a coalesce pulls it into the one task; docs/SCALE.md), and
+            # planned statically it runs in the write's job
+            with_id = df.repartition(1).select(
+                (F.lit(watermark) + F.monotonically_increasing_id()).alias(ROWID),
+                *schema.fieldNames(),
+            )
+            with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+                return self._write_batch(with_id, None, None, [])
 
         # Dense rowid assignment: per-partition counts -> cumulative offsets,
         # plus the position inside the partition. Two passes over the batch
@@ -675,12 +685,6 @@ class Store:
         # a cache-miss recompute between the two passes could renumber rows;
         # with the lineage cut, a lost partition fails the job instead of
         # silently skipping/duplicating rowids.
-        self._enforce_constraints(df)
-        watermark = self.manifest.rowid
-        if micro_batch:
-            return self._insert_tagged_micro(df, schema, watermark)
-        from .functions import ensure_parallelism
-
         tagged = (
             ensure_parallelism(df)
             .withColumn("__pid", F.spark_partition_id())
@@ -700,23 +704,13 @@ class Store:
         # scope ends right after the counts pass — the tail sizes its own
         # confs.
         # The same pass takes the cluster key's quantiles, from which the
-        # write's range split is cut with no sampler job (_RangeSplit),
-        # unless the plan's row bound puts the batch in one file.
-        from .functions import _row_bound
-
-        bound = _row_bound(df)
-        ranges = _RangeSplit(
-            df.schema, self._cluster_cols(), bound is None or self._n_files(bound) > 1
-        )
+        # write's range split is cut with no sampler job (_RangeSplit).
+        ranges = _RangeSplit(df.schema, self._cluster_cols())
         try:
             with scoped_confs(self.spark, {"spark.sql.adaptive.enabled": "false"}):
                 tagged = tagged.localCheckpoint(eager=False)
                 stats = tagged.groupBy("__pid").agg(F.count("*").alias("cnt"), *ranges.aggs)
                 stats = stats.collect()
-        except BaseException:
-            tagged.unpersist()
-            raise
-        try:
             return self._insert_tagged(tagged, schema, watermark, stats, ranges)
         finally:
             tagged.unpersist()
@@ -834,6 +828,22 @@ class Store:
         except Exception:
             return None
 
+    def _literal_frame(self, data: list[tuple]) -> DataFrame:
+        """Literal rows of one file's size (:meth:`_n_files`) as the
+        ``LocalRelation`` of their :meth:`_arrow_batch` table, whose row
+        count (:func:`_row_bound`) and size the plan holds, so the insert
+        takes the one-job single-file write. Any other batch, and one whose
+        table declines (a non-:meth:`_driver_atomic_type` column), is a
+        Python-list ``createDataFrame``, which Spark cannot size."""
+        schema = self.manifest.schema
+        if self._n_files(len(data)) == 1 and all(
+            self._driver_atomic_type(f.dataType) for f in schema.fields
+        ):
+            table = self._arrow_batch([(0, *r) for r in data])
+            if table is not None:
+                return local_relation(self.spark, [table.drop_columns(ROWID)], schema)
+        return self.spark.createDataFrame(data, schema)
+
     def _enforce_constraints_rows(self, data: list[tuple]) -> None:
         """Pure-Python twin of :meth:`_enforce_constraints` for literal
         batches: not-null and batch-internal uniqueness never leave the
@@ -899,18 +909,7 @@ class Store:
             return None
         if any(isinstance(k, float) and math.isnan(k) for k in keys):
             return None  # SQL NaN equality ≠ Python set membership
-        files = self.manifest.files
-        if len(keys) <= 1000:
-            m = self._prune_mask_multi(column, keys)
-            if m is not None:
-                files = [f for f, keep in zip(files, m) if keep]
-            else:
-                files = [
-                    f
-                    for f in files
-                    if not f.stats.get(column)
-                    or any(self._may_hold(*f.stats[column][:2], k) for k in keys)
-                ]
+        files = self._stats_candidates(column, keys) if len(keys) <= 1000 else self.manifest.files
         tables = self._driver_tables(files, [column])
         if tables is None:
             return None
@@ -920,36 +919,6 @@ class Store:
                 if v is not None and v in keyset:
                     return v
         return False
-
-    def _insert_tagged_micro(
-        self, df: DataFrame, schema: T.StructType, watermark: int
-    ) -> int:
-        """One-job append for caller-bounded micro batches: ``coalesce(1)``
-        puts every row in partition 0, where ``monotonically_increasing_id``
-        IS the dense 0-based position — so rowids need no counts pass, and
-        the committed row count reads from the written file's parquet
-        footer (``_parquet_rows``), not a count job. Layout matches
-        ``_cluster_batch``'s single-file branch (in-file sort by the
-        leading index columns)."""
-        with_id = df.coalesce(1).select(
-            (F.lit(watermark) + F.monotonically_increasing_id()).alias(ROWID),
-            *schema.fieldNames(),
-        )
-        sort_cols = self._cluster_cols()
-        if sort_cols:
-            with_id = with_id.sortWithinPartitions(*sort_cols)
-        batch_rel = os.path.join(
-            "data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-        )
-        out, obs = self._observe_sketches(with_id)
-        out.write.parquet(self._abs(batch_rel))
-        n = self._parquet_rows(batch_rel)
-        if not n:
-            import shutil
-
-            shutil.rmtree(self._abs(batch_rel), ignore_errors=True)
-            return 0
-        return self._append_batch(batch_rel, n, sketch=obs)
 
     # batches at or below this many rows compile their write + posting
     # build STATICALLY (AQE off, shuffle partitions derived from the
@@ -1000,12 +969,28 @@ class Store:
         with_id = tagged.select(
             (F.lit(watermark) + off + local).alias(ROWID), *schema.fieldNames()
         )
-        batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with scoped_confs(self.spark, confs):
-            out = self._cluster_batch(with_id, n, ranges, stats)
-            out, obs = self._observe_sketches(out)
-            out.write.parquet(self._abs(batch_rel))
-            return self._append_batch(batch_rel, n, sketch=obs)
+            return self._write_batch(with_id, n, ranges, stats)
+
+    def _write_batch(
+        self, with_id: DataFrame, n: int | None, ranges: _RangeSplit | None, rows: Sequence
+    ) -> int:
+        """Lay out (:meth:`_cluster_batch`), write with every index's key
+        sketch observed, and commit ``n`` rowid-tagged rows — the tail of
+        both DataFrame insert paths. ``n`` None (a one-file batch) is read
+        from the written footer; a batch that wrote no row commits nothing."""
+        batch_rel = os.path.join("data", f"b{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+        out = self._cluster_batch(with_id, 1 if n is None else n, ranges, rows)
+        out, obs = self._observe_sketches(out)
+        out.write.parquet(self._abs(batch_rel))
+        if n is None:
+            n = self._parquet_rows(batch_rel)
+            if not n:
+                import shutil
+
+                shutil.rmtree(self._abs(batch_rel), ignore_errors=True)
+                return 0
+        return self._append_batch(batch_rel, n, sketch=obs)
 
     def _n_files(self, n: int) -> int:
         """The file count of an ``n``-row batch. File sizing caps rows per
@@ -1017,20 +1002,21 @@ class Store:
         return max(1, -(-n // self.ROWS_PER_FILE), min(cores, -(-n // 50_000)))
 
     def _cluster_batch(
-        self, with_id: DataFrame, n: int, ranges: _RangeSplit, rows: Sequence
+        self, with_id: DataFrame, n: int, ranges: _RangeSplit | None, rows: Sequence
     ) -> DataFrame:
-        """Partition a rowid-tagged batch for writing: size files
-        (:meth:`_n_files`), and honor any index's clustering (shared by
-        ``insert`` and ``apply_changes``), range-splitting by ``ranges``
-        from the caller's collected aggregate ``rows``.
+        """Partition a rowid-tagged batch of ``n`` rows for writing: size
+        files (:meth:`_n_files`), and honor any index's clustering (shared
+        by ``insert`` and ``apply_changes``), range-splitting a batch of
+        several files by ``ranges`` from the caller's collected aggregate
+        ``rows`` (a one-file batch needs neither).
         """
         n_files = self._n_files(n)
         cols = self._cluster_cols()
         if n_files == 1:
-            # single-file micro-batch: a coalesce(1) + in-file sort gives
-            # the layout of a one-way range split (per-file min/max stats,
+            # single-file batch: a coalesce(1) + in-file sort gives the
+            # layout of a one-way range split (per-file min/max stats,
             # sorted row groups, every key in exactly one file) with no
-            # shuffle. This is the streaming micro-batch commit-floor path.
+            # shuffle.
             out = with_id.coalesce(1)
             return out.sortWithinPartitions(*cols) if cols else out
         if cols:
@@ -1067,7 +1053,8 @@ class Store:
     ) -> int:
         """Commit the ``n`` freshly-written rows under ``batch_rel`` (held
         on the driver as ``tables``, when the driver wrote them) as the
-        next rowids — the shared tail of the three insert paths."""
+        next rowids — the shared tail of the driver and the Spark insert
+        paths."""
         with self._txn():
             self._register_and_index(batch_rel, tables, sketch)
             self.manifest.rowid += n
@@ -1189,7 +1176,6 @@ class Store:
         rows: DataFrame | Iterable[Sequence[Any]],
         on: int | str,
         extra_victim_keys: DataFrame | None = None,
-        micro_batch: bool = False,
     ) -> tuple[int, int]:
         """Atomic upsert by key (EXTENSION — the reference is
         add/remove-only, ``src/lib.rs:25-26``): delete every existing row
@@ -1218,7 +1204,9 @@ class Store:
         store, such as a view's state): the victims are picked in Python
         with Spark's join equality (:func:`_spark_key`: ``-0.0`` matches
         ``0.0``, NaN matches NaN, NULL matches nothing) and the tombstone
-        is written with pyarrow.
+        is written with pyarrow. Any other literal batch merges as a
+        DataFrame (:meth:`_literal_frame`), whose plan row bound lets its
+        insert take the one-job single-file write when it fits one file.
 
         ``extra_victim_keys`` (r11): an additional single-column
         DataFrame of ``on``-keys to DELETE in the same commit (rows
@@ -1239,7 +1227,7 @@ class Store:
             if extra_victim_keys is None:
                 tables = self._driver_tables(self.manifest.files, [ROWID, name])
             if tables is None:
-                rows = self.spark.createDataFrame(rows, self.manifest.schema)
+                rows = self._literal_frame(rows)
         n_staged = 0
         victims_rel = os.path.join("tomb", f"m{self.manifest.version + 1}-{uuid.uuid4().hex[:8]}")
         with self._txn():
@@ -1271,19 +1259,12 @@ class Store:
                     .select(ROWID)
                 )
                 if self.manifest.live_rows <= self.DRIVER_INSERT_ROWS:
-                    # micro-store merge (matview state, streaming dimension
-                    # upserts): victims ≤ live_rows ≤ the driver bound,
-                    # so the tombstone takes the single-file micro-batch
-                    # layout — one write task, one file, no 32-way fan-out
-                    # of a handful of rowids (r12, the _cluster_batch n=1
-                    # precedent applied to the merge's staging write)
+                    # a small store's victims fit one tombstone file: one
+                    # write task, no fan-out of a handful of rowids
                     victims = victims.coalesce(1)
                 victims.write.parquet(self._abs(victims_rel))
-                # staged-row count from the freshly-written parquet footers
-                # (metadata-only, like _register_files) — the read-back
-                # .count() this replaces cost one Spark job per merge, which
-                # dominates micro-batch upserts (matview refresh, streaming
-                # merge_on ingestion)
+                # staged-row count from the written footers (metadata
+                # only, like _register_files): no count job per merge
                 n_staged = self._parquet_rows(victims_rel)
                 if not n_staged:
                     import shutil
@@ -1300,7 +1281,7 @@ class Store:
                 # CDC window crossing it take the snapshot-diff fallback
                 self.manifest.pending_cdf = None
                 self._staged = True
-            inserted = self.insert(rows, micro_batch=micro_batch)
+            inserted = self.insert(rows)
         return (inserted, n_staged)
 
     @contextlib.contextmanager
@@ -2425,6 +2406,21 @@ class Store:
             return None
         return np.ones(len(has), dtype=bool)  # op this layer can't prune on
 
+    def _stats_candidates(self, name: str, keys: Sequence[Any]) -> list[DataFile]:
+        """The stats layer of a multi-key probe: the files of
+        ``manifest.files`` whose ``name`` footer range may hold one of
+        ``keys`` — vectorized (:meth:`_prune_mask_multi`), with the same
+        per-file fallback as :meth:`_prune_mask`."""
+        files = self.manifest.files
+        m = self._prune_mask_multi(name, keys)
+        if m is not None:
+            return [f for f, keep in zip(files, m) if keep]
+        return [
+            f
+            for f in files
+            if not f.stats.get(name) or any(self._may_hold(*f.stats[name][:2], k) for k in keys)
+        ]
+
     def _prune_mask_multi(self, name: str, keys: Sequence[Any]):
         """Vectorized multi-key may-match mask over ``manifest.files`` —
         the batched form of `_prune_mask` for find_many: one
@@ -2837,19 +2833,7 @@ class Store:
         ):
             files = self._bloom_prune(spec, files, keys)
         elif len(keys) <= 1000:
-            # stats layer: a file can match only if some key is in range.
-            # Vectorized (files × keys broadcast over the cached stat
-            # arrays) with the same per-file fallback as _prune_mask.
-            m = self._prune_mask_multi(name, keys)
-            if m is not None:
-                files = [f for f, keep in zip(files, m) if keep]
-            else:
-                files = [
-                    f
-                    for f in files
-                    if not f.stats.get(name)
-                    or any(self._may_hold(*f.stats[name][:2], k) for k in keys)
-                ]
+            files = self._stats_candidates(name, keys)
         if not files:
             return self._empty()
         df = self._read_lookup(files).drop(ROWID)

@@ -326,6 +326,46 @@ def test_refresh_keeps_callers_job_group(spark, store_path):
     _assert_matches_recompute(mv)
 
 
+def test_bounded_minmax_refresh_job_pin(spark, store_path):
+    """A min/max view's refresh whose inputs are bounded small
+    (``_static_confs``) collects its state rows and merges them as a
+    literal batch, planned with no broadcast: 1 job while the state is
+    driver-readable (the collect; the merge is a driver merge) and at most
+    3 above the driver bound (the merge of a ``LocalRelation``: its
+    victims write and the one-job single-file insert). The
+    view rows equal those of the unbounded path, which merges a
+    checkpointed DataFrame, after every window of a 100-row insert and a
+    copy-on-write delete."""
+    st = Store.create(
+        spark, os.path.join(str(store_path), "b"), T.StructType.fromDDL("k string, v long")
+    )
+    st.insert([(f"g{i % 5}", i) for i in range(2_000)])
+    views = {}
+    for venue in ("driver", "above", "unbounded"):
+        mv = MatView.create(
+            spark,
+            os.path.join(str(store_path), venue),
+            st,
+            ["k"],
+            [("n", "count", None), ("mx", "max", "v")],
+        )
+        if venue == "above":
+            mv.state.DRIVER_INSERT_ROWS = 0
+        if venue == "unbounded":
+            mv._static_confs = lambda cur: {}
+        views[venue] = mv
+    for w in range(2):
+        st.insert([(f"g{i % 7}", 10_000 * (w + 1) + i) for i in range(100)])
+        st.delete([eq("v", 17 + w)])
+        for mv in views.values():
+            mv.refresh()
+        assert views["driver"].last_refresh_jobs == 1, w
+        assert views["above"].last_refresh_jobs <= 3, w
+        reads = {venue: sorted(map(tuple, mv.read().collect())) for venue, mv in views.items()}
+        assert reads["driver"] == reads["above"] == reads["unbounded"], w
+        _assert_matches_recompute(views["driver"])
+
+
 def test_refresh_aqe_bypass_restores_conf_and_estimates(spark, store_path):
     """The small-delta static-compile path (r9): the delta estimate is
     driver-side manifest arithmetic (appends = rowid advance, deletes =

@@ -2031,11 +2031,14 @@ def test_merge_rollback_on_rejected_insert(spark, store_path):
     assert {r["v"] for r in st.find([eq("k", 2)]).collect()} == {"b2"}
 
 
-@pytest.mark.parametrize("micro_batch", [False, True])
-def test_empty_batch_merge_commits_its_victims(spark, store_path, micro_batch):
+@pytest.mark.parametrize("bounded", [False, True])
+def test_empty_batch_merge_commits_its_victims(spark, store_path, bounded):
     """A merge whose batch is empty still deletes its ``extra_victim_keys``
     in one commit (a vector-index refresh whose inserts net out against
-    its deletes takes this path), on both insert shapes."""
+    its deletes takes this path), on both insert shapes: an unbounded
+    batch takes the tagged path, and a batch whose plan row bound fits
+    one file the single-file write, which writes no row."""
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2045,8 +2048,13 @@ def test_empty_batch_merge_commits_its_victims(spark, store_path, micro_batch):
     st.insert([(1, "a"), (2, "b"), (3, "c")])
     v = st.manifest.version
     dels = spark.createDataFrame([(2,)], "k long")
-    empty = spark.createDataFrame([], schema)
-    got = st.merge(empty, on="k", extra_victim_keys=dels, micro_batch=micro_batch)
+    if bounded:
+        empty = spark.range(5).filter("id > 10").select(
+            F.col("id").alias("k"), F.lit("x").alias("v")
+        )
+    else:
+        empty = spark.createDataFrame([], schema)
+    got = st.merge(empty, on="k", extra_victim_keys=dels)
     assert got == (0, 1)
     assert st.manifest.version == v + 1
     reopened = Store.open(spark, store_path)
@@ -2189,7 +2197,7 @@ _TXN_SITES = [
     ("insert_df", "_commit", _on(lambda st: st.insert(_df(st, [("k20", "20")]))), False),
     (
         "insert_micro", "_commit",
-        _on(lambda st: st.insert(_df(st, [("k20", "20")]), micro_batch=True)), False,
+        _on(lambda st: st.insert(st._literal_frame([("k20", "20")]))), False,
     ),
     ("merge", "_commit", _on(lambda st: st.merge([("k5", "x"), ("k20", "20")], on=0)), True),
     (
@@ -2546,30 +2554,41 @@ def test_cdf_vacuum_retention(spark, tmp_path):
     assert len(kept) <= 1
 
 
-@pytest.mark.slow
-def test_insert_micro_batch_dense_rowids_single_file(spark, tmp_path):
-    """micro_batch=True lands a DataFrame batch as ONE data file with the
-    same dense-rowid contract as the two-pass path: rowids are exactly
-    watermark..watermark+n-1, the count is right, content matches, and a
-    later normal insert continues the sequence with no gaps."""
-    st = make(spark, str(tmp_path / "micro"), ABC)
+def test_plan_bounded_insert_is_one_file_in_one_job(spark, tmp_path):
+    """A DataFrame batch whose plan row bound fits one file lands as ONE
+    data file in ONE job, with the dense-rowid contract of the tagged
+    path: rowids are exactly watermark..watermark+n-1, the count is
+    right, content matches, and a later insert continues the sequence
+    with no gaps. A small batch with no plan row bound (a Python-list
+    ``createDataFrame``) still takes the tagged path's two jobs, and a
+    literal batch above the driver bound takes the one-file write."""
+    st = make(spark, str(tmp_path / "one"), ABC)
+    schema = st.manifest.schema
     wm = st.manifest.rowid
     nfiles = len(st.manifest.files)
-    batch = spark.createDataFrame([("m1", "m2"), ("n1", "n2")], st.manifest.schema)
-    assert st.insert(batch, micro_batch=True) == 2
+    names = st.colnames
+    batch = spark.createDataFrame(
+        pa.table({names[0]: ["m1", "n1"], names[1]: ["m2", "n2"]}), schema=schema
+    )
+    got, jobs = _jobs(spark, lambda: st.insert(batch))
+    assert (got, jobs) == (2, 1)
     assert len(st.manifest.files) == nfiles + 1  # one file, one commit
-    got = {
-        (r["__rowid"], r[st.colnames[0]])
-        for r in st.find([], with_rowid=True).collect()
-        if r[st.colnames[0]] in ("m1", "n1")
+    rowids = {
+        r[ROWID] for r in st.find([], with_rowid=True).collect() if r[names[0]] in ("m1", "n1")
     }
-    assert {r for r, _ in got} == {wm, wm + 1}  # dense, from the watermark
+    assert rowids == {wm, wm + 1}  # dense, from the watermark
     assert st.manifest.rowid == wm + 2
-    # the normal path continues the same sequence (no gap, no reuse)
-    st.insert(spark.createDataFrame([("o1", "o2")], st.manifest.schema))
+    # the tagged path continues the same sequence (no gap, no reuse)
+    got, jobs = _jobs(spark, lambda: st.insert(spark.createDataFrame([("o1", "o2")], schema)))
+    assert (got, jobs) == (1, 2)
     assert st.manifest.rowid == wm + 3
+    # a literal batch above the driver bound reaches Spark as a sized
+    # LocalRelation, so it takes the one-file write too
+    st.DRIVER_INSERT_ROWS = 0
+    got, jobs = _jobs(spark, lambda: st.insert([("p1", "p2")]))
+    assert (got, jobs, len(st.manifest.files)) == (1, 1, nfiles + 3)
     assert rows_of(st.find([])) == sorted(
-        map(tuple, ABC + [["m1", "m2"], ["n1", "n2"], ["o1", "o2"]])
+        map(tuple, ABC + [["m1", "m2"], ["n1", "n2"], ["o1", "o2"], ["p1", "p2"]])
     )
 
 
@@ -2591,20 +2610,48 @@ def test_changes_cdf_plan_prunes_empty_branches(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_merge_micro_batch_equivalent_to_default(spark, tmp_path):
-    """merge(..., micro_batch=True) — the matview refresh path — returns
-    the same counts and converges to the same table as the default merge,
-    in one commit, with indexes maintained."""
+def test_literal_merge_over_the_driver_bound_equals_the_driver_merge(spark, tmp_path):
+    """A literal merge above the driver bound (the statically gated view
+    refresh of a state the driver may not read) merges an Arrow-built
+    ``LocalRelation``, whose insert is the single-file write: it returns
+    the driver merge's counts and converges to the same table, in one
+    commit, with one new data file and indexes maintained."""
     a = make(spark, str(tmp_path / "md"), AXB, index_col=0)
     b = make(spark, str(tmp_path / "mm"), AXB, index_col=0)
+    b.DRIVER_INSERT_ROWS = 0
     batch = [["a", "A_NEW"], ["c", "C1"]]
-    ref = a.merge(spark.createDataFrame(batch, a.manifest.schema), on=0)
-    v0 = b.manifest.version
-    got = b.merge(spark.createDataFrame(batch, b.manifest.schema), on=0, micro_batch=True)
-    assert got == ref
+    ref = a.merge(batch, on=0)
+    v0, nfiles = b.manifest.version, len(b.manifest.files)
+    assert b.merge(batch, on=0) == ref
     assert b.manifest.version == v0 + 1  # single atomic commit
+    assert len(b.manifest.files) == nfiles + 1
     assert rows_of(b.find([])) == rows_of(a.find([]))
     assert rows_of(b.find([eq(0, "a")])) == [("a", "A_NEW")]  # postings see the batch
+
+
+def test_literal_merge_into_a_store_over_the_driver_bound_equals_the_driver_merge(
+    spark, tmp_path
+):
+    """A literal merge of 1,500 keys into a store the driver may not read
+    probes its victims with a semi-join against the batch's
+    ``LocalRelation``: it returns the driver merge's counts and leaves its
+    rows, for a long and a string key, with keys that replace live rows,
+    keys that are new and a NULL key, which matches nothing."""
+    from pyspark.sql import types as T
+
+    for ddl, key in (("k long, v string", int), ("k string, v string", str)):
+        stores = []
+        for name in ("driver", "spark"):
+            path = str(tmp_path / f"{name}-{key.__name__}")
+            st = Store.create(spark, path, T.StructType.fromDDL(ddl))
+            st.insert([(key(i), f"old{i}") for i in range(2_000)])
+            stores.append(st)
+        a, b = stores
+        b.DRIVER_INSERT_ROWS = 0
+        batch = [(key(2 * i), f"new{i}") for i in range(1_500)] + [(None, "null")]
+        want = (1_501, 1_000)
+        assert b.merge(batch, on="k") == a.merge(batch, on="k") == want
+        assert sorted(map(repr, b.find([]).collect())) == sorted(map(repr, a.find([]).collect()))
 
 
 def test_bulk_insert_arithmetic_rowids_are_dense(spark, tmp_path):
@@ -2685,7 +2732,7 @@ def test_literal_merge_into_small_unindexed_store_takes_no_job(spark, tmp_path):
     no job: victims picked in Python with Spark's join equality — a NULL
     key matches nothing, -0.0 matches 0.0 and NaN matches NaN — a pyarrow
     tombstone and the driver insert. It leaves the rows its Spark twin
-    (driver bound 0) leaves."""
+    (driver bound 0) leaves, a batch whose only key is NULL included."""
     from pyspark.sql import types as T
 
     nan = float("nan")
@@ -2701,9 +2748,10 @@ def test_literal_merge_into_small_unindexed_store_takes_no_job(spark, tmp_path):
         got2, jobs2 = _jobs(spark, lambda: st.merge([("x", -0.0, 20), ("y", nan, 21)], on="d"))
         assert got2 == (2, 2)
         assert (jobs + jobs2 == 0) == (bound is None), (bound, jobs, jobs2)
+        assert st.merge([(None, 7.0, 12)], on="k") == (1, 0)  # no key to match
         out.append(sorted(repr(r) for r in st.find([]).collect()))
     assert out[0] == out[1]
-    assert len(out[0]) == 5
+    assert len(out[0]) == 6
 
 
 def _two_index_store(spark, path, batches=6, per_batch=50):
@@ -2794,8 +2842,9 @@ def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
     composite, bloom): the range split needs no sampler job, the write
     observes every index's key sketch, and the postings and bitsets are
     built on the driver from a pyarrow read of the written index columns.
-    A ``micro_batch`` insert and ``compact`` run as many jobs as on the
-    unindexed store. Each ndv
+    A 100-row ``spark.range`` insert, whose plan row bound fits one file,
+    runs one job, and ``compact`` as many jobs as on the unindexed store.
+    Each ndv
     is within HLL error of the exact distinct count: a fresh index's
     sketch is the union of the write tasks' sketches, whose estimator
     differs from a one-task sketch's."""
@@ -2826,10 +2875,10 @@ def test_spark_writes_take_no_index_job_with_any_index_set(spark, tmp_path):
             st.index(column, kind)
         got, jobs = _jobs(spark, lambda: st.insert(frame(0, 30_000, 4)))
         assert got == 30_000 and jobs == 2, (indexes, jobs)
-        got, micro = _jobs(spark, lambda: st.insert(frame(30_000, 30_100, 1), micro_batch=True))
-        assert got == 100
+        got, jobs = _jobs(spark, lambda: st.insert(frame(30_000, 30_100, 1)))
+        assert got == 100 and jobs == 1, (indexes, jobs)
         _, compact = _jobs(spark, lambda: st.compact(target_files=2))
-        floors.append((micro, compact))
+        floors.append(compact)
         for spec in st.manifest.indices.values():
             exact = st.find([]).select(*spec.member_columns).distinct().count()
             assert spec.parts and abs(spec.ndv - exact) <= exact / 20, (spec.column, exact)
@@ -3039,11 +3088,13 @@ def test_split_bounds_keeps_each_proxy_value_in_one_partition():
 def test_range_split_takes_no_quantiles_for_a_batch_its_row_bound_puts_in_one_file(
     spark, tmp_path, monkeypatch
 ):
-    """An insert whose plan bounds its rows (``_row_bound``) to one file
-    takes no quantiles in its counts pass, so its aggregate keeps the
-    plain generated count; a bounded multi-file batch and an unbounded
-    source (a parquet read, which may hold any number of rows) take
-    them."""
+    """A write whose plan bounds its rows (``_row_bound``) to one file
+    takes no quantiles: an insert takes the one-job single-file write,
+    with no counts pass and no split, and a distributed ``apply_changes``
+    of a loaded cache keeps the plain generated count in its stats
+    aggregate. A bounded
+    multi-file batch and an unbounded source (a parquet read, which may
+    hold any number of rows) take them."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -3064,11 +3115,19 @@ def test_range_split_takes_no_quantiles_for_a_batch_its_row_bound_puts_in_one_fi
     def frame(n):
         return spark.range(0, n, numPartitions=4).select((F.rand(3) * 10).alias("v"), "id")
 
-    assert st.insert(frame(1_000)) == 1_000
+    assert _jobs(spark, lambda: st.insert(frame(1_000))) == (1_000, 1)
     assert st.insert(frame(30_000)) == 30_000
     frame(1_000).write.parquet(str(tmp_path / "src"))
     assert st.insert(spark.read.parquet(str(tmp_path / "src"))) == 1_000
-    assert taken == [False, True, True], taken
+    st.DRIVER_INSERT_ROWS = 0
+    wm = st.manifest.rowid
+    delta = spark.range(wm, wm + 1_000).select(
+        F.lit("insert").alias("change_type"), F.col("id").alias(ROWID), F.lit(1.0).alias("v"), "id"
+    )
+    delta.cache().count()  # a loaded cache holds its row count
+    assert st.apply_changes(delta) == (1_000, 0)
+    delta.unpersist()
+    assert taken == [True, True, False], taken
 
 
 def test_range_split_gives_a_300_file_batch_its_file_count(spark, tmp_path):
@@ -3126,9 +3185,9 @@ def test_range_split_keeps_its_files_under_aqe(spark, tmp_path):
 def test_range_split_pins_for_sharded_postings_cdc_apply_and_compact(spark, tmp_path):
     """No range sampler on the other Store write paths. A posting build
     above one shard takes its quantiles in its stats aggregate: a 300-row
-    DataFrame insert at 50 posting rows a shard runs 4 jobs (counts,
-    write, the posting aggregate and the posting write) into 7 key-disjoint
-    shards. A distributed ``apply_changes`` of 12,000 rows at 3,000 rows a
+    DataFrame insert at 50 posting rows a shard runs 3 jobs (the one-file
+    write its plan row bound picks, the posting aggregate and the posting
+    write) into 7 key-disjoint shards. A distributed ``apply_changes`` of 12,000 rows at 3,000 rows a
     file takes its quantiles in its stats aggregate and writes 4
     key-disjoint files in 6 jobs under the session's AQE, where every
     exchange is a job of its own (7 with the range sampler). ``compact``
@@ -3145,7 +3204,7 @@ def test_range_split_pins_for_sharded_postings_cdc_apply_and_compact(spark, tmp_
         (F.col("id") * 7 % 1009).alias("k"), (F.col("id") / 3).alias("v")
     )
     n, jobs = _jobs(spark, lambda: st.insert(src))
-    assert n == 300 and jobs == 4, jobs
+    assert n == 300 and jobs == 3, jobs
     spec = st.manifest.indices["k"]
     shards = []
     for name in sorted(os.listdir(st._abs(spec.parts[-1]))):
