@@ -91,10 +91,12 @@ def _partition_count(df) -> int | None:
 
 
 # unary plan nodes that never emit more rows than their child: the row
-# bound passes through them (an Aggregate over zero rows still emits one)
+# bound passes through them (an Aggregate over zero rows still emits one;
+# a Python or pandas UDF's eval node emits one row per input row)
 _ROW_KEEPING = frozenset(
     ("Project", "Filter", "Sort", "Repartition", "RepartitionByExpression", "Sample",
-     "GlobalLimit", "LocalLimit", "Deduplicate", "Window", "Aggregate")
+     "GlobalLimit", "LocalLimit", "Deduplicate", "Window", "Aggregate",
+     "BatchEvalPython", "ArrowEvalPython")
 )
 
 

@@ -246,8 +246,8 @@ class BloomIndex:
     residual contract as every other path (``src/lib.rs:89-91``).
 
     100 TB trade-off vs the hash (posting) index: posting state grows with
-    ndv × files and needs a Spark job (or a driver map bounded by
-    POSTING_MAP_MAX) to probe; bloom state is ``m_bits/8`` bytes per file
+    ndv × files and is probed by a pushed-down read of its sorted parts;
+    bloom state is ``m_bits/8`` bytes per file
     regardless of ndv, probes in microseconds, but prunes probabilistically
     (false-positive files survive to the scan) and serves only equality.
     Size ``m_bits`` at ~10 bits per expected distinct key per file for

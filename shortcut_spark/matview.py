@@ -118,6 +118,8 @@ class MatView:
         #: observability: Spark jobs the last refresh ran (job-group count)
         self.last_refresh_jobs = 0
         self._self_maintainable = all(_KINDS[k][1] for _, k, _ in self.aggs)
+        # built once: each build is a chain of py4j calls
+        self._gk = _gk_expr(self.keys)
 
     # -- construction -------------------------------------------------
 
@@ -237,7 +239,7 @@ class MatView:
         """Attach __gk and project to the exact state schema (order AND
         types — Spark widens SUM(DECIMAL(27,6)) to (37,6), so every
         column is cast back to its declared state type)."""
-        with_gk = agged.withColumn(_GK, _gk_expr(self.keys))
+        with_gk = agged.withColumn(_GK, self._gk)
         return with_gk.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in self.state.schema.fields]
         )
@@ -380,7 +382,7 @@ class MatView:
         d = (
             delta.groupBy(*self.keys)
             .agg(*exprs)
-            .withColumn(_GK, _gk_expr(self.keys))
+            .withColumn(_GK, self._gk)
         )
         old = (
             self.state.find([])
@@ -499,7 +501,7 @@ class MatView:
             gks = [
                 r[0]
                 for r in local_relation(self.spark, [keys], kschema)
-                .select(_gk_expr(self.keys))
+                .select(self._gk)
                 .collect()
             ]
             want = pa.array(gks, pa.string())
@@ -525,18 +527,18 @@ class MatView:
         Groups that vanished entirely come back as __n = 0 rows so the
         merge tombstones them in the same commit."""
         touched = (
-            delta.withColumn(_GK, _gk_expr(self.keys))
+            delta.withColumn(_GK, self._gk)
             .select(_GK, *self.keys)
             .distinct()
         )
         base_rows = (
             self.base.find([])
-            .withColumn(_GK, _gk_expr(self.keys))
+            .withColumn(_GK, self._gk)
             .join(touched.select(_GK), _GK, "left_semi")
         )
         recomputed = self._full_agg(base_rows.drop(_GK))
         vanished = touched.join(
-            recomputed.withColumn(_GK, _gk_expr(self.keys)).select(_GK),
+            recomputed.withColumn(_GK, self._gk).select(_GK),
             _GK,
             "left_anti",
         ).select(*self.keys)

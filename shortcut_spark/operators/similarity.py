@@ -370,69 +370,6 @@ def lsh_topk(
     return topk_cosine(cand, query, k, id_col, vec_col)
 
 
-def _numpy_pair_prefilter(
-    emb: DataFrame, pairs: DataFrame, cut: float, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-batched numpy PREFILTER for candidate id pairs — the r11
-    gemm-verify lesson generalized to every blocked pair tier: Catalyst
-    evaluates ``aggregate(zip_with(...))`` INTERPRETED, outside
-    whole-stage codegen, so the per-candidate dot dominates large
-    candidate sets, while the same dots are one vectorized einsum per
-    Arrow batch in numpy. Narrows ``pairs`` to those with numpy cosine ≥
-    ``cut`` (the caller picks a guard band below its true threshold and
-    re-scores survivors with its CANONICAL expression, so numpy's
-    summation order never decides a boundary pair or leaks a value into
-    the output). Drop rule is conservative — a pair is dropped ONLY when
-    its numpy cosine is a FINITE number below the cut: NULL vectors and
-    length-mismatched vectors (zip_with null-pads → NULL sum) score NULL
-    canonically and fail every threshold, so they drop here too; NaN
-    cosines are KEPT (Spark orders NaN above every number, so the
-    canonical filter would keep them) and zero-norm inf/NaN artifacts
-    are kept and left to the canonical try_divide to drop. Output keeps
-    the ORIGINAL id dtypes — string-id corpora ride through untouched."""
-    import pandas as pd
-    from pyspark.sql import types as _T
-
-    lv = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__pva"))
-    rv = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__pvb"))
-    joined = pairs.join(lv, "id_a").join(rv, "id_b")
-    out_schema = _T.StructType([joined.schema["id_a"], joined.schema["id_b"]])
-
-    def flt(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf[pdf["__pva"].notna() & pdf["__pvb"].notna()]
-            if not len(pdf):
-                continue
-            la = pdf["__pva"].map(len).to_numpy()
-            lb = pdf["__pvb"].map(len).to_numpy()
-            same = la == lb
-            sub = pdf[same]
-            sl = la[same]
-            keep_parts = []
-            for d in np.unique(sl):
-                blk = sub[sl == d]
-                A = np.stack(blk["__pva"].to_numpy()).astype(np.float64, copy=False)
-                B = np.stack(blk["__pvb"].to_numpy()).astype(np.float64, copy=False)
-                dots = np.einsum("ij,ij->i", A, B)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dots / (
-                        np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-                    )
-                # drop ONLY finite-below-cut: NaN/inf (NaN inputs, zero
-                # norms) stay for the canonical scorer to adjudicate
-                m = ~(cos < cut)
-                if m.any():
-                    keep_parts.append(blk.loc[m, ["id_a", "id_b"]])
-            if keep_parts:
-                yield pd.concat(keep_parts, ignore_index=True)
-
-    return joined.mapInPandas(flt, out_schema)
-
-
 def _banded_gemm_pairs(
     ba: DataFrame,
     bb: DataFrame,
@@ -453,10 +390,10 @@ def _banded_gemm_pairs(
     1024-row strips (hot buckets degrade to slow, not OOM); only
     ``~(score < cut)`` survivors leave the worker, so the pair DISTINCT
     that dominated the id-pair plan shuffles a few thousand rows, not
-    millions. Same conservative drop rule as
-    :func:`_numpy_pair_prefilter`: only finite-below-cut scores drop
-    (NULL vectors and cross-dim pairs score NULL canonically; NaN stays
-    for the canonical scorer, which Spark orders above every number).
+    millions. The drop rule is conservative: only finite-below-cut
+    scores drop (NULL vectors and cross-dim pairs score NULL canonically;
+    NaN stays for the canonical scorer, which Spark orders above every
+    number), so the canonical scorer still decides every boundary pair.
     Output: distinct (id_a, id_b) with id_a < id_b on the ORIGINAL id
     dtype (string ids ride through)."""
     import pandas as pd
@@ -592,9 +529,9 @@ def cosine_join(
     embeddings.
 
     ``prefilter`` (r12 — the gemm-verify lesson generalized): the
-    default ``"numpy"`` narrows the candidate set with an Arrow-batched
-    einsum at threshold − ε before the canonical scorer runs
-    (:func:`_numpy_pair_prefilter`); the canonical expression still
+    default ``"numpy"`` generates candidates with a per-bucket numpy
+    matrix product at threshold − ε, keeping only pairs that reach it
+    (:func:`_banded_gemm_pairs`); the canonical expression still
     decides every boundary pair and produces every output value, so the
     row set is byte-identical to ``prefilter="none"`` (pinned in
     pytest). ``"none"`` keeps the pure-JVM expression path (no Python
@@ -654,25 +591,11 @@ def _score_pairs(
     id_col: str,
     vec_col: str,
     exact_score: bool,
-    numpy_prefilter: bool = False,
 ) -> DataFrame:
     """Verify candidate id pairs: re-attach vectors, score, keep cosine ≥
     threshold. Shared epilogue of every blocked pair generator
     (``cosine_join`` LSH tier, ``cosine_join_ivf`` centroid tier, the
-    exact all-pairs oracle tier).
-
-    ``numpy_prefilter`` narrows the pair set with the Arrow-batched
-    einsum (:func:`_numpy_pair_prefilter`) before any canonical work:
-    the guard band sits BELOW every downstream cut (2e-6 under the
-    exact funnel's 1e-6 rough cut, 1e-9 under the plain-double
-    threshold; numpy-vs-fold summation differs ~1e-13), so the
-    surviving superset feeds the UNCHANGED canonical pipeline and the
-    output rows are byte-identical with or without it."""
-    if numpy_prefilter:
-        guard = 2e-6 if exact_score else 1e-9
-        pairs = _numpy_pair_prefilter(
-            emb, pairs, threshold - guard, id_col, vec_col
-        )
+    exact all-pairs oracle tier)."""
     left = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     right = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     if exact_score:

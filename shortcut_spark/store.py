@@ -302,11 +302,6 @@ class Store:
         self.spark = spark
         self.path = os.path.abspath(path)
         self.manifest = manifest
-        # driver-side posting maps (column, version) -> {key: {file_id}} —
-        # the distributed analogue of the reference's in-memory
-        # HashMap<K, Vec<rowid>> lookup (src/idx.rs:41-46), built only for
-        # small indexes (POSTING_MAP_MAX entries); big ones stay on disk
-        self._posting_maps: dict[tuple, dict] = {}
         # (column, version) -> {file_id: bitset bytes, or None when the
         # file has none} for BLOOM indices, filled per probed candidate
         # (m_bits/8 bytes per file), so an absent bitset is not re-fetched
@@ -321,6 +316,8 @@ class Store:
         self._txn_open = False
         self._staged = False
 
+    # read by nothing in the library since every key probe became a pushed-
+    # down posting read; perfbench's store sizes still report it
     POSTING_MAP_MAX = 2_000_000
 
     # -- lifecycle ----------------------------------------------------------
@@ -896,21 +893,18 @@ class Store:
 
     def _existing_key_driver(self, column: str, keys: list):
         """Zero-job membership probe: prune candidate files by footer
-        stats (driver metadata), then read only those files' live key
-        column (:meth:`_driver_tables`) and test membership. Returns a
-        colliding key, False for no collision, or None when ineligible
-        (big candidate set / coercion-unsafe types) — the caller then
-        uses the distributed probe."""
-        import math
-
+        stats and the column's index (:meth:`_key_candidates`), then read
+        only those files' live key column (:meth:`_driver_tables`) and
+        test membership. Returns a colliding key, False for no collision,
+        or None when ineligible (big candidate set / coercion-unsafe
+        types) — the caller then uses the distributed probe."""
         if not keys:
             return False
         if not all(self._probe_type_ok(column, k) for k in keys):
             return None
-        if any(isinstance(k, float) and math.isnan(k) for k in keys):
+        if any(k != k for k in keys):
             return None  # SQL NaN equality ≠ Python set membership
-        files = self._stats_candidates(column, keys) if len(keys) <= 1000 else self.manifest.files
-        tables = self._driver_tables(files, [column])
+        tables = self._driver_tables(self._key_candidates(column, keys), [column])
         if tables is None:
             return None
         keyset = set(keys)
@@ -1349,7 +1343,7 @@ class Store:
 
     def _commit(self) -> None:
         """Commit the manifest and evict caches keyed to older versions —
-        stale posting maps, bloom bitsets and stats arrays are dropped
+        stale bloom bitsets and stats arrays are dropped
         (long-lived ingestion commits one version per micro-batch and
         would otherwise pin them forever)."""
         self.manifest.commit(self.path)
@@ -1360,7 +1354,7 @@ class Store:
         version other than ``keep``. No Spark relation is cached: every
         index part is read with pyarrow or, uncached, by
         :meth:`_probe_postings`."""
-        for cache in (self._posting_maps, self._bloom_maps, self._stats_np):
+        for cache in (self._bloom_maps, self._stats_np):
             for key in [k for k in cache if k[1] != keep]:
                 del cache[key]
 
@@ -1853,7 +1847,11 @@ class Store:
                 .sort_by([(schema.names[0], "ascending")], null_placement="at_end")
             )
         part_rel = self._part_rel(spec)
-        self._write_arrow(part_rel, table)
+        # bounded row groups let a pushed-down key probe skip most of a
+        # big part: a point probe of a 1M-posting part took 38.5 ms as one
+        # row group and 3.2 ms in 32,768-row groups (docs/SCALE.md, "One
+        # posting probe")
+        self._write_arrow(part_rel, table, row_group_size=32_768)
         spec.parts.append(part_rel)
         return part_rel
 
@@ -2150,12 +2148,15 @@ class Store:
             columns=columns, filter=pred
         )
 
-    def _write_arrow(self, rel: str, table, name: str = "part-00000.parquet") -> None:
+    def _write_arrow(
+        self, rel: str, table, name: str = "part-00000.parquet", row_group_size=None
+    ) -> None:
         """Write the arrow ``table`` as the parquet file ``name`` in the
         Store-relative dir ``rel``, created when missing — the one
-        driver-side parquet writer (zero Spark jobs)."""
+        driver-side parquet writer (zero Spark jobs). ``row_group_size``
+        is pyarrow's (None: its default)."""
         os.makedirs(self._abs(rel), exist_ok=True)
-        pq.write_table(table, os.path.join(self._abs(rel), name))
+        pq.write_table(table, os.path.join(self._abs(rel), name), row_group_size=row_group_size)
 
     def _probe_values(self, column: str, values: Sequence):
         """``values`` as a pyarrow array of ``column``'s type when a
@@ -2184,31 +2185,39 @@ class Store:
             return None
         return arr if arr.to_pylist() == list(values) else None
 
-    def _posting_hits(self, spec: IndexSpec, probes: Sequence) -> set[int] | None:
-        """File ids whose postings hold the key ``probes`` (one value per
-        member column), found on the driver with zero Spark jobs: from the
-        cached posting map when the index has at most ``POSTING_MAP_MAX``
-        postings, else by a pyarrow read of the files of the parts
-        :meth:`_parts_for_probe` keeps, with the key equality pushed into
-        the scan so footer stats skip shards. Ids of retired files may be
+    def _posting_hits(self, spec: IndexSpec, keys: Sequence) -> set[int] | None:
+        """File ids whose postings hold one of ``keys`` (each a value, or
+        for a composite a tuple of one value per member column), found on
+        the driver with zero Spark jobs: a pyarrow read of the files of
+        the parts :meth:`_parts_for_probe` keeps for some key, with the
+        key predicate pushed into the scan so footer and row-group stats
+        skip shards — one equality for one key, ``is_in`` for several.
+        Several composite keys match per member column, so any mix of
+        their member values hits (a superset). Ids of retired files may be
         in the result; every caller intersects with its live candidates.
-        None when :meth:`_probe_values` declines a probe (or the index has
-        no parts): the caller's Spark probe filters with Spark's coercion."""
+        None when :meth:`_probe_values` declines a value (or the index has
+        no parts): only Spark's coercion can decide it."""
+        import pyarrow as pa
         import pyarrow.compute as pc
 
+        rows = [tuple(k) if spec.columns else (k,) for k in keys]
         columns = spec.columns or [spec.column]
-        arrays = [self._probe_values(c, [v]) for c, v in zip(columns, probes)]
+        arrays = [self._probe_values(c, [r[i] for r in rows]) for i, c in enumerate(columns)]
         if not spec.parts or any(a is None for a in arrays):
             return None
-        if spec.rows <= self.POSTING_MAP_MAX:
-            pmap = self._posting_map(spec)
-            return set(pmap.get(tuple(probes) if spec.columns else probes[0], ()))
-        files = self._posting_files(self._parts_for_probe(spec, probes[0]))
+        keep = {p for r in rows for p in self._parts_for_probe(spec, r[0])}
+        files = self._posting_files([p for p in spec.parts if p in keep])
         if not files:
             return set()
         pred = None
         for name, a in zip(self._posting_schema(spec).names, arrays):
-            match = pc.field(name) == a[0]
+            if len(a) == 1:
+                match = pc.field(name) == a[0]
+            else:
+                if pa.types.is_floating(a.type):
+                    # is_in hashes a float's bits: -0.0 misses 0.0, which SQL equates
+                    a = pa.concat_arrays([a, pc.negate(a.filter(pc.equal(a, 0)))])
+                match = pc.is_in(pc.field(name), a)
             pred = match if pred is None else pred & match
         tbl = self._arrow_read(files, self._posting_schema(spec), pred, ["__file_id"])
         return set(tbl.column("__file_id").to_pylist())
@@ -2409,47 +2418,38 @@ class Store:
     def _stats_candidates(self, name: str, keys: Sequence[Any]) -> list[DataFile]:
         """The stats layer of a multi-key probe: the files of
         ``manifest.files`` whose ``name`` footer range may hold one of
-        ``keys`` — vectorized (:meth:`_prune_mask_multi`), with the same
-        per-file fallback as :meth:`_prune_mask`."""
-        files = self.manifest.files
-        m = self._prune_mask_multi(name, keys)
-        if m is not None:
-            return [f for f, keep in zip(files, m) if keep]
-        return [
-            f
-            for f in files
-            if not f.stats.get(name) or any(self._may_hold(*f.stats[name][:2], k) for k in keys)
-        ]
-
-    def _prune_mask_multi(self, name: str, keys: Sequence[Any]):
-        """Vectorized multi-key may-match mask over ``manifest.files`` —
-        the batched form of `_prune_mask` for find_many: one
-        files × keys broadcast against the cached stat arrays instead of
-        an interpreted double loop. None = caller falls back."""
+        ``keys``. Vectorized over the cached stat arrays
+        (:meth:`_stats_arrays`) with the keys sorted once: a file with
+        stats may match when the first key at or above its min is at or
+        below its max (``searchsorted``), in O(files + keys) memory. Keys
+        those arrays cannot compare exactly take the per-file
+        :meth:`_may_hold` check, as :meth:`_prune_mask` falls back."""
         import numpy as np
 
+        files = self.manifest.files
         arr = self._stats_arrays(name)
-        if arr is None or not keys:
-            return None
-        has, los, his, kind = arr
-        if kind == "num":
-            if not all(
+        if arr is not None and keys:
+            has, los, his, kind = arr
+            ks = None
+            if kind == "num" and all(
                 isinstance(k, (int, float))
                 and not isinstance(k, bool)
                 and abs(k) <= self._STATS_SAFE_ABS
                 for k in keys
             ):
-                return None
-            ks = np.asarray(list(keys), dtype=np.float64)
-        else:
-            if not all(isinstance(k, str) for k in keys):
-                return None
-            ks = np.array(list(keys), dtype=object)
-        try:
-            inside = (los[:, None] <= ks[None, :]) & (his[:, None] >= ks[None, :])
-            return (~has) | inside.any(axis=1)
-        except TypeError:
-            return None
+                ks = np.sort(np.asarray(list(keys), dtype=np.float64))
+            elif kind == "str" and all(isinstance(k, str) for k in keys):
+                ks = np.sort(np.array(list(keys), dtype=object))
+            if ks is not None:
+                i = np.searchsorted(ks, los[has])
+                keep = ~has
+                keep[has] = (i < len(ks)) & (ks[np.minimum(i, len(ks) - 1)] <= his[has])
+                return [f for f, k in zip(files, keep) if k]
+        return [
+            f
+            for f in files
+            if not f.stats.get(name) or any(self._may_hold(*f.stats[name][:2], k) for k in keys)
+        ]
 
     def _prune_files(self, conds: Sequence[Condition]) -> tuple[AccessPath, list[DataFile]]:
         """Two pruning layers before Catalyst (both yield supersets; the
@@ -2457,15 +2457,13 @@ class Store:
 
         1. manifest column stats — zero Spark jobs, applied for every
            const/range cond on any column with footer min/max;
-        2. posting-index lookup, only when the cost model says it can
-           actually narrow things: enough candidate files left, and keys
-           selective enough that most files miss (ndv ≫ file count; the
-           reference's estimate() idea applied at file granularity).
-           Posting, trigram and bloom probes read the index parts on the
-           driver with pyarrow, zero Spark jobs (:meth:`_posting_hits`,
-           :meth:`_bloom_prune`); a const-eq probe it declines, and a
-           custom index's other comparisons, take one small Spark job
-           (:meth:`_probe_postings`).
+        2. index lookup: a key probe goes through :meth:`_index_prune`,
+           the helper ``find_many`` and the unique-key probe share, which
+           probes only when the index can narrow things; a trigram probe
+           reads the needle's grams. Both read the index parts on the
+           driver with pyarrow, zero Spark jobs; a const-eq probe the
+           driver declines, and a custom index's other comparisons, take
+           one small Spark job (:meth:`_probe_postings`).
         """
         path = choose_access_path(conds, self.manifest.indices, self.colnames)
         eligible = [
@@ -2525,109 +2523,126 @@ class Store:
                 files = [f for f, keep in zip(self.manifest.files, mask) if keep]
         if not files:
             return path, list(files)
-        if path.index is not None and files and path.index.kind == BLOOM:
-            # a non-portable probe type keeps every file — conservative
-            # superset, as always
-            if path.cond.cmp.is_const_eq and self._bloom_probe_ok(
-                path.index.column, path.cond.cmp.value.payload
-            ):
-                files = self._bloom_prune(path.index, files, [path.cond.cmp.value.payload])
+        spec = path.index
+        if spec is None:
             return path, files
-        if path.index is not None and files and path.index.kind == TRIGRAM:
+        if spec.kind == TRIGRAM:
             # substring lookup: a file can hold a match only if its posting
-            # set holds EVERY trigram of the needle — intersect the grams'
-            # file sets: from the driver map when the index is small
-            # enough, else from a pyarrow read of the grams' postings,
-            # keeping the files that hold all of them. The residual
-            # `contains` re-check restores exactness, as always.
+            # set holds EVERY trigram of the needle — read the grams'
+            # postings with pyarrow and keep the files that hold all of
+            # them. The residual `contains` re-check restores exactness.
             needle = path.cond.cmp.value.payload
-            if path.index.params.get("ci"):
+            if spec.params.get("ci"):
                 needle = needle.lower()  # lowered postings ⇒ lowered probe
             grams = sorted({needle[i : i + 3] for i in range(len(needle) - 2)})
-            if grams and len(files) > 1 and path.index.parts:
-                if path.index.rows <= self.POSTING_MAP_MAX:
-                    pmap = self._posting_map(path.index)
-                    hit_ids = set.intersection(*[pmap.get(g, set()) for g in grams])
-                else:
-                    import pyarrow as pa
-                    import pyarrow.compute as pc
+            if grams and len(files) > 1 and spec.parts:
+                import pyarrow as pa
+                import pyarrow.compute as pc
 
-                    tbl = self._arrow_read(
-                        self._posting_files(path.index.parts),
-                        self._posting_schema(path.index),
-                        pc.is_in(pc.field("key"), pa.array(grams, pa.string())),
-                    ).group_by("__file_id").aggregate([("key", "count_distinct")])
-                    hit_ids = {
-                        fid
-                        for fid, n in zip(
-                            tbl.column("__file_id").to_pylist(),
-                            tbl.column("key_count_distinct").to_pylist(),
-                        )
-                        if n == len(grams)
-                    }
+                tbl = self._arrow_read(
+                    self._posting_files(spec.parts),
+                    self._posting_schema(spec),
+                    pc.is_in(pc.field("key"), pa.array(grams, pa.string())),
+                ).group_by("__file_id").aggregate([("key", "count_distinct")])
+                hit_ids = {
+                    fid
+                    for fid, n in zip(
+                        tbl.column("__file_id").to_pylist(),
+                        tbl.column("key_count_distinct").to_pylist(),
+                    )
+                    if n == len(grams)
+                }
                 files = [f for f in files if f.id in hit_ids]
             return path, files
-        if path.index is not None and files and path.conds:
-            # composite lookup: the conjunction const-eq-covers every member
-            # column (guaranteed by choose_access_path). Probe the tuple
-            # postings on the driver; a member probe it declines takes one
-            # small Spark job filtering all key columns.
-            worth_it = len(files) > 4 and path.index.ndv > 2 * len(self.manifest.files)
-            if worth_it:
-                probes = [c.cmp.value.payload for c in path.conds]
-                hit_ids = self._posting_hits(path.index, probes)
-                if hit_ids is None:
-                    post = self._probe_postings(path.index, probes[0])
-                    if post is not None:
-                        pred = None
-                        for i, cond in enumerate(path.conds):
-                            c = Condition(f"k{i}", cond.cmp).to_column(
-                                self._posting_schema(path.index)
-                            )
-                            pred = c if pred is None else (pred & c)
-                        # deduplicated here, not by a distinct() shuffle
-                        hit_ids = {
-                            r["__file_id"]
-                            for r in post.filter(pred).select("__file_id").collect()
-                        }
-                if hit_ids is not None:
-                    files = [f for f in files if f.id in hit_ids]
+        # a composite's conjunction const-eq-covers every member column
+        # (guaranteed by choose_access_path)
+        conds = path.conds or (path.cond,)
+        if all(c.cmp.is_const_eq for c in conds):
+            vals = tuple(c.cmp.value.payload for c in conds)
+            pruned = self._index_prune(spec, files, [vals if spec.columns else vals[0]])
+            if pruned is not None:
+                return path, pruned
+            point = vals[0]  # a probe the driver declines
+        elif (
+            spec.kind == BLOOM
+            or (spec.kind == BTREE and path.cond.cmp.op == "between")
+            or not self._postings_narrow(spec, files, 1)
+        ):
+            # range postings prune only via key ranges — the stats layer
+            # already did that work with zero jobs
             return path, files
-        if path.index is not None and files:
-            worth_it = len(files) > 4 and path.index.ndv > 2 * len(self.manifest.files)
-            if path.index.kind == BTREE and path.cond.cmp.op == "between":
-                # range postings prune only via key ranges — the stats layer
-                # already did that work with zero jobs
-                worth_it = False
-            if worth_it:
-                const = path.cond.cmp.is_const_eq
-                v = path.cond.cmp.value.payload if const else None
-                hit_ids = self._posting_hits(path.index, [v]) if const else None
-                if hit_ids is None:
-                    # a declined probe, or a custom index's other ops
-                    post = self._probe_postings(path.index, v)
-                    if post is not None:
-                        key_cond = Condition("key", path.cond.cmp)
-                        # deduplicated here, not by a distinct() shuffle
-                        hit_ids = {
-                            r["__file_id"]
-                            for r in post.filter(
-                                key_cond.to_column(self._posting_schema(path.index))
-                            )
-                            .select("__file_id")
-                            .collect()
-                        }
-                if hit_ids is not None:
-                    files = [f for f in files if f.id in hit_ids]
-        return path, files
+        else:
+            point = None  # a custom index's other comparisons read every part
+        post = self._probe_postings(spec, point)
+        if post is None:
+            return path, files
+        schema = self._posting_schema(spec)
+        pred = conjunction([Condition(n, c.cmp) for n, c in zip(schema.names, conds)], schema)
+        # deduplicated here, not by a distinct() shuffle
+        hit_ids = {r["__file_id"] for r in post.filter(pred).select("__file_id").collect()}
+        return path, [f for f in files if f.id in hit_ids]
+
+    def _postings_narrow(self, spec: IndexSpec, files: Sequence[DataFile], n_keys: int) -> bool:
+        """Can a posting probe of ``n_keys`` keys narrow ``files`` enough
+        to pay for itself: more than four candidate files per key, and
+        keys selective enough that most files miss (ndv over twice the
+        live files; the reference's ``estimate()`` idea at file
+        granularity)?"""
+        return len(files) > 4 * n_keys and spec.ndv > 2 * len(self.manifest.files)
+
+    def _index_prune(self, spec: IndexSpec, files: Sequence[DataFile], keys: Sequence):
+        """The index layer of every key probe — ``find``, ``find_many``
+        and the unique-key probe: the ``files`` that ``spec``'s index says
+        may hold one of ``keys`` (each a value, or for a composite a tuple
+        of one value per member column), a superset, read on the driver
+        with zero Spark jobs. One rule on the key count decides whether a
+        probe can pay: a posting index probes when
+        :meth:`_postings_narrow` (more than four files per key), a bloom
+        index when there are no more keys than files and every key passes
+        :meth:`_bloom_probe_ok` (its bitsets: :meth:`_bloom_bitsets`); at
+        one key these are ``find``'s rules. Otherwise ``files`` come back
+        as they are. None when the driver declines a posting probe
+        (:meth:`_posting_hits`): only a Spark read with Spark's coercion
+        can decide it."""
+        if spec.kind == BLOOM:
+            if len(keys) > len(files) or not all(
+                self._bloom_probe_ok(spec.column, k) for k in keys
+            ):
+                return files
+            # a file whose bitset may hold a key stays, and so does one
+            # with no bitset
+            bmap = self._bloom_bitsets(spec, [f.id for f in files])
+            m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
+            probes = [_bloom_positions_py(key, m_bits, k) for key in keys]
+            return [
+                f
+                for f in files
+                if bmap.get(f.id) is None or any(self._bloom_hit(bmap[f.id], p) for p in probes)
+            ]
+        if not self._postings_narrow(spec, files, len(keys)):
+            return files
+        hit_ids = self._posting_hits(spec, keys)
+        return None if hit_ids is None else [f for f in files if f.id in hit_ids]
+
+    def _key_candidates(self, name: str, keys: Sequence) -> list[DataFile]:
+        """The files that may hold a row whose ``name`` equals one of
+        ``keys``: footer stats (:meth:`_stats_candidates`), then
+        ``name``'s index (:meth:`_index_prune`), zero Spark jobs. Keys the
+        driver cannot probe keep the stats layer's files."""
+        files = self._stats_candidates(name, keys)
+        spec = self.manifest.indices.get(name)
+        if spec is None or spec.kind == TRIGRAM or not files:
+            return files
+        pruned = self._index_prune(spec, files, keys)
+        return files if pruned is None else pruned
 
     def _probe_type_ok(self, column: str, probe) -> bool:
-        """The driver-side posting map compares with Python equality, but
+        """Driver-side probes compare with Python or Arrow equality, but
         the Spark residual filter applies SQL type coercion (``5 = '5'``
-        is true there). Only take the map fast path when Python equality
+        is true there). Probe on the driver only when that equality
         agrees with SQL coercion for this (column type, probe) pair —
-        otherwise fall back to the posting-DataFrame path, which filters
-        inside Spark with identical coercion."""
+        otherwise fall back to a Spark read, which filters with identical
+        coercion."""
         dt = self.manifest.schema[column].dataType
         if isinstance(dt, (T.StringType,)):
             return isinstance(probe, str)
@@ -2679,48 +2694,9 @@ class Store:
             bmap.update(zip(tbl.column("__file_id").to_pylist(), tbl.column("bloom").to_pylist()))
         return bmap
 
-    def _bloom_prune(self, spec: IndexSpec, files: Sequence[DataFile], keys: Sequence) -> list:
-        """The ``files`` whose bitset may hold one of ``keys``, or that
-        have none — the superset contract. Every key must pass
-        :meth:`_bloom_probe_ok`."""
-        bmap = self._bloom_bitsets(spec, [f.id for f in files])
-        m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
-        probes = [_bloom_positions_py(key, m_bits, k) for key in keys]
-        return [
-            f
-            for f in files
-            if bmap.get(f.id) is None or any(self._bloom_hit(bmap[f.id], p) for p in probes)
-        ]
-
     @staticmethod
     def _bloom_hit(bits: bytes, positions: Sequence[int]) -> bool:
         return all(bits[p >> 3] & (1 << (p & 7)) for p in positions)
-
-    def _posting_map(self, spec: IndexSpec) -> dict | None:
-        """{key: {file id}} of an index's live postings (a tuple key for a
-        composite), read on the driver with pyarrow — zero Spark jobs —
-        and cached per manifest version."""
-        key = (spec.column, self.manifest.version)
-        pmap = self._posting_maps.get(key)
-        if pmap is None:
-            if not spec.parts:
-                return None
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            live = pa.array([f.id for f in self.manifest.files], pa.int32())
-            tbl = self._arrow_read(
-                self._posting_files(spec.parts),
-                self._posting_schema(spec),
-                pc.is_in(pc.field("__file_id"), live),
-            )
-            cols = [tbl.column(n).to_pylist() for n in tbl.column_names[:-1]]
-            keys = zip(*cols) if spec.columns else cols[0]
-            pmap = {}
-            for k, fid in zip(keys, tbl.column("__file_id").to_pylist()):
-                pmap.setdefault(k, set()).add(fid)
-            self._posting_maps[key] = pmap
-        return pmap
 
     def find(self, conds: Sequence[Condition] = (), with_rowid: bool = False) -> DataFrame:
         """Lazy filtered scan; empty ``conds`` = full scan (``src/lib.rs:255``).
@@ -2786,15 +2762,15 @@ class Store:
         The idiomatic-Spark answer to the reference bench's get loop
         (``benches/bench.rs:59-70``: N sequential ``find``s): per-query
         scheduling dominates point lookups on a cluster, so a multiget
-        amortizes it. File pruning unions the posting hits of every key,
-        or keeps the files whose bloom bitset may hold one
-        (:meth:`_bloom_prune`, the probe ``find`` takes) — the same
-        superset-then-residual contract as ``find``,
-        ``src/lib.rs:89-91``; the residual filter is a semi-join for big
-        key sets and an ``IN`` literal (:meth:`_in_literal`) for small ones.
-        Pruned files holding at most ``DRIVER_INSERT_ROWS`` rows are read
-        on the driver, as in ``find``: with up to 1,000 keys the lookup
-        then launches no job.
+        amortizes it. Files are pruned as a ``find`` prunes them, for all
+        keys at once (:meth:`_key_candidates`): footer stats, then the
+        column's posting or bloom index under :meth:`_index_prune`'s one
+        key-count rule — the same superset-then-residual contract as
+        ``find``, ``src/lib.rs:89-91``. The residual filter is a semi-join
+        for more than 1,000 keys and an ``IN`` literal
+        (:meth:`_in_literal`) for fewer. Pruned files holding at most
+        ``DRIVER_INSERT_ROWS`` rows are read on the driver, as in
+        ``find``: with up to 1,000 keys the lookup then launches no job.
         """
         name = self.colnames[column] if isinstance(column, int) else column
         if name not in self.colnames:
@@ -2802,38 +2778,7 @@ class Store:
         keys = list(keys)
         if not keys:
             return self._empty()
-        files = self.manifest.files
-        spec = self.manifest.indices.get(name)
-        # Pruning pays off only when the key set is selective: with many
-        # uniform keys virtually every file matches, so building a posting
-        # map (a driver read of every posting + a dict) would cost more
-        # than the scan it saves. Engage it for small key sets, or when the
-        # map is already cached from earlier point lookups.
-        map_cached = (
-            spec is not None and (spec.column, self.manifest.version) in self._posting_maps
-        )
-        if (
-            spec is not None
-            and spec.kind == HASH
-            and spec.rows <= self.POSTING_MAP_MAX
-            and (map_cached or len(keys) <= 64)
-            and self._probe_values(name, keys) is not None
-        ):
-            pmap = self._posting_map(spec)
-            if pmap is not None:
-                hit_ids: set[int] = set()
-                for k in keys:
-                    hit_ids |= pmap.get(k, set())
-                files = [f for f in files if f.id in hit_ids]
-        elif (
-            spec is not None
-            and spec.kind == BLOOM
-            and len(keys) <= 10_000  # k hashes per key, driver-side
-            and all(self._bloom_probe_ok(name, k) for k in keys)
-        ):
-            files = self._bloom_prune(spec, files, keys)
-        elif len(keys) <= 1000:
-            files = self._stats_candidates(name, keys)
+        files = self._key_candidates(name, keys)
         if not files:
             return self._empty()
         df = self._read_lookup(files).drop(ROWID)
@@ -3980,6 +3925,10 @@ class Store:
         if done is not None:
             return done
         wm = self.manifest.rowid
+        from .functions import _row_bound
+
+        # read before persist: the plan of a cache not loaded yet holds no bound
+        bound = _row_bound(delta)
         delta = delta.persist()
         # a rejected or failed apply leaves nothing staged (_txn); orphan
         # parquet dirs it wrote are inert and vacuumable, same as merge()
@@ -3988,9 +3937,6 @@ class Store:
                 ins = delta.filter(F.col("change_type") == "insert").select(
                     ROWID, *self.manifest.schema.fieldNames()
                 )
-                from .functions import _row_bound
-
-                bound = _row_bound(ins)
                 ranges = _RangeSplit(
                     ins.schema, self._cluster_cols(), bound is None or self._n_files(bound) > 1
                 )

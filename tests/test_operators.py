@@ -4733,6 +4733,15 @@ def test_row_bound_reads_the_plan(spark, tmp_path):
     assert _row_bound(loc.join(loc, "id")) is None
     assert _row_bound(loc.select(F.explode(F.array("id", "id")))) is None
     assert _row_bound(loc.union(loc)) is None
+    # a Python or pandas UDF's eval node emits one row per input row
+    plus = F.udf(lambda x: x + 1, "long")
+    assert _row_bound(spark.range(50_000).select(plus("id"))) == 50_000
+
+    @F.pandas_udf("long")
+    def pplus(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    assert _row_bound(spark.range(50).select(pplus("id"))) == 50
     cached = spark.createDataFrame([(i, "y") for i in range(25)], "id long, t string").cache()
     try:
         assert _row_bound(cached) is None  # not loaded yet

@@ -1300,10 +1300,8 @@ def test_posting_part_pruning_and_sharding(spark, tmp_path):
     )
     st = Store.create(spark, str(tmp_path / "shard"), schema)
     st.index("k", HashIndex)
-    # force the sharding path with a tiny threshold, and the DataFrame
-    # probe path by disabling the driver-side posting map
+    # force the sharding path with a tiny threshold
     st.POSTING_SHARD_ROWS = 50
-    st.POSTING_MAP_MAX = 0
     for base in (0, 1000, 2000, 3000, 4000, 5000):
         st.insert([(base + i, f"v{base + i}") for i in range(200)])
 
@@ -1461,9 +1459,8 @@ def _persistent_rdds(spark) -> int:
 def test_bloom_and_trigram_probes_take_no_job(spark, tmp_path):
     """Both index-part readers are pyarrow reads on the driver: a bloom
     find on a freshly opened handle over six bloom parts, and a trigram
-    ``contains`` above the posting-map cap (``POSTING_MAP_MAX`` 0), prune
-    files and serve their exact rows with no Spark job, and cache no
-    relation."""
+    ``contains``, prune files and serve their exact rows with no Spark
+    job, and cache no relation."""
     from shortcut_spark import BloomIndex, TrigramIndex
     from shortcut_spark.cmp import contains
 
@@ -1485,19 +1482,16 @@ def test_bloom_and_trigram_probes_take_no_job(spark, tmp_path):
     for b in range(4):
         rows = [(f"filler text number {i} batch {b}", str(i)) for i in range(50)]
         st.insert(rows + ([("the rare xylophone needle", "hit")] if b == 2 else []))
-    st.POSTING_MAP_MAX = 0
     got, jobs = _jobs(spark, lambda: st.find([contains(0, "xylophone")]).collect())
     assert jobs == 0 and [tuple(r) for r in got] == [("the rare xylophone needle", "hit")]
     assert st.explain_find([contains(0, "xylophone")]).endswith("files=1/4")
-    assert not st._posting_maps  # the capped probe built no map
     assert _persistent_rdds(spark) == held
 
 
 def test_index_part_reads_match_spark_read(spark, tmp_path):
     """The pyarrow trigram and bloom probes keep the files a Spark read of
-    the same index parts keeps: trigram hit sets from the posting map and
-    from the capped filtered read (case-sensitive and lowered postings),
-    and bloom bitsets and pruned files, over several parts and after a
+    the same index parts keeps: trigram hit sets from the filtered read
+    (case-sensitive and lowered postings), and bloom bitsets and pruned files, over several parts and after a
     copy-on-write delete retires a file."""
     from pyspark.sql import functions as F
 
@@ -1535,11 +1529,8 @@ def test_index_part_reads_match_spark_read(spark, tmp_path):
                     .filter(F.col("n") == len(grams))
                     .collect()
                 }
-                for cap in (Store.POSTING_MAP_MAX, 0):
-                    st.POSTING_MAP_MAX = cap
-                    _, files = st._prune_files([cmp(column, needle)])
-                    assert {f.id for f in files} == want & live, (step, column, needle, cap)
-                del st.POSTING_MAP_MAX
+                _, files = st._prune_files([cmp(column, needle)])
+                assert {f.id for f in files} == want & live, (step, column, needle)
         spec = st.manifest.indices["c2"]
         want_bits = _spark_bitsets(spark, st, spec)
         assert st._bloom_bitsets(spec, sorted(live)) == want_bits and want_bits
@@ -2587,8 +2578,18 @@ def test_plan_bounded_insert_is_one_file_in_one_job(spark, tmp_path):
     st.DRIVER_INSERT_ROWS = 0
     got, jobs = _jobs(spark, lambda: st.insert([("p1", "p2")]))
     assert (got, jobs, len(st.manifest.files)) == (1, 1, nfiles + 3)
+    # a Python UDF keeps the bound: its eval node emits a row per input row
+    from pyspark.sql import functions as F
+
+    tag = F.udf(lambda i: f"q{i}", "string")
+    udf_batch = spark.range(2).select(tag("id").alias(names[0]), F.lit("q").alias(names[1]))
+    got, jobs = _jobs(spark, lambda: st.insert(udf_batch))
+    assert (got, jobs, len(st.manifest.files)) == (2, 1, nfiles + 4)
     assert rows_of(st.find([])) == sorted(
-        map(tuple, ABC + [["m1", "m2"], ["n1", "n2"], ["o1", "o2"], ["p1", "p2"]])
+        map(
+            tuple,
+            ABC + [["m1", "m2"], ["n1", "n2"], ["o1", "o2"], ["p1", "p2"], ["q0", "q"], ["q1", "q"]],
+        )
     )
 
 
@@ -2757,9 +2758,7 @@ def test_literal_merge_into_small_unindexed_store_takes_no_job(spark, tmp_path):
 def _two_index_store(spark, path, batches=6, per_batch=50):
     """A hash index on ``k`` and a btree on ``v``, ``batches`` literal
     inserts of one file each. Every file spans the whole key range, so
-    only the posting index narrows a point find, and the posting-map cap
-    of 0 sends every probe to the driver's read of the posting files, not
-    the posting map."""
+    only the posting index narrows a point find."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -2772,11 +2771,32 @@ def _two_index_store(spark, path, batches=6, per_batch=50):
     st = Store.create(spark, path, schema)
     st.index("k", "hash")
     st.index("v", "btree")
-    st.POSTING_MAP_MAX = 0
     for b in range(batches):
         keys = [i * batches + b for i in range(per_batch)]
         st.insert([(k, k / 2, f"s{k % 7}") for k in keys])
     return st
+
+
+def test_find_many_probes_postings_for_few_keys(spark, tmp_path):
+    """``find_many`` prunes as ``find`` does: with more than four files per
+    key, the posting probe names the files holding the keys. On twelve
+    files that each span the whole key range (stats prune nothing), two
+    present keys read only the two files holding them, with no job, and a
+    float zero finds the other zero (``is_in`` alone hashes -0.0 apart
+    from 0.0). Keys the driver declines keep every file. Rows equal the
+    union of per-key finds."""
+    st = _two_index_store(spark, str(tmp_path / "s"), batches=12)
+    nan = float("nan")
+    for column, keys, n_files in (
+        ("k", [7, 30], 2),
+        ("v", [-0.0, 100.5], 2),
+        ("k", [300, 1.5], 12),
+        ("v", [nan, 3.5], 12),
+    ):
+        assert len(st._key_candidates(column, keys)) == n_files, (column, keys)
+        got, jobs = _jobs(spark, lambda: rows_of(st.find_many(column, keys)))
+        want = sorted({r for k in keys for r in rows_of(st.find([eq(column, k)]))})
+        assert jobs == 0 and got == want and got, (column, keys)
 
 
 def test_job_count_pins_two_index_store(spark, tmp_path):
@@ -3091,8 +3111,8 @@ def test_range_split_takes_no_quantiles_for_a_batch_its_row_bound_puts_in_one_fi
     """A write whose plan bounds its rows (``_row_bound``) to one file
     takes no quantiles: an insert takes the one-job single-file write,
     with no counts pass and no split, and a distributed ``apply_changes``
-    of a loaded cache keeps the plain generated count in its stats
-    aggregate. A bounded
+    of a bounded delta, a loaded cache or an uncached plan, keeps the
+    plain generated count in its stats aggregate. A bounded
     multi-file batch and an unbounded source (a parquet read, which may
     hold any number of rows) take them."""
     from pyspark.sql import functions as F
@@ -3120,14 +3140,19 @@ def test_range_split_takes_no_quantiles_for_a_batch_its_row_bound_puts_in_one_fi
     frame(1_000).write.parquet(str(tmp_path / "src"))
     assert st.insert(spark.read.parquet(str(tmp_path / "src"))) == 1_000
     st.DRIVER_INSERT_ROWS = 0
-    wm = st.manifest.rowid
-    delta = spark.range(wm, wm + 1_000).select(
-        F.lit("insert").alias("change_type"), F.col("id").alias(ROWID), F.lit(1.0).alias("v"), "id"
-    )
-    delta.cache().count()  # a loaded cache holds its row count
-    assert st.apply_changes(delta) == (1_000, 0)
-    delta.unpersist()
-    assert taken == [True, True, False], taken
+
+    def delta():
+        wm = st.manifest.rowid
+        return spark.range(wm, wm + 1_000).select(
+            F.lit("insert").alias("change_type"), F.col("id").alias(ROWID), F.lit(1.0).alias("v"), "id"
+        )
+
+    cached = delta()
+    cached.cache().count()  # a loaded cache holds its row count
+    assert st.apply_changes(cached) == (1_000, 0)
+    cached.unpersist()
+    assert st.apply_changes(delta()) == (1_000, 0)  # read before apply_changes persists it
+    assert taken == [True, True, False, False], taken
 
 
 def test_range_split_gives_a_300_file_batch_its_file_count(spark, tmp_path):
@@ -3517,21 +3542,28 @@ def test_write_sketched_driver_build_matches_distributed(spark, tmp_path):
 
 
 def test_posting_map_driver_read_matches_spark(spark, tmp_path):
-    """The posting map is read on the driver with pyarrow — no Spark job —
-    and equals the map built from Spark's read of the live postings, for
-    hash, composite and trigram indexes, over driver-built and distributed
-    parts and after a copy-on-write delete retires a file."""
+    """The driver posting probe (``_posting_hits``) reads the parts with
+    pyarrow — no Spark job — and names the live files a Spark read of the
+    same parts names, for one key, several keys (an absent one among
+    them) and a composite key, over driver-built and distributed parts
+    and after a copy-on-write delete retires a file."""
+    from pyspark.sql import functions as F
+
+    probes = (("h", [5]), ("h", [0, 3, 16, 99]), ("a,n", [("alpha4", 4)]))
     for name, driver_rows in (("fused", 20_000), ("dist", 0)):
         st = _all_kinds_store(spark, str(tmp_path / name), driver_rows)
         for step in ("insert", "delete"):
             if step == "delete":
                 assert st.delete([eq("h", 3)]) > 0
-            for column in ("h", "a,n", "a", "b"):
+            live = {f.id for f in st.manifest.files}
+            for column, keys in probes:
                 spec = st.manifest.indices[column]
-                pmap, jobs = _jobs(spark, lambda: st._posting_map(spec))
-                assert jobs == 0, (name, step, column)
-                want: dict = {}
-                for r in _spark_postings(spark, st, spec).collect():
-                    key = tuple(r[:-1]) if spec.columns else r["key"]
-                    want.setdefault(key, set()).add(r["__file_id"])
-                assert pmap == want and pmap, (name, step, column)
+                hits, jobs = _jobs(spark, lambda: st._posting_hits(spec, keys))
+                assert jobs == 0, (name, step, column, keys)
+                post = _spark_postings(spark, st, spec)
+                if spec.columns:
+                    post = post.filter((F.col("k0") == keys[0][0]) & (F.col("k1") == keys[0][1]))
+                else:
+                    post = post.filter(F.col("key").isin(keys))
+                want = {r["__file_id"] for r in post.collect()}
+                assert hits & live == want and want, (name, step, column, keys)

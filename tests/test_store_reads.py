@@ -300,6 +300,31 @@ def test_index_parts_read_by_spark_only_in_probe_postings():
     assert readers == {"_probe_postings"}, f"read index parts with _arrow_read: {readers}"
 
 
+# -- lint: no driver posting map --------------------------------------------
+
+
+def test_no_library_code_reads_a_posting_map():
+    """Every key probe is a pushed-down read of the posting parts
+    (``Store._posting_hits``): no library code reads a driver posting
+    map, its cache or its cap (``Store.POSTING_MAP_MAX`` stays only as a
+    class attribute that perfbench reports)."""
+    names = {"POSTING_MAP_MAX", "_posting_map", "_posting_maps"}
+    hits = []
+    for root, _, files in os.walk(_PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Attribute) and node.attr in names) or (
+                    isinstance(node, ast.Name) and node.id in names and isinstance(node.ctx, ast.Load)
+                ):
+                    hits.append((os.path.relpath(path, _PKG), node.lineno))
+    assert not hits, hits
+
+
 # -- lint: an index key sketch is built in one of four places ---------------
 
 
@@ -462,13 +487,12 @@ def test_find_many_keeps_dollar_keys(spark, tmp_path):
     for k in keys:
         assert rows_of(st.find_many(0, [k])) == [r for r in want if r[0] == k], k
     st.index(0, HashIndex)
-    assert rows_of(st.find_many(0, keys)) == want  # posting-map path
+    assert rows_of(st.find_many(0, keys)) == want  # indexed path
     tri = Store.create(spark, str(tmp_path / "t"), 2)
     tri.index(0, TrigramIndex())
     for b in range(3):
         tri.insert([(f"row {i} batch {b}", str(i)) for i in range(20)])
     tri.insert([("pay ${env:HOME} now", "hit"), ("pay HOME now", "decoy")])
-    tri.POSTING_MAP_MAX = 0  # the Spark gram filter, not the posting map
     got = rows_of(tri.find([contains(0, "${env:HOME}")]))
     assert got == [("pay ${env:HOME} now", "hit")]
     assert tri.explain_find([contains(0, "${env:HOME}")]).endswith(
@@ -609,7 +633,7 @@ def _check_edge_probes(st, tag):
 
     calls = []
     driver, fallback = st._posting_hits, st._probe_postings
-    st._posting_hits = lambda spec, probes: calls.append("driver") or driver(spec, probes)
+    st._posting_hits = lambda spec, keys: calls.append("driver") or driver(spec, keys)
     st._probe_postings = lambda spec, point: calls.append("spark") or fallback(spec, point)
     consulted, spark_hits, driver_hits = [], [], {}
     try:
@@ -622,9 +646,9 @@ def _check_edge_probes(st, tag):
                 assert calls == (["driver", "spark"] if declined else ["driver"]), where
             spec = st.manifest.indices[",".join(c.column for c in conds)]
             vals = [c.cmp.value.payload for c in conds]
-            hits = driver(spec, vals)
+            hits = driver(spec, [tuple(vals) if spec.columns else vals[0]])
             assert (hits is None) == declined, where
-            if hits is not None and st.POSTING_MAP_MAX == 0:
+            if hits is not None:
                 driver_hits[i] = hits
                 names = st._posting_schema(spec).names
                 post = fallback(spec, vals[0])
@@ -641,15 +665,29 @@ def _check_edge_probes(st, tag):
     return consulted
 
 
+def test_find_many_equals_the_union_of_finds_on_edge_keys(spark, tmp_path):
+    """``find_many`` of every edge probe of a column at once — ±0.0, NaN,
+    2**53 neighbours, decimals, quotes and unicode, and keys the driver
+    declines — returns the union of the per-key ``find`` rows."""
+    st = _edge_store(spark, str(tmp_path / "s"))
+    by_column: dict = {}
+    for column, probe, _ in _edge_probes():
+        if not isinstance(column, tuple):
+            by_column.setdefault(column, []).append(probe)
+    for column, keys in by_column.items():
+        # compared as reprs: a NaN is unequal to itself
+        want = sorted({repr(r) for k in keys for r in rows_of(st.find([eq(column, k)]))})
+        assert sorted(map(repr, rows_of(st.find_many(column, keys)))) == want and want, column
+
+
 def test_driver_posting_probe_matches_spark(spark, tmp_path):
     """The zero-job driver probe (pyarrow over the part-pruned posting
-    files) and the posting map answer every edge probe like Spark: over
+    files) answers every edge probe like Spark: over
     sharded and driver-built parts, after a copy-on-write delete and a
     deferred delete (postings of retired files must not leak into
     results), after compact, and on a reopened handle."""
     path = str(tmp_path / "s")
     st = _edge_store(spark, path)
-    st.POSTING_MAP_MAX = 0  # the pyarrow read, not the posting map
     spec = st.manifest.indices["k"]
     assert any(len(st._posting_files([p])) > 1 for p in spec.parts), "no sharded part"
     n = len(_edge_probes()) - 1  # ("g99", 1) is out of every file's g range
@@ -665,10 +703,7 @@ def test_driver_posting_probe_matches_spark(spark, tmp_path):
     # now rule out some probes before the postings are asked
     m = len(_check_edge_probes(st, "compact"))
     assert m >= 10
-    reopened = Store.open(spark, path)
-    assert len(_check_edge_probes(reopened, "reopen-map")) == m  # the posting map
-    reopened.POSTING_MAP_MAX = 0
-    assert len(_check_edge_probes(reopened, "reopen")) == m
+    assert len(_check_edge_probes(Store.open(spark, path), "reopen")) == m
 
 
 # -- the driver read of a lookup answers like the Spark read -----------------
