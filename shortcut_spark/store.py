@@ -601,8 +601,8 @@ class Store:
         Arity/schema is validated always (vs debug-only ``src/lib.rs:179``).
 
         A literal batch of at most ``DRIVER_INSERT_ROWS`` rows is written
-        and indexed on the driver (:meth:`_insert_rows_driver`); its one
-        Spark job is the index key sketch. A larger one becomes a
+        and indexed on the driver (:meth:`_insert_rows_driver`), its index
+        key sketches included, with no Spark job. A larger one becomes a
         DataFrame (:meth:`_literal_frame`). A DataFrame batch whose plan
         row bound (:func:`_row_bound`, no job) fits one file lands in ONE
         job: one exchange into one write task makes rowid = watermark +
@@ -715,10 +715,10 @@ class Store:
     # the bound of the driver kernels. Literal (Python-list) batches
     # at or below this many rows insert entirely on the driver: constraint
     # checks in plain Python, rowids by list position, one pyarrow-written
-    # file, footer-based registration — no Spark job but the index key
-    # sketch, and the unique probe's scan of a big table. It bounds the
-    # driver index build (_index_tables) of a batch whose key sketch is
-    # still a LocalRelation job, and of a trigram index; an index whose
+    # file, footer-based registration, index postings and key sketches —
+    # no Spark job but the unique probe's scan of a big table. It bounds
+    # the driver index build (_index_tables) of a batch whose keys it
+    # sketches on the driver, and of a trigram index; an index whose
     # sketch the batch's Spark write observed is built there up to
     # POSTING_SHARD_ROWS or DRIVER_BLOOM_ROWS (_index_files). It also
     # bounds the rows a lookup, a delete or a CDC apply reads on the
@@ -1566,12 +1566,12 @@ class Store:
         a copy-on-write delete's survivors, whose keys it holds). An index
         on :meth:`_driver_atomic_type` columns is built on the driver
         (:meth:`_index_tables`), from ``tables`` (one arrow table per file
-        the driver wrote) or a pyarrow read of the written files: up to
-        ``POSTING_SHARD_ROWS`` rows (``DRIVER_BLOOM_ROWS`` for a bloom
-        index) when its sketch needs no job, and up to
-        ``DRIVER_INSERT_ROWS`` when the build sketches it or the index is
-        a trigram one (its grams fan out). Any other index writes its part
-        with a Spark job of its own. The files are read without the
+        the driver wrote) or a pyarrow read of the written files, with no
+        job: up to ``POSTING_SHARD_ROWS`` rows (``DRIVER_BLOOM_ROWS`` for
+        a bloom index) when the write observed its sketch, and up to
+        ``DRIVER_INSERT_ROWS`` when the build sketches it on the driver or
+        the index is a trigram one (its grams fan out). Any other index
+        writes its part with a Spark job of its own. The files are read without the
         tombstone filter: fresh files hold no tombstoned rowid, and a
         posting for a dead row (an index backfill after a deferred delete)
         is only a superset, the state a deferred delete leaves anyway."""
@@ -1638,18 +1638,26 @@ class Store:
         grams."""
         cols = []
         for i, spec in enumerate(self.manifest.indices.values()):
-            if spec.kind == TRIGRAM:
-                continue
-            keys = []
-            for c in spec.member_columns:
-                dt = self.manifest.schema[c].dataType
-                fold = spec.kind != BLOOM and isinstance(dt, (T.FloatType, T.DoubleType))
-                keys.append(F.col(c) + F.lit(0.0).cast(dt) if fold else F.col(c))
-            cols += self._sketch_cols(spec, keys, i)
+            if spec.kind != TRIGRAM:
+                cols += self._sketch_cols(spec, self._sketch_members(spec), i)
         if not cols:
             return df, None
         obs = Observation()
         return df.observe(obs, *cols), obs
+
+    def _sketch_members(
+        self, spec: IndexSpec, col: Callable[[str], Column] = F.col
+    ) -> list[Column]:
+        """The member columns of ``spec`` (each column ``c`` read as
+        ``col(c)``) as a batch's rows sketch them: a float member as
+        ``c + 0.0`` (except in a bloom index, which sketches its raw
+        column, as its builders do)."""
+        keys = []
+        for c in spec.member_columns:
+            dt = self.manifest.schema[c].dataType
+            fold = spec.kind != BLOOM and isinstance(dt, (T.FloatType, T.DoubleType))
+            keys.append(col(c) + F.lit(0.0).cast(dt) if fold else col(c))
+        return keys
 
     def _index_tables(
         self,
@@ -1660,23 +1668,25 @@ class Store:
     ) -> None:
         """The driver index build: every index of ``files``, whose rows the
         driver holds (``tables``, one arrow table per file, with at least
-        each index's columns). The postings and each part's range key
-        [min, max] are built on the driver with the distributed build's
-        semantics: the distinct postings (:meth:`_distinct_rows`) fold
-        ``-0.0`` into ``0.0`` and every NaN into one, as ``distinct``
-        does, and :meth:`_min_max` ranks NaN above every number, as
-        Spark's ``min``/``max`` do. Trigram grams and bloom string keys
-        come from a Spark projection (``_grams``, ``cast(string)``) over a
-        ``LocalRelation``, which ``ConvertToLocalRelation`` evaluates on
-        the driver. The indexes at the positions in ``sketch`` have their
-        distinct posting keys sketched — what the distributed build
-        sketches — and merged into the stored sketch, in the one Spark job
-        of the build: a ``coalesce(1)`` aggregate of :meth:`_sketch_cols`
-        over a ``LocalRelation`` of the keys, one column group per index.
-        No job runs when ``sketch`` is empty."""
+        each index's columns), with no Spark job. The postings and each
+        part's range key [min, max] are built on the driver with the
+        distributed build's semantics: the distinct postings
+        (:meth:`_distinct_rows`) fold ``-0.0`` into ``0.0`` and every NaN
+        into one, as ``distinct`` does, and :meth:`_min_max` ranks NaN
+        above every number, as Spark's ``min``/``max`` do. Trigram grams,
+        bloom string keys and sketch key strings (:meth:`_sketch_key`)
+        that pyarrow cannot cast as Spark does come from one Spark
+        projection over a one-row ``LocalRelation`` of the index columns
+        as arrays, which ``ConvertToLocalRelation`` evaluates on the
+        driver; one row of arrays crosses to Python as one Row, not one
+        per batch row. The indexes at the positions in ``sketch`` have
+        their keys sketched on the driver (:mod:`.hll`) in the order the
+        build takes them and merged into their stored sketches
+        (:meth:`_merge_sketches`)."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from . import hll
 
         src = pa.concat_tables(
             [
@@ -1684,90 +1694,106 @@ class Store:
                 for f, t in zip(files, tables)
             ]
         )
-        # trigram grams, and the string keys of a bloom index on a column
-        # whose cast pyarrow cannot do as Spark does, come from Spark
+        # what pyarrow casts to a string as Spark does
         arrow_cast = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        derived = {
-            i: self._grams(s) if s.kind == TRIGRAM else F.col(s.column).cast("string")
-            for i, s in enumerate(specs)
-            if s.kind == TRIGRAM
-            or (
-                s.kind == BLOOM
-                and not isinstance(self.manifest.schema[s.column].dataType, arrow_cast)
+
+        def casts(s: IndexSpec, types=arrow_cast) -> bool:
+            return len(s.member_columns) == 1 and isinstance(
+                self.manifest.schema[s.member_columns[0]].dataType, types
             )
-        }
+
+        def arr(c: str) -> Column:
+            return F.col(f"__a_{c}")
+
+        derived, members = {}, set()
+        for i, s in enumerate(specs):
+            if s.kind == TRIGRAM:
+                derived[f"__x{i}"] = F.transform(arr(s.column), lambda x: self._grams(s, x))
+            elif s.kind == BLOOM and not casts(s):
+                derived[f"__x{i}"] = arr(s.column).cast("array<string>")
+            elif i in sketch and not casts(s, (*arrow_cast, T.BinaryType)):
+                # (a binary key is sketched as its bytes, which pyarrow has)
+                derived[f"__k{i}"] = F.transform(
+                    arr(s.member_columns[0]),
+                    lambda _, j: self._sketch_key(self._sketch_members(s, lambda c: arr(c)[j])),
+                )
+            else:
+                continue
+            members.update(s.member_columns)
         if derived:
-            cols = [c for c in self.colnames if any(specs[i].column == c for i in derived)]
-            fields = [self.manifest.schema[c] for c in cols]
+            cols = [c for c in self.colnames if c in members]
+            offsets = pa.array([0, src.num_rows], pa.int32())
+            arrays = {
+                f"__a_{c}": pa.ListArray.from_arrays(offsets, src.column(c).combine_chunks())
+                for c in cols
+            }
             rel = local_relation(
                 self.spark,
-                [src.select([*cols, "__file_id"])],
-                T.StructType([*fields, T.StructField("__file_id", T.IntegerType())]),
+                [pa.table(arrays)],
+                T.StructType(
+                    [
+                        T.StructField(f"__a_{c}", T.ArrayType(self.manifest.schema[c].dataType))
+                        for c in cols
+                    ]
+                ),
             )
-            got = rel.select(
-                "__file_id", *[e.alias(f"__x{i}") for i, e in derived.items()]
-            ).collect()
-        keyed = {}
+            got = rel.select(*[e.alias(n) for n, e in derived.items()]).collect()[0]
+        images = {}
         for i, spec in enumerate(specs):
             if spec.kind in (TRIGRAM, BLOOM):
-                key_schema = T.StructType([T.StructField("key", T.StringType())])
+                fid = src.column("__file_id")
                 if spec.kind == TRIGRAM:
                     by_file: dict[int, set] = {}
-                    for r in got:
-                        by_file.setdefault(r["__file_id"], set()).update(r[f"__x{i}"])
+                    for f, gs in zip(fid.to_pylist(), got[f"__x{i}"]):
+                        by_file.setdefault(f, set()).update(gs)
                     key = pa.array([g for gs in by_file.values() for g in gs], pa.string())
                     fid = pa.array([f for f, gs in by_file.items() for _ in gs], pa.int32())
-                elif i in derived:
-                    key = pa.array([r[f"__x{i}"] for r in got], pa.string())
-                    fid = pa.array([r["__file_id"] for r in got], pa.int32())
+                elif f"__x{i}" in derived:
+                    key = pa.array(got[f"__x{i}"], pa.string())
                 else:
                     key = pc.cast(src.column(spec.column), pa.string())
-                    fid = src.column("__file_id")
                 part = self._distinct_rows(pa.table({"key": key, "__file_id": fid}))
                 part = part.filter(pc.is_valid(part.column("key")))
             else:
-                key_schema = T.StructType(self._posting_schema(spec).fields[:-1])
+                names = self._posting_schema(spec).names
                 part = self._distinct_rows(
-                    src.select([*spec.member_columns, "__file_id"]).rename_columns(
-                        [*key_schema.names, "__file_id"]
-                    )
+                    src.select([*spec.member_columns, "__file_id"]).rename_columns(names)
                 )
             part_rel = self._write_index_part(spec, part)
             if part_rel is not None and spec.kind != BLOOM:
                 self._set_part_range(spec, part_rel, *self._min_max(part.column(0)))
-            if i in sketch:
-                keyed[i] = (part, key_schema)
-        if not keyed:
-            return
-        keys, key_fields = [], [T.StructField("__s", T.IntegerType())]
-        for i, (part, key_schema) in keyed.items():
-            names = [f"__k{i}_{n}" for n in key_schema.names]
-            keys.append(
-                part.select(key_schema.names)
-                .cast(to_arrow_schema(key_schema))
-                .rename_columns(names)
-                .append_column("__s", pa.array([i] * part.num_rows, pa.int32()))
-            )
-            key_fields += [T.StructField(n, f.dataType) for n, f in zip(names, key_schema)]
-        schema = T.StructType(key_fields)
-        rel = local_relation(
-            self.spark,
-            [pa.concat_tables(keys, promote_options="default").select(schema.names)],
-            schema,
-        )
-        aggs = [
-            c
-            for i in keyed
-            for c in self._sketch_cols(
-                specs[i],
-                [F.col(f.name) for f in key_fields if f.name.startswith(f"__k{i}_")],
-                i,
-                where=F.col("__s") == i,
-            )
-        ]
-        st = rel.coalesce(1).agg(*aggs).collect()[0].asDict()
-        for i in keyed:
-            self._refresh_index_stats(specs[i], st, suffix=i)
+            if i not in sketch:
+                continue
+            if f"__k{i}" in derived:
+                keys = pa.array(got[f"__k{i}"], pa.string())
+            elif spec.kind in (TRIGRAM, BLOOM) or casts(spec, T.BinaryType):
+                keys = part.column(0)
+            else:
+                keys = pc.cast(part.column(0), pa.string())
+            images[i] = hll.image(hll.coupons(keys))
+        if images:
+            st = self._merge_sketches(specs, images)
+            for i in images:
+                self._refresh_index_stats(specs[i], st, suffix=i)
+
+    def _merge_sketches(self, specs: Sequence[IndexSpec], images: dict[int, bytes]) -> dict:
+        """The driver-built sketch image (:func:`.hll.image`) of each index
+        ``specs[i]`` in ``images`` merged into its stored sketch (an empty
+        one when it has none), as the ``__sk{i}`` / ``__ndv{i}`` columns of
+        :meth:`_refresh_index_stats`: ``hll_union`` of two literals,
+        projected over the one-row ``LocalRelation`` of ``VALUES`` —
+        evaluated on the driver, with no job (``local_relation`` costs
+        ~35 ms more to hand Spark its one row)."""
+        import base64
+
+        from . import hll
+
+        cols = []
+        for i, img in images.items():
+            stored = base64.b64decode(specs[i].sketch) if specs[i].sketch else hll.EMPTY
+            sk = F.hll_union(F.lit(bytearray(stored)), F.lit(bytearray(img)))
+            cols += [sk.alias(f"__sk{i}"), F.hll_sketch_estimate(sk).alias(f"__ndv{i}")]
+        return self.spark.sql("VALUES (0)").select(*cols).collect()[0].asDict()
 
     @staticmethod
     def _distinct_rows(table):
@@ -1963,10 +1989,10 @@ class Store:
         )
 
     @staticmethod
-    def _grams(spec: IndexSpec) -> Column:
-        """The trigrams of a TRIGRAM index's column (an empty array for a
-        NULL or a value shorter than 3 chars, never NULL)."""
-        c = F.col(spec.column)
+    def _grams(spec: IndexSpec, c: Column | None = None) -> Column:
+        """The trigrams of a TRIGRAM index's column, or of ``c`` (an empty
+        array for a NULL or a value shorter than 3 chars, never NULL)."""
+        c = F.col(spec.column) if c is None else c
         if spec.params.get("ci"):
             c = F.lower(c)  # ci index: postings are lowered grams
         return F.when(
@@ -2022,33 +2048,35 @@ class Store:
         return v if isinstance(v, (int, str)) else float(v)
 
     @staticmethod
+    def _sketch_key(keys: Sequence[Column]) -> Column:
+        """The string an index key is sketched as (injective per type),
+        from its member columns ``keys``, by ``hll_sketch_agg`` and by the
+        driver sketch (:mod:`.hll`) alike: HLL sketch aggregation supports
+        int/long/string/binary but not double."""
+        if len(keys) == 1:
+            return keys[0].cast("string")
+        # composite: sketch the TUPLE — ndv of the combined key is the
+        # whole point of the index's cost-model advantage. Injective
+        # tuple encoding: concat_ws SKIPS null members, which would
+        # collapse ('a', NULL), (NULL, 'a') and ('a',) into one sketch
+        # key and underestimate tuple ndv. Hash each member to a
+        # fixed-width token (null → a marker no md5 can produce)
+        # before joining, so distinct tuples always yield distinct keys.
+        return F.concat_ws(
+            "\x1f", *[F.coalesce(F.md5(k.cast("string")), F.lit("<null>")) for k in keys]
+        )
+
+    @staticmethod
     def _sketch_cols(
-        spec: IndexSpec, keys: Sequence[Column], suffix: int | str = "", where: Column | None = None
+        spec: IndexSpec, keys: Sequence[Column], suffix: int | str = ""
     ) -> list[Column]:
-        """The HLL sketch of the index keys ``keys`` (of the rows that
-        pass ``where``, when given) merged into the spec's stored sketch
-        (``hll_union``, inside the same aggregate — no merge job of its
-        own; no stored sketch, as after ``compact``, starts from scratch),
-        and its estimate. Keys are sketched as
-        strings (injective per type) because HLL sketch aggregation
-        supports int/long/string/binary but not double."""
+        """The HLL sketch of the index keys ``keys`` (:meth:`_sketch_key`)
+        merged into the spec's stored sketch (``hll_union``, inside the
+        same aggregate — no merge job of its own; no stored sketch, as
+        after ``compact``, starts from scratch), and its estimate."""
         import base64
 
-        if len(keys) > 1:
-            # composite: sketch the TUPLE — ndv of the combined key is the
-            # whole point of the index's cost-model advantage. Injective
-            # tuple encoding: concat_ws SKIPS null members, which would
-            # collapse ('a', NULL), (NULL, 'a') and ('a',) into one sketch
-            # key and underestimate tuple ndv. Hash each member to a
-            # fixed-width token (null → a marker no md5 can produce)
-            # before joining, so distinct tuples always yield distinct keys.
-            key = F.concat_ws(
-                "\x1f",
-                *[F.coalesce(F.md5(k.cast("string")), F.lit("<null>")) for k in keys],
-            )
-        else:
-            key = keys[0].cast("string")
-        sk = F.hll_sketch_agg(key if where is None else F.when(where, key))
+        sk = F.hll_sketch_agg(Store._sketch_key(keys))
         if spec.sketch:
             sk = F.hll_union(F.lit(bytearray(base64.b64decode(spec.sketch))), sk)
         return [sk.alias(f"__sk{suffix}"), F.hll_sketch_estimate(sk).alias(f"__ndv{suffix}")]
@@ -2082,10 +2110,11 @@ class Store:
 
         The ndv contract: exact (the HLL estimate of a sketch holding the
         key set of a from-scratch sketch of all live keys; a sketch merged
-        from several tasks' takes the union estimator, which can differ
-        from a one-task sketch's by HLL error) after inserts and after
-        ``compact``,
-        which rebuilds every sketch. Between compactions, after deletes,
+        from several tasks', or built on the driver from more than
+        ``hll.SET_MAX`` keys with no HLL-mode sketch stored, takes the
+        union estimator, which can differ from a one-task sketch's by HLL
+        error) after inserts and after ``compact``, which rebuilds every
+        sketch. Between compactions, after deletes,
         it is an upper bound: a sketch cannot subtract keys, and both
         delete strategies leave it as it was — a copy-on-write delete
         re-indexes its survivor files incrementally, and their keys are
@@ -2584,11 +2613,13 @@ class Store:
 
     def _postings_narrow(self, spec: IndexSpec, files: Sequence[DataFile], n_keys: int) -> bool:
         """Can a posting probe of ``n_keys`` keys narrow ``files`` enough
-        to pay for itself: more than four candidate files per key, and
-        keys selective enough that most files miss (ndv over twice the
-        live files; the reference's ``estimate()`` idea at file
-        granularity)?"""
-        return len(files) > 4 * n_keys and spec.ndv > 2 * len(self.manifest.files)
+        to pay for itself: more candidate files than both four and the
+        key count (the probe is one pyarrow read of the posting parts
+        whatever the key count, and a Spark read of the files it leaves
+        is the cost it saves), and keys selective enough that most files
+        miss (ndv over twice the live files; the reference's
+        ``estimate()`` idea at file granularity)?"""
+        return len(files) > max(4, n_keys) and spec.ndv > 2 * len(self.manifest.files)
 
     def _index_prune(self, spec: IndexSpec, files: Sequence[DataFile], keys: Sequence):
         """The index layer of every key probe — ``find``, ``find_many``
@@ -2597,7 +2628,7 @@ class Store:
         of one value per member column), a superset, read on the driver
         with zero Spark jobs. One rule on the key count decides whether a
         probe can pay: a posting index probes when
-        :meth:`_postings_narrow` (more than four files per key), a bloom
+        :meth:`_postings_narrow` (more files than both four and the keys), a bloom
         index when there are no more keys than files and every key passes
         :meth:`_bloom_probe_ok` (its bitsets: :meth:`_bloom_bitsets`); at
         one key these are ``find``'s rules. Otherwise ``files`` come back

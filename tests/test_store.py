@@ -2778,21 +2778,25 @@ def _two_index_store(spark, path, batches=6, per_batch=50):
 
 
 def test_find_many_probes_postings_for_few_keys(spark, tmp_path):
-    """``find_many`` prunes as ``find`` does: with more than four files per
-    key, the posting probe names the files holding the keys. On twelve
-    files that each span the whole key range (stats prune nothing), two
-    present keys read only the two files holding them, with no job, and a
-    float zero finds the other zero (``is_in`` alone hashes -0.0 apart
-    from 0.0). Keys the driver declines keep every file. Rows equal the
+    """``find_many`` prunes as ``find`` does: with more candidate files
+    than both four and the keys, the posting probe names the files
+    holding the keys. On twenty files that each span the whole key range
+    (stats prune nothing), two or five present keys read only the files
+    holding them, with no job, and a float zero finds the other zero
+    (``is_in`` alone hashes -0.0 apart from 0.0). Keys the driver
+    declines, and as many keys as files, keep every file. Rows equal the
     union of per-key finds."""
-    st = _two_index_store(spark, str(tmp_path / "s"), batches=12)
+    st = _two_index_store(spark, str(tmp_path / "s"), batches=20)
     nan = float("nan")
     for column, keys, n_files in (
         ("k", [7, 30], 2),
         ("v", [-0.0, 100.5], 2),
-        ("k", [300, 1.5], 12),
-        ("v", [nan, 3.5], 12),
+        ("k", [3, 47, 210, 555, 998], 5),
+        ("k", [300, 1.5], 20),
+        ("v", [nan, 3.5], 20),
+        ("k", list(range(20)), 20),
     ):
+        assert len(st._stats_candidates(column, keys)) == 20
         assert len(st._key_candidates(column, keys)) == n_files, (column, keys)
         got, jobs = _jobs(spark, lambda: rows_of(st.find_many(column, keys)))
         want = sorted({r for k in keys for r in rows_of(st.find([eq(column, k)]))})
@@ -2801,7 +2805,8 @@ def test_find_many_probes_postings_for_few_keys(spark, tmp_path):
 
 def test_job_count_pins_two_index_store(spark, tmp_path):
     """The job floor of the indexed write and read paths: a literal
-    insert maintains both indexes in ONE job (the fused driver build); a
+    insert maintains both indexes with no job (the driver build sketches
+    the keys on the driver and merges them in a zero-job projection); a
     posting probe runs on the driver with no job, and so does the read of
     the few rows it leaves, so a point find, a btree range find, a miss
     the postings rule out and ``explain_find`` take no job; a find whose
@@ -2815,7 +2820,7 @@ def test_job_count_pins_two_index_store(spark, tmp_path):
     broadcast job."""
     st = _two_index_store(spark, str(tmp_path / "s"))
     n, jobs = _jobs(spark, lambda: st.insert([(10_000 + i, 1.5 * i, "m") for i in range(100)]))
-    assert n == 100 and jobs == 1
+    assert n == 100 and jobs == 0
     explain, jobs = _jobs(spark, lambda: st.explain_find([eq("k", 7)]))
     assert "IndexLookup" in explain and jobs == 0
     rows, jobs = _jobs(spark, lambda: st.find([eq("k", 7)]).collect())
@@ -3455,7 +3460,7 @@ def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
     the per-index distributed build: posting sets (key, file id) of hash,
     composite and two trigram indexes, bloom bitsets per file, and ndv. A
     literal batch is indexed from the arrow table the driver wrote, its
-    one job the key sketch; a DataFrame batch, written by Spark with its
+    key sketches taken on the driver; a DataFrame batch, written by Spark with its
     sketches observed in the write (but the trigram ones), from a pyarrow
     read of its index columns."""
     dist = _all_kinds_store(spark, str(tmp_path / "dist"), 0)
@@ -3539,6 +3544,249 @@ def test_write_sketched_driver_build_matches_distributed(spark, tmp_path):
         assert post[0] == post[1] and post[0], column
         ranges = [[spec.part_stats.get(p) for p in spec.parts] for spec in specs]
         assert _nan_eq(*ranges) and len(ranges[0]) == 2, (column, ranges)
+
+
+def _reference_sketch(spark, spec, stored, keys):
+    """(sketch bytes, ndv) of the DataFrame ``keys`` (the index's key
+    columns) merged into the sketch ``stored`` (None: none) by the
+    aggregate the driver build ran before it sketched on the driver: one
+    ``coalesce(1)`` aggregate of ``_sketch_cols`` over the keys."""
+    import base64
+    import copy
+
+    from pyspark.sql import functions as F
+
+    ref = copy.copy(spec)
+    ref.sketch = base64.b64encode(stored).decode() if stored else None
+    row = keys.coalesce(1).agg(*Store._sketch_cols(ref, [F.col(c) for c in keys.columns]))
+    row = row.collect()[0]
+    return bytes(row["__sk"]), int(row["__ndv"])
+
+
+def _reference_keys(spark, st, spec, data=None):
+    """The keys of the data file ``data`` (the store's only one when None)
+    that the driver build sketched before, in the order it fed them, as a
+    ``LocalRelation``: the distinct postings of a hash, btree or composite
+    index (``_distinct_rows`` of the file's rows), the string keys of a
+    bloom index and the grams of a trigram index."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from shortcut_spark.session import local_relation
+
+    if data is None:
+        (data,) = st.manifest.files
+    table = pq.read_table(st._abs(data.path)).select(st.manifest.schema.names)
+    rows = local_relation(spark, [table], st.manifest.schema)
+    if spec.kind == "bloom":
+        return rows.select(F.col(spec.column).cast("string").alias("key"))
+    if spec.kind == "trigram":
+        grams = set()  # in the set order the build takes them
+        for r in rows.select(Store._grams(spec).alias("g")).collect():
+            grams.update(r["g"])
+        schema = T.StructType([T.StructField("key", T.StringType())])
+        return local_relation(spark, [pa.table({"key": pa.array(list(grams), pa.string())})], schema)
+    schema = T.StructType(st._posting_schema(spec).fields[:-1])
+    part = Store._distinct_rows(table.select(spec.member_columns).rename_columns(schema.names))
+    return local_relation(spark, [part], schema)
+
+
+def _stored_sketches(spark):
+    """HLL sketches of 3, 100 and 2,000 string keys: a LIST-mode, a
+    SET-mode and an HLL-mode sketch."""
+    from pyspark.sql import functions as F
+
+    keys = spark.range(2_000).select(F.col("id"), F.concat(F.lit("stored"), "id").alias("s"))
+    row = keys.agg(
+        *[F.hll_sketch_agg(F.when(F.col("id") < n, F.col("s"))).alias(str(n)) for n in (3, 100, 2_000)]
+    ).collect()[0]
+    return {"list": bytes(row["3"]), "set": bytes(row["100"]), "hll": bytes(row["2000"])}
+
+
+def test_hll_image_is_the_one_task_aggregate_sketch(spark):
+    """``hll.image`` of a batch's coupons is the sketch a one-task
+    ``hll_sketch_agg`` of its keys serializes, byte for byte, on both
+    sides of the LIST/SET boundary (8 coupons), at each SET growth
+    (25, 49, 97, 193 coupons) and at the largest SET (``hll.SET_MAX``);
+    keys arrive with repeats and an empty key, which the sketch skips."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from shortcut_spark import hll
+    from shortcut_spark.session import local_relation
+
+    schema = T.StructType([T.StructField("k", T.StringType())])
+    for n in (1, 7, 8, 25, 49, 97, 193, hll.SET_MAX):
+        keys = [f"key-{i}-é" for i in range(n)]
+        keys = pa.array(["", *keys, *keys[::3], None], pa.string())
+        rel = local_relation(spark, [pa.table({"k": keys})], schema)
+        agg = rel.coalesce(1).agg(F.hll_sketch_agg("k")).collect()[0][0]
+        assert hll.image(hll.coupons(keys)) == bytes(agg), n
+
+
+def test_driver_sketch_matches_the_sketch_aggregate(spark, tmp_path):
+    """The driver build sketches its keys on the driver (MurmurHash3
+    coupons in DataSketches images, merged into the stored sketch by
+    ``hll_union`` over a one-row ``LocalRelation``) with no job, and
+    reads as the aggregate it replaced: against an HLL-mode stored sketch
+    the merged bytes are equal, and with no stored sketch or a LIST-mode
+    or SET-mode one ndv and the key set (union estimates) are. The keys
+    cover NULL, "", strings across MurmurHash3's 8- and 16-byte block
+    and tail boundaries, 2- and 4-byte UTF-8, ±0.0, NaN, 2**53
+    neighbours, negative and extreme longs, decimal, date and timestamp
+    keys, a binary key that is not UTF-8, composite keys with NULL
+    members and trigram grams. A 3,000-key batch, whose coupons fill
+    several SET images, merges to the aggregate's bytes as well."""
+    import base64
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex, TrigramIndex
+
+    nan = float("nan")
+    schema = T.StructType.fromDDL(
+        "s string, t string, f string, d double, l long, m decimal(12,2), "
+        "dt date, ts timestamp, b binary"
+    )
+    strs = [None, "", "a", "a" * 7, "a" * 8, "x" * 15, "y" * 16, "z" * 17, "q" * 31, "w" * 32]
+    strs += ["e" * 33, "é", "é" * 8, "日本", "😀", "😀a" * 5, "mixé日😀"]
+    grams = ["hello world", "héllo", "日本語テキスト", None, "ab", "😀😀😀x"]
+    dbls = [0.0, -0.0, nan, float(2**53 - 1), float(2**53 + 2), -1.5, 1e300, None, 1e-7]
+    longs = [2**53 - 1, 2**53 + 1, -1, -(2**63), 2**63 - 1, None, 0]
+    decs = [Decimal("1.50"), Decimal("-0.01"), Decimal("0.00"), None, Decimal("9999999999.99")]
+    dates = [dt.date(1970, 1, 1), dt.date(2024, 2, 29), None, dt.date(1969, 12, 31)]
+    stamps = [dt.datetime(2024, 1, 1, 12, 30, 15, 123456), dt.datetime(1970, 1, 1), None]
+    bins = [b"\xff\xfe", b"ok", b"\x80abc\xc3", b"", None]
+    cols = (strs, grams, strs[::-1], dbls, longs, decs, dates, stamps, bins)
+    batch = [tuple(c[i % len(c)] for c in cols) for i in range(40)]
+    stored = _stored_sketches(spark)
+    for mode in (None, "list", "set", "hll"):
+        st = Store.create(spark, str(tmp_path / f"s{mode}"), schema)
+        st.index("s", "hash")
+        st.index("t", TrigramIndex)
+        st.index("f", BloomIndex(m_bits=1 << 10, k=3))
+        st.index("d", "hash")
+        st.index("l", "btree")
+        st.index("m", "hash")
+        st.index("dt", BloomIndex(m_bits=1 << 10, k=3))
+        st.index("ts", "btree")
+        st.index("b", "hash")
+        st.index(("s", "d"))
+        for spec in st.manifest.indices.values():
+            spec.sketch = base64.b64encode(stored[mode]).decode() if mode else None
+        n, jobs = _jobs(spark, lambda: st.insert(batch))
+        assert n == 40 and jobs == 0, (mode, jobs)
+        for name, spec in st.manifest.indices.items():
+            got = base64.b64decode(spec.sketch)
+            keys = _reference_keys(spark, st, spec)
+            want, ndv = _reference_sketch(spark, spec, stored.get(mode), keys)
+            assert spec.ndv == ndv, (mode, name, spec.ndv, ndv)
+            assert _same_keys(spark, got, want), (mode, name)
+            if mode == "hll":
+                assert got == want, name
+    schema = T.StructType.fromDDL("l long, s string")
+    batch = [(i * 7919 % 100_003, f"key-{i}-é") for i in range(3_000)]
+    for mode in (None, "hll"):
+        st = Store.create(spark, str(tmp_path / f"big{mode}"), schema)
+        st.index("l", "hash")
+        st.index("s", "hash")
+        for spec in st.manifest.indices.values():
+            spec.sketch = base64.b64encode(stored[mode]).decode() if mode else None
+        n, jobs = _jobs(spark, lambda: st.insert(batch))
+        assert n == 3_000 and jobs == 0, (mode, jobs)
+        for name, spec in st.manifest.indices.items():
+            got = base64.b64decode(spec.sketch)
+            keys = _reference_keys(spark, st, spec)
+            want, ndv = _reference_sketch(spark, spec, stored.get(mode), keys)
+            assert _same_keys(spark, got, want), (mode, name)
+            if mode == "hll":
+                assert got == want and spec.ndv == ndv, name
+            else:
+                assert abs(spec.ndv - ndv) <= 0.02 * ndv, (name, spec.ndv, ndv)
+
+
+@pytest.mark.slow
+def test_store_mix_micro_insert_sketches_match_the_sketch_aggregate(spark, tmp_path):
+    """On the seed-11 ``store_mix`` store (90,000 base rows in 12 files,
+    a hash index on ``k`` and a btree on ``v``) ndv reads as it did when
+    the driver build sketched with a Spark aggregate: setup and the
+    DataFrame inserts take their sketches from the write, as before, and
+    each of three rounds' 100-row literal inserts, which takes no job,
+    merges its keys into the stored HLL-mode sketches to the bytes and
+    ndv the aggregate merges them to."""
+    import base64
+    import random
+    import sys
+
+    from pyspark.sql import types as T
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    import gen
+    import workloads
+
+    space = gen.RowSpace.from_seed(workloads.N_BASE, random.Random(11))
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL(gen.STORE_DDL))
+    st.ROWS_PER_FILE = workloads.FILE_ROWS
+    st.index("k", "hash")
+    st.index("v", "btree")
+    st.insert(space.frame(spark, 0, workloads.N_BASE))
+    assert len(st.manifest.files) == 12
+    lo = workloads.N_BASE
+    for _ in range(3):
+        st.insert(space.frame(spark, lo, lo + workloads.INSERT_ROWS))
+        lo += workloads.INSERT_ROWS
+        stored = {c: base64.b64decode(s.sketch) for c, s in st.manifest.indices.items()}
+        micro = [space.row(i) for i in range(lo, lo + workloads.MICRO_ROWS)]
+        n, jobs = _jobs(spark, lambda: st.insert(micro))
+        assert n == workloads.MICRO_ROWS and jobs == 0
+        lo += workloads.MICRO_ROWS
+        for column, spec in st.manifest.indices.items():
+            keys = _reference_keys(spark, st, spec, st.manifest.files[-1])
+            want, ndv = _reference_sketch(spark, spec, stored[column], keys)
+            assert base64.b64decode(spec.sketch) == want and spec.ndv == ndv, column
+
+
+def test_driver_index_builds_take_no_job(spark, tmp_path):
+    """Every driver index build sketches on the driver with no job: a
+    100-row literal insert into a store with hash, btree, composite,
+    bloom and trigram indexes, an ``index()`` backfill of a store below
+    ``DRIVER_INSERT_ROWS``, and a driver ``apply_changes`` of a delta the
+    driver holds."""
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex, TrigramIndex
+    from shortcut_spark.session import local_relation
+
+    schema = T.StructType.fromDDL("k long, v double, s string, g string")
+    rows = [(i, i / 3, f"s{i % 11}", f"gram text {i}") for i in range(100)]
+    st = Store.create(spark, str(tmp_path / "s"), schema)
+    st.index("k", "hash")
+    st.index("v", "btree")
+    st.index(("k", "s"))
+    st.index("s", BloomIndex(m_bits=1 << 10, k=3))
+    st.index("g", TrigramIndex)
+    n, jobs = _jobs(spark, lambda: st.insert(rows))
+    assert n == 100 and jobs == 0
+    leader = Store.create(spark, str(tmp_path / "leader"), schema)
+    vc = leader.manifest.version
+    leader.insert(rows)
+    follower = Store.create(spark, str(tmp_path / "follower"), schema)
+    follower.index("k", "hash")
+    follower.index("g", TrigramIndex)
+    follower.apply_changes(leader.changes(vc))
+    v0 = leader.manifest.version
+    leader.insert([(1_000 + i, 0.5, "x", "more grams") for i in range(20)])
+    leader.delete([eq("k", 7)])
+    _, jobs = _jobs(spark, lambda: leader.index("v", "btree"))
+    assert jobs == 0 and leader.manifest.indices["v"].ndv > 0
+    delta = leader.changes(v0)
+    delta = local_relation(spark, [delta.toArrow()], delta.schema)  # a delta the driver holds
+    got, jobs = _jobs(spark, lambda: follower.apply_changes(delta))
+    assert got == (20, 1) and jobs == 0
+    assert rows_of(follower.find([eq("k", 1_005)])) == [(1_005, 0.5, "x", "more grams")]
+    assert follower.find([eq("k", 7)]).count() == 0
 
 
 def test_posting_map_driver_read_matches_spark(spark, tmp_path):

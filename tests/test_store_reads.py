@@ -328,13 +328,10 @@ def test_no_library_code_reads_a_posting_map():
 # -- lint: an index key sketch is built in one of four places ---------------
 
 
-def test_sketch_cols_called_only_from_the_sketch_sites():
-    """An index's key sketch is observed in the Spark write of its batch
-    (``_observe_sketches``), aggregated by the driver build
-    (``_index_tables``) or taken by a distributed builder
-    (``_append_postings``, ``_append_blooms``). Any other caller of
-    ``_sketch_cols`` would be a new sketch job."""
-    callers = set()
+def _functions_using(attr: str = None, const=None) -> set:
+    """(file, innermost function) pairs of the library code that names the
+    attribute ``attr`` or holds the constant ``const``."""
+    found = set()
     for root, _, names in os.walk(_PKG):
         for name in names:
             if not name.endswith(".py"):
@@ -345,19 +342,43 @@ def test_sketch_cols_called_only_from_the_sketch_sites():
             for fn in ast.walk(tree):
                 if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     continue
+                inner = {
+                    id(n)
+                    for sub in ast.walk(fn)
+                    if sub is not fn and isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    for n in ast.walk(sub)
+                }
                 for node in ast.walk(fn):
-                    if (
-                        isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "_sketch_cols"
+                    if id(node) in inner:
+                        continue
+                    if (attr and isinstance(node, ast.Attribute) and node.attr == attr) or (
+                        const is not None and isinstance(node, ast.Constant) and node.value == const
                     ):
-                        callers.add((name, fn.name))
-    assert callers == {
+                        found.add((name, fn.name))
+    return found
+
+
+def test_sketch_cols_called_only_from_the_sketch_sites():
+    """An index's key sketch is observed in the Spark write of its batch
+    (``_observe_sketches``) or taken by a distributed builder
+    (``_append_postings``, ``_append_blooms``); the driver build sketches
+    on the driver (``hll``) with no job. Any other caller of
+    ``_sketch_cols`` would be a new sketch job, and ``hll_sketch_agg``
+    appears in ``_sketch_cols`` alone. The key string a sketch hashes is
+    encoded in one helper, ``_sketch_key``, for the Spark sketches and
+    the driver one alike."""
+    assert _functions_using("_sketch_cols") == {
         ("store.py", "_observe_sketches"),
-        ("store.py", "_index_tables"),
         ("store.py", "_append_postings"),
         ("store.py", "_append_blooms"),
-    }, callers
+    }
+    assert _functions_using("hll_sketch_agg") == {("store.py", "_sketch_cols")}
+    assert _functions_using("_sketch_key") == {
+        ("store.py", "_sketch_cols"),
+        ("store.py", "_index_tables"),
+    }
+    assert _functions_using(const="<null>") == {("store.py", "_sketch_key")}
+    assert _functions_using(const="\x1f") == {("store.py", "_sketch_key")}
 
 
 
