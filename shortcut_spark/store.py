@@ -49,6 +49,7 @@ import os
 import uuid
 from typing import Any, Callable, Iterable, Sequence
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -65,29 +66,149 @@ ROWID = "__rowid"
 __all__ = ["Store", "ROWID"]
 
 
-def _bloom_positions_py(key: Any, m_bits: int, k: int) -> list[int]:
-    """Driver-side twin of :func:`_bloom_positions_expr` — MUST stay
-    bit-identical with the Spark expression (same md5-of-"key:i" scheme)
-    so a probe computed here tests bitsets built there."""
+def _bloom_positions_py(keys: Sequence, m_bits: int, k: int):
+    """The k bit positions of each of ``keys`` in an ``m_bits``-bit bloom
+    filter, one row of an int64 array per key: position_i =
+    md5("<key>:<i>") taken as a 60-bit int, mod m. The one bloom hash:
+    the build (:func:`_index_part`) sets these bits and the probe tests
+    them. Each key's "<key>:" state is hashed once and copied per i, and
+    numpy reads the top 60 bits of every digest: twice the per-key speed
+    of parsing each hex digest (docs/SCALE.md, "One index kernel")."""
     import hashlib
 
-    return [
-        int(hashlib.md5(f"{key}:{i}".encode()).hexdigest()[:15], 16) % m_bits
-        for i in range(k)
-    ]
+    import numpy as np
+
+    suffixes = [str(i).encode() for i in range(k)]
+    out = bytearray()
+    for key in keys:
+        h = hashlib.md5(f"{key}:".encode())
+        for sfx in suffixes:
+            c = h.copy()
+            c.update(sfx)
+            out += c.digest()
+    top = np.frombuffer(bytes(out), ">u8")[::2] >> np.uint64(4)
+    return (top % np.uint64(m_bits)).astype(np.int64).reshape(-1, k)
 
 
-def _bloom_positions_expr(column: str, m_bits: int, k: int) -> Column:
-    """k bit positions per row, computed JVM-side: position_i =
-    md5("<key as string>:<i>") taken as a 60-bit int, mod m. md5 (not
-    xxhash64) because the driver-side probe must reproduce it exactly
-    with hashlib — portability beats speed for a per-row-at-write-time
-    hash."""
-    return F.expr(
-        f"transform(sequence(0, {k - 1}), i -> "
-        f"pmod(cast(conv(substring(md5(cast(concat(cast(`{column}` as string), ':', "
-        f"cast(i as string)) as binary)), 1, 15), 16, 10) as bigint), {m_bits}))"
-    )
+def _write_parquet(path: str, table, row_group_size=None) -> None:
+    """Write the arrow ``table`` as the parquet file ``path``, its dir made
+    when missing, under a hidden name renamed into place once complete:
+    a killed writer leaves no partial ``*.parquet`` for a listing."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    pq.write_table(table, tmp, row_group_size=row_group_size)
+    os.replace(tmp, path)
+
+
+def _index_part(table, plan: dict) -> tuple:
+    """The one index build kernel: an index's part of the arrow ``table``
+    (its member columns, its Spark-derived key ``plan["derived"]`` when
+    it has one, :meth:`Store._derived_keys`, and ``__file_id``) as
+    ``(part, lo, hi, coupons)``: the part in its written layout (None for
+    no rows), a posting part's range key [lo, hi] (None: unknown) and,
+    when ``plan["sketch"]``, its keys' HLL coupons (:mod:`.hll`).
+
+    A posting part holds the distinct ``(key, __file_id)`` rows under
+    Spark's grouping equality (:meth:`Store._distinct_rows`) sorted by
+    the range key, whose [min, max] ranks NaN on top
+    (:meth:`Store._min_max`); a nested key, which pyarrow can neither
+    group nor sort, is deduplicated by its derived string and left
+    unsorted. A trigram part holds each file's distinct grams, a bloom
+    part one bitset per file of its distinct non-NULL keys."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from . import hll
+
+    kind, derived, names = plan["kind"], plan["derived"], plan["schema"].names
+    nested = any(pa.types.is_nested(table.schema.field(c).type) for c in plan["members"])
+    fid = table.column("__file_id")
+    if kind in (TRIGRAM, BLOOM):
+        if kind == TRIGRAM:
+            grams = table.column(derived).combine_chunks()
+            key, fid = pc.list_flatten(grams), fid.take(pc.list_parent_indices(grams))
+        elif derived:
+            key = table.column(derived)
+        else:
+            key = pc.cast(table.column(plan["members"][0]), pa.string())
+        part = Store._distinct_rows(pa.table({"key": key, "__file_id": fid}))
+        part = part.filter(pc.is_valid(part.column("key")))
+        keys = part.column("key")
+    else:
+        part = table.select([*plan["members"], "__file_id"]).rename_columns(names)
+        if derived:
+            part = part.append_column("__d", table.column(derived))
+        part = Store._distinct_rows(part, ["__d", "__file_id"] if nested else names)
+        keys = part.column("__d") if derived else part.column(0)
+    cps = None
+    if plan["sketch"]:
+        # an integer key is sketched as its string, a string or binary one as its bytes
+        cps = hll.coupons(pc.cast(keys, pa.string()) if pa.types.is_integer(keys.type) else keys)
+    if not part.num_rows:
+        return None, None, None, cps
+    lo = hi = None
+    if kind == BLOOM:
+        # each distinct key is hashed once, whatever files hold it
+        m_bits, k = plan["bloom"]
+        enc = pc.dictionary_encode(keys.combine_chunks())
+        pos = _bloom_positions_py(enc.dictionary.to_pylist(), m_bits, k)[enc.indices.to_numpy()]
+        fids = part.column("__file_id").to_numpy()
+        bits = {}
+        for f in np.unique(fids):
+            b = np.zeros(m_bits, np.uint8)
+            b[pos[fids == f].ravel()] = 1
+            bits[int(f)] = np.packbits(b, bitorder="little").tobytes()
+        part = pa.table(
+            [pa.array(list(bits), pa.int32()), pa.array(list(bits.values()), pa.binary())],
+            schema=plan["schema"],
+        )
+    elif nested:
+        # a nested key keeps its own nullability: arrow casts no nullable
+        # list element to Spark's non-null one
+        part = part.select(names)
+    else:
+        lo, hi = Store._min_max(part.column(0))
+        part = part.select(names).cast(plan["schema"])
+        part = part.sort_by([(names[0], "ascending")], null_placement="at_end")
+    return part, lo, hi, cps
+
+
+# one row per index a build task wrote: the index's position, the part
+# file (None when the task's rows gave it none), its range key [lo, hi]
+# as JSON and the HLL image of its keys
+_TASK_SCHEMA = pa.schema(
+    [("i", pa.int32()), ("path", pa.string()), ("lo", pa.string()), ("hi", pa.string()),
+     ("sketch", pa.binary())]
+)
+
+
+def _index_task(batches, plans: Sequence[dict], dirs: Sequence[str]):
+    """One index build task, on the driver or in a ``mapInArrow`` task:
+    the kernel (:func:`_index_part`) over the arrow record ``batches`` for
+    each index in ``plans``, each part written as a file of its own in
+    ``dirs``, yielding one record batch of ``_TASK_SCHEMA`` rows."""
+    from . import hll
+
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    out = []
+    for i, (plan, d) in enumerate(zip(plans, dirs)):
+        part, lo, hi, cps = _index_part(table, plan)
+        path = None
+        if part is not None:
+            path = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
+            # bounded row groups let a pushed-down key probe skip most of
+            # a big part: a point probe of a 1M-posting part took 38.5 ms
+            # as one row group and 3.2 ms in 32,768-row groups
+            # (docs/SCALE.md, "One posting probe")
+            _write_parquet(path, part, row_group_size=32_768)
+        lo, hi = (json.dumps(v) if Store._stats_ok(v) else None for v in (lo, hi))
+        sketch = None if cps is None else hll.image(cps)
+        out.append({"i": i, "path": path, "lo": lo, "hi": hi, "sketch": sketch})
+    yield pa.RecordBatch.from_pylist(out, schema=_TASK_SCHEMA)
 
 
 def _spark_key(v):
@@ -618,8 +739,8 @@ class Store:
         Spark, with every index's key sketch observed in the write
         (:meth:`_observe_sketches`); the written batch is then indexed
         from a pyarrow read of its index columns with no job, up to each
-        index kind's bound (:meth:`_index_files`: one posting shard,
-        ``POSTING_SHARD_ROWS``, for hash, btree and composite indexes).
+        index kind's bound, and above it in one Spark job
+        (:meth:`_index_files`).
         """
         schema = self.manifest.schema
         if isinstance(rows, DataFrame):
@@ -718,9 +839,11 @@ class Store:
     # file, footer-based registration, index postings and key sketches —
     # no Spark job but the unique probe's scan of a big table. It bounds
     # the driver index build (_index_tables) of a batch whose keys it
-    # sketches on the driver, and of a trigram index; an index whose
-    # sketch the batch's Spark write observed is built there up to
-    # POSTING_SHARD_ROWS or DRIVER_BLOOM_ROWS (_index_files). It also
+    # sketches on the driver and of an index whose kernel needs a
+    # Spark-derived key (a trigram's grams, a nested key's JSON), and by
+    # its distinct keys a bloom index; any other index whose sketch the
+    # batch's Spark write observed is built there up to
+    # POSTING_SHARD_ROWS rows (_index_files). It also
     # bounds the rows a lookup, a delete or a CDC apply reads on the
     # driver (_driver_tables): at narrow rows the driver read of a lookup
     # beats a Spark job at every size to 40,000 rows, at ~530-byte rows
@@ -1563,67 +1686,45 @@ class Store:
         Observation of the Spark write of ``files``
         (:meth:`_observe_sketches`; a trigram index is not in it), the
         build (``True`` or None), or nowhere (``False``: ndv stays, as for
-        a copy-on-write delete's survivors, whose keys it holds). An index
-        on :meth:`_driver_atomic_type` columns is built on the driver
-        (:meth:`_index_tables`), from ``tables`` (one arrow table per file
-        the driver wrote) or a pyarrow read of the written files, with no
-        job: up to ``POSTING_SHARD_ROWS`` rows (``DRIVER_BLOOM_ROWS`` for
-        a bloom index) when the write observed its sketch, and up to
-        ``DRIVER_INSERT_ROWS`` when the build sketches it on the driver or
-        the index is a trigram one (its grams fan out). Any other index
-        writes its part with a Spark job of its own. The files are read without the
-        tombstone filter: fresh files hold no tombstoned rowid, and a
-        posting for a dead row (an index backfill after a deferred delete)
-        is only a superset, the state a deferred delete leaves anyway."""
+        a copy-on-write delete's survivors, whose keys it holds).
+
+        One kernel (:func:`_index_part`) builds every index, in one of two
+        venues. The driver (:meth:`_index_tables`, no job) takes, up to
+        ``POSTING_SHARD_ROWS`` rows, an index whose sketch the write
+        observed and whose kernel needs no derived key
+        (:meth:`_derived_keys`), unless it is a bloom index of more than
+        ``DRIVER_INSERT_ROWS`` distinct keys (its ndv: the build hashes
+        each one); it takes any other index up to ``DRIVER_INSERT_ROWS``
+        rows, so a derived key's projection stays that small. The
+        executors (:meth:`_index_executors`) take the rest, in one Spark
+        job. The files are read without the tombstone filter: fresh files
+        hold no tombstoned rowid, and a posting for a dead row (an index
+        backfill after a deferred delete) is only a superset, the state a
+        deferred delete leaves anyway."""
         for spec in specs:
             spec.rows = self.manifest.total_rows
         if not specs or not files:
             return
         st = sketch.get if isinstance(sketch, Observation) else {}
         n_rows = sum(f.rows for f in files)
-        need, local = set(), []  # indexes the build sketches; built on the driver
+        need, local, rest = set(), [], []  # indexes the build sketches; each venue's
         for i, spec in enumerate(specs):
             if f"__sk{i}" in st:
-                self._refresh_index_stats(spec, st, suffix=i)
+                self._refresh_index_stats(spec, st, i)
             elif sketch is not False:
                 need.add(i)
-            if i in need or spec.kind == TRIGRAM:
-                bound = min(self.DRIVER_INSERT_ROWS, self.POSTING_SHARD_ROWS)
-            else:
-                bound = self.DRIVER_BLOOM_ROWS if spec.kind == BLOOM else self.POSTING_SHARD_ROWS
-            if n_rows <= bound and all(
-                self._driver_atomic_type(self.manifest.schema[c].dataType)
-                for c in spec.member_columns
+            bound = min(self.DRIVER_INSERT_ROWS, self.POSTING_SHARD_ROWS)
+            if i not in need and self._derived_keys(spec, False) is None and (
+                spec.kind != BLOOM or spec.ndv <= self.DRIVER_INSERT_ROWS
             ):
-                local.append(i)
+                bound = self.POSTING_SHARD_ROWS
+            (local if n_rows <= bound else rest).append(i)
         if local:
-            if tables is None:
-                cols = list(dict.fromkeys(c for i in local for c in specs[i].member_columns))
-                schema = T.StructType([self.manifest.schema[c] for c in cols])
-                tables = [self._arrow_read([self._abs(f.path)], schema) for f in files]
-            self._index_tables(
-                [specs[i] for i in local],
-                files,
-                tables,
-                {j for j, i in enumerate(local) if i in need},
-            )
-        rest = [i for i in range(len(specs)) if i not in local]
-        if not rest:
-            return
-        # a literal path → id map tags each row with its file id, so the
-        # build broadcasts no Python-list DataFrame (each such broadcast is
-        # a Spark job of its own)
-        ids = F.create_map(
-            *[x for f in files for x in (F.lit(self._abs(f.path)), F.lit(f.id))]
-        )
-        src = self._read_files(files, with_meta=True, live=False).withColumn(
-            "__file_id", ids[F.col("__file_path")].cast("int")
-        )
-        for i in rest:
-            if specs[i].kind == BLOOM:
-                self._append_blooms(specs[i], src, i in need)
-            else:
-                self._append_postings(specs[i], src, n_rows, i in need)
+            sub = [specs[i] for i in local]
+            self._index_tables(sub, files, {j for j, i in enumerate(local) if i in need}, tables)
+        if rest:
+            sub = [specs[i] for i in rest]
+            self._index_executors(sub, files, {j for j, i in enumerate(rest) if i in need})
 
     def _observe_sketches(self, df: DataFrame) -> tuple[DataFrame, Observation | None]:
         """``df``, a batch about to be written, with every index's key
@@ -1633,7 +1734,7 @@ class Store:
         the batch's rows, a key set equals the distinct postings' once a
         float key is sketched as ``c + 0.0``, which folds ``-0.0`` into
         ``0.0`` as ``distinct`` does (every NaN casts to one string). A
-        bloom index sketches its raw column, as its builders do; a trigram
+        bloom index sketches its raw column, as its build does; a trigram
         index is left to its build, since ``observe`` cannot explode its
         grams."""
         cols = []
@@ -1651,153 +1752,209 @@ class Store:
         """The member columns of ``spec`` (each column ``c`` read as
         ``col(c)``) as a batch's rows sketch them: a float member as
         ``c + 0.0`` (except in a bloom index, which sketches its raw
-        column, as its builders do)."""
+        column, as its build does), and an array, struct or map member
+        as its JSON, since Spark casts both ``array('a, b')`` and
+        ``array('a', 'b')`` to the string ``[a, b]``."""
         keys = []
         for c in spec.member_columns:
             dt = self.manifest.schema[c].dataType
-            fold = spec.kind != BLOOM and isinstance(dt, (T.FloatType, T.DoubleType))
-            keys.append(col(c) + F.lit(0.0).cast(dt) if fold else col(c))
+            if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
+                keys.append(F.to_json(col(c)))
+            elif spec.kind != BLOOM and isinstance(dt, (T.FloatType, T.DoubleType)):
+                keys.append(col(c) + F.lit(0.0).cast(dt))
+            else:
+                keys.append(col(c))
         return keys
+
+    def _derived_keys(
+        self, spec: IndexSpec, sketch: bool
+    ) -> Callable[[Callable[[str], Column]], Column] | None:
+        """How the key that the kernel takes from Spark for ``spec`` is
+        built from its member columns (each column ``c`` read as
+        ``col(c)``, in either venue), or None when pyarrow has all it
+        needs: a trigram index's grams (:meth:`_grams`); a bloom index's
+        string key unless pyarrow casts it as Spark does (strings and
+        integers); a posting index's sketch string (:meth:`_sketch_key`)
+        when ``sketch`` and pyarrow cannot cast it (a binary key is
+        sketched as its bytes), and always for an array, struct or map
+        member, whose rows the kernel tells apart by that string."""
+        dts = [self.manifest.schema[c].dataType for c in spec.member_columns]
+        casts = len(dts) == 1 and isinstance(
+            dts[0], (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        )
+        if spec.kind == TRIGRAM:
+            return lambda col: self._grams(spec, col(spec.column))
+        if spec.kind == BLOOM:
+            return None if casts else lambda col: col(spec.column).cast("string")
+        nested = any(isinstance(dt, (T.ArrayType, T.StructType, T.MapType)) for dt in dts)
+        if nested or (sketch and not (casts or dts == [T.BinaryType()])):
+            return lambda col: self._sketch_key(self._sketch_members(spec, col))
+        return None
+
+    def _kernel_plans(self, specs: Sequence[IndexSpec], sketch: set[int]) -> tuple:
+        """What the kernel (:func:`_index_part`) needs to know of each of
+        ``specs``, picklable for an executor, and the derived keys
+        (:meth:`_derived_keys`) to compute, by column name. An index
+        sketches when its position is in ``sketch``; it reads no member
+        column where its derived key stands for them."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        plans, derived = [], {}
+        for i, spec in enumerate(specs):
+            fn = self._derived_keys(spec, i in sketch)
+            if fn is not None:
+                derived[f"__d{i}"] = fn
+            stands = spec.kind == TRIGRAM or (spec.kind == BLOOM and fn is not None)
+            plans.append({
+                "kind": spec.kind,
+                "members": [] if stands else list(spec.member_columns),
+                "derived": None if fn is None else f"__d{i}",
+                "sketch": i in sketch,
+                "schema": to_arrow_schema(self._posting_schema(spec)),
+                "bloom": spec.kind == BLOOM and (int(spec.params["m_bits"]), int(spec.params["k"])),
+            })
+        return plans, derived
 
     def _index_tables(
         self,
         specs: Sequence[IndexSpec],
         files: Sequence[DataFile],
-        tables: list,
         sketch: set[int],
+        tables: list | None = None,
     ) -> None:
-        """The driver index build: every index of ``files``, whose rows the
-        driver holds (``tables``, one arrow table per file, with at least
-        each index's columns), with no Spark job. The postings and each
-        part's range key [min, max] are built on the driver with the
-        distributed build's semantics: the distinct postings
-        (:meth:`_distinct_rows`) fold ``-0.0`` into ``0.0`` and every NaN
-        into one, as ``distinct`` does, and :meth:`_min_max` ranks NaN
-        above every number, as Spark's ``min``/``max`` do. Trigram grams,
-        bloom string keys and sketch key strings (:meth:`_sketch_key`)
-        that pyarrow cannot cast as Spark does come from one Spark
-        projection over a one-row ``LocalRelation`` of the index columns
-        as arrays, which ``ConvertToLocalRelation`` evaluates on the
-        driver; one row of arrays crosses to Python as one Row, not one
-        per batch row. The indexes at the positions in ``sketch`` have
-        their keys sketched on the driver (:mod:`.hll`) in the order the
-        build takes them and merged into their stored sketches
-        (:meth:`_merge_sketches`)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        """The driver venue of the index build, with no job: the kernel as
+        one task (:func:`_index_task`) over the rows of ``files`` that the
+        driver holds (``tables``, one arrow table per file with at least
+        each index's columns) or reads with pyarrow. The derived keys come
+        from one Spark projection over a one-row ``LocalRelation`` of the
+        rows as an array of structs, which ``ConvertToLocalRelation``
+        evaluates on the driver: one Row crosses to Python, not one per
+        batch row."""
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        from . import hll
-
+        if tables is None:
+            cols = list(dict.fromkeys(c for s in specs for c in s.member_columns))
+            schema = T.StructType([self.manifest.schema[c] for c in cols])
+            tables = [self._arrow_read([self._abs(f.path)], schema) for f in files]
         src = pa.concat_tables(
             [
                 t.append_column("__file_id", pa.array([f.id] * t.num_rows, pa.int32()))
                 for f, t in zip(files, tables)
             ]
-        )
-        # what pyarrow casts to a string as Spark does
-        arrow_cast = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-        def casts(s: IndexSpec, types=arrow_cast) -> bool:
-            return len(s.member_columns) == 1 and isinstance(
-                self.manifest.schema[s.member_columns[0]].dataType, types
-            )
-
-        def arr(c: str) -> Column:
-            return F.col(f"__a_{c}")
-
-        derived, members = {}, set()
-        for i, s in enumerate(specs):
-            if s.kind == TRIGRAM:
-                derived[f"__x{i}"] = F.transform(arr(s.column), lambda x: self._grams(s, x))
-            elif s.kind == BLOOM and not casts(s):
-                derived[f"__x{i}"] = arr(s.column).cast("array<string>")
-            elif i in sketch and not casts(s, (*arrow_cast, T.BinaryType)):
-                # (a binary key is sketched as its bytes, which pyarrow has)
-                derived[f"__k{i}"] = F.transform(
-                    arr(s.member_columns[0]),
-                    lambda _, j: self._sketch_key(self._sketch_members(s, lambda c: arr(c)[j])),
-                )
-            else:
-                continue
-            members.update(s.member_columns)
+        ).combine_chunks()
+        plans, derived = self._kernel_plans(specs, sketch)
         if derived:
-            cols = [c for c in self.colnames if c in members]
-            offsets = pa.array([0, src.num_rows], pa.int32())
-            arrays = {
-                f"__a_{c}": pa.ListArray.from_arrays(offsets, src.column(c).combine_chunks())
-                for c in cols
-            }
-            rel = local_relation(
-                self.spark,
-                [pa.table(arrays)],
-                T.StructType(
-                    [
-                        T.StructField(f"__a_{c}", T.ArrayType(self.manifest.schema[c].dataType))
-                        for c in cols
-                    ]
-                ),
+            cols = [
+                c
+                for c in self.colnames
+                if any(c in s.member_columns for s, p in zip(specs, plans) if p["derived"])
+            ]
+            rows = pa.ListArray.from_arrays(
+                pa.array([0, src.num_rows], pa.int32()),
+                pa.StructArray.from_arrays([src.column(c).combine_chunks() for c in cols], cols),
             )
-            got = rel.select(*[e.alias(n) for n, e in derived.items()]).collect()[0]
-        images = {}
-        for i, spec in enumerate(specs):
-            if spec.kind in (TRIGRAM, BLOOM):
-                fid = src.column("__file_id")
-                if spec.kind == TRIGRAM:
-                    by_file: dict[int, set] = {}
-                    for f, gs in zip(fid.to_pylist(), got[f"__x{i}"]):
-                        by_file.setdefault(f, set()).update(gs)
-                    key = pa.array([g for gs in by_file.values() for g in gs], pa.string())
-                    fid = pa.array([f for f, gs in by_file.items() for _ in gs], pa.int32())
-                elif f"__x{i}" in derived:
-                    key = pa.array(got[f"__x{i}"], pa.string())
-                else:
-                    key = pc.cast(src.column(spec.column), pa.string())
-                part = self._distinct_rows(pa.table({"key": key, "__file_id": fid}))
-                part = part.filter(pc.is_valid(part.column("key")))
-            else:
-                names = self._posting_schema(spec).names
-                part = self._distinct_rows(
-                    src.select([*spec.member_columns, "__file_id"]).rename_columns(names)
-                )
-            part_rel = self._write_index_part(spec, part)
-            if part_rel is not None and spec.kind != BLOOM:
-                self._set_part_range(spec, part_rel, *self._min_max(part.column(0)))
-            if i not in sketch:
-                continue
-            if f"__k{i}" in derived:
-                keys = pa.array(got[f"__k{i}"], pa.string())
-            elif spec.kind in (TRIGRAM, BLOOM) or casts(spec, T.BinaryType):
-                keys = part.column(0)
-            else:
-                keys = pc.cast(part.column(0), pa.string())
-            images[i] = hll.image(hll.coupons(keys))
-        if images:
-            st = self._merge_sketches(specs, images)
-            for i in images:
-                self._refresh_index_stats(specs[i], st, suffix=i)
+            rows = pa.table({"__r": rows})
+            # the arrow schema's own nullability: a nested column read with
+            # pyarrow keeps nullable elements Spark's type may not allow
+            rel = local_relation(
+                self.spark, [rows], from_arrow_schema(rows.schema, prefer_timestamp_ntz=True)
+            )
+            got = rel.select(
+                *[
+                    F.transform(F.col("__r"), lambda r: fn(lambda c: r[c])).alias(n)
+                    for n, fn in derived.items()
+                ]
+            ).collect()[0]
+            for p in plans:
+                if p["derived"]:
+                    t = pa.list_(pa.string()) if p["kind"] == TRIGRAM else pa.string()
+                    src = src.append_column(p["derived"], pa.array(got[p["derived"]], t))
+        rels = [self._part_rel(s) for s in specs]
+        out = _index_task(src.to_batches(), plans, [self._abs(r) for r in rels])
+        self._add_parts(specs, rels, [r for b in out for r in b.to_pylist()], sketch)
 
-    def _merge_sketches(self, specs: Sequence[IndexSpec], images: dict[int, bytes]) -> dict:
-        """The driver-built sketch image (:func:`.hll.image`) of each index
-        ``specs[i]`` in ``images`` merged into its stored sketch (an empty
-        one when it has none), as the ``__sk{i}`` / ``__ndv{i}`` columns of
-        :meth:`_refresh_index_stats`: ``hll_union`` of two literals,
-        projected over the one-row ``LocalRelation`` of ``VALUES`` —
-        evaluated on the driver, with no job (``local_relation`` costs
-        ~35 ms more to hand Spark its one row)."""
+    def _index_executors(
+        self, specs: Sequence[IndexSpec], files: Sequence[DataFile], sketch: set[int]
+    ) -> None:
+        """The executor venue of the index build, one Spark job: a
+        ``mapInArrow`` over the read of ``files`` runs the kernel in each
+        task (:func:`_index_task`) over its rows' member columns, derived
+        keys and file ids, and each task writes a shard of each part, so a
+        posting needs no shuffle. A data file split across tasks gives a
+        bloom index several bitsets, which the probe ORs
+        (:meth:`_bloom_bitsets`), and a posting index duplicate postings,
+        a superset.
+
+        The shards of one part overlap in key, so a point probe reads a
+        footer and a row group of each: the read is coalesced to one task
+        per core or per ``POSTING_SHARD_ROWS`` rows, whichever is more, so
+        a backfill over hundreds of small files writes as many shards as
+        the cores, not one per file (docs/SCALE.md, "One index
+        kernel")."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        # a literal path → id map tags each row with its file id, so the
+        # build broadcasts no Python-list DataFrame (each such broadcast is
+        # a Spark job of its own)
+        ids = F.create_map(
+            *[x for f in files for x in (F.lit(self._abs(f.path)), F.lit(f.id))]
+        )
+        src = self._read_files(files, with_meta=True, live=False).withColumn(
+            "__file_id", ids[F.col("__file_path")].cast("int")
+        )
+        plans, derived = self._kernel_plans(specs, sketch)
+        cols = [*dict.fromkeys(c for p in plans for c in p["members"])]
+        cols += [fn(F.col).alias(n) for n, fn in derived.items()]
+        rels = [self._part_rel(s) for s in specs]
+        task = functools.partial(_index_task, plans=plans, dirs=[self._abs(r) for r in rels])
+        cores = self.spark.sparkContext.defaultParallelism
+        n_rows = sum(f.rows for f in files)
+        rows = (
+            src.select(*cols, "__file_id")
+            .coalesce(max(cores, n_rows // max(1, self.POSTING_SHARD_ROWS) + 1))
+            .mapInArrow(task, from_arrow_schema(_TASK_SCHEMA))
+            .collect()
+        )
+        self._add_parts(specs, rels, [r.asDict() for r in rows], sketch)
+
+    def _add_parts(
+        self, specs: Sequence[IndexSpec], rels: Sequence[str], rows: list[dict], sketch: set[int]
+    ) -> None:
+        """Register what the build tasks of either venue wrote
+        (``_TASK_SCHEMA`` rows): the part ``rels[i]`` of each index that a
+        task wrote a shard of, with the range key [min, max] over its
+        shards' (NaN on top, :meth:`_min_max`); and for the indexes at the
+        positions in ``sketch``, the union of the tasks' sketch images
+        with the stored sketch (an empty one when it has none):
+        ``hll_union`` of literals over the one-row ``LocalRelation`` of
+        ``VALUES``, evaluated on the driver with no job
+        (``local_relation`` costs ~35 ms more to hand Spark its row)."""
         import base64
 
         from . import hll
 
         cols = []
-        for i, img in images.items():
-            stored = base64.b64decode(specs[i].sketch) if specs[i].sketch else hll.EMPTY
-            sk = F.hll_union(F.lit(bytearray(stored)), F.lit(bytearray(img)))
-            cols += [sk.alias(f"__sk{i}"), F.hll_sketch_estimate(sk).alias(f"__ndv{i}")]
-        return self.spark.sql("VALUES (0)").select(*cols).collect()[0].asDict()
+        for i, (spec, rel) in enumerate(zip(specs, rels)):
+            got = [r for r in rows if r["i"] == i]
+            if any(r["path"] for r in got):
+                spec.parts.append(rel)
+                bounds = [json.loads(v) for r in got for v in (r["lo"], r["hi"]) if v is not None]
+                if bounds:
+                    spec.part_stats[rel] = list(self._min_max(pa.array(bounds)))
+            if i in sketch:
+                sk = F.lit(bytearray(base64.b64decode(spec.sketch) if spec.sketch else hll.EMPTY))
+                for r in got:
+                    sk = F.hll_union(sk, F.lit(bytearray(r["sketch"])))
+                cols += [sk.alias(f"__sk{i}"), F.hll_sketch_estimate(sk).alias(f"__ndv{i}")]
+        if cols:
+            st = self.spark.sql("VALUES (0)").select(*cols).collect()[0].asDict()
+            for i in sketch:
+                self._refresh_index_stats(specs[i], st, i)
 
     @staticmethod
-    def _distinct_rows(table):
-        """The distinct rows of the arrow ``table`` under Spark's grouping
+    def _distinct_rows(table, by: Sequence[str] | None = None):
+        """The rows of the arrow ``table`` distinct in the columns ``by``
+        (all when None), the first of each in row order, under Spark's grouping
         equality: a float column folds ``-0.0`` into ``0.0`` and every NaN
         into one value, and NULL is one value in every column. The rows
         are grouped by each column's dictionary code, NULL encoded as a
@@ -1814,10 +1971,11 @@ class Store:
                 col = pc.add(col, pa.scalar(0.0, col.type))
                 col = pc.if_else(pc.is_nan(col), pa.scalar(float("nan"), col.type), col)
                 table = table.set_column(j, name, col)
-            codes[f"c{j}"] = pc.dictionary_encode(col, null_encoding="encode").indices
+            if by is None or name in by:
+                codes[f"c{j}"] = pc.dictionary_encode(col, null_encoding="encode").indices
         codes["row"] = pa.array(np.arange(table.num_rows, dtype=np.int64))
         first = pa.table(codes).group_by(list(codes)[:-1]).aggregate([("row", "min")])
-        return table.take(first["row_min"])
+        return table.take(np.sort(first["row_min"].to_numpy()))
 
     @staticmethod
     def _min_max(values) -> tuple:
@@ -1832,155 +1990,6 @@ class Store:
             hi = float("nan")
             lo = hi if lo is None else lo
         return lo, hi
-
-    def _write_index_part(self, spec: IndexSpec, part) -> str | None:
-        """Write one index part from ``part``, an arrow table of its
-        distinct postings (the posting schema's columns; ``key`` and
-        ``__file_id`` for a bloom index) with pyarrow; returns the part,
-        or None for no rows. The posting rows are sorted by the range key.
-        A bloom index packs one bitset per file here with
-        :func:`_bloom_positions_py`, the probe's bit-identical hash."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        if not part.num_rows:
-            return None
-        if spec.kind == BLOOM:
-            # each distinct key is hashed once, whatever files hold it
-            m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
-            enc = pc.dictionary_encode(part.column("key").combine_chunks())
-            pos = np.array(
-                [_bloom_positions_py(key, m_bits, k) for key in enc.dictionary.to_pylist()],
-                np.int64,
-            ).reshape(-1, k)[enc.indices.to_numpy()]
-            fids = part.column("__file_id").to_numpy()
-            bits = {}
-            for fid in np.unique(fids):
-                b = np.zeros(m_bits, np.uint8)
-                b[pos[fids == fid].ravel()] = 1
-                bits[int(fid)] = np.packbits(b, bitorder="little").tobytes()
-            table = pa.table({
-                "__file_id": pa.array(list(bits), pa.int32()),
-                "bloom": pa.array(list(bits.values()), pa.binary()),
-            })
-        else:
-            schema = self._posting_schema(spec)
-            table = (
-                part.select(schema.names)
-                .cast(to_arrow_schema(schema))
-                .sort_by([(schema.names[0], "ascending")], null_placement="at_end")
-            )
-        part_rel = self._part_rel(spec)
-        # bounded row groups let a pushed-down key probe skip most of a
-        # big part: a point probe of a 1M-posting part took 38.5 ms as one
-        # row group and 3.2 ms in 32,768-row groups (docs/SCALE.md, "One
-        # posting probe")
-        self._write_arrow(part_rel, table, row_group_size=32_768)
-        spec.parts.append(part_rel)
-        return part_rel
-
-    def _append_postings(
-        self, spec: IndexSpec, src: DataFrame, n_rows: int, sketch: bool
-    ) -> None:
-        """Distributed posting build of one index for a batch of ``n_rows``
-        rows that :meth:`_index_tables` does not take; the key sketch only
-        when ``sketch``."""
-        if spec.kind == TRIGRAM:
-            # inverted n-gram postings: every distinct trigram of every
-            # value, deduped per file — key space bounded by alphabet³,
-            # not ndv. Values shorter than 3 chars contribute nothing
-            # (no gram to look up; such probes are residual-only anyway).
-            postings = src.select(
-                F.explode(F.array_distinct(self._grams(spec))).alias("key"), "__file_id"
-            )
-        else:
-            postings = src.select(
-                *[
-                    F.col(c).alias(n)
-                    for c, n in zip(spec.member_columns, self._posting_schema(spec).names)
-                ],
-                "__file_id",
-            )
-        postings = postings.distinct()
-        rkey = postings.columns[0]
-        keys = [F.col(c) for c in postings.columns[:-1]]
-        stats = [F.min(rkey).alias("__lo"), F.max(rkey).alias("__hi")]
-        if sketch:
-            stats += self._sketch_cols(spec, keys)
-        part_rel = self._part_rel(spec)
-        if n_rows <= self.POSTING_SHARD_ROWS:
-            # posting rows ≤ batch rows ≤ one shard, so no count is needed
-            # for the shard decision: the stats agg rides the posting WRITE
-            # itself via observe() — one job, no persist. Sorting is safe
-            # (row order inside a posting part is semantically irrelevant)
-            # and keeps tight per-file footer ranges.
-            obs = Observation()
-            postings.observe(obs, *stats).sortWithinPartitions(rkey).write.parquet(
-                self._abs(part_rel)
-            )
-            spec.parts.append(part_rel)
-            self._refresh_index_stats(spec, obs.get, part_rel)
-            return
-        postings = postings.persist()
-        ranges = _RangeSplit(postings.schema, [rkey])
-        try:
-            st = postings.agg(F.count(F.lit(1)).alias("__n"), *stats, *ranges.aggs)
-            st = st.collect()[0].asDict()
-            # range-shard the part so every output file covers a disjoint
-            # key range: a point probe's pushed-down key predicate then
-            # reads ~one shard's row groups, keeping probe IO sublinear in
-            # posting size however large the part grows
-            n = int(st["__n"] or 0)
-            n_shards = min(64, max(1, n // self.POSTING_SHARD_ROWS + 1))
-            out = postings
-            if n_shards > 1 and self._stats_ok(st["__lo"]) and self._stats_ok(st["__hi"]):
-                out = ranges.split(postings, n_shards, [st])
-            out.sortWithinPartitions(rkey).write.parquet(self._abs(part_rel))
-            spec.parts.append(part_rel)
-            self._refresh_index_stats(spec, st, part_rel)
-        finally:
-            postings.unpersist()
-
-    def _append_blooms(self, spec: IndexSpec, src: DataFrame, sketch: bool) -> None:
-        """Distributed bloom build for a batch that :meth:`_index_tables`
-        does not take: one bitset per data file, appended as an index part with
-        rows ``(__file_id, bloom)``. k bit positions per row (JVM-side md5
-        expr), distinct per file, packed to a binary bitset by a tiny UDF
-        that runs once per FILE (not per row); the key sketch, when
-        ``sketch``, rides the same job via observe()."""
-        m_bits = int(spec.params["m_bits"])
-        k = int(spec.params["k"])
-        obs = Observation()
-        if sketch:
-            src = src.observe(obs, *self._sketch_cols(spec, [F.col(spec.column)]))
-        positions = (
-            src.filter(F.col(spec.column).isNotNull())
-            .select(
-                "__file_id",
-                F.explode(_bloom_positions_expr(spec.column, m_bits, k)).alias("pos"),
-            )
-            .distinct()
-        )
-
-        def _pack(pos_list):
-            bits = bytearray(m_bits // 8)
-            for p in pos_list:
-                bits[p >> 3] |= 1 << (p & 7)
-            return bytes(bits)
-
-        pack = F.udf(_pack, T.BinaryType())
-        part_rel = self._part_rel(spec)
-        (
-            positions.groupBy("__file_id")
-            .agg(F.collect_list("pos").alias("pos"))
-            .select("__file_id", pack("pos").alias("bloom"))
-            .write.parquet(self._abs(part_rel))
-        )
-        spec.parts.append(part_rel)
-        if sketch:
-            self._refresh_index_stats(spec, obs.get)
 
     def _part_rel(self, spec: IndexSpec) -> str:
         prefix = "b" if spec.kind == BLOOM else "p"
@@ -2001,19 +2010,15 @@ class Store:
             F.transform(F.sequence(F.lit(1), F.length(c) - 2), lambda i: c.substr(i, F.lit(3)))
         )
 
-    # posting parts are range-sharded into files of ~this many rows so a
-    # pushed-down point probe reads one shard, not the whole part. A batch
-    # whose key sketches need no job builds its postings on the driver up
-    # to one shard: on hash and btree indexes the driver build beats the
-    # per-index Spark jobs at every size swept to 1,000,000 rows
-    # (docs/SCALE.md, "Index builds inside the write")
+    # an index whose key sketch the batch's Spark write observed and
+    # whose kernel needs no Spark-derived key is built on the driver, as
+    # one part file, up to this many rows (a bloom index only up to
+    # DRIVER_INSERT_ROWS distinct keys); above it every executor task
+    # writes a shard of the part, a file of its own, one task per core or
+    # per this many rows, whichever is more (_index_files). The driver
+    # build beat the per-index Spark jobs at every size swept to
+    # 1,000,000 rows (docs/SCALE.md, "Index builds inside the write")
     POSTING_SHARD_ROWS = 1_000_000
-
-    # the driver bloom build of such a batch hashes every distinct key k
-    # times with hashlib (~17 µs a key at k = 7): on all-distinct keys it
-    # beats the Spark builder's one job at 50,000 rows and ties it near
-    # 70,000 (docs/SCALE.md, "Index builds inside the write")
-    DRIVER_BLOOM_ROWS = 50_000
 
     # introspection: True when the last changes()/diff() on this instance
     # served its delete tier from the change-data-feed changelog, False
@@ -2042,10 +2047,6 @@ class Store:
         orderable types whose Python comparisons agree with SQL ordering
         (the DataFile.stats convention) — numbers and strings."""
         return isinstance(v, (int, float, str)) and not isinstance(v, bool)
-
-    @staticmethod
-    def _stats_val(v):
-        return v if isinstance(v, (int, str)) else float(v)
 
     @staticmethod
     def _sketch_key(keys: Sequence[Column]) -> Column:
@@ -2098,19 +2099,16 @@ class Store:
             fields = [T.StructField("key", self.manifest.schema[spec.column].dataType, True)]
         return T.StructType(fields + [T.StructField("__file_id", T.IntegerType(), True)])
 
-    def _refresh_index_stats(
-        self, spec: IndexSpec, st, part_rel: str | None = None, suffix: int | str = ""
-    ) -> None:
-        """Take an index's cost-model stats (``src/idx.rs:71-78``) from the
-        build aggregate ``st`` (a dict: a Row's ``asDict`` or an
-        observation of the build or of the batch's write): ``part_rel``'s
-        range-key [min, max], and ndv with the HLL sketch it came from,
-        when the aggregate sketched. Rows (live table rows) are set by
+    def _refresh_index_stats(self, spec: IndexSpec, st: dict, suffix: int) -> None:
+        """Take an index's ndv (the cost model's, ``src/idx.rs:71-78``) and
+        the HLL sketch it came from out of ``st``: the ``__sk{suffix}`` /
+        ``__ndv{suffix}`` values of the batch write's observation or of
+        the build's sketch union. Rows (live table rows) are set by
         :meth:`_index_files`.
 
         The ndv contract: exact (the HLL estimate of a sketch holding the
         key set of a from-scratch sketch of all live keys; a sketch merged
-        from several tasks', or built on the driver from more than
+        from several tasks', or built by the kernel from more than
         ``hll.SET_MAX`` keys with no HLL-mode sketch stored, takes the
         union estimator, which can differ from a one-task sketch's by HLL
         error) after inserts and after ``compact``, which rebuilds every
@@ -2121,22 +2119,12 @@ class Store:
         already in the sketch."""
         import base64
 
-        if part_rel is not None:
-            self._set_part_range(spec, part_rel, st[f"__lo{suffix}"], st[f"__hi{suffix}"])
-        if f"__sk{suffix}" not in st:
-            return
         sk = st[f"__sk{suffix}"]
         if sk is not None:
             spec.ndv = int(st[f"__ndv{suffix}"])
             spec.sketch = base64.b64encode(bytes(sk)).decode()
         elif spec.sketch is None:
             spec.ndv = 0
-
-    def _set_part_range(self, spec: IndexSpec, part_rel: str, lo, hi) -> None:
-        """Record ``part_rel``'s range key [lo, hi] for probe pruning, when
-        both are :meth:`_stats_ok` values."""
-        if self._stats_ok(lo) and self._stats_ok(hi):
-            spec.part_stats[part_rel] = [self._stats_val(lo), self._stats_val(hi)]
 
     def _parts_for_probe(self, spec: IndexSpec, point) -> list[str]:
         """Posting parts that may contain range-key value ``point`` —
@@ -2177,15 +2165,12 @@ class Store:
             columns=columns, filter=pred
         )
 
-    def _write_arrow(
-        self, rel: str, table, name: str = "part-00000.parquet", row_group_size=None
-    ) -> None:
+    def _write_arrow(self, rel: str, table, name: str = "part-00000.parquet") -> None:
         """Write the arrow ``table`` as the parquet file ``name`` in the
-        Store-relative dir ``rel``, created when missing — the one
-        driver-side parquet writer (zero Spark jobs). ``row_group_size``
-        is pyarrow's (None: its default)."""
-        os.makedirs(self._abs(rel), exist_ok=True)
-        pq.write_table(table, os.path.join(self._abs(rel), name), row_group_size=row_group_size)
+        Store-relative dir ``rel``, created when missing — the driver's
+        data, tombstone and changelog writer (zero Spark jobs;
+        :func:`_write_parquet`)."""
+        _write_parquet(os.path.join(self._abs(rel), name), table)
 
     def _probe_values(self, column: str, values: Sequence):
         """``values`` as a pyarrow array of ``column``'s type when a
@@ -2644,7 +2629,7 @@ class Store:
             # with no bitset
             bmap = self._bloom_bitsets(spec, [f.id for f in files])
             m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
-            probes = [_bloom_positions_py(key, m_bits, k) for key in keys]
+            probes = _bloom_positions_py(keys, m_bits, k)
             return [
                 f
                 for f in files
@@ -2708,8 +2693,9 @@ class Store:
         jobs). Only the ids not fetched before at this manifest version
         are read, as an ``is_in`` filter pushed into the scan, so probe
         memory scales with the files probed, not the files in the table
-        (~16 GB of bitsets at 1M files). A later part wins when a file id
-        reappears."""
+        (~16 GB of bitsets at 1M files). Every bitset of a file ORs into
+        its one: a data file that Spark split across build tasks has one
+        bitset per task, each over the keys of its own rows."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -2722,7 +2708,11 @@ class Store:
                 self._posting_schema(spec),
                 pc.is_in(pc.field("__file_id"), pa.array(need, pa.int32())),
             )
-            bmap.update(zip(tbl.column("__file_id").to_pylist(), tbl.column("bloom").to_pylist()))
+            for f, bits in zip(*tbl.to_pydict().values()):
+                if bmap[f] is not None:
+                    ored = int.from_bytes(bmap[f], "little") | int.from_bytes(bits, "little")
+                    bits = ored.to_bytes(len(bits), "little")
+                bmap[f] = bits
         return bmap
 
     @staticmethod

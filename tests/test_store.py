@@ -610,7 +610,7 @@ def test_bloom_prunes_files_and_survives_reopen(spark, store_path):
 
 def test_bloom_maintenance_on_delete_and_compact(spark, store_path):
     """CoW delete and compact rebuild bloom parts through the same
-    _append_postings seam as posting indices; results stay exact and the
+    index build kernel as posting indices; results stay exact and the
     cost-model stats refresh."""
     from shortcut_spark import BloomIndex
 
@@ -1286,13 +1286,13 @@ def test_follower_changes_see_rows_reinserted_below_watermark(
 
 @pytest.mark.slow
 def test_posting_part_pruning_and_sharding(spark, tmp_path):
-    """Judge ask r4 #5: posting parts record per-part [min, max] range-key
-    stats at write (fused into the posting build's one agg — no extra
-    job), so a point probe prunes whole parts driver-side before any
-    Spark work; and each part is range-sharded into key-disjoint parquet
-    files so the pushed-down key predicate reads ~one shard. Probe cost
-    is therefore sublinear in posting size — the graduation path the 10k-
-    file manifest test's docstring promised."""
+    """Posting parts record per-part [min, max] range-key stats at write
+    (from the build tasks' own ranges — no extra job), so a point probe
+    prunes whole parts driver-side before any Spark work; above
+    ``POSTING_SHARD_ROWS`` each build task writes its own shard of the
+    part, a file sorted by key, so the pushed-down key predicate skips
+    row groups by their footer ranges. Probe cost is therefore sublinear
+    in posting size."""
     from pyspark.sql import functions as F, types as T
 
     schema = T.StructType(
@@ -1300,10 +1300,11 @@ def test_posting_part_pruning_and_sharding(spark, tmp_path):
     )
     st = Store.create(spark, str(tmp_path / "shard"), schema)
     st.index("k", HashIndex)
-    # force the sharding path with a tiny threshold
-    st.POSTING_SHARD_ROWS = 50
+    # a batch of four files, each its own build task, above one shard
+    st.ROWS_PER_FILE = st.POSTING_SHARD_ROWS = 50
     for base in (0, 1000, 2000, 3000, 4000, 5000):
-        st.insert([(base + i, f"v{base + i}") for i in range(200)])
+        rows = [(base + i, f"v{base + i}") for i in range(200)]
+        st.insert(spark.createDataFrame(rows, schema))
 
     spec = st.manifest.indices["k"]
     assert len(spec.parts) == 6
@@ -1317,25 +1318,15 @@ def test_posting_part_pruning_and_sharding(spark, tmp_path):
     st2 = Store.open(spark, str(tmp_path / "shard"))
     assert st2.manifest.indices["k"].part_stats == spec.part_stats
 
-    # range-sharding: the part holds multiple key-disjoint parquet files
-    import glob as _glob
-
-    part_files = sorted(
-        _glob.glob(st._abs(spec.parts[0]) + "/part-*.parquet")
-    )
+    # sharding: the part holds one sorted file per build task
+    part_files = st._posting_files([spec.parts[0]])
     assert len(part_files) >= 2
-    ranges = []
+    keys = []
     for pf in part_files:
-        r = (
-            spark.read.parquet(pf)
-            .agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
-            .collect()[0]
-        )
-        if r["lo"] is not None:
-            ranges.append((r["lo"], r["hi"]))
-    ranges.sort()
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev < lo_next  # shards are key-disjoint
+        got = pq.read_table(pf).column("key").to_pylist()
+        assert got == sorted(got)
+        keys += got
+    assert sorted(keys) == list(range(200))
 
     # the pruned probe reads ONLY the pruned part's files
     probe_df = st._probe_postings(spec, 1050)
@@ -1343,7 +1334,7 @@ def test_posting_part_pruning_and_sharding(spark, tmp_path):
     assert probed == {spec.parts[1].split("idx/")[-1]}
 
     # the key predicate pushes down INTO the posting scan, so footer
-    # ranges skip non-matching shards (the IO guarantee of the sharding)
+    # ranges skip non-matching row groups
     plan = (
         probe_df.filter(F.col("key") == 1050)
         ._jdf.queryExecution().executedPlan().toString()
@@ -1535,7 +1526,7 @@ def test_index_part_reads_match_spark_read(spark, tmp_path):
         want_bits = _spark_bitsets(spark, st, spec)
         assert st._bloom_bitsets(spec, sorted(live)) == want_bits and want_bits
         for k in keys:
-            pos = _bloom_positions_py(k, 1 << 10, 3)
+            (pos,) = _bloom_positions_py([k], 1 << 10, 3)
             want = {i for i, bits in want_bits.items() if Store._bloom_hit(bits, pos)}
             fresh = Store.open(spark, st.path)
             _, files = fresh._prune_files([eq(2, k)])
@@ -2176,7 +2167,40 @@ def _stream_site(st):
     return st, act
 
 
-# (id, the attribute the failure is injected at, site, also on the Spark path)
+def _executor_build_site(st):
+    """A DataFrame insert whose hash index is built in the executors
+    (``POSTING_SHARD_ROWS`` at 0), with the build task failing after it
+    wrote its part file: the written shard stays an orphan that no probe
+    lists."""
+    from shortcut_spark import store as store_mod
+
+    st.POSTING_SHARD_ROWS = 0
+    real = store_mod._index_task
+    parts = st._abs("idx/c0")
+
+    def act():
+        def failing(batches, plans, dirs):
+            yield from real(batches, plans, dirs)
+            raise RuntimeError("injected")
+
+        before = set(os.listdir(parts))
+        store_mod._index_task = failing
+        try:
+            st.insert(_df(st, [("k20", "20")]))
+        except Exception as e:
+            if "injected" not in str(e):
+                raise
+            (orphan,) = set(os.listdir(parts)) - before
+            assert any(n.endswith(".parquet") for n in os.listdir(os.path.join(parts, orphan)))
+            raise _Injected(str(e)) from e
+        finally:
+            store_mod._index_task = real
+
+    return st, act
+
+
+# (id, the handle attribute the failure is injected at, or None where the
+# site injects its own, site, also on the Spark path)
 _TXN_SITES = [
     ("cow_delete", "_index_files", _on(lambda st: st.delete([eq(0, "k5")])), True),
     ("cow_register", "_register_files", _on(lambda st: st.delete([eq(0, "k5")])), True),
@@ -2210,6 +2234,7 @@ _TXN_SITES = [
     ("vector_index_refresh", "_commit", _vector_index_site, False),
     ("stream_epoch", "_commit", _stream_site, False),
     ("stream_epoch_rejected", "_enforce_constraints", _stream_site, False),
+    ("index_build_executors", None, _executor_build_site, False),
 ]
 
 
@@ -2238,7 +2263,8 @@ def test_delete_and_compact_failure_restores_manifest(
     ``DRIVER_INSERT_ROWS`` at 0, on the Spark path; a view refresh, a
     vector-index refresh and a stream epoch fail the commit of the Store
     they stage a prop on, and a stream epoch also fails in the batch's
-    constraint check, before its insert stages anything."""
+    constraint check, before its insert stages anything. An index build
+    in the executors fails inside its task, after the task wrote."""
     from shortcut_spark.manifest import Manifest
 
     st = Store.create(spark, store_path, 2)
@@ -2257,7 +2283,8 @@ def test_delete_and_compact_failure_restores_manifest(
         raise _Injected("injected")
 
     with monkeypatch.context() as m, pytest.raises(_Injected):
-        m.setattr(handle, inject, boom)
+        if inject:
+            m.setattr(handle, inject, boom)
         act()
     assert Manifest.load(handle.path).to_json() == on_disk
     assert handle.manifest.to_json() == on_disk
@@ -2944,7 +2971,6 @@ def _batch_files(st, cols):
 # index kind, the insert's Spark jobs). A proxy value shared by many keys
 # (half the strings start with the 7 bytes 'shared-'; the composite key's
 # lead has 3 values) takes the sampler's job; an array key is hash-split
-# and takes a posting job (_driver_atomic_type)
 _LEADS = {
     "long": ("xxhash64(id) % 1000003", "btree", 2),
     "double": (
@@ -2976,7 +3002,7 @@ _LEADS = {
     "boolean": ("id % 3 = 0", "btree", 2),
     "all_equal": ("5L", "btree", 2),
     "composite": ("concat('g', cast(id % 3 AS string))", "composite", 3),
-    "array": ("array(cast(id % 500 AS int), cast(id % 7 AS int))", "hash", 3),
+    "array": ("array(cast(id % 500 AS int), cast(id % 7 AS int))", "hash", 2),
 }
 
 
@@ -2986,8 +3012,7 @@ def test_range_split_layout_by_lead_type(spark, tmp_path, lead):
     jobs (the counts pass, which also takes the cluster key's quantiles,
     and the write) for every lead column type whose proxy values are
     light, and three where a proxy value shared by many keys takes the
-    range sampler (a string prefix, a composite key's lead) or where an
-    array key takes its posting job. Each key sits in exactly one file,
+    range sampler (a string prefix, a composite key's lead). Each key sits in exactly one file,
     and the files are key-disjoint in Spark's cluster order, NULL, ±0.0,
     NaN, shared string prefixes and composite tuples included (an array
     key is hash-split: it has no order). A file holds 3,000 rows within
@@ -3214,10 +3239,10 @@ def test_range_split_keeps_its_files_under_aqe(spark, tmp_path):
 
 def test_range_split_pins_for_sharded_postings_cdc_apply_and_compact(spark, tmp_path):
     """No range sampler on the other Store write paths. A posting build
-    above one shard takes its quantiles in its stats aggregate: a 300-row
-    DataFrame insert at 50 posting rows a shard runs 3 jobs (the one-file
-    write its plan row bound picks, the posting aggregate and the posting
-    write) into 7 key-disjoint shards. A distributed ``apply_changes`` of 12,000 rows at 3,000 rows a
+    above one shard runs in the executors: a 300-row DataFrame insert at
+    50 posting rows a shard runs 2 jobs (the one-file write its plan row
+    bound picks, and the build, whose one task writes the part's one
+    shard, sorted by key). A distributed ``apply_changes`` of 12,000 rows at 3,000 rows a
     file takes its quantiles in its stats aggregate and writes 4
     key-disjoint files in 6 jobs under the session's AQE, where every
     exchange is a job of its own (7 with the range sampler). ``compact``
@@ -3234,17 +3259,12 @@ def test_range_split_pins_for_sharded_postings_cdc_apply_and_compact(spark, tmp_
         (F.col("id") * 7 % 1009).alias("k"), (F.col("id") / 3).alias("v")
     )
     n, jobs = _jobs(spark, lambda: st.insert(src))
-    assert n == 300 and jobs == 3, jobs
+    assert n == 300 and jobs == 2, jobs
     spec = st.manifest.indices["k"]
-    shards = []
-    for name in sorted(os.listdir(st._abs(spec.parts[-1]))):
-        if name.endswith(".parquet"):
-            keys = pq.read_table(os.path.join(st._abs(spec.parts[-1]), name)).column("key")
-            if len(keys):
-                shards.append((min(keys.to_pylist()), max(keys.to_pylist()), len(keys)))
-    shards.sort()
-    assert len(shards) == 7 and sum(r for *_, r in shards) == 300, shards
-    assert all(hi < lo for (_, hi, _), (lo, _, _) in zip(shards, shards[1:])), shards
+    (shard,) = st._posting_files(spec.parts)
+    keys = pq.read_table(shard).column("key").to_pylist()
+    assert keys == sorted(keys) and len(keys) == 300
+    assert spec.part_stats[spec.parts[-1]] == [min(keys), max(keys)]
 
     fol = Store.create(spark, str(tmp_path / "f"), schema)
     fol.index("v", "btree")
@@ -3364,7 +3384,7 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
 
     st = _two_index_store(spark, str(tmp_path / "s"), batches=3)
     # the next batch is written by Spark, which observes its sketches, and
-    # indexed by the per-index Spark builders (120 rows > one shard)
+    # indexed in the executors (120 rows > one shard)
     st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 50
     st.insert(
         spark.range(300, 420).select(
@@ -3383,7 +3403,7 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
     for column in ("k", "v"):
         assert st.manifest.indices[column].ndv >= _exact_ndv(st, column)
         assert st.manifest.indices[column].rows == len(st)
-    # the compact write observes fresh sketches; the Spark builders index it
+    # the compact write observes fresh sketches; the executors index it
     st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 50
     st.compact(target_files=2)
     for column in ("k", "v"):
@@ -3396,7 +3416,7 @@ def test_index_stats_exact_after_inserts_bound_after_delete(spark, tmp_path):
 
 def test_spark_cow_delete_leaves_index_sketches_as_they_are(spark, tmp_path, monkeypatch):
     """A copy-on-write delete on the Spark path re-indexes its survivors
-    with the distributed builders without sketching their keys, which
+    in the executors without sketching their keys, which
     every sketch already holds: the stored sketch bytes and ndv of a hash
     and a bloom index stay as they were."""
     from pyspark.sql import types as T
@@ -3406,7 +3426,7 @@ def test_spark_cow_delete_leaves_index_sketches_as_they_are(spark, tmp_path, mon
     st.index("s", "bloom")
     st.insert([(i, f"s{i % 5}") for i in range(40)])
     st.DRIVER_INSERT_ROWS = 0
-    st.POSTING_SHARD_ROWS = 20  # the 39 survivors exceed one shard: the Spark builders
+    st.POSTING_SHARD_ROWS = 20  # the 39 survivors exceed one shard: the executors
     before = {c: (s.sketch, s.ndv) for c, s in st.manifest.indices.items()}
     sketched = []
     monkeypatch.setattr(
@@ -3422,8 +3442,8 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
     """Hash, trigram, case-insensitive trigram, bloom and composite indexes
     over two 30-row inserts, literal or (``frame``) DataFrame batches;
     ``driver_rows`` is ``DRIVER_INSERT_ROWS`` (0: Spark writes every batch
-    and, with ``POSTING_SHARD_ROWS`` below a batch, every index takes the
-    distributed build)."""
+    and, with ``POSTING_SHARD_ROWS`` below a batch, every index is built
+    in the executors)."""
     from pyspark.sql import types as T
 
     from shortcut_spark import BloomIndex, TrigramIndex
@@ -3437,7 +3457,7 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
         ]
     )
     rows = [
-        (f"alpha{i % 13}", None if i % 5 == 0 else f"be{i}", i % 7, None if i % 9 == 0 else i % 17)
+        (f"alpha{i % 13}", None if i % 5 == 0 else f"Be{i}", i % 7, None if i % 9 == 0 else i % 17)
         for i in range(60)
     ]
     st = Store.create(spark, path, schema)
@@ -3456,27 +3476,27 @@ def _all_kinds_store(spark, path, driver_rows, frame=False):
 
 
 def test_fused_driver_index_build_matches_distributed(spark, tmp_path):
-    """The driver build of a small batch writes the same index content as
-    the per-index distributed build: posting sets (key, file id) of hash,
-    composite and two trigram indexes, bloom bitsets per file, and ndv. A
+    """The driver build of a small batch and the executor build of the
+    same batches write what the Spark builders that the kernel replaced
+    wrote (:func:`_reference_build`): posting sets (key, file id) of hash,
+    composite and two trigram indexes, one of them case-insensitive, the
+    bloom bitsets per file, and sketches of one key set; ndv agrees. A
     literal batch is indexed from the arrow table the driver wrote, its
-    key sketches taken on the driver; a DataFrame batch, written by Spark with its
-    sketches observed in the write (but the trigram ones), from a pyarrow
-    read of its index columns."""
+    key sketches taken on the driver; a DataFrame batch, written by Spark
+    with its sketches observed in the write (but the trigram ones), from
+    a pyarrow read of its index columns."""
     dist = _all_kinds_store(spark, str(tmp_path / "dist"), 0)
     for frame in (False, True):
         fused = _all_kinds_store(spark, str(tmp_path / f"fused{int(frame)}"), 20_000, frame)
-        for column in ("a", "b", "a,n", "h"):
-            got = [fused.manifest.indices[column], dist.manifest.indices[column]]
-            assert got[0].ndv == got[1].ndv and got[0].rows == got[1].rows == 60
-            post = [
-                sorted(map(tuple, _spark_postings(spark, st, spec).collect()), key=repr)
-                for st, spec in zip((fused, dist), got)
-            ]
-            assert post[0] == post[1] and post[0], (frame, column)
-        bloom = [st.manifest.indices["n"] for st in (fused, dist)]
-        assert bloom[0].ndv == bloom[1].ndv == 7
-        assert _spark_bitsets(spark, fused, bloom[0]) == _spark_bitsets(spark, dist, bloom[1])
+        for column in ("a", "b", "a,n", "h", "n"):
+            specs = [st.manifest.indices[column] for st in (fused, dist)]
+            assert specs[0].ndv == specs[1].ndv and specs[0].rows == specs[1].rows == 60
+            for st, spec in zip((fused, dist), specs):
+                want, _, want_sk = _reference_build(spark, st, spec)
+                got, sk = _built(spark, st, spec)
+                assert got == want and got, (frame, column)
+                assert _same_keys(spark, sk, want_sk), (frame, column)
+        assert dist.manifest.indices["n"].ndv == 7
         assert rows_of(fused.find([eq("n", 3)])) == rows_of(dist.find([eq("n", 3)]))
 
 
@@ -3487,63 +3507,142 @@ def _nan_eq(a, b) -> bool:
     return a == b or (a != a and b != b)
 
 
-def test_write_sketched_driver_build_matches_distributed(spark, tmp_path):
-    """A Spark-written batch whose write observed its sketches, indexed on
-    the driver, holds what the per-index Spark builders write with their
-    own sketches: the postings of a hash index on a double, a btree on a
-    float and a composite over (string, double), the bloom bitsets, each
-    part's range, ndv, and sketches of one key set. The keys hold ±0.0,
-    NaN, NULL and all-NULL composite keys."""
+def _bloom_positions_expr(column: str, m_bits: int, k: int):
+    """The JVM twin of ``_bloom_positions_py`` that the Spark bloom builder
+    hashed with: md5("<key as string>:<i>") taken as a 60-bit int, mod m."""
+    from pyspark.sql import functions as F
+
+    return F.expr(
+        f"transform(sequence(0, {k - 1}), i -> "
+        f"pmod(cast(conv(substring(md5(cast(concat(cast(`{column}` as string), ':', "
+        f"cast(i as string)) as binary)), 1, 15), 16, 10) as bigint), {m_bits}))"
+    )
+
+
+def _reference_build(spark, st, spec, files=None):
+    """What the Spark builders that the index build kernel replaced wrote
+    for ``spec`` over ``files`` (the store's live files when None), the
+    reference of both venues: (the posting rows as a set of reprs, or
+    {file id: bitset} for a bloom index; the range key [min, max] with
+    NaN on top, None when it is no number or string; the HLL sketch of
+    the keys, from scratch)."""
+    import copy
+
+    from pyspark.sql import functions as F
+
+    files = st.manifest.files if files is None else files
+    ids = F.create_map(*[x for f in files for x in (F.lit(st._abs(f.path)), F.lit(f.id))])
+    src = st._read_files(files, with_meta=True, live=False).withColumn(
+        "__file_id", ids[F.col("__file_path")].cast("int")
+    )
+    fresh = copy.copy(spec)
+    fresh.sketch = None
+    if spec.kind == "trigram":
+        keys = src.select(F.explode(F.array_distinct(Store._grams(spec))).alias("key"))
+    else:
+        keys = src.select(*[m.alias(f"m{j}") for j, m in enumerate(st._sketch_members(spec))])
+    sketch = keys.agg(*Store._sketch_cols(fresh, [F.col(c) for c in keys.columns])).first()[0]
+    if spec.kind == "bloom":
+        m_bits, k = int(spec.params["m_bits"]), int(spec.params["k"])
+        pos = src.filter(F.col(spec.column).isNotNull()).select(
+            "__file_id", F.explode(_bloom_positions_expr(spec.column, m_bits, k)).alias("pos")
+        )
+        bits = {}
+        for r in pos.distinct().collect():
+            b = bits.setdefault(r["__file_id"], bytearray(m_bits // 8))
+            b[r["pos"] >> 3] |= 1 << (r["pos"] & 7)
+        return {f: bytes(b) for f, b in bits.items()}, None, bytes(sketch)
+    if spec.kind == "trigram":
+        grams = F.explode(F.array_distinct(Store._grams(spec))).alias("key")
+        postings = src.select(grams, "__file_id")
+    else:
+        names = st._posting_schema(spec).names
+        postings = src.select(
+            *[F.col(c).alias(n) for c, n in zip(spec.member_columns, names)], "__file_id"
+        )
+    postings = postings.distinct()
+    rkey = postings.columns[0]
+    lo, hi = postings.agg(F.min(rkey), F.max(rkey)).first()
+    rng = [lo, hi] if Store._stats_ok(lo) and Store._stats_ok(hi) else None
+    return {repr(tuple(r)) for r in postings.collect()}, rng, bytes(sketch)
+
+
+def _built(spark, st, spec):
+    """What ``spec`` holds over the store's live files, in the shape of
+    :func:`_reference_build`: its posting rows, or its bitsets as the
+    probe reads them; and its stored sketch."""
     import base64
 
+    if spec.kind == "bloom":
+        got = st._bloom_bitsets(spec, [f.id for f in st.manifest.files])
+        got = {f: b for f, b in got.items() if b is not None}
+    else:
+        got = {repr(tuple(r)) for r in _spark_postings(spark, st, spec).collect()}
+    return got, base64.b64decode(spec.sketch)
+
+
+def test_write_sketched_driver_build_matches_distributed(spark, tmp_path):
+    """A Spark-written batch is indexed by the one kernel in either venue
+    — on the driver, with the sketches its write observed, and in the
+    executors (both bounds at 0), which sketch the keys themselves — and
+    both hold what the Spark builders that the kernel replaced wrote
+    (:func:`_reference_build`): the postings of a hash index on a double,
+    a btree on a float, a composite over (string, double) and a hash
+    index on an array, the bloom bitsets, each part's range (NaN on top)
+    and sketches of one key set. The keys hold ±0.0, NaN, NULL and
+    all-NULL composite keys, and the arrays ``['a, b']`` and ``['a',
+    'b']``, which Spark casts to one string: the array index counts them
+    as 2 keys. The executor build is one job."""
     from pyspark.sql import types as T
 
     from shortcut_spark import BloomIndex
 
     nan = float("nan")
-    schema = T.StructType.fromDDL("d double, f float, s string, n long")
+    schema = T.StructType.fromDDL("d double, f float, s string, n long, a array<string>")
     edge = [
-        (-0.0, -0.0, None, None),
-        (0.0, 0.0, "a", 1),
-        (nan, nan, None, None),
-        (None, None, None, 2),
-        (nan, None, "b", None),
-        (-0.0, nan, "a", None),
+        (-0.0, -0.0, None, None, None),
+        (0.0, 0.0, "a", 1, ["a, b"]),
+        (nan, nan, None, None, ["a", "b"]),
+        (None, None, None, 2, None),
+        (nan, None, "b", None, ["a, b"]),
+        (-0.0, nan, "a", None, ["a", "b"]),
     ]
     rows = [
-        edge[i % 6] if i % 3 == 0 else (i / 4, i / 8, f"s{i % 7}", i % 11) for i in range(90)
+        edge[i // 3 % 6] if i % 3 == 0 else (i / 4, i / 8, f"s{i % 7}", i % 11, ["a", "b"])
+        for i in range(90)
     ]
-    stores = []
-    for spark_built in (False, True):
-        st = Store.create(spark, str(tmp_path / f"s{int(spark_built)}"), schema)
+    stores, jobs = [], []
+    for venue in ("driver", "executors"):
+        st = Store.create(spark, str(tmp_path / venue), schema)
         st.index("d", "hash")
         st.index("f", "btree")
         st.index(("s", "d"))
         st.index("n", BloomIndex(m_bits=1 << 10, k=3))
-        if spark_built:
-            st.POSTING_SHARD_ROWS = 20  # a 45-row batch: the per-index Spark builders
-            st._observe_sketches = lambda df: (df, None)  # each builder sketches its keys
+        st.index("a", "hash")
+        if venue == "executors":
+            st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 0
+            st._observe_sketches = lambda df: (df, None)  # the build sketches its keys
         for lo in (0, 45):
             batch = spark.createDataFrame(rows[lo : lo + 45], schema)
-            n, jobs = _jobs(spark, lambda: st.insert(batch))
-            assert n == 45 and (jobs > 2) == spark_built, (spark_built, jobs)
+            n, j = _jobs(spark, lambda: st.insert(batch))
+            assert n == 45
+            jobs.append(j)
         stores.append(st)
-    for column in ("d", "f", "s,d", "n"):
+    assert jobs[2:] == [j + 1 for j in jobs[:2]], jobs
+    for column in ("d", "f", "s,d", "n", "a"):
         specs = [st.manifest.indices[column] for st in stores]
         assert specs[0].ndv == specs[1].ndv > 0, column
-        assert _same_keys(spark, *(base64.b64decode(s.sketch) for s in specs)), column
-        if column == "n":
-            assert _spark_bitsets(spark, stores[0], specs[0]) == _spark_bitsets(
-                spark, stores[1], specs[1]
-            )
-            continue
-        post = [
-            sorted(map(repr, map(tuple, _spark_postings(spark, st, spec).collect())))
-            for st, spec in zip(stores, specs)
-        ]
-        assert post[0] == post[1] and post[0], column
-        ranges = [[spec.part_stats.get(p) for p in spec.parts] for spec in specs]
-        assert _nan_eq(*ranges) and len(ranges[0]) == 2, (column, ranges)
+        for st, spec in zip(stores, specs):
+            want, _, want_sk = _reference_build(spark, st, spec)
+            got, sk = _built(spark, st, spec)
+            assert got == want and got, (column, got, want)
+            assert _same_keys(spark, sk, want_sk), column
+            if spec.kind == "bloom":
+                continue
+            assert len(spec.parts) == 2, spec.parts
+            for part, f in zip(spec.parts, st.manifest.files):
+                assert _nan_eq(spec.part_stats.get(part), _reference_build(spark, st, spec, [f])[1])
+    assert [st.manifest.indices["a"].ndv for st in stores] == [2, 2]
 
 
 def _reference_sketch(spark, spec, stored, keys):
@@ -3565,10 +3664,10 @@ def _reference_sketch(spark, spec, stored, keys):
 
 def _reference_keys(spark, st, spec, data=None):
     """The keys of the data file ``data`` (the store's only one when None)
-    that the driver build sketched before, in the order it fed them, as a
-    ``LocalRelation``: the distinct postings of a hash, btree or composite
-    index (``_distinct_rows`` of the file's rows), the string keys of a
-    bloom index and the grams of a trigram index."""
+    that the index build sketches, as a ``LocalRelation``: the distinct
+    postings of a hash, btree or composite index (``_distinct_rows`` of
+    the file's rows), the string keys of a bloom index and the grams of a
+    trigram index."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -3581,9 +3680,9 @@ def _reference_keys(spark, st, spec, data=None):
     if spec.kind == "bloom":
         return rows.select(F.col(spec.column).cast("string").alias("key"))
     if spec.kind == "trigram":
-        grams = set()  # in the set order the build takes them
+        grams = {}  # in first arrival order, as the build takes them
         for r in rows.select(Store._grams(spec).alias("g")).collect():
-            grams.update(r["g"])
+            grams.update(dict.fromkeys(r["g"]))
         schema = T.StructType([T.StructField("key", T.StringType())])
         return local_relation(spark, [pa.table({"key": pa.array(list(grams), pa.string())})], schema)
     schema = T.StructType(st._posting_schema(spec).fields[:-1])
@@ -3625,10 +3724,11 @@ def test_hll_image_is_the_one_task_aggregate_sketch(spark):
 
 
 def test_driver_sketch_matches_the_sketch_aggregate(spark, tmp_path):
-    """The driver build sketches its keys on the driver (MurmurHash3
+    """The index build sketches its keys in the kernel (MurmurHash3
     coupons in DataSketches images, merged into the stored sketch by
-    ``hll_union`` over a one-row ``LocalRelation``) with no job, and
-    reads as the aggregate it replaced: against an HLL-mode stored sketch
+    ``hll_union`` over a one-row ``LocalRelation``), with no job on the
+    driver and in the one build job in the executors, and reads as the
+    aggregate it replaced: against an HLL-mode stored sketch
     the merged bytes are equal, and with no stored sketch or a LIST-mode
     or SET-mode one ndv and the key set (union estimates) are. The keys
     cover NULL, "", strings across MurmurHash3's 8- and 16-byte block
@@ -3662,8 +3762,9 @@ def test_driver_sketch_matches_the_sketch_aggregate(spark, tmp_path):
     cols = (strs, grams, strs[::-1], dbls, longs, decs, dates, stamps, bins)
     batch = [tuple(c[i % len(c)] for c in cols) for i in range(40)]
     stored = _stored_sketches(spark)
-    for mode in (None, "list", "set", "hll"):
-        st = Store.create(spark, str(tmp_path / f"s{mode}"), schema)
+    runs = [(mode, False) for mode in (None, "list", "set", "hll")]
+    for mode, executors in runs + [(None, True), ("hll", True)]:
+        st = Store.create(spark, str(tmp_path / f"s{mode}{int(executors)}"), schema)
         st.index("s", "hash")
         st.index("t", TrigramIndex)
         st.index("f", BloomIndex(m_bits=1 << 10, k=3))
@@ -3676,8 +3777,13 @@ def test_driver_sketch_matches_the_sketch_aggregate(spark, tmp_path):
         st.index(("s", "d"))
         for spec in st.manifest.indices.values():
             spec.sketch = base64.b64encode(stored[mode]).decode() if mode else None
+        if executors:
+            # a Spark write observing no sketch, then every index built
+            # and sketched in the executors, in one job
+            st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = 0
+            st._observe_sketches = lambda df: (df, None)
         n, jobs = _jobs(spark, lambda: st.insert(batch))
-        assert n == 40 and jobs == 0, (mode, jobs)
+        assert n == 40 and jobs == (2 if executors else 0), (mode, jobs)
         for name, spec in st.manifest.indices.items():
             got = base64.b64decode(spec.sketch)
             keys = _reference_keys(spark, st, spec)
@@ -3787,6 +3893,128 @@ def test_driver_index_builds_take_no_job(spark, tmp_path):
     assert got == (20, 1) and jobs == 0
     assert rows_of(follower.find([eq("k", 1_005)])) == [(1_005, 0.5, "x", "more grams")]
     assert follower.find([eq("k", 7)]).count() == 0
+
+
+def test_executor_index_build_is_one_job(spark, tmp_path):
+    """A batch above the driver bounds builds its hash, btree, composite,
+    bloom and trigram indexes in the executors, all five in one Spark
+    job: the insert's jobs + 1. Each index holds one part, and finds
+    through each return what they return on the driver-built store."""
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex, TrigramIndex
+    from shortcut_spark.cmp import contains
+
+    schema = T.StructType.fromDDL("k long, v double, s string, g string")
+    rows = [(i, i / 3, f"s{i % 11}", f"gram text {i}") for i in range(100)]
+    conds = [
+        [eq("k", 7)],
+        [eq("v", 5.0)],
+        [eq("k", 8), eq("s", "s8")],
+        [eq("s", "s3")],
+        [contains("g", "text 4")],
+    ]
+    got = []
+    for bound in (None, 0):
+        st = Store.create(spark, str(tmp_path / f"s{bound}"), schema)
+        st.index("k", "hash")
+        st.index("v", "btree")
+        st.index(("k", "s"))
+        st.index("s", BloomIndex(m_bits=1 << 10, k=3))
+        st.index("g", TrigramIndex)
+        if bound is not None:
+            st.DRIVER_INSERT_ROWS = st.POSTING_SHARD_ROWS = bound
+        n, jobs = _jobs(spark, lambda: st.insert(spark.createDataFrame(rows, schema)))
+        assert n == 100 and all(len(s.parts) == 1 for s in st.manifest.indices.values())
+        got.append((jobs, [rows_of(st.find(c)) for c in conds]))
+    assert got[1][0] == got[0][0] + 1, got
+    assert got[1][1] == got[0][1] and all(got[0][1]), got
+
+
+def test_bloom_bitsets_of_a_split_file_or_together(spark, tmp_path):
+    """A data file of many row groups, which Spark splits across the
+    build's tasks, gets one bitset per task in the bloom part, each over
+    its own rows' keys. The probe ORs every bitset of a file, so each
+    key's bits are set and its find returns its row."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex
+    from shortcut_spark.session import scoped_confs
+    from shortcut_spark.store import _bloom_positions_py
+
+    st = Store.create(spark, str(tmp_path / "s"), T.StructType.fromDDL("k long, s string"))
+    src = spark.range(0, 20_000, numPartitions=1).select(
+        F.col("id").alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("s")
+    )
+    with scoped_confs(spark, {"parquet.block.size": str(64 * 1024)}):
+        st.insert(src)
+    (f,) = st.manifest.files
+    assert pq.ParquetFile(st._abs(f.path)).metadata.num_row_groups > 4
+    # the build in the executors, with a task per split at any core count
+    st.DRIVER_INSERT_ROWS, st.POSTING_SHARD_ROWS = 0, 1_000
+    with scoped_confs(spark, {"spark.sql.files.maxPartitionBytes": str(256 * 1024)}):
+        st.index("s", BloomIndex(m_bits=1 << 16, k=3))
+    spec = st.manifest.indices["s"]
+    part = pa.concat_tables([pq.read_table(p) for p in st._posting_files(spec.parts)])
+    assert part.column("__file_id").to_pylist().count(f.id) > 1
+    bits = st._bloom_bitsets(spec, [f.id])[f.id]
+    keys = [r["s"] for r in src.collect()]
+    assert all(Store._bloom_hit(bits, p) for p in _bloom_positions_py(keys, 1 << 16, 3))
+    for i in (0, 7_777, 19_999):
+        assert rows_of(st.find([eq("s", keys[i])])) == [(i, keys[i])]
+
+
+def test_index_build_venue_bounds_and_executor_shards(spark, tmp_path):
+    """A write-sketched index whose kernel needs no derived key is built
+    on the driver up to ``POSTING_SHARD_ROWS`` rows, a bloom index only
+    while its ndv is at most ``DRIVER_INSERT_ROWS``; one whose kernel
+    needs a derived key (a double bloom key's string, an array key's
+    JSON) only up to ``DRIVER_INSERT_ROWS`` rows. An executor backfill
+    over one split per file writes one shard per core, not one per
+    file, so a probe reads few shards. Finds are exact on both."""
+    from pyspark.sql import types as T
+
+    from shortcut_spark import BloomIndex
+    from shortcut_spark.session import scoped_confs
+
+    schema = T.StructType.fromDDL("k long, u long, d double, a array<int>")
+    rows = [(i, i % 10, i / 4, [i % 5, i % 3]) for i in range(300)]
+    st = Store.create(spark, str(tmp_path / "s"), schema)
+    st.index("k", "hash")
+    st.index("u", BloomIndex(m_bits=1 << 10, k=3))
+    st.index("d", BloomIndex(m_bits=1 << 10, k=3))
+    st.index("a", "hash")
+    venues = {}
+    for name in ("_index_tables", "_index_executors"):
+
+        def record(specs, *a, _real=getattr(st, name), _name=name, **kw):
+            venues.update((s.column, _name) for s in specs)
+            return _real(specs, *a, **kw)
+
+        setattr(st, name, record)
+    st.DRIVER_INSERT_ROWS, st.POSTING_SHARD_ROWS = 100, 1_000
+    st.insert(spark.createDataFrame(rows, schema))
+    drv, exe = "_index_tables", "_index_executors"
+    assert venues == {"k": drv, "u": drv, "d": exe, "a": exe}, venues
+    st.POSTING_SHARD_ROWS = 200  # a bloom index of 10 keys over 300 rows
+    st.insert(spark.createDataFrame(rows, schema))
+    assert venues == {"k": exe, "u": exe, "d": exe, "a": exe}, venues
+    assert len(rows_of(st.find([eq("u", 3)]))) == 60
+    assert rows_of(st.find([eq("d", 2.5)])) == [(10, 0, 2.5, [0, 1])] * 2
+    assert len(rows_of(st.find([eq("a", [4, 2])]))) == 40
+
+    cores = spark.sparkContext.defaultParallelism
+    bf = Store.create(spark, str(tmp_path / "bf"), T.StructType.fromDDL("k long"))
+    for lo in range(0, 10 * (cores + 4), 10):  # literal inserts, a file each
+        bf.insert([(i,) for i in range(lo, lo + 10)])
+    assert len(bf.manifest.files) == cores + 4
+    bf.DRIVER_INSERT_ROWS = 0
+    with scoped_confs(spark, {"spark.sql.files.maxPartitionBytes": "1024"}):
+        bf.index("k", "hash")
+    spec = bf.manifest.indices["k"]
+    assert len(bf._posting_files(spec.parts)) <= cores
+    assert all(bf._posting_hits(spec, [k]) for k in (0, 77, 10 * cores + 39))
 
 
 def test_posting_map_driver_read_matches_spark(spark, tmp_path):

@@ -360,26 +360,44 @@ def _functions_using(attr: str = None, const=None) -> set:
 
 def test_sketch_cols_called_only_from_the_sketch_sites():
     """An index's key sketch is observed in the Spark write of its batch
-    (``_observe_sketches``) or taken by a distributed builder
-    (``_append_postings``, ``_append_blooms``); the driver build sketches
-    on the driver (``hll``) with no job. Any other caller of
-    ``_sketch_cols`` would be a new sketch job, and ``hll_sketch_agg``
+    (``_observe_sketches``) or taken by the index build kernel
+    (``hll``, in either venue) with no job of its own. Any other caller
+    of ``_sketch_cols`` would be a new sketch job, and ``hll_sketch_agg``
     appears in ``_sketch_cols`` alone. The key string a sketch hashes is
     encoded in one helper, ``_sketch_key``, for the Spark sketches and
-    the driver one alike."""
-    assert _functions_using("_sketch_cols") == {
-        ("store.py", "_observe_sketches"),
-        ("store.py", "_append_postings"),
-        ("store.py", "_append_blooms"),
-    }
+    the kernel's alike."""
+    assert _functions_using("_sketch_cols") == {("store.py", "_observe_sketches")}
     assert _functions_using("hll_sketch_agg") == {("store.py", "_sketch_cols")}
     assert _functions_using("_sketch_key") == {
         ("store.py", "_sketch_cols"),
-        ("store.py", "_index_tables"),
+        ("store.py", "_derived_keys"),
     }
     assert _functions_using(const="<null>") == {("store.py", "_sketch_key")}
     assert _functions_using(const="\x1f") == {("store.py", "_sketch_key")}
 
+
+
+# -- lint: one Python UDF and one index build task in store.py --------------
+
+
+def test_store_python_udfs_are_the_residual_and_the_index_build():
+    """store.py runs Python in the executors at two places only: the
+    row-at-a-time UDF of ``delete_filter``'s callable residual, and the
+    ``mapInArrow`` of the index build's executor venue, which runs the
+    driver's own kernel. Every other index semantics stays in one place,
+    not in a Spark twin of the kernel."""
+    path = os.path.join(_PKG, "store.py")
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    udfs = {"udf", "pandas_udf", "mapInArrow", "mapInPandas", "applyInPandas", "applyInArrow"}
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Attribute) and node.attr in udfs:
+                found.append((fn.name, node.attr))
+    assert sorted(found) == [("_index_executors", "mapInArrow"), ("delete_filter", "udf")], found
 
 
 # -- lint: no range sampler on the Store's write paths -----------------------
@@ -528,8 +546,8 @@ _BIG = 2**53
 
 def _edge_store(spark, path):
     """Hash indexes on a long, a double, a string and a decimal column and a
-    composite on (g, h), over two range-sharded distributed batches and five
-    driver-built ones. Two unrelated permutations of the row number feed
+    composite on (g, h), backfilled over two batches in the executors and
+    built on the driver over five more. Two unrelated permutations of the row number feed
     k and the other columns, and every batch carries the same low and high
     guard rows, so every file spans every column's range: only the
     postings narrow a point find. Values sit on the probes' edges: ±0.0, NaN and 2**53 on
@@ -550,11 +568,8 @@ def _edge_store(spark, path):
         ]
     )
     st = Store.create(spark, path, schema)
-    for c in ("k", "d", "s", "m"):
-        st.index(c, "hash")
-    st.index(("g", "h"))
-    st.POSTING_SHARD_ROWS = 50  # a 122-row batch writes a range-sharded part
-    special = {  # in both sharded batches and three driver-built ones
+    st.POSTING_SHARD_ROWS = 50  # the backfill of 244 rows runs in the executors
+    special = {  # in both executor-indexed batches and three driver-built ones
         5: (_BIG, -0.0, "it's"),
         18: (_BIG + 1, 0.0, "back\\slash"),
         245: (-3, float("nan"), "ünï→✓"),
@@ -575,6 +590,10 @@ def _edge_store(spark, path):
 
     for b in range(2):
         st.insert(rows[b:240:2] + guards(b))
+    # each file is a build task of its own: every first part holds 2 shards
+    for c in ("k", "d", "s", "m"):
+        st.index(c, "hash")
+    st.index(("g", "h"))
     for b in range(5):
         st.insert(rows[240 + b :: 5] + guards(2 + b))  # 30 rows: the driver build
     return st
@@ -952,9 +971,11 @@ def test_int_zero_on_a_float_column_keeps_negative_zero(spark, tmp_path):
 # -- lint: one driver-side parquet writer ------------------------------------
 
 
-def test_parquet_written_on_the_driver_only_by_write_arrow():
+def test_parquet_written_with_pyarrow_only_by_write_parquet():
     """The library writes parquet with pyarrow in one place,
-    ``Store._write_arrow``: no other ``pq.write_table`` call exists."""
+    ``store._write_parquet``, which the driver's ``Store._write_arrow``
+    and the index build tasks share: no other ``pq.write_table`` call
+    exists."""
     calls = []
     for root, _, names in os.walk(_PKG):
         for name in names:
@@ -973,8 +994,8 @@ def test_parquet_written_on_the_driver_only_by_write_arrow():
                         and node.func.attr == "write_table"
                     ):
                         calls.append((os.path.relpath(path, _PKG), fn.name, node.lineno))
-    stray = [c for c in calls if c[:2] != ("store.py", "_write_arrow")]
-    assert not stray, f"write parquet on the driver with Store._write_arrow: {stray}"
+    stray = [c for c in calls if c[:2] != ("store.py", "_write_parquet")]
+    assert not stray, f"write parquet with store._write_parquet: {stray}"
     assert len(calls) == 1
 
 
